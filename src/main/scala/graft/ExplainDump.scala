@@ -24,11 +24,15 @@ object ExplainDump {
       // serve plan below
       val dumpDir = Files.createTempDirectory(s"graft_plandump_$n")
       sys.props("graft.ivm.plandump") = dumpDir.toString
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      df.queryExecution.toRdd.count()
-      sys.props.remove("graft.ivm.plandump")
+      val (df, formatted) =
+        try {
+          val df = SparkEntry.queries(n)(spark, sfDir)
+          val formatted = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.ExplainMode.fromString(
+              "formatted"))
+          df.queryExecution.toRdd.count()
+          (df, formatted)
+        } finally sys.props.remove("graft.ivm.plandump")
       val fin = df.queryExecution.executedPlan.toString
       val refreshPlans = {
         import scala.jdk.CollectionConverters._

@@ -127,7 +127,10 @@ object Dedup {
     * #5 — "a floor, not a constant"). Bytes come from the optimizer's
     * size estimate: approximate is fine, the floor only needs the
     * order of magnitude, and the advisory partition size is the same
-    * knob AQE sizes post-shuffle partitions with. */
+    * knob AQE sizes post-shuffle partitions with. A plan without
+    * statistics (an RDD-backed input) reports `defaultSizeInBytes`
+    * (Long.MaxValue by default): that size is unknown, not huge, so it
+    * keeps the core floor instead of fanning out to 2^22 tasks. */
   private def cpuPartitions(docs: DataFrame): Int = {
     val spark = docs.sparkSession
     val advisory = math.max(1L,
@@ -135,7 +138,9 @@ object Dedup {
         spark.conf.get(
           "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")))
     val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val byBytes = (bytes / advisory).min(BigInt(1 << 22)).toInt
+    val byBytes =
+      if (bytes >= spark.sessionState.conf.defaultSizeInBytes) 0
+      else (bytes / advisory).min(BigInt(1 << 22)).toInt
     math.max(spark.sparkContext.defaultParallelism, byBytes)
   }
 

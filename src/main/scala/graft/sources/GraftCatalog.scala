@@ -131,7 +131,8 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     extensions(name) = cur ++ newOnes.map(_.copy(nullable = true))
   }
 
-  private def allFields(name: String): Seq[StructField] =
+  /** Declared columns plus view-extension columns, in storage order. */
+  private[graft] def allFields(name: String): Seq[StructField] =
     specs(name).schema.fields.toSeq ++ extensions.getOrElse(name, Seq.empty)
 
   /** ALTER TABLE ADD COLUMN (reference: grammar alter_table / AlterTableIT):

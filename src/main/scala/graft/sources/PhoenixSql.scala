@@ -41,9 +41,15 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
 
   private val viewNames = scala.collection.mutable.Set[String]()
   private val tableNames = scala.collection.mutable.Set[String]()
-  // tables whose registered snapshot temp view is stale (mutated since the
-  // last SELECT); avoids O(tables) re-registration on every query
+  // tables whose registered snapshot temp view is stale (DDL, TRUNCATE,
+  // COMPACT since the last SELECT); avoids O(tables) re-registration on
+  // every query
   private val dirty = scala.collection.mutable.Set[String]()
+  // the catalog version each table's snapshot view was registered at.
+  // Every UPSERT/DELETE moves the counter, whether it came through this
+  // front-end or straight through GraftCatalog, so a moved counter marks
+  // the table stale without any write path having to report it
+  private val registeredAt = scala.collection.mutable.Map[String, Long]()
   private var viewsStale = true
 
   def execute(sql: String): DataFrame = {
@@ -1493,7 +1499,7 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     // strip an upsert-level hint (UPSERT /*+ NO_INDEX */ INTO ...) —
     // write-path hints steer the reference's index maintenance, which
     // Spark subsumes, so the hint body is advisory here. VALUES tuples
-    // go straight to spark.sql, so binary-literal continuations
+    // are spliced into SQL text below, so binary-literal continuations
     // (x'..' '..') must lex here too, not just in the SELECT pipeline.
     val s = rewriteBinaryLiterals(
       "(?is)^(UPSERT)\\s*/\\*\\+.*?\\*/".r.replaceFirstIn(sIn, "$1"))
@@ -1537,7 +1543,6 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       defaults.filterNot { case (c, _) => df.columns.contains(c) }
         .foreach { case (c, v) => df = df.withColumn(c, expr(v)) }
       catalog.upsert(table, df)
-      dirty += table
       return spark.emptyDataFrame
     }
     val m = ("(?is)UPSERT INTO ([\\w.\"]+)\\s*(?:\\(([^)]*)\\))?\\s*" +
@@ -1593,7 +1598,12 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     // Spark array('a','b').
     val nvRe = "(?i)NEXT\\s+VALUE\\s+FOR\\s+([\\w.\"]+)".r
     val cvRe = "(?i)CURRENT\\s+VALUE\\s+FOR\\s+([\\w.\"]+)".r
-    val selectRows = tuples.map { tup =>
+    val declaredTypes = catalog.allFields(table)
+      .map(f => f.name.toLowerCase -> f.dataType.sql).toMap
+    def declared(c: String): String = declaredTypes.getOrElse(c.toLowerCase,
+      throw new IllegalArgumentException(
+        s"UPSERT column $c does not exist in $target"))
+    val structs = tuples.map { tup =>
       val rawVals = splitTopLevel(tup.substring(1, tup.length - 1), ',')
       // mask discipline: a VALUE that is a string literal containing
       // the spelling ('NEXT VALUE FOR x' as data) must neither step the
@@ -1629,14 +1639,23 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       val withDefaults = values.zip(effCols) ++
         defaults.filterNot { case (c, _) => effCols.contains(c) }
           .map { case (c, v) => (v, c) }
-      s"SELECT ${withDefaults
-        .map { case (v, c) => s"$v AS $c" }.mkString(", ")}"
+      s"struct(${withDefaults
+        .map { case (v, c) => s"CAST($v AS ${declared(c)}) AS `$c`" }
+        .mkString(", ")})"
     }
-    val rows = spark.sql(selectRows.mkString(" UNION ALL "))
-    // catalog.upsert pads missing columns (incl. view extensions) with
-    // NULL and casts everything to the declared types
+    // All tuples form ONE relation: a single row whose array of structs
+    // `inline` expands. It plans as one partition, so the statement runs
+    // one task and writes one parquet file (a union of one-row SELECTs
+    // would cost a task and a file per tuple, and every later read
+    // would scan them). Each value is cast to its column's declared type
+    // (view-extension columns included), so all structs share one type
+    // and no column is widened across tuples: `(1, 'x'), (2, 3)` into a
+    // VARCHAR stores '3' instead of widening to BIGINT and failing on
+    // 'x'. Spark's inline VALUES table would also be one partition, but
+    // it rejects UDF calls and mixed literal kinds. catalog.upsert pads
+    // the omitted columns and runs the write-path checks.
+    val rows = spark.sql(s"SELECT inline(array(${structs.mkString(", ")}))")
     catalog.upsert(table, rows)
-    dirty += table
     spark.emptyDataFrame
   }
 
@@ -1649,7 +1668,6 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       .getOrElse(throw new IllegalArgumentException(s"cannot parse: $s"))
     catalog.delete(resolveTable(m.group(1)),
       Option(m.group(2)).map(expr).getOrElse(lit(true)))
-    dirty += resolveTable(m.group(1))
     spark.emptyDataFrame
   }
 
@@ -2117,6 +2135,8 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     // (the catalog clock), so a cached view would keep serving rows
     // that have since aged out.
     val ttlStale = tableNames.filter(t => catalog.ttlSeconds(t).isDefined)
+    dirty ++= tableNames.filterNot(t =>
+      registeredAt.get(t).contains(catalog.currentVersion(t)))
     if (dirty.nonEmpty || viewsStale || cdcStale || ttlStale.nonEmpty) {
       // snapshotServed, not snapshot: with a FRESH snapshot cache the
       // registered view is a pure parquet scan (no per-query collapse
@@ -2124,9 +2144,11 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       // can swap onto registered MV state
       // ([[graft.operators.Materialize.registerForRewrite]]), so the
       // dashboard GROUP BY through this front-end reads KBs of state
-      (dirty ++ ttlStale).filter(tableNames.contains).foreach(t =>
+      (dirty ++ ttlStale).filter(tableNames.contains).foreach { t =>
+        registeredAt(t) = catalog.currentVersion(t)
         currentScn.map(catalog.snapshotAsOfTime(t, _))
-          .getOrElse(catalog.snapshotServed(t)).createOrReplaceTempView(t))
+          .getOrElse(catalog.snapshotServed(t)).createOrReplaceTempView(t)
+      }
       viewNames.foreach(v =>
         catalog.view(v, currentScn).createOrReplaceTempView(v))
       cdcDefs.foreach { case (n, (t, scopes)) =>

@@ -30,6 +30,22 @@ class CpuPartitionFloorSpec extends AnyFunSuite {
     assert(n == spark.sparkContext.defaultParallelism)
   }
 
+  test("an input without statistics keeps the core floor instead of " +
+      "fanning out to 2^22 partitions") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // an RDD-backed plan reports defaultSizeInBytes (Long.MaxValue):
+    // an unknown size, not a huge one
+    val rows = spark.sparkContext.parallelize(
+      Seq(Row(1L, "a b c"), Row(2L, "d e f")), 2)
+    val docs = spark.createDataFrame(rows, StructType(Seq(
+      StructField("id", LongType), StructField("text", StringType))))
+    assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      spark.sessionState.conf.defaultSizeInBytes)
+    assert(repartitionN(Dedup.simhashSignatures(docs, "text", "id")) ==
+      spark.sparkContext.defaultParallelism)
+  }
+
   test("partition count grows past the core floor with input size") {
     // ~100M rows × ~30B estimated (Catalyst prices a string at its
     // 20-byte default) ≫ cores × advisory(64m): the floor must scale

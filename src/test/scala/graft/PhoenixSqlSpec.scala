@@ -212,6 +212,11 @@ class PhoenixSqlSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       px.execute("UPSERT INTO t (id) VALUES (1, 'extra')")
     }
+    // a column the table does not have errors instead of being dropped
+    val e = intercept[IllegalArgumentException] {
+      px.execute("UPSERT INTO t (id, nope) VALUES (1, 'x')")
+    }
+    assert(e.getMessage.contains("nope"))
   }
 
   // cause-chain messages (write-path errors surface wrapped by Spark)
@@ -1039,6 +1044,174 @@ class PhoenixSqlSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       px.execute("UPSERT INTO RG VALUES (1, 2), (3)"))
     assert(e.getMessage.contains("differing arities"))
+  }
+
+  test("multi-row VALUES: each value takes its column's declared type, " +
+      "so literal kinds may mix within a column") {
+    val px = fresh()
+    px.execute("CREATE TABLE MX (K BIGINT NOT NULL PRIMARY KEY, V VARCHAR)")
+    px.execute("UPSERT INTO MX VALUES (1, 'x'), (2, 3)")
+    assert(px.execute("SELECT K, V FROM MX ORDER BY K").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((1L, "x"), (2L, "3")))
+  }
+
+  test("multi-row VALUES: a CREATE FUNCTION UDF as a value") {
+    val px = fresh()
+    px.execute("CREATE TABLE MU (K BIGINT NOT NULL PRIMARY KEY, V VARCHAR)")
+    px.execute("CREATE FUNCTION myrev(VARCHAR) RETURNS VARCHAR " +
+      "AS 'graft.TestReverseUdf'")
+    px.execute("UPSERT INTO MU VALUES (1, myrev('abc')), (2, 'plain'), " +
+      "(3, myrev('xy'))")
+    assert(px.execute("SELECT V FROM MU ORDER BY K").collect()
+      .map(_.getString(0)).toSeq == Seq("cba", "plain", "yx"))
+  }
+
+  test("multi-row VALUES: NEXT VALUE FOR steps once per tuple") {
+    val px = fresh()
+    px.execute("CREATE TABLE MS (K BIGINT NOT NULL PRIMARY KEY, V VARCHAR)")
+    px.execute("CREATE SEQUENCE ms_seq START WITH 10 INCREMENT BY 5")
+    px.execute("UPSERT INTO MS VALUES (NEXT VALUE FOR ms_seq, 'a'), " +
+      "(NEXT VALUE FOR ms_seq, 'b'), (NEXT VALUE FOR ms_seq, 'c')")
+    assert(px.execute("SELECT K, V FROM MS ORDER BY K").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((10L, "a"), (15L, "b"), (20L, "c")))
+  }
+
+  test("multi-row VALUES: ARRAY[...] values in several tuples") {
+    val px = fresh()
+    px.execute("CREATE TABLE MA (K BIGINT NOT NULL PRIMARY KEY, " +
+      "TAGS VARCHAR ARRAY, SC DOUBLE ARRAY)")
+    px.execute("UPSERT INTO MA VALUES (1, ARRAY['a','b'], ARRAY[1, 2.5]), " +
+      "(2, ARRAY['c'], ARRAY[3]), (3, NULL, ARRAY[])")
+    val got = px.execute("SELECT K, TAGS, SC FROM MA ORDER BY K").collect()
+    assert(got(0).getSeq[String](1) == Seq("a", "b"))
+    assert(got(0).getSeq[Double](2) == Seq(1.0, 2.5))
+    assert(got(1).getSeq[String](1) == Seq("c"))
+    assert(got(1).getSeq[Double](2) == Seq(3.0))
+    assert(got(2).isNullAt(1) && got(2).getSeq[Double](2).isEmpty)
+  }
+
+  test("multi-row VALUES through a view: every row carries the view's " +
+      "defaults and its extension column") {
+    val px = fresh()
+    px.execute("CREATE TABLE MV0 (ID BIGINT NOT NULL PRIMARY KEY, " +
+      "K VARCHAR, J BIGINT)")
+    px.execute("CREATE VIEW MVV (NOTE VARCHAR(20)) AS SELECT * FROM MV0 " +
+      "WHERE K = 'a'")
+    px.execute("UPSERT INTO MVV (ID, J, NOTE) VALUES (1, 10, 'n1'), " +
+      "(2, '20', NULL), (3, 30, 'n3')")
+    assert(px.execute("SELECT ID, J, NOTE FROM MVV ORDER BY ID").collect()
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
+      .toSeq == Seq((1L, 10L, Some("n1")), (2L, 20L, None),
+        (3L, 30L, Some("n3"))))
+    assert(px.execute("SELECT count(*) FROM MV0 WHERE K = 'a'").collect()
+      .head.getLong(0) == 3)
+  }
+
+  test("multi-row VALUES: NULL in one tuple, a value in another; a " +
+      "quoted comma and parentheses stay one value") {
+    val px = fresh()
+    px.execute("CREATE TABLE MN (K BIGINT NOT NULL PRIMARY KEY, " +
+      "V VARCHAR, N INTEGER)")
+    px.execute("UPSERT INTO MN VALUES (1, NULL, 7), (2, 'a, b (c)', NULL)")
+    val got = px.execute("SELECT K, V, N FROM MN ORDER BY K").collect()
+    assert(got(0).isNullAt(1) && got(0).getInt(2) == 7)
+    assert(got(1).getString(1) == "a, b (c)" && got(1).isNullAt(2))
+  }
+
+  test("multi-row VALUES: a width or UNSIGNED violation in the third " +
+      "tuple still raises and writes nothing") {
+    val px = fresh()
+    px.execute("CREATE TABLE MW (K BIGINT NOT NULL PRIMARY KEY, " +
+      "C CHAR(3), U UNSIGNED_INT)")
+    val e1 = intercept[Exception] {
+      px.execute("UPSERT INTO MW VALUES (1, 'ab', 1), (2, 'abc', 2), " +
+        "(3, 'abcd', 3)")
+    }
+    assert(msgs(e1).exists(m => m != null && m.contains("capacity")), e1)
+    val e2 = intercept[Exception] {
+      px.execute("UPSERT INTO MW VALUES (1, 'ab', 1), (2, 'abc', 2), " +
+        "(3, 'a', -3)")
+    }
+    assert(msgs(e2).exists(m => m != null && m.contains("unsigned")), e2)
+    assert(px.execute("SELECT count(*) FROM MW").collect()
+      .head.getLong(0) == 0)
+  }
+
+  test("a 100-tuple UPSERT VALUES runs one task and writes one parquet " +
+      "file") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_sql_wh").toString
+    val px = new PhoenixSql(spark, new GraftCatalog(spark, wh))
+    px.execute("CREATE TABLE ONE (K BIGINT NOT NULL PRIMARY KEY, V VARCHAR)")
+    def dataFiles(): Int = {
+      val data = java.nio.file.Paths.get(wh, "one", "data")
+      if (!java.nio.file.Files.exists(data)) 0
+      else {
+        val w = java.nio.file.Files.walk(data)
+        try w.filter(_.toString.endsWith(".parquet")).count().toInt
+        finally w.close()
+      }
+    }
+    val group = s"values-guard-${System.nanoTime}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val markerGroup = group + "-marker"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == markerGroup))
+          marker.countDown()
+    }
+    val before = dataFiles()
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "100-tuple UPSERT VALUES")
+      px.execute("UPSERT INTO ONE VALUES " +
+        (1 to 100).map(i => s"($i, 'v$i')").mkString(", "))
+      // events reach a listener in order: once the marker job's start
+      // arrives, every task of the upsert has been counted
+      sc.setJobGroup(markerGroup, "listener drain marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(dataFiles() - before == 1, "one parquet data file per statement")
+    assert(tasks.get == 1, s"one task per statement, got ${tasks.get}")
+    assert(px.execute("SELECT count(*) FROM ONE").collect()
+      .head.getLong(0) == 100)
+  }
+
+  test("a SELECT sees writes made straight through the catalog, and " +
+      "survives the snapshot-cache rotations they trigger") {
+    val px = fresh()
+    px.execute("CREATE TABLE OB (K BIGINT NOT NULL PRIMARY KEY, V VARCHAR) " +
+      "SNAPSHOT_CACHE_BATCHES=3")
+    px.execute("UPSERT INTO OB VALUES (1, 'a')")
+    assert(px.execute("SELECT count(*) FROM OB").collect()
+      .head.getLong(0) == 1)
+    import spark.implicits._
+    px.catalog.upsert("ob", Seq((2L, "b")).toDF("k", "v"))
+    assert(px.execute("SELECT K, V FROM OB ORDER BY K").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((1L, "a"), (2L, "b")))
+    (3L to 18L).foreach(k =>
+      px.catalog.upsert("ob", Seq((k, s"v$k")).toDF("k", "v")))
+    assert(px.execute("SELECT count(*) FROM OB").collect()
+      .head.getLong(0) == 18)
   }
 
   test("FETCH FIRST/NEXT n ROWS ONLY (g: fetch_node) maps to LIMIT") {
