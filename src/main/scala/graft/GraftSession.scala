@@ -28,9 +28,9 @@ object GraftSession {
       // (task-scheduling overhead ×32 here; ×10k on a cluster), and at
       // scale the partition count derives from input size instead of a
       // constant — the scale-adaptive shape the optimization guide §2
-      // prescribes. Overridable for A/B via env.
+      // prescribes.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
+        "false")
       // pin runtime skew-join splitting (hot keys at 100 TB); salted
       // aggregation for skewed groupBys lives in operators.Skew
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -457,7 +457,7 @@ object ScaleRehearsal {
       val t0 = System.nanoTime()
       graft.operators.MaterializeJoin.refresh(cat, path)
       val sec = (System.nanoTime() - t0) / 1e9
-      require(!graft.operators.MaterializeJoin.LastRefresh.recomputeRan,
+      require(!graft.operators.Materialize.LastRefresh.recomputeRan,
         s"$what: non-extremal delta must fold with zero recompute")
       sec
     }
@@ -523,7 +523,7 @@ object ScaleRehearsal {
       val t0 = System.nanoTime()
       graft.operators.MaterializeJoin.refresh(cat, mv)
       val sec = (System.nanoTime() - t0) / 1e9
-      require(!graft.operators.MaterializeJoin.LastRefresh.recomputeRan,
+      require(!graft.operators.Materialize.LastRefresh.recomputeRan,
         s"$what: non-extremal delta must fold with zero recompute")
       sec
     }
@@ -594,7 +594,7 @@ object ScaleRehearsal {
       val t0 = System.nanoTime()
       graft.operators.MaterializeJoin.refresh(cat, mv)
       val sec = (System.nanoTime() - t0) / 1e9
-      require(!graft.operators.MaterializeJoin.LastRefresh.recomputeRan,
+      require(!graft.operators.Materialize.LastRefresh.recomputeRan,
         s"$what: interior delta must fold with zero recompute")
       sec
     }
@@ -680,7 +680,7 @@ object ScaleRehearsal {
       val sec = (System.nanoTime() - t0) / 1e9
       if (assertNoRecompute)
         require(
-          !graft.operators.MaterializeJoin.LastRefresh.recomputeRan,
+          !graft.operators.Materialize.LastRefresh.recomputeRan,
           s"$what: interior delta must fold with zero recompute")
       sec
     }
@@ -772,7 +772,7 @@ object ScaleRehearsal {
       val sec = (System.nanoTime() - t0) / 1e9
       if (assertNoRecompute)
         require(
-          !graft.operators.MaterializeJoin.LastRefresh.recomputeRan,
+          !graft.operators.Materialize.LastRefresh.recomputeRan,
           s"$what: non-extremal delta must fold with zero recompute")
       sec
     }
@@ -851,8 +851,8 @@ object ScaleRehearsal {
       val sec = (System.nanoTime() - t0) / 1e9
       require(!graft.operators.Materialize.LastRefresh.recomputeRan,
         "non-extremal delta must not gate in a recompute")
-      val nd = graft.operators.Materialize.stateDir(
-        spark.read.parquet(s"$mv/meta").head())
+      val nd = graft.operators.MvMeta.decode(
+        spark.read.parquet(s"$mv/meta").head()).stateDir
       (sec, dirMb(s"$mv/$nd"))
     }
     // two refreshes (disjoint 8-group deltas), best-of-2 seconds —

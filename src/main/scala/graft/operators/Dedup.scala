@@ -584,21 +584,6 @@ object Dedup {
     * other bands. */
   val DefaultMaxBucket = 500
 
-  /** LSH candidate pairs: ids whose signatures agree on all rows of at
-    * least one band. bands*rowsPerBand must equal numHashes. Output:
-    * (id_a, id_b) with id_a < id_b, distinct. */
-  def minhashCandidates(docs: DataFrame, textCol: String, idCol: String,
-      shingleSize: Int = 2, numHashes: Int = 32, bands: Int = 16,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val shT = shingleTable(docs, textCol, idCol, shingleSize)
-      .where(size(col("sh")) > 0)
-    val sig = shT.select(col("id"),
-      fastSignature(shT, "sh", numHashes).as("sig"))
-    bandedPairs(sig, bands, r, maxBucket)
-  }
-
   /** (band, bucket) grouping → in-bucket id pairs. ONE shuffle (the
     * groupBy): each bucket's sorted id list explodes into its pairs via
     * nested transforms over small arrays — cheaper than a two-sided

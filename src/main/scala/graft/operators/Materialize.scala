@@ -254,55 +254,12 @@ object Materialize {
         rebuildOnDimChange, pin = s"$dimTable@v$asOfVersion")
   }
 
-  private def dimFpsOf(meta: org.apache.spark.sql.Row): Seq[Long] =
-    if (!meta.schema.fieldNames.contains("dim_fp")) Seq.empty
-    else meta.getSeq[Long](meta.fieldIndex("dim_fp"))
-
-  private def dimPinOf(meta: org.apache.spark.sql.Row): String =
-    if (!meta.schema.fieldNames.contains("dim_pin")) ""
-    else meta.getAs[String]("dim_pin")
-
-  private def grainsOf(meta: org.apache.spark.sql.Row)
-      : Seq[(String, String)] =
-    if (!meta.schema.fieldNames.contains("grain_cols")) Seq.empty
-    else meta.getSeq[String](meta.fieldIndex("grain_cols"))
-      .zip(meta.getSeq[String](meta.fieldIndex("grain_sqls")))
-
-  private def sketchesOf(meta: org.apache.spark.sql.Row)
-      : Seq[(String, Int)] =
-    if (!meta.schema.fieldNames.contains("sketch_cols")) Seq.empty
-    else meta.getSeq[String](meta.fieldIndex("sketch_cols"))
-      .zip(meta.getSeq[Long](meta.fieldIndex("sketch_ks")).map(_.toInt))
-
-  private def topksOf(meta: org.apache.spark.sql.Row)
-      : Seq[(String, Int)] =
-    if (!meta.schema.fieldNames.contains("topk_cols")) Seq.empty
-    else meta.getSeq[String](meta.fieldIndex("topk_cols"))
-      .zip(meta.getSeq[Long](meta.fieldIndex("topk_caps")).map(_.toInt))
-
-  private def bucketsOf(meta: org.apache.spark.sql.Row): Int =
-    if (!meta.schema.fieldNames.contains("state_buckets")) 0
-    else meta.getAs[Long]("state_buckets").toInt
-
-  /** WHERE-filtered MV: the row predicate (SQL text over base columns)
-    * the state was built under. First-class in the meta — refresh
-    * re-reads it from there, so an API refresh of a DDL-created
-    * filtered MV can never silently fold unfiltered deltas. */
-  private[graft] def filterOf(meta: org.apache.spark.sql.Row)
-      : Option[String] =
-    if (!meta.schema.fieldNames.contains("filter_sql")) None
-    else Option(meta.getAs[String]("filter_sql")).filter(_.nonEmpty)
-
-  private def bucketDirsOf(meta: org.apache.spark.sql.Row): Seq[String] =
-    if (!meta.schema.fieldNames.contains("bucket_dirs")) Seq.empty
-    else meta.getSeq[String](meta.fieldIndex("bucket_dirs"))
-
   /** Deterministic group→bucket routing for bucket-manifested state:
     * `pmod(xxhash64(groupCols), B)`. Floating group columns are
     * canonicalized first (-0.0 → 0.0, one NaN bit pattern) — groupBy
     * normalizes floats before hashing, so without this a group's
     * rows could route to a different bucket than its state row. */
-  private[operators] def bucketCol(df: DataFrame, groupCols: Seq[String],
+  private def bucketCol(df: DataFrame, groupCols: Seq[String],
       buckets: Int): Column = {
     val normed = groupCols.map { c =>
       df.schema(c).dataType match {
@@ -338,90 +295,6 @@ object Materialize {
       case _ => df.unpersist()
     }
 
-  // (path → (file-listing stamp, row)): see metaRow
-  private val metaMemo = new scala.collection.concurrent.TrieMap[
-    String, (String, org.apache.spark.sql.Row)]()
-
-  private def metaStamp(fs: Seq[java.io.File]): String =
-    fs.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString(",")
-
-  /** Prime the meta memo right after a meta write: the writer holds
-    * the row it just wrote, so the next read (every refresh/serve
-    * starts with one) costs a directory listing instead of a Spark
-    * job. Same stamp function as [[metaRow]] — a concurrent writer's
-    * later rewrite still invalidates exactly as before. */
-  private[operators] def primeMetaMemo(path: String,
-      row: org.apache.spark.sql.Row): Unit = {
-    val dir = new java.io.File(path, "meta")
-    Option(dir.listFiles()).foreach { fs =>
-      metaMemo.put(dir.getAbsolutePath, (metaStamp(fs.toSeq), row))
-    }
-  }
-
-  /** One-row MV meta read, memoized on the meta dir's exact file
-    * listing (Spark's overwrite writes fresh task-UUID part names, so
-    * ANY rewrite changes the stamp): re-reading an unchanged 1-row
-    * parquet was a ~0.1-0.3s driver job per refresh/serve across the
-    * whole MV battery. The directory is re-listed on every call — a
-    * concurrent writer's rewrite is picked up exactly as the plain
-    * read would see it; a non-local path (no listable java.io dir)
-    * falls through to the plain read uncached. */
-  private[graft] def metaRow(spark: SparkSession,
-      path: String): org.apache.spark.sql.Row = {
-    val dir = new java.io.File(path, "meta")
-    def readPlain() = spark.read.parquet(s"$path/" + "meta").head()
-    Option(dir.listFiles()) match {
-      case None => readPlain()
-      case Some(fs) =>
-        // name:length:mtime — Spark overwrite always produces fresh
-        // task-UUID names, but the mtime keeps the stamp sound under
-        // any deterministic-filename writer too (ADVICE r16)
-        val stamp = metaStamp(fs.toSeq)
-        val key = dir.getAbsolutePath
-        metaMemo.get(key) match {
-          case Some((s, r)) if s == stamp => r
-          case _ =>
-            val r = readPlain()
-            metaMemo.put(key, (stamp, r))
-            r
-        }
-    }
-  }
-
-  /** The bucket partition dirs actually present under a just-written
-    * bucketed state directory. */
-  private[operators] def presentBuckets(spark: SparkSession, dir: String)
-      : Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("__b=") => n.drop(4).toInt }
-      .toSet
-  }
-
-  /** Current state leaf paths for a bucketed meta: one `__b=<i>` dir
-    * per non-empty bucket, each pinned to the state version that last
-    * rewrote it (the manifest) — multiple provided roots disable
-    * Spark's partition discovery, so the read yields exactly the data
-    * schema. Empty (no surviving bucket) falls back to the `_schema`
-    * slice every bucketed write leaves behind. */
-  private[graft] def statePathsOf(path: String,
-      meta: org.apache.spark.sql.Row): Seq[String] = {
-    val b = bucketsOf(meta)
-    if (b == 0) Seq(s"$path/${stateDir(meta)}")
-    else {
-      val leafs = bucketDirsOf(meta).zipWithIndex
-        .collect { case (d, i) if d.nonEmpty => s"$path/$d/__b=$i" }
-      if (leafs.nonEmpty) leafs
-      else Seq(s"$path/${stateDir(meta)}/_schema")
-    }
-  }
-
-  private def stateDf(spark: SparkSession, path: String,
-      meta: org.apache.spark.sql.Row): DataFrame =
-    spark.read.parquet(statePathsOf(path, meta): _*)
-
   /** Full build: aggregate the current snapshot, persist it, record the
     * change-log high-water mark the state covers and the wall-clock
     * refresh point (the TTL expiry low-water mark for the next
@@ -435,7 +308,6 @@ object Materialize {
       topks: Seq[(String, Int)] = Seq.empty,
       filterSql: Option[String] = None): Long = {
     val spark = cat.changeLog(table).sparkSession
-    import spark.implicits._
     // sample the clock BEFORE constructing the snapshot: its TTL cutoff
     // is evaluated at plan-construction time, and stamping meta with a
     // LATER clock would start the next refresh's expiry window past
@@ -467,7 +339,7 @@ object Materialize {
       .getFileSystem(spark.sessionState.newHadoopConf())
       .exists(metaPath)).getOrElse(false)
     val stateDirName = (if (!metaExists) None else scala.util.Try(
-        stateDir(metaRow(spark, path))).toOption) match {
+        MvMeta.read(spark, path).stateDir).toOption) match {
       case Some(cur) =>
         val cand = s"state_v${v}r$ts"
         // an injectable test clock can repeat a stamp — never reuse the
@@ -485,8 +357,7 @@ object Materialize {
     // enforces the key-uniqueness half of the contract right here);
     // refresh re-checks it before any fold (see there)
     val (dimFp, dimPin) = derive match {
-      case ed: EnforcedDerive =>
-        (dbg("build dim fingerprint")(ed.fingerprints()), ed.pinOf)
+      case ed: EnforcedDerive => (ed.fingerprints(), ed.pinOf)
       case _ => (Seq.empty[Long], "")
     }
     // read AS OF the sampled mark: a write landing mid-build is then
@@ -501,23 +372,44 @@ object Materialize {
     val agg = aggregate(
       withGrains(derive(flt(cat.snapshotUpTo(table, v))), grainExprs),
       groupCols, measures, sketches, topks)
-    val bucketDirs: Seq[String] = dbg("build state write") {
-      if (buckets == 0) {
-        agg.write.mode(SaveMode.Overwrite).parquet(s"$path/$stateDirName")
-        Seq.empty
-      } else {
-        writeBucketed(agg, groupCols, buckets, s"$path/$stateDirName")
-        val present = presentBuckets(spark, s"$path/$stateDirName")
-        (0 until buckets).map(i =>
-          if (present.contains(i)) stateDirName else "")
-      }
-    }
-    writeMeta(spark, path, v, groupCols, measures, ts, stateDirName,
-      cat.ttlSeconds(table).getOrElse(-1L), grainExprs, sketches,
-      buckets, bucketDirs, dimFp = dimFp, dimPin = dimPin,
-      topks = topks, filterSql = filterSql)
+    val bucketDirs = writeState(agg, groupCols, buckets, path, stateDirName)
+    MvMeta.write(spark, path, MvMeta(groupCols, measures, stateDirName,
+      grainExprs, None, sketches, topks, buckets, bucketDirs,
+      MvMeta.Single(v, Some(ts), Some(cat.ttlSeconds(table).getOrElse(-1L)),
+        dimFp, dimPin, filterSql)))
     v
   }
+
+  /** The one state write of build, refresh and compaction: `df` into
+    * `path/dir`, single-dir or bucket-manifested. `tryDirect` (a cheap
+    * re-readable input) first tries the row-capped driver-local write
+    * (guide §1.2). Returns the fresh dir's bucket manifest (empty when
+    * `buckets == 0`). */
+  private[operators] def writeState(df: DataFrame, groupCols: Seq[String],
+      buckets: Int, path: String, dir: String,
+      tryDirect: Boolean = false): Seq[String] =
+    if (buckets == 0) {
+      if (!(tryDirect && DriverParquet.writeIfSmall(df, s"$path/$dir")))
+        df.write.mode(SaveMode.Overwrite).parquet(s"$path/$dir")
+      Seq.empty
+    } else {
+      writeBucketed(df, groupCols, buckets, s"$path/$dir", tryDirect)
+      manifestOf(df.sparkSession, path, dir, buckets)
+    }
+
+  /** Per bucket, `dir` when the just-written bucketed state dir holds
+    * that bucket's partition, else "" (empty bucket). */
+  private def manifestOf(spark: SparkSession, path: String, dir: String,
+      buckets: Int): Seq[String] =
+    if (buckets == 0) Seq.empty
+    else {
+      val p = new org.apache.hadoop.fs.Path(s"$path/$dir")
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val present = fs.listStatus(p).toSeq.map(_.getPath.getName)
+        .collect { case n if n.startsWith("__b=") => n.drop(4).toInt }
+        .toSet
+      (0 until buckets).map(i => if (present.contains(i)) dir else "")
+    }
 
   /** Bucketed state write: rows routed by [[bucketCol]] into `__b=<i>`
     * partition dirs, plus an always-present empty `_schema` slice (the
@@ -547,44 +439,6 @@ object Materialize {
     DriverParquet.writeRows(df, df.schema, Iterator.empty,
       s"$dir/_schema")
   }
-
-  private def writeMeta(spark: SparkSession, path: String, v: Long,
-      groupCols: Seq[String], measures: Seq[String], ts: Long,
-      stateDirName: String, ttl: Long, grains: Seq[(String, String)],
-      sketches: Seq[(String, Int)], buckets: Int,
-      bucketDirs: Seq[String], grainTz: Option[String] = None,
-      dimFp: Seq[Long] = Seq.empty, dimPin: String = "",
-      topks: Seq[(String, Int)] = Seq.empty,
-      filterSql: Option[String] = None): Unit = {
-    import spark.implicits._
-    val metaDf = Seq((v, groupCols, measures, ts, stateDirName, ttl,
-        grains.map(_._1), grains.map(_._2),
-        grainTz.getOrElse(spark.conf.get("spark.sql.session.timeZone")),
-        sketches.map(_._1), sketches.map(_._2.toLong),
-        buckets.toLong, bucketDirs, dimFp, dimPin,
-        topks.map(_._1), topks.map(_._2.toLong),
-        filterSql.getOrElse("")))
-      .toDF("last_version", "group_cols", "measures", "refresh_ts",
-        "state_dir", "ttl_at_refresh", "grain_cols", "grain_sqls",
-        "grain_tz", "sketch_cols", "sketch_ks",
-        "state_buckets", "bucket_dirs", "dim_fp", "dim_pin",
-        "topk_cols", "topk_caps", "filter_sql")
-    // one-row local relation: the driver-local writer replaces a full
-    // distributed job + commit protocol per meta flip (guide §1.2);
-    // the memo is primed with the just-written row so the next
-    // refresh/serve skips the read-back job too
-    DriverParquet.overwriteSmall(metaDf, s"$path/meta")
-    primeMetaMemo(path, metaDf.head())
-  }
-
-  /** The current state directory per the meta pointer. An expiry-only
-    * refresh rotates the state WITHOUT a new version number (expiry
-    * doesn't write the log), so the directory name — not the version —
-    * is the pointer. */
-  private[graft] def stateDir(meta: org.apache.spark.sql.Row): String =
-    if (meta.schema.fieldNames.contains("state_dir"))
-      meta.getAs[String]("state_dir")
-    else s"state_v${meta.getLong(0)}"
 
   /** Register this MV with [[graft.plans.GraftAggViews]] keyed on the
     * CATALOG TABLE, so SQL-front-end aggregates over the table's served
@@ -620,8 +474,8 @@ object Materialize {
       dims: Seq[graft.plans.GraftAggViews.DimJoinDef] = Seq.empty)
       : Unit = {
     val spark = cat.changeLog(table).sparkSession
-    val meta = metaRow(spark, path)
-    val fps = dimFpsOf(meta)
+    val meta = MvMeta.read(spark, path)
+    val fps = meta.single.dimFp
     // a star MV's groups are dim attributes the bare table scan cannot
     // answer — serving it requires the query to JOIN the same dims, so
     // the registration must carry one DimJoinDef per derive (for a
@@ -655,30 +509,27 @@ object Materialize {
       cat.ttlSeconds(table).isEmpty && {
         val cur = cat.currentVersion(table)
         lastFresh.get() == cur || {
-          val ok = metaRow(spark, path)
-            .getAs[Long]("last_version") == cur
+          val ok = MvMeta.read(spark, path).single.lastVersion == cur
           if (ok) lastFresh.set(cur)
           ok
         }
       }
     graft.plans.GraftAggViews.register(cat.tablePath(table),
       graft.plans.GraftAggViews.AggViewDef(path,
-        meta.getSeq[String](1), meta.getSeq[String](2),
-        grainsOf(meta).toMap, sketchesOf(meta).toMap, dims = dims,
-        topks = topksOf(meta).toMap, fresh = fresh,
-        filterSql = filterOf(meta)))
+        meta.groupCols, meta.measures, meta.grains.toMap,
+        meta.sketches.toMap, dims = dims, topks = meta.topks.toMap,
+        fresh = fresh, filterSql = meta.single.filterSql))
     // dependency ledger: DROP TABLE refuses while this MV exists, and
     // COMPACT TABLE derives its keep-history floor from this MV's fold
     // mark (previously only SQL-DDL MVs were visible to either)
     cat.recordMvDependency(path, Seq(table))
   }
 
-  /** The maintained aggregate as a DataFrame (current persisted state).
-    * Bucketed state reads the manifest's current leaf dir per bucket. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val m = metaRow(spark, path)
-    stateDf(spark, path, m)
-  }
+  /** The maintained aggregate of either MV kind as a DataFrame (current
+    * persisted state). Bucketed state reads the manifest's current leaf
+    * dir per bucket. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(MvMeta.read(spark, path).statePaths(path): _*)
 
   /** Rewrite the CURRENT state into one fresh directory and drop every
     * state directory the new meta no longer references. Each refresh
@@ -695,43 +546,21 @@ object Materialize {
     * are only deleted after).
     * @return bytes reclaimed by [[vacuum]] */
   def compactState(spark: SparkSession, path: String): Long = {
-    val meta = metaRow(spark, path)
-    val buckets = bucketsOf(meta)
-    val groupCols = meta.getSeq[String](1)
-    val cur = stateDf(spark, path, meta)
+    val meta = MvMeta.read(spark, path)
     // never a live dir name: refresh dirs are state_v<n>[e<ms>] and the
     // fresh nano suffix dodges prior compactions. Derive from the
-    // VERSION, not stateDir(meta) — suffixing the current name would
+    // VERSION, not the current dir — suffixing the current name would
     // accrete one "c<nanos>" per compaction until the leaf name
     // outgrows the filesystem's 255-byte limit on a periodically
     // compacted, read-mostly MV.
-    val nd = s"state_v${meta.getLong(0)}c${System.nanoTime()}"
+    val nd = s"state_v${meta.single.lastVersion}c${System.nanoTime()}"
     // the compaction input is a plain state scan, so the direct-write
     // probe is a cheap limit-take even over a huge state (falls back
     // to the distributed rewrite above the cap) — guide §1.2
-    val bucketDirs: Seq[String] =
-      if (buckets == 0) {
-        if (!DriverParquet.writeIfSmall(cur, s"$path/$nd"))
-          cur.write.mode(SaveMode.Overwrite).parquet(s"$path/$nd")
-        Seq.empty
-      } else {
-        writeBucketed(cur, groupCols, buckets, s"$path/$nd",
-          tryDirect = true)
-        val present = presentBuckets(spark, s"$path/$nd")
-        (0 until buckets).map(i => if (present.contains(i)) nd else "")
-      }
-    val f = meta.schema.fieldNames.toSet
-    writeMeta(spark, path, meta.getLong(0), groupCols,
-      meta.getSeq[String](2),
-      if (f.contains("refresh_ts")) meta.getAs[Long]("refresh_ts") else 0L,
-      nd,
-      if (f.contains("ttl_at_refresh")) meta.getAs[Long]("ttl_at_refresh")
-      else -1L,
-      grainsOf(meta), sketchesOf(meta), buckets, bucketDirs,
-      grainTz = if (f.contains("grain_tz"))
-        Some(meta.getAs[String]("grain_tz")) else None,
-      dimFp = dimFpsOf(meta), dimPin = dimPinOf(meta),
-      topks = topksOf(meta), filterSql = filterOf(meta))
+    val bucketDirs = writeState(read(spark, path), meta.groupCols,
+      meta.buckets, path, nd, tryDirect = true)
+    MvMeta.write(spark, path,
+      meta.copy(stateDir = nd, bucketDirs = bucketDirs))
     vacuum(spark, path)
   }
 
@@ -741,9 +570,9 @@ object Materialize {
     * only for a reader deliberately pinned to a PAST state dir.
     * @return bytes reclaimed */
   def vacuum(spark: SparkSession, path: String): Long = {
-    val meta = metaRow(spark, path)
+    val meta = MvMeta.read(spark, path)
     val referenced: Set[String] =
-      bucketDirsOf(meta).filter(_.nonEmpty).toSet + stateDir(meta)
+      meta.bucketDirs.filter(_.nonEmpty).toSet + meta.stateDir
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(root).toSeq
@@ -786,22 +615,23 @@ object Materialize {
     * this boundary, it just has to pick one. */
   def refresh(cat: GraftCatalog, table: String, path: String,
       derive: DataFrame => DataFrame = NoDerive): Long =
-    try refreshOnce(cat, table, path, derive)
-    catch { case e: Throwable if isLostCheckpointBlock(e) =>
-      // One-shot mark-bounded retry (VERDICT r16 #4): locally-
-      // checkpointed legs are unreplicated with truncated lineage, so
-      // on a real cluster an executor loss (or dynamic-allocation
-      // decommission) makes their blocks unrecoverable mid-fold.
-      // Every read in refreshOnce is version-/mark-bounded and the
-      // meta only flips at the very end, so rerunning the whole fold
-      // from the unchanged meta is exact — same window, same result.
-      refreshOnce(cat, table, path, derive)
-    }
+    retryOnLostBlock(refreshOnce(cat, table, path, derive))
+
+  /** One-shot mark-bounded retry of a refresh (VERDICT r16 #4), for
+    * both MV kinds: locally-checkpointed legs are unreplicated with
+    * truncated lineage, so on a real cluster an executor loss (or
+    * dynamic-allocation decommission) makes their blocks unrecoverable
+    * mid-fold. Every read in a refresh is version-/mark-bounded and the
+    * meta only flips at the very end, so rerunning the whole fold from
+    * the unchanged meta is exact — same window, same result. */
+  private[operators] def retryOnLostBlock[T](refreshOnce: => T): T =
+    try refreshOnce
+    catch { case e: Throwable if isLostCheckpointBlock(e) => refreshOnce }
 
   /** The lost-localCheckpoint-block failure signature: lineage is
     * truncated, so Spark cannot recompute — only a full mark-bounded
-    * retry of the fold is sound. Shared with [[MaterializeJoin]]. */
-  private[operators] def isLostCheckpointBlock(e: Throwable): Boolean = {
+    * retry of the fold is sound. */
+  private def isLostCheckpointBlock(e: Throwable): Boolean = {
     var t: Throwable = e
     while (t != null) {
       val m = t.getMessage
@@ -818,17 +648,6 @@ object Materialize {
     * fold's first consuming job, AFTER the checkpoints are planned —
     * a spec swaps in a block-dropping hook to simulate executor loss. */
   private[graft] var testFoldHook: () => Unit = () => ()
-
-  /** Opt-in phase timing (`GRAFT_IVM_TIMING=1`) — the single-table
-    * twin of [[MaterializeJoin]]'s dbg: zero cost when unset. */
-  private[operators] def dbg[T](what: => String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_IVM_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[ivm1] $what%-34s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-      r
-    }
 
   /** Refresh-phase plan evidence (`GRAFT_IVM_PLANDUMP=<dir>`): writes
     * each tagged refresh-internal frame's formatted plan to a numbered
@@ -850,22 +669,18 @@ object Materialize {
 
   private def refreshOnce(cat: GraftCatalog, table: String, path: String,
       derive: DataFrame => DataFrame = NoDerive): Long = {
-    LastRefresh.rebuildRan = false
+    LastRefresh.reset()
     val spark = cat.changeLog(table).sparkSession
-    val meta = metaRow(spark, path)
-    val lastV = meta.getLong(0)
-    val groupCols = meta.getSeq[String](1)
-    val measures = meta.getSeq[String](2)
-    val grains = grainsOf(meta)
-    val sketches = sketchesOf(meta)
-    val topks = topksOf(meta)
-    if (sketches.nonEmpty || topks.nonEmpty)
-      graft.functions.GraftFunctions.registerKernels(spark)
+    val meta = MvMeta.read(spark, path)
+    val sm = meta.single
+    val lastV = sm.lastVersion
+    val MvMeta(groupCols, measures, _, grains, _, sketches, topks,
+      buckets, _, _) = meta
     // WHERE-filtered MV: the predicate rides the meta, so EVERY fold
     // read below — post rows, retraction pre-images, expiry winners,
     // the affected-group recompute — filters exactly like the build
     // did, whoever triggers the refresh
-    val filterSql = filterOf(meta)
+    val filterSql = sm.filterSql
     val fd: DataFrame => DataFrame = df =>
       derive(filterSql.map(f => df.where(expr(f))).getOrElse(df))
     val ttl = cat.ttlSeconds(table)
@@ -910,15 +725,12 @@ object Materialize {
     // high-water mark does NOT mean an unchanged table — time alone
     // retracts rows, and an early return here would serve them forever
     if (newV == lastV && ttl.isEmpty) return lastV
-    val hasRefreshTs = meta.schema.fieldNames.contains("refresh_ts")
     // an ALTER SET TTL between refreshes invalidates the expiry-window
     // algebra in BOTH directions (a shortened TTL leaves rows below the
     // new window start unretracted; a lengthened/removed one can't
     // resurrect already-retracted rows) — field missing (legacy meta)
     // or value changed, either way only a rebuild is correct
-    val ttlChanged =
-      !meta.schema.fieldNames.contains("ttl_at_refresh") ||
-        meta.getAs[Long]("ttl_at_refresh") != ttl.getOrElse(-1L)
+    val ttlChanged = !sm.ttlAtRefresh.contains(ttl.getOrElse(-1L))
     // grain SQL (date_trunc over a timestamp) evaluates under the
     // SESSION timezone: a refresh from a different-tz session would
     // derive post/pre/expiry grain values at boundaries the persisted
@@ -927,16 +739,14 @@ object Materialize {
     // grain meta predating the field) is only correct as a rebuild,
     // which re-derives every group under the CURRENT session tz.
     val sessionTz = spark.conf.get("spark.sql.session.timeZone")
-    val grainTzChanged = grains.nonEmpty &&
-      (!meta.schema.fieldNames.contains("grain_tz") ||
-        meta.getAs[String]("grain_tz") != sessionTz)
-    if (floor > lastV || !hasRefreshTs || ttlChanged || grainTzChanged) {
+    val grainTzChanged = grains.nonEmpty && !meta.grainTz.contains(sessionTz)
+    if (floor > lastV || sm.refreshTs.isEmpty || ttlChanged ||
+        grainTzChanged) {
       LastRefresh.rebuildRan = true
       return build(cat, table, groupCols, measures, path, grains,
-        sketches, bucketsOf(meta), derive, topks,
-        filterSql = filterSql)
+        sketches, buckets, derive, topks, filterSql = filterSql)
     }
-    val lastRefreshMs = meta.getAs[Long]("refresh_ts")
+    val lastRefreshMs = sm.refreshTs.get
     // alive-at-now cutoff for post images; None ⇒ no expiry
     val nowCut = ttl.map(t => new java.sql.Timestamp(nowMs - t * 1000L))
     val lastCut = ttl.map(t =>
@@ -962,20 +772,20 @@ object Materialize {
     // than silently dropping the enforcement it was built with.
     derive match {
       case ed: EnforcedDerive =>
-        val stamped = dimFpsOf(meta)
+        val stamped = sm.dimFp
         if (stamped.isEmpty) throw new IllegalStateException(
           "this MV state was built without a dim fingerprint (bare " +
             "derive function); rebuild with the StarDerive(s) to " +
             "enable dim-stability enforcement")
-        val cur = dbg("dim fingerprint gate")(ed.fingerprints())
+        val cur = ed.fingerprints()
         if (cur != stamped) {
           if (ed.rebuildOnDimChangeOf) {
             LastRefresh.rebuildRan = true
             return build(cat, table, groupCols, measures, path,
-              grains, sketches, bucketsOf(meta), derive, topks,
+              grains, sketches, buckets, derive, topks,
               filterSql = filterSql)
           }
-          val pin = dimPinOf(meta)
+          val pin = sm.dimPin
           val which =
             if (stamped.size == cur.size)
               stamped.zip(cur).zipWithIndex
@@ -992,7 +802,7 @@ object Materialize {
               "Materialize.build, pass rebuildOnDimChange = true, " +
               "or pin the dim version (StarDerive.pinned)")
         }
-      case _ if dimFpsOf(meta).nonEmpty =>
+      case _ if sm.dimFp.nonEmpty =>
         throw new IllegalStateException(
           "this MV state was built with a StarDerive dim fingerprint; " +
             "pass the StarDerive(s) to refresh so dim stability can " +
@@ -1002,14 +812,8 @@ object Materialize {
     val aliveNow: Column = nowCut
       .map(c => col("_ts").isNull || col("_ts") >= lit(c))
       .getOrElse(lit(true))
-    // full-manifest read: the legacy fold input, and (bucketed) the
-    // typed-schema source — the fold itself slices to touched buckets
-    val stateAll = stateDf(spark, path, meta)
-    val stT: String => DataType = c => stateAll.schema(c).dataType
-
     val s = cat.spec(table)
     val fields = s.schema.fieldNames.toSeq
-    val buckets = bucketsOf(meta)
     // Bucketed state consumes the delta subplans twice (bucket probe +
     // fold), so they ride a lazy localCheckpoint, NOT a persist: a
     // persisted frame is a CacheManager entry keyed by plan, and a
@@ -1070,42 +874,82 @@ object Materialize {
     }
     val retracted0 = withGrains(
       fd(expVals.foldLeft(preVals)(_ unionByName _)), grains)
-
-    // ---- bucket-manifested state: slice the fold to touched buckets ----
-    // Only a bucket holding a delta-inserted or retraction/expiry group
-    // can change, so the merge fold reads — and the write below
-    // rewrites — exactly those `__b=` partitions; every other bucket's
-    // file is untouched and stays pinned in the manifest. Per-refresh
-    // cost is O(delta + touched-buckets × bucket-size) instead of
-    // O(groups): size `buckets` so a bucket is a few row groups and a
-    // small delta against a billion-group state rewrites megabytes.
     // (checkpoint rationale at the changes frame above; lazy, so the
     // first consumer materializes them)
     val retracted =
       if (buckets > 0) retracted0.localCheckpoint(false) else retracted0
+    val posts = withGrains(fd(changes.where(!col("_deleted") && aliveNow)
+      .select(fields.map(col): _*)), grains)
+    planDump("single_changes", changes)
+    planDump("single_retracted", retracted)
+    // a distinct target dir always — an expiry-only refresh keeps the
+    // version number, so suffix it to avoid overwriting the state
+    // being read
+    val nd =
+      if (newV > lastV) s"state_v$newV" else s"state_v${newV}e$nowMs"
+    val folded =
+      try foldAndWrite(spark, path, meta, "single",
+        posts.withColumn("__w", lit(1L))
+          .unionByName(retracted.withColumn("__w", lit(-1L))), nd,
+        (affected, affRows) => recomputePlan(cat, table, groupCols,
+          measures, grains, affected, affRows, sketches, fd, topks,
+          uptoV = Some(rawMax)))
+      finally if (buckets > 0) { freeLocal(changes); freeLocal(retracted) }
+    MvMeta.write(spark, path, folded.copy(grainTz = None,
+      kind = sm.copy(lastVersion = newV, refreshTs = Some(nowMs),
+        ttlAtRefresh = Some(ttl.getOrElse(-1L)))))
+    newV
+  }
+
+  /** The fold tail both MV kinds share: state ⊕ signed delta → extremum
+    * gate → affected-group recompute → state write → bucket manifest.
+    * Only the legs that produce `signed` (and the recompute plan)
+    * differ between a single-table and a join MV.
+    *
+    * Bucket-manifested state slices the fold to touched buckets: only a
+    * bucket holding a group some signed row (post row or retraction
+    * pre-image) lands in can change, so the merge reads — and the write
+    * rewrites — exactly those `__b=` partitions; every other bucket's
+    * file is untouched and stays pinned in the manifest. Per-refresh
+    * cost is O(delta + touched-buckets × bucket-size) instead of
+    * O(groups): size `buckets` so a bucket is a few row groups and a
+    * small delta against a billion-group state rewrites megabytes.
+    *
+    * @param tag plan-dump tag of the merged fold (see [[planDump]])
+    * @param signed delta rows over the state's group/measure columns
+    *   (grains derived) weighted `__w` = +1 (post row) or −1
+    *   (retraction); consumed twice when bucketed, so pass cheap
+    *   (checkpointed) inputs
+    * @param nd the fresh state dir to write under `path`
+    * @param recompute the gated-in groups' recompute plan, given the
+    *   affected groups (`__a_<g>` columns) and, at most 1024 of them,
+    *   their collected rows (the IN-pushdown values)
+    * @return `meta` pointed at the written state (dir and manifest); the
+    *   caller stamps its marks on it and flips the pointer */
+  private[operators] def foldAndWrite(spark: SparkSession, path: String,
+      meta: MvMeta, tag: String, signed: DataFrame, nd: String,
+      recompute: (DataFrame, Option[Seq[org.apache.spark.sql.Row]])
+        => DataFrame): MvMeta = {
+    val MvMeta(groupCols, measures, _, _, _, sketches, topks, buckets,
+      oldDirs, _) = meta
+    if (sketches.nonEmpty || topks.nonEmpty)
+      graft.functions.GraftFunctions.registerKernels(spark)
+    // full-manifest read: the single-dir fold input, and (bucketed) the
+    // typed-schema source
+    val stateAll = spark.read.parquet(meta.statePaths(path): _*)
+    val stT: String => DataType = c => stateAll.schema(c).dataType
     val touched: Option[Set[Int]] =
       if (buckets == 0) None
       else {
-        val tg = withGrains(fd(
-            changes.where(!col("_deleted") && aliveNow)
-              .select(fields.map(col): _*)), grains)
-          .select(groupCols.map(col): _*)
-          .unionByName(retracted.select(groupCols.map(col): _*))
-        Some(dbg("bucket probe") {
-          tg.select(bucketCol(tg, groupCols, buckets).as("__b"))
-            .distinct().collect().map(_.getInt(0)).toSet })
+        val tg = signed.select(groupCols.map(col): _*)
+        Some(tg.select(bucketCol(tg, groupCols, buckets).as("__b"))
+          .distinct().collect().map(_.getInt(0)).toSet)
       }
     LastRefresh.bucketsTouched = touched.map(_.size).getOrElse(-1)
     LastRefresh.bucketsTotal = buckets
     val state = touched match {
       case None => stateAll
-      case Some(tb) =>
-        val dirs = bucketDirsOf(meta)
-        val paths = tb.toSeq.sorted.collect {
-          case i if dirs(i).nonEmpty => s"$path/${dirs(i)}/__b=$i" }
-        if (paths.isEmpty)
-          spark.read.parquet(s"$path/${stateDir(meta)}/_schema")
-        else spark.read.parquet(paths: _*)
+      case Some(tb) => spark.read.parquet(meta.statePaths(path, tb): _*)
     }
 
     // ---- union-merge (not joins: NULL group values merge correctly) ----
@@ -1129,30 +973,26 @@ object Materialize {
       .withColumn("__retr", lit(0)).withColumn("__instate", lit(1))
       .select(col("*") +: carry(m => col(s"min_$m"), nul,
         m => col(s"max_$m"), nul): _*)
-    val posts = withGrains(fd(changes.where(!col("_deleted") && aliveNow)
-      .select(fields.map(col): _*)), grains)
     // plain-measure MVs fold the signed delta in ONE pass (see
     // signedFold); sketch/top-k MVs keep the two-pass shape — their
-    // kernels fold inserted VALUES and cannot retract
+    // kernels fold inserted VALUES (a sign-conditional input would
+    // insert NULLs) and cannot retract
     val deltaRows: DataFrame =
       if (sketches.isEmpty && topks.isEmpty)
-        signedFold(
-          posts.withColumn("__w", lit(1L))
-            .unionByName(retracted.withColumn("__w", lit(-1L))),
-          groupCols, measures, stT, mT)
+        signedFold(signed, groupCols, measures, stT, mT)
       else {
         // the SAME aggregate() the full build uses — the exactness
         // guarantee depends on the delta and the build producing
         // identical widened sum types for the type-strict unionByName
         // merge below
-        val postRows = aggregate(posts,
+        val postRows = aggregate(signed.where(col("__w") > 0).drop("__w"),
             groupCols, measures, sketches, topks)
           .withColumn("__retr", lit(0)).withColumn("__instate", lit(0))
           .select(col("*") +: carry(nul, nul, nul, nul): _*)
         // negative contributions: cnt / per-measure cnt / sum fold
         // algebraically (count and sum are self-invertible); min/max
         // ride as __rmin/__rmax for the extremum gate instead
-        val retrRows = retracted
+        val retrRows = signed.where(col("__w") < 0).drop("__w")
           .groupBy(groupCols.map(col): _*)
           .agg((-count(lit(1))).as("cnt"),
             measures.flatMap(m => Seq(
@@ -1175,8 +1015,7 @@ object Materialize {
               lit(null).cast(BinaryType).as(s"topk_$t") }): _*)
         postRows.unionByName(retrRows)
       }
-    val unioned = stateRows.unionByName(deltaRows)
-    val merged = unioned
+    val merged = stateRows.unionByName(deltaRows)
       .groupBy(groupCols.map(col): _*)
       .agg(sum(col("cnt")).as("cnt"),
         measures.flatMap(m => Seq(
@@ -1204,15 +1043,18 @@ object Materialize {
       // count and the state write; checkpointing avoids re-running the
       // whole state+delta+retraction fold per consumer (spills to disk
       // if the group count outgrows memory). localCheckpoint, not
-      // persist — see the changes/retracted note above.
+      // persist: a persisted frame is a CacheManager entry keyed by
+      // plan, and a concurrent writer's INSERT into a folded table's
+      // log path recaches-by-path and drops the in-flight blocks
+      // mid-job ("Block rdd_N does not exist").
       .localCheckpoint(false)
-    val newDir = try {
+    val written = try {
     // ---- extremum gate ----
     // Removing a NON-extremal value can never change a group's min/max,
     // and cnt/sum already folded algebraically — so a retraction group
-    // needs the snapshot recompute ONLY if some retracted value ties or
-    // crosses the prior state's extremum for some measure (<=/>= not ==:
-    // a within-delta churn value never in the state can sit outside its
+    // needs the recompute ONLY if some retracted value ties or crosses
+    // the prior state's extremum for some measure (<=/>= not ==: a
+    // within-delta churn value never in the state can sit outside its
     // bounds), or the group wasn't in the state at all (its min/max
     // would otherwise fold in values retracted in the same refresh).
     // A state extremum that is NULL with a non-null retracted value is
@@ -1240,16 +1082,12 @@ object Materialize {
     // recompute branch in the written plan at all — the common
     // non-extremal-update refresh never touches the base history
     // (delta-sized check: affected derives from state + delta only).
-    // ONE job serves both the gate count and the IN-pushdown rows (the
-    // join path's shape): collect at most 1025 — 1025 means "more than
-    // the pushdown cap", and only then is the exact count worth a
-    // second job. Above the cap, the semi-join-only shape stands
-    // (still shuffle-bounded).
-    planDump("single_changes", changes)
-    planDump("single_retracted", retracted)
-    planDump("single_merged", merged)
-    val affHead = dbg("merged fold + affected probe") {
-      affected.limit(1025).collect().toSeq }
+    // ONE job serves both the gate count and the IN-pushdown rows:
+    // collect at most 1025 — 1025 means "more than the pushdown cap",
+    // and only then is the exact count worth a second job. Above the
+    // cap, the semi-join-only shape stands (still shuffle-bounded).
+    planDump(s"${tag}_merged", merged)
+    val affHead = affected.limit(1025).collect().toSeq
     // executor-loss seam: the fold is materialized, the write below
     // still has to read its blocks — the spec drops them here
     testFoldHook()
@@ -1257,19 +1095,10 @@ object Materialize {
       if (affHead.size <= 1024) affHead.size.toLong else affected.count()
     LastRefresh.affectedGroups = affectedCount
     LastRefresh.recomputeRan = affectedCount > 0
-    val affRows =
-      if (affectedCount > 0 && affectedCount <= 1024) Some(affHead)
-      else None
     val rec =
       if (affectedCount == 0) None
-      else Some(recomputePlan(cat, table, groupCols, measures, grains,
-        affected, affRows, sketches, fd, topks, uptoV = Some(rawMax)))
-    val out = rec.map(kept.unionByName(_)).getOrElse(kept)
-    // a distinct target dir always — an expiry-only refresh keeps the
-    // version number, so suffix it to avoid overwriting the state
-    // being read
-    val nd =
-      if (newV > lastV) s"state_v$newV" else s"state_v${newV}e$nowMs"
+      else Some(recompute(affected,
+        if (affectedCount <= 1024) Some(affHead) else None))
     // Row-count-gated DIRECT state write (guide §1.2 — the dominant
     // fixed cost of the small-delta refresh floor): kept probes the
     // checkpointed merged fold's cached blocks; the recompute branch
@@ -1279,42 +1108,19 @@ object Materialize {
     // overflow (or >1024 affected groups, or a type drift) falls back
     // to the distributed write with the recompute still executed
     // exactly once.
-    dbg("state write") {
-      val direct = affectedCount <= 1024 &&
-        DriverParquet.writeFoldIfSmall(kept, rec,
-          if (buckets == 0) None
-          else Some((d: DataFrame) => bucketCol(d, groupCols, buckets)),
-          s"$path/$nd")
-      if (!direct) {
-        if (buckets == 0)
-          out.write.mode(SaveMode.Overwrite).parquet(s"$path/$nd")
-        else writeBucketed(out, groupCols, buckets, s"$path/$nd")
-      }
-    }
-    nd
-    } finally {
-      freeLocal(merged)
-      if (buckets > 0) { freeLocal(changes); freeLocal(retracted) }
-    }
+    if (affectedCount <= 1024 && DriverParquet.writeFoldIfSmall(kept, rec,
+        if (buckets == 0) None
+        else Some((d: DataFrame) => bucketCol(d, groupCols, buckets)),
+        s"$path/$nd"))
+      manifestOf(spark, path, nd, buckets)
+    else writeState(rec.map(kept.unionByName(_)).getOrElse(kept),
+      groupCols, buckets, path, nd)
+    } finally freeLocal(merged)
     // manifest flip: touched buckets point at the new dir (or vanish if
     // emptied), untouched buckets keep their pinned dir — readers of the
     // PREVIOUS meta still see a complete, consistent old state
-    val newBucketDirs: Seq[String] =
-      if (buckets == 0) Seq.empty
-      else {
-        val present = presentBuckets(spark, s"$path/$newDir")
-        val old = bucketDirsOf(meta)
-        (0 until buckets).map { i =>
-          if (touched.exists(_.contains(i)))
-            (if (present.contains(i)) newDir else "")
-          else old(i)
-        }
-      }
-    dbg("write meta") {
-      writeMeta(spark, path, newV, groupCols, measures, nowMs, newDir,
-        ttl.getOrElse(-1L), grains, sketches, buckets, newBucketDirs,
-        dimFp = dimFpsOf(meta), dimPin = dimPinOf(meta), topks = topks) }
-    newV
+    meta.copy(stateDir = nd, bucketDirs = written.indices.map(i =>
+      if (touched.exists(_.contains(i))) written(i) else oldDirs(i)))
   }
 
   /** Delta rows with their typed pre-images (`_prev`, NULL for first
@@ -1369,21 +1175,38 @@ object Materialize {
   }
 
   /** Test/diagnostic instrumentation: facts about the most recent
-    * [[refresh]] call (single-writer, same assumption as the catalog's
-    * version counter). `recomputeRan == false` means the written plan
+    * refresh of either MV kind (single-writer, same assumption as the
+    * catalog's version counter). Every refresh resets all of them on
+    * entry, so a refresh that found nothing to fold reports that
+    * nothing ran. `recomputeRan == false` means the written plan
     * contained NO base-history access at all. */
   private[graft] object LastRefresh {
-    @volatile var affectedGroups: Long = -1L
+    @volatile var affectedGroups: Long = 0L
     @volatile var recomputeRan: Boolean = false
     /** True when the last refresh() fell back to a FULL REBUILD
-      * (history discarded past the fold mark, TTL/tz change, dim-churn
-      * opt-in) instead of folding incrementally — what the floored-
-      * compaction specs pin on. */
+      * (history discarded past a fold mark, TTL/tz change, dim-churn
+      * opt-in) instead of folding incrementally — what the
+      * floored-compaction specs pin on. */
     @volatile var rebuildRan: Boolean = false
     /** Bucketed refreshes only: how many `__b=` partitions this refresh
-      * read + rewrote (-1 = legacy single-dir state), of how many. */
+      * read + rewrote (-1 = single-dir state, or no fold), of how many. */
     @volatile var bucketsTouched: Int = -1
     @volatile var bucketsTotal: Int = -1
+    /** Join MVs: tables whose snapshot reads the last gated recompute
+      * bounded with a below-join affected-group IN-filter (empty when
+      * the gate did not fire, when >1024 groups disabled the pushdown,
+      * or when the soundness rule held it back — see
+      * [[MaterializeJoin]]'s recomputeJoined). */
+    @volatile var recomputePushdown: Seq[String] = Nil
+
+    private[operators] def reset(): Unit = {
+      affectedGroups = 0L
+      recomputeRan = false
+      rebuildRan = false
+      bucketsTouched = -1
+      bucketsTotal = -1
+      recomputePushdown = Nil
+    }
   }
 
   /** Affected-group recompute, PRUNED to affected-PK history: instead of
@@ -1485,9 +1308,8 @@ object Materialize {
     * count the two-pass count(col) produced, or the NULL would survive
     * the merge for groups with no state row. Sketch/top-k chains keep
     * the two-pass shape — their kernels fold inserted VALUES and
-    * cannot take sign-conditional input. Shared by the single-table
-    * and join folds, so a fix lands in both at once. */
-  private[operators] def signedFold(signed: DataFrame,
+    * cannot take sign-conditional input. */
+  private def signedFold(signed: DataFrame,
       groupCols: Seq[String], measures: Seq[String],
       stT: String => DataType, mT: String => DataType): DataFrame =
     signed.groupBy(groupCols.map(col): _*)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.GraftCatalog
@@ -151,37 +151,6 @@ object MaterializeJoin {
         factKeysImmutable = leftKeysImmutable)), leftOuter = leftOuter,
         fullOuter = fullOuter)
   }
-
-  /** Test/diagnostic instrumentation, single-writer (same contract as
-    * [[Materialize.LastRefresh]]). */
-  private[graft] object LastRefresh {
-    @volatile var affectedGroups: Long = -1L
-    @volatile var recomputeRan: Boolean = false
-    /** Bucketed refreshes only: `__b=` partitions read + rewritten by
-      * the last refresh (-1 = single-dir state). */
-    @volatile var bucketsTouched: Int = -1
-    /** True when the last refresh() fell back to a FULL REBUILD (some
-      * log's replayability floor rose past its fold mark, or a grain-tz
-      * change) instead of folding incrementally. */
-    @volatile var rebuildRan: Boolean = false
-    /** Tables whose snapshot reads the last gated recompute bounded
-      * with a below-join affected-group IN-filter (empty when the gate
-      * did not fire, when >1024 groups disabled the pushdown, or when
-      * the soundness rule held it back — see recomputeJoined). */
-    @volatile var recomputePushdown: Seq[String] = Nil
-  }
-
-  /** Opt-in phase timing (`GRAFT_IVM_TIMING=1`): prints each refresh
-    * stage's wall seconds — the floor-hunting instrument, zero cost
-    * when unset. */
-  private def dbg[T](what: => String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_IVM_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[ivm] $what%-34s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-      r
-    }
 
   private def requireNoTtl(cat: GraftCatalog, table: String): Unit =
     require(cat.ttlSeconds(table).isEmpty,
@@ -373,84 +342,6 @@ object MaterializeJoin {
         "the key")
   }
 
-  private def writeMeta(spark: SparkSession, path: String,
-      cs: ChainSpec, vF: Long, vS: Seq[Long], groupCols: Seq[String],
-      measures: Seq[String], stateDirName: String,
-      sketches: Seq[(String, Int)], topks: Seq[(String, Int)],
-      grains: Seq[(String, String)], buckets: Int = 0,
-      bucketDirs: Seq[String] = Seq.empty): Unit = {
-    import spark.implicits._
-    val metaDf = Seq((cs.fact, cs.sides.map(_.table), cs.sides.map(_.keys),
-        cs.sides.map(_.sideKeysImmutable),
-        cs.sides.map(_.factKeysImmutable),
-        vF, vS, groupCols, measures, stateDirName,
-        sketches.map(_._1), sketches.map(_._2.toLong),
-        topks.map(_._1), topks.map(_._2.toLong),
-        grains.map(_._1), grains.map(_._2),
-        spark.conf.get("spark.sql.session.timeZone"), cs.leftOuter,
-        cs.fullOuter, buckets.toLong, bucketDirs,
-        cs.factFilterSql.getOrElse("")))
-      .toDF("fact", "side_tables", "side_keys", "side_imms",
-        "fact_imms", "last_vf", "last_vs", "group_cols", "measures",
-        "state_dir", "sketch_cols", "sketch_ks", "topk_cols",
-        "topk_caps", "grain_cols", "grain_sqls", "grain_tz",
-        "left_outer", "full_outer", "state_buckets", "bucket_dirs",
-        "fact_filter")
-    // one-row local relation: driver-local write, no job (guide §1.2);
-    // prime the memo with the written row — the next refresh/serve
-    // then skips the read-back job (see Materialize.primeMetaMemo)
-    DriverParquet.overwriteSmall(metaDf, s"$path/meta")
-    Materialize.primeMetaMemo(path, metaDf.head())
-  }
-
-  private def stateDir0(m: org.apache.spark.sql.Row): String =
-    m.getAs[String]("state_dir")
-
-  private def bucketsOf(m: org.apache.spark.sql.Row): Int =
-    if (!m.schema.fieldNames.contains("state_buckets")) 0
-    else m.getAs[Long]("state_buckets").toInt
-
-  private def bucketDirsOf(m: org.apache.spark.sql.Row): Seq[String] =
-    if (!m.schema.fieldNames.contains("bucket_dirs")) Seq.empty
-    else m.getSeq[String](m.fieldIndex("bucket_dirs"))
-
-  private def grainsOf(m: org.apache.spark.sql.Row)
-      : Seq[(String, String)] =
-    m.getSeq[String](m.fieldIndex("grain_cols"))
-      .zip(m.getSeq[String](m.fieldIndex("grain_sqls")))
-
-  private def sketchesOf(m: org.apache.spark.sql.Row)
-      : Seq[(String, Int)] =
-    m.getSeq[String](m.fieldIndex("sketch_cols"))
-      .zip(m.getSeq[Long](m.fieldIndex("sketch_ks")).map(_.toInt))
-
-  private def topksOf(m: org.apache.spark.sql.Row): Seq[(String, Int)] =
-    m.getSeq[String](m.fieldIndex("topk_cols"))
-      .zip(m.getSeq[Long](m.fieldIndex("topk_caps")).map(_.toInt))
-
-  private def meta(spark: SparkSession, path: String)
-      : org.apache.spark.sql.Row =
-    Materialize.metaRow(spark, path)
-
-  private def specOf(m: org.apache.spark.sql.Row): ChainSpec = {
-    val tables = m.getSeq[String](m.fieldIndex("side_tables"))
-    // nested parquet arrays deserialize as mutable.ArraySeq — convert
-    val keys = m.getSeq[scala.collection.Seq[String]](
-      m.fieldIndex("side_keys")).map(_.toSeq)
-    val sImm = m.getSeq[Boolean](m.fieldIndex("side_imms"))
-    val fImm = m.getSeq[Boolean](m.fieldIndex("fact_imms"))
-    ChainSpec(m.getAs[String]("fact"),
-      tables.indices.map(i =>
-        SideSpec(tables(i), keys(i), sImm(i), fImm(i))),
-      leftOuter = m.schema.fieldNames.contains("left_outer") &&
-        m.getAs[Boolean]("left_outer"),
-      fullOuter = m.schema.fieldNames.contains("full_outer") &&
-        m.getAs[Boolean]("full_outer"),
-      factFilterSql =
-        if (!m.schema.fieldNames.contains("fact_filter")) None
-        else Option(m.getAs[String]("fact_filter")).filter(_.nonEmpty))
-  }
-
   /** Full build: aggregate the joined current snapshots, persist,
     * record EVERY table's change-log high-water mark. */
   /** `buckets > 0` lays the state out BUCKET-MANIFESTED exactly like
@@ -493,17 +384,10 @@ object MaterializeJoin {
       groupCols, measures, sketches, topks)
     // flip-don't-overwrite: same naming discipline as Materialize
     val nd = s"state_v${vF}_${vS.mkString("_")}"
-    val bucketDirs: Seq[String] =
-      if (buckets == 0) {
-        agg.write.mode(SaveMode.Overwrite).parquet(s"$path/$nd")
-        Seq.empty
-      } else {
-        Materialize.writeBucketed(agg, groupCols, buckets, s"$path/$nd")
-        val present = Materialize.presentBuckets(spark, s"$path/$nd")
-        (0 until buckets).map(i => if (present.contains(i)) nd else "")
-      }
-    writeMeta(spark, path, cs, vF, vS, groupCols, measures, nd,
-      sketches, topks, grainExprs, buckets, bucketDirs)
+    val bucketDirs =
+      Materialize.writeState(agg, groupCols, buckets, path, nd)
+    MvMeta.write(spark, path, MvMeta(groupCols, measures, nd, grainExprs,
+      None, sketches, topks, buckets, bucketDirs, MvMeta.Join(cs, vF, vS)))
     (vF, vS)
   }
 
@@ -512,40 +396,6 @@ object MaterializeJoin {
       measures: Seq[String], path: String): (Long, Long) = {
     val (vF, vS) = build(cat, js.chain, groupCols, measures, path)
     (vF, vS.head)
-  }
-
-  /** The maintained aggregate as a DataFrame (current persisted
-    * state). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val m = meta(spark, path)
-    // bucket-manifested metas resolve to the per-bucket leaf dirs
-    // (Materialize's resolver reads the same field names)
-    spark.read.parquet(Materialize.statePathsOf(path, m): _*)
-  }
-
-  /** Delete every `state_v*` dir the current meta no longer references
-    * and return the bytes reclaimed — the flip-don't-overwrite
-    * discipline leaves one dir per refresh behind, so a long-maintained
-    * join MV accumulates dead state. Same caller contract as
-    * [[Materialize.vacuum]]: run when no reader of a superseded dir is
-    * in flight. */
-  def vacuum(spark: SparkSession, path: String): Long = {
-    val m = meta(spark, path)
-    // a bucket manifest deliberately pins untouched buckets in OLDER
-    // dirs — every dir it references is live
-    val live = bucketDirsOf(m).filter(_.nonEmpty).toSet +
-      m.getAs[String]("state_dir")
-    def size(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles).map(_.map(size).sum).getOrElse(0L)
-      else f.length()
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete()
-    }
-    Option(new java.io.File(path).listFiles).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("state_v") &&
-        !live.contains(d.getName))
-      .map { d => val b = size(d); del(d); b }.sum
   }
 
   /** Register the join MV so [[graft.plans.AggRewriteRule]] serves a
@@ -568,12 +418,10 @@ object MaterializeJoin {
     * after [[refresh]]. */
   def registerForRewrite(cat: GraftCatalog, path: String): Unit = {
     val spark = cat.session
-    val m = meta(spark, path)
-    val cs = specOf(m)
-    val groupCols = m.getSeq[String](m.fieldIndex("group_cols"))
-    val measures = m.getSeq[String](m.fieldIndex("measures"))
-    val served = groupCols ++ measures ++
-      sketchesOf(m).map(_._1) ++ topksOf(m).map(_._1)
+    val m = MvMeta.read(spark, path)
+    val cs = m.join.chain
+    val served = m.groupCols ++ m.measures ++
+      m.sketches.map(_._1) ++ m.topks.map(_._1)
     val dims = cs.sides.map { s =>
       val sf = cat.spec(s.table).schema.fieldNames.toSet
       // state columns living on THIS side serve through its join —
@@ -597,19 +445,16 @@ object MaterializeJoin {
       val counters = cat.currentVersion(cs.fact) +:
         cs.sides.map(s => cat.currentVersion(s.table))
       counters == lastFresh.get() || {
-        val cur = meta(spark, path)
-        val ok =
-          cur.getAs[Long]("last_vf") == counters.head &&
-            cur.getSeq[Long](cur.fieldIndex("last_vs")) ==
-              counters.tail
+        val cur = MvMeta.read(spark, path).join
+        val ok = (cur.lastVf +: cur.lastVs) == counters
         if (ok) lastFresh.set(counters)
         ok
       }
     }
     graft.plans.GraftAggViews.register(cat.tablePath(cs.fact),
-      graft.plans.GraftAggViews.AggViewDef(path, groupCols, measures,
-        sketches = sketchesOf(m).toMap, dims = dims,
-        topks = topksOf(m).toMap, fresh = fresh,
+      graft.plans.GraftAggViews.AggViewDef(path, m.groupCols, m.measures,
+        sketches = m.sketches.toMap, dims = dims,
+        topks = m.topks.toMap, fresh = fresh,
         filterSql = cs.factFilterSql))
     // dependency ledger: DROP TABLE on the fact OR any side refuses
     // while this MV exists, and COMPACT TABLE on any of them derives
@@ -678,8 +523,7 @@ object MaterializeJoin {
     else memo.getOrElseUpdate(
       (delta, keys),
       scala.util.Try {
-        val b = dbg(s"zone probe ${keys.head}") {
-          delta.agg(min(col(keys.head)), max(col(keys.head))).head }
+        val b = delta.agg(min(col(keys.head)), max(col(keys.head))).head
         if (b.isNullAt(0)) Some(None) // delta keys all NULL: no match
         else Some(Some((b.get(0), b.get(1))))
       }.getOrElse(None)) // un-orderable key type: semi-join only
@@ -821,8 +665,7 @@ object MaterializeJoin {
     * .PhoenixSql]]. */
   def expireBefore(cat: GraftCatalog, path: String, column: String,
       cutoff: Column): (Long, Seq[Long]) = {
-    val m = meta(cat.session, path)
-    val cs = specOf(m)
+    val cs = MvMeta.read(cat.session, path).join.chain
     val holder = (cs.fact +: cs.sides.map(_.table))
       .find(t => cat.spec(t).schema.fieldNames.contains(column))
       .getOrElse(throw new IllegalArgumentException(
@@ -843,40 +686,23 @@ object MaterializeJoin {
     * persisted joined-aggregate state. Returns the new (factV, sideVs)
     * high-water marks (== the stored ones when nothing changed). */
   def refresh(cat: GraftCatalog, path: String): (Long, Seq[Long]) =
-    try refreshOnce(cat, path)
-    catch { case e: Throwable
-        if Materialize.isLostCheckpointBlock(e) =>
-      // one-shot mark-bounded retry on lost localCheckpoint blocks —
-      // rationale at [[Materialize.refresh]] (VERDICT r16 #4): every
-      // read is version-bounded and the meta flips last, so a rerun
-      // from the unchanged meta folds the identical window
-      refreshOnce(cat, path)
-    }
+    Materialize.retryOnLostBlock(refreshOnce(cat, path))
 
   private def refreshOnce(cat: GraftCatalog, path: String)
       : (Long, Seq[Long]) = {
-    LastRefresh.rebuildRan = false
-    LastRefresh.recomputePushdown = Nil
+    Materialize.LastRefresh.reset()
     val spark = cat.session
-    val m = dbg("meta read")(meta(spark, path))
-    val cs = specOf(m)
+    val m = MvMeta.read(spark, path)
+    val MvMeta.Join(cs, lastVF, lastVS) = m.join
     requireNoTtl(cat, cs.fact)
     cs.sides.foreach(s => requireNoTtl(cat, s.table))
-    val lastVF = m.getAs[Long]("last_vf")
-    val lastVS = m.getSeq[Long](m.fieldIndex("last_vs"))
-    val groupCols = m.getSeq[String](m.fieldIndex("group_cols"))
-    val measures = m.getSeq[String](m.fieldIndex("measures"))
-    val sketches = sketchesOf(m)
-    val topks = topksOf(m)
-    val grains = grainsOf(m)
-    if (sketches.nonEmpty || topks.nonEmpty)
-      graft.functions.GraftFunctions.registerKernels(spark)
+    val MvMeta(groupCols, measures, _, grains, _, sketches, topks,
+      buckets, _, _) = m
     // a grain expression (date_trunc et al.) is evaluated under the
     // SESSION time zone — folding new deltas under a different tz than
     // the state's would split/merge grain groups wrongly: rebuild
     val grainTzChanged = grains.nonEmpty &&
-      m.getAs[String]("grain_tz") !=
-        spark.conf.get("spark.sql.session.timeZone")
+      !m.grainTz.contains(spark.conf.get("spark.sql.session.timeZone"))
     // high-water from the O(1) version counter (see highWater) paired
     // with the table's replayability floor (an O(1) marker read —
     // previously a footer-pruned min-version scan PER TABLE PER
@@ -895,9 +721,9 @@ object MaterializeJoin {
     val compacted = floorF > lastVF ||
       sideMarks.map(_._2).zip(lastVS).exists { case (fl, lv) => fl > lv }
     if (compacted || grainTzChanged) {
-      LastRefresh.rebuildRan = true
+      Materialize.LastRefresh.rebuildRan = true
       return build(cat, cs, groupCols, measures, path, sketches, topks,
-        grains, bucketsOf(m))
+        grains, buckets)
     }
 
     // each delta / accumulated leg is read SEVERAL times (its zone
@@ -907,7 +733,6 @@ object MaterializeJoin {
     // the legs are still being BUILT (state read, schema drift, grain
     // analysis error) unpersists everything cached so far
     val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var merged: DataFrame = null
     try {
     // localCheckpoint, NOT persist: a persisted leg is a CacheManager
     // entry keyed by plan, and a concurrent INSERT into a folded
@@ -1020,7 +845,7 @@ object MaterializeJoin {
     // read it wrong) runs a bounded driver job — all independent, so
     // the per-table planning/driver latency overlaps instead of
     // serializing before the leg pool.
-    val (dFact, sideDeltas) = dbg("delta construction") {
+    val (dFact, sideDeltas) = {
       val all = inParallel(1 + cs.sides.size) { i =>
         if (i == 0) {
           imm.get(cs.fact).foreach(ks =>
@@ -1218,223 +1043,30 @@ object MaterializeJoin {
             cs.sides.indices.flatMap(fullLegTasksFor).map(t =>
               (() => Some(t())): () => Option[DataFrame])
           else Nil))
-    val legs = dbg("leg pool (all legs)") {
-      inParallel(legTasks.size) { i =>
-        val built = dbg(s"leg task $i")(legTasks(i)())
-        built.foreach(l => Materialize.planDump(s"join_leg_$i", l))
-        built.foreach(l => dbg(s"leg force $i")(l.count()))
-        built
-      }.flatten }
+    val legs = inParallel(legTasks.size) { i =>
+      val built = legTasks(i)()
+      built.foreach(l => Materialize.planDump(s"join_leg_$i", l))
+      built.foreach(_.count())
+      built
+    }.flatten
     // grain columns derive per JOINED row (fact/side columns are in
     // every leg), so one withGrains over the unioned delta covers
     // post rows and retraction pre-images alike
     val delta = Materialize.withGrains(
       legs.reduce(_.unionByName(_, allowMissingColumns = false)),
       grains)
-
-    // bucket-manifested state: slice the fold to the buckets the
-    // delta's groups touch (post rows AND retraction pre-images — any
-    // signed row can change its group's bucket), exactly like the
-    // single-table fold; untouched buckets keep their pinned dirs.
-    // The distinct-bucket probe is one delta-sized job over the
-    // already-cached legs.
-    val buckets = bucketsOf(m)
-    val stateAll = dbg("state read")(read(spark, path))
-    val touched: Option[Set[Int]] =
-      if (buckets == 0) None
-      else {
-        val tg = delta.select(groupCols.map(col): _*)
-        Some(tg
-          .select(Materialize.bucketCol(tg, groupCols, buckets)
-            .as("__b"))
-          .distinct().collect().map(_.getInt(0)).toSet)
-      }
-    LastRefresh.bucketsTouched = touched.map(_.size).getOrElse(-1)
-    val state = touched match {
-      case None => stateAll
-      case Some(tb) =>
-        val dirs = bucketDirsOf(m)
-        val paths = tb.toSeq.sorted.collect {
-          case i if dirs(i).nonEmpty =>
-            s"$path/${dirs(i)}/__b=$i" }
-        if (paths.isEmpty)
-          spark.read.parquet(s"$path/${stateDir0(m)}/_schema")
-        else spark.read.parquet(paths: _*)
-    }
-    val stT: String => DataType = c => stateAll.schema(c).dataType
-    val mT: String => DataType = mm => stT(s"min_$mm")
-
-    def carry(smin: String => Column, rmin: String => Column,
-        smax: String => Column, rmax: String => Column): Seq[Column] =
-      measures.flatMap(mm => Seq(
-        smin(mm).cast(mT(mm)).as(s"__smin_$mm"),
-        smax(mm).cast(mT(mm)).as(s"__smax_$mm"),
-        rmin(mm).cast(mT(mm)).as(s"__rmin_$mm"),
-        rmax(mm).cast(mT(mm)).as(s"__rmax_$mm")))
-    val nul: String => Column = _ => lit(null)
-
-    val stateRows = state
-      .withColumn("__retr", lit(0)).withColumn("__instate", lit(1))
-      .select(col("*") +: carry(mm => col(s"min_$mm"), nul,
-        mm => col(s"max_$mm"), nul): _*)
-    // plain-measure chains fold the signed delta in ONE pass
-    // ([[Materialize.signedFold]] — one groupBy emits both halves'
-    // fields per group: half the union scans and one shuffle instead
-    // of two per refresh). Sketch/top-k chains keep the two-pass
-    // shape: their kernels fold inserted VALUES (a sign-conditional
-    // input would insert NULLs) and cannot retract, so the separate
-    // retraction slice is load-bearing there.
-    val deltaRows: DataFrame =
-      if (sketches.isEmpty && topks.isEmpty)
-        Materialize.signedFold(delta, groupCols, measures, stT, mT)
-      else {
-        // the SAME aggregate layout the build uses (type-strict union)
-        val postRows = Materialize.aggregate(
-            delta.where(col("__w") > 0).drop("__w"), groupCols,
-            measures, sketches, topks)
-          .withColumn("__retr", lit(0)).withColumn("__instate", lit(0))
-          .select(col("*") +: carry(nul, nul, nul, nul): _*)
-        val retr = delta.where(col("__w") < 0).drop("__w")
-        val retrRows = retr
-          .groupBy(groupCols.map(col): _*)
-          .agg((-count(lit(1))).as("cnt"),
-            measures.flatMap(mm => Seq(
-              (-count(col(mm))).cast(stT(s"cnt_$mm")).as(s"cnt_$mm"),
-              (-sum(col(mm))).cast(stT(s"sum_$mm")).as(s"sum_$mm"),
-              lit(null).cast(stT(s"min_$mm")).as(s"min_$mm"),
-              lit(null).cast(stT(s"max_$mm")).as(s"max_$mm"),
-              min(col(mm)).cast(mT(mm)).as(s"__rmin_$mm"),
-              max(col(mm)).cast(mT(mm)).as(s"__rmax_$mm"))): _*)
-          .withColumn("__retr", lit(1)).withColumn("__instate", lit(0))
-          .select(col("*") +: (measures.flatMap(mm => Seq(
-            lit(null).cast(mT(mm)).as(s"__smin_$mm"),
-            lit(null).cast(mT(mm)).as(s"__smax_$mm"))) ++
-            // sketches cannot retract (a hash can't be un-inserted, a
-            // SpaceSaving count can't be un-counted) — the NULL rides
-            // the union and the gate below recomputes the group
-            sketches.map { case (d, _) =>
-              lit(null).cast(BinaryType).as(s"kmv_$d") } ++
-            topks.map { case (t, _) =>
-              lit(null).cast(BinaryType).as(s"topk_$t") }): _*)
-        postRows.unionByName(retrRows)
-      }
-
-    merged = dbg("merged construction done")(
-      stateRows.unionByName(deltaRows))
-      .groupBy(groupCols.map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"),
-        measures.flatMap(mm => Seq(
-          sum(col(s"cnt_$mm")).as(s"cnt_$mm"),
-          sum(col(s"sum_$mm")).as(s"sum_$mm"),
-          min(col(s"min_$mm")).as(s"min_$mm"),
-          max(col(s"max_$mm")).as(s"max_$mm"))) ++
-          sketches.map { case (d, _) =>
-            call_function("kmv_union_agg", col(s"kmv_$d"))
-              .as(s"kmv_$d") } ++
-          topks.map { case (t, _) =>
-            call_function("top_terms_union_agg", col(s"topk_$t"))
-              .as(s"topk_$t") } ++
-          Seq(max(col("__retr")).as("__retr"),
-            max(col("__instate")).as("__instate")) ++
-          measures.flatMap(mm => Seq(
-            min(col(s"__smin_$mm")).as(s"__smin_$mm"),
-            max(col(s"__smax_$mm")).as(s"__smax_$mm"),
-            min(col(s"__rmin_$mm")).as(s"__rmin_$mm"),
-            max(col(s"__rmax_$mm")).as(s"__rmax_$mm"))): _*)
-      // localCheckpoint, not persist — see the cache() note above
-      .localCheckpoint(false)
-      // extremum gate — identical algebra to the single-table fold:
-      // only a retraction group where some retracted joined value ties
-      // or crosses the prior state's min/max (or that the state never
-      // held) recomputes; every other group folded algebraically.
-      val needsRecompute = col("__instate") === 0 ||
-        lit(sketches.nonEmpty || topks.nonEmpty) ||
-        measures.map(mm =>
-          col(s"__rmin_$mm").isNotNull && (col(s"__smin_$mm").isNull ||
-            col(s"__rmin_$mm") <= col(s"__smin_$mm") ||
-            col(s"__rmax_$mm") >= col(s"__smax_$mm")))
-          .foldLeft(lit(false))(_ || _)
-      val internals = Seq("__retr", "__instate") ++
-        measures.flatMap(mm => Seq(s"__smin_$mm", s"__smax_$mm",
-          s"__rmin_$mm", s"__rmax_$mm"))
-      val kept = merged
-        .where((col("__retr") === 0 || !needsRecompute) &&
-          col("cnt") > 0)
-        .drop(internals: _*)
-      val affected = merged.where(col("__retr") > 0 && needsRecompute)
-        .select(groupCols.map(c => col(c).as(s"__a_$c")): _*)
-      dbg("merged planning") { merged.queryExecution.executedPlan }
-      // one job serves both the gate count and the IN-pushdown rows:
-      // collect at most 1025 — 1025 means "more than the pushdown
-      // cap", and only then is the exact count worth a second job
-      Materialize.planDump("join_merged", merged)
-      val affHead = dbg("merged fold + affected probe") {
-        affected.limit(1025).collect().toSeq }
-      // executor-loss seam — see Materialize.testFoldHook
-      Materialize.testFoldHook()
-      val affectedCount =
-        if (affHead.size <= 1024) affHead.size.toLong
-        else dbg("affected count")(affected.count())
-      LastRefresh.affectedGroups = affectedCount
-      LastRefresh.recomputeRan = affectedCount > 0
-      val affRows =
-        if (affectedCount > 0 && affectedCount <= 1024) Some(affHead)
-        else None
-      val rec =
-        if (affectedCount == 0) None
-        else Some(recomputeJoined(cat, cs, newVF, newVS,
-          groupCols, measures, affected, affRows, sketches, topks,
-          grains))
-      val out = rec.map(kept.unionByName(_)).getOrElse(kept)
-      val nd = s"state_v${newVF}_${newVS.mkString("_")}"
-      // row-count-gated direct state write — same gates and rationale
-      // as the single-table fold (see Materialize.refresh): kept
-      // probes the checkpointed fold's blocks, and the recompute
-      // branch rides along only under the ≤1024 pushdown gate where
-      // collecting it is its single execution (guide §1.2)
-      def directWrite(): Boolean = affectedCount <= 1024 &&
-        DriverParquet.writeFoldIfSmall(kept, rec,
-          if (buckets == 0) None
-          else Some((d: org.apache.spark.sql.DataFrame) =>
-            Materialize.bucketCol(d, groupCols, buckets)),
-          s"$path/$nd")
-      val newBucketDirs: Seq[String] =
-        if (buckets == 0) {
-          dbg("out planning") { out.queryExecution.executedPlan }
-          dbg("state write") {
-            if (!directWrite())
-              out.write.mode(SaveMode.Overwrite).parquet(s"$path/$nd") }
-          Seq.empty
-        } else {
-          // manifest flip: touched buckets point at the new dir (or
-          // vanish if emptied), untouched buckets keep their pinned
-          // dir — a reader of the PREVIOUS meta still sees a complete
-          // consistent old state
-          dbg("state write") {
-            if (!directWrite())
-              Materialize.writeBucketed(out, groupCols, buckets,
-                s"$path/$nd") }
-          val present = Materialize.presentBuckets(spark, s"$path/$nd")
-          val old = bucketDirsOf(m)
-          (0 until buckets).map { i =>
-            if (touched.exists(_.contains(i)))
-              (if (present.contains(i)) nd else "")
-            else old(i)
-          }
-        }
-      dbg("write meta") {
-        writeMeta(spark, path, cs, newVF, newVS, groupCols, measures,
-          nd, sketches, topks, grains, buckets, newBucketDirs) }
-      (newVF, newVS)
+    val nd = s"state_v${newVF}_${newVS.mkString("_")}"
+    val folded = Materialize.foldAndWrite(spark, path, m, "join", delta,
+      nd, (affected, affRows) => recomputeJoined(cat, cs, newVF, newVS,
+        groupCols, measures, affected, affRows, sketches, topks, grains))
+    MvMeta.write(spark, path, folded.copy(grainTz = None,
+      kind = MvMeta.Join(cs, newVF, newVS)))
+    (newVF, newVS)
     } finally {
-      dbg("unpersist") {
-        if (merged != null) Materialize.freeLocal(merged)
-        // snapshot under the append lock — the pool drains before the
-        // try exits, but the discipline costs nothing and survives a
-        // future caller that doesn't
-        cached.synchronized(cached.toList)
-          .foreach(Materialize.freeLocal)
-      }
+      // snapshot under the append lock — the pool drains before the
+      // try exits, but the discipline costs nothing and survives a
+      // future caller that doesn't
+      cached.synchronized(cached.toList).foreach(Materialize.freeLocal)
     }
   }
 
@@ -1511,7 +1143,7 @@ object MaterializeJoin {
         if (sound) Some(t -> attrs.map(colFilter).reduce(_ && _))
         else None
       }.toMap
-    LastRefresh.recomputePushdown = pushes.keys.toSeq.sorted
+    Materialize.LastRefresh.recomputePushdown = pushes.keys.toSeq.sorted
     val tablePush: String => Column =
       t => pushes.getOrElse(t, lit(true))
     Materialize.aggregate(

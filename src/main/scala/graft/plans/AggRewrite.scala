@@ -317,7 +317,7 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // one dir (legacy) or the manifest's per-bucket leaf dirs
       // (bucket-manifested state — refresh rewrites only touched
       // buckets, so the current state is the union of pinned leafs)
-      graft.operators.Materialize.statePathsOf(p, m)
+      graft.operators.MvMeta.decode(m).statePaths(p)
     }
   }.toOption
 

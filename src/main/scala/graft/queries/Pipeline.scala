@@ -1458,7 +1458,7 @@ object Pipeline {
         Seq("priority"), Seq("qty"), mv)
       cat.upsert("jo", ord.where($"okey" % 32 === 2))
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.MaterializeJoin.LastRefresh.recomputeRan)
+      if (graft.operators.Materialize.LastRefresh.recomputeRan)
         throw new IllegalStateException(
           "insert-only join delta must fold with zero recompute")
       cat.upsert("jl", li.where($"okey" % 100 === 1)
@@ -1467,7 +1467,7 @@ object Pipeline {
         .withColumn("priority", lit("MOVED")))
       cat.delete("jl", $"okey" % 10 === 3)
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"priority", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
         .orderBy($"priority")
@@ -1513,14 +1513,14 @@ object Pipeline {
         grainExprs = Seq("mon" -> "date_trunc('MONTH', odate)"))
       cat.upsert("jo6", ord.where($"okey" % 32 === 2))
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.MaterializeJoin.LastRefresh.recomputeRan)
+      if (graft.operators.Materialize.LastRefresh.recomputeRan)
         throw new IllegalStateException(
           "insert-only grain-join delta must fold with zero recompute")
       cat.upsert("jo6", ord.where($"okey" % 50 === 4)
         .withColumn("odate", $"odate" + expr("INTERVAL 45 DAYS")))
       cat.delete("jl6", $"okey" % 10 === 1)
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"priority", $"mon", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
         .orderBy($"priority", $"mon")
@@ -1565,7 +1565,7 @@ object Pipeline {
       // updates survivors AND resurrects some expired PKs
       graft.operators.MaterializeJoin.expireBefore(cat, mv, "odate",
         lit(java.sql.Timestamp.valueOf("1994-01-01 00:00:00")))
-      if (graft.operators.MaterializeJoin.LastRefresh.rebuildRan)
+      if (graft.operators.Materialize.LastRefresh.rebuildRan)
         throw new IllegalStateException(
           "retention roll 1 must fold incrementally, not rebuild")
       cat.upsert("lr", li.where($"okey" % 100 === 3)
@@ -1574,10 +1574,10 @@ object Pipeline {
       px.execute(
         "DELETE FROM lr WHERE odate < TIMESTAMP '1996-01-01 00:00:00'")
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.MaterializeJoin.LastRefresh.rebuildRan)
+      if (graft.operators.Materialize.LastRefresh.rebuildRan)
         throw new IllegalStateException(
           "retention roll 2 must fold incrementally, not rebuild")
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"mon", $"priority", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
         .orderBy($"mon", $"priority")
@@ -1622,13 +1622,13 @@ object Pipeline {
         sketches = Seq("skey" -> 131072))
       cat.upsert("jo4", ord.where($"okey" % 32 === 2))
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.MaterializeJoin.LastRefresh.recomputeRan)
+      if (graft.operators.Materialize.LastRefresh.recomputeRan)
         throw new IllegalStateException(
           "insert-only join-sketch delta must fold with zero recompute")
       cat.delete("jl4", $"okey" % 10 === 3)
       graft.operators.MaterializeJoin.refresh(cat, mv)
       graft.functions.GraftFunctions.registerKernels(s)
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"priority", $"cnt", $"sum_qty",
           round(call_function("kmv_estimate", $"kmv_skey")).cast("long")
             .as("distinct_suppliers"))
@@ -1680,7 +1680,7 @@ object Pipeline {
         Seq("seg"), Seq("qty"), mv)
       cat.upsert("co", ord.where($"okey" % 32 === 2))
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.MaterializeJoin.LastRefresh.recomputeRan)
+      if (graft.operators.Materialize.LastRefresh.recomputeRan)
         throw new IllegalStateException(
           "insert-only chain delta must fold with zero recompute")
       cat.upsert("cl", li.where($"okey" % 100 === 2)
@@ -1690,7 +1690,7 @@ object Pipeline {
         .where($"ckey" % 40 === 1))
       cat.delete("cl", $"okey" % 10 === 7)
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"seg", $"cnt", $"sum_qty", $"min_qty", $"max_qty")
         .orderBy($"seg")
     },
@@ -1739,7 +1739,7 @@ object Pipeline {
         .withColumn("qty", $"qty" + 7L))
       cat.delete("jl5", $"okey" % 10 === 3)
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"priority", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
         .orderBy($"priority")
@@ -1790,7 +1790,7 @@ object Pipeline {
       cat.upsert("jl8", li.where($"okey" % 100 === 1)
         .withColumn("qty", $"qty" + 7L))
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"priority", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
         .orderBy($"priority")
@@ -1856,7 +1856,7 @@ object Pipeline {
       cat.upsert("fl9", li.where($"okey" % 100 === 1)
         .withColumn("qty", $"qty" + 7L))
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"priority", $"brand", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
         .orderBy($"priority", $"brand")
@@ -1916,7 +1916,7 @@ object Pipeline {
           concat($"n_name", lit("_X")).as("nname")))
       cat.delete("co6", $"okey" % 10 === 4)
       graft.operators.MaterializeJoin.refresh(cat, mv)
-      graft.operators.MaterializeJoin.read(s, mv)
+      graft.operators.Materialize.read(s, mv)
         .select($"nname", $"cnt", $"sum_m", $"min_m", $"max_m")
         .orderBy($"nname")
     },
@@ -2011,7 +2011,7 @@ object Pipeline {
         .withColumn("m", $"m" + 9L))
       cat.delete("kf", $"okey" % 20 === 13)
       px.execute("REFRESH MATERIALIZED VIEW kmv")
-      if (graft.operators.MaterializeJoin.LastRefresh.rebuildRan)
+      if (graft.operators.Materialize.LastRefresh.rebuildRan)
         throw new IllegalStateException(
           "post-COMPACT refresh must stay incremental, not rebuild")
       val q = px.execute("SELECT seg, COUNT(*) AS cnt, " +

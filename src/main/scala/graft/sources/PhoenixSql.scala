@@ -1187,10 +1187,7 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     // — reclaim it here (safe under the front-end's single-statement
     // contract: no reader of a PAST state is in flight between
     // statements), so a DDL-managed MV never needs a manual vacuum
-    d.singleTable match {
-      case Some(_) => graft.operators.Materialize.vacuum(spark, d.path)
-      case None => graft.operators.MaterializeJoin.vacuum(spark, d.path)
-    }
+    graft.operators.Materialize.vacuum(spark, d.path)
     d.tables.foreach(t =>
       scala.util.Try(catalog.refreshSnapshotCache(t)))
     dirty ++= d.tables.filter(tableNames.contains)

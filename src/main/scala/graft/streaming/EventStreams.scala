@@ -667,16 +667,4 @@ object EventStreams {
         s"user_id = r_user AND r_ts >= l_ts AND r_ts <= l_ts + INTERVAL $window"))
       .select(col("user_id"), col("l_ts"), col("r_ts"), col("r_value"))
   }
-
-  /** Per-user running behavior via flatMapGroupsWithState-free windowed
-    * dedup: last event per user per window (bounded state via watermark). */
-  def lastEventPerUserWindow(events: DataFrame,
-      windowLen: String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen), col("user_id"))
-      .agg(max_by(col("event_type"), col("ts")).as("last_type"),
-        count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("user_id"),
-        col("last_type"), col("n_events"))
 }

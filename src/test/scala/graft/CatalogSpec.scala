@@ -1300,7 +1300,7 @@ class CatalogSpec extends AnyFunSuite {
   test("maintainJoinAggregate: a fact stream maintains a binary-join " +
       "MV while the dim mutates out-of-band between micro-batches") {
     import spark.implicits._
-    import graft.operators.MaterializeJoin
+    import graft.operators.{Materialize, MaterializeJoin}
     val cat = freshCatalog()
     cat.createTable("sjf", StructType(Seq(
       StructField("k", LongType), StructField("ck", LongType),
@@ -1339,7 +1339,7 @@ class CatalogSpec extends AnyFunSuite {
     val q = EventStreams.maintainJoinAggregate(stream, cat, "sjf", path)
       .start()
     try q.processAllAvailable() finally q.stop()
-    val served = MaterializeJoin.read(spark, path)
+    val served = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
     val truth = graft.operators.Materialize.aggregate(
       cat.snapshot("sjf").join(cat.snapshot("sjd"), Seq("ck")),
@@ -1352,7 +1352,7 @@ class CatalogSpec extends AnyFunSuite {
       "stream into the NULL group and move out when the dim arrives " +
       "between micro-batches") {
     import spark.implicits._
-    import graft.operators.MaterializeJoin
+    import graft.operators.{Materialize, MaterializeJoin}
     val cat = freshCatalog()
     cat.createTable("ljf", StructType(Seq(
       StructField("k", LongType), StructField("ck", LongType),
@@ -1387,7 +1387,7 @@ class CatalogSpec extends AnyFunSuite {
     val q = EventStreams.maintainJoinAggregate(stream, cat, "ljf", path)
       .start()
     try q.processAllAvailable() finally q.stop()
-    val served = MaterializeJoin.read(spark, path)
+    val served = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
     val truth = graft.operators.Materialize.aggregate(
       cat.snapshot("ljf").join(cat.snapshot("ljd"), Seq("ck"), "left"),
@@ -1402,7 +1402,7 @@ class CatalogSpec extends AnyFunSuite {
       "kinds maintain across micro-batches with out-of-band side " +
       "churn") {
     import spark.implicits._
-    import graft.operators.MaterializeJoin
+    import graft.operators.{Materialize, MaterializeJoin}
     val cat = freshCatalog()
     cat.createTable("fjf", StructType(Seq(
       StructField("k", LongType), StructField("ck", LongType),
@@ -1439,7 +1439,7 @@ class CatalogSpec extends AnyFunSuite {
     val q = EventStreams.maintainJoinAggregate(stream, cat, "fjf", path)
       .start()
     try q.processAllAvailable() finally q.stop()
-    val served = MaterializeJoin.read(spark, path)
+    val served = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
     val truth = graft.operators.Materialize.aggregate(
       cat.snapshot("fjf").join(cat.snapshot("fjd"), Seq("ck"), "full"),
@@ -2380,8 +2380,8 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("e", Seq((1L, "a", 5L)).toDF("k", "g", "x"))
     val mv = s"$wh/mv"
     Materialize.build(cat, "e", Seq("g"), Seq("x"), mv)
-    def liveDir(): String = Materialize.stateDir(
-      spark.read.parquet(s"$mv/meta").head())
+    def liveDir(): String = graft.operators.MvMeta.decode(
+      spark.read.parquet(s"$mv/meta").head()).stateDir
     val before = liveDir()
     // ALTER SET TTL with NO new writes: the high-water mark is
     // unchanged, so a rebuild to the default dir name would

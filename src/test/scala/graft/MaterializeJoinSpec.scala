@@ -45,7 +45,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       Seq("seg"), Seq("price")).collect().map(canon).toSet
 
   private def actual(path: String): Set[Seq[Any]] =
-    MaterializeJoin.read(spark, path).collect().map(canon).toSet
+    Materialize.read(spark, path).collect().map(canon).toSet
 
   test("build + read: state equals the joined-snapshot aggregate") {
     val cat = freshCatalog(); mkTables(cat)
@@ -70,7 +70,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("c", Seq((40L, "c")).toDF("ck", "seg"))
     MaterializeJoin.refresh(cat, path)
     assert(actual(path) == expected(cat))
-    assert(!MaterializeJoin.LastRefresh.recomputeRan,
+    assert(!Materialize.LastRefresh.recomputeRan,
       "insert-only deltas must fold with no recompute")
   }
 
@@ -115,13 +115,13 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("o", Seq((2L, 10L, 201L)).toDF("ok", "ck", "price"))
     MaterializeJoin.refresh(cat, path)
     assert(actual(path) == expected(cat))
-    assert(!MaterializeJoin.LastRefresh.recomputeRan,
+    assert(!Materialize.LastRefresh.recomputeRan,
       "an interior retraction must fold algebraically")
     // retract the max (400 → 50): only a recompute can lower max
     cat.upsert("o", Seq((4L, 30L, 50L)).toDF("ok", "ck", "price"))
     MaterializeJoin.refresh(cat, path)
     assert(actual(path) == expected(cat))
-    assert(MaterializeJoin.LastRefresh.recomputeRan,
+    assert(Materialize.LastRefresh.recomputeRan,
       "retracting the group max must take the recompute path")
   }
 
@@ -140,7 +140,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       .count(d => d.isDirectory && d.getName.startsWith("state_v"))
     assert(stateDirs == 3, s"expected 3 accumulated dirs, got $stateDirs")
     val before = actual(path)
-    assert(MaterializeJoin.vacuum(spark, path) > 0L,
+    assert(Materialize.vacuum(spark, path) > 0L,
       "vacuum must reclaim bytes from the two dead dirs")
     assert(stateDirs == 1)
     assert(actual(path) == before, "live state must survive vacuum")
@@ -407,7 +407,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     def expectedSk: Set[Seq[Any]] = Materialize.aggregate(
       cat.snapshot("o").join(cat.snapshot("c"), Seq("ck")),
       Seq("seg"), Seq("price"), sks, tks).collect().map(canon).toSet
-    def actualSk: Set[Seq[Any]] = MaterializeJoin.read(spark, path)
+    def actualSk: Set[Seq[Any]] = Materialize.read(spark, path)
       .collect().map(canon).toSet
     MaterializeJoin.build(cat, cs, Seq("seg"), Seq("price"), path,
       sketches = sks, topks = tks)
@@ -419,13 +419,13 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("c", Seq((40L, "d")).toDF("ck", "seg"))
     MaterializeJoin.refresh(cat, path)
     assert(actualSk == expectedSk, "insert-only sketch fold diverged")
-    assert(!MaterializeJoin.LastRefresh.recomputeRan,
+    assert(!Materialize.LastRefresh.recomputeRan,
       "insert-only deltas must fold sketches with zero recompute")
     // dim regroup: the pre-image groups carry sketch state only a
     // recompute can shrink — the gate must fire and match the rebuild
     cat.upsert("c", Seq((10L, "b")).toDF("ck", "seg"))
     MaterializeJoin.refresh(cat, path)
-    assert(MaterializeJoin.LastRefresh.recomputeRan,
+    assert(Materialize.LastRefresh.recomputeRan,
       "a sketch-bearing retraction must take the recompute path")
     assert(actualSk == expectedSk, "post-regroup sketch state diverged")
     // fact delete emptying nothing but shrinking a group
@@ -780,10 +780,10 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("bo", Seq((1L, 1L, 50L)).toDF("ok", "ck", "price"))
     MaterializeJoin.refresh(cat, path)
     assert(actual(path) == exp, "after fact churn")
-    assert(MaterializeJoin.LastRefresh.bucketsTouched > 0 &&
-      MaterializeJoin.LastRefresh.bucketsTouched <= 2,
+    assert(Materialize.LastRefresh.bucketsTouched > 0 &&
+      Materialize.LastRefresh.bucketsTouched <= 2,
       s"a one-group delta must touch ~1 bucket of 16, " +
-        s"got ${MaterializeJoin.LastRefresh.bucketsTouched}")
+        s"got ${Materialize.LastRefresh.bucketsTouched}")
     // dim regroup (a group moves buckets: retraction in one bucket,
     // insert in another) + a delete, then vacuum — the manifest's
     // pinned old dirs must survive, the superseded ones go
@@ -791,7 +791,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.delete("bo", col("ok") === 7L)
     MaterializeJoin.refresh(cat, path)
     assert(actual(path) == exp, "after dim churn + delete")
-    val reclaimed = MaterializeJoin.vacuum(spark, path)
+    val reclaimed = Materialize.vacuum(spark, path)
     assert(actual(path) == exp, "after vacuum")
     assert(reclaimed >= 0L)
     // the manifest still references MULTIPLE dirs (untouched buckets
@@ -1201,9 +1201,9 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // forced a full rebuild on EVERY refresh
     MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((2L, 20L, 200L)).toDF("ok", "ck", "price"))
-    MaterializeJoin.LastRefresh.affectedGroups = -99L
     MaterializeJoin.refresh(cat, path)
-    assert(MaterializeJoin.LastRefresh.affectedGroups != -99L,
+    assert(!Materialize.LastRefresh.rebuildRan &&
+      Materialize.LastRefresh.affectedGroups >= 0,
       "refresh with an empty side log must take the incremental " +
         "path, not rebuild (empty ≠ compacted)")
     assert(actual(path) == expected(cat))
@@ -1323,7 +1323,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("c", Seq((20L, "d")).toDF("ck", "seg"))
     cat.delete("p", col("pk2") === 100L)
     MaterializeJoin.refresh(cat, path)
-    assert(!MaterializeJoin.LastRefresh.rebuildRan,
+    assert(!Materialize.LastRefresh.rebuildRan,
       "floors at the fold marks must NOT force a rebuild")
     assert(actual(path) == expectedN,
       "post-floored-compaction chain refresh diverged")
@@ -1332,7 +1332,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("f", Seq((6L, 30L, 101L, 3L)).toDF(
       "ok", "ck", "pk2", "price"))
     MaterializeJoin.refresh(cat, path)
-    assert(MaterializeJoin.LastRefresh.rebuildRan,
+    assert(Materialize.LastRefresh.rebuildRan,
       "full compaction of a chain table discards its fold history — " +
         "rebuild required")
     assert(actual(path) == expectedN)
@@ -1362,7 +1362,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
         Seq(MaterializeJoin.SideSpec("so", Seq("jk"))),
         fullOuter = true),
       Seq("seg"), Seq("x"), path)
-    def served = MaterializeJoin.read(spark, path)
+    def served = Materialize.read(spark, path)
       .select(col("seg"), col("cnt"), col("sum_x"))
       .collect().map(canon).toSet
     def expected = cat.snapshot("fo")
@@ -1375,23 +1375,23 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // must carry the below-join IN-filter
     cat.delete("fo", col("k") === 2L)
     MaterializeJoin.refresh(cat, path)
-    assert(MaterializeJoin.LastRefresh.recomputeRan,
+    assert(Materialize.LastRefresh.recomputeRan,
       "the max-crossing retraction must gate a recompute")
-    assert(MaterializeJoin.LastRefresh.recomputePushdown == Seq("so"),
+    assert(Materialize.LastRefresh.recomputePushdown == Seq("so"),
       "a fully-non-NULL affected set must push the IN-filter into " +
         s"the side's read, got " +
-        s"${MaterializeJoin.LastRefresh.recomputePushdown}")
+        s"${Materialize.LastRefresh.recomputePushdown}")
     assert(served == expected, "pushed recompute diverged")
     // delete the dangling fact (its group is NULL-seg): NULL is among
     // the affected seg values — re-labeling hazard — so the pushdown
     // must HOLD BACK
     cat.delete("fo", col("k") === 9L)
     MaterializeJoin.refresh(cat, path)
-    assert(MaterializeJoin.LastRefresh.recomputeRan,
+    assert(Materialize.LastRefresh.recomputeRan,
       "the NULL-group max retraction must gate a recompute")
-    assert(MaterializeJoin.LastRefresh.recomputePushdown.isEmpty,
+    assert(Materialize.LastRefresh.recomputePushdown.isEmpty,
       "a NULL-attr affected group must hold the pushdown back, got " +
-        s"${MaterializeJoin.LastRefresh.recomputePushdown}")
+        s"${Materialize.LastRefresh.recomputePushdown}")
     assert(served == expected, "held-back recompute diverged")
   }
 }

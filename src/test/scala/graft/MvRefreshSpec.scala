@@ -1,0 +1,177 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{Materialize, MaterializeJoin}
+import graft.sources.GraftCatalog
+
+/** The refresh contract both MV kinds share through one fold core:
+  * what [[Materialize.LastRefresh]] reports, the Spark jobs a plain
+  * incremental refresh runs, and the meta carrying a filtered MV's
+  * predicate across refreshes. */
+class MvRefreshSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  private def freshCatalog(): GraftCatalog = new GraftCatalog(spark,
+    java.nio.file.Files.createTempDirectory("graft_mvr").toString)
+
+  private def mvPath(): String =
+    java.nio.file.Files.createTempDirectory("graft_mvr_mv").toString
+
+  private val factSchema = StructType(Seq(StructField("k", LongType),
+    StructField("g", StringType), StructField("x", LongType)))
+  private val ordersSchema = StructType(Seq(StructField("ok", LongType),
+    StructField("ck", LongType), StructField("price", LongType)))
+  private val custSchema = StructType(Seq(StructField("ck", LongType),
+    StructField("seg", StringType)))
+  private val js = MaterializeJoin.JoinSpec("o", "c", Seq("ck"))
+
+  private def singleTable(): GraftCatalog = {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("t", factSchema, pk = Seq("k"))
+    cat.upsert("t", Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L),
+      (7L, "a", 15L)).toDF("k", "g", "x"))
+    cat
+  }
+
+  private def joinTables(): GraftCatalog = {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("o", ordersSchema, pk = Seq("ok"))
+    cat.createTable("c", custSchema, pk = Seq("ck"))
+    cat.upsert("o", Seq((1L, 10L, 100L), (2L, 10L, 200L),
+      (3L, 20L, 300L), (6L, 10L, 150L)).toDF("ok", "ck", "price"))
+    cat.upsert("c", Seq((10L, "a"), (20L, "b")).toDF("ck", "seg"))
+    cat
+  }
+
+  /** Spark jobs started while `f` runs: every job start is counted, and
+    * a marker job drains the listener bus (events arrive in order, so
+    * once the marker's start is seen every earlier job was counted). */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val marker = new CountDownLatch(1)
+    val markerGroup = s"mv-jobs-marker-${System.nanoTime}"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == markerGroup))
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobGroup(markerGroup, "listener drain marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("single-table MV: a no-change refresh after a recomputing one " +
+      "reports that nothing ran") {
+    val cat = singleTable()
+    val path = mvPath()
+    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    // k=2 holds group a's max: its delete gates in a recompute
+    cat.delete("t", col("k") === 2L)
+    Materialize.refresh(cat, "t", path)
+    assert(Materialize.LastRefresh.recomputeRan)
+    assert(Materialize.LastRefresh.affectedGroups == 1L)
+    Materialize.refresh(cat, "t", path)
+    assert(!Materialize.LastRefresh.recomputeRan,
+      "a no-change refresh must not report the previous recompute")
+    assert(Materialize.LastRefresh.affectedGroups == 0L)
+    assert(!Materialize.LastRefresh.rebuildRan)
+  }
+
+  test("join MV: a no-change refresh after a recomputing one reports " +
+      "that nothing ran") {
+    val cat = joinTables()
+    val path = mvPath()
+    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    // ok=2 holds segment a's max price
+    cat.delete("o", col("ok") === 2L)
+    MaterializeJoin.refresh(cat, path)
+    assert(Materialize.LastRefresh.recomputeRan)
+    assert(Materialize.LastRefresh.affectedGroups == 1L)
+    MaterializeJoin.refresh(cat, path)
+    assert(!Materialize.LastRefresh.recomputeRan,
+      "a no-change refresh must not report the previous recompute")
+    assert(Materialize.LastRefresh.affectedGroups == 0L)
+    assert(!Materialize.LastRefresh.rebuildRan)
+  }
+
+  // Jobs per warm incremental refresh (insert + non-extremal update,
+  // no recompute), measured on the code before the two MV kinds shared
+  // one fold core; a change here is a change in refresh cost.
+  test("jobs per refresh: plain single-table MV") {
+    import spark.implicits._
+    val cat = singleTable()
+    val path = mvPath()
+    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    cat.upsert("t", Seq((4L, "b", 35L)).toDF("k", "g", "x"))
+    Materialize.refresh(cat, "t", path) // warm: memos and caches filled
+    cat.upsert("t", Seq((5L, "a", 12L), (7L, "a", 16L))
+      .toDF("k", "g", "x"))
+    val jobs = jobsOf(Materialize.refresh(cat, "t", path))
+    assert(!Materialize.LastRefresh.recomputeRan)
+    assert(jobs == 10, s"jobs per single-table refresh: $jobs")
+    assert(jobsOf(Materialize.refresh(cat, "t", path)) == 0,
+      "a no-change refresh runs no job")
+    assert(Materialize.read(spark, path).orderBy("g")
+      .select("g", "cnt", "sum_x", "min_x", "max_x").collect()
+      .map(_.toSeq).toSeq == Seq(Seq("a", 4L, 58L, 10L, 20L),
+        Seq("b", 2L, 65L, 30L, 35L)))
+  }
+
+  test("jobs per refresh: plain join MV") {
+    import spark.implicits._
+    val cat = joinTables()
+    val path = mvPath()
+    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    cat.upsert("o", Seq((4L, 20L, 350L)).toDF("ok", "ck", "price"))
+    MaterializeJoin.refresh(cat, path) // warm: memos and caches filled
+    cat.upsert("o", Seq((5L, 10L, 120L), (6L, 10L, 160L))
+      .toDF("ok", "ck", "price"))
+    cat.upsert("c", Seq((30L, "c")).toDF("ck", "seg"))
+    val jobs = jobsOf(MaterializeJoin.refresh(cat, path))
+    assert(!Materialize.LastRefresh.recomputeRan)
+    assert(jobs == 31, s"jobs per join refresh: $jobs")
+    assert(jobsOf(MaterializeJoin.refresh(cat, path)) == 0,
+      "a no-change refresh runs no job")
+    assert(Materialize.read(spark, path).orderBy("seg")
+      .select("seg", "cnt", "sum_price", "min_price", "max_price")
+      .collect().map(_.toSeq).toSeq == Seq(Seq("a", 4L, 580L, 100L, 200L),
+        Seq("b", 2L, 650L, 300L, 350L)))
+  }
+
+  test("a filtered MV keeps its predicate across refreshes: the " +
+      "second refresh still folds only matching rows") {
+    import spark.implicits._
+    val cat = singleTable()
+    val path = mvPath()
+    Materialize.build(cat, "t", Seq("g"), Seq("x"), path,
+      filterSql = Some("x > 10"))
+    cat.upsert("t", Seq((4L, "a", 5L)).toDF("k", "g", "x"))
+    Materialize.refresh(cat, "t", path)
+    cat.upsert("t", Seq((5L, "a", 3L), (6L, "a", 40L))
+      .toDF("k", "g", "x"))
+    Materialize.refresh(cat, "t", path)
+    val rows = Materialize.read(spark, path).orderBy("g")
+      .select("g", "cnt", "sum_x").collect().map(_.toSeq).toSeq
+    assert(rows == Seq(Seq("a", 3L, 75L), Seq("b", 1L, 30L)),
+      s"rows with x <= 10 must never be folded: $rows")
+  }
+}

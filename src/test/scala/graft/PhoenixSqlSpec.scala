@@ -1695,7 +1695,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
   test("CREATE MATERIALIZED VIEW WITH (BUCKETS, IMMUTABLE KEYS): " +
       "bucket-manifested state refreshes only touched buckets and the " +
       "immutability declaration is ENFORCED at refresh") {
-    import graft.operators.MaterializeJoin
+    import graft.operators.{Materialize, MaterializeJoin}
     val px = fresh()
     px.execute("CREATE TABLE BF (OK BIGINT NOT NULL, CK BIGINT, " +
       "X BIGINT CONSTRAINT PK PRIMARY KEY (OK))")
@@ -1711,10 +1711,10 @@ class PhoenixSqlSpec extends AnyFunSuite {
     // one-segment churn touches a strict subset of the 8 buckets
     px.execute("UPSERT INTO BF VALUES (100, 10, 5)")
     px.execute("REFRESH MATERIALIZED VIEW BMV")
-    assert(MaterializeJoin.LastRefresh.bucketsTouched >= 1 &&
-      MaterializeJoin.LastRefresh.bucketsTouched < 8,
+    assert(Materialize.LastRefresh.bucketsTouched >= 1 &&
+      Materialize.LastRefresh.bucketsTouched < 8,
       s"expected a touched-bucket slice, got " +
-        s"${MaterializeJoin.LastRefresh.bucketsTouched}/8")
+        s"${Materialize.LastRefresh.bucketsTouched}/8")
     val served = px.execute("SELECT SEG, SUM(X) AS SX FROM BF " +
       "JOIN BD ON BF.CK = BD.CK GROUP BY SEG ORDER BY SEG")
     assert(served.queryExecution.executedPlan.toString
@@ -1778,7 +1778,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     assert(q.collect().map(_.toSeq).toSet == truth,
       "served 3-way FULL result must equal the sequential recompute")
     // and the maintained state equals the recompute directly
-    assert(MaterializeJoin.read(px.catalog.session,
+    assert(Materialize.read(px.catalog.session,
         px.catalog.mvPath("gmv"))
       .select($"seg", $"brand", $"cnt", $"sum_x")
       .collect().map(_.toSeq).toSet == truth)
@@ -1826,7 +1826,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
 
   test("COMPACT TABLE derives its floor from the registered MVs " +
       "(refresh stays incremental); with no MV it compacts fully") {
-    import graft.operators.MaterializeJoin
+    import graft.operators.{Materialize, MaterializeJoin}
     val px = fresh()
     px.execute("CREATE TABLE CF (OK BIGINT NOT NULL, CK BIGINT, " +
       "X BIGINT CONSTRAINT PK PRIMARY KEY (OK))")
@@ -1850,7 +1850,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     // post-compaction churn folds INCREMENTALLY and serves exactly
     px.execute("UPSERT INTO CF VALUES (2, 20, 55)")
     px.execute("REFRESH MATERIALIZED VIEW CMV")
-    assert(!MaterializeJoin.LastRefresh.rebuildRan,
+    assert(!Materialize.LastRefresh.rebuildRan,
       "COMPACT TABLE must keep registered MVs incremental")
     val served = px.execute("SELECT SEG, SUM(X) AS SX FROM CF " +
       "JOIN CD ON CF.CK = CD.CK GROUP BY SEG ORDER BY SEG")

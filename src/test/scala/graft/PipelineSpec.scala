@@ -2856,15 +2856,15 @@ class PipelineSpec extends AnyFunSuite {
       .createTempDirectory("graft_metarow").toString
     Seq((1L, "a")).toDF("last_version", "x")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val r1 = graft.operators.Materialize.metaRow(spark, path)
+    val r1 = graft.operators.MvMeta.row(spark, path)
     assert(r1.getAs[Long]("last_version") == 1L)
     // unchanged listing -> memoized row is the same object (no re-read)
-    val r2 = graft.operators.Materialize.metaRow(spark, path)
+    val r2 = graft.operators.MvMeta.row(spark, path)
     assert(r1 eq r2, "unchanged meta must serve from the memo")
     // overwrite writes fresh task-UUID part names -> stamp changes
     Seq((2L, "b")).toDF("last_version", "x")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val r3 = graft.operators.Materialize.metaRow(spark, path)
+    val r3 = graft.operators.MvMeta.row(spark, path)
     assert(r3.getAs[Long]("last_version") == 2L,
       "a rewritten meta must be re-read, never served stale")
   }

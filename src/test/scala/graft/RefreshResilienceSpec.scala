@@ -91,7 +91,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
       MaterializeJoin.refresh(cat, mv)
     }
     assert(fired == 1)
-    val got = MaterializeJoin.read(spark, mv)
+    val got = Materialize.read(spark, mv)
       .select("seg", "cnt", "sum_price").collect().map(canon).toSet
     val want = Materialize.aggregate(
       cat.snapshot("o").join(cat.snapshot("c"), Seq("ck")),
