@@ -353,7 +353,7 @@ object ScaleRehearsal {
     * fixed-size deltas:
     *  - 100 NON-extremal updates (x 510 → 505, strictly inside the
     *    bounds) — must fold with ZERO base-history access (asserted via
-    *    [[graft.operators.Materialize.LastRefresh]]: the extremum gate
+    *    the returned [[graft.operators.RefreshReport]]: the extremum gate
     *    admits no group, so the written plan has no recompute branch);
     *  - K=8 then K=64 max-tying updates — the gate admits exactly K
     *    groups and the recompute shuffles only their candidate-PK
@@ -385,32 +385,31 @@ object ScaleRehearsal {
     cat.upsert("b", rows(lit(true)))
     val mv = wh + "/mv"
     graft.operators.Materialize.build(cat, "b", Seq("g"), Seq("x"), mv)
-    def timedRefresh(expectRecompute: Boolean, what: String): Double = {
+    def timedRefresh(expectRecompute: Boolean, what: String)
+        : (Double, Long) = {
       GraftSession.quiesce(spark)
       val t0 = System.nanoTime()
-      graft.operators.Materialize.refresh(cat, "b", mv)
+      val r = graft.operators.Materialize.refresh(cat, "b", mv)
       val sec = (System.nanoTime() - t0) / 1e9
-      require(graft.operators.Materialize.LastRefresh.recomputeRan ==
-        expectRecompute, s"$what: expected recomputeRan=$expectRecompute")
-      sec
+      require(r.recomputeRan == expectRecompute,
+        s"$what: expected recomputeRan=$expectRecompute")
+      (sec, r.affectedGroups)
     }
     // 100 NON-extremal updates (x 510 -> 505, strictly inside (10, 1009))
     cat.upsert("b", rows(expr("id % 1000 = 500") && col("id") < 100000L)
       .withColumn("x", lit(505L)))
-    val tNon = timedRefresh(expectRecompute = false, "non-extremal delta")
+    val (tNon, _) =
+      timedRefresh(expectRecompute = false, "non-extremal delta")
     // one max-tying row (x = 1009) from each of K groups, updated down
     cat.upsert("b", rows(expr("id % 10000 = 999") && col("id") < 80000L)
       .withColumn("x", lit(500L)))
-    val t8 = timedRefresh(expectRecompute = true, "extremal K=8")
-    require(graft.operators.Materialize.LastRefresh.affectedGroups == 8,
-      s"K=8 delta must gate in exactly 8 groups, got " +
-        s"${graft.operators.Materialize.LastRefresh.affectedGroups}")
+    val (t8, k8) = timedRefresh(expectRecompute = true, "extremal K=8")
+    require(k8 == 8, s"K=8 delta must gate in exactly 8 groups, got $k8")
     cat.upsert("b", rows(expr("id % 10000 = 1999") && col("id") < 640000L)
       .withColumn("x", lit(500L)))
-    val t64 = timedRefresh(expectRecompute = true, "extremal K=64")
-    require(graft.operators.Materialize.LastRefresh.affectedGroups == 64,
-      s"K=64 delta must gate in exactly 64 groups, got " +
-        s"${graft.operators.Materialize.LastRefresh.affectedGroups}")
+    val (t64, k64) = timedRefresh(expectRecompute = true, "extremal K=64")
+    require(k64 == 64,
+      s"K=64 delta must gate in exactly 64 groups, got $k64")
     (tNon, t8, t64)
   }
 
@@ -455,9 +454,9 @@ object ScaleRehearsal {
     def timedRefresh(path: String, what: String): Double = {
       GraftSession.quiesce(spark)
       val t0 = System.nanoTime()
-      graft.operators.MaterializeJoin.refresh(cat, path)
+      val r = graft.operators.MaterializeJoin.refresh(cat, path)
       val sec = (System.nanoTime() - t0) / 1e9
-      require(!graft.operators.Materialize.LastRefresh.recomputeRan,
+      require(!r.recomputeRan,
         s"$what: non-extremal delta must fold with zero recompute")
       sec
     }
@@ -521,9 +520,9 @@ object ScaleRehearsal {
     def timedRefresh(what: String): Double = {
       GraftSession.quiesce(spark)
       val t0 = System.nanoTime()
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      val r = graft.operators.MaterializeJoin.refresh(cat, mv)
       val sec = (System.nanoTime() - t0) / 1e9
-      require(!graft.operators.Materialize.LastRefresh.recomputeRan,
+      require(!r.recomputeRan,
         s"$what: non-extremal delta must fold with zero recompute")
       sec
     }
@@ -592,9 +591,9 @@ object ScaleRehearsal {
     def timedRefresh(what: String): Double = {
       GraftSession.quiesce(spark)
       val t0 = System.nanoTime()
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      val r = graft.operators.MaterializeJoin.refresh(cat, mv)
       val sec = (System.nanoTime() - t0) / 1e9
-      require(!graft.operators.Materialize.LastRefresh.recomputeRan,
+      require(!r.recomputeRan,
         s"$what: interior delta must fold with zero recompute")
       sec
     }
@@ -676,11 +675,10 @@ object ScaleRehearsal {
         : Double = {
       GraftSession.quiesce(spark)
       val t0 = System.nanoTime()
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      val r = graft.operators.MaterializeJoin.refresh(cat, mv)
       val sec = (System.nanoTime() - t0) / 1e9
       if (assertNoRecompute)
-        require(
-          !graft.operators.Materialize.LastRefresh.recomputeRan,
+        require(!r.recomputeRan,
           s"$what: interior delta must fold with zero recompute")
       sec
     }
@@ -768,11 +766,10 @@ object ScaleRehearsal {
         : Double = {
       GraftSession.quiesce(spark)
       val t0 = System.nanoTime()
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      val r = graft.operators.MaterializeJoin.refresh(cat, mv)
       val sec = (System.nanoTime() - t0) / 1e9
       if (assertNoRecompute)
-        require(
-          !graft.operators.Materialize.LastRefresh.recomputeRan,
+        require(!r.recomputeRan,
           s"$what: non-extremal delta must fold with zero recompute")
       sec
     }
@@ -839,7 +836,7 @@ object ScaleRehearsal {
     // regardless of G, so the bucketed write is ≤ 8 × bucket-size
     // while the legacy write is the whole state
     def timedRefresh(cat: graft.sources.GraftCatalog, mv: String,
-        lo: Long): (Double, Double) = {
+        b: Int, lo: Long): (Double, Double) = {
       cat.upsert("t", spark.range(3 * groups)
         .where(expr("id % 3 = 1") && col("id") >= lo &&
           col("id") < lo + 24L)
@@ -847,10 +844,14 @@ object ScaleRehearsal {
           lit(505L).as("x")))
       GraftSession.quiesce(spark)
       val t0 = System.nanoTime()
-      graft.operators.Materialize.refresh(cat, "t", mv)
+      val r = graft.operators.Materialize.refresh(cat, "t", mv)
       val sec = (System.nanoTime() - t0) / 1e9
-      require(!graft.operators.Materialize.LastRefresh.recomputeRan,
+      require(!r.recomputeRan,
         "non-extremal delta must not gate in a recompute")
+      if (b > 0)
+        require(r.bucketsTouched <= 8 && r.bucketsTotal == b,
+          s"bucketed refresh must touch <=8 of $b buckets, got " +
+            s"${r.bucketsTouched}")
       val nd = graft.operators.MvMeta.decode(
         spark.read.parquet(s"$mv/meta").head()).stateDir
       (sec, dirMb(s"$mv/$nd"))
@@ -858,20 +859,16 @@ object ScaleRehearsal {
     // two refreshes (disjoint 8-group deltas), best-of-2 seconds —
     // single-shot refresh timings ride the shared-host band; bytes are
     // deterministic either way
-    def best2(cat: graft.sources.GraftCatalog,
-        mv: String): (Double, Double) = {
-      val (s1, m1) = timedRefresh(cat, mv, 0L)
-      val (s2, m2) = timedRefresh(cat, mv, 24L)
+    def best2(cat: graft.sources.GraftCatalog, mv: String,
+        b: Int): (Double, Double) = {
+      val (s1, m1) = timedRefresh(cat, mv, b, 0L)
+      val (s2, m2) = timedRefresh(cat, mv, b, 24L)
       (math.min(s1, s2), math.max(m1, m2))
     }
     val (cl, ml) = mk("leg", 0)
-    val (tLegacy, mbLegacy) = best2(cl, ml)
+    val (tLegacy, mbLegacy) = best2(cl, ml, 0)
     val (cb, mb) = mk("bkt", buckets)
-    val (tBucketed, mbBucketed) = best2(cb, mb)
-    require(graft.operators.Materialize.LastRefresh.bucketsTouched <= 8 &&
-      graft.operators.Materialize.LastRefresh.bucketsTotal == buckets,
-      s"bucketed refresh must touch <=8 of $buckets buckets, got " +
-        s"${graft.operators.Materialize.LastRefresh.bucketsTouched}")
+    val (tBucketed, mbBucketed) = best2(cb, mb, buckets)
     (tLegacy, tBucketed, mbLegacy, mbBucketed)
   }
 

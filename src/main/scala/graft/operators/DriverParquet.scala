@@ -41,10 +41,8 @@ object DriverParquet {
 
   /** Direct-write row cap. Above it callers fall back to the
     * distributed write; the probe that discovers the overflow is a
-    * `limit(cap+1)` take — partition-incremental, never a full scan.
-    * Env-overridable for A/B and for clusters that want it off (0). */
-  val cap: Int = sys.env.get("SPARK_GRAFT_DIRECT_WRITE_CAP")
-    .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(4096)
+    * `limit(cap+1)` take — partition-incremental, never a full scan. */
+  val cap: Int = 4096
 
   /** Stream `rows` (plan-output InternalRows of `schema`) into ONE
     * parquet part file under `dir` (created if needed), named like a
@@ -70,7 +68,12 @@ object DriverParquet {
     try rows.foreach(writer.write) finally writer.close()
   }
 
-  /** Direct write of a refresh's out = kept ∪ recompute state.
+  /** Direct write of a refresh's out = kept ∪ recompute state,
+    * REPLACING `dir` like the distributed write's SaveMode.Overwrite:
+    * a refresh re-run after a crash targets the same fresh state dir,
+    * and a part file (or `__b=` slice) left there by the crashed
+    * attempt would otherwise serve next to the new rows once the meta
+    * flips.
     *
     *  - `kept` is PROBED with `limit(cap+1)`: it is a filter over the
     *    refresh's checkpointed merged fold, so the probe re-reads
@@ -95,7 +98,6 @@ object DriverParquet {
     * write stamps into the files. */
   def writeFoldIfSmall(kept: DataFrame, bounded: Option[DataFrame],
       bucketId: Option[DataFrame => Column], dir: String): Boolean = {
-    if (cap <= 0) return false
     val keptCols = kept.columns.toIndexedSeq
     val aligned = bounded.map(_.select(keptCols.map(col): _*))
     val keptTypes = kept.schema.map(f => (f.name, f.dataType))
@@ -115,6 +117,9 @@ object DriverParquet {
     if (keptRows.length > cap) return false
     val all = keptRows ++
       aligned.map(collectRows(_, None)).getOrElse(Array.empty)
+    val dirPath = new Path(dir)
+    dirPath.getFileSystem(kept.sparkSession.sessionState.newHadoopConf())
+      .delete(dirPath, true)
     bucketId match {
       case None => writeRows(kept, schema, all.iterator, dir)
       case Some(_) =>

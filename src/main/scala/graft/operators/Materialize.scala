@@ -587,8 +587,9 @@ object Materialize {
   }
 
   /** Fold writes since the last refresh into the persisted state.
-    * Returns the new high-water version (== old one when nothing
-    * changed, in which case no new state is written).
+    * Returns what the refresh did; its `marks` hold the new high-water
+    * version (== the old one when nothing changed, in which case no new
+    * state is written).
     *
     * Incremental folding requires the change log to still REPLAY the
     * history the state summarizes: after a history discard past the
@@ -614,7 +615,7 @@ object Materialize {
     * side the snapshot's own cutoff picks — any refresh-based MV has
     * this boundary, it just has to pick one. */
   def refresh(cat: GraftCatalog, table: String, path: String,
-      derive: DataFrame => DataFrame = NoDerive): Long =
+      derive: DataFrame => DataFrame = NoDerive): RefreshReport =
     retryOnLostBlock(refreshOnce(cat, table, path, derive))
 
   /** One-shot mark-bounded retry of a refresh (VERDICT r16 #4), for
@@ -623,7 +624,8 @@ object Materialize {
     * dynamic-allocation decommission) makes their blocks unrecoverable
     * mid-fold. Every read in a refresh is version-/mark-bounded and the
     * meta only flips at the very end, so rerunning the whole fold from
-    * the unchanged meta is exact — same window, same result. */
+    * the unchanged meta is exact — same window, same result — and the
+    * retried attempt's report is the refresh's report. */
   private[operators] def retryOnLostBlock[T](refreshOnce: => T): T =
     try refreshOnce
     catch { case e: Throwable if isLostCheckpointBlock(e) => refreshOnce }
@@ -649,14 +651,14 @@ object Materialize {
     * a spec swaps in a block-dropping hook to simulate executor loss. */
   private[graft] var testFoldHook: () => Unit = () => ()
 
-  /** Refresh-phase plan evidence (`GRAFT_IVM_PLANDUMP=<dir>`): writes
+  /** Refresh-phase plan evidence (system property
+    * `graft.ivm.plandump=<dir>`, set by [[graft.ExplainDump]]): writes
     * each tagged refresh-internal frame's formatted plan to a numbered
     * file — the committed plans/rNN evidence for refresh-side changes,
     * which the serve-plan dumps cannot show (VERDICT r16 #8). Zero
     * cost when unset. */
   private[operators] def planDump(tag: String, df: DataFrame): Unit =
-    sys.props.get("graft.ivm.plandump")
-      .orElse(sys.env.get("GRAFT_IVM_PLANDUMP")).foreach { dir =>
+    sys.props.get("graft.ivm.plandump").foreach { dir =>
       val p = java.nio.file.Paths.get(dir)
       java.nio.file.Files.createDirectories(p)
       val n = Option(p.toFile.list()).map(_.length).getOrElse(0)
@@ -668,8 +670,7 @@ object Materialize {
     }
 
   private def refreshOnce(cat: GraftCatalog, table: String, path: String,
-      derive: DataFrame => DataFrame = NoDerive): Long = {
-    LastRefresh.reset()
+      derive: DataFrame => DataFrame = NoDerive): RefreshReport = {
     val spark = cat.changeLog(table).sparkSession
     val meta = MvMeta.read(spark, path)
     val sm = meta.single
@@ -724,7 +725,7 @@ object Materialize {
     // expiry writes nothing to the log, so under a TTL an unchanged
     // high-water mark does NOT mean an unchanged table — time alone
     // retracts rows, and an early return here would serve them forever
-    if (newV == lastV && ttl.isEmpty) return lastV
+    if (newV == lastV && ttl.isEmpty) return RefreshReport(Seq(lastV))
     // an ALTER SET TTL between refreshes invalidates the expiry-window
     // algebra in BOTH directions (a shortened TTL leaves rows below the
     // new window start unretracted; a lengthened/removed one can't
@@ -741,11 +742,10 @@ object Materialize {
     val sessionTz = spark.conf.get("spark.sql.session.timeZone")
     val grainTzChanged = grains.nonEmpty && !meta.grainTz.contains(sessionTz)
     if (floor > lastV || sm.refreshTs.isEmpty || ttlChanged ||
-        grainTzChanged) {
-      LastRefresh.rebuildRan = true
-      return build(cat, table, groupCols, measures, path, grains,
-        sketches, buckets, derive, topks, filterSql = filterSql)
-    }
+        grainTzChanged)
+      return RefreshReport(Seq(build(cat, table, groupCols, measures,
+        path, grains, sketches, buckets, derive, topks,
+        filterSql = filterSql)), rebuildRan = true)
     val lastRefreshMs = sm.refreshTs.get
     // alive-at-now cutoff for post images; None ⇒ no expiry
     val nowCut = ttl.map(t => new java.sql.Timestamp(nowMs - t * 1000L))
@@ -759,7 +759,7 @@ object Materialize {
           !col("_deleted") && col("_ts").isNotNull &&
           col("_ts") >= lit(lastCut.get) && col("_ts") < lit(nowCut.get))
         .limit(1).count()
-      if (crossed == 0) return lastV
+      if (crossed == 0) return RefreshReport(Seq(lastV))
     }
     // ---- star-derive dim-stability gate ----
     // The retraction algebra reconstructs pre-image rows and folds them
@@ -779,12 +779,10 @@ object Materialize {
             "enable dim-stability enforcement")
         val cur = ed.fingerprints()
         if (cur != stamped) {
-          if (ed.rebuildOnDimChangeOf) {
-            LastRefresh.rebuildRan = true
-            return build(cat, table, groupCols, measures, path,
-              grains, sketches, buckets, derive, topks,
-              filterSql = filterSql)
-          }
+          if (ed.rebuildOnDimChangeOf)
+            return RefreshReport(Seq(build(cat, table, groupCols,
+              measures, path, grains, sketches, buckets, derive, topks,
+              filterSql = filterSql)), rebuildRan = true)
           val pin = sm.dimPin
           val which =
             if (stamped.size == cur.size)
@@ -887,18 +885,18 @@ object Materialize {
     // being read
     val nd =
       if (newV > lastV) s"state_v$newV" else s"state_v${newV}e$nowMs"
-    val folded =
+    val (folded, report) =
       try foldAndWrite(spark, path, meta, "single",
         posts.withColumn("__w", lit(1L))
           .unionByName(retracted.withColumn("__w", lit(-1L))), nd,
-        (affected, affRows) => recomputePlan(cat, table, groupCols,
+        (affected, affRows) => (recomputePlan(cat, table, groupCols,
           measures, grains, affected, affRows, sketches, fd, topks,
-          uptoV = Some(rawMax)))
+          uptoV = Some(rawMax)), Nil))
       finally if (buckets > 0) { freeLocal(changes); freeLocal(retracted) }
     MvMeta.write(spark, path, folded.copy(grainTz = None,
       kind = sm.copy(lastVersion = newV, refreshTs = Some(nowMs),
         ttlAtRefresh = Some(ttl.getOrElse(-1L)))))
-    newV
+    report.copy(marks = Seq(newV))
   }
 
   /** The fold tail both MV kinds share: state ⊕ signed delta → extremum
@@ -923,13 +921,15 @@ object Materialize {
     * @param nd the fresh state dir to write under `path`
     * @param recompute the gated-in groups' recompute plan, given the
     *   affected groups (`__a_<g>` columns) and, at most 1024 of them,
-    *   their collected rows (the IN-pushdown values)
-    * @return `meta` pointed at the written state (dir and manifest); the
-    *   caller stamps its marks on it and flips the pointer */
+    *   their collected rows (the IN-pushdown values); paired with its
+    *   [[RefreshReport.recomputePushdown]] tables
+    * @return `meta` pointed at the written state (dir and manifest) and
+    *   the fold's report; the caller stamps its marks on both and flips
+    *   the pointer */
   private[operators] def foldAndWrite(spark: SparkSession, path: String,
       meta: MvMeta, tag: String, signed: DataFrame, nd: String,
       recompute: (DataFrame, Option[Seq[org.apache.spark.sql.Row]])
-        => DataFrame): MvMeta = {
+        => (DataFrame, Seq[String])): (MvMeta, RefreshReport) = {
     val MvMeta(groupCols, measures, _, _, _, sketches, topks, buckets,
       oldDirs, _) = meta
     if (sketches.nonEmpty || topks.nonEmpty)
@@ -945,8 +945,6 @@ object Materialize {
         Some(tg.select(bucketCol(tg, groupCols, buckets).as("__b"))
           .distinct().collect().map(_.getInt(0)).toSet)
       }
-    LastRefresh.bucketsTouched = touched.map(_.size).getOrElse(-1)
-    LastRefresh.bucketsTotal = buckets
     val state = touched match {
       case None => stateAll
       case Some(tb) => spark.read.parquet(meta.statePaths(path, tb): _*)
@@ -1048,7 +1046,7 @@ object Materialize {
       // log path recaches-by-path and drops the in-flight blocks
       // mid-job ("Block rdd_N does not exist").
       .localCheckpoint(false)
-    val written = try {
+    val (written, report) = try {
     // ---- extremum gate ----
     // Removing a NON-extremal value can never change a group's min/max,
     // and cnt/sum already folded algebraically — so a retraction group
@@ -1093,12 +1091,11 @@ object Materialize {
     testFoldHook()
     val affectedCount =
       if (affHead.size <= 1024) affHead.size.toLong else affected.count()
-    LastRefresh.affectedGroups = affectedCount
-    LastRefresh.recomputeRan = affectedCount > 0
-    val rec =
+    val recomputed =
       if (affectedCount == 0) None
       else Some(recompute(affected,
         if (affectedCount <= 1024) Some(affHead) else None))
+    val rec = recomputed.map(_._1)
     // Row-count-gated DIRECT state write (guide §1.2 — the dominant
     // fixed cost of the small-delta refresh floor): kept probes the
     // checkpointed merged fold's cached blocks; the recompute branch
@@ -1108,19 +1105,26 @@ object Materialize {
     // overflow (or >1024 affected groups, or a type drift) falls back
     // to the distributed write with the recompute still executed
     // exactly once.
-    if (affectedCount <= 1024 && DriverParquet.writeFoldIfSmall(kept, rec,
-        if (buckets == 0) None
-        else Some((d: DataFrame) => bucketCol(d, groupCols, buckets)),
-        s"$path/$nd"))
-      manifestOf(spark, path, nd, buckets)
-    else writeState(rec.map(kept.unionByName(_)).getOrElse(kept),
-      groupCols, buckets, path, nd)
+    val dirs =
+      if (affectedCount <= 1024 && DriverParquet.writeFoldIfSmall(kept,
+          rec, if (buckets == 0) None
+          else Some((d: DataFrame) => bucketCol(d, groupCols, buckets)),
+          s"$path/$nd"))
+        manifestOf(spark, path, nd, buckets)
+      else writeState(rec.map(kept.unionByName(_)).getOrElse(kept),
+        groupCols, buckets, path, nd)
+    (dirs, RefreshReport(Nil, recomputeRan = affectedCount > 0,
+      affectedGroups = affectedCount,
+      bucketsTouched = touched.map(_.size).getOrElse(-1),
+      bucketsTotal = buckets,
+      recomputePushdown = recomputed.map(_._2).getOrElse(Nil)))
     } finally freeLocal(merged)
     // manifest flip: touched buckets point at the new dir (or vanish if
     // emptied), untouched buckets keep their pinned dir — readers of the
     // PREVIOUS meta still see a complete, consistent old state
-    meta.copy(stateDir = nd, bucketDirs = written.indices.map(i =>
-      if (touched.exists(_.contains(i))) written(i) else oldDirs(i)))
+    (meta.copy(stateDir = nd, bucketDirs = written.indices.map(i =>
+      if (touched.exists(_.contains(i))) written(i) else oldDirs(i))),
+      report)
   }
 
   /** Delta rows with their typed pre-images (`_prev`, NULL for first
@@ -1172,41 +1176,6 @@ object Materialize {
     pruned.join(deltaPks, touchedCond, "left_semi")
       .withColumn("_prev", lag(rowS, 1).over(w))
       .where(col("_version") > lastV)
-  }
-
-  /** Test/diagnostic instrumentation: facts about the most recent
-    * refresh of either MV kind (single-writer, same assumption as the
-    * catalog's version counter). Every refresh resets all of them on
-    * entry, so a refresh that found nothing to fold reports that
-    * nothing ran. `recomputeRan == false` means the written plan
-    * contained NO base-history access at all. */
-  private[graft] object LastRefresh {
-    @volatile var affectedGroups: Long = 0L
-    @volatile var recomputeRan: Boolean = false
-    /** True when the last refresh() fell back to a FULL REBUILD
-      * (history discarded past a fold mark, TTL/tz change, dim-churn
-      * opt-in) instead of folding incrementally — what the
-      * floored-compaction specs pin on. */
-    @volatile var rebuildRan: Boolean = false
-    /** Bucketed refreshes only: how many `__b=` partitions this refresh
-      * read + rewrote (-1 = single-dir state, or no fold), of how many. */
-    @volatile var bucketsTouched: Int = -1
-    @volatile var bucketsTotal: Int = -1
-    /** Join MVs: tables whose snapshot reads the last gated recompute
-      * bounded with a below-join affected-group IN-filter (empty when
-      * the gate did not fire, when >1024 groups disabled the pushdown,
-      * or when the soundness rule held it back — see
-      * [[MaterializeJoin]]'s recomputeJoined). */
-    @volatile var recomputePushdown: Seq[String] = Nil
-
-    private[operators] def reset(): Unit = {
-      affectedGroups = 0L
-      recomputeRan = false
-      rebuildRan = false
-      bucketsTouched = -1
-      bucketsTotal = -1
-      recomputePushdown = Nil
-    }
   }
 
   /** Affected-group recompute, PRUNED to affected-PK history: instead of

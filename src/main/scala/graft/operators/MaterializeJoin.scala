@@ -659,12 +659,12 @@ object MaterializeJoin {
     * fold it incrementally ([[refresh]]). A time-grained MV retracts
     * exactly the expired grain groups (emptied groups drop from the
     * state); no rebuild, no O(table) term beyond the delete's own
-    * snapshot scan. Returns the refreshed (factV, sideVs) marks.
+    * snapshot scan. Returns the refresh's report.
     * The SQL spelling is the equivalent `DELETE FROM t WHERE col <
     * cutoff` + `REFRESH MATERIALIZED VIEW` through [[graft.sources
     * .PhoenixSql]]. */
   def expireBefore(cat: GraftCatalog, path: String, column: String,
-      cutoff: Column): (Long, Seq[Long]) = {
+      cutoff: Column): RefreshReport = {
     val cs = MvMeta.read(cat.session, path).join.chain
     val holder = (cs.fact +: cs.sides.map(_.table))
       .find(t => cat.spec(t).schema.fieldNames.contains(column))
@@ -675,22 +675,15 @@ object MaterializeJoin {
     refresh(cat, path)
   }
 
-  /** Binary sugar for `refresh` returning the (left, right)
-    * high-water pair. */
-  def refreshBinary(cat: GraftCatalog, path: String): (Long, Long) = {
-    val (vF, vS) = refresh(cat, path)
-    (vF, vS.head)
-  }
-
   /** Fold every table's writes since the last refresh into the
-    * persisted joined-aggregate state. Returns the new (factV, sideVs)
-    * high-water marks (== the stored ones when nothing changed). */
-  def refresh(cat: GraftCatalog, path: String): (Long, Seq[Long]) =
+    * persisted joined-aggregate state. Returns what the refresh did;
+    * its `marks` hold the new `factV +: sideVs` high-water marks (== the
+    * stored ones when nothing changed). */
+  def refresh(cat: GraftCatalog, path: String): RefreshReport =
     Materialize.retryOnLostBlock(refreshOnce(cat, path))
 
   private def refreshOnce(cat: GraftCatalog, path: String)
-      : (Long, Seq[Long]) = {
-    Materialize.LastRefresh.reset()
+      : RefreshReport = {
     val spark = cat.session
     val m = MvMeta.read(spark, path)
     val MvMeta.Join(cs, lastVF, lastVS) = m.join
@@ -713,7 +706,8 @@ object MaterializeJoin {
     val (newVF, floorF) = marksOf(cs.fact)
     val sideMarks = cs.sides.map(s => marksOf(s.table))
     val newVS = sideMarks.map(_._1)
-    if (newVF == lastVF && newVS == lastVS) return (lastVF, lastVS)
+    if (newVF == lastVF && newVS == lastVS)
+      return RefreshReport(lastVF +: lastVS)
     // any log with history discarded past the fold point → only a
     // rebuild is correct (the rows the state summarizes can no longer
     // be retraced). A FLOORED compaction at or below the fold mark
@@ -721,9 +715,9 @@ object MaterializeJoin {
     val compacted = floorF > lastVF ||
       sideMarks.map(_._2).zip(lastVS).exists { case (fl, lv) => fl > lv }
     if (compacted || grainTzChanged) {
-      Materialize.LastRefresh.rebuildRan = true
-      return build(cat, cs, groupCols, measures, path, sketches, topks,
-        grains, buckets)
+      val (vF, vS) = build(cat, cs, groupCols, measures, path, sketches,
+        topks, grains, buckets)
+      return RefreshReport(vF +: vS, rebuildRan = true)
     }
 
     // each delta / accumulated leg is read SEVERAL times (its zone
@@ -1056,12 +1050,13 @@ object MaterializeJoin {
       legs.reduce(_.unionByName(_, allowMissingColumns = false)),
       grains)
     val nd = s"state_v${newVF}_${newVS.mkString("_")}"
-    val folded = Materialize.foldAndWrite(spark, path, m, "join", delta,
-      nd, (affected, affRows) => recomputeJoined(cat, cs, newVF, newVS,
-        groupCols, measures, affected, affRows, sketches, topks, grains))
+    val (folded, report) = Materialize.foldAndWrite(spark, path, m,
+      "join", delta, nd, (affected, affRows) => recomputeJoined(cat, cs,
+        newVF, newVS, groupCols, measures, affected, affRows, sketches,
+        topks, grains))
     MvMeta.write(spark, path, folded.copy(grainTz = None,
       kind = MvMeta.Join(cs, newVF, newVS)))
-    (newVF, newVS)
+    report.copy(marks = newVF +: newVS)
     } finally {
       // snapshot under the append lock — the pool drains before the
       // try exits, but the discipline costs nothing and survives a
@@ -1077,7 +1072,8 @@ object MaterializeJoin {
     * groups: an IN prefilter on each plain group column reaches its
     * owning table's scan (below the joins), and the affected semi-join
     * caps the aggregate itself — delta-group-sized work against the
-    * join, never the full γ. */
+    * join, never the full γ. Returns the plan and the tables whose
+    * reads carry the below-join pushdown. */
   private def recomputeJoined(cat: GraftCatalog, cs: ChainSpec,
       vF: Long, vS: Seq[Long],
       groupCols: Seq[String], measures: Seq[String],
@@ -1085,7 +1081,8 @@ object MaterializeJoin {
       affRows: Option[Seq[org.apache.spark.sql.Row]],
       sketches: Seq[(String, Int)] = Seq.empty,
       topks: Seq[(String, Int)] = Seq.empty,
-      grains: Seq[(String, String)] = Seq.empty): DataFrame = {
+      grains: Seq[(String, String)] = Seq.empty)
+      : (DataFrame, Seq[String]) = {
     val affCond = groupCols.map(c => col(c) <=> col(s"__a_$c"))
       .reduce(_ && _)
     val grainNames = grains.map(_._1).toSet
@@ -1143,14 +1140,13 @@ object MaterializeJoin {
         if (sound) Some(t -> attrs.map(colFilter).reduce(_ && _))
         else None
       }.toMap
-    Materialize.LastRefresh.recomputePushdown = pushes.keys.toSeq.sorted
     val tablePush: String => Column =
       t => pushes.getOrElse(t, lit(true))
-    Materialize.aggregate(
+    (Materialize.aggregate(
       Materialize.withGrains(
           joinedSnapshotAt(cat, cs, vF, vS, tablePush).where(prefilter),
           grains)
         .join(affected, affCond, "left_semi"),
-      groupCols, measures, sketches, topks)
+      groupCols, measures, sketches, topks), pushes.keys.toSeq.sorted)
   }
 }

@@ -836,8 +836,7 @@ object Pipeline {
       cat.upsert("db", docs.where($"doc_id" < 30)
         .withColumn("n_chars", $"n_chars" + 11))
       cat.delete("db", $"source" === "src2")
-      graft.operators.Materialize.refresh(cat, "db", mv)
-      val lr = graft.operators.Materialize.LastRefresh
+      val lr = graft.operators.Materialize.refresh(cat, "db", mv)
       require(lr.bucketsTotal == 8 && lr.bucketsTouched > 0 &&
         lr.bucketsTouched < 8,
         s"refresh must rewrite a strict subset of the manifest, " +
@@ -1396,8 +1395,7 @@ object Pipeline {
       graft.operators.Materialize.build(cat, "e", Seq("event_type"),
         Seq("user_id"), mv, topks = Seq("user_id" -> 8192))
       cat.upsert("e", ev.where($"event_id" % 4 === 0))
-      graft.operators.Materialize.refresh(cat, "e", mv)
-      if (graft.operators.Materialize.LastRefresh.recomputeRan)
+      if (graft.operators.Materialize.refresh(cat, "e", mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only top-terms refresh must fold algebraically " +
             "(sketch merge) with ZERO base access")
@@ -1457,8 +1455,7 @@ object Pipeline {
       graft.operators.MaterializeJoin.build(cat, js,
         Seq("priority"), Seq("qty"), mv)
       cat.upsert("jo", ord.where($"okey" % 32 === 2))
-      graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.Materialize.LastRefresh.recomputeRan)
+      if (graft.operators.MaterializeJoin.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only join delta must fold with zero recompute")
       cat.upsert("jl", li.where($"okey" % 100 === 1)
@@ -1512,8 +1509,7 @@ object Pipeline {
         Seq("priority", "mon"), Seq("qty"), mv,
         grainExprs = Seq("mon" -> "date_trunc('MONTH', odate)"))
       cat.upsert("jo6", ord.where($"okey" % 32 === 2))
-      graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.Materialize.LastRefresh.recomputeRan)
+      if (graft.operators.MaterializeJoin.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only grain-join delta must fold with zero recompute")
       cat.upsert("jo6", ord.where($"okey" % 50 === 4)
@@ -1563,9 +1559,8 @@ object Pipeline {
         grainExprs = Seq("mon" -> "date_trunc('MONTH', odate)"))
       // roll 1: expire the oldest window (API helper), with churn that
       // updates survivors AND resurrects some expired PKs
-      graft.operators.MaterializeJoin.expireBefore(cat, mv, "odate",
-        lit(java.sql.Timestamp.valueOf("1994-01-01 00:00:00")))
-      if (graft.operators.Materialize.LastRefresh.rebuildRan)
+      if (graft.operators.MaterializeJoin.expireBefore(cat, mv, "odate",
+          lit(java.sql.Timestamp.valueOf("1994-01-01 00:00:00"))).rebuildRan)
         throw new IllegalStateException(
           "retention roll 1 must fold incrementally, not rebuild")
       cat.upsert("lr", li.where($"okey" % 100 === 3)
@@ -1573,8 +1568,7 @@ object Pipeline {
       // roll 2: the SQL spelling — DELETE FROM + API refresh
       px.execute(
         "DELETE FROM lr WHERE odate < TIMESTAMP '1996-01-01 00:00:00'")
-      graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.Materialize.LastRefresh.rebuildRan)
+      if (graft.operators.MaterializeJoin.refresh(cat, mv).rebuildRan)
         throw new IllegalStateException(
           "retention roll 2 must fold incrementally, not rebuild")
       graft.operators.Materialize.read(s, mv)
@@ -1621,8 +1615,7 @@ object Pipeline {
         Seq("priority"), Seq("qty"), mv,
         sketches = Seq("skey" -> 131072))
       cat.upsert("jo4", ord.where($"okey" % 32 === 2))
-      graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.Materialize.LastRefresh.recomputeRan)
+      if (graft.operators.MaterializeJoin.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only join-sketch delta must fold with zero recompute")
       cat.delete("jl4", $"okey" % 10 === 3)
@@ -1679,8 +1672,7 @@ object Pipeline {
       graft.operators.MaterializeJoin.build(cat, cs,
         Seq("seg"), Seq("qty"), mv)
       cat.upsert("co", ord.where($"okey" % 32 === 2))
-      graft.operators.MaterializeJoin.refresh(cat, mv)
-      if (graft.operators.Materialize.LastRefresh.recomputeRan)
+      if (graft.operators.MaterializeJoin.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only chain delta must fold with zero recompute")
       cat.upsert("cl", li.where($"okey" % 100 === 2)
@@ -2010,8 +2002,8 @@ object Pipeline {
       cat.upsert("kf", f0.where($"okey" % 10 === 1)
         .withColumn("m", $"m" + 9L))
       cat.delete("kf", $"okey" % 20 === 13)
-      px.execute("REFRESH MATERIALIZED VIEW kmv")
-      if (graft.operators.Materialize.LastRefresh.rebuildRan)
+      if (px.execute("REFRESH MATERIALIZED VIEW kmv").head
+          .getAs[Boolean]("rebuild_ran"))
         throw new IllegalStateException(
           "post-COMPACT refresh must stay incremental, not rebuild")
       val q = px.execute("SELECT seg, COUNT(*) AS cnt, " +

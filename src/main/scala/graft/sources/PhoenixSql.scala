@@ -1170,8 +1170,11 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
 
   /** `REFRESH MATERIALIZED VIEW name`: fold every involved table's
     * writes since the last refresh into the state (delta-sized), then
-    * re-cache the tables so the front-end serves the new numbers. */
+    * re-cache the tables so the front-end serves the new numbers.
+    * Returns the refresh's report as one row (rebuild_ran,
+    * recompute_ran, affected_groups, buckets_touched, buckets_total). */
   private def refreshMaterializedView(s: String): DataFrame = {
+    import spark.implicits._
     val name = resolveTable(
       "(?is)^REFRESH\\s+MATERIALIZED\\s+VIEW\\s+([\\w.\"]+)$".r
         .findFirstMatchIn(s)
@@ -1179,7 +1182,7 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
         .group(1))
     val d = mvDefs.getOrElse(name, throw new IllegalArgumentException(
       s"unknown materialized view $name"))
-    d.singleTable match {
+    val r = d.singleTable match {
       case Some(t) => graft.operators.Materialize.refresh(catalog, t, d.path)
       case None => graft.operators.MaterializeJoin.refresh(catalog, d.path)
     }
@@ -1191,7 +1194,9 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     d.tables.foreach(t =>
       scala.util.Try(catalog.refreshSnapshotCache(t)))
     dirty ++= d.tables.filter(tableNames.contains)
-    spark.emptyDataFrame
+    Seq((r.rebuildRan, r.recomputeRan, r.affectedGroups, r.bucketsTouched,
+      r.bucketsTotal)).toDF("rebuild_ran", "recompute_ran",
+      "affected_groups", "buckets_touched", "buckets_total")
   }
 
   /** `DROP MATERIALIZED VIEW [IF EXISTS] name`: deregister (siblings

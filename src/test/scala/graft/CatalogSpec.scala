@@ -787,13 +787,13 @@ class CatalogSpec extends AnyFunSuite {
     assert(actual == expected)
     // insert-only delta: pure merge, no retraction recompute
     cat.upsert("m", Seq((4L, "b", 5L), (5L, "c", 7L)).toDF("k", "g", "x"))
-    val v1 = Materialize.refresh(cat, "m", path)
+    val v1 = Materialize.refresh(cat, "m", path).marks.head
     assert(v1 > v0 && actual == expected)
     // update (retracts the old pre-image), group-moving update, delete:
     // 'a' loses its min, 'b' loses its max, 'a'->'c' moves a row
     cat.upsert("m", Seq((1L, "a", 99L), (2L, "c", 20L)).toDF("k", "g", "x"))
     cat.delete("m", col("k") === 3L)
-    val v2 = Materialize.refresh(cat, "m", path)
+    val v2 = Materialize.refresh(cat, "m", path).marks.head
     assert(v2 > v1 && actual == expected,
       s"IVM state diverged: $actual vs $expected")
     // a fully-deleted group vanishes from the state
@@ -802,8 +802,8 @@ class CatalogSpec extends AnyFunSuite {
     assert(actual == expected)
     assert(!actual.exists(_.head == "b"))
     // idle refresh: same high-water mark, state untouched
-    val v3 = Materialize.refresh(cat, "m", path)
-    assert(v3 == Materialize.refresh(cat, "m", path))
+    val v3 = Materialize.refresh(cat, "m", path).marks
+    assert(v3 == Materialize.refresh(cat, "m", path).marks)
     // NULL group key: merges as an ordinary group (joins would miss it)
     cat.upsert("m", Seq((10L, null.asInstanceOf[String], 5L),
       (11L, null.asInstanceOf[String], 6L)).toDF("k", "g", "x"))
@@ -842,8 +842,8 @@ class CatalogSpec extends AnyFunSuite {
     // lit(false) (which silently erased the group from the state)
     cat.upsert("mn", Seq((Option.empty[Long], "n", 10L))
       .toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mn", path)
-    assert(Materialize.LastRefresh.recomputeRan,
+    val r = Materialize.refresh(cat, "mn", path)
+    assert(r.recomputeRan,
       "the extremum gate must fire for the retracted max")
     val got = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
@@ -891,13 +891,13 @@ class CatalogSpec extends AnyFunSuite {
     val dirA0 = manifest(bucketOf("a"))
     // insert-only delta into groups b and c: only their buckets change
     cat.upsert("mb", Seq((4L, "b", 5L), (5L, "c", 7L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mb", path)
+    val r = Materialize.refresh(cat, "mb", path)
     assert(actual == expected)
     val tb = Set(bucketOf("b"), bucketOf("c"))
-    assert(Materialize.LastRefresh.bucketsTouched == tb.size &&
-      Materialize.LastRefresh.bucketsTotal == B,
+    assert(r.bucketsTouched == tb.size &&
+      r.bucketsTotal == B,
       s"refresh must touch exactly ${tb.size} of $B buckets, " +
-        s"got ${Materialize.LastRefresh.bucketsTouched}")
+        s"got ${r.bucketsTouched}")
     // the new state dir holds EXACTLY the touched bucket partitions —
     // the on-disk witness that untouched buckets were not rewritten
     assert(partsOf(manifest(bucketOf("b"))) == tb,
@@ -1537,10 +1537,10 @@ class CatalogSpec extends AnyFunSuite {
       s"manifest must point at the single compacted dir: $dirs")
     // the version mark carried over: the next refresh is incremental
     cat.upsert("mc", Seq((1L, "a", 99L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mc", path)
+    val r = Materialize.refresh(cat, "mc", path)
     assert(actual == expected,
       "post-compaction incremental refresh must stay exact")
-    assert(Materialize.LastRefresh.bucketsTouched == 1,
+    assert(r.bucketsTouched == 1,
       "post-compaction refresh must still slice to touched buckets")
     // legacy (single-dir) layout: compaction + vacuum also reclaims
     val cat2 = freshCatalog()
@@ -1590,17 +1590,17 @@ class CatalogSpec extends AnyFunSuite {
     Materialize.build(cat, "eb", Seq("g"), Seq("x"), path, buckets = B)
     // advance past 'exp''s expiry (t0-50s + 60s = t0+10s)
     cat.clock = () => t0 + 20000L
-    Materialize.refresh(cat, "eb", path)
+    val r = Materialize.refresh(cat, "eb", path)
     val got = Materialize.read(spark, path)
       .select(col("g"), col("cnt")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got == Set(("g0", 2L)),
       s"expired group must retract from the bucketed state: $got")
     // the expiry-only refresh touched ONLY the expired group's bucket
-    assert(Materialize.LastRefresh.bucketsTouched == 1 &&
-      Materialize.LastRefresh.bucketsTotal == B,
+    assert(r.bucketsTouched == 1 &&
+      r.bucketsTotal == B,
       s"expiry must touch 1 bucket, got " +
-        s"${Materialize.LastRefresh.bucketsTouched}")
+        s"${r.bucketsTouched}")
   }
 
   test("bucket-manifested state with grain + sketch measures equals " +
@@ -1835,30 +1835,30 @@ class CatalogSpec extends AnyFunSuite {
 
     // non-extremal update: k=2 moves 20 -> 25 inside 'a' extrema (10, 30)
     cat.upsert("mg", Seq((2L, "a", 25L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mg", path)
+    val r = Materialize.refresh(cat, "mg", path)
     assert(actual == expected, s"non-extremal fold diverged: $actual")
-    assert(!Materialize.LastRefresh.recomputeRan &&
-      Materialize.LastRefresh.affectedGroups == 0L,
+    assert(!r.recomputeRan &&
+      r.affectedGroups == 0L,
       "a non-extremal retraction must refresh without any base access")
 
     // delete of a non-extremal row: still pure algebra
     cat.upsert("mg", Seq((6L, "b", 30L)).toDF("k", "g", "x"))
     Materialize.refresh(cat, "mg", path)
     cat.delete("mg", $"k" === 6L)
-    Materialize.refresh(cat, "mg", path)
+    val r2 = Materialize.refresh(cat, "mg", path)
     assert(actual == expected, s"non-extremal delete diverged: $actual")
-    assert(!Materialize.LastRefresh.recomputeRan,
+    assert(!r2.recomputeRan,
       "deleting a non-extremal row must fold algebraically")
 
     // extremal update: k=3 moves 30 (the max of 'a') down to 22 —
     // exactly the one group recomputes
     cat.upsert("mg", Seq((3L, "a", 22L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mg", path)
+    val r3 = Materialize.refresh(cat, "mg", path)
     assert(actual == expected, s"extremal refresh diverged: $actual")
-    assert(Materialize.LastRefresh.recomputeRan &&
-      Materialize.LastRefresh.affectedGroups == 1L,
+    assert(r3.recomputeRan &&
+      r3.affectedGroups == 1L,
       "losing a max must recompute exactly the one affected group, got " +
-        s"${Materialize.LastRefresh.affectedGroups}")
+        s"${r3.affectedGroups}")
 
     // within-delta churn OUTSIDE the state's bounds: k=7 inserted at 1
     // (below 'b' min 5) then updated to 8 in the SAME delta — the
@@ -1866,9 +1866,9 @@ class CatalogSpec extends AnyFunSuite {
     // gate must catch it (rmin 1 <= smin 5) or min_x would leak to 1
     cat.upsert("mg", Seq((7L, "b", 1L)).toDF("k", "g", "x"))
     cat.upsert("mg", Seq((7L, "b", 8L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mg", path)
+    val r4 = Materialize.refresh(cat, "mg", path)
     assert(actual == expected, s"within-delta churn diverged: $actual")
-    assert(Materialize.LastRefresh.recomputeRan,
+    assert(r4.recomputeRan,
       "transient below-min churn must trigger the gate")
 
     // brand-new group with within-delta churn (never in the state):
@@ -1933,9 +1933,9 @@ class CatalogSpec extends AnyFunSuite {
     // insert-only delta: a new value for 'a' and a DUPLICATE value for
     // 'b' (idempotent union — the dup must not change b's sketch)
     cat.upsert("sk", Seq((5L, "a", 12L), (6L, "b", 7L)).toDF("k", "g", "u"))
-    Materialize.refresh(cat, "sk", path)
+    val r = Materialize.refresh(cat, "sk", path)
     assert(actual == expected, "insert-only sketch fold diverged")
-    assert(!Materialize.LastRefresh.recomputeRan,
+    assert(!r.recomputeRan,
       "an insert-only delta must fold sketches with zero base access")
     assert(est == Map("a" -> 3L, "b" -> 1L), s"exact-regime estimate: $est")
 
@@ -1943,8 +1943,8 @@ class CatalogSpec extends AnyFunSuite {
     // move to 11): distinct drops 3 -> 2 — only a recompute can know
     // that, so the gate must fire and the recomputed sketch must match
     cat.upsert("sk", Seq((1L, "a", 11L), (3L, "a", 11L)).toDF("k", "g", "u"))
-    Materialize.refresh(cat, "sk", path)
-    assert(Materialize.LastRefresh.recomputeRan,
+    val r2 = Materialize.refresh(cat, "sk", path)
+    assert(r2.recomputeRan,
       "a sketch-bearing retraction must take the recompute path")
     assert(actual == expected, "retraction recompute diverged")
     assert(est == Map("a" -> 2L, "b" -> 1L), s"post-update estimate: $est")
@@ -1998,9 +1998,9 @@ class CatalogSpec extends AnyFunSuite {
     // access, exact counts below the eviction threshold
     cat.upsert("tk", Seq((5L, "a", "x", 9L), (6L, "b", "w", 2L))
       .toDF("k", "g", "u", "x"))
-    Materialize.refresh(cat, "tk", path)
+    val r = Materialize.refresh(cat, "tk", path)
     assert(actual == expected, "insert-only top-terms fold diverged")
-    assert(!Materialize.LastRefresh.recomputeRan,
+    assert(!r.recomputeRan,
       "an insert-only delta must fold top-terms with zero base access")
     assert(counts == Map(("a", "x") -> (3L, 0L), ("a", "y") -> (1L, 0L),
       ("b", "z") -> (1L, 0L), ("b", "w") -> (1L, 0L)),
@@ -2009,8 +2009,8 @@ class CatalogSpec extends AnyFunSuite {
     // update k=1 to term y: x loses a count — only a recompute can
     // un-count, so the gate must fire and match the rebuild
     cat.upsert("tk", Seq((1L, "a", "y", 5L)).toDF("k", "g", "u", "x"))
-    Materialize.refresh(cat, "tk", path)
-    assert(Materialize.LastRefresh.recomputeRan,
+    val r2 = Materialize.refresh(cat, "tk", path)
+    assert(r2.recomputeRan,
       "a top-terms-bearing retraction must take the recompute path")
     assert(actual == expected, "retraction recompute diverged")
     assert(counts(("a", "x")) == (2L, 0L) && counts(("a", "y")) == (2L, 0L))
@@ -2328,11 +2328,11 @@ class CatalogSpec extends AnyFunSuite {
     // t0+95s the t0+30s insert crosses the cutoff (t0+35s) — refresh
     // must still rotate the state, not early-return and serve it forever
     cat2.clock = () => t0 + 95000L
-    val vSame = Materialize.refresh(cat2, "e", mv2)
+    val vSame = Materialize.refresh(cat2, "e", mv2).marks
     assert(Materialize.read(spark, mv2).isEmpty,
       "expiry-only refresh must retract rows with no new versions")
     // and with nothing further to expire, refresh is a cheap no-op
-    assert(Materialize.refresh(cat2, "e", mv2) == vSame)
+    assert(Materialize.refresh(cat2, "e", mv2).marks == vSame)
   }
 
   test("ALTER SET TTL between refreshes forces an MV rebuild (the " +
@@ -2914,7 +2914,7 @@ class CatalogSpec extends AnyFunSuite {
       .createTempDirectory("graft_fc").toString
     Materialize.build(cat, "fc", Seq("g"), Seq("x"), path)
     cat.upsert("fc", Seq((4L, "a", 7L)).toDF("k", "g", "x"))
-    val mark = Materialize.refresh(cat, "fc", path)
+    val mark = Materialize.refresh(cat, "fc", path).marks.head
     def expected = Materialize
       .aggregate(cat.snapshot("fc"), Seq("g"), Seq("x"))
       .collect().map(_.toSeq).toSet
@@ -2936,8 +2936,8 @@ class CatalogSpec extends AnyFunSuite {
       "the tombstone winner must survive the rewrite (resurrection)")
     // post-compaction refresh: incremental (the whole point), exact
     cat.upsert("fc", Seq((2L, "c", 9L)).toDF("k", "g", "x")) // regroup
-    Materialize.refresh(cat, "fc", path)
-    assert(!Materialize.LastRefresh.rebuildRan,
+    val r = Materialize.refresh(cat, "fc", path)
+    assert(!r.rebuildRan,
       "a floor at the fold mark must NOT force a rebuild")
     assert(actual == expected,
       s"post-floored-compaction refresh diverged: $actual vs $expected")
@@ -2952,8 +2952,8 @@ class CatalogSpec extends AnyFunSuite {
     // FULL compaction rises past the fold mark: rebuild, still exact
     cat.compact("fc")
     cat.upsert("fc", Seq((5L, "c", 11L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "fc", path)
-    assert(Materialize.LastRefresh.rebuildRan,
+    val r2 = Materialize.refresh(cat, "fc", path)
+    assert(r2.rebuildRan,
       "full compaction discards the fold history — rebuild required")
     assert(actual == expected)
   }
@@ -2977,8 +2977,8 @@ class CatalogSpec extends AnyFunSuite {
     // the version counter moved, so a freshness probe keyed on it goes
     // stale — the silent path used to be: counter unchanged, refresh
     // early-returns, state serves rows that no longer exist
-    Materialize.refresh(cat, "tr", path)
-    assert(Materialize.LastRefresh.rebuildRan,
+    val r = Materialize.refresh(cat, "tr", path)
+    assert(r.rebuildRan,
       "truncate discards history — only a rebuild is correct")
     assert(Materialize.read(spark, path).isEmpty,
       "post-truncate state must be empty, not the vanished rows")
@@ -3136,8 +3136,8 @@ class CatalogSpec extends AnyFunSuite {
     // the first post-upgrade refresh must REBUILD (the compaction's
     // rewrite batch has no pre-images — folding it as a delta would
     // double-count every surviving row) and land exactly
-    graft.operators.Materialize.refresh(cat2, "t", mv)
-    assert(graft.operators.Materialize.LastRefresh.rebuildRan,
+    val r = graft.operators.Materialize.refresh(cat2, "t", mv)
+    assert(r.rebuildRan,
       "the post-upgrade refresh over a legacy-compacted log must " +
         "rebuild")
     val got = graft.operators.Materialize.read(spark, mv)

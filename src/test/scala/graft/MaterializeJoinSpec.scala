@@ -68,9 +68,9 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("o", Seq((5L, 20L, 500L), (6L, 40L, 600L))
       .toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((40L, "c")).toDF("ck", "seg"))
-    MaterializeJoin.refresh(cat, path)
+    val r = MaterializeJoin.refresh(cat, path)
     assert(actual(path) == expected(cat))
-    assert(!Materialize.LastRefresh.recomputeRan,
+    assert(!r.recomputeRan,
       "insert-only deltas must fold with no recompute")
   }
 
@@ -113,15 +113,15 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // 201) neither ties nor crosses min=100/max=400... but the +201
     // post RAISES nothing either — strictly interior both ways
     cat.upsert("o", Seq((2L, 10L, 201L)).toDF("ok", "ck", "price"))
-    MaterializeJoin.refresh(cat, path)
+    val r = MaterializeJoin.refresh(cat, path)
     assert(actual(path) == expected(cat))
-    assert(!Materialize.LastRefresh.recomputeRan,
+    assert(!r.recomputeRan,
       "an interior retraction must fold algebraically")
     // retract the max (400 → 50): only a recompute can lower max
     cat.upsert("o", Seq((4L, 30L, 50L)).toDF("ok", "ck", "price"))
-    MaterializeJoin.refresh(cat, path)
+    val r2 = MaterializeJoin.refresh(cat, path)
     assert(actual(path) == expected(cat))
-    assert(Materialize.LastRefresh.recomputeRan,
+    assert(r2.recomputeRan,
       "retracting the group max must take the recompute path")
   }
 
@@ -157,7 +157,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val (vl, vr) = MaterializeJoin.build(cat, js, Seq("seg"),
       Seq("price"), path)
     val before = actual(path)
-    assert(MaterializeJoin.refreshBinary(cat, path) == (vl, vr))
+    assert(MaterializeJoin.refresh(cat, path).marks == Seq(vl, vr))
     assert(actual(path) == before)
   }
 
@@ -417,15 +417,15 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("o", Seq((5L, 20L, 500L), (6L, 30L, 600L))
       .toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((40L, "d")).toDF("ck", "seg"))
-    MaterializeJoin.refresh(cat, path)
+    val r = MaterializeJoin.refresh(cat, path)
     assert(actualSk == expectedSk, "insert-only sketch fold diverged")
-    assert(!Materialize.LastRefresh.recomputeRan,
+    assert(!r.recomputeRan,
       "insert-only deltas must fold sketches with zero recompute")
     // dim regroup: the pre-image groups carry sketch state only a
     // recompute can shrink — the gate must fire and match the rebuild
     cat.upsert("c", Seq((10L, "b")).toDF("ck", "seg"))
-    MaterializeJoin.refresh(cat, path)
-    assert(Materialize.LastRefresh.recomputeRan,
+    val r2 = MaterializeJoin.refresh(cat, path)
+    assert(r2.recomputeRan,
       "a sketch-bearing retraction must take the recompute path")
     assert(actualSk == expectedSk, "post-regroup sketch state diverged")
     // fact delete emptying nothing but shrinking a group
@@ -778,12 +778,12 @@ class MaterializeJoinSpec extends AnyFunSuite {
     assert(actual(path) == exp, "bucketed build")
     // one fact update touching ONE segment's group
     cat.upsert("bo", Seq((1L, 1L, 50L)).toDF("ok", "ck", "price"))
-    MaterializeJoin.refresh(cat, path)
+    val r = MaterializeJoin.refresh(cat, path)
     assert(actual(path) == exp, "after fact churn")
-    assert(Materialize.LastRefresh.bucketsTouched > 0 &&
-      Materialize.LastRefresh.bucketsTouched <= 2,
+    assert(r.bucketsTouched > 0 &&
+      r.bucketsTouched <= 2,
       s"a one-group delta must touch ~1 bucket of 16, " +
-        s"got ${Materialize.LastRefresh.bucketsTouched}")
+        s"got ${r.bucketsTouched}")
     // dim regroup (a group moves buckets: retraction in one bucket,
     // insert in another) + a delete, then vacuum — the manifest's
     // pinned old dirs must survive, the superseded ones go
@@ -1201,9 +1201,9 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // forced a full rebuild on EVERY refresh
     MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((2L, 20L, 200L)).toDF("ok", "ck", "price"))
-    MaterializeJoin.refresh(cat, path)
-    assert(!Materialize.LastRefresh.rebuildRan &&
-      Materialize.LastRefresh.affectedGroups >= 0,
+    val r = MaterializeJoin.refresh(cat, path)
+    assert(!r.rebuildRan &&
+      r.affectedGroups >= 0,
       "refresh with an empty side log must take the incremental " +
         "path, not rebuild (empty ≠ compacted)")
     assert(actual(path) == expected(cat))
@@ -1306,7 +1306,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       .toDF("ok", "ck", "pk2", "price"))
     cat.upsert("c", Seq((10L, "c")).toDF("ck", "seg"))
     cat.upsert("p", Seq((101L, "z")).toDF("pk2", "brand"))
-    val (vf, vs) = MaterializeJoin.refresh(cat, path)
+    val vf +: vs = MaterializeJoin.refresh(cat, path).marks
     // floored compaction at each table's own fold mark — the routine
     // maintenance job, MVs registered and all
     val before = Seq("f", "c", "p").map(cat.changeLogRaw(_).count()).sum
@@ -1322,8 +1322,8 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "ok", "ck", "pk2", "price"))
     cat.upsert("c", Seq((20L, "d")).toDF("ck", "seg"))
     cat.delete("p", col("pk2") === 100L)
-    MaterializeJoin.refresh(cat, path)
-    assert(!Materialize.LastRefresh.rebuildRan,
+    val r = MaterializeJoin.refresh(cat, path)
+    assert(!r.rebuildRan,
       "floors at the fold marks must NOT force a rebuild")
     assert(actual(path) == expectedN,
       "post-floored-compaction chain refresh diverged")
@@ -1331,8 +1331,8 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.compact("p")
     cat.upsert("f", Seq((6L, 30L, 101L, 3L)).toDF(
       "ok", "ck", "pk2", "price"))
-    MaterializeJoin.refresh(cat, path)
-    assert(Materialize.LastRefresh.rebuildRan,
+    val r2 = MaterializeJoin.refresh(cat, path)
+    assert(r2.rebuildRan,
       "full compaction of a chain table discards its fold history — " +
         "rebuild required")
     assert(actual(path) == expectedN)
@@ -1374,24 +1374,24 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // fires for exactly {a} — no NULL among V_seg, so the side's read
     // must carry the below-join IN-filter
     cat.delete("fo", col("k") === 2L)
-    MaterializeJoin.refresh(cat, path)
-    assert(Materialize.LastRefresh.recomputeRan,
+    val r = MaterializeJoin.refresh(cat, path)
+    assert(r.recomputeRan,
       "the max-crossing retraction must gate a recompute")
-    assert(Materialize.LastRefresh.recomputePushdown == Seq("so"),
+    assert(r.recomputePushdown == Seq("so"),
       "a fully-non-NULL affected set must push the IN-filter into " +
         s"the side's read, got " +
-        s"${Materialize.LastRefresh.recomputePushdown}")
+        s"${r.recomputePushdown}")
     assert(served == expected, "pushed recompute diverged")
     // delete the dangling fact (its group is NULL-seg): NULL is among
     // the affected seg values — re-labeling hazard — so the pushdown
     // must HOLD BACK
     cat.delete("fo", col("k") === 9L)
-    MaterializeJoin.refresh(cat, path)
-    assert(Materialize.LastRefresh.recomputeRan,
+    val r2 = MaterializeJoin.refresh(cat, path)
+    assert(r2.recomputeRan,
       "the NULL-group max retraction must gate a recompute")
-    assert(Materialize.LastRefresh.recomputePushdown.isEmpty,
+    assert(r2.recomputePushdown.isEmpty,
       "a NULL-attr affected group must hold the pushdown back, got " +
-        s"${Materialize.LastRefresh.recomputePushdown}")
+        s"${r2.recomputePushdown}")
     assert(served == expected, "held-back recompute diverged")
   }
 }

@@ -7,13 +7,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Materialize, MaterializeJoin}
+import graft.operators.{Materialize, MaterializeJoin, RefreshReport}
 import graft.sources.GraftCatalog
 
 /** The refresh contract both MV kinds share through one fold core:
-  * what [[Materialize.LastRefresh]] reports, the Spark jobs a plain
-  * incremental refresh runs, and the meta carrying a filtered MV's
-  * predicate across refreshes. */
+  * the [[graft.operators.RefreshReport]] each refresh returns, the
+  * Spark jobs a plain incremental refresh runs, and the meta carrying a
+  * filtered MV's predicate across refreshes. */
 class MvRefreshSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -51,10 +51,11 @@ class MvRefreshSpec extends AnyFunSuite {
     cat
   }
 
-  /** Spark jobs started while `f` runs: every job start is counted, and
-    * a marker job drains the listener bus (events arrive in order, so
-    * once the marker's start is seen every earlier job was counted). */
-  private def jobsOf(f: => Unit): Int = {
+  /** Spark jobs started while `f` runs, with its result: every job
+    * start is counted, and a marker job drains the listener bus (events
+    * arrive in order, so once the marker's start is seen every earlier
+    * job was counted). */
+  private def jobsOf[T](f: => T): (Int, T) = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger()
     val marker = new CountDownLatch(1)
@@ -68,15 +69,15 @@ class MvRefreshSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      f
+      val out = f
       sc.setJobGroup(markerGroup, "listener drain marker")
       sc.parallelize(Seq(1), 1).count()
       assert(marker.await(60, TimeUnit.SECONDS))
+      (jobs.get, out)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    jobs.get
   }
 
   test("single-table MV: a no-change refresh after a recomputing one " +
@@ -86,14 +87,14 @@ class MvRefreshSpec extends AnyFunSuite {
     Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
     // k=2 holds group a's max: its delete gates in a recompute
     cat.delete("t", col("k") === 2L)
-    Materialize.refresh(cat, "t", path)
-    assert(Materialize.LastRefresh.recomputeRan)
-    assert(Materialize.LastRefresh.affectedGroups == 1L)
-    Materialize.refresh(cat, "t", path)
-    assert(!Materialize.LastRefresh.recomputeRan,
+    val r = Materialize.refresh(cat, "t", path)
+    assert(r.recomputeRan)
+    assert(r.affectedGroups == 1L)
+    val r2 = Materialize.refresh(cat, "t", path)
+    assert(!r2.recomputeRan,
       "a no-change refresh must not report the previous recompute")
-    assert(Materialize.LastRefresh.affectedGroups == 0L)
-    assert(!Materialize.LastRefresh.rebuildRan)
+    assert(r2.affectedGroups == 0L)
+    assert(!r2.rebuildRan)
   }
 
   test("join MV: a no-change refresh after a recomputing one reports " +
@@ -103,14 +104,39 @@ class MvRefreshSpec extends AnyFunSuite {
     MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
     // ok=2 holds segment a's max price
     cat.delete("o", col("ok") === 2L)
-    MaterializeJoin.refresh(cat, path)
-    assert(Materialize.LastRefresh.recomputeRan)
-    assert(Materialize.LastRefresh.affectedGroups == 1L)
-    MaterializeJoin.refresh(cat, path)
-    assert(!Materialize.LastRefresh.recomputeRan,
+    val r = MaterializeJoin.refresh(cat, path)
+    assert(r.recomputeRan)
+    assert(r.affectedGroups == 1L)
+    val r2 = MaterializeJoin.refresh(cat, path)
+    assert(!r2.recomputeRan,
       "a no-change refresh must not report the previous recompute")
-    assert(Materialize.LastRefresh.affectedGroups == 0L)
-    assert(!Materialize.LastRefresh.rebuildRan)
+    assert(r2.affectedGroups == 0L)
+    assert(!r2.rebuildRan)
+  }
+
+  test("reports are per call: two refreshes running at once each " +
+      "describe their own MV") {
+    val recomputing = singleTable()
+    val recomputingMv = mvPath()
+    Materialize.build(recomputing, "t", Seq("g"), Seq("x"), recomputingMv)
+    // k=2 holds group a's max: its delete gates in a recompute
+    recomputing.delete("t", col("k") === 2L)
+    val idle = singleTable()
+    val idleMv = mvPath()
+    Materialize.build(idle, "t", Seq("g"), Seq("x"), idleMv)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val a = pool.submit[RefreshReport](() =>
+        Materialize.refresh(recomputing, "t", recomputingMv))
+      val b = pool.submit[RefreshReport](() =>
+        Materialize.refresh(idle, "t", idleMv))
+      val (ra, rb) = (a.get(120, TimeUnit.SECONDS),
+        b.get(120, TimeUnit.SECONDS))
+      assert(ra.recomputeRan && ra.affectedGroups == 1L,
+        s"the recomputing refresh's report: $ra")
+      assert(!rb.recomputeRan && rb.affectedGroups == 0L && !rb.rebuildRan,
+        s"the no-change refresh's report: $rb")
+    } finally pool.shutdownNow()
   }
 
   // Jobs per warm incremental refresh (insert + non-extremal update,
@@ -125,10 +151,10 @@ class MvRefreshSpec extends AnyFunSuite {
     Materialize.refresh(cat, "t", path) // warm: memos and caches filled
     cat.upsert("t", Seq((5L, "a", 12L), (7L, "a", 16L))
       .toDF("k", "g", "x"))
-    val jobs = jobsOf(Materialize.refresh(cat, "t", path))
-    assert(!Materialize.LastRefresh.recomputeRan)
+    val (jobs, r) = jobsOf(Materialize.refresh(cat, "t", path))
+    assert(!r.recomputeRan)
     assert(jobs == 10, s"jobs per single-table refresh: $jobs")
-    assert(jobsOf(Materialize.refresh(cat, "t", path)) == 0,
+    assert(jobsOf(Materialize.refresh(cat, "t", path))._1 == 0,
       "a no-change refresh runs no job")
     assert(Materialize.read(spark, path).orderBy("g")
       .select("g", "cnt", "sum_x", "min_x", "max_x").collect()
@@ -146,10 +172,10 @@ class MvRefreshSpec extends AnyFunSuite {
     cat.upsert("o", Seq((5L, 10L, 120L), (6L, 10L, 160L))
       .toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((30L, "c")).toDF("ck", "seg"))
-    val jobs = jobsOf(MaterializeJoin.refresh(cat, path))
-    assert(!Materialize.LastRefresh.recomputeRan)
+    val (jobs, r) = jobsOf(MaterializeJoin.refresh(cat, path))
+    assert(!r.recomputeRan)
     assert(jobs == 31, s"jobs per join refresh: $jobs")
-    assert(jobsOf(MaterializeJoin.refresh(cat, path)) == 0,
+    assert(jobsOf(MaterializeJoin.refresh(cat, path))._1 == 0,
       "a no-change refresh runs no job")
     assert(Materialize.read(spark, path).orderBy("seg")
       .select("seg", "cnt", "sum_price", "min_price", "max_price")

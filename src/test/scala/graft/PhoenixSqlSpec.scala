@@ -1646,6 +1646,30 @@ class PhoenixSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("REFRESH MATERIALIZED VIEW returns the refresh's report as one " +
+      "row") {
+    val px = fresh()
+    px.execute("CREATE TABLE RT (K BIGINT NOT NULL, SRC VARCHAR, " +
+      "X BIGINT CONSTRAINT PK PRIMARY KEY (K))")
+    px.execute("UPSERT INTO RT VALUES (1, 'a', 10), (2, 'a', 20), " +
+      "(3, 'b', 5)")
+    px.execute("CREATE MATERIALIZED VIEW RMV AS SELECT SRC, " +
+      "COUNT(*), SUM(X), MIN(X), MAX(X) FROM RT GROUP BY SRC")
+    def refresh() = {
+      val out = px.execute("REFRESH MATERIALIZED VIEW RMV")
+      assert(out.columns.toSeq == Seq("rebuild_ran", "recompute_ran",
+        "affected_groups", "buckets_touched", "buckets_total"))
+      val rows = out.collect()
+      assert(rows.length == 1)
+      rows.head.toSeq
+    }
+    // K=2 holds group a's max: its delete gates in a recompute
+    px.execute("DELETE FROM RT WHERE K = 2")
+    assert(refresh() == Seq(false, true, 1L, -1, 0))
+    // nothing changed since: nothing ran
+    assert(refresh() == Seq(false, false, 0L, -1, -1))
+  }
+
   test("SHOW MATERIALIZED VIEWS + FULL JOIN DDL: a full-outer MV " +
       "maintains through SQL and serves FULL OUTER queries only " +
       "(INNER refuses — it would drop the dangling rows)") {
@@ -1710,11 +1734,10 @@ class PhoenixSqlSpec extends AnyFunSuite {
       "FROM BF JOIN BD ON BF.CK = BD.CK GROUP BY SEG")
     // one-segment churn touches a strict subset of the 8 buckets
     px.execute("UPSERT INTO BF VALUES (100, 10, 5)")
-    px.execute("REFRESH MATERIALIZED VIEW BMV")
-    assert(Materialize.LastRefresh.bucketsTouched >= 1 &&
-      Materialize.LastRefresh.bucketsTouched < 8,
-      s"expected a touched-bucket slice, got " +
-        s"${Materialize.LastRefresh.bucketsTouched}/8")
+    val touched = px.execute("REFRESH MATERIALIZED VIEW BMV").head
+      .getAs[Int]("buckets_touched")
+    assert(touched >= 1 && touched < 8,
+      s"expected a touched-bucket slice, got $touched/8")
     val served = px.execute("SELECT SEG, SUM(X) AS SX FROM BF " +
       "JOIN BD ON BF.CK = BD.CK GROUP BY SEG ORDER BY SEG")
     assert(served.queryExecution.executedPlan.toString
@@ -1849,8 +1872,8 @@ class PhoenixSqlSpec extends AnyFunSuite {
       "superseded versions must be physically reclaimed")
     // post-compaction churn folds INCREMENTALLY and serves exactly
     px.execute("UPSERT INTO CF VALUES (2, 20, 55)")
-    px.execute("REFRESH MATERIALIZED VIEW CMV")
-    assert(!Materialize.LastRefresh.rebuildRan,
+    val report = px.execute("REFRESH MATERIALIZED VIEW CMV").head
+    assert(!report.getAs[Boolean]("rebuild_ran"),
       "COMPACT TABLE must keep registered MVs incremental")
     val served = px.execute("SELECT SEG, SUM(X) AS SX FROM CF " +
       "JOIN CD ON CF.CK = CD.CK GROUP BY SEG ORDER BY SEG")
@@ -2166,8 +2189,8 @@ class PhoenixSqlSpec extends AnyFunSuite {
     assert(mode.getString(1) == "floored",
       s"an API-registered MV must floor the compaction, got $mode")
     cat.upsert("at2", Seq((3L, "c", 8L)).toDF("id", "g", "x"))
-    graft.operators.Materialize.refresh(cat, "at2", mv2)
-    assert(!graft.operators.Materialize.LastRefresh.rebuildRan,
+    val r = graft.operators.Materialize.refresh(cat, "at2", mv2)
+    assert(!r.rebuildRan,
       "post-COMPACT refresh over an API-registered MV must stay " +
         "incremental — the derived floor covered its fold mark")
     // CASCADE: MV state + registration + dependency ledger + table

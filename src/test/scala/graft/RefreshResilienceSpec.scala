@@ -17,7 +17,8 @@ import graft.sources.GraftCatalog
   *    still succeeds with the exact expected state.
   *  - DIRECT STATE WRITE EQUIVALENCE: the driver-local parquet writer
   *    must produce files Spark reads back exactly like a distributed
-  *    write across every state-relevant type.
+  *    write across every state-relevant type, and must replace a
+  *    leftover target dir the way the distributed overwrite does.
   */
 class RefreshResilienceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -169,8 +170,8 @@ class RefreshResilienceSpec extends AnyFunSuite {
     // insert-only delta → no retraction, no recompute → the refresh
     // writes its touched buckets on the driver (tryDirect path)
     cat.upsert("tb", Seq(("e", 5L), ("f", 6L)).toDF("k", "v"))
-    Materialize.refresh(cat, "tb", mv)
-    assert(!Materialize.LastRefresh.recomputeRan)
+    val r = Materialize.refresh(cat, "tb", mv)
+    assert(!r.recomputeRan)
     val got = Materialize.read(spark, mv)
       .select("k", "cnt", "sum_v", "min_v", "max_v")
       .collect().map(canon).toSet
@@ -189,6 +190,89 @@ class RefreshResilienceSpec extends AnyFunSuite {
       val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
       assert(files.length == 1, s"expected 1 file in $d")
     }
+  }
+
+  /** Copy every file of the MV's live state dir into `target`, keeping
+    * the layout (`__b=` slices, `_schema`): the part files an earlier,
+    * crashed attempt of the next refresh left in the dir it targets. */
+  private def plantLiveState(mv: String, target: String): Unit = {
+    val live = java.nio.file.Paths.get(mv, spark.read.parquet(s"$mv/meta")
+      .head().getAs[String]("state_dir"))
+    val files = java.nio.file.Files.walk(live)
+    try files.filter(f => java.nio.file.Files.isRegularFile(f))
+      .forEach { f =>
+        val to = java.nio.file.Paths.get(target)
+          .resolve(live.relativize(f))
+        java.nio.file.Files.createDirectories(to.getParent)
+        java.nio.file.Files.copy(f, to)
+      }
+    finally files.close()
+  }
+
+  /** The served state equals the snapshot recompute, one row per
+    * group, and lives in `target` (so the planted files were there). */
+  private def assertExactState(mv: String, target: String,
+      got: Seq[Seq[Any]], want: Seq[Seq[Any]]): Unit = {
+    assert(spark.read.parquet(s"$mv/meta").head()
+      .getAs[String]("state_dir") == target.split('/').last)
+    assert(got.map(_.head).distinct.size == got.size,
+      s"duplicate groups served: $got")
+    assert(got.toSet == want.toSet)
+  }
+
+  test("a single-table refresh replaces leftover files in its target " +
+      "state dir") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("tl", StructType(Seq(
+      StructField("k", StringType), StructField("v", LongType))),
+      pk = Seq("k"))
+    cat.upsert("tl", Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v"))
+    val mv = java.nio.file.Files
+      .createTempDirectory("graft_rrleft").toString
+    Materialize.build(cat, "tl", Seq("k"), Seq("v"), mv)
+    cat.upsert("tl", Seq(("a", 5L), ("d", 7L)).toDF("k", "v"))
+    val target = s"$mv/state_v${cat.currentVersion("tl")}"
+    plantLiveState(mv, target)
+    Materialize.refresh(cat, "tl", mv)
+    val cols = Seq("k", "cnt", "sum_v", "min_v", "max_v")
+    assertExactState(mv, target,
+      Materialize.read(spark, mv).select(cols.map(col): _*).collect()
+        .map(canon).toSeq,
+      Materialize.aggregate(cat.snapshot("tl"), Seq("k"), Seq("v"))
+        .select(cols.map(col): _*).collect().map(canon).toSeq)
+  }
+
+  test("a bucketed join refresh replaces leftover files in its target " +
+      "state dir") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("lo", StructType(Seq(StructField("ok", LongType),
+      StructField("ck", LongType), StructField("price", LongType))),
+      pk = Seq("ok"))
+    cat.createTable("lc", StructType(Seq(StructField("ck", LongType),
+      StructField("seg", StringType))), pk = Seq("ck"))
+    cat.upsert("lo", Seq((1L, 10L, 100L), (2L, 10L, 200L),
+      (3L, 20L, 300L)).toDF("ok", "ck", "price"))
+    cat.upsert("lc", Seq((10L, "a"), (20L, "b")).toDF("ck", "seg"))
+    val mv = java.nio.file.Files
+      .createTempDirectory("graft_rrleftj").toString
+    MaterializeJoin.build(cat, MaterializeJoin.ChainSpec("lo",
+      Seq(MaterializeJoin.SideSpec("lc", Seq("ck")))), Seq("seg"),
+      Seq("price"), mv, buckets = 4)
+    // insert-only into an existing group: its bucket is rewritten
+    cat.upsert("lo", Seq((5L, 10L, 120L)).toDF("ok", "ck", "price"))
+    val target = s"$mv/state_v${cat.currentVersion("lo")}_" +
+      s"${cat.currentVersion("lc")}"
+    plantLiveState(mv, target)
+    MaterializeJoin.refresh(cat, mv)
+    val cols = Seq("seg", "cnt", "sum_price", "min_price", "max_price")
+    assertExactState(mv, target,
+      Materialize.read(spark, mv).select(cols.map(col): _*).collect()
+        .map(canon).toSeq,
+      Materialize.aggregate(cat.snapshot("lo").join(cat.snapshot("lc"),
+        "ck"), Seq("seg"), Seq("price"))
+        .select(cols.map(col): _*).collect().map(canon).toSeq)
   }
 
   test("overwriteSmall replaces the meta dir contents in place") {
