@@ -852,8 +852,7 @@ object ScaleRehearsal {
         require(r.bucketsTouched <= 8 && r.bucketsTotal == b,
           s"bucketed refresh must touch <=8 of $b buckets, got " +
             s"${r.bucketsTouched}")
-      val nd = graft.operators.MvMeta.decode(
-        spark.read.parquet(s"$mv/meta").head()).stateDir
+      val nd = graft.operators.MvMeta.read(spark, mv).stateDir
       (sec, dirMb(s"$mv/$nd"))
     }
     // two refreshes (disjoint 8-group deltas), best-of-2 seconds —

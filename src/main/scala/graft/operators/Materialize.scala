@@ -307,7 +307,7 @@ object Materialize {
       derive: DataFrame => DataFrame = NoDerive,
       topks: Seq[(String, Int)] = Seq.empty,
       filterSql: Option[String] = None): Long = {
-    val spark = cat.changeLog(table).sparkSession
+    val spark = cat.session
     // sample the clock BEFORE constructing the snapshot: its TTL cutoff
     // is evaluated at plan-construction time, and stamping meta with a
     // LATER clock would start the next refresh's expiry window past
@@ -473,7 +473,7 @@ object Materialize {
       path: String,
       dims: Seq[graft.plans.GraftAggViews.DimJoinDef] = Seq.empty)
       : Unit = {
-    val spark = cat.changeLog(table).sparkSession
+    val spark = cat.session
     val meta = MvMeta.read(spark, path)
     val fps = meta.single.dimFp
     // a star MV's groups are dim attributes the bare table scan cannot
@@ -671,7 +671,7 @@ object Materialize {
 
   private def refreshOnce(cat: GraftCatalog, table: String, path: String,
       derive: DataFrame => DataFrame = NoDerive): RefreshReport = {
-    val spark = cat.changeLog(table).sparkSession
+    val spark = cat.session
     val meta = MvMeta.read(spark, path)
     val sm = meta.single
     val lastV = sm.lastVersion

@@ -284,11 +284,6 @@ object GraftAggViews {
     .toOption.filter(_.nonEmpty).getOrElse(p).stripSuffix("/")
 
   val DisabledConf = "spark.graft.aggRewrite.disabled"
-
-  /** A [[graft.sources.GraftCatalog]] snapshot-cache leaf path
-    * (`<tableRoot>/_snapcache/v<N>`): group 1 is the table root the
-    * registration keys on. */
-  private[plans] val snapCacheRe = "^(.*)/_snapcache/v\\d+$".r
 }
 
 case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -313,11 +308,10 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(meta)) Seq(p)
     else {
-      val m = spark.read.parquet(meta.toString).head()
       // one dir (legacy) or the manifest's per-bucket leaf dirs
       // (bucket-manifested state — refresh rewrites only touched
       // buckets, so the current state is the union of pinned leafs)
-      graft.operators.MvMeta.decode(m).statePaths(p)
+      graft.operators.MvMeta.read(spark, p).statePaths(p)
     }
   }.toOption
 
@@ -533,8 +527,7 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // back to the STABLE table root so registrations key on the table,
     // not on a directory that changes under them. Only the exact cache
     // shape maps; any other path is used as-is.
-    val path = GraftAggViews.snapCacheRe.findFirstMatchIn(path0)
-      .map(_.group(1)).getOrElse(path0)
+    val path = graft.sources.GraftCatalog.tableRootOf(path0)
     // candidates coarsest-first; the first that ANSWERS serves the
     // query — MV selection, the aggregate-side analog of the
     // reference's multi-index choice
@@ -589,8 +582,7 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // a catalog dim served through its snapshot cache scans
       // `<dimRoot>/_snapcache/v<N>` — map back to the stable root, the
       // same normalization the fact side gets in rewrite()
-      val qjPath = GraftAggViews.snapCacheRe.findFirstMatchIn(qj.dimPath)
-        .map(_.group(1)).getOrElse(qj.dimPath)
+      val qjPath = graft.sources.GraftCatalog.tableRootOf(qj.dimPath)
       view.dims.find { d =>
         GraftAggViews.norm(d.dimPath) == GraftAggViews.norm(qjPath) && {
           // each conjunct: equality between one dim column of THIS

@@ -16,8 +16,8 @@ import scala.jdk.CollectionConverters._
   *  - every write is an append-only batch stamped with a monotonically
   *    increasing `_version` (the change log — also the CDC source, §2.9);
   *  - `snapshot` collapses the log to latest-write-wins per PK and drops
-  *    tombstones — a window partitioned BY THE KEY, so the collapse
-  *    shuffles once on the PK and scales horizontally;
+  *    tombstones — a groupBy on the key with a `max_by` winner, whose
+  *    map-side partial aggregate keeps the one shuffle key-space-sized;
   *  - `SALT_BUCKETS` & co. are accepted and ignored (Spark's shuffle
   *    subsumes salting; reference cc/schema/SaltingUtil.java).
   *
@@ -72,16 +72,14 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // generation may have compacted it, and the fallback derives that
     if (!new java.io.File(s"${dir(name)}/data").exists() &&
         !floorFile(name).exists())
-      writeFloorFile(name, -1L)
+      writeMark(floorFile(name), -1L)
     spec
   }
 
   /** TTL validates at DDL time like the reference (TableProperty.TTL):
     * a positive second count, or FOREVER / NONE for no expiry. */
   private def validateProps(props: Map[String, String]): Unit =
-    props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("TTL") => v
-    }.foreach { v =>
+    prop(props, "TTL").foreach { v =>
       // Try absorbs the toLong overflow of an absurd digit string — the
       // designed IllegalArgumentException must fire, not a raw
       // NumberFormatException from inside the check
@@ -108,6 +106,16 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       newProps.keys.exists(_.equalsIgnoreCase(k)) }
     specs(name) = s.copy(props = kept ++ newProps)
   }
+
+  /** A property's value, its key matched case-insensitively. */
+  private def prop(props: Map[String, String], key: String): Option[String] =
+    props.collectFirst { case (k, v) if k.equalsIgnoreCase(key) => v }
+
+  /** A table property holding a positive count (`TTL` seconds,
+    * `SNAPSHOT_CACHE_BATCHES`); `None` when absent or not positive. */
+  private def positiveProp(name: String, key: String): Option[Long] =
+    prop(spec(name).props, key)
+      .flatMap(v => scala.util.Try(v.toLong).toOption).filter(_ > 0)
 
   def spec(name: String): TableSpec = specs.getOrElse(name,
     throw new IllegalArgumentException(
@@ -248,19 +256,15 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 
   /** Every registered MV's fold mark for `table` — what COMPACT TABLE
     * needs: `compact(table, keepAfter = min(marks))` keeps every
-    * registered MV incrementally refreshable. Reads each state's meta
-    * (self-describing: single-table metas carry `last_version`, chain
-    * metas `fact`/`side_tables` + `last_vf`/`last_vs`). */
+    * registered MV incrementally refreshable. Reads each state's meta:
+    * a single-table MV's mark, or the chain mark of `table`'s role. */
   private[graft] def mvFoldMarks(table: String): Seq[Long] =
     mvDependents(table).map { p =>
-      val m = spark.read.parquet(s"$p/meta").head()
-      if (m.schema.fieldNames.contains("last_version"))
-        m.getAs[Long]("last_version")
-      else if (m.getAs[String]("fact") == table)
-        m.getAs[Long]("last_vf")
-      else {
-        val sides = m.getSeq[String](m.fieldIndex("side_tables"))
-        m.getSeq[Long](m.fieldIndex("last_vs"))(sides.indexOf(table))
+      graft.operators.MvMeta.read(spark, p).kind match {
+        case s: graft.operators.MvMeta.Single => s.lastVersion
+        case j: graft.operators.MvMeta.Join =>
+          if (j.chain.fact == table) j.lastVf
+          else j.lastVs(j.chain.sides.map(_.table).indexOf(table))
       }
     }
 
@@ -363,8 +367,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * the version is an empty gap the counter may step over — gaps only
     * overestimate the tail-batch count the cache threshold reads).
     * Publishes the highest version with no smaller reservation still
-    * in flight; written temp-then-atomic-move so a reader never sees a
-    * torn counter file. */
+    * in flight ([[writeMark]]: a reader never sees a torn counter). */
   private def publishVersion(name: String, v: Long): Unit =
     versionLock.synchronized {
       val fl = inFlight(name)
@@ -376,12 +379,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       foreignBumpCheck(name, currentVersion(name))
       val publishable = if (fl.isEmpty) reservedHigh(name) else fl.head - 1L
       if (publishable > currentVersion(name)) {
-        val f = versionFile(name)
-        val tmp = new java.io.File(f.getParentFile, s".${f.getName}.tmp")
-        java.nio.file.Files.write(tmp.toPath, publishable.toString.getBytes)
-        java.nio.file.Files.move(tmp.toPath, f.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        writeMark(versionFile(name), publishable)
         publishedByUs(name) = publishable
       }
     }
@@ -422,7 +420,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   def upsert(name: String, df: DataFrame): Long =
     GraftCatalog.OpTiming.timed {
       val v = versionedWrite(name)(appendUpsert(name, df, _))
-      maybeRefreshSnapCache(name, v)
+      refreshSnapCacheIfDue(name)
       v
     }
 
@@ -508,25 +506,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
         .withColumn("_ts", lit(batchTs()))
         .write.mode(SaveMode.Append).parquet(s"${dir(name)}/data")
     }
-    maybeRefreshSnapCache(name, v)
+    refreshSnapCacheIfDue(name)
     v
     }
-
-  /** Auto-refresh policy (opt-in per table): with property
-    * `SNAPSHOT_CACHE_BATCHES=n`, a write that leaves ≥ n tail batches
-    * beyond the current cache (or since the table's first version when
-    * none exists) rebuilds the cache — the compaction-threshold idiom,
-    * minus the history loss. Versions are sequential per write, so the
-    * version delta IS the tail batch count. */
-  private def maybeRefreshSnapCache(name: String, justWrote: Long): Unit =
-    spec(name).props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("SNAPSHOT_CACHE_BATCHES") => v
-    }.flatMap(v => scala.util.Try(v.toLong).toOption).filter(_ > 0)
-      .foreach { n =>
-        if (!hasRowTimestamp(name) &&
-            justWrote - snapCacheVersion(name).getOrElse(-1L) >= n)
-          refreshSnapshotCache(name)
-      }
 
   /** Full change log (the CDC source): every write of every version. Reads
     * the physical schema (generation-suffixed columns) and renames back to
@@ -541,10 +523,11 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // without them (the major-compaction purge).
     ttlFiltered(name, changeLogRaw(name))
 
-  /** The read-time TTL filter (shared by [[changeLog]] and the cached
-    * [[servingLog]]). Legacy NULL stamps never expire. The cutoff comes
-    * from the injectable catalog [[clock]] (not `current_timestamp()`)
-    * so every read path — and [[graft.operators.Materialize.refresh]]'s
+  /** The read-time TTL filter (shared by [[changeLog]], the cached
+    * [[servingLog]] and [[cdcStream]]). Legacy NULL stamps never
+    * expire. The cutoff comes from the injectable catalog [[clock]]
+    * (not `current_timestamp()`) so every read path — and
+    * [[graft.operators.Materialize.refresh]]'s
     * expiry-retraction window — agrees on ONE notion of now; it folds
     * to a literal, so the filter is scan-local and pushdown-eligible. */
   private def ttlFiltered(name: String, df: DataFrame): DataFrame =
@@ -585,9 +568,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   /** TTL seconds if the table declares a finite one (`TTL=<seconds>`;
     * FOREVER/NONE mean no expiry, as in the reference). */
   private[graft] def ttlSeconds(name: String): Option[Long] =
-    spec(name).props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("TTL") => v
-    }.flatMap(v => scala.util.Try(v.toLong).toOption).filter(_ > 0)
+    positiveProp(name, "TTL")
 
   /** Physical (generation-suffixed) counterpart of [[logSchema]]. */
   private def physSchema(name: String): StructType =
@@ -607,14 +588,14 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       StructField("_deleted", BooleanType, nullable = false) :+
       StructField("_ts", TimestampType, nullable = true))
 
-  /** Wall-clock stamp for the batch being written — the engine's analog of
-    * the HBase cell timestamp (one value per batch: Phoenix commits a
-    * mutation batch at one server timestamp). Backs PHOENIX_ROW_TIMESTAMP.
-    * Batches written before this column existed read back NULL. */
   /** Wall clock for batch stamps — swappable in tests to back-date
     * writes (TTL expiry, as-of reads) without real sleeps. */
   private[graft] var clock: () => Long = () => System.currentTimeMillis()
 
+  /** Wall-clock stamp for the batch being written — the engine's analog of
+    * the HBase cell timestamp (one value per batch: Phoenix commits a
+    * mutation batch at one server timestamp). Backs PHOENIX_ROW_TIMESTAMP.
+    * Batches written before this column existed read back NULL. */
   private def batchTs(): java.sql.Timestamp =
     new java.sql.Timestamp(clock())
 
@@ -636,17 +617,41 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   // refuse the cache). Tombstone winners are safe to drop: any tail
   // row outranks every cached row, and a PK absent from both is absent
   // from the snapshot either way.
+  //
+  // Every read below composes three primitives: [[cacheMark]] (may a
+  // cache serve, and at which mark), [[servingLog]] (the log slice a
+  // read point sees, through the cache when it can serve) and
+  // [[collapseLog]] (the last-wins collapse), narrowed by [[declared]].
 
-  private def snapCacheRoot(name: String) = s"${dir(name)}/_snapcache"
+  private def snapCacheRoot(name: String) =
+    GraftCatalog.snapCacheRoot(dir(name))
 
   private def hasRowTimestamp(name: String): Boolean =
     allFields(name).exists(_.metadata.contains(GraftCatalog.RowTimestampKey))
 
+  /** The built cache dirs, by mark. */
+  private def cacheDirs(name: String): Seq[(Long, java.io.File)] =
+    Option(new java.io.File(snapCacheRoot(name)).listFiles()).toSeq.flatten
+      .filter(_.isDirectory)
+      .flatMap(f => GraftCatalog.snapCacheMark(f.getPath).map(_ -> f))
+
   /** High-water version of the current cache, if one exists. */
   private[graft] def snapCacheVersion(name: String): Option[Long] =
-    Option(new java.io.File(snapCacheRoot(name)).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(_.getName.drop(1).toLong).maxOption
+    cacheDirs(name).map(_._1).maxOption
+
+  /** The one cache-eligibility test: the mark the table's cache covers
+    * through (`-1` while none is built), or `None` for a table that may
+    * not use a cache (a ROW_TIMESTAMP column breaks the correctness
+    * bound above). */
+  private def cacheMark(name: String): Option[Long] =
+    if (hasRowTimestamp(name)) None
+    else Some(snapCacheVersion(name).getOrElse(-1L))
+
+  /** The cache built at mark `v`, in logical column names, TTL not
+    * applied — the one scan of a `_snapcache/v<N>` dir. */
+  private def cacheScan(name: String, v: Long): DataFrame =
+    toLogical(name, spark.read.schema(physSchema(name))
+      .parquet(GraftCatalog.snapCacheLeaf(dir(name), v)))
 
   /** Build/refresh the serving cache at the current high-water mark.
     * Flip-don't-overwrite (same rule as compact/MV state): build under
@@ -676,8 +681,8 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // collapse BOUNDED at the sampled mark: a write landing between the
     // counter sample and this scan would otherwise leak rows with
     // `_version > v` into the cache directory labeled v — and
-    // servingLogUpTo's cache-plus-tail union relies on "no cache row
-    // sits above the cache's mark" for its consistent-window reads.
+    // servingLog's cache-plus-tail union relies on "no cache row sits
+    // above the cache's mark" for its consistent-window reads.
     //
     // INCREMENTAL rebuild (guide §1.2; VERDICT r16 #3): with a prior
     // cache at V0 < v, the new cache is collapse(cache_V0 ∪ tail
@@ -687,44 +692,49 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // absent from the cache and stays absent unless the tail
     // resurrects it, exactly as the full collapse would conclude. So
     // a tail-batch refresh re-collapses cache+delta instead of the
-    // whole history — the deep-log case this cache exists for.
+    // whole history — the deep-log case this cache exists for. The
+    // source is the RAW log (no TTL filter): reads apply TTL from the
+    // current spec, so a later ALTER SET TTL governs cached rows too.
     val source = prior match {
       case Some(v0) if v0 < v =>
-        val cached = toLogical(name,
-          spark.read.schema(physSchema(name))
-            .parquet(s"${snapCacheRoot(name)}/v$v0"))
-        cached.unionByName(
+        cacheScan(name, v0).unionByName(
           changeLogRaw(name).where(col("_version") > v0 &&
             col("_version") <= v))
       case _ => changeLogRaw(name).where(col("_version") <= v)
     }
-    val winners = collapseKeepMeta(name, source)
-      .where(!col("_deleted"))
-    val cols = allFields(name).map(f => col(f.name)) ++
-      Seq(col("_version"), lit(false).as("_deleted"), col("_ts"))
     val tmp = new java.io.File(s"${snapCacheRoot(name)}/_build_v$v")
-    toPhysical(name, winners.select(cols: _*))
+    toPhysical(name, collapseLog(name, source, "_version", "_deleted", "_ts"))
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val dest = new java.io.File(s"${snapCacheRoot(name)}/v$v")
+    val dest = new java.io.File(GraftCatalog.snapCacheLeaf(dir(name), v))
     if (dest.exists()) rmTree(dest)
     if (!tmp.renameTo(dest))
       throw new java.io.IOException(
         s"refreshSnapshotCache($name): cannot move cache into place")
-    Option(new java.io.File(snapCacheRoot(name)).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-        f.getName.drop(1).toLong < v)
-      .foreach(rmTree)
+    cacheDirs(name).collect { case (m, f) if m < v => f }.foreach(rmTree)
     v
   }
 
   /** The version counter's current value (the log's high-water mark)
     * without a data scan — upsert/delete bump the counter file, so a
     * freshness probe is one tiny local read, not a footer sweep. */
-  private[graft] def currentVersion(name: String): Long = {
-    val f = versionFile(name)
+  private[graft] def currentVersion(name: String): Long =
+    readMark(versionFile(name)).getOrElse(-1L)
+
+  /** A catalog marker file's number (`_latest_version`,
+    * `_compacted_below`); `None` while the file is absent. */
+  private def readMark(f: java.io.File): Option[Long] =
     if (f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath)).trim.toLong
-    else -1L
+      Some(new String(java.nio.file.Files.readAllBytes(f.toPath)).trim.toLong)
+    else None
+
+  /** Replace a marker file: temp file, then an atomic move, so a reader
+    * never sees a torn value. */
+  private def writeMark(f: java.io.File, v: Long): Unit = {
+    val tmp = new java.io.File(f.getParentFile, s".${f.getName}.tmp")
+    java.nio.file.Files.write(tmp.toPath, v.toString.getBytes)
+    java.nio.file.Files.move(tmp.toPath, f.toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Snapshot for SERVING reads: when the snapshot cache is EXACTLY
@@ -739,14 +749,10 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * ordinary [[snapshot]] collapse — always correct, just not
     * rewrite-servable. */
   def snapshotServed(name: String): DataFrame = {
-    autoRefreshSnapCache(name)
-    snapCacheVersion(name) match {
-      case Some(v) if !hasRowTimestamp(name) && v == currentVersion(name) =>
-        val cache = toLogical(name, spark.read.schema(physSchema(name))
-          .parquet(s"${snapCacheRoot(name)}/v$v"))
-        ttlFiltered(name, cache)
-          .select(spec(name).schema.fieldNames.map(col): _*)
-      case _ => snapshot(name)
+    refreshSnapCacheIfDue(name)
+    cacheMark(name).filter(v => v >= 0 && v == currentVersion(name)) match {
+      case Some(v) => declared(name, ttlFiltered(name, cacheScan(name, v)))
+      case None => snapshot(name)
     }
   }
 
@@ -769,45 +775,67 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     if (d.exists()) rmTree(d)
   }
 
-  /** What collapsing reads flow through: the cached collapsed snapshot
-    * plus the uncompacted tail when a cache exists, the full change log
-    * otherwise. TTL-filtered HERE (cache rows keep `_ts`), so a later
-    * ALTER SET TTL governs cached rows exactly like logged ones. */
-  /** READ-path auto-refresh (the write-side hook only sees writes THIS
-    * process performs with the property already set): a table whose
-    * SNAPSHOT_CACHE_BATCHES threshold is exceeded by the uncached tail
-    * rebuilds the cache once at the next read, so subsequent reads scan
-    * cache + empty tail instead of re-collapsing an ever-growing tail
-    * forever. The probe is O(1) (version-counter file + cache dir
+  /** Auto-refresh policy (opt-in per table): with property
+    * `SNAPSHOT_CACHE_BATCHES=n`, a table that has ≥ n batches beyond
+    * the current cache (or since its first version when none exists)
+    * rebuilds the cache — the compaction-threshold idiom, minus the
+    * history loss. Versions are sequential per write, so the version
+    * delta IS the tail batch count. Runs after every write and before
+    * every current read: the write hook only sees writes THIS process
+    * performs with the property already set, so the read hook rebuilds
+    * once at the next read instead of re-collapsing an ever-growing
+    * tail forever. The probe is O(1) (version-counter file + cache dir
     * listing); single-writer contract, like every cache mutation. */
-  private def autoRefreshSnapCache(name: String): Unit =
-    spec(name).props.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("SNAPSHOT_CACHE_BATCHES") => v
-    }.flatMap(v => scala.util.Try(v.toLong).toOption).filter(_ > 0)
-      .foreach { n =>
-        if (!hasRowTimestamp(name) &&
-            currentVersion(name) -
-              snapCacheVersion(name).getOrElse(-1L) >= n)
-          refreshSnapshotCache(name)
-      }
+  private def refreshSnapCacheIfDue(name: String): Unit =
+    positiveProp(name, "SNAPSHOT_CACHE_BATCHES").foreach { n =>
+      if (cacheMark(name).exists(currentVersion(name) - _ >= n))
+        refreshSnapshotCache(name)
+    }
 
-  private[graft] def servingLog(name: String): DataFrame = {
-    autoRefreshSnapCache(name)
-    snapCacheVersion(name) match {
-      case Some(v) if !hasRowTimestamp(name) =>
-        val cache = toLogical(name,
-          spark.read.schema(physSchema(name))
-            .parquet(s"${snapCacheRoot(name)}/v$v"))
-        // defensive `<= v` bound, same reason as [[servingLogUpTo]]: a
-        // cache row above its own label would double-count against the
-        // tail this union appends
+  /** What collapsing reads flow through: the `_version <= upTo` slice
+    * of the change log (the whole log when `upTo` is `None`). A cache
+    * at a mark at or below the read point serves it as cache ∪ tail —
+    * cache rows keep their original `_version`, so the union collapses
+    * to exactly the full log's slice; a cache AHEAD of the read point
+    * may have discarded versions the slice needs, so the read falls
+    * back to the full change log. TTL-filtered HERE (cache rows keep
+    * `_ts`), so a later ALTER SET TTL governs cached rows exactly like
+    * logged ones. Only a current read (`upTo = None`) auto-refreshes
+    * the cache: a refresh mid-plan could rotate it PAST a read point. */
+  private[graft] def servingLog(name: String,
+      upTo: Option[Long] = None): DataFrame = {
+    if (upTo.isEmpty) refreshSnapCacheIfDue(name)
+    cacheMark(name).filter(cv => cv >= 0 && upTo.forall(cv <= _)) match {
+      case Some(cv) =>
+        // `_version <= bound` on the cache side too: the build bounds
+        // its collapse at the labeled mark, but a cache written by an
+        // earlier generation could carry rows above it — a literal
+        // filter costs nothing and keeps the window sound either way
+        val tail = col("_version") > cv
         ttlFiltered(name,
-          cache.where(col("_version") <= lit(v))
-            .unionByName(changeLogRaw(name)
-              .where(col("_version") > v)))
-      case _ => changeLog(name)
+          cacheScan(name, cv).where(col("_version") <= upTo.getOrElse(cv))
+            .unionByName(changeLogRaw(name).where(
+              upTo.fold(tail)(u => tail && col("_version") <= u))))
+      case None =>
+        upTo.fold(changeLog(name))(u =>
+          changeLog(name).where(col("_version") <= u))
     }
   }
+
+  /** The alive per-PK winners of `log` — [[collapseKeepMeta]] minus
+    * tombstone winners — with every column (view extensions included)
+    * followed by the `meta` columns asked for. */
+  private def collapseLog(name: String, log: DataFrame,
+      meta: String*): DataFrame =
+    collapseKeepMeta(name, log)
+      .where(!col("_deleted"))
+      .select((allFields(name).map(_.name) ++ meta).map(col): _*)
+
+  /** `df` narrowed to the table's DECLARED columns, then `extra` —
+    * columns added by views are visible only through the view. */
+  private def declared(name: String, df: DataFrame,
+      extra: org.apache.spark.sql.Column*): DataFrame =
+    df.select(spec(name).schema.fieldNames.map(col) ++ extra: _*)
 
   /** Snapshot with view-extension columns included (what views read).
     *
@@ -820,14 +848,6 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * to any value, as with the window's DESC NULLS LAST). */
   def snapshotFull(name: String): DataFrame =
     collapseLog(name, servingLog(name))
-
-  /** Last-wins collapse of a (possibly filtered) change log slice. */
-  private def collapseLog(name: String, log: DataFrame): DataFrame = {
-    val fields = allFields(name)
-    collapseKeepMeta(name, log)
-      .where(!col("_deleted"))
-      .select(fields.map(f => col(f.name)): _*)
-  }
 
   /** The ONE winner-per-PK collapse every read path derives from,
     * KEEPING the winner's `_deleted` / `_ts` / `_version` — so the
@@ -855,25 +875,21 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * `__p_<pk>`): the change log is semi-joined on the PK BEFORE the
     * collapse, so the collapse shuffle carries only the matching PKs'
     * history — [[graft.operators.Materialize.refresh]]'s affected-group
-    * recompute reads affected-PK history, not the keyspace. */
-  /** `scanFilter` (optional) pre-filters the log BEFORE the semi-join —
+    * recompute reads affected-PK history, not the keyspace.
+    * `scanFilter` (optional) pre-filters the log BEFORE the semi-join —
     * callers pass a proven superset of the pks' rows (e.g. a PK zone
     * bound) so parquet row-group stats can prune the scan; `lit(true)`
-    * keeps the plain shape. */
-  /** `uptoV` (optional) bounds the read at a sampled version mark
-    * ([[servingLogUpTo]]) — the consistent-window IVM recompute reads
-    * affected groups as of the marks it records, so a write landing
-    * mid-refresh folds exactly once in the next one. */
+    * keeps the plain shape. `uptoV` (optional) bounds the read at a
+    * sampled version mark ([[servingLog]]) — the consistent-window IVM
+    * recompute reads affected groups as of the marks it records, so a
+    * write landing mid-refresh folds exactly once in the next one. */
   private[graft] def snapshotForPks(name: String, pks: DataFrame,
       scanFilter: org.apache.spark.sql.Column = lit(true),
       uptoV: Option[Long] = None): DataFrame = {
-    val s = spec(name)
-    val cond = s.pk.map(c => col(c) <=> col(s"__p_$c")).reduce(_ && _)
-    val log = uptoV.map(servingLogUpTo(name, _))
-      .getOrElse(servingLog(name))
-    collapseLog(name,
-        log.where(scanFilter).join(pks, cond, "left_semi"))
-      .select(s.schema.fieldNames.map(col): _*)
+    val cond = spec(name).pk.map(c => col(c) <=> col(s"__p_$c"))
+      .reduce(_ && _)
+    declared(name, collapseLog(name,
+      servingLog(name, uptoV).where(scanFilter).join(pks, cond, "left_semi")))
   }
 
   /** Point-in-time snapshot by write version — the engine's analog of
@@ -893,28 +909,23 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * that history to per-PK winners, so the read returns the
     * floor-collapsed approximation (the same forfeiture full
     * compaction always implied); the StarDerive pin fingerprints catch
-    * the one consumer for whom that silently mattered. */
+    * the one consumer for whom that silently mattered. Reads the
+    * uncached log: it is the reference [[snapshotUpTo]] is checked
+    * against. */
   def snapshotAsOf(name: String, asOfVersion: Long): DataFrame =
-    collapseLog(name,
-        changeLog(name).where(col("_version") <= asOfVersion))
-      .select(spec(name).schema.fieldNames.map(col): _*)
+    declared(name,
+      collapseLog(name, changeLog(name).where(col("_version") <= asOfVersion)))
 
   /** [[snapshotAsOf]] accelerated through the snapshot cache when the
-    * cache's high-water mark is AT OR BELOW the read point (cache rows
-    * keep their original `_version`, so `cache ∪ tail(cacheV, v]`
-    * collapses to exactly the full log's `<= v` slice — a cache AHEAD
-    * of the read point may have discarded versions the slice needs and
-    * falls back to the full-log collapse). This is the read the
-    * consistent-window IVM fold uses for its NEW factors: refresh
-    * samples every table's high-water mark ONCE, then reads every
-    * factor as of those marks, so a write landing mid-refresh is
-    * excluded now and folded exactly once by the next refresh (which
-    * starts from the recorded marks). Unlike [[snapshotServed]] this
-    * never auto-refreshes the cache — a refresh mid-plan could rotate
-    * the cache PAST the read point. */
+    * cache's high-water mark is AT OR BELOW the read point (see
+    * [[servingLog]]). This is the read the consistent-window IVM fold
+    * uses for its NEW factors: refresh samples every table's high-water
+    * mark ONCE, then reads every factor as of those marks, so a write
+    * landing mid-refresh is excluded now and folded exactly once by the
+    * next refresh (which starts from the recorded marks). Unlike
+    * [[snapshotServed]] this never auto-refreshes the cache. */
   private[graft] def snapshotUpTo(name: String, v: Long): DataFrame =
-    collapseLog(name, servingLogUpTo(name, v))
-      .select(spec(name).schema.fieldNames.map(col): _*)
+    declared(name, collapseLog(name, servingLog(name, Some(v))))
 
   /** Per-PK collapse winners at TWO version marks (`lo <= hi`) from ONE
     * pass over a single bounded log read — the fused form of two
@@ -939,11 +950,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       scanFilter: org.apache.spark.sql.Column = lit(true)): DataFrame = {
     val s = spec(name)
     val nonPk = allFields(name).map(_.name).filterNot(s.pk.contains)
-    val log = (snapCacheVersion(name) match {
-      case Some(cv) if !hasRowTimestamp(name) && cv <= lo =>
-        servingLogUpTo(name, hi)
-      case _ => changeLog(name).where(col("_version") <= hi)
-    }).where(scanFilter)
+    val log =
+      (if (cacheMark(name).exists(_ <= lo)) servingLog(name, Some(hi))
+       else changeLog(name).where(col("_version") <= hi)).where(scanFilter)
     val ordPay = struct((col("_version") +: nonPk.map(col)) ++
       cols.map(c => col(c).as(s"__p_$c")) :+
       col("_deleted").as("__del"): _*)
@@ -951,25 +960,6 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       .agg(max(when(col("_version") <= lo, ordPay)).as("_wo"),
         max(ordPay).as("_wn"))
   }
-
-  /** The `_version <= v` slice of the change log, served through the
-    * snapshot cache when the cache's mark is at or below `v` (see
-    * [[snapshotUpTo]] for why a cache AHEAD of the read point cannot
-    * serve the slice). Never auto-refreshes the cache. */
-  private[graft] def servingLogUpTo(name: String, v: Long): DataFrame =
-    snapCacheVersion(name) match {
-      case Some(cv) if !hasRowTimestamp(name) && cv <= v =>
-        val cache = toLogical(name, spark.read.schema(physSchema(name))
-          .parquet(s"${snapCacheRoot(name)}/v$cv"))
-        // `_version <= v` on the cache side too: the build now bounds
-        // its collapse at the labeled mark, but a cache written by an
-        // earlier generation could carry rows above it — a literal
-        // filter costs nothing and keeps the window sound either way
-        ttlFiltered(name, cache.where(col("_version") <= lit(v))
-          .unionByName(changeLogRaw(name)
-            .where(col("_version") > cv && col("_version") <= v)))
-      case _ => changeLog(name).where(col("_version") <= v)
-    }
 
   /** Point-in-time snapshot by wall-clock batch stamp — the timestamp
     * spelling of [[snapshotAsOf]] (the reference's SCN IS an HBase
@@ -980,8 +970,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * `_ts` (legacy generations) have a NULL stamp and are treated as
     * older than any read point, i.e. always visible. */
   def snapshotAsOfTime(name: String, asOf: java.sql.Timestamp): DataFrame =
-    snapshotFullAsOf(name, asOf)
-      .select(spec(name).schema.fieldNames.map(col): _*)
+    declared(name, snapshotFullAsOf(name, asOf))
 
   /** [[snapshotFull]] (view-extension columns included) at a timestamp
     * read point — what as-of VIEWS collapse over. Exclusive upper
@@ -993,8 +982,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   /** Snapshot read: latest write per PK, tombstones dropped. One shuffle,
     * partitioned by the key. Projects the DECLARED schema only — columns
     * added by views are visible only through the view. */
-  def snapshot(name: String): DataFrame =
-    snapshotFull(name).select(spec(name).schema.fieldNames.map(col): _*)
+  def snapshot(name: String): DataFrame = declared(name, snapshotFull(name))
 
   /** Snapshot with `cond` applied BELOW the last-wins collapse — on the
     * raw change log, where parquet row-group stats can prune the scan.
@@ -1011,11 +999,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   private[graft] def snapshotPrefiltered(name: String,
       cond: org.apache.spark.sql.Column,
       asOf: Option[Long] = None): DataFrame = {
-    val log0 = changeLog(name).where(cond)
-    val log = asOf.map(v => log0.where(col("_version") <= v))
-      .getOrElse(log0)
-    collapseLog(name, log)
-      .select(spec(name).schema.fieldNames.map(col): _*)
+    val log = changeLog(name).where(cond)
+    declared(name, collapseLog(name,
+      asOf.fold(log)(v => log.where(col("_version") <= v))))
   }
 
   /** Snapshot plus `phoenix_row_timestamp` — the winning write's batch
@@ -1025,23 +1011,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * map-side-combinable collapse as [[snapshotFull]]; NULL for rows whose
     * winning batch predates the `_ts` column. */
   def snapshotWithRowTs(name: String): DataFrame =
-    collapseLogWithTs(name, servingLog(name))
-      .select(spec(name).schema.fieldNames.map(col) :+
-        col("_ts").as("phoenix_row_timestamp"): _*)
+    declared(name, collapseLog(name, servingLog(name), "_ts"),
+      col("_ts").as("phoenix_row_timestamp"))
 
-  /** Last-wins collapse KEEPING each winner's batch stamp — used by
-    * [[snapshotWithRowTs]] and [[compact]]; derives from
-    * [[collapseKeepMeta]] so a tie-break fix lands everywhere at once. */
-  private def collapseLogWithTs(name: String, log: DataFrame): DataFrame = {
-    val fields = allFields(name)
-    collapseKeepMeta(name, log)
-      .where(!col("_deleted"))
-      .select(fields.map(f => col(f.name)) :+ col("_ts"): _*)
-  }
-
-  /** CDC view (reference: Phoenix CREATE CDC, CDCChangeScope CHANGE/PRE/
-    * POST — cs/coprocessor/CDCGlobalIndexRegionScanner.java): one JSON
-    * change record per write, with the post image for upserts. */
   /** The CDC change-record columns shared by [[cdc]] and [[cdcStream]]
     * — one definition so batch and streaming CDC can never emit
     * different schemas for the same table. The post image is NULL for
@@ -1076,6 +1048,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
         "or above the floor")
   }
 
+  /** CDC view (reference: Phoenix CREATE CDC, CDCChangeScope CHANGE/PRE/
+    * POST — cs/coprocessor/CDCGlobalIndexRegionScanner.java): one JSON
+    * change record per write, with the post image for upserts. */
   def cdc(name: String, sinceVersion: Long = -1L): DataFrame = {
     requireAboveFloor(name, sinceVersion)
     changeLog(name)
@@ -1162,38 +1137,27 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * also raises the minimum, costing at most one unnecessary
     * rebuild — and intact tables (min == 0, nothing persisted) memoize
     * the -1 per catalog instance so the scan runs once per process. */
-  private[graft] def compactionFloor(name: String): Long = {
-    val f = floorFile(name)
-    if (f.exists())
-      new String(java.nio.file.Files.readAllBytes(f.toPath)).trim.toLong
-    else Option(floorScanned.get(name)).map(_.longValue).getOrElse {
-      val mn = changeLogRaw(name).agg(min(col("_version"))).head()
-      val derived =
-        if (mn.isNullAt(0)) -1L // empty log: nothing discarded
-        else if (mn.getLong(0) > 0L) mn.getLong(0)
-        else -1L
-      // write DIRECTLY — setCompactionFloor's max-guard re-reads this
-      // very function while the marker is still absent (recursion)
-      if (derived >= 0L) writeFloorFile(name, derived)
-      floorScanned.put(name, java.lang.Long.valueOf(derived))
-      derived
-    }
-  }
+  private[graft] def compactionFloor(name: String): Long =
+    readMark(floorFile(name))
+      .orElse(Option(floorScanned.get(name)).map(_.longValue))
+      .getOrElse {
+        val mn = changeLogRaw(name).agg(min(col("_version"))).head()
+        val derived =
+          if (mn.isNullAt(0)) -1L // empty log: nothing discarded
+          else if (mn.getLong(0) > 0L) mn.getLong(0)
+          else -1L
+        // write DIRECTLY — setCompactionFloor's max-guard re-reads this
+        // very function while the marker is still absent (recursion)
+        if (derived >= 0L) writeMark(floorFile(name), derived)
+        floorScanned.put(name, java.lang.Long.valueOf(derived))
+        derived
+      }
 
   private val floorScanned =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   private def setCompactionFloor(name: String, v: Long): Unit =
-    if (v > compactionFloor(name)) writeFloorFile(name, v)
-
-  private def writeFloorFile(name: String, v: Long): Unit = {
-    val f = floorFile(name)
-    val tmp = new java.io.File(f.getParentFile, s".${f.getName}.tmp")
-    java.nio.file.Files.write(tmp.toPath, v.toString.getBytes)
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+    if (v > compactionFloor(name)) writeMark(floorFile(name), v)
 
   /** Swap a freshly-written log rewrite into place. Swap, never
     * delete-then-rename: the live data must not be gone while the
@@ -1228,7 +1192,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // collapse keeping view-extension columns AND each winning row's
     // batch stamp — dropping _ts here would NULL phoenix_row_timestamp
     // for the whole table after compaction
-    val collapsed = collapseLogWithTs(name, changeLog(name))
+    val collapsed = collapseLog(name, changeLog(name), "_ts")
     versionedWrite(name) { v =>
       val snap = toPhysical(name, collapsed)
         .withColumn("_version", lit(v))
@@ -1280,14 +1244,12 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // is a retraction a registered MV's next refresh must still see;
     // expired-row purge is the FULL compaction's job, where the MV
     // rebuild re-derives from the purged snapshot anyway.
-    val fields = allFields(name)
+    val logCols = logSchema(name).fieldNames.map(col)
     val winners = collapseKeepMeta(name,
         changeLogRaw(name).where(col("_version") <= keepAfter))
-      .select(fields.map(f => col(f.name)) ++
-        Seq(col("_version"), col("_deleted"), col("_ts")): _*)
+      .select(logCols: _*)
     val tail = changeLogRaw(name).where(col("_version") > keepAfter)
-      .select(fields.map(f => col(f.name)) ++
-        Seq(col("_version"), col("_deleted"), col("_ts")): _*)
+      .select(logCols: _*)
     val tmp = s"${dir(name)}/data_compacting"
     toPhysical(name, winners.unionByName(tail))
       .write.mode(SaveMode.Overwrite).parquet(tmp)
@@ -1426,16 +1388,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // driver-side): rows already expired then are excluded; later
     // micro-batches only ever see freshly-written files, whose _ts is
     // young by construction, so a start-time literal loses nothing.
-    val ttlFilter: org.apache.spark.sql.Column = ttlSeconds(name) match {
-      case Some(ttl) =>
-        val cutoff = new java.sql.Timestamp(clock() - ttl * 1000L)
-        col("_ts").isNull || col("_ts") >= lit(cutoff)
-      case None => lit(true)
-    }
-    toLogical(name,
+    ttlFiltered(name, toLogical(name,
         spark.readStream.schema(physSchema(name))
-          .parquet(s"${dir(name)}/data"))
-      .where(ttlFilter)
+          .parquet(s"${dir(name)}/data")))
       .select(cdcCols(name): _*)
   }
 }
@@ -1457,6 +1412,31 @@ object GraftCatalog {
       try f
       finally synchronized { secs += (System.nanoTime() - t0) / 1e9 }
     }
+  }
+
+  // The snapshot-cache layout, defined once: the cache collapsed at
+  // mark `v` is the dir `<table root>/_snapcache/v<v>`.
+  private[sources] def snapCacheRoot(tableRoot: String): String =
+    s"$tableRoot/_snapcache"
+
+  private[sources] def snapCacheLeaf(tableRoot: String, v: Long): String =
+    s"${snapCacheRoot(tableRoot)}/v$v"
+
+  private val SnapCacheLeaf = "(.*)/_snapcache/v(\\d+)".r
+
+  /** The mark of a snapshot-cache leaf path; `None` for any other. */
+  private[sources] def snapCacheMark(path: String): Option[Long] =
+    path match {
+      case SnapCacheLeaf(_, v) => Some(v.toLong)
+      case _ => None
+    }
+
+  /** The table root a snapshot-cache leaf belongs to; any other path
+    * unchanged. A serving scan reads the leaf, which rotates per cache
+    * refresh, while MV registrations key on the stable root. */
+  private[graft] def tableRootOf(path: String): String = path match {
+    case SnapCacheLeaf(root, _) => root
+    case _ => path
   }
 
   /** StructField metadata key marking a numeric UNSIGNED_* column whose

@@ -1811,6 +1811,32 @@ class CatalogSpec extends AnyFunSuite {
       s"fresh cache must serve as a pure scan:\n$served")
   }
 
+  // Spark work of one serving read, measured on the code before the
+  // read paths shared one cache-aware log slice; a change here is a
+  // change in read cost.
+  test("snapshot cache: Spark jobs, stages and tasks of a served read " +
+      "against an exactly fresh cache and against cache plus tail") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("jc", StructType(Seq(
+      StructField("k", LongType), StructField("x", LongType))),
+      pk = Seq("k"))
+    cat.upsert("jc", (1L to 40L).map(k => (k, k)).toDF("k", "x"))
+    cat.upsert("jc", (1L to 40L by 3).map(k => (k, -k)).toDF("k", "x"))
+    cat.delete("jc", col("k") === 2L)
+    cat.refreshSnapshotCache("jc")
+    def served() = TestSpark.countJobs(cat.snapshotServed("jc").collect())
+    val (fresh, freshRows) = served()
+    assert(freshRows.length == 39)
+    assert(fresh == TestSpark.JobCounts(jobs = 1, stages = 1, tasks = 1),
+      s"exactly fresh cache: $fresh")
+    cat.upsert("jc", Seq((2L, 2L), (41L, 41L)).toDF("k", "x"))
+    val (tail, tailRows) = served()
+    assert(tailRows.length == 41)
+    assert(tail == TestSpark.JobCounts(jobs = 2, stages = 2, tasks = 6),
+      s"cache plus tail: $tail")
+  }
+
   test("IVM extremum gate: non-extremal retractions fold with ZERO " +
       "base-history access; extremum-losing ones recompute only " +
       "affected-PK history (LeftSemi below the collapse aggregate)") {

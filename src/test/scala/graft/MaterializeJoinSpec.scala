@@ -1254,20 +1254,61 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val v1 = cat.upsert("t", Seq((1L, 11L), (3L, 30L)).toDF("k", "x"))
     val v2 = cat.delete("t", col("k") === 2L)
     val v3 = cat.upsert("t", Seq((2L, 22L)).toDF("k", "x"))
-    for (v <- Seq(v0, v1, v2, v3))
-      assert(rows(cat.snapshotUpTo("t", v)) ==
-        rows(cat.snapshotAsOf("t", v)), s"no cache, v=$v")
-    cat.refreshSnapshotCache("t") // cache at v3
-    // cache at-or-below the mark serves through cache+tail; a cache
-    // AHEAD of the mark (v0..v2 here) must fall back to the full-log
-    // collapse — its collapsed rows have discarded the history the
-    // slice needs
-    for (v <- Seq(v0, v1, v2, v3))
-      assert(rows(cat.snapshotUpTo("t", v)) ==
-        rows(cat.snapshotAsOf("t", v)), s"cache@$v3, v=$v")
-    val v4 = cat.upsert("t", Seq((4L, 44L)).toDF("k", "x"))
-    assert(rows(cat.snapshotUpTo("t", v4)) ==
-      rows(cat.snapshotAsOf("t", v4)), "cache + tail")
+    val v4 = cat.delete("t", col("k") === 3L)
+    // a no-match DELETE bumps the counter without writing a row
+    val v5 = cat.delete("t", col("k") === 99L)
+    // an orphan row above the counter (a refused writer's append) must
+    // stay invisible to every read, cached or not
+    Seq((5L, 55L)).toDF("k", "x")
+      .withColumn("_version", lit(v5 + 100L))
+      .withColumn("_deleted", lit(false))
+      .withColumn("_ts", lit(new java.sql.Timestamp(0L)))
+      .write.mode("append").parquet(s"${cat.tablePath("t")}/data")
+    val pks = Seq(1L, 2L, 5L).toDF("__p_k")
+    // pairWinners, per PK: x of the alive winner at each mark — a
+    // tombstone winner reads as no row (a cache keeps alive winners only)
+    def alive(w: Option[(Long, Boolean)]) = w.collect { case (x, false) => x }
+    def side(r: org.apache.spark.sql.Row, w: String) = alive(
+      Option(r.getAs[org.apache.spark.sql.Row](w))
+        .map(s => (s.getAs[Long]("__p_x"), s.getAs[Boolean]("__del"))))
+    // the same from the uncached collapse at mark v
+    def winnersAt(v: Long): Map[Long, Long] = cat.collapseKeepMeta("t",
+        cat.changeLog("t").where(col("_version") <= v))
+      .where(!col("_deleted"))
+      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("x")).toMap
+    def check(marks: Seq[Long], tag: String): Unit = {
+      for (v <- marks) {
+        val asOf = rows(cat.snapshotAsOf("t", v))
+        assert(rows(cat.snapshotUpTo("t", v)) == asOf, s"$tag, v=$v")
+        assert(rows(cat.snapshotForPks("t", pks, uptoV = Some(v))) ==
+          asOf.filter(r => Set[Any](1L, 2L, 5L)(r.head)),
+          s"$tag, snapshotForPks v=$v")
+      }
+      val cur = rows(cat.snapshotAsOf("t", marks.last))
+      assert(rows(cat.snapshotServed("t")) == cur, s"$tag, served")
+      assert(rows(cat.snapshotForPks("t", pks)) ==
+        cur.filter(r => Set[Any](1L, 2L, 5L)(r.head)),
+        s"$tag, current snapshotForPks")
+      val ref = marks.map(v => v -> winnersAt(v)).toMap
+      for (lo <- marks; hi <- marks if lo <= hi) {
+        val fused = cat.pairWinners("t", lo, hi, Seq("x")).collect()
+          .map(r => r.getAs[Long]("k") -> (side(r, "_wo"), side(r, "_wn")))
+          .filter(_._2 != (None, None)).toMap
+        val expected = (ref(lo).keySet ++ ref(hi).keySet)
+          .map(k => k -> (ref(lo).get(k), ref(hi).get(k))).toMap
+        assert(fused == expected, s"$tag, pairWinners lo=$lo hi=$hi")
+      }
+    }
+    val marks = Seq(v0, v1, v2, v3, v4, v5)
+    check(marks, "no cache")
+    // cache at v5, the counter, above the log's last row: exactly fresh
+    // for the current reads; AHEAD of v0..v4, where reads must fall
+    // back to the full-log collapse — the collapsed rows have discarded
+    // the history those slices need
+    assert(cat.refreshSnapshotCache("t") == v5)
+    check(marks, s"cache@$v5")
+    val v6 = cat.upsert("t", Seq((4L, 44L), (1L, 12L)).toDF("k", "x"))
+    check(marks :+ v6, s"cache@$v5 + tail")
   }
 
   test("floored compaction of every chain table at its fold mark keeps " +

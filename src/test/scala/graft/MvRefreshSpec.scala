@@ -1,9 +1,7 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.TimeUnit
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,35 +47,6 @@ class MvRefreshSpec extends AnyFunSuite {
       (3L, 20L, 300L), (6L, 10L, 150L)).toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((10L, "a"), (20L, "b")).toDF("ck", "seg"))
     cat
-  }
-
-  /** Spark jobs started while `f` runs, with its result: every job
-    * start is counted, and a marker job drains the listener bus (events
-    * arrive in order, so once the marker's start is seen every earlier
-    * job was counted). */
-  private def jobsOf[T](f: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val marker = new CountDownLatch(1)
-    val markerGroup = s"mv-jobs-marker-${System.nanoTime}"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == markerGroup))
-          marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      sc.setJobGroup(markerGroup, "listener drain marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, TimeUnit.SECONDS))
-      (jobs.get, out)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("single-table MV: a no-change refresh after a recomputing one " +
@@ -151,10 +120,11 @@ class MvRefreshSpec extends AnyFunSuite {
     Materialize.refresh(cat, "t", path) // warm: memos and caches filled
     cat.upsert("t", Seq((5L, "a", 12L), (7L, "a", 16L))
       .toDF("k", "g", "x"))
-    val (jobs, r) = jobsOf(Materialize.refresh(cat, "t", path))
+    val (n, r) = TestSpark.countJobs(Materialize.refresh(cat, "t", path))
     assert(!r.recomputeRan)
-    assert(jobs == 10, s"jobs per single-table refresh: $jobs")
-    assert(jobsOf(Materialize.refresh(cat, "t", path))._1 == 0,
+    assert(n.jobs == 10, s"jobs per single-table refresh: ${n.jobs}")
+    assert(TestSpark.countJobs(Materialize.refresh(cat, "t", path))._1
+        .jobs == 0,
       "a no-change refresh runs no job")
     assert(Materialize.read(spark, path).orderBy("g")
       .select("g", "cnt", "sum_x", "min_x", "max_x").collect()
@@ -172,10 +142,11 @@ class MvRefreshSpec extends AnyFunSuite {
     cat.upsert("o", Seq((5L, 10L, 120L), (6L, 10L, 160L))
       .toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((30L, "c")).toDF("ck", "seg"))
-    val (jobs, r) = jobsOf(MaterializeJoin.refresh(cat, path))
+    val (n, r) = TestSpark.countJobs(MaterializeJoin.refresh(cat, path))
     assert(!r.recomputeRan)
-    assert(jobs == 31, s"jobs per join refresh: $jobs")
-    assert(jobsOf(MaterializeJoin.refresh(cat, path))._1 == 0,
+    assert(n.jobs == 31, s"jobs per join refresh: ${n.jobs}")
+    assert(TestSpark.countJobs(MaterializeJoin.refresh(cat, path))._1
+        .jobs == 0,
       "a no-change refresh runs no job")
     assert(Materialize.read(spark, path).orderBy("seg")
       .select("seg", "cnt", "sum_price", "min_price", "max_price")

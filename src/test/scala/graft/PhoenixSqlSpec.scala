@@ -1153,44 +1153,11 @@ class PhoenixSqlSpec extends AnyFunSuite {
         finally w.close()
       }
     }
-    val group = s"values-guard-${System.nanoTime}"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val tasks = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val markerGroup = group + "-marker"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          stages.add(e.stageInfo.stageId)
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) tasks.incrementAndGet()
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == markerGroup))
-          marker.countDown()
-    }
     val before = dataFiles()
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "100-tuple UPSERT VALUES")
-      px.execute("UPSERT INTO ONE VALUES " +
-        (1 to 100).map(i => s"($i, 'v$i')").mkString(", "))
-      // events reach a listener in order: once the marker job's start
-      // arrives, every task of the upsert has been counted
-      sc.setJobGroup(markerGroup, "listener drain marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (n, _) = TestSpark.countJobs(px.execute("UPSERT INTO ONE VALUES " +
+      (1 to 100).map(i => s"($i, 'v$i')").mkString(", ")))
     assert(dataFiles() - before == 1, "one parquet data file per statement")
-    assert(tasks.get == 1, s"one task per statement, got ${tasks.get}")
+    assert(n.tasks == 1, s"one task per statement, got ${n.tasks}")
     assert(px.execute("SELECT count(*) FROM ONE").collect()
       .head.getLong(0) == 100)
   }
