@@ -45,10 +45,11 @@ object DriverParquet {
   val cap: Int = 4096
 
   /** Stream `rows` (plan-output InternalRows of `schema`) into ONE
-    * parquet part file under `dir` (created if needed), named like a
-    * normal Spark output file. Files already in `dir` are untouched. */
+    * parquet part file `part` under `dir` (created if needed), named like
+    * a normal Spark output file. Files already in `dir` are untouched. */
   def writeRows(df: DataFrame, schema: StructType,
-      rows: Iterator[InternalRow], dir: String): Unit = {
+      rows: Iterator[InternalRow], dir: String,
+      part: String = "00000"): Unit = {
     val spark = df.sparkSession
     val hadoopConf = spark.sessionState.newHadoopConf()
     val job = Job.getInstance(hadoopConf)
@@ -63,7 +64,7 @@ object DriverParquet {
     val fs = dirPath.getFileSystem(job.getConfiguration)
     if (!fs.exists(dirPath)) fs.mkdirs(dirPath)
     val file = new Path(dirPath,
-      s"part-00000-${UUID.randomUUID}-c000${factory.getFileExtension(ctx)}")
+      s"part-$part-${UUID.randomUUID}-c000${factory.getFileExtension(ctx)}")
     val writer = factory.newInstance(file.toString, schema, ctx)
     try rows.foreach(writer.write) finally writer.close()
   }
@@ -147,7 +148,10 @@ object DriverParquet {
     * shape: a one-row local relation). Replaces SaveMode.Overwrite's
     * delete-then-distributed-write with write-new-file-then-delete-old
     * — one driver job fewer, and a concurrent reader sees old or new
-    * bytes rather than a mid-overwrite empty directory. */
+    * bytes rather than a mid-overwrite empty directory. A crash between
+    * the write and the delete leaves both files: part numbers count up
+    * (a fixed-width one past the highest in `dir`), so the newest file
+    * is the last-sorting name, which is what [[MvMeta.row]] reads. */
   def overwriteSmall(df: DataFrame, dir: String): Unit = {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(
@@ -155,8 +159,11 @@ object DriverParquet {
     val old =
       if (fs.exists(dirPath)) fs.listStatus(dirPath).filter(_.isFile)
       else Array.empty[org.apache.hadoop.fs.FileStatus]
+    val part = old.map(_.getPath.getName).filter(_.startsWith("part-"))
+      .map(_.stripPrefix("part-").takeWhile(_.isDigit).toLong)
+      .maxOption.getOrElse(0L) + 1L
     val rows = df.queryExecution.executedPlan.executeCollect()
-    writeRows(df, df.schema, rows.iterator, dir)
+    writeRows(df, df.schema, rows.iterator, dir, f"$part%019d")
     old.foreach(s => fs.delete(s.getPath, false))
   }
 }

@@ -196,10 +196,17 @@ private[graft] object MvMeta {
     * the whole MV battery. The directory is re-listed on every call — a
     * concurrent writer's rewrite is picked up exactly as the plain read
     * would see it; a non-local path (no listable java.io dir) falls
-    * through to the plain read uncached. */
+    * through to the plain read uncached. A dir holding more than one
+    * data file (a crash inside [[DriverParquet.overwriteSmall]]) is
+    * read at its last-sorting, i.e. newest, file — never at whichever
+    * row a multi-file scan yields first. */
   def row(spark: SparkSession, path: String): Row = {
     val dir = new java.io.File(path, "meta")
-    def readPlain() = spark.read.parquet(s"$path/meta").head()
+    def readPlain(names: Seq[String] = Nil) = {
+      val parts = names.filter(_.startsWith("part-"))
+      spark.read.parquet(if (parts.length > 1) s"$path/meta/${parts.max}"
+        else s"$path/meta").head()
+    }
     Option(dir.listFiles()) match {
       case None => readPlain()
       case Some(fs) =>
@@ -208,7 +215,7 @@ private[graft] object MvMeta {
         memo.get(key) match {
           case Some((cur, r)) if cur == s => r
           case _ =>
-            val r = readPlain()
+            val r = readPlain(fs.map(_.getName).toSeq)
             memo.put(key, (s, r))
             r
         }

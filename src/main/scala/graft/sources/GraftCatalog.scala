@@ -39,6 +39,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   private[graft] def session: SparkSession = spark
 
   private def dir(name: String) = s"$warehouse/$name"
+  private def dataDir(name: String) = new java.io.File(s"${dir(name)}/data")
   private def versionFile(name: String) =
     new java.io.File(s"${dir(name)}/_latest_version")
 
@@ -65,13 +66,15 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     val spec = TableSpec(name, schema, pk, props)
     specs(name) = spec
     new java.io.File(dir(name)).mkdirs()
+    // the first step of any process over an existing dir: a compaction
+    // or vacuum cut between its two moves left the live log aside
+    recoverAside(dataDir(name))
     // stamp "full history intact" on a FRESH table (no data yet, no
     // marker) so [[compactionFloor]]'s legacy-fallback scan never runs
     // for tables this generation creates; a re-registered EXISTING dir
     // keeps its state — absent marker there means a pre-floor
     // generation may have compacted it, and the fallback derives that
-    if (!new java.io.File(s"${dir(name)}/data").exists() &&
-        !floorFile(name).exists())
+    if (!dataDir(name).exists() && !floorFile(name).exists())
       writeMark(floorFile(name), -1L)
     spec
   }
@@ -285,66 +288,49 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * row, keep the table): drops the data directory; the spec and the
     * version counter survive, so versions stay monotone across a truncate
     * and CDC consumers can't see a version reused. */
-  def truncate(name: String): Unit = tableLock(name).synchronized {
+  def truncate(name: String): Unit = {
     spec(name) // throws on unknown table
-    val data = new java.io.File(s"${dir(name)}/data")
-    if (data.exists()) rmTree(data)
-    invalidateSnapCache(name) // a stale cache would resurrect every row
     // truncation is a history discard like compaction: consume one
     // version (so freshness probes keyed on the counter observe the
     // change — an MV would otherwise serve the vanished rows as
     // "fresh") and raise the replayability floor past every earlier
     // fold mark, forcing the rebuild that is the only correct refresh.
-    // The whole sequence holds the table's write lock (reentrant into
-    // versionedWrite), so a racing append can't land rows between the
-    // tree delete and the floor bump.
-    versionedWrite(name)(v => setCompactionFloor(name, v))
+    // The whole sequence holds the table's write lock, so a racing
+    // append can't land rows between the tree delete and the floor bump.
+    versionedWrite(name) { v =>
+      rmTree(dataDir(name))
+      invalidateSnapCache(name) // a stale cache would resurrect every row
+      setCompactionFloor(name, v)
+    }
   }
 
   // Version-counter protocol. The counter is what every mark-sampling
   // read (MV refresh fold windows, snapshot-cache keys, freshness
   // probes) trusts, so it must satisfy ONE invariant at all times:
   // `v <= counter  ⇒  every row of version v is fully visible in the
-  // log`. That forces the write order REServe → APPEND → PUBLISH —
+  // log`. That forces the write order RESERVE → APPEND → PUBLISH —
   // persisting the counter before the append (the old order) let a
   // refresh sample a version whose rows were still in flight, cache a
   // delta that missed them, and record a mark covering rows it never
-  // folded (a silently lost update). Writers in THIS catalog instance
-  // coordinate through `versionLock` (one driver JVM can host racing
-  // writer threads — e.g. a maintenance stream racing ad-hoc upserts);
-  // versions are reserved in memory, and the persisted counter only
-  // advances to v once every reservation ≤ v has completed, so a
-  // fast-finishing later batch never publishes over a slower earlier
-  // one. A SECOND catalog instance (another process/driver) racing the
-  // same table is detected at publish time — the counter file moved
-  // beyond what this instance published — and refused loudly rather
-  // than silently interleaving; true multi-driver writes need a
-  // coordination service, as Phoenix delegates to HBase's atomicity.
-  private val versionLock = new Object
-  private val reservedHigh = scala.collection.mutable.Map[String, Long]()
-  private val inFlight =
-    scala.collection.mutable.Map[String, scala.collection.mutable.SortedSet[Long]]()
-  private val publishedByUs = scala.collection.mutable.Map[String, Long]()
+  // folded (a silently lost update). [[versionedWrite]] runs all three
+  // steps under a PER-TABLE lock, so one version per table is in
+  // flight at a time: v is the counter plus one, published by one
+  // [[writeMark]]. Racing writer threads of one JVM (e.g. a
+  // maintenance stream racing ad-hoc upserts) take turns — two Spark
+  // jobs appending into one parquet directory share its `_temporary`
+  // staging dir, so the first job's commit-time cleanup can delete the
+  // second's in-flight task files; writes to different tables stay
+  // concurrent. A SECOND catalog instance (another process/driver)
+  // racing the same table is detected at publish time — the counter
+  // file moved beyond what this instance published — and refused
+  // loudly rather than silently interleaving; true multi-driver
+  // writes need a coordination service, as Phoenix delegates to
+  // HBase's atomicity.
 
-  private def reserveVersion(name: String): Long = versionLock.synchronized {
-    val onDisk = currentVersion(name)
-    val fl = inFlight.getOrElseUpdate(
-      name, scala.collection.mutable.SortedSet.empty[Long])
-    // with no write of ours in flight, a counter that moved is a
-    // SEQUENTIAL handoff from another instance (a reopened warehouse,
-    // one writer at a time) — adopt it as the new baseline. With
-    // reservations in flight it is a CONCURRENT foreign writer about
-    // to interleave versions with ours: refuse loudly (see
-    // foreignBumpCheck).
-    if (fl.isEmpty)
-      publishedByUs(name) =
-        math.max(onDisk, publishedByUs.getOrElse(name, -1L))
-    else foreignBumpCheck(name, onDisk)
-    val v = math.max(onDisk, reservedHigh.getOrElse(name, -1L)) + 1L
-    reservedHigh(name) = v
-    fl += v
-    v
-  }
+  /** Per table, the counter this instance last published or adopted
+    * — what [[foreignBumpCheck]] compares the file against. */
+  private val publishedByUs =
+    new scala.collection.concurrent.TrieMap[String, Long]()
 
   /** Refuse loudly when the persisted counter moved under our feet: a
     * writer from ANOTHER catalog instance raced this one and may have
@@ -362,34 +348,6 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
           "separate catalog instances are not coordinated; refusing " +
           "rather than interleaving versions")
 
-  /** Advance the persisted counter after version `v`'s append landed
-    * (or was abandoned: a failed Spark write aborts its task files, so
-    * the version is an empty gap the counter may step over — gaps only
-    * overestimate the tail-batch count the cache threshold reads).
-    * Publishes the highest version with no smaller reservation still
-    * in flight ([[writeMark]]: a reader never sees a torn counter). */
-  private def publishVersion(name: String, v: Long): Unit =
-    versionLock.synchronized {
-      val fl = inFlight(name)
-      fl -= v
-      // a foreign bump between our reserve and this publish means the
-      // other writer may have stamped OUR version on its rows — the
-      // append already landed, so the duplicate cannot be unwound, but
-      // it must never be silent
-      foreignBumpCheck(name, currentVersion(name))
-      val publishable = if (fl.isEmpty) reservedHigh(name) else fl.head - 1L
-      if (publishable > currentVersion(name)) {
-        writeMark(versionFile(name), publishable)
-        publishedByUs(name) = publishable
-      }
-    }
-
-  /** Reserve → append (`write`) → publish; abandon on failure. The
-    * whole sequence holds a PER-TABLE lock: two Spark jobs appending
-    * into one parquet directory share its `_temporary` staging dir, so
-    * the first job's commit-time cleanup can delete the second's
-    * in-flight task files — racing writer threads on the SAME table
-    * must take turns (writes to different tables stay concurrent). */
   private val tableWriteLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -398,17 +356,34 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 
   private def versionedWrite(name: String)(write: Long => Unit): Long =
     tableLock(name).synchronized {
-      val v = reserveVersion(name)
+      // nothing of ours is in flight here, so a counter that moved is a
+      // SEQUENTIAL handoff from another instance (a reopened warehouse,
+      // one writer at a time) — adopt it as the new baseline
+      val base = math.max(currentVersion(name),
+        publishedByUs.getOrElse(name, -1L))
+      publishedByUs(name) = base
+      val v = base + 1L
+      // publish v whether the append landed or failed: a failed Spark
+      // write aborts its task files, so the version is an empty gap the
+      // counter may step over (gaps only overestimate the tail-batch
+      // count the cache threshold reads). A foreign bump between
+      // reserve and publish means the other writer may have stamped
+      // OUR version on its rows — the append already landed, so the
+      // duplicate cannot be unwound, but it must never be silent.
+      def publish(): Unit = {
+        foreignBumpCheck(name, currentVersion(name))
+        writeMark(versionFile(name), v)
+        publishedByUs(name) = v
+      }
       try write(v)
       catch {
         case e: Throwable =>
-          // abandon the reservation; a secondary failure here must not
-          // MASK the append's own error
-          try publishVersion(name, v)
+          // a secondary failure here must not MASK the append's own error
+          try publish()
           catch { case e2: Throwable => e.addSuppressed(e2) }
           throw e
       }
-      publishVersion(name, v)
+      publish()
       v
     }
 
@@ -445,7 +420,22 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
             .cast(f.dataType))
       else d.withColumn(f.name, lit(null).cast(f.dataType))
     }
-    toPhysical(name,
+    // the ROW_TIMESTAMP column IS the cell timestamp in the reference
+    // (RowTimestampIT: an explicit value drives scan TimeRange
+    // visibility and TTL) — so when the table declares one, `_ts`
+    // takes the row's value (batch clock only where it was omitted
+    // and the padding already filled it). Note: such tables trade
+    // away the one-_ts-per-file parquet stats pruning that
+    // constant-stamped batches give the MV expiry probe.
+    val ts =
+      fields.find(_.metadata.contains(GraftCatalog.RowTimestampKey)) match {
+        case Some(f) if f.dataType == LongType =>
+          coalesce(timestamp_millis(col(phys(name, f.name))), lit(nowTs))
+        case Some(f) =>
+          coalesce(col(phys(name, f.name)).cast(TimestampType), lit(nowTs))
+        case None => lit(nowTs)
+      }
+    appendBatch(name,
         padded.select(fields.map { f =>
           val c = col(f.name).cast(f.dataType)
           // UNSIGNED_* CHECK ≥ 0 (Phoenix throws IllegalDataException on
@@ -472,43 +462,34 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
                 lit(s"VARCHAR(${n}) column ${f.name} exceeds capacity: "), c)))
               .otherwise(c).as(f.name)
           } else c
-        }: _*))
-      .withColumn("_version", lit(v))
-      .withColumn("_deleted", lit(false))
-      // the ROW_TIMESTAMP column IS the cell timestamp in the reference
-      // (RowTimestampIT: an explicit value drives scan TimeRange
-      // visibility and TTL) — so when the table declares one, `_ts`
-      // takes the row's value (batch clock only where it was omitted
-      // and the padding already filled it). Note: such tables trade
-      // away the one-_ts-per-file parquet stats pruning that
-      // constant-stamped batches give the MV expiry probe.
-      .withColumn("_ts", fields
-        .find(_.metadata.contains(GraftCatalog.RowTimestampKey)) match {
-          case Some(f) if f.dataType == LongType =>
-            coalesce(timestamp_millis(col(phys(name, f.name))), lit(nowTs))
-          case Some(f) =>
-            coalesce(col(phys(name, f.name)).cast(TimestampType),
-              lit(nowTs))
-          case None => lit(nowTs)
-        })
-      .write.mode(SaveMode.Append).parquet(s"${dir(name)}/data")
+        }: _*), v, deleted = false, ts)
   }
 
   /** DELETE by predicate: tombstone the matching PKs as of now. */
   def delete(name: String, predicate: org.apache.spark.sql.Column): Long =
     GraftCatalog.OpTiming.timed {
-    val fields = allFields(name)
-    val v = versionedWrite(name) { v =>
-      toPhysical(name, snapshotFull(name).where(predicate)
-          .select(fields.map(f => col(f.name)): _*))
-        .withColumn("_version", lit(v))
-        .withColumn("_deleted", lit(true))
-        .withColumn("_ts", lit(batchTs()))
-        .write.mode(SaveMode.Append).parquet(s"${dir(name)}/data")
-    }
+    val v = versionedWrite(name)(appendBatch(name,
+      snapshotFull(name).where(predicate)
+        .select(allFields(name).map(f => col(f.name)): _*),
+      _, deleted = true, lit(batchTs())))
     refreshSnapCacheIfDue(name)
     v
     }
+
+  /** `rows` (logical columns) as one log batch of version `v`: physical
+    * column names, then the meta columns (`ts` over physical names). */
+  private def stamped(name: String, rows: DataFrame, v: Long,
+      deleted: Boolean, ts: org.apache.spark.sql.Column): DataFrame =
+    toPhysical(name, rows)
+      .withColumn("_version", lit(v))
+      .withColumn("_deleted", lit(deleted))
+      .withColumn("_ts", ts)
+
+  /** The one append to a table's log: [[stamped]] `rows` as version `v`. */
+  private def appendBatch(name: String, rows: DataFrame, v: Long,
+      deleted: Boolean, ts: org.apache.spark.sql.Column): Unit =
+    stamped(name, rows, v, deleted, ts)
+      .write.mode(SaveMode.Append).parquet(dataDir(name).toString)
 
   /** Full change log (the CDC source): every write of every version. Reads
     * the physical schema (generation-suffixed columns) and renames back to
@@ -546,8 +527,8 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   private[graft] def changeLogRaw(name: String): DataFrame = {
     // a created-but-never-written table has no data dir yet → empty log
     val base =
-      if (new java.io.File(s"${dir(name)}/data").exists())
-        spark.read.schema(physSchema(name)).parquet(s"${dir(name)}/data")
+      if (dataDir(name).exists())
+        spark.read.schema(physSchema(name)).parquet(dataDir(name).toString)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physSchema(name))
     // bound at the PUBLISHED counter — the write protocol's invariant
@@ -654,10 +635,12 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       .parquet(GraftCatalog.snapCacheLeaf(dir(name), v)))
 
   /** Build/refresh the serving cache at the current high-water mark.
-    * Flip-don't-overwrite (same rule as compact/MV state): build under
-    * `_build_v<V>`, rename into place, then drop older cache versions.
-    * No-op (returns -1) on an empty log. */
-  def refreshSnapshotCache(name: String): Long = {
+    * Flip-don't-overwrite (same rule as compact/MV state): build the
+    * `v<V>` dir through [[replaceDir]], then drop older cache versions.
+    * Holds the table's write lock: two builds at one mark (two writer
+    * threads each passing the auto-refresh threshold) would share the
+    * temp dir, and one would fail. No-op (returns -1) on an empty log. */
+  def refreshSnapshotCache(name: String): Long = tableLock(name).synchronized {
     require(!hasRowTimestamp(name),
       s"snapshot cache requires _ts monotone per PK; table $name " +
         "declares a ROW_TIMESTAMP column (arbitrary user stamps)")
@@ -702,14 +685,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
             col("_version") <= v))
       case _ => changeLogRaw(name).where(col("_version") <= v)
     }
-    val tmp = new java.io.File(s"${snapCacheRoot(name)}/_build_v$v")
-    toPhysical(name, collapseLog(name, source, "_version", "_deleted", "_ts"))
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val dest = new java.io.File(GraftCatalog.snapCacheLeaf(dir(name), v))
-    if (dest.exists()) rmTree(dest)
-    if (!tmp.renameTo(dest))
-      throw new java.io.IOException(
-        s"refreshSnapshotCache($name): cannot move cache into place")
+    replaceDir(toPhysical(name,
+        collapseLog(name, source, "_version", "_deleted", "_ts")),
+      new java.io.File(GraftCatalog.snapCacheLeaf(dir(name), v)))
     cacheDirs(name).collect { case (m, f) if m < v => f }.foreach(rmTree)
     v
   }
@@ -770,10 +748,8 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 
   /** Drop the cache (compact/truncate rewrite or erase the history the
     * cache summarizes — a stale cache would resurrect rows). */
-  private def invalidateSnapCache(name: String): Unit = {
-    val d = new java.io.File(snapCacheRoot(name))
-    if (d.exists()) rmTree(d)
-  }
+  private def invalidateSnapCache(name: String): Unit =
+    rmTree(new java.io.File(snapCacheRoot(name)))
 
   /** Auto-refresh policy (opt-in per table): with property
     * `SNAPSHOT_CACHE_BATCHES=n`, a table that has ≥ n batches beyond
@@ -785,7 +761,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * performs with the property already set, so the read hook rebuilds
     * once at the next read instead of re-collapsing an ever-growing
     * tail forever. The probe is O(1) (version-counter file + cache dir
-    * listing); single-writer contract, like every cache mutation. */
+    * listing). */
   private def refreshSnapCacheIfDue(name: String): Unit =
     positiveProp(name, "SNAPSHOT_CACHE_BATCHES").foreach { n =>
       if (cacheMark(name).exists(currentVersion(name) - _ >= n))
@@ -1159,25 +1135,40 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   private def setCompactionFloor(name: String, v: Long): Unit =
     if (v > compactionFloor(name)) writeMark(floorFile(name), v)
 
-  /** Swap a freshly-written log rewrite into place. Swap, never
-    * delete-then-rename: the live data must not be gone while the
-    * rewritten copy could still fail to land (renameTo signals failure
-    * by RETURN VALUE, not exception). */
-  private def swapDataDir(name: String, tmp: String): Unit = {
-    val dataDir = new java.io.File(s"${dir(name)}/data")
-    val old = new java.io.File(s"${dir(name)}/data_old")
-    if (old.exists()) rmTree(old)
-    if (dataDir.exists() && !dataDir.renameTo(old))
+  /** Replace the directory `dest` with `df`'s rows: write a temp
+    * sibling, move the old `dest` aside, move the new one in, delete the
+    * aside copy. Never delete-then-rename — the live dir must not be
+    * gone while the new copy could still fail to land (renameTo signals
+    * failure by RETURN VALUE, not exception); a crash between the moves
+    * leaves the aside copy for [[recoverAside]]. Neither sibling is
+    * named `data` or `v<N>`, so no read ever sees one. */
+  private def replaceDir(df: DataFrame, dest: java.io.File): Unit = {
+    val tmp = new java.io.File(dest.getParentFile, s"_tmp_${dest.getName}")
+    val aside = GraftCatalog.asideOf(dest)
+    recoverAside(dest)
+    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    if (dest.exists() && !dest.renameTo(aside))
       throw new java.io.IOException(
-        s"compact($name): cannot move live data aside — aborting with " +
-          "the table untouched")
-    if (!new java.io.File(tmp).renameTo(dataDir)) {
-      old.renameTo(dataDir) // restore the pre-compaction state
+        s"cannot move $dest aside — aborting with it untouched")
+    if (!tmp.renameTo(dest)) {
+      aside.renameTo(dest)
       throw new java.io.IOException(
-        s"compact($name): cannot move compacted data into place — " +
-          "previous data restored")
+        s"cannot move the new $dest into place — previous copy restored")
     }
-    rmTree(old)
+    rmTree(aside)
+  }
+
+  /** Finish a [[replaceDir]] that was cut short: an aside copy with no
+    * `dest` is the live dir, moved aside before its replacement landed
+    * — move it back (deleting it would lose the table's history); next
+    * to a `dest` it is the replaced copy — delete it. */
+  private def recoverAside(dest: java.io.File): Unit = {
+    val aside = GraftCatalog.asideOf(dest)
+    if (aside.exists()) {
+      if (dest.exists()) rmTree(aside)
+      else if (!aside.renameTo(dest))
+        throw new java.io.IOException(s"cannot restore $dest from $aside")
+    }
   }
 
   /** Full compaction: rewrite the change log as a single batch holding
@@ -1189,17 +1180,13 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * should stay incremental across routine compaction, use the floored
     * variant [[compact(name:String,keepAfter:Long)*]] instead. */
   def compact(name: String): Unit = {
-    // collapse keeping view-extension columns AND each winning row's
-    // batch stamp — dropping _ts here would NULL phoenix_row_timestamp
-    // for the whole table after compaction
-    val collapsed = collapseLog(name, changeLog(name), "_ts")
     versionedWrite(name) { v =>
-      val snap = toPhysical(name, collapsed)
-        .withColumn("_version", lit(v))
-        .withColumn("_deleted", lit(false))
-      val tmp = s"${dir(name)}/data_compacting"
-      snap.write.mode(SaveMode.Overwrite).parquet(tmp)
-      swapDataDir(name, tmp)
+      // collapse keeping view-extension columns AND each winning row's
+      // batch stamp — dropping _ts here would NULL phoenix_row_timestamp
+      // for the whole table after compaction. Read under the table
+      // lock, so no append can land between the read and the swap.
+      replaceDir(stamped(name, collapseLog(name, changeLog(name), "_ts"),
+        v, deleted = false, col("_ts")), dataDir(name))
       setCompactionFloor(name, v)
     }
     // compaction discards the history behind the cache's high-water
@@ -1250,10 +1237,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       .select(logCols: _*)
     val tail = changeLogRaw(name).where(col("_version") > keepAfter)
       .select(logCols: _*)
-    val tmp = s"${dir(name)}/data_compacting"
-    toPhysical(name, winners.unionByName(tail))
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapDataDir(name, tmp)
+    replaceDir(toPhysical(name, winners.unionByName(tail)), dataDir(name))
     setCompactionFloor(name, keepAfter)
     // the snapshot cache stays VALID: cache rows keep original versions
     // and the rewrite preserves the per-PK winner at every mark >= the
@@ -1268,7 +1252,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * path already excludes them ([[changeLogRaw]] bounds at the
     * counter), so they are invisible — but they bloat the log and
     * every scan's footer set until physically removed. Rewrites the
-    * log without them (temp-write + dir swap, like [[compact]]) under
+    * log without them (through [[replaceDir]], like [[compact]]) under
     * the table write lock, so no append can interleave; the counter,
     * the floor, and the snapshot cache are all untouched (cache rows
     * sit at or below the counter by construction). Same caller
@@ -1278,16 +1262,12 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * of orphan rows reclaimed; no-op (0) when the log is clean. */
   def vacuumOrphans(name: String): Long = tableLock(name).synchronized {
     val ctr = currentVersion(name)
-    val data = new java.io.File(s"${dir(name)}/data")
-    if (!data.exists()) return 0L
+    if (!dataDir(name).exists()) return 0L
     val raw = spark.read.schema(physSchema(name))
-      .parquet(s"${dir(name)}/data")
+      .parquet(dataDir(name).toString)
     val orphans = raw.where(col("_version") > ctr).count()
     if (orphans == 0L) return 0L
-    val tmp = s"${dir(name)}/data_vacuuming"
-    raw.where(col("_version") <= ctr)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapDataDir(name, tmp)
+    replaceDir(raw.where(col("_version") <= ctr), dataDir(name))
     orphans
   }
 
@@ -1380,7 +1360,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // a created-but-never-written table has no data dir yet; the batch
     // changeLog guards this — the stream must too (an empty dir streams
     // fine with an explicit schema, a MISSING path throws at start)
-    new java.io.File(s"${dir(name)}/data").mkdirs()
+    dataDir(name).mkdirs()
     // the TTL filter that changeLog documents as the single choke point
     // applies HERE too — a stream bootstrapping over an old log must
     // not emit changes every batch read path says no longer exist. The
@@ -1390,7 +1370,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     // young by construction, so a start-time literal loses nothing.
     ttlFiltered(name, toLogical(name,
         spark.readStream.schema(physSchema(name))
-          .parquet(s"${dir(name)}/data")))
+          .parquet(dataDir(name).toString)))
       .select(cdcCols(name): _*)
   }
 }
@@ -1438,6 +1418,11 @@ object GraftCatalog {
     case SnapCacheLeaf(root, _) => root
     case _ => path
   }
+
+  /** Where the catalog's replace-by-rename keeps `dest`'s previous
+    * copy between its two moves. */
+  private[graft] def asideOf(dest: java.io.File): java.io.File =
+    new java.io.File(dest.getParentFile, s"_aside_${dest.getName}")
 
   /** StructField metadata key marking a numeric UNSIGNED_* column whose
     * CHECK ≥ 0 is enforced on write (SURVEY §1.2). */

@@ -1837,6 +1837,55 @@ class CatalogSpec extends AnyFunSuite {
       s"cache plus tail: $tail")
   }
 
+  // Spark work of each catalog write, measured on the code before the
+  // writes shared one version reservation, one batch append and one
+  // replace-by-rename; a change here is a change in write cost.
+  test("catalog writes: Spark jobs, stages and tasks of upsert, delete, " +
+      "both compactions, vacuumOrphans, snapshot-cache builds and " +
+      "truncate") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("wp", StructType(Seq(
+      StructField("k", LongType), StructField("x", LongType))),
+      pk = Seq("k"))
+    def counted(f: => Any) = TestSpark.countJobs(f)._1
+    def rows() = cat.snapshot("wp").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val upsert = counted(
+      cat.upsert("wp", (1L to 40L).map(k => (k, k)).toDF("k", "x")))
+    cat.upsert("wp", (1L to 40L by 3).map(k => (k, -k)).toDF("k", "x"))
+    val delete = counted(cat.delete("wp", col("k") === 2L))
+    val expected = rows()
+    assert(expected.size == 39)
+    val cacheFirst = counted(cat.refreshSnapshotCache("wp"))
+    cat.upsert("wp", Seq((2L, 2L), (41L, 41L)).toDF("k", "x"))
+    val cacheIncremental = counted(cat.refreshSnapshotCache("wp"))
+    val compactFloored =
+      counted(cat.compact("wp", cat.currentVersion("wp") - 1L))
+    Seq((99L, 999L)).toDF("k", "x")
+      .withColumn("_version", lit(cat.currentVersion("wp") + 5L))
+      .withColumn("_deleted", lit(false))
+      .withColumn("_ts", lit(new java.sql.Timestamp(0L)))
+      .write.mode("append").parquet(s"${cat.tablePath("wp")}/data")
+    val (vacuum, reclaimed) = TestSpark.countJobs(cat.vacuumOrphans("wp"))
+    assert(reclaimed == 1L)
+    val compactFull = counted(cat.compact("wp"))
+    assert(rows() == expected + (2L -> 2L) + (41L -> 41L))
+    val truncate = counted(cat.truncate("wp"))
+    assert(rows().isEmpty)
+    val counts = Map("upsert" -> upsert, "delete" -> delete,
+      "cacheFirst" -> cacheFirst, "cacheIncremental" -> cacheIncremental,
+      "compactFloored" -> compactFloored, "vacuum" -> vacuum,
+      "compactFull" -> compactFull, "truncate" -> truncate)
+    def jc(j: Int, s: Int, t: Int) = TestSpark.JobCounts(j, s, t)
+    assert(counts == Map(
+      "upsert" -> jc(1, 1, 4), "delete" -> jc(2, 2, 5),
+      "cacheFirst" -> jc(2, 2, 4), "cacheIncremental" -> jc(2, 2, 6),
+      "compactFloored" -> jc(2, 2, 9), "vacuum" -> jc(3, 3, 7),
+      "compactFull" -> jc(2, 2, 3), "truncate" -> jc(0, 0, 0)),
+      s"write counts: $counts")
+  }
+
   test("IVM extremum gate: non-extremal retractions fold with ZERO " +
       "base-history access; extremum-losing ones recompute only " +
       "affected-PK history (LeftSemi below the collapse aggregate)") {
@@ -3047,6 +3096,26 @@ class CatalogSpec extends AnyFunSuite {
         "(publish-after-append invariant)")
   }
 
+  test("two snapshot-cache builds of one table at once both succeed") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("cb", StructType(Seq(StructField("k", LongType),
+      StructField("x", LongType))), pk = Seq("k"))
+    cat.upsert("cb", (1L to 2000L).map(k => (k, k)).toDF("k", "x"))
+    val v = cat.upsert("cb",
+      (1L to 2000L by 2).map(k => (k, -k)).toDF("k", "x"))
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val marks = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val threads = (0 until 2).map(_ => new Thread(() =>
+      try marks.add(cat.refreshSnapshotCache("cb"))
+      catch { case e: Throwable => errs.add(e) }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errs.isEmpty, s"a cache build failed: ${errs.toArray.mkString}")
+    assert(marks.toArray.toSeq == Seq(v, v))
+    assert(cat.snapCacheVersion("cb").contains(v))
+    assert(cat.snapshotServed("cb").count() == 2000L)
+  }
+
   test("a second catalog instance racing an in-flight write is refused " +
       "loudly; a sequential handoff between instances is fine") {
     import spark.implicits._
@@ -3090,6 +3159,71 @@ class CatalogSpec extends AnyFunSuite {
       thrown.getMessage.contains("another writer"),
       s"a foreign counter bump under an in-flight write must refuse " +
         s"loudly, got: $thrown")
+  }
+
+  test("a write that fails inside its Spark job publishes its version " +
+      "as an empty gap; the next write lands strictly above it") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    val unsigned = new MetadataBuilder()
+      .putBoolean(GraftCatalog.UnsignedKey, true).build()
+    cat.createTable("fp", StructType(Seq(StructField("k", LongType),
+      StructField("x", LongType, metadata = unsigned))), pk = Seq("k"))
+    val v0 = cat.upsert("fp", Seq((1L, 1L), (2L, 2L)).toDF("k", "x"))
+    def rows() = cat.snapshot("fp").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val before = rows()
+    // negative values only in the later partitions: the CHECK fails
+    // inside the write job's tasks, not while planning
+    val bad = spark.range(0, 8, 1, 4)
+      .select(col("id").as("k"), (lit(3L) - col("id")).as("x"))
+    val e = intercept[Exception](cat.upsert("fp", bad))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("cannot store negative value")), e)
+    assert(rows() == before, "a failed write must not change the snapshot")
+    assert(cat.currentVersion("fp") == v0 + 1L,
+      "the abandoned version must be published as a gap")
+    assert(spark.read.parquet(s"${cat.tablePath("fp")}/data")
+      .where(col("_version") > v0).isEmpty,
+      "the failed job must leave no rows in the log")
+    val v2 = cat.upsert("fp", Seq((3L, 3L)).toDF("k", "x"))
+    assert(v2 > v0 + 1L && cat.currentVersion("fp") == v2,
+      s"next write at $v2 after the gap at ${v0 + 1L}")
+    assert(rows() == before + (3L -> 3L))
+  }
+
+  test("a compaction cut between its two moves leaves the live log " +
+      "aside; re-registering the table moves it back") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("x", LongType)))
+    val cat = new GraftCatalog(spark, wh)
+    cat.createTable("cr", schema, pk = Seq("k"))
+    cat.upsert("cr", Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "x"))
+    cat.upsert("cr", Seq((2L, 25L)).toDF("k", "x"))
+    cat.delete("cr", col("k") === 1L)
+    def rows(c: GraftCatalog) = c.snapshot("cr").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val before = rows(cat)
+    assert(before == Set((2L, 25L), (3L, 30L)))
+    // the crash: the compacted copy is written and the live log moved
+    // aside, but the copy never moved in
+    val data = new java.io.File(s"${cat.tablePath("cr")}/data")
+    Seq((2L, 25L)).toDF("k", "x")
+      .write.parquet(s"${cat.tablePath("cr")}/_tmp_data")
+    assert(data.renameTo(GraftCatalog.asideOf(data)))
+    val cat2 = new GraftCatalog(spark, wh)
+    cat2.createTable("cr", schema, pk = Seq("k"))
+    assert(rows(cat2) == before,
+      "re-registering must restore the pre-compaction snapshot")
+    assert(cat2.changeLog("cr").count() == 5, "the full history is back")
+    assert(!GraftCatalog.asideOf(data).exists())
+    // the next compaction runs over the restored history
+    cat2.compact("cr")
+    assert(rows(cat2) == before)
+    assert(cat2.changeLog("cr").count() == 2)
   }
 
   test("orphan rows above the published counter are invisible to every " +

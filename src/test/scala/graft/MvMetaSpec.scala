@@ -127,4 +127,30 @@ class MvMetaSpec extends AnyFunSuite {
       Seq("ck")), Seq("seg"), Seq("price"), join)
     assert(layout(join) == joinLayout)
   }
+
+  test("a meta dir left with the pre-refresh file next to the new one " +
+      "reads the new meta") {
+    import spark.implicits._
+    val cat = new GraftCatalog(spark, tmp())
+    cat.createTable("t", StructType(Seq(StructField("k", LongType),
+      StructField("g", StringType), StructField("x", LongType))),
+      pk = Seq("k"))
+    cat.upsert("t", Seq((1L, "a", 10L)).toDF("k", "g", "x"))
+    val path = tmp()
+    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    val metaDir = new java.io.File(path, "meta")
+    def dataFiles() = metaDir.listFiles().filter(_.getName.startsWith("part-"))
+    val Array(pre) = dataFiles()
+    val preBytes = java.nio.file.Files.readAllBytes(pre.toPath)
+    val before = MvMeta.read(spark, path)
+    cat.upsert("t", Seq((2L, "b", 20L)).toDF("k", "g", "x"))
+    Materialize.refresh(cat, "t", path)
+    val after = MvMeta.read(spark, path)
+    assert(after != before)
+    // a crash between writing the new meta file and deleting the old
+    // one: both files sit in the dir
+    java.nio.file.Files.write(pre.toPath, preBytes)
+    assert(dataFiles().length == 2)
+    assert(MvMeta.read(spark, path) == after)
+  }
 }
