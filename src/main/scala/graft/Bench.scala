@@ -8,21 +8,28 @@ import java.nio.file.{Files, Paths}
   * — a plain df.count() lets Spark drop the final projection for
   * project-only queries and understates scan/expression cost.
   *
-  * Output contract (the driver captures only a ~4 KB tail of the run log,
-  * so a full-precision 90-query JSON line overflows it and loses the
-  * line's head — this has broken the driver parse in past rounds):
-  *  - the full per-query map goes to bench_out.json (and stdout, first);
-  *  - the FINAL stdout line is a compact total-only JSON object that
-  *    always fits the tail and is what the driver parses.
+  * Each entry is timed by [[Measure.best]]: a quiesce pause, then the
+  * adaptive best-of-N, so full-battery per-query numbers track isolated
+  * runs despite same-JVM interference (GC debt, codegen-cache churn from
+  * 200+ distinct plans).
   *
-  * Same-JVM interference (GC debt, codegen-cache churn from 90+ distinct
-  * plans) has made full-battery per-query numbers diverge 3–4× from
-  * isolated runs. Mitigation: a GC quiescence pause before each query and
-  * best-of-two timing — the min discards one-off JIT/GC/compile stalls
-  * while still timing the full plan execution, so full-battery numbers
-  * track isolated runs.
+  * Output contract (the driver keeps only a ~4 KB tail of the run log):
+  *  - bench_out.json and bench_out.c<cpus>.json hold the full record:
+  *    `queries` (name → best seconds, null for a failed entry), `jobs`
+  *    and `tasks` (the Spark work of the entry's last, warm run) and
+  *    `artifact_build` (seconds of each session artifact build);
+  *  - stdout prints two lines, each at most 4 KB: a per-query line
+  *    (the slowest entries at 2 decimals, failures first as null, until
+  *    [[PerQueryBudget]] bytes; then `rest_n` and `rest_sec` for the
+  *    rest), then the total-only line, LAST, which the driver parses.
   */
 object Bench {
+  /** One entry's result: its best seconds and its last run's work. */
+  final case class Entry(secs: Double, counts: Measure.JobCounts)
+
+  /** Byte budget of the per-query stdout line. */
+  val PerQueryBudget = 3500
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
@@ -40,79 +47,25 @@ object Bench {
     // a failed query records None — NOT a phantom sub-second "timing" of
     // the failure path (that shape hid q_date_round's crash for two
     // rounds); failures surface as null in the map + a "failed" count
-    // catalog mutation ops (createTable/upsert/delete) per run —
-    // reported additively as fixture_ops WITHOUT changing any
-    // per-query number: the MV-family entries are fixture-ingest
-    // bound, and this makes serve/refresh regressions visible under
-    // the ingest cost instead of hidden by it
-    val fixtureSecs =
-      scala.collection.mutable.Map.empty[String, Double]
-    def timeOnce(name: String): Option[Double] = {
-      graft.sources.GraftCatalog.OpTiming.reset()
-      val t0 = System.nanoTime()
-      try { execute(name); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
+    val results = names.sorted.map { name =>
+      name -> (try {
+        val (secs, last) = Measure.best(spark)(execute(name))
+        Some(Entry(secs, last.counts))
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         None
-      } finally {
-        val f = graft.sources.GraftCatalog.OpTiming.get
-        if (f > 0) fixtureSecs(name) =
-          math.min(f, fixtureSecs.getOrElse(name, Double.MaxValue))
-      }
+      })
     }
-    val results = names.sorted.map { name =>
-      // deterministic cleanup between queries — the shared recipe
-      // (rationale at GraftSession.quiesce)
-      GraftSession.quiesce(spark)
-      // adaptive best-of-N: the shared host shows episodic 15-30s
-      // whole-JVM stalls that span BOTH runs of a best-of-two (a pure
-      // scan-local codegen query has benched 15.9s vs 0.1s isolated), so
-      // keep sampling — up to 4 runs — until the two fastest agree
-      // within 30%, and report the min. Stable queries stop at 2 runs.
-      name -> {
-        val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
-        var failed = false
-        while (!failed && runs.size < 4 && (runs.size < 2 || {
-            val s = runs.sorted; s(1) > s(0) * 1.3 })) {
-          timeOnce(name) match {
-            case Some(t) => runs += t
-            case None => failed = true
-          }
-        }
-        if (failed) None else Some(runs.min)
-      }
-    }
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // ASCENDING by time (failures last, next to the total line): the
-    // driver keeps only a ~4 KB log tail, so whatever ends the line
-    // survives truncation — the descending order used through r16 kept
-    // the CHEAP entries and truncated the expensive ones, the exact
-    // opposite of the intent (two rounds of empty per_query in PERF)
-    val qs = results
-      .sortBy { case (_, v) => v.getOrElse(Double.MaxValue) }
-      .map { case (k, v) => "\"" + k + "\":" + v.map(fmt).getOrElse("null") }
-      .mkString("{", ",", "}")
-    val failed = results.count(_._2.isEmpty)
-    val total = results.flatMap(_._2).sum
     // persisted-index builds happen once per session (queries.Artifacts)
     // and the adaptive min discards the build-bearing first run, so the
     // per-query map times the SERVING path; the build cost is reported
-    // here once, not hidden
+    // once, not hidden
     import scala.jdk.CollectionConverters._
     // buildSeconds is keyed (name, dir); report THIS run's dir only —
     // a both-scale JVM would otherwise mix scales in one map
     val builds = graft.queries.Artifacts.buildSeconds.asScala.toSeq
-      .collect { case ((n, d), v) if d == sfDir => n -> v }.sorted
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // additive serve-vs-fixture split (min across the query's runs,
-    // mirroring the reported min time); the driver total-line and the
-    // per-query numbers are untouched
-    val fixtures = fixtureSecs.toSeq.sorted
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed,"artifact_build":$builds,"fixture_ops":$fixtures,"queries":$qs,"sf":"$sfDir"}"""
+      .collect { case ((n, d), v) if d == sfDir => n -> v.doubleValue }
+    val full = fullRecord(results, builds, sfDir)
     Files.writeString(Paths.get("bench_out.json"), full + "\n")
     // per-core-count archive: the driver runs the bench at two core
     // counts back-to-back, and bench_out.json alone kept only the last
@@ -120,10 +73,58 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     Files.writeString(Paths.get(s"bench_out.c$cpus.json"), full + "\n")
-    println(full)
-    // driver-parseable summary: MUST be the last stdout line (fits the tail)
-    println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed,"sf":"$sfDir"}""")
+    stdoutLines(results, sfDir).foreach(println)
     spark.stop()
+  }
+
+  private def fmt(v: Double): String =
+    "%.3f".formatLocal(java.util.Locale.ROOT, v)
+  private def fmt2(v: Double): String =
+    "%.2f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def total(results: Seq[(String, Option[Entry])]): Double =
+    results.flatMap(_._2).map(_.secs).sum
+  private def failed(results: Seq[(String, Option[Entry])]): Int =
+    results.count(_._2.isEmpty)
+
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** The bench_out.json record: every entry ascending by time, failures
+    * (null) last. */
+  def fullRecord(results: Seq[(String, Option[Entry])],
+      builds: Seq[(String, Double)], sf: String): String = {
+    val sorted = results.sortBy { case (_, e) =>
+      e.map(_.secs).getOrElse(Double.MaxValue) }
+    def map(f: Entry => String) =
+      obj(sorted.map { case (k, e) => k -> e.map(f).getOrElse("null") })
+    val artifacts = obj(builds.sorted.map { case (k, v) => k -> fmt(v) })
+    s"""{"metric":"total","value":${fmt(total(results))},"unit":"sec",""" +
+      s""""failed":${failed(results)},"artifact_build":$artifacts,""" +
+      s""""queries":${map(e => fmt(e.secs))},""" +
+      s""""jobs":${map(_.counts.jobs.toString)},""" +
+      s""""tasks":${map(_.counts.tasks.toString)},"sf":"$sf"}"""
+  }
+
+  /** The stdout lines: the per-query line, then the total line, which
+    * must come last. */
+  def stdoutLines(results: Seq[(String, Option[Entry])],
+      sf: String): Seq[String] = {
+    // failures first, then slowest first: whatever the budget cuts off
+    // is the cheap tail, summed into rest_n / rest_sec
+    val ranked = results.sortBy { case (_, e) =>
+      e.map(-_.secs).getOrElse(Double.MinValue) }
+    def line(n: Int) = {
+      val (shown, rest) = ranked.splitAt(n)
+      s"""{"metric":"per_query","unit":"sec",""" +
+        s""""queries":${obj(shown.map { case (k, e) =>
+          k -> e.map(x => fmt2(x.secs)).getOrElse("null") })},""" +
+        s""""rest_n":${rest.size},"rest_sec":${fmt2(total(rest))}}"""
+    }
+    val fits = (0 to ranked.size).takeWhile(n =>
+      line(n).getBytes("UTF-8").length <= PerQueryBudget)
+    Seq(line(fits.last),
+      s"""{"metric":"total","value":${fmt(total(results))},"unit":"sec",""" +
+        s""""failed":${failed(results)},"sf":"$sf"}""")
   }
 }

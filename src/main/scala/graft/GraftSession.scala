@@ -55,20 +55,4 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Between-measurement cleanup shared by Bench and ScaleRehearsal —
-    * ONE copy of the hard-won stability recipe (localCheckpoint blocks
-    * and cached tables stay pinned until driver GC; across 140+ queries
-    * that squeezed execution memory into 5-10× in-battery slowdowns),
-    * so the two harnesses can never drift apart and stop measuring
-    * comparably. */
-  def quiesce(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    spark.catalog.clearCache()
-    // drain GC debt left by the previous query so its cost isn't
-    // billed to the next measurement
-    System.gc()
-    Thread.sleep(50)
-  }
 }

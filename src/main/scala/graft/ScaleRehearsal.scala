@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   *  - embeddings replicate with vec_id shifted and a deterministic
   *    per-replica sign flip on one dimension (same reason).
   *
-  * Timing is best-of-2 per query per scale with the same unpersist +
-  * GC quiescence discipline as [[Bench]].
+  * Timing is [[Measure.best]] per query per scale — the same quiesce
+  * and best-of-N as [[Bench]]; each refresh rehearsal times its
+  * refresh calls one-shot through [[Measure.quiesced]].
   */
 object ScaleRehearsal {
 
@@ -74,200 +75,115 @@ object ScaleRehearsal {
       buildFixture(spark, base, out, factor)
     }
 
-    def timeBest2(name: String, dir: String): Option[Double] = {
-      def once(): Option[Double] = {
-        GraftSession.quiesce(spark)
-        val t0 = System.nanoTime()
-        try {
-          SparkEntry.queries(name)(spark, dir)
-            .queryExecution.toRdd.count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[scale] $name FAILED at $dir: " +
-            e.getMessage.linesIterator.next())
-          None
-        }
+    // best-of-N over the full physical plan, as [[Bench]] times it
+    def best(name: String, dir: String): Option[Double] =
+      try Some(Measure.best(spark)(SparkEntry.queries(name)(spark, dir)
+        .queryExecution.toRdd.count())._1)
+      catch { case e: Throwable =>
+        System.err.println(s"[scale] $name FAILED at $dir: " +
+          e.getMessage.linesIterator.next())
+        None
       }
-      for (a <- once(); b <- once()) yield math.min(a, b)
+    // fixed deltas against a synthetic base grown n1 -> n1 × bigF: the
+    // fixture corpora are ~150k docs, where a hidden O(table) term
+    // costs milliseconds and reads "flat" no matter what
+    val n1 = 10L * 1000 * 1000
+    val bigF = 3
+    def big(names: String*)(secs: Long => Seq[Double]): Seq[Row] = {
+      val (a, b) = (secs(n1), secs(n1 * bigF))
+      names.indices.map(i => row(names(i), bigF, a(i), b(i),
+        label = if (i == 0) s"${names(i)} (10M vs 30M rows)" else ""))
     }
-
-    val rows = selected
-      .filterNot(Set("ivm", "ivmgrain", "ivmbig", "ivmbucket", "cdc",
-        "joinivm", "chainivm", "deepchain", "leftivm", "fullivm"))
-      .flatMap { q =>
-      val t1 = timeBest2(q, base)
-      val tN = timeBest2(q, out)
-      (t1, tN) match {
-        case (Some(a), Some(b)) =>
-          val exp = math.log(b / a) / math.log(factor.toDouble)
-          println(f"[scale] $q%-28s base=$a%7.2fs x$factor=$b%8.2fs " +
-            f"exponent=$exp%5.2f")
-          Some((q, a, b, exp))
-        case _ => None
-      }
-    } ++ (if (!selected.contains("ivm")) Nil else {
-      val a = ivmRefreshSeconds(spark, base)
-      val b = ivmRefreshSeconds(spark, out)
-      val exp = math.log(b / a) / math.log(factor.toDouble)
-      println(f"[scale] ivm_refresh_fixed_delta     base=$a%7.2fs " +
-        f"x$factor=$b%8.2fs exponent=$exp%5.2f")
-      Seq(("ivm_refresh_fixed_delta", a, b, exp))
-    }) ++ (if (!selected.contains("ivmgrain")) Nil else {
-      val a = ivmGrainRefreshSeconds(spark, base)
-      val b = ivmGrainRefreshSeconds(spark, out)
-      val exp = math.log(b / a) / math.log(factor.toDouble)
-      println(f"[scale] ivm_grain_refresh_fixed_delta base=$a%7.2fs " +
-        f"x$factor=$b%8.2fs exponent=$exp%5.2f")
-      Seq(("ivm_grain_refresh_fixed_delta", a, b, exp))
-    }) ++ (if (!selected.contains("ivmbig")) Nil else {
-      // big-base rehearsal: the fixture corpora are ~150k docs, where a
-      // hidden O(table) term costs milliseconds and reads "flat" no
-      // matter what. This one uses a 10M-row synthetic base (vs 30M)
-      // so an O(table) refresh term is actually measurable.
-      val n1 = 10L * 1000 * 1000
-      val bigF = 3
-      val (a1, a8, a64) = ivmBigSeconds(spark, n1)
-      val (b1, b8, b64) = ivmBigSeconds(spark, n1 * bigF)
-      def ex(a: Double, b: Double) = math.log(b / a) / math.log(bigF.toDouble)
-      println(f"[scale] ivm_big_nonextremal (10M vs 30M rows) " +
-        f"base=$a1%7.2fs x$bigF=$b1%8.2fs exponent=${ex(a1, b1)}%5.2f")
-      println(f"[scale] ivm_big_extremal_k8             " +
-        f"base=$a8%7.2fs x$bigF=$b8%8.2fs exponent=${ex(a8, b8)}%5.2f")
-      println(f"[scale] ivm_big_extremal_k64            " +
-        f"base=$a64%7.2fs x$bigF=$b64%8.2fs exponent=${ex(a64, b64)}%5.2f")
-      Seq(("ivm_big_nonextremal", a1, b1, ex(a1, b1)),
-        ("ivm_big_extremal_k8", a8, b8, ex(a8, b8)),
-        ("ivm_big_extremal_k64", a64, b64, ex(a64, b64)))
-    }) ++ (if (!selected.contains("ivmbucket")) Nil else {
-      // state-write axis: GROUP count ×5 with bucket size held constant
-      // (B scales with G) — legacy rewrites the whole state per refresh
-      // (exponent → 1), the bucket manifest rewrites touched buckets
-      // only (exponent → 0)
-      val g1 = 2L * 1000 * 1000
-      val bigF = 5
-      val bPer = 62500L // target groups per bucket
-      val (l1, b1, lm1, bm1) = ivmBucketedSeconds(spark, g1,
-        (g1 / bPer).toInt)
-      val (l5, b5, lm5, bm5) = ivmBucketedSeconds(spark, g1 * bigF,
-        (g1 * bigF / bPer).toInt)
-      def ex(a: Double, b: Double) = math.log(b / a) / math.log(bigF.toDouble)
-      println(f"[scale] ivm_state_write_legacy (2M vs 10M groups) " +
-        f"base=$l1%7.2fs x$bigF=$l5%8.2fs exponent=${ex(l1, l5)}%5.2f " +
-        f"(wrote $lm1%.1f -> $lm5%.1f MB, exponent=${ex(lm1, lm5)}%5.2f)")
-      println(f"[scale] ivm_state_write_bucketed            " +
-        f"base=$b1%7.2fs x$bigF=$b5%8.2fs exponent=${ex(b1, b5)}%5.2f " +
-        f"(wrote $bm1%.1f -> $bm5%.1f MB, exponent=${ex(bm1, bm5)}%5.2f)")
-      Seq(("ivm_state_write_legacy_sec", l1, l5, ex(l1, l5)),
-        ("ivm_state_write_legacy_mb", lm1, lm5, ex(lm1, lm5)),
-        ("ivm_state_write_bucketed_sec", b1, b5, ex(b1, b5)),
-        ("ivm_state_write_bucketed_mb", bm1, bm5, ex(bm1, bm5)))
-    }) ++ (if (!selected.contains("joinivm")) Nil else {
-      // binary-join IVM: fixed-size deltas on EACH side of a fact ⋈
-      // dim MV as the fact grows 10M → 30M rows. The contract under
-      // test is O(delta × fan-out) per refresh, NOT O(R) + O(S): the
-      // fact side declares its FK immutable, so both legs' "other
-      // side" reads are zone-bounded below the collapse.
-      val n1 = 10L * 1000 * 1000
-      val bigF = 3
-      val (aR, aS, aF) = joinIvmSeconds(spark, n1)
-      val (bR, bS, bF) = joinIvmSeconds(spark, n1 * bigF)
-      def ex(a: Double, b: Double) = math.log(b / a) / math.log(bigF.toDouble)
-      println(f"[scale] joinivm_fact_delta (10M vs 30M rows) " +
-        f"base=$aR%7.2fs x$bigF=$bR%8.2fs exponent=${ex(aR, bR)}%5.2f")
-      println(f"[scale] joinivm_dim_delta              " +
-        f"base=$aS%7.2fs x$bigF=$bS%8.2fs exponent=${ex(aS, bS)}%5.2f")
-      println(f"[scale] joinivm_dim_delta_fullscan     " +
-        f"base=$aF%7.2fs x$bigF=$bF%8.2fs exponent=${ex(aF, bF)}%5.2f")
-      Seq(("joinivm_fact_delta", aR, bR, ex(aR, bR)),
-        ("joinivm_dim_delta", aS, bS, ex(aS, bS)),
-        ("joinivm_dim_delta_fullscan", aF, bF, ex(aF, bF)))
-    }) ++ (if (!selected.contains("chainivm")) Nil else {
-      // 3-table chain: the N-way telescoping legs at 10M vs 30M fact
-      // rows — fact and dim deltas assert the recompute-free fold;
-      // the part leg's retraction can tie group extrema (its fan-out
-      // spans the x range), so it times the gated path honestly.
-      val n1 = 10L * 1000 * 1000
-      val bigF = 3
-      val (aR, aS, aP) = chainIvmSeconds(spark, n1)
-      val (bR, bS, bP) = chainIvmSeconds(spark, n1 * bigF)
-      def ex(a: Double, b: Double) = math.log(b / a) / math.log(bigF.toDouble)
-      println(f"[scale] chainivm_fact_delta (10M vs 30M rows) " +
-        f"base=$aR%7.2fs x$bigF=$bR%8.2fs exponent=${ex(aR, bR)}%5.2f")
-      println(f"[scale] chainivm_dim_delta             " +
-        f"base=$aS%7.2fs x$bigF=$bS%8.2fs exponent=${ex(aS, bS)}%5.2f")
-      println(f"[scale] chainivm_part_delta            " +
-        f"base=$aP%7.2fs x$bigF=$bP%8.2fs exponent=${ex(aP, bP)}%5.2f")
-      Seq(("chainivm_fact_delta", aR, bR, ex(aR, bR)),
-        ("chainivm_dim_delta", aS, bS, ex(aS, bS)),
-        ("chainivm_part_delta", aP, bP, ex(aP, bP)))
-    }) ++ (if (!selected.contains("deepchain")) Nil else {
+    val sections: Seq[(String, () => Seq[Row])] = Seq(
+      "ivm" -> (() => Seq(row("ivm_refresh_fixed_delta", factor,
+        ivmRefreshSeconds(spark, base), ivmRefreshSeconds(spark, out)))),
+      "ivmgrain" -> (() => Seq(row("ivm_grain_refresh_fixed_delta", factor,
+        ivmGrainRefreshSeconds(spark, base),
+        ivmGrainRefreshSeconds(spark, out)))),
+      "ivmbig" -> (() => big("ivm_big_nonextremal", "ivm_big_extremal_k8",
+        "ivm_big_extremal_k64")(ivmBigSeconds(spark, _))),
+      "ivmbucket" -> (() => {
+        // state-write axis: GROUP count ×5 with bucket size held
+        // constant (B scales with G) — legacy rewrites the whole state
+        // per refresh (exponent → 1), the bucket manifest rewrites
+        // touched buckets only (exponent → 0)
+        val g1 = 2L * 1000 * 1000
+        val f = 5
+        val bPer = 62500L // target groups per bucket
+        val (l1, b1, lm1, bm1) = ivmBucketedSeconds(spark, g1,
+          (g1 / bPer).toInt)
+        val (l5, b5, lm5, bm5) = ivmBucketedSeconds(spark, g1 * f,
+          (g1 * f / bPer).toInt)
+        def wrote(a: Double, b: Double) =
+          f" (wrote $a%.1f -> $b%.1f MB, exponent=${exponent(a, b, f)}%5.2f)"
+        Seq(row("ivm_state_write_legacy_sec", f, l1, l5,
+            label = "ivm_state_write_legacy (2M vs 10M groups)",
+            tail = wrote(lm1, lm5)),
+          ("ivm_state_write_legacy_mb", lm1, lm5, exponent(lm1, lm5, f)),
+          row("ivm_state_write_bucketed_sec", f, b1, b5,
+            label = "ivm_state_write_bucketed", tail = wrote(bm1, bm5)),
+          ("ivm_state_write_bucketed_mb", bm1, bm5, exponent(bm1, bm5, f)))
+      }),
+      // binary-join IVM: fixed-size deltas on EACH side of a fact ⋈ dim
+      // MV. The contract under test is O(delta × fan-out) per refresh,
+      // NOT O(R) + O(S): the fact side declares its FK immutable, so
+      // both legs' "other side" reads are zone-bounded below the
+      // collapse.
+      "joinivm" -> (() => big("joinivm_fact_delta", "joinivm_dim_delta",
+        "joinivm_dim_delta_fullscan")(joinIvmSeconds(spark, _))),
+      // 3-table chain: the N-way telescoping legs — fact and dim deltas
+      // assert the recompute-free fold; the part leg's retraction can
+      // tie group extrema (its fan-out spans the x range), so it times
+      // the gated path honestly.
+      "chainivm" -> (() => big("chainivm_fact_delta", "chainivm_dim_delta",
+        "chainivm_part_delta")(chainIvmSeconds(spark, _))),
       // 5-table chain (fact + 4 sides): leg COUNT grows linearly with
-      // chain depth — each of the 5 legs joins all 5 tables — and
-      // every leg's cache/read bound must hold at depth, so fixed-size
-      // deltas must stay flat as the fact grows 10M → 30M rows.
-      val n1 = 10L * 1000 * 1000
-      val bigF = 3
-      val (aR, aS, aT) = deepChainIvmSeconds(spark, n1)
-      val (bR, bS, bT) = deepChainIvmSeconds(spark, n1 * bigF)
-      def ex(a: Double, b: Double) = math.log(b / a) / math.log(bigF.toDouble)
-      println(f"[scale] deepchain_fact_delta (10M vs 30M rows) " +
-        f"base=$aR%7.2fs x$bigF=$bR%8.2fs exponent=${ex(aR, bR)}%5.2f")
-      println(f"[scale] deepchain_dim_delta            " +
-        f"base=$aS%7.2fs x$bigF=$bS%8.2fs exponent=${ex(aS, bS)}%5.2f")
-      println(f"[scale] deepchain_tail_delta           " +
-        f"base=$aT%7.2fs x$bigF=$bT%8.2fs exponent=${ex(aT, bT)}%5.2f")
-      Seq(("deepchain_fact_delta", aR, bR, ex(aR, bR)),
-        ("deepchain_dim_delta", aS, bS, ex(aS, bS)),
-        ("deepchain_tail_delta", aT, bT, ex(aT, bT)))
-    }) ++ (if (!selected.contains("leftivm")) Nil else {
+      // chain depth — each of the 5 legs joins all 5 tables — and every
+      // leg's cache/read bound must hold at depth.
+      "deepchain" -> (() => big("deepchain_fact_delta",
+        "deepchain_dim_delta", "deepchain_tail_delta")(
+        deepChainIvmSeconds(spark, _))),
       // LEFT-outer binary join: the null-extension delta algebra —
       // fixed interior fact updates and a fixed dangling→matched
       // transition batch must both stay flat as the fact grows.
-      val n1 = 10L * 1000 * 1000
-      val bigF = 3
-      val (aR, aT) = leftIvmSeconds(spark, n1)
-      val (bR, bT) = leftIvmSeconds(spark, n1 * bigF)
-      def ex(a: Double, b: Double) = math.log(b / a) / math.log(bigF.toDouble)
-      println(f"[scale] leftivm_fact_delta (10M vs 30M rows) " +
-        f"base=$aR%7.2fs x$bigF=$bR%8.2fs exponent=${ex(aR, bR)}%5.2f")
-      println(f"[scale] leftivm_transitions           " +
-        f"base=$aT%7.2fs x$bigF=$bT%8.2fs exponent=${ex(aT, bT)}%5.2f")
-      Seq(("leftivm_fact_delta", aR, bR, ex(aR, bR)),
-        ("leftivm_transitions", aT, bT, ex(aT, bT)))
-    }) ++ (if (!selected.contains("fullivm")) Nil else {
-      // FULL-outer N-way star chain: the r14 decomposition (LEFT part
-      // + one independent side-dangling part per side, each riding two
+      "leftivm" -> (() => big("leftivm_fact_delta", "leftivm_transitions")(
+        leftIvmSeconds(spark, _))),
+      // FULL-outer N-way star chain: the r14 decomposition (LEFT part +
+      // one independent side-dangling part per side, each riding two
       // telescoping legs over the fact's null-extension indicator) —
-      // fixed deltas drive every transition shape while the fact grows
-      // 10M → 30M rows, proving the per-side dangling parts pick up no
-      // O(table) term.
-      val n1 = 10L * 1000 * 1000
-      val bigF = 3
-      val (aI, aT, aD) = fullIvmSeconds(spark, n1)
-      val (bI, bT, bD) = fullIvmSeconds(spark, n1 * bigF)
-      def ex(a: Double, b: Double) = math.log(b / a) / math.log(bigF.toDouble)
-      println(f"[scale] fullivm_fact_delta (10M vs 30M rows) " +
-        f"base=$aI%7.2fs x$bigF=$bI%8.2fs exponent=${ex(aI, bI)}%5.2f")
-      println(f"[scale] fullivm_transitions           " +
-        f"base=$aT%7.2fs x$bigF=$bT%8.2fs exponent=${ex(aT, bT)}%5.2f")
-      println(f"[scale] fullivm_redangle              " +
-        f"base=$aD%7.2fs x$bigF=$bD%8.2fs exponent=${ex(aD, bD)}%5.2f")
-      Seq(("fullivm_fact_delta", aI, bI, ex(aI, bI)),
-        ("fullivm_transitions", aT, bT, ex(aT, bT)),
-        ("fullivm_redangle", aD, bD, ex(aD, bD)))
-    }) ++ (if (!selected.contains("cdc")) Nil else {
-      val a = cdcMvFreshnessSeconds(spark, base)
-      val b = cdcMvFreshnessSeconds(spark, out)
-      val exp = math.log(b / a) / math.log(factor.toDouble)
-      println(f"[scale] cdc_mv_freshness_per_batch  base=$a%7.2fs " +
-        f"x$factor=$b%8.2fs exponent=$exp%5.2f")
-      Seq(("cdc_mv_freshness_per_batch", a, b, exp))
-    })
+      // fixed deltas drive every transition shape, proving the per-side
+      // dangling parts pick up no O(table) term.
+      "fullivm" -> (() => big("fullivm_fact_delta", "fullivm_transitions",
+        "fullivm_redangle")(fullIvmSeconds(spark, _))),
+      "cdc" -> (() => Seq(row("cdc_mv_freshness_per_batch", factor,
+        cdcMvFreshnessSeconds(spark, base),
+        cdcMvFreshnessSeconds(spark, out)))))
+
+    val rows = selected.filterNot(sections.map(_._1).toSet).flatMap { q =>
+      for (a <- best(q, base); b <- best(q, out)) yield row(q, factor, a, b)
+    } ++ sections.collect { case (k, run) if selected.contains(k) => run() }
+      .flatten
     val json = rows.map { case (q, a, b, e) =>
       f"""{"q":"$q","base_sec":$a%.3f,"scaled_sec":$b%.3f,"exponent":$e%.3f}"""
     }.mkString("[", ",", "]")
     println(s"""{"metric":"scale_rehearsal","factor":$factor,"rows":$json}""")
     spark.stop()
+  }
+
+  /** (name, base value, scaled value, scaling exponent) */
+  private type Row = (String, Double, Double, Double)
+
+  private def exponent(a: Double, b: Double, factor: Int): Double =
+    math.log(b / a) / math.log(factor.toDouble)
+
+  /** One result row: prints its `[scale]` line (`label`, default the
+    * name, then `tail`) and returns it for the JSON summary. */
+  private def row(name: String, factor: Int, a: Double, b: Double,
+      label: String = "", tail: String = ""): Row = {
+    val exp = exponent(a, b, factor)
+    println(f"[scale] ${if (label.isEmpty) name else label}%-28s " +
+      f"base=$a%7.2fs x$factor=$b%8.2fs exponent=$exp%5.2f$tail")
+    (name, a, b, exp)
   }
 
   /** Refresh seconds for a FIXED-size delta (100 updated + 100 new
@@ -299,10 +215,8 @@ object ScaleRehearsal {
       .withColumn("n_chars", col("n_chars") + 7))
     cat.upsert("d", docs.where(col("doc_id") < 100)
       .withColumn("doc_id", col("doc_id") + maxId + 1))
-    GraftSession.quiesce(spark)
-    val t0 = System.nanoTime()
-    graft.operators.Materialize.refresh(cat, "d", mv)
-    (System.nanoTime() - t0) / 1e9
+    Measure.quiesced(spark)(
+      graft.operators.Materialize.refresh(cat, "d", mv)).secs
   }
 
   /** Refresh seconds for a FIXED-size delta against a DAY-GRAIN MV
@@ -341,10 +255,8 @@ object ScaleRehearsal {
     val maxEid = ev.agg(max(col("event_id"))).head.getLong(0)
     cat.upsert("e", delta
       .withColumn("event_id", col("event_id") + maxEid + 1))
-    GraftSession.quiesce(spark)
-    val t0 = System.nanoTime()
-    graft.operators.Materialize.refresh(cat, "e", mv)
-    (System.nanoTime() - t0) / 1e9
+    Measure.quiesced(spark)(
+      graft.operators.Materialize.refresh(cat, "e", mv)).secs
   }
 
   /** Big-base IVM refresh rehearsal: a synthetic n-row catalog table
@@ -363,7 +275,7 @@ object ScaleRehearsal {
     * Returns (non-extremal sec, extremal K=8 sec, extremal K=64 sec);
     * only the refresh calls are timed. */
   private def ivmBigSeconds(spark: SparkSession,
-      n: Long): (Double, Double, Double) = {
+      n: Long): Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val wh = java.nio.file.Files
       .createTempDirectory("graft_scale_ivmbig").toString
@@ -387,13 +299,11 @@ object ScaleRehearsal {
     graft.operators.Materialize.build(cat, "b", Seq("g"), Seq("x"), mv)
     def timedRefresh(expectRecompute: Boolean, what: String)
         : (Double, Long) = {
-      GraftSession.quiesce(spark)
-      val t0 = System.nanoTime()
-      val r = graft.operators.Materialize.refresh(cat, "b", mv)
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(r.recomputeRan == expectRecompute,
+      val m = Measure.quiesced(spark)(
+        graft.operators.Materialize.refresh(cat, "b", mv))
+      require(m.value.recomputeRan == expectRecompute,
         s"$what: expected recomputeRan=$expectRecompute")
-      (sec, r.affectedGroups)
+      (m.secs, m.value.affectedGroups)
     }
     // 100 NON-extremal updates (x 510 -> 505, strictly inside (10, 1009))
     cat.upsert("b", rows(expr("id % 1000 = 500") && col("id") < 100000L)
@@ -410,7 +320,20 @@ object ScaleRehearsal {
     val (t64, k64) = timedRefresh(expectRecompute = true, "extremal K=64")
     require(k64 == 64,
       s"K=64 delta must gate in exactly 64 groups, got $k64")
-    (tNon, t8, t64)
+    Seq(tNon, t8, t64)
+  }
+
+  /** One quiesced, timed join-MV refresh; `assertNoRecompute` holds an
+    * interior delta to the recompute-free fold. */
+  private def timedJoinRefresh(cat: graft.sources.GraftCatalog,
+      path: String, what: String,
+      assertNoRecompute: Boolean = true): Double = {
+    val m = Measure.quiesced(cat.session)(
+      graft.operators.MaterializeJoin.refresh(cat, path))
+    if (assertNoRecompute)
+      require(!m.value.recomputeRan,
+        s"$what: interior delta must fold with zero recompute")
+    m.secs
   }
 
   /** Binary-join IVM refresh seconds for FIXED-size deltas as the fact
@@ -423,7 +346,7 @@ object ScaleRehearsal {
     * read is zone-bounded BELOW the collapse; the ΔR leg's dim read
     * bounds via the dim PK. Returns (factDeltaSec, dimDeltaSec). */
   private def joinIvmSeconds(spark: SparkSession, n: Long)
-      : (Double, Double, Double) = {
+      : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val wh = java.nio.file.Files
       .createTempDirectory("graft_scale_joinivm").toString
@@ -451,29 +374,20 @@ object ScaleRehearsal {
     // falls back to the above-collapse filter (full fact read)
     graft.operators.MaterializeJoin.build(cat,
       js.copy(leftKeysImmutable = false), Seq("seg"), Seq("x"), mvScan)
-    def timedRefresh(path: String, what: String): Double = {
-      GraftSession.quiesce(spark)
-      val t0 = System.nanoTime()
-      val r = graft.operators.MaterializeJoin.refresh(cat, path)
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(!r.recomputeRan,
-        s"$what: non-extremal delta must fold with zero recompute")
-      sec
-    }
     // 100 fact-price updates, x 510 -> 505 (strictly inside (10, 1009))
     cat.upsert("r", facts(expr("id % 1000 = 500") && col("id") < 100000L)
       .withColumn("x", lit(505L)))
-    val tFact = timedRefresh(mv, "fact delta")
+    val tFact = timedJoinRefresh(cat, mv, "fact delta")
     // 100 dim regroupings whose fan-out rows carry x in 310..409 only
     // (jk % 10 = 3 → k % 1000 in 300..399), far from either extremum
     cat.upsert("s", spark.range(n / 100)
       .where(expr("id % 10 = 3") && col("id") < 1000L)
       .select(col("id").as("jk"), ((col("id") + 17) % 64).as("seg")))
-    val tDim = timedRefresh(mv, "dim delta")
+    val tDim = timedJoinRefresh(cat, mv, "dim delta")
     // the control folds BOTH deltas in one refresh; its dominant term
     // is the ΔS leg's un-prefiltered fact read, which is the point
-    val tScan = timedRefresh(mvScan, "combined delta, fallback")
-    (tFact, tDim, tScan)
+    val tScan = timedJoinRefresh(cat, mvScan, "combined delta, fallback")
+    Seq(tFact, tDim, tScan)
   }
 
   /** 3-table chain refresh seconds for FIXED-size deltas as the fact
@@ -484,7 +398,7 @@ object ScaleRehearsal {
     * honest no-zone case). All deltas non-extremal (asserted).
     * Returns (factDeltaSec, dimDeltaSec, partDeltaSec). */
   private def chainIvmSeconds(spark: SparkSession, n: Long)
-      : (Double, Double, Double) = {
+      : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val wh = java.nio.file.Files
       .createTempDirectory("graft_scale_chainivm").toString
@@ -517,24 +431,15 @@ object ScaleRehearsal {
         factKeysImmutable = true)))
     graft.operators.MaterializeJoin.build(cat, cs,
       Seq("seg", "brand"), Seq("x"), mv)
-    def timedRefresh(what: String): Double = {
-      GraftSession.quiesce(spark)
-      val t0 = System.nanoTime()
-      val r = graft.operators.MaterializeJoin.refresh(cat, mv)
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(!r.recomputeRan,
-        s"$what: non-extremal delta must fold with zero recompute")
-      sec
-    }
     // 100 fact-measure updates, x 510 -> 505 (strictly interior)
     cat.upsert("r", facts(expr("id % 1000 = 500") && col("id") < 100000L)
       .withColumn("x", lit(505L)))
-    val tFact = timedRefresh("fact delta")
+    val tFact = timedJoinRefresh(cat, mv, "fact delta")
     // 100 dim regroupings, fan-out x in 310..409 (interior)
     cat.upsert("s", spark.range(n / 100)
       .where(expr("id % 10 = 3") && col("id") < 1000L)
       .select(col("id").as("jk"), ((col("id") + 17) % 64).as("seg")))
-    val tDim = timedRefresh("dim delta")
+    val tDim = timedJoinRefresh(cat, mv, "dim delta")
     // 8 part rebrands — each retracts n/4096 scattered fact rows
     // whose x values span the full range, so ties against the group
     // extrema are expected and the gate legitimately fires: this leg
@@ -544,11 +449,9 @@ object ScaleRehearsal {
     cat.upsert("p", spark.range(4096)
       .where(expr("id % 512 = 7") && col("id") < 4096L)
       .select(col("id").as("pk2"), ((col("id") + 5) % 16).as("brand")))
-    GraftSession.quiesce(spark)
-    val t0 = System.nanoTime()
-    graft.operators.MaterializeJoin.refresh(cat, mv)
-    val tPart = (System.nanoTime() - t0) / 1e9
-    (tFact, tDim, tPart)
+    val tPart = timedJoinRefresh(cat, mv, "part delta",
+      assertNoRecompute = false)
+    Seq(tFact, tDim, tPart)
   }
 
   /** LEFT-outer binary-join IVM refresh seconds for FIXED deltas as
@@ -564,7 +467,7 @@ object ScaleRehearsal {
     * not a group recompute, is what gets timed. Both legs must stay
     * flat in base size. Returns (factDeltaSec, transitionDeltaSec). */
   private def leftIvmSeconds(spark: SparkSession, n: Long)
-      : (Double, Double) = {
+      : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val wh = java.nio.file.Files
       .createTempDirectory("graft_scale_leftivm").toString
@@ -588,27 +491,18 @@ object ScaleRehearsal {
         graft.operators.MaterializeJoin.SideSpec("s", Seq("jk"),
           factKeysImmutable = true)), leftOuter = true),
       Seq("seg"), Seq("x"), mv)
-    def timedRefresh(what: String): Double = {
-      GraftSession.quiesce(spark)
-      val t0 = System.nanoTime()
-      val r = graft.operators.MaterializeJoin.refresh(cat, mv)
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(!r.recomputeRan,
-        s"$what: interior delta must fold with zero recompute")
-      sec
-    }
     // 100 interior fact updates, split across matched and NULL groups
     cat.upsert("r", facts(expr("id % 1000 = 500") && col("id") < 100000L)
       .withColumn("x", lit(505L)))
-    val tFact = timedRefresh("left fact delta")
+    val tFact = timedJoinRefresh(cat, mv, "left fact delta")
     // 50 dangling keys materialize: jk in [n/200, n/100), ≡3 (mod 10)
     // so the 5 000 moved rows' x values are interior on both sides
     cat.upsert("s", spark.range(n / 200, n / 100)
       .where(expr("id % 10 = 3"))
       .limit(50)
       .select(col("id").as("jk"), (col("id") % 64).as("seg")))
-    val tTrans = timedRefresh("dangling->matched transitions")
-    (tFact, tTrans)
+    val tTrans = timedJoinRefresh(cat, mv, "dangling->matched transitions")
+    Seq(tFact, tTrans)
   }
 
   /** FULL-outer N-way star chain refresh seconds for FIXED deltas as
@@ -635,7 +529,7 @@ object ScaleRehearsal {
     * bounded below the collapse, never a side scan.
     * Returns (factDeltaSec, transitionsSec, redangleSec). */
   private def fullIvmSeconds(spark: SparkSession, n: Long)
-      : (Double, Double, Double) = {
+      : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val wh = java.nio.file.Files
       .createTempDirectory("graft_scale_fullivm").toString
@@ -671,36 +565,26 @@ object ScaleRehearsal {
         SideSpec("p", Seq("pk2"), factKeysImmutable = true)),
         fullOuter = true),
       Seq("seg", "brand"), Seq("x"), mv)
-    def timedRefresh(what: String, assertNoRecompute: Boolean)
-        : Double = {
-      GraftSession.quiesce(spark)
-      val t0 = System.nanoTime()
-      val r = graft.operators.MaterializeJoin.refresh(cat, mv)
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (assertNoRecompute)
-        require(!r.recomputeRan,
-          s"$what: interior delta must fold with zero recompute")
-      sec
-    }
     // 100 interior fact updates (matched on both sides, x 510 -> 505)
     cat.upsert("r", facts(spark.range(n)
       .where(expr("id % 1000 = 500") && col("id") < 100000L))
       .withColumn("x", lit(505L)))
-    val tFact = timedRefresh("full fact delta", assertNoRecompute = true)
+    val tFact = timedJoinRefresh(cat, mv, "full fact delta")
     // 50 dangling S keys materialize; ≡3 (mod 10) keeps moved x interior
     cat.upsert("s", spark.range(n / 200, n / 100)
       .where(expr("id % 10 = 3")).limit(50)
       .select(col("id").as("jk"), (col("id") % 64).as("seg")))
     val tTrans =
-      timedRefresh("dangling->matched transitions", assertNoRecompute = true)
+      timedJoinRefresh(cat, mv, "dangling->matched transitions")
     // both-side re-dangling churn: new facts under side-only keys
     // (side-dangling -> matched on S AND P) + matched S keys delete
     // (their facts re-dangle)
     cat.upsert("r", facts(spark.range(n, n + 5000L)))
     cat.delete("s", col("jk") % 10 === 3 && col("jk") < 500L)
     val tRedangle =
-      timedRefresh("re-dangling churn", assertNoRecompute = false)
-    (tFact, tTrans, tRedangle)
+      timedJoinRefresh(cat, mv, "re-dangling churn",
+        assertNoRecompute = false)
+    Seq(tFact, tTrans, tRedangle)
   }
 
   /** 5-table chain (fact + 4 sides) refresh seconds for FIXED deltas
@@ -715,7 +599,7 @@ object ScaleRehearsal {
     * variety. All four sides declare the fact FK immutable.
     * Returns (factDeltaSec, dimDeltaSec, tailDeltaSec). */
   private def deepChainIvmSeconds(spark: SparkSession, n: Long)
-      : (Double, Double, Double) = {
+      : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val wh = java.nio.file.Files
       .createTempDirectory("graft_scale_deepchain").toString
@@ -762,34 +646,24 @@ object ScaleRehearsal {
         SideSpec("u", Seq("jk3"), factKeysImmutable = true),
         SideSpec("w", Seq("jk4"), factKeysImmutable = true))),
       Seq("seg", "brand"), Seq("x"), mv)
-    def timedRefresh(what: String, assertNoRecompute: Boolean)
-        : Double = {
-      GraftSession.quiesce(spark)
-      val t0 = System.nanoTime()
-      val r = graft.operators.MaterializeJoin.refresh(cat, mv)
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (assertNoRecompute)
-        require(!r.recomputeRan,
-          s"$what: non-extremal delta must fold with zero recompute")
-      sec
-    }
     // 100 fact-measure updates, x 510 -> 505 (strictly interior)
     cat.upsert("r", facts(expr("id % 1000 = 500") && col("id") < 100000L)
       .withColumn("x", lit(505L)))
-    val tFact = timedRefresh("fact delta", assertNoRecompute = true)
+    val tFact = timedJoinRefresh(cat, mv, "fact delta")
     // 100 dim regroupings, fan-out x in 310..409 (interior)
     cat.upsert("s", spark.range(n / 100)
       .where(expr("id % 10 = 3") && col("id") < 1000L)
       .select(col("id").as("jk"), ((col("id") + 17) % 64).as("seg")))
-    val tDim = timedRefresh("dim delta", assertNoRecompute = true)
+    val tDim = timedJoinRefresh(cat, mv, "dim delta")
     // 8 tail-side updates (a4 is not a group column, so the net group
     // change is zero, but the retraction slice still rides the gate:
     // this times the deepest leg's gated path on scattered keys)
     cat.upsert("w", spark.range(9973)
       .where(expr("id % 1024 = 7"))
       .select(col("id").as("jk4"), ((col("id") + 5) % 8).as("a4")))
-    val tTail = timedRefresh("tail delta", assertNoRecompute = false)
-    (tFact, tDim, tTail)
+    val tTail =
+      timedJoinRefresh(cat, mv, "tail delta", assertNoRecompute = false)
+    Seq(tFact, tDim, tTail)
   }
 
   /** Single-dir vs BUCKET-MANIFESTED state write cost as the GROUP
@@ -842,10 +716,9 @@ object ScaleRehearsal {
           col("id") < lo + 24L)
         .select(col("id").as("k"), expr("id DIV 3").as("g"),
           lit(505L).as("x")))
-      GraftSession.quiesce(spark)
-      val t0 = System.nanoTime()
-      val r = graft.operators.Materialize.refresh(cat, "t", mv)
-      val sec = (System.nanoTime() - t0) / 1e9
+      val m = Measure.quiesced(spark)(
+        graft.operators.Materialize.refresh(cat, "t", mv))
+      val r = m.value
       require(!r.recomputeRan,
         "non-extremal delta must not gate in a recompute")
       if (b > 0)
@@ -853,7 +726,7 @@ object ScaleRehearsal {
           s"bucketed refresh must touch <=8 of $b buckets, got " +
             s"${r.bucketsTouched}")
       val nd = graft.operators.MvMeta.read(spark, mv).stateDir
-      (sec, dirMb(s"$mv/$nd"))
+      (m.secs, dirMb(s"$mv/$nd"))
     }
     // two refreshes (disjoint 8-group deltas), best-of-2 seconds —
     // single-shot refresh timings ride the shared-host band; bytes are
@@ -924,13 +797,15 @@ object ScaleRehearsal {
         // design — and timing it would make the exponent read ~1 at
         // exactly the factor where a delta-sized refresh should read
         // flat, confounding the conclusion this rehearsal exists for.
-        val t0 = System.nanoTime()
-        graft.operators.Materialize.refresh(cat, "d", mv)
-        val served = graft.operators.Materialize.read(spark, mv)
-          .select(col("source"), col("cnt"), col("sum_n_chars"),
-            col("min_n_chars"), col("max_n_chars"))
-          .collect().map(_.toSeq).toSet
-        secs += (System.nanoTime() - t0) / 1e9
+        val m = Measure.once(spark) {
+          graft.operators.Materialize.refresh(cat, "d", mv)
+          graft.operators.Materialize.read(spark, mv)
+            .select(col("source"), col("cnt"), col("sum_n_chars"),
+              col("min_n_chars"), col("max_n_chars"))
+            .collect().map(_.toSeq).toSet
+        }
+        val served = m.value
+        secs += m.secs
         val expect = graft.operators.Materialize
           .aggregate(cat.snapshot("d"), Seq("source"), Seq("n_chars"))
           .select(col("source"), col("cnt"), col("sum_n_chars"),

@@ -66,7 +66,10 @@ object ShuffleAudit {
   /** Execute a DataFrame and measure its finalized plan's shuffle
     * exchanges: (exchange count, shuffleBytesWritten sum, exchanges
     * lacking the metric). Shared by the audit loop and the trip-wire
-    * test. */
+    * test. The budgets are keyed on exactly this quantity, so it reads
+    * the plan rather than counting through [[Measure.once]]: a listener
+    * would also see the fixture and artifact shuffles that run while
+    * the DataFrame is built, and that would move the gate. */
   def measure(df: org.apache.spark.sql.DataFrame): (Int, Long, Int) = {
     val qe = df.queryExecution
     qe.toRdd.count()
@@ -133,7 +136,7 @@ object ShuffleAudit {
     var failed = 0
     val sfBase = java.nio.file.Paths.get(dir).getFileName.toString
     val rows = names.flatMap { n =>
-      GraftSession.quiesce(spark)
+      Measure.quiesce(spark)
       try {
         val (nEx, bytes, unmeasured) =
           measure(SparkEntry.queries(n)(spark, dir))

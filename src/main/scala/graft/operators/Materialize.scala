@@ -306,7 +306,7 @@ object Materialize {
       buckets: Int = 0,
       derive: DataFrame => DataFrame = NoDerive,
       topks: Seq[(String, Int)] = Seq.empty,
-      filterSql: Option[String] = None): Long = {
+      filterSql: Option[String] = None): Long = underPathLock(path) {
     val spark = cat.session
     // sample the clock BEFORE constructing the snapshot: its TTL cutoff
     // is evaluated at plan-construction time, and stamping meta with a
@@ -545,7 +545,8 @@ object Materialize {
     * the new dir is written before the meta flips, and the old dirs
     * are only deleted after).
     * @return bytes reclaimed by [[vacuum]] */
-  def compactState(spark: SparkSession, path: String): Long = {
+  def compactState(spark: SparkSession, path: String): Long =
+      underPathLock(path) {
     val meta = MvMeta.read(spark, path)
     // never a live dir name: refresh dirs are state_v<n>[e<ms>] and the
     // fresh nano suffix dodges prior compactions. Derive from the
@@ -569,7 +570,8 @@ object Materialize {
     * manifest). Safe against the live state by construction; unsafe
     * only for a reader deliberately pinned to a PAST state dir.
     * @return bytes reclaimed */
-  def vacuum(spark: SparkSession, path: String): Long = {
+  def vacuum(spark: SparkSession, path: String): Long =
+      underPathLock(path) {
     val meta = MvMeta.read(spark, path)
     val referenced: Set[String] =
       meta.bucketDirs.filter(_.nonEmpty).toSet + meta.stateDir
@@ -616,7 +618,7 @@ object Materialize {
     * this boundary, it just has to pick one. */
   def refresh(cat: GraftCatalog, table: String, path: String,
       derive: DataFrame => DataFrame = NoDerive): RefreshReport =
-    retryOnLostBlock(refreshOnce(cat, table, path, derive))
+    retryOnLostBlock(path)(refreshOnce(cat, table, path, derive))
 
   /** One-shot mark-bounded retry of a refresh (VERDICT r16 #4), for
     * both MV kinds: locally-checkpointed legs are unreplicated with
@@ -625,10 +627,28 @@ object Materialize {
     * mid-fold. Every read in a refresh is version-/mark-bounded and the
     * meta only flips at the very end, so rerunning the whole fold from
     * the unchanged meta is exact — same window, same result — and the
-    * retried attempt's report is the refresh's report. */
-  private[operators] def retryOnLostBlock[T](refreshOnce: => T): T =
+    * retried attempt's report is the refresh's report. Runs under the
+    * MV's [[underPathLock]]. */
+  private[operators] def retryOnLostBlock[T](path: String)(
+      refreshOnce: => T): T = underPathLock(path) {
     try refreshOnce
     catch { case e: Throwable if isLostCheckpointBlock(e) => refreshOnce }
+  }
+
+  private val pathLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Runs `f` holding the one lock of the MV at `path`. Two refreshes
+    * of one MV compute the same `state_v<newV>` dir, and the direct
+    * write deletes then writes it, so two at once could interleave
+    * into duplicate part files. Both builds, both refreshes (through
+    * [[retryOnLostBlock]]), [[compactState]] and [[vacuum]] hold it;
+    * it is reentrant, so a refresh that rebuilds or a compaction that
+    * vacuums takes it once. A second caller waits, then reads the
+    * meta the first one wrote. */
+  private[operators] def underPathLock[T](path: String)(f: => T): T =
+    pathLocks.computeIfAbsent(path.stripSuffix("/"), _ => new Object)
+      .synchronized(f)
 
   /** The lost-localCheckpoint-block failure signature: lineage is
     * truncated, so Spark cannot recompute — only a full mark-bounded

@@ -357,7 +357,7 @@ object MaterializeJoin {
       topks: Seq[(String, Int)] = Seq.empty,
       grainExprs: Seq[(String, String)] = Seq.empty,
       buckets: Int = 0)
-      : (Long, Seq[Long]) = {
+      : (Long, Seq[Long]) = Materialize.underPathLock(path) {
     val spark = cat.session
     validate(cat, cs, groupCols,
       measures ++ sketches.map(_._1) ++ topks.map(_._1), grainExprs)
@@ -680,7 +680,7 @@ object MaterializeJoin {
     * its `marks` hold the new `factV +: sideVs` high-water marks (== the
     * stored ones when nothing changed). */
   def refresh(cat: GraftCatalog, path: String): RefreshReport =
-    Materialize.retryOnLostBlock(refreshOnce(cat, path))
+    Materialize.retryOnLostBlock(path)(refreshOnce(cat, path))
 
   private def refreshOnce(cat: GraftCatalog, path: String)
       : RefreshReport = {

@@ -56,8 +56,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   }
 
   def createTable(name: String, schema: StructType, pk: Seq[String],
-      props: Map[String, String] = Map.empty): TableSpec =
-    GraftCatalog.OpTiming.timed {
+      props: Map[String, String] = Map.empty): TableSpec = {
     require(pk.nonEmpty, "primary key required")
     require(pk.forall(c => schema.fieldNames.contains(c)),
       s"pk columns $pk must exist in schema")
@@ -392,12 +391,11 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * (reference DefaultValueExpression — applied only when the write
     * OMITS the column; an explicit NULL in the batch stores NULL),
     * otherwise NULL. */
-  def upsert(name: String, df: DataFrame): Long =
-    GraftCatalog.OpTiming.timed {
-      val v = versionedWrite(name)(appendUpsert(name, df, _))
-      refreshSnapCacheIfDue(name)
-      v
-    }
+  def upsert(name: String, df: DataFrame): Long = {
+    val v = versionedWrite(name)(appendUpsert(name, df, _))
+    refreshSnapCacheIfDue(name)
+    v
+  }
 
   private def appendUpsert(name: String, df: DataFrame, v: Long): Unit = {
     val fields = allFields(name)
@@ -466,15 +464,14 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   }
 
   /** DELETE by predicate: tombstone the matching PKs as of now. */
-  def delete(name: String, predicate: org.apache.spark.sql.Column): Long =
-    GraftCatalog.OpTiming.timed {
+  def delete(name: String, predicate: org.apache.spark.sql.Column): Long = {
     val v = versionedWrite(name)(appendBatch(name,
       snapshotFull(name).where(predicate)
         .select(allFields(name).map(f => col(f.name)): _*),
       _, deleted = true, lit(batchTs())))
     refreshSnapCacheIfDue(name)
     v
-    }
+  }
 
   /** `rows` (logical columns) as one log batch of version `v`: physical
     * column names, then the meta columns (`ts` over physical names). */
@@ -1172,29 +1169,32 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   }
 
   /** Full compaction: rewrite the change log as a single batch holding
-    * the current snapshot (all history discarded). At scale this is the
+    * the current snapshot (all history discarded), stamped at the
+    * version the counter held before it. At scale this is the
     * periodic job that keeps snapshot reads from re-collapsing an
     * ever-growing log; CDC consumers must be past sinceVersion before
     * compacting, and every registered MV over the table is forced into
     * a one-time rebuild (the floor rises past its fold mark). When MVs
     * should stay incremental across routine compaction, use the floored
     * variant [[compact(name:String,keepAfter:Long)*]] instead. */
-  def compact(name: String): Unit = {
+  def compact(name: String): Unit =
     versionedWrite(name) { v =>
+      // Crash order: everything the swap lands must already be safe at
+      // the counter a crash would leave (v - 1, not yet v). The floor
+      // rises to v first, so no MV folded below it can read the rewrite
+      // as a delta. The cache goes next: a cached winner whose PK was
+      // deleted pre-compaction has no tombstone in the rewritten log,
+      // so serving cache+tail would resurrect it. The rewrite is
+      // stamped at v - 1, so its rows are visible at either counter.
+      setCompactionFloor(name, v)
+      invalidateSnapCache(name)
       // collapse keeping view-extension columns AND each winning row's
       // batch stamp — dropping _ts here would NULL phoenix_row_timestamp
       // for the whole table after compaction. Read under the table
       // lock, so no append can land between the read and the swap.
       replaceDir(stamped(name, collapseLog(name, changeLog(name), "_ts"),
-        v, deleted = false, col("_ts")), dataDir(name))
-      setCompactionFloor(name, v)
+        v - 1L, deleted = false, col("_ts")), dataDir(name))
     }
-    // compaction discards the history behind the cache's high-water
-    // mark: a cached winner whose PK was deleted pre-compaction has no
-    // tombstone in the rewritten log, so serving cache+tail would
-    // resurrect it. The compacted log IS a snapshot — drop the cache.
-    invalidateSnapCache(name)
-  }
 
   /** FLOORED compaction — routine log maintenance that coexists with
     * incremental MV refresh. History at versions <= `keepAfter` is
@@ -1376,24 +1376,6 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 }
 
 object GraftCatalog {
-  /** Opt-in catalog MUTATION-op timing (createTable/upsert/delete):
-    * the bench resets this around each query and reports the seconds
-    * additively (`fixture_ops` in bench_out.json), so fixture ingest
-    * is visible SEPARATELY from operator serve/refresh work without
-    * removing it from any per-query number (the bench stays honest —
-    * VERDICT r16 #7). Single bench thread; synchronized adds cover
-    * any pooled caller. */
-  private[graft] object OpTiming {
-    private var secs = 0.0
-    def reset(): Unit = synchronized { secs = 0.0 }
-    def get: Double = synchronized { secs }
-    private[sources] def timed[T](f: => T): T = {
-      val t0 = System.nanoTime()
-      try f
-      finally synchronized { secs += (System.nanoTime() - t0) / 1e9 }
-    }
-  }
-
   // The snapshot-cache layout, defined once: the cache collapsed at
   // mark `v` is the dir `<table root>/_snapcache/v<v>`.
   private[sources] def snapCacheRoot(tableRoot: String): String =

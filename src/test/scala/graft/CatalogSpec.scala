@@ -1825,15 +1825,15 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("jc", (1L to 40L by 3).map(k => (k, -k)).toDF("k", "x"))
     cat.delete("jc", col("k") === 2L)
     cat.refreshSnapshotCache("jc")
-    def served() = TestSpark.countJobs(cat.snapshotServed("jc").collect())
-    val (fresh, freshRows) = served()
+    def served() = Measure.once(spark)(cat.snapshotServed("jc").collect())
+    val Measure.Measured(fresh, _, freshRows) = served()
     assert(freshRows.length == 39)
-    assert(fresh == TestSpark.JobCounts(jobs = 1, stages = 1, tasks = 1),
+    assert(fresh == Measure.JobCounts(jobs = 1, stages = 1, tasks = 1),
       s"exactly fresh cache: $fresh")
     cat.upsert("jc", Seq((2L, 2L), (41L, 41L)).toDF("k", "x"))
-    val (tail, tailRows) = served()
+    val Measure.Measured(tail, _, tailRows) = served()
     assert(tailRows.length == 41)
-    assert(tail == TestSpark.JobCounts(jobs = 2, stages = 2, tasks = 6),
+    assert(tail == Measure.JobCounts(jobs = 2, stages = 2, tasks = 6),
       s"cache plus tail: $tail")
   }
 
@@ -1848,7 +1848,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.createTable("wp", StructType(Seq(
       StructField("k", LongType), StructField("x", LongType))),
       pk = Seq("k"))
-    def counted(f: => Any) = TestSpark.countJobs(f)._1
+    def counted(f: => Any) = Measure.once(spark)(f).counts
     def rows() = cat.snapshot("wp").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val upsert = counted(
@@ -1867,7 +1867,8 @@ class CatalogSpec extends AnyFunSuite {
       .withColumn("_deleted", lit(false))
       .withColumn("_ts", lit(new java.sql.Timestamp(0L)))
       .write.mode("append").parquet(s"${cat.tablePath("wp")}/data")
-    val (vacuum, reclaimed) = TestSpark.countJobs(cat.vacuumOrphans("wp"))
+    val Measure.Measured(vacuum, _, reclaimed) =
+      Measure.once(spark)(cat.vacuumOrphans("wp"))
     assert(reclaimed == 1L)
     val compactFull = counted(cat.compact("wp"))
     assert(rows() == expected + (2L -> 2L) + (41L -> 41L))
@@ -1877,7 +1878,7 @@ class CatalogSpec extends AnyFunSuite {
       "cacheFirst" -> cacheFirst, "cacheIncremental" -> cacheIncremental,
       "compactFloored" -> compactFloored, "vacuum" -> vacuum,
       "compactFull" -> compactFull, "truncate" -> truncate)
-    def jc(j: Int, s: Int, t: Int) = TestSpark.JobCounts(j, s, t)
+    def jc(j: Int, s: Int, t: Int) = Measure.JobCounts(j, s, t)
     assert(counts == Map(
       "upsert" -> jc(1, 1, 4), "delete" -> jc(2, 2, 5),
       "cacheFirst" -> jc(2, 2, 4), "cacheIncremental" -> jc(2, 2, 6),
@@ -3191,6 +3192,49 @@ class CatalogSpec extends AnyFunSuite {
     assert(v2 > v0 + 1L && cat.currentVersion("fp") == v2,
       s"next write at $v2 after the gap at ${v0 + 1L}")
     assert(rows() == before + (3L -> 3L))
+  }
+
+  test("a full compaction cut right after its swap, before it " +
+      "publishes, serves the pre-compaction snapshot and keeps every " +
+      "row; a pre-compaction MV still refreshes exactly") {
+    import spark.implicits._
+    import graft.operators.Materialize
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("g", StringType), StructField("x", LongType)))
+    val cat = new GraftCatalog(spark, wh)
+    cat.createTable("cw", schema, pk = Seq("k"))
+    cat.upsert("cw", Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
+      .toDF("k", "g", "x"))
+    cat.upsert("cw", Seq((2L, "a", 25L)).toDF("k", "g", "x"))
+    cat.delete("cw", col("k") === 3L)
+    val mv = s"$wh/mv"
+    Materialize.build(cat, "cw", Seq("g"), Seq("x"), mv)
+    def rows(c: GraftCatalog) = c.snapshot("cw").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val before = rows(cat)
+    assert(before == Set((1L, "a", 10L), (2L, "a", 25L)))
+    val ctr = cat.currentVersion("cw")
+    cat.compact("cw")
+    // the crash: the rewrite swapped in and the floor raised as the
+    // compaction writes it, but the counter never published
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+      cat.tablePath("cw"), "_latest_version"), ctr.toString)
+    val cat2 = new GraftCatalog(spark, wh)
+    cat2.createTable("cw", schema, pk = Seq("k"))
+    assert(rows(cat2) == before,
+      "the rewrite must be visible at the counter the crash left")
+    assert(cat2.vacuumOrphans("cw") == 0L,
+      "no rewritten row may sit above the counter")
+    assert(rows(cat2) == before)
+    cat2.upsert("cw", Seq((4L, "b", 7L)).toDF("k", "g", "x"))
+    Materialize.refresh(cat2, "cw", mv)
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.select("g", "cnt", "sum_x", "min_x", "max_x").collect()
+        .map(_.toSeq).toSeq.sortBy(_.head.toString)
+    assert(agg(Materialize.read(spark, mv)) == agg(Materialize.aggregate(
+        cat2.snapshot("cw"), Seq("g"), Seq("x"))),
+      "the MV built before the compaction must refresh to its recompute")
   }
 
   test("a compaction cut between its two moves leaves the live log " +

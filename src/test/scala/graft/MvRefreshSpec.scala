@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Materialize, MaterializeJoin, RefreshReport}
 import graft.sources.GraftCatalog
+import graft.Measure.Measured
 
 /** The refresh contract both MV kinds share through one fold core:
   * the [[graft.operators.RefreshReport]] each refresh returns, the
@@ -108,6 +109,50 @@ class MvRefreshSpec extends AnyFunSuite {
     } finally pool.shutdownNow()
   }
 
+  test("two refreshes of one MV at once: one folds, the other waits " +
+      "for it and finds nothing left to fold") {
+    val cat = singleTable()
+    val path = mvPath()
+    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    // k=2 holds group a's max: its delete gates in a recompute
+    cat.delete("t", col("k") === 2L)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val runs = Seq.fill(2)(pool.submit[RefreshReport] { () =>
+        go.await()
+        Materialize.refresh(cat, "t", path)
+      })
+      go.countDown()
+      val reports = runs.map(_.get(120, TimeUnit.SECONDS))
+      assert(reports.count(r => r.recomputeRan &&
+        r.affectedGroups == 1L) == 1, s"exactly one folds: $reports")
+      assert(reports.count(r => !r.recomputeRan &&
+        r.affectedGroups == 0L && !r.rebuildRan) == 1,
+        s"the other is a no-change refresh: $reports")
+    } finally pool.shutdownNow()
+    // a Seq, not a Set: duplicate part files would show as repeated rows
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("g", "cnt", "sum_x", "min_x", "max_x").collect()
+        .map(_.toSeq).toSeq.sortBy(_.head.toString)
+    assert(rows(Materialize.read(spark, path)) == rows(Materialize
+      .aggregate(cat.snapshot("t"), Seq("g"), Seq("x"))))
+  }
+
+  test("the counter cleans up after a body that throws") {
+    val e = intercept[IllegalStateException] {
+      Measure.once(spark) {
+        spark.range(10).count()
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == null,
+      "the counted job group must be cleared")
+    assert(Measure.once(spark)(()).counts == Measure.JobCounts(0, 0, 0),
+      "a no-op body after a failed one counts no Spark work")
+  }
+
   // Jobs per warm incremental refresh (insert + non-extremal update,
   // no recompute), measured on the code before the two MV kinds shared
   // one fold core; a change here is a change in refresh cost.
@@ -120,11 +165,12 @@ class MvRefreshSpec extends AnyFunSuite {
     Materialize.refresh(cat, "t", path) // warm: memos and caches filled
     cat.upsert("t", Seq((5L, "a", 12L), (7L, "a", 16L))
       .toDF("k", "g", "x"))
-    val (n, r) = TestSpark.countJobs(Materialize.refresh(cat, "t", path))
+    val Measured(n, _, r) =
+      Measure.once(spark)(Materialize.refresh(cat, "t", path))
     assert(!r.recomputeRan)
     assert(n.jobs == 10, s"jobs per single-table refresh: ${n.jobs}")
-    assert(TestSpark.countJobs(Materialize.refresh(cat, "t", path))._1
-        .jobs == 0,
+    assert(Measure.once(spark)(Materialize.refresh(cat, "t", path))
+        .counts.jobs == 0,
       "a no-change refresh runs no job")
     assert(Materialize.read(spark, path).orderBy("g")
       .select("g", "cnt", "sum_x", "min_x", "max_x").collect()
@@ -142,11 +188,12 @@ class MvRefreshSpec extends AnyFunSuite {
     cat.upsert("o", Seq((5L, 10L, 120L), (6L, 10L, 160L))
       .toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((30L, "c")).toDF("ck", "seg"))
-    val (n, r) = TestSpark.countJobs(MaterializeJoin.refresh(cat, path))
+    val Measured(n, _, r) =
+      Measure.once(spark)(MaterializeJoin.refresh(cat, path))
     assert(!r.recomputeRan)
     assert(n.jobs == 31, s"jobs per join refresh: ${n.jobs}")
-    assert(TestSpark.countJobs(MaterializeJoin.refresh(cat, path))._1
-        .jobs == 0,
+    assert(Measure.once(spark)(MaterializeJoin.refresh(cat, path))
+        .counts.jobs == 0,
       "a no-change refresh runs no job")
     assert(Materialize.read(spark, path).orderBy("seg")
       .select("seg", "cnt", "sum_price", "min_price", "max_price")

@@ -1154,8 +1154,8 @@ class PhoenixSqlSpec extends AnyFunSuite {
       }
     }
     val before = dataFiles()
-    val (n, _) = TestSpark.countJobs(px.execute("UPSERT INTO ONE VALUES " +
-      (1 to 100).map(i => s"($i, 'v$i')").mkString(", ")))
+    val n = Measure.once(spark)(px.execute("UPSERT INTO ONE VALUES " +
+      (1 to 100).map(i => s"($i, 'v$i')").mkString(", "))).counts
     assert(dataFiles() - before == 1, "one parquet data file per statement")
     assert(n.tasks == 1, s"one task per statement, got ${n.tasks}")
     assert(px.execute("SELECT count(*) FROM ONE").collect()
