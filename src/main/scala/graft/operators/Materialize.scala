@@ -457,8 +457,10 @@ object Materialize {
     * Serving requires BOTH freshness legs the caller already owns:
     * refresh the MV after mutations (the usual MV contract) and keep
     * the snapshot cache current ([[GraftCatalog.refreshSnapshotCache]]
-    * or the SNAPSHOT_CACHE_BATCHES table property) — a stale cache
-    * falls back to the collapse plan, which is correct but unservable.
+    * or the SNAPSHOT_CACHE_BATCHES table property) — a cache behind
+    * the counter serves the tail laid over the cache (or, past the
+    * overlay's row cap, the collapse plan), which is correct but
+    * unservable.
     *
     * The MV leg is ENFORCED, not assumed: the registration carries a
     * freshness probe re-read per serve attempt — the meta's folded

@@ -44,6 +44,84 @@ object Pipeline {
       (b, m)
     }
 
+  /** Catalog tables, fixture and join MV of `q_mv_rewrite_join`,
+    * registered for rewrite — built ONCE per sf dir, like
+    * [[mvRewriteSetup]], so the timed run is the MV-served read it is
+    * named for, not the fixture ingest and MV build. */
+  private def mvJoinSetup(s: SparkSession, dir: String)
+      : (graft.sources.PhoenixSql, String, String) =
+    Artifacts.memoized(dir, "mv_join_setup") {
+      import s.implicits._
+      val wh = java.nio.file.Files
+        .createTempDirectory("graft_mvjoin").toString
+      val cat = new graft.sources.GraftCatalog(s, wh)
+      val px = new graft.sources.PhoenixSql(s, cat)
+      px.execute("CREATE TABLE jl3 (okey BIGINT NOT NULL, " +
+        "ln INTEGER NOT NULL, qty BIGINT " +
+        "CONSTRAINT pk PRIMARY KEY (okey, ln))")
+      px.execute("CREATE TABLE jo3 (okey BIGINT NOT NULL, " +
+        "priority VARCHAR CONSTRAINT pk PRIMARY KEY (okey))")
+      // pre-aggregate lineitem to its declared PK (the synthetic
+      // fixture carries duplicate (orderkey, linenumber) pairs)
+      cat.upsert("jl3", Tables.t(s, dir, "lineitem")
+        .where($"l_orderkey" % 16 === 6)
+        .groupBy($"l_orderkey".as("okey"), $"l_linenumber".as("ln"))
+        .agg(sum($"l_quantity".cast("long")).as("qty")))
+      cat.upsert("jo3", Tables.t(s, dir, "orders")
+        .where($"o_orderkey" % 16 === 6)
+        .select($"o_orderkey".as("okey"),
+          $"o_orderpriority".as("priority")))
+      cat.refreshSnapshotCache("jl3")
+      cat.refreshSnapshotCache("jo3")
+      val mv = wh + "/mvjoin"
+      graft.operators.MaterializeJoin.build(cat,
+        graft.operators.MaterializeJoin.JoinSpec("jl3", "jo3",
+          Seq("okey"), leftKeysImmutable = true),
+        Seq("priority"), Seq("qty"), mv)
+      graft.operators.MaterializeJoin.registerForRewrite(cat, mv)
+      (px, wh, mv)
+    }
+
+  /** The same for `q_mv_rewrite_chain`'s three tables and chain MV. */
+  private def mvChainSetup(s: SparkSession, dir: String)
+      : (graft.sources.PhoenixSql, String, String) =
+    Artifacts.memoized(dir, "mv_chain_setup") {
+      import s.implicits._
+      val wh = java.nio.file.Files
+        .createTempDirectory("graft_mvchain").toString
+      val cat = new graft.sources.GraftCatalog(s, wh)
+      val px = new graft.sources.PhoenixSql(s, cat)
+      px.execute("CREATE TABLE co5 (okey BIGINT NOT NULL, " +
+        "ckey BIGINT CONSTRAINT pk PRIMARY KEY (okey))")
+      px.execute("CREATE TABLE cl5 (okey BIGINT NOT NULL, " +
+        "ln INTEGER NOT NULL, qty BIGINT " +
+        "CONSTRAINT pk PRIMARY KEY (okey, ln))")
+      px.execute("CREATE TABLE cc5 (ckey BIGINT NOT NULL, " +
+        "seg VARCHAR CONSTRAINT pk PRIMARY KEY (ckey))")
+      cat.upsert("co5", Tables.t(s, dir, "orders")
+        .where($"o_orderkey" % 32 < 2)
+        .select($"o_orderkey".as("okey"), $"o_custkey".as("ckey")))
+      cat.upsert("cl5", Tables.t(s, dir, "lineitem")
+        .where($"l_orderkey" % 32 < 2)
+        .groupBy($"l_orderkey".as("okey"), $"l_linenumber".as("ln"))
+        .agg(sum($"l_quantity".cast("long")).as("qty")))
+      cat.upsert("cc5", Tables.t(s, dir, "customer")
+        .select($"c_custkey".as("ckey"), $"c_mktsegment".as("seg")))
+      cat.refreshSnapshotCache("co5")
+      cat.refreshSnapshotCache("cl5")
+      cat.refreshSnapshotCache("cc5")
+      val mv = wh + "/mvchain5"
+      graft.operators.MaterializeJoin.build(cat,
+        graft.operators.MaterializeJoin.ChainSpec("co5", Seq(
+          graft.operators.MaterializeJoin.SideSpec("cl5", Seq("okey"),
+            sideKeysImmutable = true),
+          graft.operators.MaterializeJoin.SideSpec("cc5", Seq("ckey"),
+            factKeysImmutable = true))),
+        Seq("seg"), Seq("qty"), mv)
+      graft.operators.MaterializeJoin.registerForRewrite(cat, mv)
+      (px, wh, mv)
+    }
+
   /** STAR MV: orders fact × customer dim, per-segment decimal-priced
     * state; the dim registration (path + key pairs + attribute map +
     * innerSafe under TPC-H referential integrity) lets the rewrite
@@ -1177,33 +1255,7 @@ object Pipeline {
     // refuses, since the state never counted unmatched fact rows).
     // In-query pin: state scanned, no snapshot cache, no change log.
     "q_mv_rewrite_join" -> { (s, dir) =>
-      import s.implicits._
-      val wh = ivmWarehouse(dir + "#mvjoin")
-      val cat = new graft.sources.GraftCatalog(s, wh)
-      val px = new graft.sources.PhoenixSql(s, cat)
-      px.execute("CREATE TABLE jl3 (okey BIGINT NOT NULL, " +
-        "ln INTEGER NOT NULL, qty BIGINT " +
-        "CONSTRAINT pk PRIMARY KEY (okey, ln))")
-      px.execute("CREATE TABLE jo3 (okey BIGINT NOT NULL, " +
-        "priority VARCHAR CONSTRAINT pk PRIMARY KEY (okey))")
-      // pre-aggregate lineitem to its declared PK (the synthetic
-      // fixture carries duplicate (orderkey, linenumber) pairs)
-      cat.upsert("jl3", Tables.t(s, dir, "lineitem")
-        .where($"l_orderkey" % 16 === 6)
-        .groupBy($"l_orderkey".as("okey"), $"l_linenumber".as("ln"))
-        .agg(sum($"l_quantity".cast("long")).as("qty")))
-      cat.upsert("jo3", Tables.t(s, dir, "orders")
-        .where($"o_orderkey" % 16 === 6)
-        .select($"o_orderkey".as("okey"),
-          $"o_orderpriority".as("priority")))
-      cat.refreshSnapshotCache("jl3")
-      cat.refreshSnapshotCache("jo3")
-      val mv = wh + "/mvjoin"
-      graft.operators.MaterializeJoin.build(cat,
-        graft.operators.MaterializeJoin.JoinSpec("jl3", "jo3",
-          Seq("okey"), leftKeysImmutable = true),
-        Seq("priority"), Seq("qty"), mv)
-      graft.operators.MaterializeJoin.registerForRewrite(cat, mv)
+      val (px, wh, mv) = mvJoinSetup(s, dir)
       val q = px.execute("SELECT priority, COUNT(*) AS cnt, " +
         "SUM(qty) AS sum_qty, MIN(qty) AS min_qty, " +
         "MAX(qty) AS max_qty " +
@@ -1224,38 +1276,7 @@ object Pipeline {
     // query must join BOTH sides to serve). In-query pin: state
     // scanned, no snapshot cache, no change log.
     "q_mv_rewrite_chain" -> { (s, dir) =>
-      import s.implicits._
-      val wh = ivmWarehouse(dir + "#mvchain")
-      val cat = new graft.sources.GraftCatalog(s, wh)
-      val px = new graft.sources.PhoenixSql(s, cat)
-      px.execute("CREATE TABLE co5 (okey BIGINT NOT NULL, " +
-        "ckey BIGINT CONSTRAINT pk PRIMARY KEY (okey))")
-      px.execute("CREATE TABLE cl5 (okey BIGINT NOT NULL, " +
-        "ln INTEGER NOT NULL, qty BIGINT " +
-        "CONSTRAINT pk PRIMARY KEY (okey, ln))")
-      px.execute("CREATE TABLE cc5 (ckey BIGINT NOT NULL, " +
-        "seg VARCHAR CONSTRAINT pk PRIMARY KEY (ckey))")
-      cat.upsert("co5", Tables.t(s, dir, "orders")
-        .where($"o_orderkey" % 32 < 2)
-        .select($"o_orderkey".as("okey"), $"o_custkey".as("ckey")))
-      cat.upsert("cl5", Tables.t(s, dir, "lineitem")
-        .where($"l_orderkey" % 32 < 2)
-        .groupBy($"l_orderkey".as("okey"), $"l_linenumber".as("ln"))
-        .agg(sum($"l_quantity".cast("long")).as("qty")))
-      cat.upsert("cc5", Tables.t(s, dir, "customer")
-        .select($"c_custkey".as("ckey"), $"c_mktsegment".as("seg")))
-      cat.refreshSnapshotCache("co5")
-      cat.refreshSnapshotCache("cl5")
-      cat.refreshSnapshotCache("cc5")
-      val mv = wh + "/mvchain5"
-      graft.operators.MaterializeJoin.build(cat,
-        graft.operators.MaterializeJoin.ChainSpec("co5", Seq(
-          graft.operators.MaterializeJoin.SideSpec("cl5", Seq("okey"),
-            sideKeysImmutable = true),
-          graft.operators.MaterializeJoin.SideSpec("cc5", Seq("ckey"),
-            factKeysImmutable = true))),
-        Seq("seg"), Seq("qty"), mv)
-      graft.operators.MaterializeJoin.registerForRewrite(cat, mv)
+      val (px, wh, mv) = mvChainSetup(s, dir)
       val q = px.execute("SELECT seg, COUNT(*) AS cnt, " +
         "SUM(qty) AS sum_qty, MIN(qty) AS min_qty, " +
         "MAX(qty) AS max_qty " +

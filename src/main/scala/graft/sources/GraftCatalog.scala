@@ -583,11 +583,16 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   // whole history — a 100-TB read-mostly table accumulating thousands
   // of batches would re-read superseded versions on every query. The
   // cache is a high-water-mark-keyed collapsed copy (alive winners
-  // only, ORIGINAL `_version` and `_ts` kept) at `_snapcache/v<V>`;
-  // serving reads then scan cache + only the tail batches (`_version >
-  // V`, file-pruned via parquet stats). The change log itself is
-  // UNTOUCHED — CDC, point-in-time reads and IVM keep full history
-  // (unlike `compact`, which discards it).
+  // only, ORIGINAL `_version` and `_ts` kept) at `_snapcache/v<V>`.
+  // The change log itself is UNTOUCHED — CDC, point-in-time reads and
+  // IVM keep full history (unlike `compact`, which discards it).
+  //
+  // Two ways a read uses it. A SERVING read ([[snapshotServed]]) lays
+  // the tail (`_version > V`) over the cache, the way HBase lays the
+  // memstore over its flushed files: cache rows whose PK the tail does
+  // not touch, plus the tail's own winners, with no collapse of the
+  // whole table. Every other read (as-of, refresh, a tail past the
+  // overlay's row cap) collapses cache ∪ tail through [[servingLog]].
   //
   // Correctness bound: collapse-then-filter == filter-then-collapse
   // requires `_ts` monotone in `_version` per PK (batch stamps are; a
@@ -596,10 +601,11 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   // row outranks every cached row, and a PK absent from both is absent
   // from the snapshot either way.
   //
-  // Every read below composes three primitives: [[cacheMark]] (may a
+  // Every read below composes four primitives: [[cacheMark]] (may a
   // cache serve, and at which mark), [[servingLog]] (the log slice a
-  // read point sees, through the cache when it can serve) and
-  // [[collapseLog]] (the last-wins collapse), narrowed by [[declared]].
+  // read point sees, through the cache when it can serve),
+  // [[collapseLog]] (the last-wins collapse) and [[overlay]] (the tail
+  // laid over the cache), narrowed by [[declared]].
 
   private def snapCacheRoot(name: String) =
     GraftCatalog.snapCacheRoot(dir(name))
@@ -712,23 +718,80 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Snapshot for SERVING reads: when the snapshot cache is EXACTLY
-    * fresh (cache high-water == the version counter) the snapshot IS
-    * the cache, so return a PURE parquet scan of it (TTL filter only —
-    * no collapse shuffle at all). Two wins at once: the per-query
-    * collapse disappears, and an Aggregate over this plan sits directly
-    * on a scan, which is what lets [[graft.plans.AggRewriteRule]] swap
-    * registered MV state under SQL front-end queries
-    * ([[PhoenixSql]] registers its table snapshots through here). A
-    * stale/absent cache (or a ROW_TIMESTAMP table) falls back to the
-    * ordinary [[snapshot]] collapse — always correct, just not
-    * rewrite-servable. */
+  /** Snapshot for SERVING reads ([[PhoenixSql]] registers its table
+    * snapshots through here), by the state of the snapshot cache:
+    *
+    *  - EXACTLY fresh (cache mark == the version counter): the snapshot
+    *    IS the cache, so this is a PURE parquet scan of it (TTL filter
+    *    only). An Aggregate over this plan sits directly on a scan,
+    *    which is what lets [[graft.plans.AggRewriteRule]] swap
+    *    registered MV state under SQL front-end queries.
+    *  - BEHIND the counter: the [[overlay]] of the tail on the cache —
+    *    one job reads the tail, and the plan it returns scans the cache
+    *    with no shuffle, so a PK predicate pushes into the cache scan.
+    *    Its union is not a bare scan, so an MV does not serve it; where
+    *    a PK filter prunes the tail branch away, the MV's freshness
+    *    probe still refuses a state behind the counter.
+    *  - absent, a tail past the overlay's row cap, or a ROW_TIMESTAMP
+    *    table: the ordinary [[snapshot]] collapse. */
   def snapshotServed(name: String): DataFrame = {
     refreshSnapCacheIfDue(name)
-    cacheMark(name).filter(v => v >= 0 && v == currentVersion(name)) match {
-      case Some(v) => declared(name, ttlFiltered(name, cacheScan(name, v)))
-      case None => snapshot(name)
+    val counter = currentVersion(name)
+    cacheMark(name).filter(_ >= 0) match {
+      case Some(v) if v == counter =>
+        declared(name, ttlFiltered(name, cacheScan(name, v)))
+      case Some(v) if v < counter =>
+        overlay(name, v, counter)
+          .fold(snapshot(name))(o => declared(name, ttlFiltered(name, o)))
+      case _ => snapshot(name)
     }
+  }
+
+  /** The tail `(mark, upTo]` of the change log laid over the cache at
+    * `mark`: the cache rows whose PK no tail row touches (a tombstone
+    * touches its PK too), plus the tail's alive winners, with every
+    * column and `_version`, `_deleted`, `_ts`; TTL not applied. `None`
+    * when the tail holds more than [[graft.operators.DriverParquet.cap]]
+    * rows.
+    *
+    * One Spark job reads the raw tail, at most `cap + 1` rows per
+    * partition. Its winners come from the one [[collapseKeepMeta]] over
+    * the collected rows as a single-partition local relation, so the
+    * collapse needs no exchange and runs inside the reading query's own
+    * job. The PK exclusion is a literal set over `struct(pk…)`, each
+    * field cast to its PK column's type; struct equality treats two
+    * NULL fields as equal, so a PK with a NULL component is excluded
+    * like any other, and the filter runs no job of its own.
+    *
+    * Sound because every tail row's `_version` is above the mark, so
+    * it outranks every cache row of its PK, and the cache holds alive
+    * winners only: a PK the tail touches takes the tail's winner (or
+    * none, when that is a tombstone), and an untouched PK keeps its
+    * cache row — exactly the collapse of cache ∪ tail. `_ts` is monotone
+    * in `_version` per PK (the bound the cache already relies on), so
+    * the caller's TTL filter agrees whether it runs before or after the
+    * overlay. */
+  private def overlay(name: String, mark: Long,
+      upTo: Long): Option[DataFrame] = {
+    val cap = graft.operators.DriverParquet.cap
+    val tail = changeLogRaw(name)
+      .where(col("_version") > mark && col("_version") <= upTo)
+    val rows = tail.rdd.mapPartitions(_.take(cap + 1)).collect()
+    if (rows.length > cap) return None
+    val pk = spec(name).pk.map(tail.schema(_))
+    val at = pk.map(f => tail.schema.fieldIndex(f.name))
+    val touched = rows.map(r => at.map(r.get)).distinct
+      .map(k => struct(k.zip(pk).map { case (v, f) =>
+        lit(v).cast(f.dataType).as(f.name) }: _*))
+    val cache = cacheScan(name, mark)
+    val untouched =
+      if (touched.isEmpty) cache
+      else cache.where(!struct(pk.map(f => col(f.name)): _*)
+        .isin(touched.toSeq: _*))
+    val winners = collapseLog(name,
+      spark.createDataFrame(rows.toSeq.asJava, tail.schema).coalesce(1),
+      "_version", "_deleted", "_ts")
+    Some(untouched.unionByName(winners))
   }
 
   /** The table's root directory — the stable registration key for
@@ -826,7 +889,10 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * KEEPING the winner's `_deleted` / `_ts` / `_version` — so the
     * snapshot, row-ts read, compaction, and the MV expired-winner
     * determination can never disagree on which version wins for the
-    * same log. Same map-side-combinable max_by shape as before. */
+    * same log. Same map-side-combinable max_by shape as before. The PK
+    * columns are the grouping attributes themselves (equal to the
+    * winner's), so a predicate on them above the collapse pushes below
+    * it, into the scan. */
   private[graft] def collapseKeepMeta(name: String,
       log: DataFrame): DataFrame = {
     val s = spec(name)
@@ -839,7 +905,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
         struct(fields.map(f => col(f.name)) ++
           Seq(col("_deleted"), col("_ts"), col("_version")): _*),
         ord).as("_r"))
-      .select(fields.map(f => col(s"_r.${f.name}").as(f.name)) ++
+      .select(fields.map(f =>
+          if (s.pk.contains(f.name)) col(f.name)
+          else col(s"_r.${f.name}").as(f.name)) ++
         Seq(col("_r._deleted").as("_deleted"), col("_r._ts").as("_ts"),
           col("_r._version").as("_version")): _*)
   }

@@ -2142,8 +2142,9 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     if (dirty.nonEmpty || viewsStale || cdcStale || ttlStale.nonEmpty) {
       // snapshotServed, not snapshot: with a FRESH snapshot cache the
       // registered view is a pure parquet scan (no per-query collapse
-      // shuffle) — and an Aggregate over a scan is what AggRewriteRule
-      // can swap onto registered MV state
+      // shuffle; behind the counter, the tail laid over the cache, one
+      // job here per table) — and an Aggregate over a scan is what
+      // AggRewriteRule can swap onto registered MV state
       // ([[graft.operators.Materialize.registerForRewrite]]), so the
       // dashboard GROUP BY through this front-end reads KBs of state
       (dirty ++ ttlStale).filter(tableNames.contains).foreach { t =>

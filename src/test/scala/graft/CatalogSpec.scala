@@ -1811,9 +1811,11 @@ class CatalogSpec extends AnyFunSuite {
       s"fresh cache must serve as a pure scan:\n$served")
   }
 
-  // Spark work of one serving read, measured on the code before the
-  // read paths shared one cache-aware log slice; a change here is a
-  // change in read cost.
+  // Spark work of one serving read: the fresh counts were measured on
+  // the code before the read paths shared one cache-aware log slice,
+  // the cache-plus-tail counts on the overlay (the same totals the
+  // whole-table collapse gave, split as one tail job and one read); a
+  // change here is a change in read cost.
   test("snapshot cache: Spark jobs, stages and tasks of a served read " +
       "against an exactly fresh cache and against cache plus tail") {
     import spark.implicits._
@@ -1835,6 +1837,239 @@ class CatalogSpec extends AnyFunSuite {
     assert(tailRows.length == 41)
     assert(tail == Measure.JobCounts(jobs = 2, stages = 2, tasks = 6),
       s"cache plus tail: $tail")
+    // the same work split in two: the overlay reads the tail when the
+    // frame is built, and the frame's own read is then one job
+    val Measure.Measured(build, _, frame) =
+      Measure.once(spark)(cat.snapshotServed("jc"))
+    assert(build == Measure.JobCounts(jobs = 1, stages = 1, tasks = 4),
+      s"cache plus tail, building the frame: $build")
+    val read = Measure.once(spark)(frame.collect()).counts
+    assert(read == Measure.JobCounts(jobs = 1, stages = 1, tasks = 2),
+      s"cache plus tail, reading the frame: $read")
+  }
+
+  /** Rows of `df` as a set, for order-free comparison. */
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Row] =
+    df.collect().toSet
+
+  /** The served snapshot of `t` equals the uncached collapse at the
+    * counter; returns whether it was served by the overlay (no
+    * exchange) rather than a collapse. */
+  private def servedMatches(cat: GraftCatalog, t: String,
+      tag: String): Boolean = {
+    val served = cat.snapshotServed(t)
+    val counter = cat.currentVersion(t)
+    assert(rowSet(served) == rowSet(cat.snapshotAsOf(t, counter)), tag)
+    cat.snapCacheVersion(t).exists(_ < counter) &&
+      !served.queryExecution.executedPlan.toString.contains("Exchange")
+  }
+
+  test("snapshot cache overlay: after every write of a seeded sequence " +
+      "of upserts, deletes, resurrections and no-match DELETEs, the " +
+      "served snapshot equals snapshotAsOf at the counter, for a single " +
+      "BIGINT key and a composite VARCHAR, CHAR, DECIMAL, DATE, " +
+      "TIMESTAMP, BIGINT key whose last part is sometimes NULL") {
+    import scala.jdk.CollectionConverters._
+    val cat = freshCatalog()
+    def width(key: String, n: Long) =
+      new MetadataBuilder().putLong(key, n).build()
+    val cache = Map("SNAPSHOT_CACHE_BATCHES" -> "3")
+    cat.createTable("os", StructType(Seq(
+      StructField("k", LongType), StructField("x", LongType))),
+      pk = Seq("k"), props = cache)
+    cat.createTable("oc", StructType(Seq(
+      StructField("s", StringType,
+        metadata = width(GraftCatalog.VarcharWidthKey, 8)),
+      StructField("c", StringType,
+        metadata = width(GraftCatalog.CharWidthKey, 3)),
+      StructField("d", DecimalType(10, 2)), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("n", LongType),
+      StructField("x", LongType))),
+      pk = Seq("s", "c", "d", "dt", "ts", "n"), props = cache)
+    // key i of each table: the composite key's parts all derive from i,
+    // and its last part is NULL for every third key
+    def row(t: String, i: Int, x: Long): Row =
+      if (t == "os") Row(i.toLong, x)
+      else Row(s"k$i", s"c${i % 3}", java.math.BigDecimal.valueOf(i * 25L, 2),
+        java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i)),
+        new java.sql.Timestamp(1600000000000L + i * 1000L),
+        if (i % 3 == 0) null else i.toLong, x)
+    def key(t: String) = col(if (t == "os") "k" else "s")
+    def keyLit(t: String, i: Int) = if (t == "os") lit(i.toLong) else lit(s"k$i")
+    val rng = new scala.util.Random(9)
+    for (t <- Seq("os", "oc")) {
+      val alive = scala.collection.mutable.Set[Int]()
+      var resurrected, noMatch, overlaid = 0
+      for (step <- 1 to 18) {
+        val keys = Seq.fill(1 + rng.nextInt(3))(rng.nextInt(9)).distinct
+        rng.nextInt(6) match {
+          case 0 | 1 =>
+            cat.delete(t, key(t).isin(keys.map(keyLit(t, _)): _*))
+            alive --= keys
+          case 2 =>
+            cat.delete(t, key(t) === keyLit(t, 99))
+            noMatch += 1
+          case _ =>
+            resurrected += keys.count(i => !alive(i) &&
+              cat.changeLog(t).where(key(t) === keyLit(t, i)).count() > 0)
+            cat.upsert(t, spark.createDataFrame(
+              keys.map(row(t, _, rng.nextLong())).asJava, cat.spec(t).schema))
+            alive ++= keys
+        }
+        if (servedMatches(cat, t, s"$t, step $step")) overlaid += 1
+      }
+      assert(resurrected > 0 && noMatch > 0,
+        s"$t: the sequence must resurrect a key ($resurrected) and run " +
+          s"a no-match DELETE ($noMatch)")
+      assert(overlaid >= 6, s"$t: only $overlaid reads were overlaid")
+    }
+  }
+
+  test("snapshot cache overlay: an orphan row above the counter stays " +
+      "invisible, and a tail past the row cap is served by the collapse " +
+      "with equal rows") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("oo", StructType(Seq(
+      StructField("k", LongType), StructField("x", LongType))),
+      pk = Seq("k"))
+    cat.upsert("oo", (1L to 10L).map(k => (k, k)).toDF("k", "x"))
+    cat.refreshSnapshotCache("oo")
+    val v = cat.upsert("oo", Seq((2L, 22L), (11L, 11L)).toDF("k", "x"))
+    // a refused writer's append: one row over a cached key, one new key
+    Seq((3L, 33L), (50L, 50L)).toDF("k", "x")
+      .withColumn("_version", lit(v + 100L))
+      .withColumn("_deleted", lit(false))
+      .withColumn("_ts", lit(new java.sql.Timestamp(0L)))
+      .write.mode("append").parquet(s"${cat.tablePath("oo")}/data")
+    assert(servedMatches(cat, "oo", "orphan"), "orphan: overlaid")
+    assert(rowSet(cat.snapshotServed("oo")).map(_.getLong(0)) ==
+      (1L to 11L).toSet)
+    val cap = graft.operators.DriverParquet.cap
+    // a tail of exactly cap rows is overlaid, one more row is not
+    cat.upsert("oo", (100L until 100L + cap - 2).map(k => (k, k))
+      .toDF("k", "x"))
+    assert(servedMatches(cat, "oo", "cap rows"), "cap rows: overlaid")
+    cat.upsert("oo", Seq((1L, -1L)).toDF("k", "x"))
+    assert(!servedMatches(cat, "oo", "cap + 1 rows"),
+      "cap + 1 rows: collapsed")
+  }
+
+  test("snapshot cache overlay: TTL drops expired cache rows and expired " +
+      "tail rows exactly like the uncached collapse") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    var now = 1000000L
+    cat.clock = () => now
+    cat.createTable("ot", StructType(Seq(
+      StructField("k", LongType), StructField("x", LongType))),
+      pk = Seq("k"), props = Map("TTL" -> "100"))
+    cat.upsert("ot", (1L to 4L).map(k => (k, k)).toDF("k", "x"))
+    cat.refreshSnapshotCache("ot")
+    now += 30000L
+    cat.upsert("ot", Seq((2L, 22L), (6L, 6L)).toDF("k", "x"))
+    now += 60000L
+    cat.upsert("ot", Seq((1L, 111L), (7L, 7L)).toDF("k", "x"))
+    def keys() = rowSet(cat.snapshotServed("ot"))
+      .map(r => r.getLong(0) -> r.getLong(1))
+    // every cache row has expired; every tail row is alive
+    now += 20000L
+    assert(servedMatches(cat, "ot", "cache rows expired"))
+    assert(keys() == Set(1L -> 111L, 2L -> 22L, 6L -> 6L, 7L -> 7L))
+    // the first tail batch has expired too
+    now += 25000L
+    assert(servedMatches(cat, "ot", "tail rows expired"))
+    assert(keys() == Set(1L -> 111L, 7L -> 7L))
+  }
+
+  test("snapshot cache overlay: a PhoenixSql read in the tail state runs " +
+      "one job to register the table and one job to read") {
+    val cat = freshCatalog()
+    val px = new graft.sources.PhoenixSql(spark, cat)
+    px.execute("CREATE TABLE pj (k BIGINT NOT NULL, x BIGINT " +
+      "CONSTRAINT pk PRIMARY KEY (k)) SNAPSHOT_CACHE_BATCHES=3")
+    px.execute("UPSERT INTO pj VALUES (1, 10), (2, 20), (3, 30)")
+    cat.refreshSnapshotCache("pj")
+    px.execute("UPSERT INTO pj VALUES (2, 21), (4, 40)")
+    for ((q, registers, rows) <- Seq(
+        ("SELECT k, x FROM pj WHERE k = 2", 1, Seq(Row(2L, 21L))),
+        ("SELECT k, x FROM pj WHERE k BETWEEN 1 AND 3", 0,
+          Seq(Row(1L, 10L), Row(2L, 21L), Row(3L, 30L))))) {
+      val Measure.Measured(reg, _, df) = Measure.once(spark)(px.execute(q))
+      assert(reg.jobs == registers, s"$q, registration: $reg")
+      val read = Measure.once(spark)(df.collect())
+      assert(read.counts.jobs == 1, s"$q, read: ${read.counts}")
+      assert(read.value.toSeq.sortBy(_.getLong(0)) == rows, q)
+    }
+  }
+
+  test("snapshot cache overlay: an MV does not serve the overlay while " +
+      "its fold mark is behind, even when a PK filter prunes the tail " +
+      "branch away") {
+    import graft.operators.Materialize
+    val cat = freshCatalog()
+    val px = new graft.sources.PhoenixSql(spark, cat)
+    px.execute("CREATE TABLE am (k BIGINT NOT NULL, x BIGINT " +
+      "CONSTRAINT pk PRIMARY KEY (k))")
+    px.execute("UPSERT INTO am VALUES (1, 10), (2, 20), (3, 30)")
+    cat.refreshSnapshotCache("am")
+    val mv = java.nio.file.Files.createTempDirectory("graft_mv_am").toString
+    Materialize.build(cat, "am", Seq("k"), Seq("x"), mv)
+    Materialize.registerForRewrite(cat, "am", mv)
+    val q = "SELECT k, SUM(x) AS sum_x FROM am WHERE k = 1 GROUP BY k"
+    def run() = {
+      val df = px.execute(q)
+      (df.queryExecution.executedPlan.toString,
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    }
+    assert(run()._1.contains(mv), "fresh cache and MV: served")
+    // the cache moves past the MV's fold mark, then a tail touches key
+    // 2 only: the PK filter empties the tail branch, which leaves a
+    // filtered scan of a cache that holds a row the MV has not folded
+    px.execute("UPSERT INTO am VALUES (1, 11)")
+    cat.refreshSnapshotCache("am")
+    px.execute("UPSERT INTO am VALUES (2, 21)")
+    val (pruned, prunedRows) = run()
+    assert(!pruned.contains("LocalTableScan") && !pruned.contains("/data"),
+      s"the tail branch should be pruned:\n$pruned")
+    assert(!pruned.contains(mv), s"MV behind the counter served:\n$pruned")
+    assert(prunedRows == Seq((1L, 11L)))
+    // once the MV folds the tail its probe passes; served or not, the
+    // answer is the recompute's
+    Materialize.refresh(cat, "am", mv)
+    assert(run()._2 == Seq((1L, 11L)))
+  }
+
+  test("a PK predicate over the collapse pushes into every scan below " +
+      "the aggregate, and the rows are unchanged") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val cat = freshCatalog()
+    cat.createTable("pp", StructType(Seq(
+      StructField("k", LongType), StructField("x", LongType))),
+      pk = Seq("k"))
+    cat.upsert("pp", (1L to 20L).map(k => (k, k)).toDF("k", "x"))
+    cat.refreshSnapshotCache("pp")
+    cat.upsert("pp", (1L to 20L by 2).map(k => (k, -k)).toDF("k", "x"))
+    cat.delete("pp", col("k") === 5L)
+    val all = rowSet(cat.snapshot("pp"))
+    for ((pred, pushed, keep) <- Seq(
+        (col("k") === 7L, Seq("EqualTo(k,7)"), (k: Long) => k == 7L),
+        (col("k").between(4L, 9L),
+          Seq("GreaterThanOrEqual(k,4)", "LessThanOrEqual(k,9)"),
+          (k: Long) => k >= 4L && k <= 9L))) {
+      val df = cat.snapshot("pp").where(pred)
+      val plan = df.queryExecution.sparkPlan
+      val scans = plan.collect { case s: FileSourceScanExec => s }
+      val below = plan.collectFirst { case a: BaseAggregateExec => a }
+        .toSeq.flatMap(_.collect { case s: FileSourceScanExec => s })
+      assert(scans.size == 2 && below.size == scans.size,
+        s"both scans (cache and tail) under the collapse:\n$plan")
+      scans.foreach(s => pushed.foreach(p =>
+        assert(s.metadata("PushedFilters").contains(p), s"$p:\n$plan")))
+      assert(rowSet(df) == all.filter(r => keep(r.getLong(0))))
+    }
   }
 
   // Spark work of each catalog write, measured on the code before the
