@@ -89,27 +89,35 @@ object ScaleRehearsal {
     // costs milliseconds and reads "flat" no matter what
     val n1 = 10L * 1000 * 1000
     val bigF = 3
-    def big(names: String*)(secs: Long => Seq[Double]): Seq[Row] = {
-      val (a, b) = (secs(n1), secs(n1 * bigF))
-      names.indices.map(i => row(names(i), bigF, a(i), b(i),
-        label = if (i == 0) s"${names(i)} (10M vs 30M rows)" else ""))
-    }
-    val sections: Seq[(String, () => Seq[Row])] = Seq(
-      "ivm" -> (() => Seq(row("ivm_refresh_fixed_delta", factor,
-        ivmRefreshSeconds(spark, base), ivmRefreshSeconds(spark, out)))),
-      "ivmgrain" -> (() => Seq(row("ivm_grain_refresh_fixed_delta", factor,
-        ivmGrainRefreshSeconds(spark, base),
-        ivmGrainRefreshSeconds(spark, out)))),
-      "ivmbig" -> (() => big("ivm_big_nonextremal", "ivm_big_extremal_k8",
-        "ivm_big_extremal_k64")(ivmBigSeconds(spark, _))),
-      "ivmbucket" -> (() => {
-        // state-write axis: GROUP count ×5 with bucket size held
-        // constant (B scales with G) — legacy rewrites the whole state
-        // per refresh (exponent → 1), the bucket manifest rewrites
-        // touched buckets only (exponent → 0)
-        val g1 = 2L * 1000 * 1000
+    // a section is (warm, run): `warm` runs its base side once,
+    // untimed, before `run` times both sides — otherwise the base side
+    // alone pays the JIT and codegen warm-up of the section's own code
+    // path, and its exponent reads as negative scaling
+    type Section = (() => Any, () => Seq[Row])
+    def pair(name: String, secs: String => Double): Section =
+      (() => secs(base),
+        () => Seq(row(name, factor, secs(base), secs(out))))
+    def big(names: String*)(secs: Long => Seq[Double]): Section =
+      (() => secs(n1), () => {
+        val (a, b) = (secs(n1), secs(n1 * bigF))
+        names.indices.map(i => row(names(i), bigF, a(i), b(i),
+          label = if (i == 0) s"${names(i)} (10M vs 30M rows)" else ""))
+      })
+    // state-write axis: GROUP count ×5 with bucket size held constant
+    // (B scales with G) — legacy rewrites the whole state per refresh
+    // (exponent → 1), the bucket manifest rewrites touched buckets only
+    // (exponent → 0)
+    val g1 = 2L * 1000 * 1000
+    val bPer = 62500L // target groups per bucket
+    val sections: Seq[(String, Section)] = Seq(
+      "ivm" -> pair("ivm_refresh_fixed_delta", ivmRefreshSeconds(spark, _)),
+      "ivmgrain" -> pair("ivm_grain_refresh_fixed_delta",
+        ivmGrainRefreshSeconds(spark, _)),
+      "ivmbig" -> big("ivm_big_nonextremal", "ivm_big_extremal_k8",
+        "ivm_big_extremal_k64")(ivmBigSeconds(spark, _)),
+      "ivmbucket" -> ((() => ivmBucketedSeconds(spark, g1,
+          (g1 / bPer).toInt)), () => {
         val f = 5
-        val bPer = 62500L // target groups per bucket
         val (l1, b1, lm1, bm1) = ivmBucketedSeconds(spark, g1,
           (g1 / bPer).toInt)
         val (l5, b5, lm5, bm5) = ivmBucketedSeconds(spark, g1 * f,
@@ -129,48 +137,47 @@ object ScaleRehearsal {
       // NOT O(R) + O(S): the fact side declares its FK immutable, so
       // both legs' "other side" reads are zone-bounded below the
       // collapse.
-      "joinivm" -> (() => big("joinivm_fact_delta", "joinivm_dim_delta",
-        "joinivm_dim_delta_fullscan")(joinIvmSeconds(spark, _))),
+      "joinivm" -> big("joinivm_fact_delta", "joinivm_dim_delta",
+        "joinivm_dim_delta_fullscan")(joinIvmSeconds(spark, _)),
       // 3-table chain: the N-way telescoping legs — fact and dim deltas
       // assert the recompute-free fold; the part leg's retraction can
       // tie group extrema (its fan-out spans the x range), so it times
       // the gated path honestly.
-      "chainivm" -> (() => big("chainivm_fact_delta", "chainivm_dim_delta",
-        "chainivm_part_delta")(chainIvmSeconds(spark, _))),
+      "chainivm" -> big("chainivm_fact_delta", "chainivm_dim_delta",
+        "chainivm_part_delta")(chainIvmSeconds(spark, _)),
       // 5-table chain (fact + 4 sides): leg COUNT grows linearly with
       // chain depth — each of the 5 legs joins all 5 tables — and every
       // leg's cache/read bound must hold at depth.
-      "deepchain" -> (() => big("deepchain_fact_delta",
+      "deepchain" -> big("deepchain_fact_delta",
         "deepchain_dim_delta", "deepchain_tail_delta")(
-        deepChainIvmSeconds(spark, _))),
+        deepChainIvmSeconds(spark, _)),
       // LEFT-outer binary join: the null-extension delta algebra —
       // fixed interior fact updates and a fixed dangling→matched
       // transition batch must both stay flat as the fact grows.
-      "leftivm" -> (() => big("leftivm_fact_delta", "leftivm_transitions")(
-        leftIvmSeconds(spark, _))),
+      "leftivm" -> big("leftivm_fact_delta", "leftivm_transitions")(
+        leftIvmSeconds(spark, _)),
       // FULL-outer N-way star chain: the r14 decomposition (LEFT part +
       // one independent side-dangling part per side, each riding two
       // telescoping legs over the fact's null-extension indicator) —
       // fixed deltas drive every transition shape, proving the per-side
       // dangling parts pick up no O(table) term.
-      "fullivm" -> (() => big("fullivm_fact_delta", "fullivm_transitions",
-        "fullivm_redangle")(fullIvmSeconds(spark, _))),
-      "cdc" -> (() => Seq(row("cdc_mv_freshness_per_batch", factor,
-        cdcMvFreshnessSeconds(spark, base),
-        cdcMvFreshnessSeconds(spark, out)))))
+      "fullivm" -> big("fullivm_fact_delta", "fullivm_transitions",
+        "fullivm_redangle")(fullIvmSeconds(spark, _)),
+      "cdc" -> pair("cdc_mv_freshness_per_batch",
+        cdcMvFreshnessSeconds(spark, _)))
 
+    // queries need no warm-up pass: best-of-N keeps the fastest run
     val timed: Seq[() => Seq[Row]] =
       selected.filterNot(sections.map(_._1).toSet).map { q => () =>
         (for (a <- best(q, base); b <- best(q, out))
           yield row(q, factor, a, b)).toSeq
-      } ++ sections.collect { case (k, run) if selected.contains(k) => run }
-    // one untimed pass of the first unit's work, as Bench warms its
-    // session: otherwise that unit's base side alone pays the JIT and
-    // codegen warm-up, and its exponent reads as negative scaling
-    timed.headOption.foreach { warm =>
-      println("[scale] untimed warm-up pass:")
-      warm()
-    }
+      } ++ sections.collect { case (k, (warm, run)) if selected.contains(k) =>
+        () => {
+          println(s"[scale] untimed warm-up pass: $k")
+          warm()
+          run()
+        }
+      }
     val rows = timed.flatMap(_())
     val json = rows.map { case (q, a, b, e) =>
       f"""{"q":"$q","base_sec":$a%.3f,"scaled_sec":$b%.3f,"exponent":$e%.3f}"""

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.GraftCatalog
+import scala.jdk.CollectionConverters._
 
 /** Incremental materialized-aggregate maintenance (IVM) over the
   * catalog's change log.
@@ -327,8 +328,8 @@ object Materialize {
     // NEVER overwrite the directory the live meta points to: a rebuild
     // triggered by ALTER SET TTL (or a legacy meta) keeps the
     // high-water mark, so the default name collides with the state
-    // being served — and SaveMode.Overwrite deletes the target first,
-    // stranding the pointer on a crash mid-write. Suffix with the
+    // being served — and replacing the target swaps it under the live
+    // pointer. Suffix with the
     // refresh stamp instead (the same flip-don't-overwrite rule the
     // expiry-only refresh path follows).
     // existence-probe the FileSystem before reading: the Try alone is
@@ -381,64 +382,28 @@ object Materialize {
   }
 
   /** The one state write of build, refresh and compaction: `df` into
-    * `path/dir`, single-dir or bucket-manifested. `tryDirect` (a cheap
-    * re-readable input) first tries the row-capped driver-local write
-    * (guide §1.2). Returns the fresh dir's bucket manifest (empty when
-    * `buckets == 0`). */
+    * `path/dir` through [[Commit.replace]], single-dir or bucketed —
+    * rows routed by [[bucketCol]] into `__b=<i>` dirs, one file each,
+    * plus the `_schema` anchor. A small exchange-free input (a filter
+    * over the refresh's checkpointed fold, a state scan) lands on the
+    * driver; the build aggregate takes the distributed write. Returns
+    * the fresh dir's bucket manifest (empty when `buckets == 0`). */
   private[operators] def writeState(df: DataFrame, groupCols: Seq[String],
-      buckets: Int, path: String, dir: String,
-      tryDirect: Boolean = false): Seq[String] =
+      buckets: Int, path: String, dir: String): Seq[String] =
     if (buckets == 0) {
-      if (!(tryDirect && DriverParquet.writeIfSmall(df, s"$path/$dir")))
-        df.write.mode(SaveMode.Overwrite).parquet(s"$path/$dir")
+      Commit.replace(df, s"$path/$dir")
       Seq.empty
     } else {
-      writeBucketed(df, groupCols, buckets, s"$path/$dir", tryDirect)
-      manifestOf(df.sparkSession, path, dir, buckets)
-    }
-
-  /** Per bucket, `dir` when the just-written bucketed state dir holds
-    * that bucket's partition, else "" (empty bucket). */
-  private def manifestOf(spark: SparkSession, path: String, dir: String,
-      buckets: Int): Seq[String] =
-    if (buckets == 0) Seq.empty
-    else {
+      Commit.replace(df.withColumn("__b", bucketCol(df, groupCols, buckets)),
+        s"$path/$dir", partitionBy = Some("__b"))
       val p = new org.apache.hadoop.fs.Path(s"$path/$dir")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val present = fs.listStatus(p).toSeq.map(_.getPath.getName)
+      val present = p.getFileSystem(
+          df.sparkSession.sessionState.newHadoopConf())
+        .listStatus(p).toSeq.map(_.getPath.getName)
         .collect { case n if n.startsWith("__b=") => n.drop(4).toInt }
         .toSet
       (0 until buckets).map(i => if (present.contains(i)) dir else "")
     }
-
-  /** Bucketed state write: rows routed by [[bucketCol]] into `__b=<i>`
-    * partition dirs, plus an always-present empty `_schema` slice (the
-    * typed-schema anchor for reads when every bucket is empty —
-    * `limit(0)` folds to an empty relation, so the write is free). */
-  private[operators] def writeBucketed(df: DataFrame, groupCols: Seq[String],
-      buckets: Int, dir: String, tryDirect: Boolean = false): Unit = {
-    // row-count-gated DIRECT layout (guide §1.2): refresh passes
-    // tryDirect when df is a cheap re-read (a filter over the
-    // checkpointed fold), so a small refresh lays the buckets out on
-    // the driver — no exchange, no job, no commit. Over the cap (or
-    // for expensive inputs like the build aggregate) the distributed
-    // write below runs exactly as before.
-    if (tryDirect && DriverParquet.writeFoldIfSmall(df, None,
-        Some((d: DataFrame) => bucketCol(d, groupCols, buckets)), dir))
-      return
-    // repartition ON the bucket id before the partitioned write: each
-    // bucket then lives in exactly one task → ONE file per bucket dir
-    // (without it every upstream task writes a sliver into every
-    // bucket it holds — up to tasks × buckets tiny files, poison for
-    // both the write and every later leaf read)
-    df.withColumn("__b", bucketCol(df, groupCols, buckets))
-      .repartition(col("__b"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__b").parquet(dir)
-    // footer-only schema anchor, written on the driver: an empty
-    // distributed write job produced the identical file (guide §1.2)
-    DriverParquet.writeRows(df, df.schema, Iterator.empty,
-      s"$dir/_schema")
-  }
 
   /** Register this MV with [[graft.plans.GraftAggViews]] keyed on the
     * CATALOG TABLE, so SQL-front-end aggregates over the table's served
@@ -557,11 +522,10 @@ object Materialize {
     // outgrows the filesystem's 255-byte limit on a periodically
     // compacted, read-mostly MV.
     val nd = s"state_v${meta.single.lastVersion}c${System.nanoTime()}"
-    // the compaction input is a plain state scan, so the direct-write
-    // probe is a cheap limit-take even over a huge state (falls back
-    // to the distributed rewrite above the cap) — guide §1.2
+    // the compaction input is a plain state scan, so the driver-path
+    // probe is a cheap limit-take even over a huge state
     val bucketDirs = writeState(read(spark, path), meta.groupCols,
-      meta.buckets, path, nd, tryDirect = true)
+      meta.buckets, path, nd)
     MvMeta.write(spark, path,
       meta.copy(stateDir = nd, bucketDirs = bucketDirs))
     vacuum(spark, path)
@@ -1118,23 +1082,24 @@ object Materialize {
       else Some(recompute(affected,
         if (affectedCount <= 1024) Some(affHead) else None))
     val rec = recomputed.map(_._1)
-    // Row-count-gated DIRECT state write (guide §1.2 — the dominant
-    // fixed cost of the small-delta refresh floor): kept probes the
-    // checkpointed merged fold's cached blocks; the recompute branch
-    // is passed only under the ≤1024 IN-pushdown gate, where its
-    // output is provably ≤ one row per affected group, so collecting
-    // it IS the single execution the write job would have run. Any
-    // overflow (or >1024 affected groups, or a type drift) falls back
-    // to the distributed write with the recompute still executed
-    // exactly once.
-    val dirs =
-      if (affectedCount <= 1024 && DriverParquet.writeFoldIfSmall(kept,
-          rec, if (buckets == 0) None
-          else Some((d: DataFrame) => bucketCol(d, groupCols, buckets)),
-          s"$path/$nd"))
-        manifestOf(spark, path, nd, buckets)
-      else writeState(rec.map(kept.unionByName(_)).getOrElse(kept),
-        groupCols, buckets, path, nd)
+    // The bounded recompute (≤ one row per affected group under the
+    // ≤1024 IN-pushdown gate) joins the state write as local rows, so
+    // collecting it IS its single execution — and only once kept is
+    // known to fit the driver path (kept probes the checkpointed fold's
+    // cached blocks). Otherwise, or on a type drift between the
+    // branches, kept ∪ recompute takes the distributed write, the
+    // recompute still executed exactly once.
+    val out = rec match {
+      case None => kept
+      case Some(r) =>
+        val both = kept.unionByName(r)
+        val aligned = r.select(kept.columns.map(col).toIndexedSeq: _*)
+        val small = if (affectedCount > 1024 || aligned.schema.map(_.dataType)
+            != kept.schema.map(_.dataType)) None else Commit.local(kept)
+        small.fold(both)(k => spark.createDataFrame(
+          (k.collect() ++ aligned.collect()).toSeq.asJava, both.schema))
+    }
+    val dirs = writeState(out, groupCols, buckets, path, nd)
     (dirs, RefreshReport(Nil, recomputeRan = affectedCount > 0,
       affectedGroups = affectedCount,
       bucketsTouched = touched.map(_.size).getOrElse(-1),

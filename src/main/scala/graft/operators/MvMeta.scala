@@ -163,13 +163,22 @@ private[graft] object MvMeta {
     }
   }
 
-  /** Flip the pointer: one-row local relation, written by the
-    * driver-local writer — no distributed job or commit protocol per
-    * meta flip (guide §1.2). The memo is primed with the just-written
-    * row, so the next refresh/serve skips the read-back job too. */
+  /** Flip the pointer: a [[Commit.append]] of the one-row local
+    * relation — the driver path, no Spark job — then delete the older
+    * files. A reader sees the old or the new row, never an empty dir; a
+    * crash between the two steps leaves both files, and the new one
+    * sorts last ([[row]] reads the last-sorting file). The memo is
+    * primed with the just-written row, so the next refresh/serve skips
+    * the read-back job too. */
   def write(spark: SparkSession, path: String, m: MvMeta): Unit = {
     val df = encode(spark, m)
-    DriverParquet.overwriteSmall(df, s"$path/meta")
+    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
+    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val old =
+      if (fs.exists(metaPath)) fs.listStatus(metaPath).filter(_.isFile)
+      else Array.empty[org.apache.hadoop.fs.FileStatus]
+    Commit.append(df, metaPath.toString)
+    old.foreach(s => fs.delete(s.getPath, false))
     val dir = new java.io.File(path, "meta")
     Option(dir.listFiles()).foreach { fs =>
       memo.put(dir.getAbsolutePath, (stamp(fs.toSeq), df.head()))
@@ -197,7 +206,7 @@ private[graft] object MvMeta {
     * concurrent writer's rewrite is picked up exactly as the plain read
     * would see it; a non-local path (no listable java.io dir) falls
     * through to the plain read uncached. A dir holding more than one
-    * data file (a crash inside [[DriverParquet.overwriteSmall]]) is
+    * data file (a crash inside [[write]]) is
     * read at its last-sorting, i.e. newest, file — never at whichever
     * row a multi-file scan yields first. */
   def row(spark: SparkSession, path: String): Row = {

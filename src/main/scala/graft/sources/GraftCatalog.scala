@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import graft.operators.Commit
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -67,7 +68,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     new java.io.File(dir(name)).mkdirs()
     // the first step of any process over an existing dir: a compaction
     // or vacuum cut between its two moves left the live log aside
-    recoverAside(dataDir(name))
+    Commit.recoverAside(spark, dataDir(name).toString)
     // stamp "full history intact" on a FRESH table (no data yet, no
     // marker) so [[compactionFloor]]'s legacy-fallback scan never runs
     // for tables this generation creates; a re-registered EXISTING dir
@@ -433,7 +434,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
           coalesce(col(phys(name, f.name)).cast(TimestampType), lit(nowTs))
         case None => lit(nowTs)
       }
-    appendBatch(name,
+    Commit.append(stamped(name,
         padded.select(fields.map { f =>
           val c = col(f.name).cast(f.dataType)
           // UNSIGNED_* CHECK ≥ 0 (Phoenix throws IllegalDataException on
@@ -460,15 +461,15 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
                 lit(s"VARCHAR(${n}) column ${f.name} exceeds capacity: "), c)))
               .otherwise(c).as(f.name)
           } else c
-        }: _*), v, deleted = false, ts)
+        }: _*), v, deleted = false, ts), dataDir(name).toString)
   }
 
   /** DELETE by predicate: tombstone the matching PKs as of now. */
   def delete(name: String, predicate: org.apache.spark.sql.Column): Long = {
-    val v = versionedWrite(name)(appendBatch(name,
+    val v = versionedWrite(name)(ver => Commit.append(stamped(name,
       snapshotFull(name).where(predicate)
         .select(allFields(name).map(f => col(f.name)): _*),
-      _, deleted = true, lit(batchTs())))
+      ver, deleted = true, lit(batchTs())), dataDir(name).toString))
     refreshSnapCacheIfDue(name)
     v
   }
@@ -481,12 +482,6 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       .withColumn("_version", lit(v))
       .withColumn("_deleted", lit(deleted))
       .withColumn("_ts", ts)
-
-  /** The one append to a table's log: [[stamped]] `rows` as version `v`. */
-  private def appendBatch(name: String, rows: DataFrame, v: Long,
-      deleted: Boolean, ts: org.apache.spark.sql.Column): Unit =
-    stamped(name, rows, v, deleted, ts)
-      .write.mode(SaveMode.Append).parquet(dataDir(name).toString)
 
   /** Full change log (the CDC source): every write of every version. Reads
     * the physical schema (generation-suffixed columns) and renames back to
@@ -639,7 +634,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 
   /** Build/refresh the serving cache at the current high-water mark.
     * Flip-don't-overwrite (same rule as compact/MV state): build the
-    * `v<V>` dir through [[replaceDir]], then drop older cache versions.
+    * `v<V>` dir through [[Commit.replace]], then drop older cache versions.
     * Holds the table's write lock: two builds at one mark (two writer
     * threads each passing the auto-refresh threshold) would share the
     * temp dir, and one would fail. No-op (returns -1) on an empty log. */
@@ -688,9 +683,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
             col("_version") <= v))
       case _ => changeLogRaw(name).where(col("_version") <= v)
     }
-    replaceDir(toPhysical(name,
+    Commit.replace(toPhysical(name,
         collapseLog(name, source, "_version", "_deleted", "_ts")),
-      new java.io.File(GraftCatalog.snapCacheLeaf(dir(name), v)))
+      GraftCatalog.snapCacheLeaf(dir(name), v))
     cacheDirs(name).collect { case (m, f) if m < v => f }.foreach(rmTree)
     v
   }
@@ -751,7 +746,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * `mark`: the cache rows whose PK no tail row touches (a tombstone
     * touches its PK too), plus the tail's alive winners, with every
     * column and `_version`, `_deleted`, `_ts`; TTL not applied. `None`
-    * when the tail holds more than [[graft.operators.DriverParquet.cap]]
+    * when the tail holds more than [[Commit.cap]]
     * rows.
     *
     * One Spark job reads the raw tail, at most `cap + 1` rows per
@@ -773,7 +768,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * overlay. */
   private def overlay(name: String, mark: Long,
       upTo: Long): Option[DataFrame] = {
-    val cap = graft.operators.DriverParquet.cap
+    val cap = Commit.cap
     val tail = changeLogRaw(name)
       .where(col("_version") > mark && col("_version") <= upTo)
     val rows = tail.rdd.mapPartitions(_.take(cap + 1)).collect()
@@ -1200,42 +1195,6 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   private def setCompactionFloor(name: String, v: Long): Unit =
     if (v > compactionFloor(name)) writeMark(floorFile(name), v)
 
-  /** Replace the directory `dest` with `df`'s rows: write a temp
-    * sibling, move the old `dest` aside, move the new one in, delete the
-    * aside copy. Never delete-then-rename — the live dir must not be
-    * gone while the new copy could still fail to land (renameTo signals
-    * failure by RETURN VALUE, not exception); a crash between the moves
-    * leaves the aside copy for [[recoverAside]]. Neither sibling is
-    * named `data` or `v<N>`, so no read ever sees one. */
-  private def replaceDir(df: DataFrame, dest: java.io.File): Unit = {
-    val tmp = new java.io.File(dest.getParentFile, s"_tmp_${dest.getName}")
-    val aside = GraftCatalog.asideOf(dest)
-    recoverAside(dest)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (dest.exists() && !dest.renameTo(aside))
-      throw new java.io.IOException(
-        s"cannot move $dest aside — aborting with it untouched")
-    if (!tmp.renameTo(dest)) {
-      aside.renameTo(dest)
-      throw new java.io.IOException(
-        s"cannot move the new $dest into place — previous copy restored")
-    }
-    rmTree(aside)
-  }
-
-  /** Finish a [[replaceDir]] that was cut short: an aside copy with no
-    * `dest` is the live dir, moved aside before its replacement landed
-    * — move it back (deleting it would lose the table's history); next
-    * to a `dest` it is the replaced copy — delete it. */
-  private def recoverAside(dest: java.io.File): Unit = {
-    val aside = GraftCatalog.asideOf(dest)
-    if (aside.exists()) {
-      if (dest.exists()) rmTree(aside)
-      else if (!aside.renameTo(dest))
-        throw new java.io.IOException(s"cannot restore $dest from $aside")
-    }
-  }
-
   /** Full compaction: rewrite the change log as a single batch holding
     * the current snapshot (all history discarded), stamped at the
     * version the counter held before it. At scale this is the
@@ -1260,8 +1219,8 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       // batch stamp — dropping _ts here would NULL phoenix_row_timestamp
       // for the whole table after compaction. Read under the table
       // lock, so no append can land between the read and the swap.
-      replaceDir(stamped(name, collapseLog(name, changeLog(name), "_ts"),
-        v - 1L, deleted = false, col("_ts")), dataDir(name))
+      Commit.replace(stamped(name, collapseLog(name, changeLog(name), "_ts"),
+        v - 1L, deleted = false, col("_ts")), dataDir(name).toString)
     }
 
   /** FLOORED compaction — routine log maintenance that coexists with
@@ -1305,7 +1264,8 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       .select(logCols: _*)
     val tail = changeLogRaw(name).where(col("_version") > keepAfter)
       .select(logCols: _*)
-    replaceDir(toPhysical(name, winners.unionByName(tail)), dataDir(name))
+    Commit.replace(toPhysical(name, winners.unionByName(tail)),
+      dataDir(name).toString)
     setCompactionFloor(name, keepAfter)
     // the snapshot cache stays VALID: cache rows keep original versions
     // and the rewrite preserves the per-PK winner at every mark >= the
@@ -1320,7 +1280,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * path already excludes them ([[changeLogRaw]] bounds at the
     * counter), so they are invisible — but they bloat the log and
     * every scan's footer set until physically removed. Rewrites the
-    * log without them (through [[replaceDir]], like [[compact]]) under
+    * log without them (through [[Commit.replace]], like [[compact]]) under
     * the table write lock, so no append can interleave; the counter,
     * the floor, and the snapshot cache are all untouched (cache rows
     * sit at or below the counter by construction). Same caller
@@ -1335,7 +1295,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       .parquet(dataDir(name).toString)
     val orphans = raw.where(col("_version") > ctr).count()
     if (orphans == 0L) return 0L
-    replaceDir(raw.where(col("_version") <= ctr), dataDir(name))
+    Commit.replace(raw.where(col("_version") <= ctr), dataDir(name).toString)
     orphans
   }
 
@@ -1468,11 +1428,6 @@ object GraftCatalog {
     case SnapCacheLeaf(root, _) => root
     case _ => path
   }
-
-  /** Where the catalog's replace-by-rename keeps `dest`'s previous
-    * copy between its two moves. */
-  private[graft] def asideOf(dest: java.io.File): java.io.File =
-    new java.io.File(dest.getParentFile, s"_aside_${dest.getName}")
 
   /** StructField metadata key marking a numeric UNSIGNED_* column whose
     * CHECK ≥ 0 is enforced on write (SURVEY §1.2). */

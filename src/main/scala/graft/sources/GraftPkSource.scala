@@ -22,8 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** PK-sort-aware DataSource V2 over a directory of parquet files that are
-  * each sorted by the primary key (the shape `Layout.writeSorted` /
-  * Phoenix region files produce).
+  * each sorted by the primary key (the shape a
+  * `repartitionByRange(pk).sortWithinPartitions(pk)` write, or Phoenix
+  * region files, produce).
   *
   * This is the SURVEY §4b perf-parity item (reference:
   * cc/optimize/QueryOptimizer.java:103 — Phoenix serves rows in rowkey

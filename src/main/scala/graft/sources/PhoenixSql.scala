@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, OneRowRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -1654,12 +1656,29 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     // and no column is widened across tuples: `(1, 'x'), (2, 3)` into a
     // VARCHAR stores '3' instead of widening to BIGINT and failing on
     // 'x'. Spark's inline VALUES table would also be one partition, but
-    // it rejects UDF calls and mixed literal kinds. catalog.upsert pads
-    // the omitted columns and runs the write-path checks.
-    val rows = spark.sql(s"SELECT inline(array(${structs.mkString(", ")}))")
-    catalog.upsert(table, rows)
+    // it rejects UDF calls and mixed literal kinds. The generator then
+    // runs on the driver ([[onDriver]]), so the batch reaches
+    // catalog.upsert as a local relation and its write runs no Spark
+    // job. catalog.upsert pads the omitted columns and runs the
+    // write-path checks.
+    catalog.upsert(table, onDriver(
+      spark.sql(s"SELECT inline(array(${structs.mkString(", ")}))")))
     spark.emptyDataFrame
   }
+
+  /** A deterministic generator over the one-row relation, evaluated on
+    * the driver into a local relation with the same columns (collecting
+    * the generator itself would run a Spark job); any other plan is
+    * returned unchanged. */
+  private def onDriver(df: DataFrame): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case Generate(g, _, false, _, out, _: OneRowRelation)
+          if g.deterministic && out.map(_.name) == df.columns.toSeq =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+        spark.createDataFrame(g.eval(InternalRow.empty).iterator
+          .map(r => toRow(r).asInstanceOf[Row]).toSeq.asJava, df.schema)
+      case _ => df
+    }
 
   private def delete(sIn: String): DataFrame = {
     // the WHERE clause goes to expr() un-prepared, so binary-literal

@@ -1945,7 +1945,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(servedMatches(cat, "oo", "orphan"), "orphan: overlaid")
     assert(rowSet(cat.snapshotServed("oo")).map(_.getLong(0)) ==
       (1L to 11L).toSet)
-    val cap = graft.operators.DriverParquet.cap
+    val cap = graft.operators.Commit.cap
     // a tail of exactly cap rows is overlaid, one more row is not
     cat.upsert("oo", (100L until 100L + cap - 2).map(k => (k, k))
       .toDF("k", "x"))
@@ -2114,12 +2114,125 @@ class CatalogSpec extends AnyFunSuite {
       "compactFloored" -> compactFloored, "vacuum" -> vacuum,
       "compactFull" -> compactFull, "truncate" -> truncate)
     def jc(j: Int, s: Int, t: Int) = Measure.JobCounts(j, s, t)
+    // a local batch commits on the driver with no job, and the
+    // vacuum's exchange-free rewrite runs the driver-path probe
     assert(counts == Map(
-      "upsert" -> jc(1, 1, 4), "delete" -> jc(2, 2, 5),
+      "upsert" -> jc(0, 0, 0), "delete" -> jc(2, 2, 3),
       "cacheFirst" -> jc(2, 2, 4), "cacheIncremental" -> jc(2, 2, 6),
-      "compactFloored" -> jc(2, 2, 9), "vacuum" -> jc(3, 3, 7),
-      "compactFull" -> jc(2, 2, 3), "truncate" -> jc(0, 0, 0)),
+      "compactFloored" -> jc(2, 2, 9), "vacuum" -> jc(4, 4, 7),
+      "compactFull" -> jc(2, 2, 2), "truncate" -> jc(0, 0, 0)),
       s"write counts: $counts")
+  }
+
+  test("Commit lands catalog rows and MV state identically on the " +
+      "driver path (cap rows) and the distributed path (cap + 1 rows)") {
+    import scala.jdk.CollectionConverters._
+    import graft.operators.{Commit, Materialize, MvMeta}
+    val cat = freshCatalog()
+    def md(f: MetadataBuilder => MetadataBuilder) =
+      f(new MetadataBuilder()).build()
+    val schema = StructType(Seq(
+      StructField("k", LongType),
+      StructField("s", StringType,
+        metadata = md(_.putLong(GraftCatalog.VarcharWidthKey, 12))),
+      StructField("c", StringType,
+        metadata = md(_.putLong(GraftCatalog.CharWidthKey, 3))),
+      StructField("d", DecimalType(12, 2)), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("arr", ArrayType(LongType)),
+      StructField("u", LongType,
+        metadata = md(_.putBoolean(GraftCatalog.UnsignedKey, true))),
+      StructField("rt", TimestampType,
+        metadata = md(_.putBoolean(GraftCatalog.RowTimestampKey, true)))))
+    val ext = StructField("e", StringType)
+    def row(i: Int) = Row(i.toLong, s"s$i", s"c${i % 10}",
+      java.math.BigDecimal.valueOf(i * 7L, 2),
+      java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1)
+        .plusDays(i % 400)),
+      new java.sql.Timestamp(1600000000000L + i * 1000L),
+      if (i % 5 == 0) null else Seq(i.toLong, i + 1L), (i % 100).toLong,
+      new java.sql.Timestamp(1500000000000L + i), s"e$i")
+    val rowsOf = Map("cd" -> Commit.cap, "cx" -> (Commit.cap + 1))
+    val jobs = rowsOf.map { case (t, n) =>
+      cat.createTable(t, schema, pk = Seq("k", "rt"))
+      cat.extendTable(t, Seq(ext))
+      val in = spark.createDataFrame((0 until n).map(row).asJava,
+        StructType(schema.fields :+ ext))
+      t -> Measure.once(spark)(cat.upsert(t, in)).counts.jobs
+    }
+    assert(jobs("cd") == 0 && jobs("cx") > 0, s"upsert jobs: $jobs")
+    for ((t, n) <- rowsOf)
+      assert(cat.snapshotFull(t).collect().toSet ==
+        (0 until n).map(row).toSet, s"$t read-back")
+    // MV state: the build aggregate takes the distributed write; the
+    // compaction's plain state scan lands on the driver at cap groups
+    // and takes the distributed write at cap + 1 (it leaves _SUCCESS)
+    val groups = Seq("k", "s", "c", "d", "dt", "ts")
+    def state(path: String) = Materialize.read(spark, path)
+      .select((groups ++ Seq("cnt", "sum_u", "min_u", "max_u")).map(col): _*)
+      .collect().toSet
+    for (buckets <- Seq(0, 4)) {
+      val states = rowsOf.map { case (t, n) =>
+        val path = java.nio.file.Files.createTempDirectory("graft_cm").toString
+        Materialize.build(cat, t, groups, Seq("u"), path, buckets = buckets)
+        val built = state(path)
+        Materialize.compactState(spark, path)
+        val dir = new java.io.File(path, MvMeta.read(spark, path).stateDir)
+        assert(new java.io.File(dir, "_SUCCESS").exists() == (t == "cx"),
+          s"$t, $buckets buckets: driver path iff at most cap groups")
+        assert(state(path) == built, s"$t, $buckets buckets: compacted")
+        assert(built.size == n)
+        t -> built
+      }
+      assert(states("cx").filter(_.getLong(0) < Commit.cap) == states("cd"),
+        s"$buckets buckets: both paths hold equal rows")
+    }
+  }
+
+  test("one writer: only Commit writes catalog or MV files") {
+    // the four write idioms Commit replaced must not grow back: a
+    // DataFrameWriter (`.write.`, or `.write` ending a line), SaveMode
+    // or the old driver writer
+    val banned = "SaveMode|\\.write(\\.|\\s*$)|DriverParquet".r
+    for (f <- Seq("sources/GraftCatalog", "operators/Materialize",
+        "operators/MaterializeJoin", "operators/MvMeta")) {
+      val src = new java.io.File(s"src/main/scala/graft/$f.scala")
+      assert(src.isFile, s"source not found: $src")
+      val in = scala.io.Source.fromFile(src, "UTF-8")
+      val hits = try in.getLines().zipWithIndex.collect {
+        case (l, i) if banned.findFirstIn(l).nonEmpty => s"$f:${i + 1}: ${l.trim}"
+      }.toList finally in.close()
+      assert(hits.isEmpty, hits.mkString("write outside Commit:\n", "\n", ""))
+    }
+  }
+
+  test("a hidden file or temp dir left by a cut append or replace is " +
+      "invisible to snapshot and changeLog") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.createTable("hd", StructType(Seq(StructField("k", LongType),
+      StructField("x", LongType))), pk = Seq("k"))
+    cat.upsert("hd", Seq((1L, 10L), (2L, 20L)).toDF("k", "x"))
+    cat.upsert("hd", Seq((2L, 25L)).toDF("k", "x"))
+    def snap() = cat.snapshot("hd").collect().toSet
+    def log() = cat.changeLog("hd").collect().toSeq.map(_.toString).sorted
+    val (snap0, log0) = (snap(), log())
+    val data = new java.io.File(cat.tablePath("hd"), "data")
+    val part = data.listFiles().filter(_.getName.startsWith("part-")).head
+    def plant(dir: java.io.File, name: String): Unit = {
+      dir.mkdirs()
+      java.nio.file.Files.copy(part.toPath, new java.io.File(dir, name).toPath)
+    }
+    // a cut driver-path append: its hidden file, never renamed in
+    plant(data, s"_${part.getName}")
+    // a cut distributed append: its hidden temp dir inside data/
+    plant(new java.io.File(data, "_tmp_cut"), part.getName)
+    // a cut replace: the temp sibling of data/
+    plant(new java.io.File(cat.tablePath("hd"), "_tmp_data"), part.getName)
+    assert(snap() == snap0 && log() == log0)
+    // the next replace writes over the stale temp sibling
+    cat.compact("hd")
+    assert(snap() == snap0)
+    assert(cat.changeLog("hd").count() == snap0.size)
   }
 
   test("IVM extremum gate: non-extremal retractions fold with ZERO " +
@@ -3492,17 +3605,29 @@ class CatalogSpec extends AnyFunSuite {
     val data = new java.io.File(s"${cat.tablePath("cr")}/data")
     Seq((2L, 25L)).toDF("k", "x")
       .write.parquet(s"${cat.tablePath("cr")}/_tmp_data")
-    assert(data.renameTo(GraftCatalog.asideOf(data)))
+    val aside = new java.io.File(
+      graft.operators.Commit.asideOf(data.toString))
+    assert(data.renameTo(aside))
     val cat2 = new GraftCatalog(spark, wh)
     cat2.createTable("cr", schema, pk = Seq("k"))
     assert(rows(cat2) == before,
       "re-registering must restore the pre-compaction snapshot")
     assert(cat2.changeLog("cr").count() == 5, "the full history is back")
-    assert(!GraftCatalog.asideOf(data).exists())
+    assert(!aside.exists())
     // the next compaction runs over the restored history
     cat2.compact("cr")
     assert(rows(cat2) == before)
     assert(cat2.changeLog("cr").count() == 2)
+    // an aside copy NEXT TO the live log is the replaced copy: the
+    // re-registration deletes it and keeps the live log
+    val part = data.listFiles().filter(_.getName.startsWith("part-")).head
+    aside.mkdirs()
+    java.nio.file.Files.copy(part.toPath,
+      new java.io.File(aside, part.getName).toPath)
+    val cat3 = new GraftCatalog(spark, wh)
+    cat3.createTable("cr", schema, pk = Seq("k"))
+    assert(!aside.exists())
+    assert(rows(cat3) == before)
   }
 
   test("orphan rows above the published counter are invisible to every " +

@@ -155,7 +155,10 @@ class MvRefreshSpec extends AnyFunSuite {
 
   // Jobs per warm incremental refresh (insert + non-extremal update,
   // no recompute), measured on the code before the two MV kinds shared
-  // one fold core; a change here is a change in refresh cost.
+  // one fold core; a change here is a change in refresh cost. The
+  // counts also depend on the base tables' file layout: each small
+  // fixture upsert lands as one file, and the join refresh's scans
+  // split by file.
   test("jobs per refresh: plain single-table MV") {
     import spark.implicits._
     val cat = singleTable()
@@ -191,7 +194,7 @@ class MvRefreshSpec extends AnyFunSuite {
     val Measured(n, _, r) =
       Measure.once(spark)(MaterializeJoin.refresh(cat, path))
     assert(!r.recomputeRan)
-    assert(n.jobs == 31, s"jobs per join refresh: ${n.jobs}")
+    assert(n.jobs == 30, s"jobs per join refresh: ${n.jobs}")
     assert(Measure.once(spark)(MaterializeJoin.refresh(cat, path))
         .counts.jobs == 0,
       "a no-change refresh runs no job")

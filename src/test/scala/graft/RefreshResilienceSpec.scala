@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{DriverParquet, Materialize, MaterializeJoin}
+import graft.operators.{Commit, Materialize, MaterializeJoin, MvMeta}
 import graft.sources.GraftCatalog
 
 /** r17 optimization-round pins.
@@ -15,10 +15,10 @@ import graft.sources.GraftCatalog
   *    checkpointed block mid-refresh (after the fold materialized,
   *    before the state write consumed it) and pin that the refresh
   *    still succeeds with the exact expected state.
-  *  - DIRECT STATE WRITE EQUIVALENCE: the driver-local parquet writer
+  *  - DIRECT STATE WRITE EQUIVALENCE: the driver path of [[Commit]]
   *    must produce files Spark reads back exactly like a distributed
   *    write across every state-relevant type, and must replace a
-  *    leftover target dir the way the distributed overwrite does.
+  *    leftover target dir the way the distributed write does.
   */
 class RefreshResilienceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -142,17 +142,19 @@ class RefreshResilienceSpec extends AnyFunSuite {
     val lDir = java.nio.file.Files
       .createTempDirectory("graft_dw_local").toString + "/p"
     df.write.parquet(dDir)
-    assert(DriverParquet.writeIfSmall(df, lDir))
+    val local = Measure.once(spark)(Commit.replace(df, lDir)).counts
     val a = spark.read.parquet(dDir)
     val b = spark.read.parquet(lDir)
     assert(a.schema == b.schema)
     assert(a.collect().map(canon).toSet == b.collect().map(canon).toSet)
-    // over-cap probe writes nothing and reports false
-    val big = spark.range(0, DriverParquet.cap + 10).toDF("id")
+    // over the cap the probe's rows are dropped and the distributed
+    // write lands the same rows: one more job than the probe alone
+    val big = spark.range(0, Commit.cap + 10).toDF("id")
     val oDir = java.nio.file.Files
       .createTempDirectory("graft_dw_over").toString + "/p"
-    assert(!DriverParquet.writeIfSmall(big, oDir))
-    assert(!new java.io.File(oDir).exists())
+    val over = Measure.once(spark)(Commit.replace(big, oDir)).counts
+    assert(over.jobs > local.jobs, s"driver $local, distributed $over")
+    assert(spark.read.parquet(oDir).count() == Commit.cap + 10L)
   }
 
   test("insert-only bucketed refresh takes the driver-local bucket " +
@@ -168,7 +170,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
       .createTempDirectory("graft_rrbk").toString
     Materialize.build(cat, "tb", Seq("k"), Seq("v"), mv, buckets = 4)
     // insert-only delta → no retraction, no recompute → the refresh
-    // writes its touched buckets on the driver (tryDirect path)
+    // writes its touched buckets on the driver (Commit's driver path)
     cat.upsert("tb", Seq(("e", 5L), ("f", 6L)).toDF("k", "v"))
     val r = Materialize.refresh(cat, "tb", mv)
     assert(!r.recomputeRan)
@@ -275,15 +277,29 @@ class RefreshResilienceSpec extends AnyFunSuite {
         .select(cols.map(col): _*).collect().map(canon).toSeq)
   }
 
-  test("overwriteSmall replaces the meta dir contents in place") {
+  test("a meta rewrite replaces the meta dir contents in place") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dw_meta").toString + "/meta"
-    DriverParquet.overwriteSmall(Seq((1L, "x")).toDF("v", "s"), dir)
-    assert(spark.read.parquet(dir).collect().map(canon).toSeq ==
-      Seq(Seq(1L, "x")))
-    DriverParquet.overwriteSmall(Seq((2L, "y")).toDF("v", "s"), dir)
-    assert(spark.read.parquet(dir).collect().map(canon).toSeq ==
-      Seq(Seq(2L, "y")))
+    val cat = freshCatalog()
+    cat.createTable("tm", StructType(Seq(
+      StructField("k", StringType), StructField("v", LongType))),
+      pk = Seq("k"))
+    cat.upsert("tm", Seq(("a", 1L)).toDF("k", "v"))
+    val mv = java.nio.file.Files.createTempDirectory("graft_dw_meta")
+      .toString
+    Materialize.build(cat, "tm", Seq("k"), Seq("v"), mv)
+    val m = MvMeta.read(spark, mv)
+    val dir = java.nio.file.Files.createTempDirectory("graft_dw_meta2")
+      .toString
+    def parts() = new java.io.File(dir, "meta").listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.getName).toSeq
+    MvMeta.write(spark, dir, m.copy(stateDir = "x"))
+    assert(spark.read.parquet(s"$dir/meta").collect().map(
+      _.getAs[String]("state_dir")).toSeq == Seq("x"))
+    val Seq(first) = parts()
+    MvMeta.write(spark, dir, m.copy(stateDir = "y"))
+    assert(spark.read.parquet(s"$dir/meta").collect().map(
+      _.getAs[String]("state_dir")).toSeq == Seq("y"))
+    val Seq(second) = parts()
+    assert(second > first, "the newer meta file must sort last")
   }
 }
