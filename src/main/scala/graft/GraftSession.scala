@@ -16,8 +16,8 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      // covered-index rewrite (graft.plans.IndexRewriteRule); inert until
-      // an index is registered via GraftIndexes.register
+      // MV-served aggregate rewrite (graft.plans.AggRewriteRule); inert
+      // until a view is registered via GraftAggViews
       .withExtensions(new graft.plans.GraftSparkExtensions()(_))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

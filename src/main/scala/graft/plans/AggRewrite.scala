@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, ResolvedHint}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
 
 /** Materialized-aggregate rewrite — the MV-selection step classical
@@ -28,8 +27,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
   * costs one small parquet footer, on par with the schema check the
   * rewrite already pays). A query aggregate rewrites onto the state
   * when:
-  *  - it scans the registered base path (plain parquet or the graftpk
-  *    V2 source), optionally through a column-pruning Project;
+  *  - it scans the registered base path (a parquet file scan),
+  *    optionally through a column-pruning Project;
   *  - its grouping columns are a SUBSET of the view's (equality uses
   *    the state at its own grain; a strict subset ROLLS UP: sums of
   *    sums, min of mins, count(*) = sum(cnt) — all decomposable);
@@ -388,13 +387,6 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
                 .HadoopFsRelation if fs.location.rootPaths.size == 1 =>
               Some((fs.location.rootPaths.head.toUri.getPath, cond, lr,
                 sub, joins))
-            case _ => None
-          }
-        case rel: DataSourceV2Relation =>
-          rel.table match {
-            case t: graft.sources.GraftPkTable =>
-              Some((t.name().stripPrefix("graftpk:"), cond, rel, sub,
-                joins))
             case _ => None
           }
         case _ => None
@@ -1157,4 +1149,13 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     Some(Aggregate(groupTargets.map(stateGroupExpr), newOutputs, source))
   }
+}
+
+/** SparkSessionExtensions hook:
+  * `.withExtensions(new GraftSparkExtensions()(_))` or
+  * `spark.sql.extensions=graft.plans.GraftSparkExtensions`. */
+class GraftSparkExtensions
+    extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    e.injectOptimizerRule(AggRewriteRule)
 }

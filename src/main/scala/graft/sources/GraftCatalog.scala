@@ -1287,15 +1287,23 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * contract as [[compact]]: run when no reader of the log is in
     * flight — the dir swap can fail a concurrently executing scan
     * (results stay correct; the reader retries). Returns the number
-    * of orphan rows reclaimed; no-op (0) when the log is clean. */
+    * of orphan rows reclaimed; no-op (0) when the log is clean. A log
+    * within [[Commit.cap]] is read once: the count and the rewrite
+    * both work on the driver-path probe's rows. */
   def vacuumOrphans(name: String): Long = tableLock(name).synchronized {
     val ctr = currentVersion(name)
     if (!dataDir(name).exists()) return 0L
     val raw = spark.read.schema(physSchema(name))
       .parquet(dataDir(name).toString)
-    val orphans = raw.where(col("_version") > ctr).count()
+    val above = col("_version") > ctr
+    // a local relation's filter folds into it, so collecting the
+    // orphans of a local log runs no job
+    val (log, orphans) = Commit.local(raw) match {
+      case Some(rows) => (rows, rows.where(above).collect().length.toLong)
+      case None => (raw, raw.where(above).count())
+    }
     if (orphans == 0L) return 0L
-    Commit.replace(raw.where(col("_version") <= ctr), dataDir(name).toString)
+    Commit.replace(log.where(!above), dataDir(name).toString)
     orphans
   }
 

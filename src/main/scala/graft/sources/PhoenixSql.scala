@@ -145,8 +145,8 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
         up.startsWith("CREATE LOCAL INDEX"))
       throw new IllegalArgumentException(
         "secondary indexes are out of scope (OLTP write-path maintenance); " +
-          "model covered indexes as materialized sorted projections — " +
-          "see graft.operators.Layout and graft.plans.IndexRewriteRule")
+          "precompute what a covered index would serve with " +
+          "CREATE MATERIALIZED VIEW")
     else if (up.startsWith("GRANT") || up.startsWith("REVOKE"))
       throw new IllegalArgumentException(
         "GRANT/REVOKE are out of scope: the reference delegates them to " +
@@ -1710,26 +1710,22 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     *    sort-merge strategy like the reference's JoinCompiler does
     *    (limitation: comma-list FROM clauses and subquery-only FROMs have
     *    no bare relation to hint — warned, not silently dropped);
-    *  - NO_INDEX → the covered-index rewrite ([[graft.plans
-    *    .IndexRewriteRule]]) is disabled for THIS statement: the rule
-    *    checks the session conf and the statement's optimized plan is
-    *    forced inside the conf window (QueryExecution caches it, and
-    *    AQE's runtime re-optimization does not re-run injected rules);
     *  - [[SparkNativeHints]] pass through verbatim with their arguments;
-    *    everything else (RANGE_SCAN, SKIP_SCAN, NO_STAR_JOIN, SMALL,
-    *    SERIAL, INDEX(...), ...) is dropped with a stderr warning — they
-    *    steer HBase scan internals Catalyst decides itself.
-    * @return (sql with the hint comment rewritten, noIndex flag) */
-  private[graft] def rewriteHints(s: String): (String, Boolean) = {
+    *  - everything else (RANGE_SCAN, SKIP_SCAN, NO_STAR_JOIN, SMALL,
+    *    SERIAL, INDEX(...), NO_INDEX, ...) is dropped with a stderr
+    *    warning — they steer HBase scan internals Catalyst decides
+    *    itself (with no secondary indexes, NO_INDEX's base-table scan
+    *    is what every statement does).
+    * @return the sql with the hint comment rewritten */
+  private[graft] def rewriteHints(s: String): String = {
     val hintRe = "(?is)^(\\s*SELECT)\\s*/\\*\\+(.*?)\\*/(.*)$".r
     hintRe.findFirstMatchIn(s) match {
-      case None => (s, false)
+      case None => s
       case Some(m) =>
         val items = "([A-Za-z_]+)(\\([^)]*\\))?".r
           .findAllMatchIn(m.group(2))
           .map(g => (g.group(1).toUpperCase, g.matched)).toSeq
         val names = items.map(_._1)
-        val noIndex = names.contains("NO_INDEX")
         val passThrough = items.collect {
           case (n, verbatim) if SparkNativeHints.contains(n) => verbatim
         }
@@ -1756,15 +1752,14 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
             } else Seq(s"SHUFFLE_MERGE(${tokens.mkString(", ")})")
           }
         val ignored = names.filterNot(n =>
-          n == "NO_INDEX" || n == "USE_SORT_MERGE_JOIN" ||
-            SparkNativeHints.contains(n))
+          n == "USE_SORT_MERGE_JOIN" || SparkNativeHints.contains(n))
         if (ignored.nonEmpty)
           System.err.println(s"[graft-sql] ignoring Phoenix hints " +
             s"${ignored.mkString(", ")} (scan internals Catalyst decides)")
         val kept = merge ++ passThrough
         val hint =
           if (kept.isEmpty) "" else kept.mkString(" /*+ ", ", ", " */")
-        (m.group(1) + hint + m.group(3), noIndex)
+        m.group(1) + hint + m.group(3)
     }
   }
 
@@ -2147,8 +2142,7 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       normalizeQueryText(s))))
 
   private def select(sRaw: String): DataFrame = {
-    val s0 = prepareQueryText(sRaw)
-    val (s, noIndex) = rewriteHints(s0)
+    val s = rewriteHints(prepareQueryText(sRaw))
     // re-register only what changed since the last SELECT; any base-table
     // change invalidates views too (their plans pin the base's files).
     // Tables with a finite TTL are ALWAYS stale: their snapshot plan
@@ -2224,25 +2218,6 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     // views can drop now — leaving them would accumulate snapshot-
     // pinning shadows in the session catalog for the session lifetime
     dynViews.foreach(spark.catalog.dropTempView)
-    if (noIndex) {
-      // force logical optimization inside the conf window so the
-      // statement's (cached) optimized plan skips the index rewrite.
-      // Save/restore rather than set/unset: a user who disabled the
-      // rewrite session-wide must not have a NO_INDEX statement silently
-      // re-enable it. (The window is session-global — a concurrent
-      // thread optimizing on the same session inside it would also skip
-      // the rewrite; single-statement front-end use is the contract.)
-      val prior = spark.conf.getOption(
-        graft.plans.IndexRewriteRule.DisabledConf)
-      spark.conf.set(graft.plans.IndexRewriteRule.DisabledConf, "true")
-      try df.queryExecution.optimizedPlan
-      finally prior match {
-        case Some(v) =>
-          spark.conf.set(graft.plans.IndexRewriteRule.DisabledConf, v)
-        case None =>
-          spark.conf.unset(graft.plans.IndexRewriteRule.DisabledConf)
-      }
-    }
     df
   }
 

@@ -2115,11 +2115,11 @@ class CatalogSpec extends AnyFunSuite {
       "compactFull" -> compactFull, "truncate" -> truncate)
     def jc(j: Int, s: Int, t: Int) = Measure.JobCounts(j, s, t)
     // a local batch commits on the driver with no job, and the
-    // vacuum's exchange-free rewrite runs the driver-path probe
+    // vacuum's one read of the log is the driver-path probe
     assert(counts == Map(
       "upsert" -> jc(0, 0, 0), "delete" -> jc(2, 2, 3),
       "cacheFirst" -> jc(2, 2, 4), "cacheIncremental" -> jc(2, 2, 6),
-      "compactFloored" -> jc(2, 2, 9), "vacuum" -> jc(4, 4, 7),
+      "compactFloored" -> jc(2, 2, 9), "vacuum" -> jc(2, 2, 3),
       "compactFull" -> jc(2, 2, 2), "truncate" -> jc(0, 0, 0)),
       s"write counts: $counts")
   }

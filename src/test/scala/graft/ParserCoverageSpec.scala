@@ -98,7 +98,7 @@ class ParserCoverageSpec extends AnyFunSuite {
         // normalization + RVC offset + ANY/ALL + top-level hint
         // translation, then Spark's parser (parse-only)
         spark.sessionState.sqlParser.parsePlan(
-          elideSequences(px.rewriteHints(px.prepareQueryText(c.sql))._1))
+          elideSequences(px.rewriteHints(px.prepareQueryText(c.sql))))
         Right(())
       } else {
         setup.getOrElse(c.test, Seq.empty).foreach(px.execute)

@@ -293,4 +293,43 @@ class PlanSpec extends AnyFunSuite {
       !p.contains("CartesianProduct"),
       s"bucketed as-of must never plan a nested loop:\n$p")
   }
+
+  test("key-range reads of a range-partitioned, key-sorted parquet table " +
+      "skip row groups by min/max statistics") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val n = 20000L
+    val d = java.nio.file.Files.createTempDirectory("keyrange").toString
+    // four files, each cut into many small row groups, every file and
+    // row group holding one contiguous key range
+    (0L until n).map(k => (k, s"v$k")).toDF("k", "v")
+      .repartitionByRange(4, $"k").sortWithinPartitions($"k")
+      .write.mode("overwrite").option("parquet.block.size", "16384")
+      .parquet(d)
+    assert(new java.io.File(d).list().count(_.endsWith(".parquet")) == 4)
+    def all = spark.read.parquet(d)
+    for ((pred, pushed, keep) <- Seq(
+        (col("k") === 12345L, Seq("EqualTo(k,12345)"),
+          (k: Long) => k == 12345L),
+        (col("k").between(5000L, 5999L),
+          Seq("GreaterThanOrEqual(k,5000)", "LessThanOrEqual(k,5999)"),
+          (k: Long) => k >= 5000L && k <= 5999L))) {
+      val df = all.where(pred)
+      val got = df.collect().toSet
+      val scan = new AdaptiveSparkPlanHelper {}.collect(
+        df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+      assert(scan.size == 1, s"${df.queryExecution.executedPlan}")
+      pushed.foreach(p => assert(scan.head.metadata("PushedFilters")
+        .contains(p), s"$p not pushed: ${scan.head.metadata}"))
+      // fewer rows than one file holds: row groups inside the matching
+      // file were skipped, not just whole files
+      val read = scan.head.metrics("numOutputRows").value
+      assert(read > 0 && read < n / 4,
+        s"$pred read $read of $n rows: no row group was skipped")
+      assert(got.nonEmpty &&
+        got == all.collect().filter(r => keep(r.getLong(0))).toSet)
+    }
+  }
 }
