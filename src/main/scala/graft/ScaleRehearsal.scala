@@ -50,7 +50,7 @@ object ScaleRehearsal {
     "q_dedup_simhash_incremental")
   // q_ivm_refresh the QUERY is fixed-size by construction (it filters
   // doc_id<380 regardless of corpus size); the refresh operator itself
-  // is rehearsed separately by ivmRefreshSeconds: a FIXED-size delta
+  // is rehearsed separately by ivmRefresh: a FIXED-size delta
   // against a factor×-grown base table — the exponent measures whether
   // refresh cost tracks the delta (flat) or the table/log (linear, the
   // round-9 pre-fix behavior).
@@ -97,6 +97,20 @@ object ScaleRehearsal {
     def pair(name: String, secs: String => Double): Section =
       (() => secs(base),
         () => Seq(row(name, factor, secs(base), secs(out))))
+    // a refresh row also prints the timed refresh's Spark jobs, tasks
+    // and whether its extremum gate recomputed, base/scaled: equal
+    // counts put a gap between the sides' seconds on the fixture,
+    // different counts on the refresh plan
+    def counted(name: String,
+        run: String => Measure.Measured[graft.operators.RefreshReport])
+        : Section =
+      (() => run(base), () => {
+        val (a, b) = (run(base), run(out))
+        Seq(row(name, factor, a.secs, b.secs,
+          tail = s" jobs=${a.counts.jobs}/${b.counts.jobs}" +
+            s" tasks=${a.counts.tasks}/${b.counts.tasks}" +
+            s" recompute=${a.value.recomputeRan}/${b.value.recomputeRan}"))
+      })
     def big(names: String*)(secs: Long => Seq[Double]): Section =
       (() => secs(n1), () => {
         val (a, b) = (secs(n1), secs(n1 * bigF))
@@ -110,9 +124,9 @@ object ScaleRehearsal {
     val g1 = 2L * 1000 * 1000
     val bPer = 62500L // target groups per bucket
     val sections: Seq[(String, Section)] = Seq(
-      "ivm" -> pair("ivm_refresh_fixed_delta", ivmRefreshSeconds(spark, _)),
-      "ivmgrain" -> pair("ivm_grain_refresh_fixed_delta",
-        ivmGrainRefreshSeconds(spark, _)),
+      "ivm" -> counted("ivm_refresh_fixed_delta", ivmRefresh(spark, _)),
+      "ivmgrain" -> counted("ivm_grain_refresh_fixed_delta",
+        ivmGrainRefresh(spark, _)),
       "ivmbig" -> big("ivm_big_nonextremal", "ivm_big_extremal_k8",
         "ivm_big_extremal_k64")(ivmBigSeconds(spark, _)),
       "ivmbucket" -> ((() => ivmBucketedSeconds(spark, g1,
@@ -202,7 +216,7 @@ object ScaleRehearsal {
     (name, a, b, exp)
   }
 
-  /** Refresh seconds for a FIXED-size delta (100 updated + 100 new
+  /** The timed refresh of a FIXED-size delta (100 updated + 100 new
     * docs) against a base table built from `dir`'s documents — the
     * operator-level rehearsal for [[graft.operators.Materialize
     * .refresh]]. A delta-sized refresh (post round-10: the pre-image
@@ -211,7 +225,8 @@ object ScaleRehearsal {
     * the round-9 shape (lag window over the ENTIRE raw log) grew
     * linearly with it. Build/ingest time is NOT counted — only the
     * refresh call. */
-  private def ivmRefreshSeconds(spark: SparkSession, dir: String): Double = {
+  private def ivmRefresh(spark: SparkSession, dir: String)
+      : Measure.Measured[graft.operators.RefreshReport] = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val wh = java.nio.file.Files
       .createTempDirectory("graft_scale_ivm").toString
@@ -232,19 +247,19 @@ object ScaleRehearsal {
     cat.upsert("d", docs.where(col("doc_id") < 100)
       .withColumn("doc_id", col("doc_id") + maxId + 1))
     Measure.quiesced(spark)(
-      graft.operators.Materialize.refresh(cat, "d", mv)).secs
+      graft.operators.Materialize.refresh(cat, mv))
   }
 
-  /** Refresh seconds for a FIXED-size delta against a DAY-GRAIN MV
-    * over `dir`'s events — the grain-IVM twin of [[ivmRefreshSeconds]]
+  /** The timed refresh of a FIXED-size delta against a DAY-GRAIN MV
+    * over `dir`'s events — the grain-IVM twin of [[ivmRefresh]]
     * (the grain path shares `preImageChanges`, but its delta passes
     * also re-derive the grain column and its retractions move rows
     * ACROSS grain groups, so it earns its own exponent). Delta = the
     * 100 first (event_id, user_id) rows updated with ts moved a day
     * forward (cross-grain retraction + re-insert) plus 100 brand-new
     * PKs. Only the refresh call is timed. */
-  private def ivmGrainRefreshSeconds(spark: SparkSession,
-      dir: String): Double = {
+  private def ivmGrainRefresh(spark: SparkSession, dir: String)
+      : Measure.Measured[graft.operators.RefreshReport] = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
     val wh = java.nio.file.Files
       .createTempDirectory("graft_scale_ivmg").toString
@@ -272,7 +287,7 @@ object ScaleRehearsal {
     cat.upsert("e", delta
       .withColumn("event_id", col("event_id") + maxEid + 1))
     Measure.quiesced(spark)(
-      graft.operators.Materialize.refresh(cat, "e", mv)).secs
+      graft.operators.Materialize.refresh(cat, mv))
   }
 
   /** Big-base IVM refresh rehearsal: a synthetic n-row catalog table
@@ -316,7 +331,7 @@ object ScaleRehearsal {
     def timedRefresh(expectRecompute: Boolean, what: String)
         : (Double, Long) = {
       val m = Measure.quiesced(spark)(
-        graft.operators.Materialize.refresh(cat, "b", mv))
+        graft.operators.Materialize.refresh(cat, mv))
       require(m.value.recomputeRan == expectRecompute,
         s"$what: expected recomputeRan=$expectRecompute")
       (m.secs, m.value.affectedGroups)
@@ -345,7 +360,7 @@ object ScaleRehearsal {
       path: String, what: String,
       assertNoRecompute: Boolean = true): Double = {
     val m = Measure.quiesced(cat.session)(
-      graft.operators.MaterializeJoin.refresh(cat, path))
+      graft.operators.Materialize.refresh(cat, path))
     if (assertNoRecompute)
       require(!m.value.recomputeRan,
         s"$what: interior delta must fold with zero recompute")
@@ -733,7 +748,7 @@ object ScaleRehearsal {
         .select(col("id").as("k"), expr("id DIV 3").as("g"),
           lit(505L).as("x")))
       val m = Measure.quiesced(spark)(
-        graft.operators.Materialize.refresh(cat, "t", mv))
+        graft.operators.Materialize.refresh(cat, mv))
       val r = m.value
       require(!r.recomputeRan,
         "non-extremal delta must not gate in a recompute")
@@ -814,7 +829,7 @@ object ScaleRehearsal {
         // exactly the factor where a delta-sized refresh should read
         // flat, confounding the conclusion this rehearsal exists for.
         val m = Measure.once(spark) {
-          graft.operators.Materialize.refresh(cat, "d", mv)
+          graft.operators.Materialize.refresh(cat, mv)
           graft.operators.Materialize.read(spark, mv)
             .select(col("source"), col("cnt"), col("sum_n_chars"),
               col("min_n_chars"), col("max_n_chars"))

@@ -377,7 +377,7 @@ object Materialize {
     MvMeta.write(spark, path, MvMeta(groupCols, measures, stateDirName,
       grainExprs, None, sketches, topks, buckets, bucketDirs,
       MvMeta.Single(v, Some(ts), Some(cat.ttlSeconds(table).getOrElse(-1L)),
-        dimFp, dimPin, filterSql)))
+        dimFp, dimPin, filterSql, Some(table))))
     v
   }
 
@@ -405,19 +405,20 @@ object Materialize {
       (0 until buckets).map(i => if (present.contains(i)) dir else "")
     }
 
-  /** Register this MV with [[graft.plans.GraftAggViews]] keyed on the
-    * CATALOG TABLE, so SQL-front-end aggregates over the table's served
-    * snapshot ([[GraftCatalog.snapshotServed]], which [[graft.sources
+  /** Register the MV at `path`, either kind, with
+    * [[graft.plans.GraftAggViews]] keyed on its FACT table, so
+    * SQL-front-end aggregates over the table's served snapshot
+    * ([[GraftCatalog.snapshotServed]], which [[graft.sources
     * .PhoenixSql]] SELECTs read through) are answered from the state:
     * `SELECT source, SUM(x) FROM t GROUP BY source` through PhoenixSql
     * scans KBs of state instead of the fact table. The view definition
-    * (groups, measures, grains, sketches) derives from the MV meta —
-    * no caller-side duplication — and the registration is the MV ROOT,
-    * so refreshes are picked up through the meta pointer without
-    * re-registering. Star MVs (derive-built) are refused: the serving
-    * scan is the bare fact table, which cannot answer dim-attribute
-    * groups (register the dim join explicitly via [[graft.plans
-    * .GraftAggViews.DimJoinDef]] over parquet paths for that shape).
+    * derives from the MV meta — a join MV's side joins from its chain
+    * ([[MaterializeJoin.chainDims]]) — and the registration is the MV
+    * ROOT, so refreshes are picked up through the meta pointer without
+    * re-registering. A single-table star MV (derive-built) serves only
+    * queries joining the same dims, so its caller passes one `dims`
+    * entry per derive (for a catalog dim: `dimPath =
+    * cat.tablePath(dimTable)`); no other MV takes `dims`.
     *
     * Serving requires BOTH freshness legs the caller already owns:
     * refresh the MV after mutations (the usual MV contract) and keep
@@ -429,67 +430,69 @@ object Materialize {
     *
     * The MV leg is ENFORCED, not assumed: the registration carries a
     * freshness probe re-read per serve attempt — the meta's folded
-    * high-water mark must equal the table's current version counter
-    * (an O(1) file read), and a finite-TTL table never serves (pure
-    * time retracts rows the version counter can't see). A
-    * failed probe refuses the rewrite; the fallback plan is correct,
-    * so the gate costs no availability — it closes the hole where
+    * marks must equal every folded table's current version counter
+    * (O(1) file reads), and a finite-TTL table never serves (pure time
+    * retracts rows the version counter can't see). A failed probe
+    * refuses the rewrite; the fallback plan is correct, so the gate
+    * costs no availability — it closes the hole where
     * SNAPSHOT_CACHE_BATCHES un-refreshed upserts + any read rebuilt
     * the snapshot cache and served version-stale state silently. */
-  def registerForRewrite(cat: GraftCatalog, table: String,
-      path: String,
+  def registerForRewrite(cat: GraftCatalog, path: String,
       dims: Seq[graft.plans.GraftAggViews.DimJoinDef] = Seq.empty)
       : Unit = {
     val spark = cat.session
     val meta = MvMeta.read(spark, path)
-    val fps = meta.single.dimFp
-    // a star MV's groups are dim attributes the bare table scan cannot
-    // answer — serving it requires the query to JOIN the same dims, so
-    // the registration must carry one DimJoinDef per derive (for a
-    // catalog dim: dimPath = cat.tablePath(dimTable); dim-side serving
-    // scans map back to that root like the fact side). A non-star MV
-    // must not register phantom joins.
-    require(fps.size == dims.size,
-      s"MV at $path was built with ${fps.size} StarDerive dim(s); " +
-        s"registerForRewrite got ${dims.size} DimJoinDef(s) — a star " +
-        "MV serves only queries joining the same dims, so the " +
-        "registration must describe each join")
-    // The probe covers the FACT leg (meta high-water == version
-    // counter) and refuses finite-TTL tables (pure time retracts rows
-    // no counter records). Dim freshness is NOT version-pinned here:
-    // a rebuild under a churned dim yields a state that IS fresh
-    // without re-registration, and an SCD-2 pinned derive
-    // ([[StarDerive.pinned]]) intentionally serves across live dim
-    // churn — the dim leg stays governed by the fingerprint gate
+    val tables = meta.tables
+    val (viewDims, grains, filterSql) = meta.kind match {
+      case sm: MvMeta.Single =>
+        require(sm.dimFp.size == dims.size,
+          s"MV at $path was built with ${sm.dimFp.size} StarDerive " +
+            s"dim(s); registerForRewrite got ${dims.size} DimJoinDef(s)" +
+            " — a star MV serves only queries joining the same dims, " +
+            "so the registration must describe each join")
+        (dims, meta.grains.toMap, sm.filterSql)
+      case j: MvMeta.Join =>
+        require(dims.isEmpty, s"the join MV at $path derives its dims " +
+          "from its chain; registerForRewrite takes no DimJoinDef")
+        (MaterializeJoin.chainDims(cat, meta, j.chain),
+          Map.empty[String, String], j.chain.factFilterSql)
+    }
+    // The probe covers every folded table's leg (meta marks == version
+    // counters) and refuses finite-TTL tables (pure time retracts rows
+    // no counter records). A star MV's dim freshness is NOT
+    // version-pinned here: a rebuild under a churned dim yields a
+    // state that IS fresh without re-registration, and an SCD-2 pinned
+    // derive ([[StarDerive.pinned]]) intentionally serves across live
+    // dim churn — the dim leg stays governed by the fingerprint gate
     // (refresh under a churned dim REFUSES or rebuilds, so the state
     // never silently mixes dim versions) plus the front-end's
     // dirty-tracking re-registration of mutated dims.
-    // POSITIVE probes memoize per counter value: the optimizer
+    // POSITIVE probes memoize per counter vector: the optimizer
     // re-enters the rule up to fixedPoint times per query, and a fresh
     // dashboard would otherwise pay a meta parquet read per iteration.
-    // Sound because with the counter unchanged a refresh can only move
-    // the meta's mark TOWARD the counter; negative results are never
-    // cached, so a refresh re-arms serving without re-registration.
-    val lastFresh =
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    // Sound because with the counters unchanged a refresh can only move
+    // the meta's marks TOWARD them; negative results are never cached,
+    // so a refresh re-arms serving without re-registration.
+    val lastFresh = new java.util.concurrent.atomic
+      .AtomicReference[Seq[Long]](null)
     val fresh: () => Boolean = () =>
-      cat.ttlSeconds(table).isEmpty && {
-        val cur = cat.currentVersion(table)
-        lastFresh.get() == cur || {
-          val ok = MvMeta.read(spark, path).single.lastVersion == cur
-          if (ok) lastFresh.set(cur)
+      tables.forall(t => cat.ttlSeconds(t).isEmpty) && {
+        val counters = tables.map(cat.currentVersion)
+        counters == lastFresh.get() || {
+          val ok = MvMeta.read(spark, path).marks == counters
+          if (ok) lastFresh.set(counters)
           ok
         }
       }
-    graft.plans.GraftAggViews.register(cat.tablePath(table),
+    graft.plans.GraftAggViews.register(cat.tablePath(tables.head),
       graft.plans.GraftAggViews.AggViewDef(path,
-        meta.groupCols, meta.measures, meta.grains.toMap,
-        meta.sketches.toMap, dims = dims, topks = meta.topks.toMap,
-        fresh = fresh, filterSql = meta.single.filterSql))
-    // dependency ledger: DROP TABLE refuses while this MV exists, and
-    // COMPACT TABLE derives its keep-history floor from this MV's fold
-    // mark (previously only SQL-DDL MVs were visible to either)
-    cat.recordMvDependency(path, Seq(table))
+        meta.groupCols, meta.measures, grains,
+        meta.sketches.toMap, dims = viewDims, topks = meta.topks.toMap,
+        fresh = fresh, filterSql = filterSql))
+    // dependency ledger: DROP TABLE on any folded table refuses while
+    // this MV exists, and COMPACT TABLE derives its keep-history floor
+    // from this MV's fold mark for that table
+    cat.recordMvDependency(path, tables)
   }
 
   /** The maintained aggregate of either MV kind as a DataFrame (current
@@ -517,11 +520,11 @@ object Materialize {
     val meta = MvMeta.read(spark, path)
     // never a live dir name: refresh dirs are state_v<n>[e<ms>] and the
     // fresh nano suffix dodges prior compactions. Derive from the
-    // VERSION, not the current dir — suffixing the current name would
+    // MARKS, not the current dir — suffixing the current name would
     // accrete one "c<nanos>" per compaction until the leaf name
     // outgrows the filesystem's 255-byte limit on a periodically
     // compacted, read-mostly MV.
-    val nd = s"state_v${meta.single.lastVersion}c${System.nanoTime()}"
+    val nd = s"state_v${meta.marks.mkString("_")}c${System.nanoTime()}"
     // the compaction input is a plain state scan, so the driver-path
     // probe is a cheap limit-take even over a huge state
     val bucketDirs = writeState(read(spark, path), meta.groupCols,
@@ -554,10 +557,15 @@ object Materialize {
       }.sum
   }
 
-  /** Fold writes since the last refresh into the persisted state.
-    * Returns what the refresh did; its `marks` hold the new high-water
-    * version (== the old one when nothing changed, in which case no new
-    * state is written).
+  /** Fold every folded table's writes since the last refresh into the
+    * persisted state of the MV at `path`, either kind: the meta names
+    * the tables, so the kind is read once (the meta memo, no job) and
+    * the single-table fold below or the join chain's fold
+    * ([[MaterializeJoin.refreshChain]]) runs. Returns what the refresh
+    * did; its `marks` hold the new high-water marks, aligned with the
+    * meta's `tables` (== the old ones when nothing changed, in which
+    * case no new state is written). `derive` is the single-table star
+    * hook; a join MV refuses any other than [[NoDerive]].
     *
     * Incremental folding requires the change log to still REPLAY the
     * history the state summarizes: after a history discard past the
@@ -569,22 +577,33 @@ object Materialize {
     * below the fold mark preserves bounded-collapse exactness there,
     * so refresh stays incremental across routine log maintenance.
     *
-    * A finite TTL does NOT force a rebuild: rows whose `_ts` crossed
-    * the TTL boundary since the last refresh (alive then, expired now)
-    * are treated as retractions — their groups recompute from the
-    * snapshot exactly like update/delete retractions. The expiry scan
-    * carries a `_ts` range predicate (last cutoff ≤ _ts < new cutoff)
-    * that reaches the parquet scan, and batches share one `_ts` value
-    * per file, so file-level min/max stats prune the probe to the
-    * files written in that window — append-mostly TTL tables refresh
-    * delta-sized. The expiry cutoff is sampled once per refresh from
-    * the catalog clock; rows landing within the few ms between that
-    * sample and the affected-group snapshot read land on whichever
-    * side the snapshot's own cutoff picks — any refresh-based MV has
-    * this boundary, it just has to pick one. */
-  def refresh(cat: GraftCatalog, table: String, path: String,
+    * A finite TTL does NOT force a single-table rebuild: rows whose
+    * `_ts` crossed the TTL boundary since the last refresh (alive then,
+    * expired now) are treated as retractions — their groups recompute
+    * from the snapshot exactly like update/delete retractions. The
+    * expiry scan carries a `_ts` range predicate (last cutoff ≤ _ts <
+    * new cutoff) that reaches the parquet scan, and batches share one
+    * `_ts` value per file, so file-level min/max stats prune the probe
+    * to the files written in that window — append-mostly TTL tables
+    * refresh delta-sized. The expiry cutoff is sampled once per refresh
+    * from the catalog clock; rows landing within the few ms between
+    * that sample and the affected-group snapshot read land on
+    * whichever side the snapshot's own cutoff picks — any
+    * refresh-based MV has this boundary, it just has to pick one. */
+  def refresh(cat: GraftCatalog, path: String,
       derive: DataFrame => DataFrame = NoDerive): RefreshReport =
-    retryOnLostBlock(path)(refreshOnce(cat, table, path, derive))
+    retryOnLostBlock(path) {
+      val meta = MvMeta.read(cat.session, path)
+      meta.kind match {
+        case _: MvMeta.Single =>
+          refreshOnce(cat, meta.tables.head, path, meta, derive)
+        case _: MvMeta.Join =>
+          require(derive eq NoDerive, s"the MV at $path is a join MV: " +
+            "its fold takes no derive (a mutating side table is a " +
+            "chain side, not a StarDerive)")
+          MaterializeJoin.refreshChain(cat, path, meta)
+      }
+    }
 
   /** One-shot mark-bounded retry of a refresh (VERDICT r16 #4), for
     * both MV kinds: locally-checkpointed legs are unreplicated with
@@ -656,9 +675,8 @@ object Materialize {
     }
 
   private def refreshOnce(cat: GraftCatalog, table: String, path: String,
-      derive: DataFrame => DataFrame = NoDerive): RefreshReport = {
+      meta: MvMeta, derive: DataFrame => DataFrame): RefreshReport = {
     val spark = cat.session
-    val meta = MvMeta.read(spark, path)
     val sm = meta.single
     val lastV = sm.lastVersion
     val MvMeta(groupCols, measures, _, grains, _, sketches, topks,
@@ -681,7 +699,7 @@ object Materialize {
     // consistent: a write landing while this refresh runs has a version
     // above the sample, is excluded from every bounded read below AND
     // from the recorded mark, and folds exactly once in the next
-    // refresh (the order MaterializeJoin.refresh's marksOf uses).
+    // refresh (the order MaterializeJoin.refreshChain's marksOf uses).
     // Sampling after a bounded scan instead would leave versions in
     // (scan-max, counter] covered by the mark but never folded — a
     // silently lost update. No log scan is needed in this mode.

@@ -278,15 +278,6 @@ object MaterializeJoin {
         s"column '$c' not present in the joined schema $joined"))
   }
 
-  /** The fold marks are the table's VERSION COUNTER, not a log scan:
-    * O(1) to sample, and — unlike the log's max — it moves on EVERY
-    * write including one that lands zero rows (a no-match DELETE), so
-    * the freshness probe `meta marks == counters` can never stick
-    * false on an empty write. As an upper version bound the counter is
-    * equivalent to the log max (no row carries a version above it). */
-  private def highWater(cat: GraftCatalog, table: String): Long =
-    cat.currentVersion(table)
-
   /** table → join-key columns the spec declares immutable on it.
     * `factKeysImmutable` binds to the side's PARENT table — the fact
     * in a star chain, the carrying side in a snowflake one. */
@@ -364,9 +355,15 @@ object MaterializeJoin {
     // sample every mark FIRST, then sweep and aggregate AS OF the
     // marks: a write landing on any table mid-build is excluded from
     // the state and from the recorded high-water, so the first refresh
-    // folds it exactly once
-    val vF = highWater(cat, cs.fact)
-    val vS = cs.sides.map(s => highWater(cat, s.table))
+    // folds it exactly once. The marks are the tables' VERSION
+    // COUNTERS, not a log scan: O(1) to sample, and — unlike the log's
+    // max — a counter moves on EVERY write including one that lands
+    // zero rows (a no-match DELETE), so the freshness probe `meta
+    // marks == counters` can never stick false on an empty write. As
+    // an upper version bound the counter equals the log max (no row
+    // carries a version above it).
+    val vF = cat.currentVersion(cs.fact)
+    val vS = cs.sides.map(s => cat.currentVersion(s.table))
     // contract sweep over the FULL history up to the marks: a
     // pre-build unsafe key mutation would corrupt every future
     // prefiltered read
@@ -398,31 +395,23 @@ object MaterializeJoin {
     (vF, vS.head)
   }
 
-  /** Register the join MV so [[graft.plans.AggRewriteRule]] serves a
-    * matching aggregate-over-join query from the state — one
-    * `DimJoinDef` per side carrying the state's join-type contract
-    * (`innerState` for the INNER chain: INNER queries serve, LEFT or
-    * un-joined refuse, the state never counted unmatched fact rows;
-    * `leftState` for a `leftOuter` chain: LEFT queries serve, INNER
-    * or un-joined refuse, the state counted NULL-extended facts a
-    * tighter query would drop; `fullState` for a `fullOuter` chain:
-    * FULL OUTER queries serve, everything tighter refuses — the state
-    * counted dangling rows on BOTH sides). Staleness safety is ENFORCED per serve attempt: the
-    * registration carries a freshness probe comparing the MV meta's
-    * folded `(last_vf, last_vs)` marks against EVERY involved table's
-    * current version counter (O(1) file reads) — cache-scan matching
-    * alone is NOT sufficient, because the snapshot-cache auto-refresh
-    * (SNAPSHOT_CACHE_BATCHES) can hand the rewrite a perfectly fresh
-    * cache over a stale MV state. A failed probe refuses the serve;
-    * the collapse/cache plan is correct. Refresh every snapshot cache
-    * after [[refresh]]. */
-  def registerForRewrite(cat: GraftCatalog, path: String): Unit = {
-    val spark = cat.session
-    val m = MvMeta.read(spark, path)
-    val cs = m.join.chain
+  /** The serving joins of a join MV's registration
+    * ([[Materialize.registerForRewrite]]), so
+    * [[graft.plans.AggRewriteRule]] serves a matching
+    * aggregate-over-join query from the state — one `DimJoinDef` per
+    * side carrying the state's join-type contract (`innerState` for
+    * the INNER chain: INNER queries serve, LEFT or un-joined refuse,
+    * the state never counted unmatched fact rows; `leftState` for a
+    * `leftOuter` chain: LEFT queries serve, INNER or un-joined refuse,
+    * the state counted NULL-extended facts a tighter query would drop;
+    * `fullState` for a `fullOuter` chain: FULL OUTER queries serve,
+    * everything tighter refuses — the state counted dangling rows on
+    * BOTH sides). */
+  private[operators] def chainDims(cat: GraftCatalog, m: MvMeta,
+      cs: ChainSpec): Seq[graft.plans.GraftAggViews.DimJoinDef] = {
     val served = m.groupCols ++ m.measures ++
       m.sketches.map(_._1) ++ m.topks.map(_._1)
-    val dims = cs.sides.map { s =>
+    cs.sides.map { s =>
       val sf = cat.spec(s.table).schema.fieldNames.toSet
       // state columns living on THIS side serve through its join —
       // identity-mapped, the state stores the side's own names
@@ -436,30 +425,6 @@ object MaterializeJoin {
         innerState = !cs.leftOuter && !cs.fullOuter,
         leftState = cs.leftOuter, fullState = cs.fullOuter)
     }
-    // positive-probe memo keyed by the full counter vector — same
-    // soundness argument as the single-table registrant's (a refresh
-    // only moves meta marks toward the counters; negatives re-check)
-    val lastFresh = new java.util.concurrent.atomic
-      .AtomicReference[Seq[Long]](null)
-    val fresh: () => Boolean = () => {
-      val counters = cat.currentVersion(cs.fact) +:
-        cs.sides.map(s => cat.currentVersion(s.table))
-      counters == lastFresh.get() || {
-        val cur = MvMeta.read(spark, path).join
-        val ok = (cur.lastVf +: cur.lastVs) == counters
-        if (ok) lastFresh.set(counters)
-        ok
-      }
-    }
-    graft.plans.GraftAggViews.register(cat.tablePath(cs.fact),
-      graft.plans.GraftAggViews.AggViewDef(path, m.groupCols, m.measures,
-        sketches = m.sketches.toMap, dims = dims,
-        topks = m.topks.toMap, fresh = fresh,
-        filterSql = cs.factFilterSql))
-    // dependency ledger: DROP TABLE on the fact OR any side refuses
-    // while this MV exists, and COMPACT TABLE on any of them derives
-    // its keep-history floor from this MV's fold mark for that table
-    cat.recordMvDependency(path, cs.fact +: cs.sides.map(_.table))
   }
 
   /** Signed row-level delta of `table` since `lastV`: post images
@@ -656,10 +621,10 @@ object MaterializeJoin {
     * spelling is an EXPLICIT window delete: expire every row of the
     * chain table holding `column` where `column < cutoff` via an
     * ordinary tombstone write — the expiry IS a logged delta — then
-    * fold it incrementally ([[refresh]]). A time-grained MV retracts
-    * exactly the expired grain groups (emptied groups drop from the
-    * state); no rebuild, no O(table) term beyond the delete's own
-    * snapshot scan. Returns the refresh's report.
+    * fold it incrementally ([[Materialize.refresh]]). A time-grained
+    * MV retracts exactly the expired grain groups (emptied groups drop
+    * from the state); no rebuild, no O(table) term beyond the delete's
+    * own snapshot scan. Returns the refresh's report.
     * The SQL spelling is the equivalent `DELETE FROM t WHERE col <
     * cutoff` + `REFRESH MATERIALIZED VIEW` through [[graft.sources
     * .PhoenixSql]]. */
@@ -672,20 +637,18 @@ object MaterializeJoin {
         s"expireBefore: no chain table of the MV at $path carries " +
           s"column '$column'"))
     cat.delete(holder, col(column) < cutoff)
-    refresh(cat, path)
+    Materialize.refresh(cat, path)
   }
 
   /** Fold every table's writes since the last refresh into the
-    * persisted joined-aggregate state. Returns what the refresh did;
+    * persisted joined-aggregate state `m` at `path` — the join half of
+    * [[Materialize.refresh]], which reads the meta, holds the MV's
+    * lock and retries on a lost block. Returns what the refresh did;
     * its `marks` hold the new `factV +: sideVs` high-water marks (== the
     * stored ones when nothing changed). */
-  def refresh(cat: GraftCatalog, path: String): RefreshReport =
-    Materialize.retryOnLostBlock(path)(refreshOnce(cat, path))
-
-  private def refreshOnce(cat: GraftCatalog, path: String)
-      : RefreshReport = {
+  private[operators] def refreshChain(cat: GraftCatalog, path: String,
+      m: MvMeta): RefreshReport = {
     val spark = cat.session
-    val m = MvMeta.read(spark, path)
     val MvMeta.Join(cs, lastVF, lastVS) = m.join
     requireNoTtl(cat, cs.fact)
     cs.sides.foreach(s => requireNoTtl(cat, s.table))
@@ -696,7 +659,7 @@ object MaterializeJoin {
     // the state's would split/merge grain groups wrongly: rebuild
     val grainTzChanged = grains.nonEmpty &&
       !m.grainTz.contains(spark.conf.get("spark.sql.session.timeZone"))
-    // high-water from the O(1) version counter (see highWater) paired
+    // high-water from the O(1) version counter (see build) paired
     // with the table's replayability floor (an O(1) marker read —
     // previously a footer-pruned min-version scan PER TABLE PER
     // refresh, a real driver-latency term on deep chains): the floor

@@ -4,12 +4,16 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import MaterializeJoin.{ChainSpec, SideSpec}
 
 /** The one-row MV meta pointer, typed: what a state aggregates, where
-  * it lives, and the fold marks it covers. One codec serves both MV
-  * kinds — [[Materialize]] (one table) and [[MaterializeJoin]] (a join
-  * chain) share the common fields and differ only in [[MvMeta.Kind]].
+  * it lives, which tables it folds and the fold marks it covers. One
+  * codec serves both MV kinds — [[Materialize]] (one table) and
+  * [[MaterializeJoin]] (a join chain) share the common fields, the
+  * folded [[tables]] and their [[marks]], and differ only in
+  * [[MvMeta.Kind]], which only `graft.operators` reads: every other
+  * caller addresses an MV by its path alone.
   *
   * The on-disk layout is the historical one: the same column names,
-  * order and types per kind, so no migration exists. A column a legacy
+  * order and types per kind (the single-table layout last gained
+  * `table`), so no migration exists. A column a legacy
   * layout lacks decodes to its default, or to `None` where a refresh
   * must tell "absent" from a value (the rebuild-on-legacy-meta rules).
   *
@@ -33,6 +37,27 @@ private[graft] final case class MvMeta(
     buckets: Int,
     bucketDirs: Seq[String],
     kind: MvMeta.Kind) {
+
+  /** The tables this state folds, fact first. A single-table layout
+    * older than the `table` column names none, so nothing can address
+    * it by path: it refuses. */
+  def tables: Seq[String] = kind match {
+    case MvMeta.Single(_, _, _, _, _, _, Some(t)) => Seq(t)
+    case _: MvMeta.Single => throw new IllegalStateException(
+      "this MV meta predates the `table` column, so its base table is " +
+        "unknown — rebuild the MV with Materialize.build")
+    case j: MvMeta.Join => j.chain.fact +: j.chain.sides.map(_.table)
+  }
+
+  /** The folded version marks, aligned with [[tables]]. */
+  def marks: Seq[Long] = kind match {
+    case s: MvMeta.Single => Seq(s.lastVersion)
+    case j: MvMeta.Join => j.lastVf +: j.lastVs
+  }
+
+  /** `single` or `join`, as SHOW MATERIALIZED VIEWS prints it. */
+  def kindName: String =
+    if (kind.isInstanceOf[MvMeta.Join]) "join" else "single"
 
   def single: MvMeta.Single = kind match {
     case s: MvMeta.Single => s
@@ -67,7 +92,8 @@ private[graft] object MvMeta {
   sealed trait Kind
 
   /** Single-table part. `refreshTs`/`ttlAtRefresh` are `None` only on
-    * a legacy layout, which refresh answers with a rebuild.
+    * a legacy layout, which refresh answers with a rebuild; `table` is
+    * `None` only on a layout older than that column (see [[tables]]).
     * @param lastVersion the folded high-water mark
     * @param refreshTs the wall-clock refresh point (TTL expiry low-water
     *   mark of the next refresh)
@@ -75,10 +101,12 @@ private[graft] object MvMeta {
     *   none)
     * @param dimFp per-dim [[Materialize.StarDerive]] fingerprints
     * @param dimPin the pinned dim versions, for discoverability
-    * @param filterSql the WHERE predicate of a filtered MV */
+    * @param filterSql the WHERE predicate of a filtered MV
+    * @param table the folded base table */
   final case class Single(lastVersion: Long, refreshTs: Option[Long],
       ttlAtRefresh: Option[Long], dimFp: Seq[Long], dimPin: String,
-      filterSql: Option[String]) extends Kind
+      filterSql: Option[String], table: Option[String] = None)
+      extends Kind
 
   /** Join part: the chain and every table's folded mark. */
   final case class Join(chain: ChainSpec, lastVf: Long,
@@ -113,7 +141,7 @@ private[graft] object MvMeta {
       } else Single(m.getAs[Long]("last_version"), long("refresh_ts"),
         long("ttl_at_refresh"), seq[Long]("dim_fp"),
         str("dim_pin").getOrElse(""),
-        str("filter_sql").filter(_.nonEmpty))
+        str("filter_sql").filter(_.nonEmpty), str("table"))
     MvMeta(seq[String]("group_cols"), seq[String]("measures"),
       str("state_dir").getOrElse(
         s"state_v${m.getAs[Long]("last_version")}"),
@@ -137,12 +165,12 @@ private[graft] object MvMeta {
             m.sketches.map(_._1), m.sketches.map(_._2.toLong),
             m.buckets.toLong, m.bucketDirs, s.dimFp, s.dimPin,
             m.topks.map(_._1), m.topks.map(_._2.toLong),
-            s.filterSql.getOrElse("")))
+            s.filterSql.getOrElse(""), s.table.orNull))
           .toDF("last_version", "group_cols", "measures", "refresh_ts",
             "state_dir", "ttl_at_refresh", "grain_cols", "grain_sqls",
             "grain_tz", "sketch_cols", "sketch_ks",
             "state_buckets", "bucket_dirs", "dim_fp", "dim_pin",
-            "topk_cols", "topk_caps", "filter_sql")
+            "topk_cols", "topk_caps", "filter_sql", "table")
       case j: Join =>
         val cs = j.chain
         Seq((cs.fact, cs.sides.map(_.table), cs.sides.map(_.keys),

@@ -1,7 +1,7 @@
 package graft.operators
 
-/** What one MV refresh did, returned by [[Materialize.refresh]],
-  * [[MaterializeJoin.refresh]] and [[MaterializeJoin.expireBefore]].
+/** What one MV refresh did, returned by [[Materialize.refresh]] (either
+  * MV kind) and [[MaterializeJoin.expireBefore]].
   *
   * @param marks the high-water marks the state covers: `Seq(v)` for a
   *   single-table MV, `factV +: sideVs` for a join MV

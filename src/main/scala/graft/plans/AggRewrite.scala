@@ -54,10 +54,10 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
   *
   * Staleness contract — CHECKED, not just documented, for catalog
   * registrations: every [[AggViewDef]] carries a `fresh` probe the
-  * rewrite consults before serving, and the catalog registrants
-  * ([[graft.operators.Materialize.registerForRewrite]] and the join
-  * variant) install one comparing the MV meta's folded high-water
-  * mark against the table's O(1) version counter — a stale state then
+  * rewrite consults before serving, and the catalog registrant
+  * ([[graft.operators.Materialize.registerForRewrite]], either MV
+  * kind) installs one comparing the MV meta's folded marks against
+  * the tables' O(1) version counters — a stale state then
   * REFUSES the rewrite (the direct plan is correct, so enforcement
   * costs no availability) instead of silently serving pre-mutation
   * aggregates. Raw-path registrations without a probe keep the
@@ -186,8 +186,7 @@ object GraftAggViews {
     *               [[graft.sources.GraftCatalog]] table install a probe
     *               comparing the MV meta's folded high-water mark
     *               against the table's O(1) version counter
-    *               ([[graft.operators.Materialize.registerForRewrite]] /
-    *               [[graft.operators.MaterializeJoin.registerForRewrite]]),
+    *               ([[graft.operators.Materialize.registerForRewrite]]),
     *               closing the silent-staleness hole: ≥
     *               SNAPSHOT_CACHE_BATCHES un-refreshed upserts followed
     *               by any read used to auto-rebuild the snapshot cache,

@@ -78,7 +78,7 @@ object Pipeline {
         graft.operators.MaterializeJoin.JoinSpec("jl3", "jo3",
           Seq("okey"), leftKeysImmutable = true),
         Seq("priority"), Seq("qty"), mv)
-      graft.operators.MaterializeJoin.registerForRewrite(cat, mv)
+      graft.operators.Materialize.registerForRewrite(cat, mv)
       (px, wh, mv)
     }
 
@@ -118,7 +118,7 @@ object Pipeline {
           graft.operators.MaterializeJoin.SideSpec("cc5", Seq("ckey"),
             factKeysImmutable = true))),
         Seq("seg"), Seq("qty"), mv)
-      graft.operators.MaterializeJoin.registerForRewrite(cat, mv)
+      graft.operators.Materialize.registerForRewrite(cat, mv)
       (px, wh, mv)
     }
 
@@ -881,7 +881,7 @@ object Pipeline {
       cat.upsert("d", docs.where($"doc_id" < 40)
         .withColumn("n_chars", $"n_chars" + 7))
       cat.delete("d", $"source" === "src1")
-      graft.operators.Materialize.refresh(cat, "d", mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"source", $"cnt", $"sum_n_chars",
           $"min_n_chars", $"max_n_chars")
@@ -914,7 +914,7 @@ object Pipeline {
       cat.upsert("db", docs.where($"doc_id" < 30)
         .withColumn("n_chars", $"n_chars" + 11))
       cat.delete("db", $"source" === "src2")
-      val lr = graft.operators.Materialize.refresh(cat, "db", mv)
+      val lr = graft.operators.Materialize.refresh(cat, mv)
       require(lr.bucketsTotal == 8 && lr.bucketsTouched > 0 &&
         lr.bucketsTouched < 8,
         s"refresh must rewrite a strict subset of the manifest, " +
@@ -964,7 +964,7 @@ object Pipeline {
       cat.upsert("fo", slice.where($"o_orderkey" % 100 === 1)
         .withColumn("price", ($"price" + 55).cast("decimal(18,2)")))
       cat.delete("fo", $"o_custkey" % 5 === 2)
-      graft.operators.Materialize.refresh(cat, "fo", mv, derive = derive)
+      graft.operators.Materialize.refresh(cat, mv, derive = derive)
       graft.operators.Materialize.read(s, mv)
         .select($"segment", $"cnt",
           $"sum_price".cast("double").as("sum_price"),
@@ -1012,7 +1012,7 @@ object Pipeline {
         .select($"c_custkey", lit("CHURNED").as("segment")))
       cat.upsert("fs", slice.where($"o_orderkey" % 16 === 1))
       cat.delete("fs", $"o_custkey" % 7 === 3)
-      graft.operators.Materialize.refresh(cat, "fs", mv, derive = pinned)
+      graft.operators.Materialize.refresh(cat, mv, derive = pinned)
       graft.operators.Materialize.read(s, mv)
         .select($"segment", $"cnt",
           $"sum_price".cast("double").as("sum_price"),
@@ -1064,7 +1064,7 @@ object Pipeline {
       cat.upsert("fm", slice.where($"o_orderkey" % 50 === 30)
         .withColumn("price", ($"price" + 19).cast("decimal(18,2)")))
       cat.delete("fm", $"o_custkey" % 6 === 1)
-      graft.operators.Materialize.refresh(cat, "fm", mv, derive = derive)
+      graft.operators.Materialize.refresh(cat, mv, derive = derive)
       graft.operators.Materialize.read(s, mv)
         .select($"segment", $"nation_name", $"cnt",
           $"sum_price".cast("double").as("sum_price"),
@@ -1182,7 +1182,7 @@ object Pipeline {
       val mv = wh + "/mvsql"
       graft.operators.Materialize.build(cat, "md",
         Seq("source"), Seq("n_chars"), mv)
-      graft.operators.Materialize.registerForRewrite(cat, "md", mv)
+      graft.operators.Materialize.registerForRewrite(cat, mv)
       val q = px.execute("SELECT source, COUNT(*) AS cnt, " +
         "SUM(n_chars) AS sum_n_chars, MIN(n_chars) AS min_n_chars, " +
         "MAX(n_chars) AS max_n_chars, AVG(n_chars) AS avg_n_chars " +
@@ -1227,7 +1227,7 @@ object Pipeline {
       val mv = wh + "/mvstarsql"
       graft.operators.Materialize.build(cat, "fo2",
         Seq("c_mktsegment"), Seq("price"), mv, derive = derive)
-      graft.operators.Materialize.registerForRewrite(cat, "fo2", mv,
+      graft.operators.Materialize.registerForRewrite(cat, mv,
         dims = Seq(graft.plans.GraftAggViews.DimJoinDef(
           cat.tablePath("dc2"),
           factKeys = Seq("o_custkey"), dimKeys = Seq("c_custkey"),
@@ -1344,7 +1344,7 @@ object Pipeline {
       cat.upsert("e", ev.where($"event_id" % 7 === 0)
         .withColumn("ts", $"ts" + expr("INTERVAL 1 DAY")))
       cat.delete("e", $"event_type" === "click")
-      graft.operators.Materialize.refresh(cat, "e", mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"event_type", $"day", $"cnt", $"sum_user_id",
           $"min_user_id", $"max_user_id")
@@ -1377,9 +1377,9 @@ object Pipeline {
       graft.operators.Materialize.build(cat, "e", Seq("event_type"),
         Seq("user_id"), mv, sketches = Seq("user_id" -> (1 << 17)))
       cat.upsert("e", ev.where($"event_id" % 4 === 0))
-      graft.operators.Materialize.refresh(cat, "e", mv)
+      graft.operators.Materialize.refresh(cat, mv)
       cat.delete("e", $"event_type" === "purchase")
-      graft.operators.Materialize.refresh(cat, "e", mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.functions.GraftFunctions.registerKernels(s)
       graft.operators.Materialize.read(s, mv)
         .select($"event_type", $"cnt",
@@ -1416,14 +1416,14 @@ object Pipeline {
       graft.operators.Materialize.build(cat, "e", Seq("event_type"),
         Seq("user_id"), mv, topks = Seq("user_id" -> 8192))
       cat.upsert("e", ev.where($"event_id" % 4 === 0))
-      if (graft.operators.Materialize.refresh(cat, "e", mv).recomputeRan)
+      if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only top-terms refresh must fold algebraically " +
             "(sketch merge) with ZERO base access")
       cat.upsert("e", ev.where($"event_id" % 7 === 0)
         .withColumn("event_type", lit("moved")))
       cat.delete("e", $"event_type" === "purchase")
-      graft.operators.Materialize.refresh(cat, "e", mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.functions.GraftFunctions.registerKernels(s)
       graft.operators.Materialize.read(s, mv)
         .select($"event_type",
@@ -1476,7 +1476,7 @@ object Pipeline {
       graft.operators.MaterializeJoin.build(cat, js,
         Seq("priority"), Seq("qty"), mv)
       cat.upsert("jo", ord.where($"okey" % 32 === 2))
-      if (graft.operators.MaterializeJoin.refresh(cat, mv).recomputeRan)
+      if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only join delta must fold with zero recompute")
       cat.upsert("jl", li.where($"okey" % 100 === 1)
@@ -1484,7 +1484,7 @@ object Pipeline {
       cat.upsert("jo", ord.where($"okey" % 50 === 1)
         .withColumn("priority", lit("MOVED")))
       cat.delete("jl", $"okey" % 10 === 3)
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"priority", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
@@ -1530,13 +1530,13 @@ object Pipeline {
         Seq("priority", "mon"), Seq("qty"), mv,
         grainExprs = Seq("mon" -> "date_trunc('MONTH', odate)"))
       cat.upsert("jo6", ord.where($"okey" % 32 === 2))
-      if (graft.operators.MaterializeJoin.refresh(cat, mv).recomputeRan)
+      if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only grain-join delta must fold with zero recompute")
       cat.upsert("jo6", ord.where($"okey" % 50 === 4)
         .withColumn("odate", $"odate" + expr("INTERVAL 45 DAYS")))
       cat.delete("jl6", $"okey" % 10 === 1)
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"priority", $"mon", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
@@ -1589,7 +1589,7 @@ object Pipeline {
       // roll 2: the SQL spelling — DELETE FROM + API refresh
       px.execute(
         "DELETE FROM lr WHERE odate < TIMESTAMP '1996-01-01 00:00:00'")
-      if (graft.operators.MaterializeJoin.refresh(cat, mv).rebuildRan)
+      if (graft.operators.Materialize.refresh(cat, mv).rebuildRan)
         throw new IllegalStateException(
           "retention roll 2 must fold incrementally, not rebuild")
       graft.operators.Materialize.read(s, mv)
@@ -1636,11 +1636,11 @@ object Pipeline {
         Seq("priority"), Seq("qty"), mv,
         sketches = Seq("skey" -> 131072))
       cat.upsert("jo4", ord.where($"okey" % 32 === 2))
-      if (graft.operators.MaterializeJoin.refresh(cat, mv).recomputeRan)
+      if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only join-sketch delta must fold with zero recompute")
       cat.delete("jl4", $"okey" % 10 === 3)
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.functions.GraftFunctions.registerKernels(s)
       graft.operators.Materialize.read(s, mv)
         .select($"priority", $"cnt", $"sum_qty",
@@ -1693,7 +1693,7 @@ object Pipeline {
       graft.operators.MaterializeJoin.build(cat, cs,
         Seq("seg"), Seq("qty"), mv)
       cat.upsert("co", ord.where($"okey" % 32 === 2))
-      if (graft.operators.MaterializeJoin.refresh(cat, mv).recomputeRan)
+      if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
           "insert-only chain delta must fold with zero recompute")
       cat.upsert("cl", li.where($"okey" % 100 === 2)
@@ -1702,7 +1702,7 @@ object Pipeline {
         .select($"c_custkey".as("ckey"), lit("MOVED").as("seg"))
         .where($"ckey" % 40 === 1))
       cat.delete("cl", $"okey" % 10 === 7)
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"seg", $"cnt", $"sum_qty", $"min_qty", $"max_qty")
         .orderBy($"seg")
@@ -1745,13 +1745,13 @@ object Pipeline {
         Seq("priority"), Seq("qty"), mv)
       // dangling → matched: the missing orders arrive
       cat.upsert("jo5", ord.where($"okey" % 32 === 2))
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       // matched → dangling: a slice of orders dies; churn + delete
       cat.delete("jo5", $"okey" % 20 === 5)
       cat.upsert("jl5", li.where($"okey" % 100 === 1)
         .withColumn("qty", $"qty" + 7L))
       cat.delete("jl5", $"okey" % 10 === 3)
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"priority", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
@@ -1797,12 +1797,12 @@ object Pipeline {
       // their orders (matched order -> side-dangling)
       cat.upsert("jo8", ord.where($"okey" % 32 === 2))
       cat.delete("jl8", $"okey" % 10 === 3)
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       // order deletes re-dangle facts; measure churn
       cat.delete("jo8", $"okey" % 20 === 5)
       cat.upsert("jl8", li.where($"okey" % 100 === 1)
         .withColumn("qty", $"qty" + 7L))
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"priority", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
@@ -1861,14 +1861,14 @@ object Pipeline {
       // orders/parts (matched -> side-dangling)
       cat.upsert("fo9", ord.where($"okey" % 32 === 2))
       cat.delete("fl9", $"okey" % 10 === 3)
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       // order deletes re-dangle facts; part deletes NULL the brand;
       // measure churn retracts and re-adds
       cat.delete("fo9", $"okey" % 20 === 5)
       cat.delete("fp9", $"pkey" % 50 === 7)
       cat.upsert("fl9", li.where($"okey" % 100 === 1)
         .withColumn("qty", $"qty" + 7L))
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"priority", $"brand", $"cnt", $"sum_qty",
           $"min_qty", $"max_qty")
@@ -1921,14 +1921,14 @@ object Pipeline {
       cat.upsert("co6", ord.where($"okey" % 32 === 19))
       cat.upsert("cc6", cust.where($"ckey" % 30 === 2)
         .withColumn("nkey", ($"nkey" + 1L) % 25L))
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       // leaf rename + fact delete
       cat.upsert("nn6", Tables.t(s, dir, "nation")
         .where($"n_nationkey" % 5 === 0)
         .select($"n_nationkey".cast("long").as("nkey"),
           concat($"n_name", lit("_X")).as("nname")))
       cat.delete("co6", $"okey" % 10 === 4)
-      graft.operators.MaterializeJoin.refresh(cat, mv)
+      graft.operators.Materialize.refresh(cat, mv)
       graft.operators.Materialize.read(s, mv)
         .select($"nname", $"cnt", $"sum_m", $"min_m", $"max_m")
         .orderBy($"nname")
@@ -2213,7 +2213,7 @@ object Pipeline {
           graft.operators.MaterializeJoin.SideSpec("cc9", Seq("ckey")),
           graft.operators.MaterializeJoin.SideSpec("nn9", Seq("nkey")))),
         Seq("nname"), Seq("m"), mv)
-      graft.operators.MaterializeJoin.registerForRewrite(cat, mv)
+      graft.operators.Materialize.registerForRewrite(cat, mv)
       val q = px.execute("SELECT nname, COUNT(*) AS cnt, " +
         "SUM(m) AS sum_m, MIN(m) AS min_m, MAX(m) AS max_m " +
         "FROM co9 JOIN cc9 ON co9.ckey = cc9.ckey " +
@@ -2257,7 +2257,7 @@ object Pipeline {
           graft.operators.MaterializeJoin.SideSpec("fb0", Seq("ckey"))),
           fullOuter = true),
         Seq("seg"), Seq("m"), mv)
-      graft.operators.MaterializeJoin.registerForRewrite(cat, mv)
+      graft.operators.Materialize.registerForRewrite(cat, mv)
       val q = px.execute("SELECT seg, COUNT(*) AS cnt, " +
         "SUM(m) AS sum_m, MIN(m) AS min_m, MAX(m) AS max_m " +
         "FROM fa0 FULL JOIN fb0 ON fa0.ckey = fb0.ckey " +

@@ -35,8 +35,8 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 
   /** The session this catalog reads/writes through — for operators
     * whose entry point is a state PATH rather than a table name (e.g.
-    * [[graft.operators.MaterializeJoin.refresh]], which must read the
-    * MV meta before it knows which tables are involved). */
+    * [[graft.operators.Materialize.refresh]], which must read the MV
+    * meta before it knows which tables are involved). */
   private[graft] def session: SparkSession = spark
 
   private def dir(name: String) = s"$warehouse/$name"
@@ -259,16 +259,12 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 
   /** Every registered MV's fold mark for `table` — what COMPACT TABLE
     * needs: `compact(table, keepAfter = min(marks))` keeps every
-    * registered MV incrementally refreshable. Reads each state's meta:
-    * a single-table MV's mark, or the chain mark of `table`'s role. */
+    * registered MV incrementally refreshable. Reads each state's meta,
+    * which names its tables and their marks. */
   private[graft] def mvFoldMarks(table: String): Seq[Long] =
     mvDependents(table).map { p =>
-      graft.operators.MvMeta.read(spark, p).kind match {
-        case s: graft.operators.MvMeta.Single => s.lastVersion
-        case j: graft.operators.MvMeta.Join =>
-          if (j.chain.fact == table) j.lastVf
-          else j.lastVs(j.chain.sides.map(_.table).indexOf(table))
-      }
+      val m = graft.operators.MvMeta.read(spark, p)
+      m.marks(m.tables.indexOf(table))
     }
 
   /** Tear one registered MV down: deregister its rewrite candidates

@@ -86,7 +86,7 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       import spark.implicits._
       mvDefs.toSeq.sortBy(_._1).map { case (n, d) =>
         (n, d.tables.mkString(","),
-          if (d.singleTable.isDefined) "single" else "join", d.path)
+          graft.operators.MvMeta.read(spark, d.path).kindName, d.path)
       }.toDF("name", "tables", "kind", "state_path")
     }
     else if (up.startsWith("SHOW ")) show(s)
@@ -972,8 +972,7 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
   // logs into the state, and the registration lets AggRewriteRule
   // serve matching SELECTs from KBs of state instead of fact scans) --
 
-  private case class MvDef(path: String, tables: Seq[String],
-      singleTable: Option[String])
+  private case class MvDef(path: String, tables: Seq[String])
   private val mvDefs = scala.collection.mutable.Map[String, MvDef]()
 
   private def stripQual(c: String): String = {
@@ -1128,7 +1127,6 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
         grainExprs = grains.toSeq, sketches = sketches.toSeq,
         buckets = buckets, topks = topks.toSeq,
         filterSql = whereSql)
-      graft.operators.Materialize.registerForRewrite(catalog, fact, path)
     } else {
       require(immutableKeys.subsetOf(joins.flatMap(_.keys).toSet),
         s"IMMUTABLE KEYS ${immutableKeys.mkString("(", ", ", ")")} " +
@@ -1154,13 +1152,12 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
         groupCols.toSeq, measures.distinct.toSeq, path,
         sketches = sketches.toSeq, topks = topks.toSeq,
         grainExprs = grains.toSeq, buckets = buckets)
-      // every join shape registers — INNER/LEFT/FULL each carry their
-      // own serving contract (a FULL MV serves only FULL OUTER
-      // queries, via the fullState dims)
-      graft.operators.MaterializeJoin.registerForRewrite(catalog, path)
     }
-    mvDefs(name) = MvDef(path, fact +: joins.map(_.table),
-      if (joins.isEmpty) Some(fact) else None)
+    // every shape registers — single-table, INNER/LEFT/FULL join each
+    // carry their own serving contract (a FULL MV serves only FULL
+    // OUTER queries, via the fullState dims)
+    graft.operators.Materialize.registerForRewrite(catalog, path)
+    mvDefs(name) = MvDef(path, fact +: joins.map(_.table))
     // serving needs pure cache scans of every involved table — bring
     // the caches current so the NEXT select serves (ROW_TIMESTAMP
     // tables refuse the cache; their MVs maintain but don't serve)
@@ -1184,10 +1181,7 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
         .group(1))
     val d = mvDefs.getOrElse(name, throw new IllegalArgumentException(
       s"unknown materialized view $name"))
-    val r = d.singleTable match {
-      case Some(t) => graft.operators.Materialize.refresh(catalog, t, d.path)
-      case None => graft.operators.MaterializeJoin.refresh(catalog, d.path)
-    }
+    val r = graft.operators.Materialize.refresh(catalog, d.path)
     // flip-don't-overwrite leaves one superseded state dir per refresh
     // — reclaim it here (safe under the front-end's single-statement
     // contract: no reader of a PAST state is in flight between

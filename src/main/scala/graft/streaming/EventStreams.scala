@@ -311,25 +311,30 @@ object EventStreams {
       .select(col("id"), col("corpus_id"), col("jac"))
   }
 
-  /** Maintain a [[graft.operators.Materialize]] aggregate FROM A
-    * STREAM: each micro-batch upserts into the catalog table and folds
-    * the delta into the persisted state — the ingest-time form of the
-    * IVM loop the batch entries pin, and the 100-TB dashboard shape
-    * when the state is bucket-manifested (`build(..., buckets = B)`:
-    * per-batch write cost is touched-buckets-sized) and/or
-    * sketch-valued (`sketches = col -> k`: distinct counts serve from
-    * KBs of state). Build the state FIRST; this attaches the
-    * maintenance loop — set trigger/checkpoint on the returned writer
-    * and `.start()`.
+  /** Maintain an MV FROM A STREAM, either kind: each micro-batch
+    * upserts into the catalog `table` and folds ONE incremental
+    * [[graft.operators.Materialize.refresh]] of the state at `mvPath`
+    * — the ingest-time form of the IVM loop the batch entries pin, and
+    * the 100-TB dashboard shape when the state is bucket-manifested
+    * (`build(..., buckets = B)`: per-batch write cost is
+    * touched-buckets-sized) and/or sketch-valued (`sketches = col ->
+    * k`: distinct counts serve from KBs of state). For a join MV
+    * (`table` is any table of its chain) the fold also absorbs
+    * out-of-band writes to the OTHER tables since the last batch: the
+    * refresh reads every change log's high-water mark, so a dimension
+    * mutated between micro-batches lands in the same fold,
+    * delta-bounded on every leg. Build the state FIRST; this attaches
+    * the maintenance loop — set trigger/checkpoint on the returned
+    * writer and `.start()`.
     *
     * Exactly-once: upsert + refresh are two non-atomic writes, but the
     * pair is self-healing — a crash between them is absorbed by the
-    * next refresh (the high-water mark makes refresh idempotent over
+    * next refresh (the high-water marks make refresh idempotent over
     * unfolded versions), and a REPLAYED micro-batch re-upserts the
     * same rows under a new version, which the refresh folds as
     * value-identical updates (pre-image retraction + identical post:
-    * a no-op per group). Single maintainer per MV path, same as
-    * [[graft.operators.Materialize.refresh]]. */
+    * a no-op per group, through the join too). Single maintainer per
+    * MV path, same as [[graft.operators.Materialize.refresh]]. */
   def maintainAggregate(stream: DataFrame,
       cat: graft.sources.GraftCatalog, table: String, mvPath: String,
       derive: DataFrame => DataFrame =
@@ -338,28 +343,7 @@ object EventStreams {
         org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
       cat.upsert(table, b)
-      graft.operators.Materialize.refresh(cat, table, mvPath, derive)
-      ()
-    }
-
-  /** Streaming maintenance of a BINARY-JOIN MV
-    * ([[graft.operators.MaterializeJoin]]): each micro-batch upserts
-    * into `table` (either side of the registered join) and folds ONE
-    * incremental refresh — which also absorbs any out-of-band writes
-    * to the OTHER side since the last batch (the refresh reads both
-    * change logs' high-water marks, so a dimension mutated between
-    * micro-batches lands in the same fold, delta-bounded on both
-    * legs). Exactly-once story is [[maintainAggregate]]'s: the
-    * high-water PAIR makes refresh idempotent, and a replayed
-    * micro-batch re-upserts value-identical rows whose retraction +
-    * post cancel through the join. */
-  def maintainJoinAggregate(stream: DataFrame,
-      cat: graft.sources.GraftCatalog, table: String, mvPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      cat.upsert(table, b)
-      graft.operators.MaterializeJoin.refresh(cat, mvPath)
+      graft.operators.Materialize.refresh(cat, mvPath, derive)
       ()
     }
 

@@ -189,7 +189,7 @@ class AggRewriteSpec extends AnyFunSuite {
       // ingest + refresh rotates the state dir; the SAME registration
       // must serve the post-refresh values without re-registering
       cat.upsert("f", Seq((3L, "a", 5L)).toDF("k", "g", "x"))
-      Materialize.refresh(cat, "f", mvRoot)
+      Materialize.refresh(cat, mvRoot)
       cat.snapshot("f").write.mode("overwrite").parquet(base)
       assert(q.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
         Map("a" -> 15L, "b" -> 20L),
@@ -227,7 +227,7 @@ class AggRewriteSpec extends AnyFunSuite {
       // registration must serve the MIXED state — the new dir's 'a'
       // bucket plus the original dir's untouched 'b' bucket
       cat.upsert("fb", Seq((3L, "a", 5L)).toDF("k", "g", "x"))
-      Materialize.refresh(cat, "fb", mvRoot)
+      Materialize.refresh(cat, mvRoot)
       cat.snapshot("fb").write.mode("overwrite").parquet(base)
       assert(q.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
         Map("a" -> 15L, "b" -> 20L),

@@ -787,38 +787,38 @@ class CatalogSpec extends AnyFunSuite {
     assert(actual == expected)
     // insert-only delta: pure merge, no retraction recompute
     cat.upsert("m", Seq((4L, "b", 5L), (5L, "c", 7L)).toDF("k", "g", "x"))
-    val v1 = Materialize.refresh(cat, "m", path).marks.head
+    val v1 = Materialize.refresh(cat, path).marks.head
     assert(v1 > v0 && actual == expected)
     // update (retracts the old pre-image), group-moving update, delete:
     // 'a' loses its min, 'b' loses its max, 'a'->'c' moves a row
     cat.upsert("m", Seq((1L, "a", 99L), (2L, "c", 20L)).toDF("k", "g", "x"))
     cat.delete("m", col("k") === 3L)
-    val v2 = Materialize.refresh(cat, "m", path).marks.head
+    val v2 = Materialize.refresh(cat, path).marks.head
     assert(v2 > v1 && actual == expected,
       s"IVM state diverged: $actual vs $expected")
     // a fully-deleted group vanishes from the state
     cat.delete("m", col("g") === "b")
-    Materialize.refresh(cat, "m", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected)
     assert(!actual.exists(_.head == "b"))
     // idle refresh: same high-water mark, state untouched
-    val v3 = Materialize.refresh(cat, "m", path).marks
-    assert(v3 == Materialize.refresh(cat, "m", path).marks)
+    val v3 = Materialize.refresh(cat, path).marks
+    assert(v3 == Materialize.refresh(cat, path).marks)
     // NULL group key: merges as an ordinary group (joins would miss it)
     cat.upsert("m", Seq((10L, null.asInstanceOf[String], 5L),
       (11L, null.asInstanceOf[String], 6L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "m", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected, s"NULL-group insert diverged: $actual")
     // retraction INSIDE the NULL group (re-upsert changes the value)
     cat.upsert("m", Seq((10L, null.asInstanceOf[String], 8L))
       .toDF("k", "g", "x"))
-    Materialize.refresh(cat, "m", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected, s"NULL-group retraction diverged: $actual")
     // compaction discards the history the state summarizes — refresh
     // must detect it and fall back to a full rebuild, not double-count
     cat.compact("m")
     cat.upsert("m", Seq((12L, "d", 3L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "m", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected, s"post-compaction refresh diverged: $actual")
   }
 
@@ -842,7 +842,7 @@ class CatalogSpec extends AnyFunSuite {
     // lit(false) (which silently erased the group from the state)
     cat.upsert("mn", Seq((Option.empty[Long], "n", 10L))
       .toDF("k", "g", "x"))
-    val r = Materialize.refresh(cat, "mn", path)
+    val r = Materialize.refresh(cat, path)
     assert(r.recomputeRan,
       "the extremum gate must fire for the retracted max")
     val got = Materialize.read(spark, path)
@@ -891,7 +891,7 @@ class CatalogSpec extends AnyFunSuite {
     val dirA0 = manifest(bucketOf("a"))
     // insert-only delta into groups b and c: only their buckets change
     cat.upsert("mb", Seq((4L, "b", 5L), (5L, "c", 7L)).toDF("k", "g", "x"))
-    val r = Materialize.refresh(cat, "mb", path)
+    val r = Materialize.refresh(cat, path)
     assert(actual == expected)
     val tb = Set(bucketOf("b"), bucketOf("c"))
     assert(r.bucketsTouched == tb.size &&
@@ -909,12 +909,12 @@ class CatalogSpec extends AnyFunSuite {
     // loses a row — both fold through the bucket SLICE, not the state
     cat.upsert("mb", Seq((1L, "a", 99L)).toDF("k", "g", "x"))
     cat.delete("mb", col("k") === 3L)
-    Materialize.refresh(cat, "mb", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected,
       s"bucketed churn diverged: $actual vs $expected")
     // empty a whole group: its bucket vanishes from the manifest
     cat.delete("mb", col("g") === "c")
-    Materialize.refresh(cat, "mb", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected)
     if (!Set(bucketOf("a"), bucketOf("b")).contains(bucketOf("c")))
       assert(manifest(bucketOf("c")).isEmpty,
@@ -922,17 +922,17 @@ class CatalogSpec extends AnyFunSuite {
     // NULL group key routes deterministically and retracts in place
     cat.upsert("mb", Seq((10L, null.asInstanceOf[String], 5L))
       .toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mb", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected)
     cat.upsert("mb", Seq((10L, null.asInstanceOf[String], 8L))
       .toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mb", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected,
       s"NULL-group retraction diverged (bucketed): $actual")
     // compaction forces a rebuild — which must KEEP the bucket layout
     cat.compact("mb")
     cat.upsert("mb", Seq((12L, "d", 3L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mb", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected,
       s"post-compaction bucketed refresh diverged: $actual")
     val m2 = spark.read.parquet(s"$path/meta").head()
@@ -971,34 +971,34 @@ class CatalogSpec extends AnyFunSuite {
       "facts without a dim row must group under NULL")
     // insert-only: folds without touching the dim-join recompute
     cat.upsert("fact", Seq((5L, 1L, 5L)).toDF("k", "fk", "x"))
-    Materialize.refresh(cat, "fact", path, derive = derive)
+    Materialize.refresh(cat, path, derive = derive)
     assert(actual == expected)
     // update that MOVES a fact across dim groups (fk 2->3 = blue->red):
     // the pre-image must retract from 'blue' via the SAME derive
     cat.upsert("fact", Seq((2L, 3L, 20L)).toDF("k", "fk", "x"))
-    Materialize.refresh(cat, "fact", path, derive = derive)
+    Materialize.refresh(cat, path, derive = derive)
     assert(actual == expected,
       s"dim-group move diverged: $actual vs $expected")
     assert(!actual.exists(_.head == "blue"),
       "emptied dim group must vanish")
     // extremum churn inside a dim group: 'red' loses its max
     cat.upsert("fact", Seq((3L, 3L, 1L)).toDF("k", "fk", "x"))
-    Materialize.refresh(cat, "fact", path, derive = derive)
+    Materialize.refresh(cat, path, derive = derive)
     assert(actual == expected,
       s"dim-group extremum retraction diverged: $actual vs $expected")
     // delete the NULL-group fact
     cat.delete("fact", col("k") === 4L)
-    Materialize.refresh(cat, "fact", path, derive = derive)
+    Materialize.refresh(cat, path, derive = derive)
     assert(actual == expected)
     // compaction rebuild: derive rides through the fallback
     cat.compact("fact")
     cat.upsert("fact", Seq((6L, 2L, 7L)).toDF("k", "fk", "x"))
-    Materialize.refresh(cat, "fact", path, derive = derive)
+    Materialize.refresh(cat, path, derive = derive)
     assert(actual == expected,
       s"post-compaction star rebuild diverged: $actual vs $expected")
     // a refresh MISSING the derive must fail loudly, never fold wrong
     cat.upsert("fact", Seq((7L, 1L, 3L)).toDF("k", "fk", "x"))
-    intercept[Exception] { Materialize.refresh(cat, "fact", path) }
+    intercept[Exception] { Materialize.refresh(cat, path) }
   }
 
   test("StarDerive: a changed dim makes refresh REFUSE instead of " +
@@ -1037,7 +1037,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("fact", Seq((4L, 1L, 5L), (2L, 3L, 20L))
       .toDF("k", "fk", "x"))
     cat.delete("fact", col("k") === 3L)
-    Materialize.refresh(cat, "fact", path, derive = derive)
+    Materialize.refresh(cat, path, derive = derive)
     assert(actual == expected)
     // dim churn (blue -> green on dk=2): today's silent-corruption case
     // — the gate must throw, and the state must be untouched
@@ -1045,7 +1045,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("fact", Seq((5L, 2L, 50L)).toDF("k", "fk", "x"))
     val before = actual
     val ex = intercept[IllegalStateException] {
-      Materialize.refresh(cat, "fact", path, derive = derive)
+      Materialize.refresh(cat, path, derive = derive)
     }
     assert(ex.getMessage.contains("dim changed"))
     assert(actual == before, "a refused refresh must not touch state")
@@ -1053,20 +1053,20 @@ class CatalogSpec extends AnyFunSuite {
     val bare: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame = derive.apply
     val ex2 = intercept[IllegalStateException] {
-      Materialize.refresh(cat, "fact", path, derive = bare)
+      Materialize.refresh(cat, path, derive = bare)
     }
     assert(ex2.getMessage.contains("StarDerive"))
     // opt-in convenience path: the mismatch triggers a full rebuild
     // under the CURRENT dim — always correct, never mixed
     val rebuilding = derive.copy(rebuildOnDimChange = true)
-    Materialize.refresh(cat, "fact", path, derive = rebuilding)
+    Materialize.refresh(cat, path, derive = rebuilding)
     assert(actual == expected)
     assert(actual.exists(_.head == "green"),
       "the rebuild must group under the NEW dim value")
     // and the rebuild restamped the fingerprint: further stable-dim
     // refreshes fold incrementally again
     cat.upsert("fact", Seq((6L, 2L, 6L)).toDF("k", "fk", "x"))
-    Materialize.refresh(cat, "fact", path, derive = derive)
+    Materialize.refresh(cat, path, derive = derive)
     assert(actual == expected)
   }
 
@@ -1100,7 +1100,7 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("dk", "color"))
     cat.upsert("fact", Seq((3L, 2L, 30L), (4L, 3L, 40L))
       .toDF("k", "fk", "x"))
-    Materialize.refresh(cat, "fact", path, derive = pinnedDerive)
+    Materialize.refresh(cat, path, derive = pinnedDerive)
     val actual = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
     val expected = Materialize.aggregate(
@@ -1118,7 +1118,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.compact("dim")
     cat.upsert("fact", Seq((5L, 1L, 5L)).toDF("k", "fk", "x"))
     val ex = intercept[IllegalStateException] {
-      Materialize.refresh(cat, "fact", path, derive = pinnedDerive)
+      Materialize.refresh(cat, path, derive = pinnedDerive)
     }
     assert(ex.getMessage.contains("dim changed") &&
       ex.getMessage.contains(s"dim@v$v0"))
@@ -1161,18 +1161,18 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("fact", Seq((1L, 2L, 20L, 1L), (5L, 1L, 10L, 16L))
       .toDF("k", "f1", "f2", "x"))
     cat.delete("fact", col("k") === 4L)
-    Materialize.refresh(cat, "fact", path, derive = derive)
+    Materialize.refresh(cat, path, derive = derive)
     assert(actual == expected)
     // churn the SECOND dim only: the refusal names dim index 1
     cat.upsert("d2", Seq((20L, "tiny")).toDF("dk", "size"))
     cat.upsert("fact", Seq((6L, 1L, 20L, 32L)).toDF("k", "f1", "f2", "x"))
     val ex = intercept[IllegalStateException] {
-      Materialize.refresh(cat, "fact", path, derive = derive)
+      Materialize.refresh(cat, path, derive = derive)
     }
     assert(ex.getMessage.contains("dim changed") &&
       ex.getMessage.contains("dim(s) 1 of"), ex.getMessage)
     // composite rebuild opt-in recovers under the new dims
-    Materialize.refresh(cat, "fact", path,
+    Materialize.refresh(cat, path,
       derive = derive.copy(rebuildOnDimChange = true))
     assert(actual == expected)
     assert(actual.exists(_.toSeq.take(2) == Seq("blue", "tiny")))
@@ -1336,7 +1336,7 @@ class CatalogSpec extends AnyFunSuite {
       .schema(StructType(Seq(StructField("k", LongType),
         StructField("ck", LongType), StructField("x", LongType))))
       .option("maxFilesPerTrigger", 1).parquet(s"$in/*")
-    val q = EventStreams.maintainJoinAggregate(stream, cat, "sjf", path)
+    val q = EventStreams.maintainAggregate(stream, cat, "sjf", path)
       .start()
     try q.processAllAvailable() finally q.stop()
     val served = Materialize.read(spark, path)
@@ -1384,7 +1384,7 @@ class CatalogSpec extends AnyFunSuite {
       .schema(StructType(Seq(StructField("k", LongType),
         StructField("ck", LongType), StructField("x", LongType))))
       .option("maxFilesPerTrigger", 1).parquet(s"$in/*")
-    val q = EventStreams.maintainJoinAggregate(stream, cat, "ljf", path)
+    val q = EventStreams.maintainAggregate(stream, cat, "ljf", path)
       .start()
     try q.processAllAvailable() finally q.stop()
     val served = Materialize.read(spark, path)
@@ -1436,7 +1436,7 @@ class CatalogSpec extends AnyFunSuite {
       .schema(StructType(Seq(StructField("k", LongType),
         StructField("ck", LongType), StructField("x", LongType))))
       .option("maxFilesPerTrigger", 1).parquet(s"$in/*")
-    val q = EventStreams.maintainJoinAggregate(stream, cat, "fjf", path)
+    val q = EventStreams.maintainAggregate(stream, cat, "fjf", path)
       .start()
     try q.processAllAvailable() finally q.stop()
     val served = Materialize.read(spark, path)
@@ -1519,11 +1519,11 @@ class CatalogSpec extends AnyFunSuite {
     Materialize.build(cat, "mc", Seq("g"), Seq("x"), path, buckets = 8)
     // three refreshes scatter current buckets across several dirs
     cat.upsert("mc", Seq((4L, "a", 5L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mc", path)
+    Materialize.refresh(cat, path)
     cat.upsert("mc", Seq((5L, "b", 7L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mc", path)
+    Materialize.refresh(cat, path)
     cat.upsert("mc", Seq((6L, "d", 9L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mc", path)
+    Materialize.refresh(cat, path)
     assert(stateDirs.size >= 3, s"refreshes should leave dirs: $stateDirs")
     assert(actual == expected)
     val reclaimed = Materialize.compactState(spark, path)
@@ -1537,7 +1537,7 @@ class CatalogSpec extends AnyFunSuite {
       s"manifest must point at the single compacted dir: $dirs")
     // the version mark carried over: the next refresh is incremental
     cat.upsert("mc", Seq((1L, "a", 99L)).toDF("k", "g", "x"))
-    val r = Materialize.refresh(cat, "mc", path)
+    val r = Materialize.refresh(cat, path)
     assert(actual == expected,
       "post-compaction incremental refresh must stay exact")
     assert(r.bucketsTouched == 1,
@@ -1552,7 +1552,7 @@ class CatalogSpec extends AnyFunSuite {
       .createTempDirectory("graft_ivm_vac2").toString
     Materialize.build(cat2, "ml", Seq("g"), Seq("x"), path2)
     cat2.upsert("ml", Seq((2L, "b", 20L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat2, "ml", path2)
+    Materialize.refresh(cat2, path2)
     assert(Materialize.compactState(spark, path2) > 0L)
     val got2 = Materialize.read(spark, path2)
       .collect().map(_.toSeq).toSet
@@ -1590,7 +1590,7 @@ class CatalogSpec extends AnyFunSuite {
     Materialize.build(cat, "eb", Seq("g"), Seq("x"), path, buckets = B)
     // advance past 'exp''s expiry (t0-50s + 60s = t0+10s)
     cat.clock = () => t0 + 20000L
-    val r = Materialize.refresh(cat, "eb", path)
+    val r = Materialize.refresh(cat, path)
     val got = Materialize.read(spark, path)
       .select(col("g"), col("cnt")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
@@ -1635,14 +1635,14 @@ class CatalogSpec extends AnyFunSuite {
     assert(actual == expected)
     // insert-only: sketch union fold, byte-identical to the rebuild
     cat.upsert("gsb", rows(300, 400))
-    Materialize.refresh(cat, "gsb", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected,
       "bucketed insert-only sketch fold must equal the rebuild")
     // retraction (update moves a row across days): sketch groups take
     // the pruned recompute — still equal, still through the slice
     cat.upsert("gsb", Seq((5L, java.sql.Timestamp.valueOf(
       "2024-01-09 10:00:00"), 99L)).toDF("k", "ts", "u"))
-    Materialize.refresh(cat, "gsb", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected,
       "bucketed cross-grain sketch retraction must equal the rebuild")
   }
@@ -2015,7 +2015,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.refreshSnapshotCache("am")
     val mv = java.nio.file.Files.createTempDirectory("graft_mv_am").toString
     Materialize.build(cat, "am", Seq("k"), Seq("x"), mv)
-    Materialize.registerForRewrite(cat, "am", mv)
+    Materialize.registerForRewrite(cat, mv)
     val q = "SELECT k, SUM(x) AS sum_x FROM am WHERE k = 1 GROUP BY k"
     def run() = {
       val df = px.execute(q)
@@ -2036,7 +2036,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(prunedRows == Seq((1L, 11L)))
     // once the MV folds the tail its probe passes; served or not, the
     // answer is the recompute's
-    Materialize.refresh(cat, "am", mv)
+    Materialize.refresh(cat, mv)
     assert(run()._2 == Seq((1L, 11L)))
   }
 
@@ -2205,6 +2205,33 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("one address: outside graft/operators no source reads an MV's " +
+      "kind") {
+    // callers address an MV by its path; the meta's kind (single-table
+    // or join) is read only by the operators that fold it: no naming
+    // MvMeta.Single/Join, no `.single` or `.join` field access on a meta
+    // (a DataFrame `.join(` call is not one)
+    val banned = "MvMeta\\.(Single|Join)\\b|\\.single\\b|\\.join\\b(?!\\s*\\()".r
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"sources not found: $root")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val outside = files(root).filterNot(_.getPath.replace('\\', '/')
+      .contains("/graft/operators/"))
+    assert(outside.nonEmpty)
+    val hits = outside.flatMap { f =>
+      val in = scala.io.Source.fromFile(f, "UTF-8")
+      try in.getLines().zipWithIndex.collect {
+        case (l, i) if banned.findFirstIn(l).nonEmpty =>
+          s"${f.getPath}:${i + 1}: ${l.trim}"
+      }.toList finally in.close()
+    }
+    assert(hits.isEmpty, hits.mkString("MV kind read outside operators:\n",
+      "\n", ""))
+  }
+
   test("a hidden file or temp dir left by a cut append or replace is " +
       "invisible to snapshot and changeLog") {
     import spark.implicits._
@@ -2259,7 +2286,7 @@ class CatalogSpec extends AnyFunSuite {
 
     // non-extremal update: k=2 moves 20 -> 25 inside 'a' extrema (10, 30)
     cat.upsert("mg", Seq((2L, "a", 25L)).toDF("k", "g", "x"))
-    val r = Materialize.refresh(cat, "mg", path)
+    val r = Materialize.refresh(cat, path)
     assert(actual == expected, s"non-extremal fold diverged: $actual")
     assert(!r.recomputeRan &&
       r.affectedGroups == 0L,
@@ -2267,9 +2294,9 @@ class CatalogSpec extends AnyFunSuite {
 
     // delete of a non-extremal row: still pure algebra
     cat.upsert("mg", Seq((6L, "b", 30L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mg", path)
+    Materialize.refresh(cat, path)
     cat.delete("mg", $"k" === 6L)
-    val r2 = Materialize.refresh(cat, "mg", path)
+    val r2 = Materialize.refresh(cat, path)
     assert(actual == expected, s"non-extremal delete diverged: $actual")
     assert(!r2.recomputeRan,
       "deleting a non-extremal row must fold algebraically")
@@ -2277,7 +2304,7 @@ class CatalogSpec extends AnyFunSuite {
     // extremal update: k=3 moves 30 (the max of 'a') down to 22 —
     // exactly the one group recomputes
     cat.upsert("mg", Seq((3L, "a", 22L)).toDF("k", "g", "x"))
-    val r3 = Materialize.refresh(cat, "mg", path)
+    val r3 = Materialize.refresh(cat, path)
     assert(actual == expected, s"extremal refresh diverged: $actual")
     assert(r3.recomputeRan &&
       r3.affectedGroups == 1L,
@@ -2290,7 +2317,7 @@ class CatalogSpec extends AnyFunSuite {
     // gate must catch it (rmin 1 <= smin 5) or min_x would leak to 1
     cat.upsert("mg", Seq((7L, "b", 1L)).toDF("k", "g", "x"))
     cat.upsert("mg", Seq((7L, "b", 8L)).toDF("k", "g", "x"))
-    val r4 = Materialize.refresh(cat, "mg", path)
+    val r4 = Materialize.refresh(cat, path)
     assert(actual == expected, s"within-delta churn diverged: $actual")
     assert(r4.recomputeRan,
       "transient below-min churn must trigger the gate")
@@ -2299,7 +2326,7 @@ class CatalogSpec extends AnyFunSuite {
     // in_state = 0 must force its recompute
     cat.upsert("mg", Seq((8L, "c", 3L), (9L, "c", 4L)).toDF("k", "g", "x"))
     cat.upsert("mg", Seq((8L, "c", 9L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "mg", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected, s"new-group churn diverged: $actual")
 
     // plan pin for the pruned recompute: the collapse aggregate's input
@@ -2357,7 +2384,7 @@ class CatalogSpec extends AnyFunSuite {
     // insert-only delta: a new value for 'a' and a DUPLICATE value for
     // 'b' (idempotent union — the dup must not change b's sketch)
     cat.upsert("sk", Seq((5L, "a", 12L), (6L, "b", 7L)).toDF("k", "g", "u"))
-    val r = Materialize.refresh(cat, "sk", path)
+    val r = Materialize.refresh(cat, path)
     assert(actual == expected, "insert-only sketch fold diverged")
     assert(!r.recomputeRan,
       "an insert-only delta must fold sketches with zero base access")
@@ -2367,7 +2394,7 @@ class CatalogSpec extends AnyFunSuite {
     // move to 11): distinct drops 3 -> 2 — only a recompute can know
     // that, so the gate must fire and the recomputed sketch must match
     cat.upsert("sk", Seq((1L, "a", 11L), (3L, "a", 11L)).toDF("k", "g", "u"))
-    val r2 = Materialize.refresh(cat, "sk", path)
+    val r2 = Materialize.refresh(cat, path)
     assert(r2.recomputeRan,
       "a sketch-bearing retraction must take the recompute path")
     assert(actual == expected, "retraction recompute diverged")
@@ -2376,11 +2403,11 @@ class CatalogSpec extends AnyFunSuite {
     // delete the duplicate carrier: distinct unchanged, bytes must
     // still equal the rebuild; delete the last 'b' row: group drops
     cat.delete("sk", $"k" === 6L)
-    Materialize.refresh(cat, "sk", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected && est("b") == 1L,
       "dup-carrier delete must keep b's distinct at 1")
     cat.delete("sk", $"k" === 4L)
-    Materialize.refresh(cat, "sk", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected, "emptied group must drop from the state")
     assert(!est.contains("b") && est("a") == 2L)
   }
@@ -2422,7 +2449,7 @@ class CatalogSpec extends AnyFunSuite {
     // access, exact counts below the eviction threshold
     cat.upsert("tk", Seq((5L, "a", "x", 9L), (6L, "b", "w", 2L))
       .toDF("k", "g", "u", "x"))
-    val r = Materialize.refresh(cat, "tk", path)
+    val r = Materialize.refresh(cat, path)
     assert(actual == expected, "insert-only top-terms fold diverged")
     assert(!r.recomputeRan,
       "an insert-only delta must fold top-terms with zero base access")
@@ -2433,7 +2460,7 @@ class CatalogSpec extends AnyFunSuite {
     // update k=1 to term y: x loses a count — only a recompute can
     // un-count, so the gate must fire and match the rebuild
     cat.upsert("tk", Seq((1L, "a", "y", 5L)).toDF("k", "g", "u", "x"))
-    val r2 = Materialize.refresh(cat, "tk", path)
+    val r2 = Materialize.refresh(cat, path)
     assert(r2.recomputeRan,
       "a top-terms-bearing retraction must take the recompute path")
     assert(actual == expected, "retraction recompute diverged")
@@ -2441,7 +2468,7 @@ class CatalogSpec extends AnyFunSuite {
 
     // group-emptying delete drops the state row
     cat.delete("tk", $"g" === "b")
-    Materialize.refresh(cat, "tk", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected, "emptied group must drop from the state")
     assert(!counts.keySet.exists(_._1 == "b"))
 
@@ -2450,7 +2477,7 @@ class CatalogSpec extends AnyFunSuite {
     // without the sketch column and fail the type-strict union
     Materialize.compactState(spark, path)
     cat.upsert("tk", Seq((9L, "a", "q", 1L)).toDF("k", "g", "u", "x"))
-    Materialize.refresh(cat, "tk", path)
+    Materialize.refresh(cat, path)
     assert(actual == expected, "post-compaction top-terms fold diverged")
     assert(counts(("a", "q")) == (1L, 0L))
   }
@@ -2484,7 +2511,7 @@ class CatalogSpec extends AnyFunSuite {
           cat.upsert("mf", randRows(2).toDF("k", "g", "x"))
         case 2 => cat.delete("mf", col("k") === rnd.nextInt(12).toLong)
       }
-      Materialize.refresh(cat, "mf", path)
+      Materialize.refresh(cat, path)
       val got = Materialize.read(spark, path).collect().map(_.toSeq).toSet
       val want = Materialize.aggregate(cat.snapshot("mf"), Seq("g"),
         Seq("x")).collect().map(_.toSeq).toSet
@@ -2520,7 +2547,7 @@ class CatalogSpec extends AnyFunSuite {
       (3L, t("2024-03-02 09:00:00"), 12L),
       (2L, t("2024-03-05 08:00:00"), 7L)).toDF("id", "ts", "v"))
     cat.delete("ev", $"id" === 4L)
-    Materialize.refresh(cat, "ev", mv)
+    Materialize.refresh(cat, mv)
     val got = Materialize.read(spark, mv)
       .select($"day", $"cnt", $"sum_v", $"min_v", $"max_v")
       .collect().map(_.toSeq).toSet
@@ -2579,7 +2606,7 @@ class CatalogSpec extends AnyFunSuite {
       Seq((3L, t("2024-03-02 02:00:00"), 11L)).toDF("id", "ts", "v"))
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try {
-      Materialize.refresh(cat, "evz", mv)
+      Materialize.refresh(cat, mv)
       val got = Materialize.read(spark, mv)
         .select($"day", $"cnt", $"sum_v")
         .collect().map(_.toSeq).toSet
@@ -2625,7 +2652,7 @@ class CatalogSpec extends AnyFunSuite {
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         cat.upsert("docs", b)
-        Materialize.refresh(cat, "docs", mv)
+        Materialize.refresh(cat, mv)
         ()
       }
       .outputMode("append").start()
@@ -2719,7 +2746,7 @@ class CatalogSpec extends AnyFunSuite {
     // (t0+30s-60s = t0-30s) — newly expired; plus a fresh delta insert
     at(t0 + 30000L)
     cat.upsert("e", Seq((5L, "new", 3L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "e", mv)
+    Materialize.refresh(cat, mv)
     assert(stateMap() == Map("g0" -> 150L, "new" -> 3L),
       "expired group must retract, delta must fold, untouched group " +
         "must carry through WITHOUT a base rescan")
@@ -2739,7 +2766,7 @@ class CatalogSpec extends AnyFunSuite {
     Materialize.build(cat2, "e", Seq("g"), Seq("x"), mv2)
     cat2.clock = () => t0 + 30000L
     cat2.upsert("e", Seq((5L, "new", 3L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat2, "e", mv2)
+    Materialize.refresh(cat2, mv2)
     val got2 = Materialize.read(spark, mv2).collect().map(_.toSeq).toSet
     val want2 = Materialize
       .aggregate(cat2.snapshot("e"), Seq("g"), Seq("x"))
@@ -2752,11 +2779,11 @@ class CatalogSpec extends AnyFunSuite {
     // t0+95s the t0+30s insert crosses the cutoff (t0+35s) — refresh
     // must still rotate the state, not early-return and serve it forever
     cat2.clock = () => t0 + 95000L
-    val vSame = Materialize.refresh(cat2, "e", mv2).marks
+    val vSame = Materialize.refresh(cat2, mv2).marks
     assert(Materialize.read(spark, mv2).isEmpty,
       "expiry-only refresh must retract rows with no new versions")
     // and with nothing further to expire, refresh is a cheap no-op
-    assert(Materialize.refresh(cat2, "e", mv2).marks == vSame)
+    assert(Materialize.refresh(cat2, mv2).marks == vSame)
   }
 
   test("ALTER SET TTL between refreshes forces an MV rebuild (the " +
@@ -2782,7 +2809,7 @@ class CatalogSpec extends AnyFunSuite {
     // would never retract it — the TTL change must force a rebuild
     cat.alterSetProps("e", Map("TTL" -> "60"))
     cat.upsert("e", Seq((2L, "new", 3L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "e", mv)
+    Materialize.refresh(cat, mv)
     val got = Materialize.read(spark, mv).collect().map(_.getString(0)).toSet
     assert(got == Set("new"),
       s"shortened TTL must retract the out-of-window row: $got")
@@ -2813,7 +2840,7 @@ class CatalogSpec extends AnyFunSuite {
     // mid-write strands the pointer; 'past states remain queryable'
     // breaks even without one)
     cat.alterSetProps("e", Map("TTL" -> "3600"))
-    Materialize.refresh(cat, "e", mv)
+    Materialize.refresh(cat, mv)
     val after = liveDir()
     assert(after != before,
       s"rebuild must write a fresh dir, not overwrite $before")
@@ -3338,7 +3365,7 @@ class CatalogSpec extends AnyFunSuite {
       .createTempDirectory("graft_fc").toString
     Materialize.build(cat, "fc", Seq("g"), Seq("x"), path)
     cat.upsert("fc", Seq((4L, "a", 7L)).toDF("k", "g", "x"))
-    val mark = Materialize.refresh(cat, "fc", path).marks.head
+    val mark = Materialize.refresh(cat, path).marks.head
     def expected = Materialize
       .aggregate(cat.snapshot("fc"), Seq("g"), Seq("x"))
       .collect().map(_.toSeq).toSet
@@ -3360,7 +3387,7 @@ class CatalogSpec extends AnyFunSuite {
       "the tombstone winner must survive the rewrite (resurrection)")
     // post-compaction refresh: incremental (the whole point), exact
     cat.upsert("fc", Seq((2L, "c", 9L)).toDF("k", "g", "x")) // regroup
-    val r = Materialize.refresh(cat, "fc", path)
+    val r = Materialize.refresh(cat, path)
     assert(!r.rebuildRan,
       "a floor at the fold mark must NOT force a rebuild")
     assert(actual == expected,
@@ -3376,7 +3403,7 @@ class CatalogSpec extends AnyFunSuite {
     // FULL compaction rises past the fold mark: rebuild, still exact
     cat.compact("fc")
     cat.upsert("fc", Seq((5L, "c", 11L)).toDF("k", "g", "x"))
-    val r2 = Materialize.refresh(cat, "fc", path)
+    val r2 = Materialize.refresh(cat, path)
     assert(r2.rebuildRan,
       "full compaction discards the fold history — rebuild required")
     assert(actual == expected)
@@ -3401,14 +3428,14 @@ class CatalogSpec extends AnyFunSuite {
     // the version counter moved, so a freshness probe keyed on it goes
     // stale — the silent path used to be: counter unchanged, refresh
     // early-returns, state serves rows that no longer exist
-    val r = Materialize.refresh(cat, "tr", path)
+    val r = Materialize.refresh(cat, path)
     assert(r.rebuildRan,
       "truncate discards history — only a rebuild is correct")
     assert(Materialize.read(spark, path).isEmpty,
       "post-truncate state must be empty, not the vanished rows")
     // writes after the truncate fold normally again
     cat.upsert("tr", Seq((5L, "c", 50L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "tr", path)
+    Materialize.refresh(cat, path)
     assert(Materialize.read(spark, path).collect().map(_.toSeq).toSet ==
       Materialize.aggregate(cat.snapshot("tr"), Seq("g"), Seq("x"))
         .collect().map(_.toSeq).toSet)
@@ -3576,7 +3603,7 @@ class CatalogSpec extends AnyFunSuite {
       "no rewritten row may sit above the counter")
     assert(rows(cat2) == before)
     cat2.upsert("cw", Seq((4L, "b", 7L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat2, "cw", mv)
+    Materialize.refresh(cat2, mv)
     def agg(df: org.apache.spark.sql.DataFrame) =
       df.select("g", "cnt", "sum_x", "min_x", "max_x").collect()
         .map(_.toSeq).toSeq.sortBy(_.head.toString)
@@ -3700,7 +3727,7 @@ class CatalogSpec extends AnyFunSuite {
     // the first post-upgrade refresh must REBUILD (the compaction's
     // rewrite batch has no pre-images — folding it as a delta would
     // double-count every surviving row) and land exactly
-    val r = graft.operators.Materialize.refresh(cat2, "t", mv)
+    val r = graft.operators.Materialize.refresh(cat2, mv)
     assert(r.rebuildRan,
       "the post-upgrade refresh over a legacy-compacted log must " +
         "rebuild")
@@ -3818,7 +3845,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("t", Seq((1L, "a", 10L)).toDF("id", "g", "x"))
     val mv = s"${cat.tablePath("t")}_mvdrop"
     graft.operators.Materialize.build(cat, "t", Seq("g"), Seq("x"), mv)
-    graft.operators.Materialize.registerForRewrite(cat, "t", mv)
+    graft.operators.Materialize.registerForRewrite(cat, mv)
     val e = intercept[IllegalStateException](cat.dropTable("t"))
     assert(e.getMessage.contains("materialized views") &&
       e.getMessage.contains(mv.stripSuffix("/")),

@@ -34,7 +34,8 @@ class MvMetaSpec extends AnyFunSuite {
     "sketch_ks" -> "array<bigint>", "state_buckets" -> "bigint",
     "bucket_dirs" -> "array<string>", "dim_fp" -> "array<bigint>",
     "dim_pin" -> "string", "topk_cols" -> "array<string>",
-    "topk_caps" -> "array<bigint>", "filter_sql" -> "string")
+    "topk_caps" -> "array<bigint>", "filter_sql" -> "string",
+    "table" -> "string")
 
   private val joinLayout = Seq(
     "fact" -> "string", "side_tables" -> "array<string>",
@@ -70,6 +71,17 @@ class MvMetaSpec extends AnyFunSuite {
       m.bucketDirs.isEmpty && m.grainTz.isEmpty)
     assert(m.single == MvMeta.Single(3L, None, None, Seq.empty, "", None))
     assert(m.statePaths("/mv") == Seq("/mv/state_v3"))
+    // the last layout before `table`: every other column, no table
+    val noTable = Seq((7L, Seq("g"), Seq("x"), 1700000000000L, "state_v7",
+        -1L, ""))
+      .toDF("last_version", "group_cols", "measures", "refresh_ts",
+        "state_dir", "ttl_at_refresh", "filter_sql").head()
+    val nt = MvMeta.decode(noTable)
+    assert(nt.single == MvMeta.Single(7L, Some(1700000000000L), Some(-1L),
+      Seq.empty, "", None, None))
+    assert(nt.marks == Seq(7L))
+    assert(intercept[IllegalStateException](nt.tables).getMessage
+      .contains("Materialize.build"))
   }
 
   test("a single-table meta round-trips through the on-disk layout") {
@@ -128,6 +140,34 @@ class MvMetaSpec extends AnyFunSuite {
     assert(layout(join) == joinLayout)
   }
 
+  test("a single-table meta without the table column refuses a refresh " +
+      "by path and names Materialize.build as the fix") {
+    import spark.implicits._
+    val cat = new GraftCatalog(spark, tmp())
+    cat.createTable("t", StructType(Seq(StructField("k", LongType),
+      StructField("g", StringType), StructField("x", LongType))),
+      pk = Seq("k"))
+    cat.upsert("t", Seq((1L, "a", 10L)).toDF("k", "g", "x"))
+    val path = tmp()
+    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    val built = MvMeta.read(spark, path)
+    assert(built.tables == Seq("t") && built.kindName == "single")
+    // the same meta as a writer before the `table` column left it
+    val legacy = tmp() + "/meta"
+    spark.read.parquet(s"$path/meta").drop("table").coalesce(1)
+      .write.parquet(legacy)
+    val metaDir = new java.io.File(path, "meta")
+    metaDir.listFiles().foreach(_.delete())
+    assert(metaDir.delete() && new java.io.File(legacy).renameTo(metaDir))
+    assert(!MvMeta.row(spark, path).schema.fieldNames.contains("table"))
+    cat.upsert("t", Seq((2L, "b", 20L)).toDF("k", "g", "x"))
+    val e = intercept[IllegalStateException](Materialize.refresh(cat, path))
+    assert(e.getMessage.contains("Materialize.build"), e.getMessage)
+    val r = intercept[IllegalStateException](
+      Materialize.registerForRewrite(cat, path))
+    assert(r.getMessage.contains("Materialize.build"), r.getMessage)
+  }
+
   test("a meta dir left with the pre-refresh file next to the new one " +
       "reads the new meta") {
     import spark.implicits._
@@ -144,7 +184,7 @@ class MvMetaSpec extends AnyFunSuite {
     val preBytes = java.nio.file.Files.readAllBytes(pre.toPath)
     val before = MvMeta.read(spark, path)
     cat.upsert("t", Seq((2L, "b", 20L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "t", path)
+    Materialize.refresh(cat, path)
     val after = MvMeta.read(spark, path)
     assert(after != before)
     // a crash between writing the new meta file and deleting the old

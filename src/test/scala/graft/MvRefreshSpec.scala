@@ -57,10 +57,10 @@ class MvRefreshSpec extends AnyFunSuite {
     Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
     // k=2 holds group a's max: its delete gates in a recompute
     cat.delete("t", col("k") === 2L)
-    val r = Materialize.refresh(cat, "t", path)
+    val r = Materialize.refresh(cat, path)
     assert(r.recomputeRan)
     assert(r.affectedGroups == 1L)
-    val r2 = Materialize.refresh(cat, "t", path)
+    val r2 = Materialize.refresh(cat, path)
     assert(!r2.recomputeRan,
       "a no-change refresh must not report the previous recompute")
     assert(r2.affectedGroups == 0L)
@@ -74,10 +74,10 @@ class MvRefreshSpec extends AnyFunSuite {
     MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
     // ok=2 holds segment a's max price
     cat.delete("o", col("ok") === 2L)
-    val r = MaterializeJoin.refresh(cat, path)
+    val r = Materialize.refresh(cat, path)
     assert(r.recomputeRan)
     assert(r.affectedGroups == 1L)
-    val r2 = MaterializeJoin.refresh(cat, path)
+    val r2 = Materialize.refresh(cat, path)
     assert(!r2.recomputeRan,
       "a no-change refresh must not report the previous recompute")
     assert(r2.affectedGroups == 0L)
@@ -97,9 +97,9 @@ class MvRefreshSpec extends AnyFunSuite {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       val a = pool.submit[RefreshReport](() =>
-        Materialize.refresh(recomputing, "t", recomputingMv))
+        Materialize.refresh(recomputing, recomputingMv))
       val b = pool.submit[RefreshReport](() =>
-        Materialize.refresh(idle, "t", idleMv))
+        Materialize.refresh(idle, idleMv))
       val (ra, rb) = (a.get(120, TimeUnit.SECONDS),
         b.get(120, TimeUnit.SECONDS))
       assert(ra.recomputeRan && ra.affectedGroups == 1L,
@@ -121,7 +121,7 @@ class MvRefreshSpec extends AnyFunSuite {
     try {
       val runs = Seq.fill(2)(pool.submit[RefreshReport] { () =>
         go.await()
-        Materialize.refresh(cat, "t", path)
+        Materialize.refresh(cat, path)
       })
       go.countDown()
       val reports = runs.map(_.get(120, TimeUnit.SECONDS))
@@ -165,14 +165,14 @@ class MvRefreshSpec extends AnyFunSuite {
     val path = mvPath()
     Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
     cat.upsert("t", Seq((4L, "b", 35L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "t", path) // warm: memos and caches filled
+    Materialize.refresh(cat, path) // warm: memos and caches filled
     cat.upsert("t", Seq((5L, "a", 12L), (7L, "a", 16L))
       .toDF("k", "g", "x"))
     val Measured(n, _, r) =
-      Measure.once(spark)(Materialize.refresh(cat, "t", path))
+      Measure.once(spark)(Materialize.refresh(cat, path))
     assert(!r.recomputeRan)
     assert(n.jobs == 10, s"jobs per single-table refresh: ${n.jobs}")
-    assert(Measure.once(spark)(Materialize.refresh(cat, "t", path))
+    assert(Measure.once(spark)(Materialize.refresh(cat, path))
         .counts.jobs == 0,
       "a no-change refresh runs no job")
     assert(Materialize.read(spark, path).orderBy("g")
@@ -187,15 +187,15 @@ class MvRefreshSpec extends AnyFunSuite {
     val path = mvPath()
     MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((4L, 20L, 350L)).toDF("ok", "ck", "price"))
-    MaterializeJoin.refresh(cat, path) // warm: memos and caches filled
+    Materialize.refresh(cat, path) // warm: memos and caches filled
     cat.upsert("o", Seq((5L, 10L, 120L), (6L, 10L, 160L))
       .toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((30L, "c")).toDF("ck", "seg"))
     val Measured(n, _, r) =
-      Measure.once(spark)(MaterializeJoin.refresh(cat, path))
+      Measure.once(spark)(Materialize.refresh(cat, path))
     assert(!r.recomputeRan)
     assert(n.jobs == 30, s"jobs per join refresh: ${n.jobs}")
-    assert(Measure.once(spark)(MaterializeJoin.refresh(cat, path))
+    assert(Measure.once(spark)(Materialize.refresh(cat, path))
         .counts.jobs == 0,
       "a no-change refresh runs no job")
     assert(Materialize.read(spark, path).orderBy("seg")
@@ -212,10 +212,10 @@ class MvRefreshSpec extends AnyFunSuite {
     Materialize.build(cat, "t", Seq("g"), Seq("x"), path,
       filterSql = Some("x > 10"))
     cat.upsert("t", Seq((4L, "a", 5L)).toDF("k", "g", "x"))
-    Materialize.refresh(cat, "t", path)
+    Materialize.refresh(cat, path)
     cat.upsert("t", Seq((5L, "a", 3L), (6L, "a", 40L))
       .toDF("k", "g", "x"))
-    Materialize.refresh(cat, "t", path)
+    Materialize.refresh(cat, path)
     val rows = Materialize.read(spark, path).orderBy("g")
       .select("g", "cnt", "sum_x").collect().map(_.toSeq).toSeq
     assert(rows == Seq(Seq("a", 3L, 75L), Seq("b", 1L, 30L)),

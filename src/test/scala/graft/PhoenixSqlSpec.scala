@@ -1374,7 +1374,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     // one DimJoinDef per derive: the dim keyed by its CATALOG ROOT
     // (the serving scan's _snapcache leaf maps back to it), innerSafe
     // asserted (every fo.ck resolves in dc)
-    Materialize.registerForRewrite(cat, "fo", mv, dims = Seq(
+    Materialize.registerForRewrite(cat, mv, dims = Seq(
       GraftAggViews.DimJoinDef(cat.tablePath("dc"),
         factKeys = Seq("ck"), dimKeys = Seq("ck"),
         dimAttrs = Map("seg" -> "seg"), innerSafe = true)))
@@ -1400,7 +1400,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     cat.refreshSnapshotCache("dc")
     px.execute("UPSERT INTO fo VALUES (4, 2, 5)")
     intercept[IllegalStateException] {
-      Materialize.refresh(cat, "fo", mv, derive = derive)
+      Materialize.refresh(cat, mv, derive = derive)
     }
     Materialize.build(cat, "fo", Seq("seg"), Seq("price"), mv,
       derive = derive)
@@ -1428,7 +1428,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mvsql").toString
     Materialize.build(cat, "mvt", Seq("src"), Seq("x"), mv)
-    Materialize.registerForRewrite(cat, "mvt", mv)
+    Materialize.registerForRewrite(cat, mv)
     def run(expectServed: Boolean) = {
       val q = px.execute("SELECT SRC, SUM(X) AS sum_x, COUNT(*) AS n " +
         "FROM MVT GROUP BY SRC ORDER BY SRC")
@@ -1450,10 +1450,10 @@ class PhoenixSqlSpec extends AnyFunSuite {
       Seq(("a", 30L, 2L), ("b", 105L, 2L)))
     // refresh both legs → served again with the new numbers
     cat.refreshSnapshotCache("mvt")
-    Materialize.refresh(cat, "mvt", mv)
+    Materialize.refresh(cat, mv)
     px.execute("UPSERT INTO MVT VALUES (4, 'b', 100)") // same row, re-dirty
     cat.refreshSnapshotCache("mvt")
-    Materialize.refresh(cat, "mvt", mv)
+    Materialize.refresh(cat, mv)
     assert(run(expectServed = true) ==
       Seq(("a", 30L, 2L), ("b", 105L, 2L)))
   }
@@ -1477,7 +1477,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mvsql_fresh").toString
     Materialize.build(cat, "fg", Seq("src"), Seq("x"), mv)
-    Materialize.registerForRewrite(cat, "fg", mv)
+    Materialize.registerForRewrite(cat, mv)
     def run(expectServed: Boolean) = {
       val q = px.execute("SELECT SRC, SUM(X) AS sum_x FROM FG " +
         "GROUP BY SRC ORDER BY SRC")
@@ -1501,7 +1501,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
       "a fresh snapshot cache over a stale MV state must fall back " +
         "to the cache-scan plan with FRESH numbers")
     // refresh the MV → the marks line up again → served, new numbers
-    Materialize.refresh(cat, "fg", mv)
+    Materialize.refresh(cat, mv)
     assert(run(expectServed = true) == Seq(("a", 110L), ("b", 205L)))
     // the zero-row-write corner: a DELETE matching NOTHING bumps the
     // version counter without log rows — the probe refuses (safe) and
@@ -1515,7 +1515,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     // cache must line back up; log-max keying on either leg refused
     // forever here
     px.execute("DELETE FROM FG WHERE K = 99998")
-    Materialize.refresh(cat, "fg", mv)
+    Materialize.refresh(cat, mv)
     cat.refreshSnapshotCache("fg")
     assert(run(expectServed = true) == Seq(("a", 110L), ("b", 205L)),
       "an empty write must not permanently desync the freshness probe")
@@ -1853,7 +1853,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     // an API refresh with no filter in hand stays correct: the
     // predicate rides the META, not the caller
     px.execute("UPSERT INTO WT VALUES (9, 'o', 31)")
-    Materialize.refresh(px.catalog, "wt", px.catalog.mvPath("wmv"))
+    Materialize.refresh(px.catalog, px.catalog.mvPath("wmv"))
     val rows = Materialize.read(px.catalog.session,
         px.catalog.mvPath("wmv"))
       .collect().map(r => (r.getString(0), r.getAs[Long]("cnt"))).toMap
@@ -1954,7 +1954,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
   test("SNOWFLAKE MV serving: fact ⋈ dim ⋈ dim-on-dim front-end " +
       "query serves from chain state (nullable keys incl. the " +
       "intermediate snowflake key)") {
-    import graft.operators.MaterializeJoin
+    import graft.operators.{Materialize, MaterializeJoin}
     val px = fresh()
     val cat = px.catalog
     px.execute("CREATE TABLE SF (OK BIGINT NOT NULL, CK BIGINT, " +
@@ -1977,7 +1977,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
         MaterializeJoin.SideSpec("sc", Seq("ck")),
         MaterializeJoin.SideSpec("sn", Seq("nk")))),
       Seq("nname"), Seq("x"), mv)
-    MaterializeJoin.registerForRewrite(cat, mv)
+    Materialize.registerForRewrite(cat, mv)
     val q = px.execute("SELECT NNAME, SUM(X) AS sx FROM SF " +
       "JOIN SC ON SF.CK = SC.CK JOIN SN ON SC.NK = SN.NK " +
       "GROUP BY NNAME ORDER BY NNAME")
@@ -1995,7 +1995,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
 
   test("LEFT-join MV serving matrix: a LEFT OUTER front-end query " +
       "serves from the leftState; INNER and bare-fact refuse") {
-    import graft.operators.MaterializeJoin
+    import graft.operators.{Materialize, MaterializeJoin}
     val px = fresh()
     val cat = px.catalog
     px.execute("CREATE TABLE LF (OK BIGINT NOT NULL, CK BIGINT, " +
@@ -2012,7 +2012,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
       MaterializeJoin.JoinSpec("lf", "ld", Seq("ck"),
         leftOuter = true),
       Seq("seg"), Seq("price"), mv)
-    MaterializeJoin.registerForRewrite(cat, mv)
+    Materialize.registerForRewrite(cat, mv)
     def run(sql: String, expectServed: Boolean) = {
       val q = px.execute(sql)
       val plan = q.queryExecution.executedPlan.toString
@@ -2038,7 +2038,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
 
   test("freshness gate, join MV: out-of-band churn on EITHER chain " +
       "table refuses the serve until refresh") {
-    import graft.operators.MaterializeJoin
+    import graft.operators.{Materialize, MaterializeJoin}
     val px = fresh()
     val cat = px.catalog
     px.execute("CREATE TABLE JF (OK BIGINT NOT NULL, CK BIGINT, " +
@@ -2056,7 +2056,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     MaterializeJoin.build(cat,
       MaterializeJoin.JoinSpec("jf", "jd", Seq("ck")),
       Seq("seg"), Seq("price"), mv)
-    MaterializeJoin.registerForRewrite(cat, mv)
+    Materialize.registerForRewrite(cat, mv)
     def run(expectServed: Boolean) = {
       val q = px.execute("SELECT SEG, SUM(PRICE) AS rev FROM JF " +
         "JOIN JD ON JF.CK = JD.CK GROUP BY SEG ORDER BY SEG")
@@ -2073,7 +2073,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     assert(run(expectServed = false) == Seq(("a", 150L)),
       "dim churn without an MV refresh must refuse the serve and " +
         "return fresh numbers")
-    MaterializeJoin.refresh(cat, mv)
+    Materialize.refresh(cat, mv)
     assert(run(expectServed = true) == Seq(("a", 150L)))
   }
 
@@ -2104,14 +2104,14 @@ class PhoenixSqlSpec extends AnyFunSuite {
       Seq((1L, "a", 5L), (2L, "b", 6L)).toDF("id", "g", "x"))
     val mv2 = s"${cat.tablePath("at2")}_apimv"
     graft.operators.Materialize.build(cat, "at2", Seq("g"), Seq("x"), mv2)
-    graft.operators.Materialize.registerForRewrite(cat, "at2", mv2)
+    graft.operators.Materialize.registerForRewrite(cat, mv2)
     cat.upsert("at2", Seq((1L, "a", 7L)).toDF("id", "g", "x"))
-    graft.operators.Materialize.refresh(cat, "at2", mv2)
+    graft.operators.Materialize.refresh(cat, mv2)
     val mode = px.execute("COMPACT TABLE AT2").collect().head
     assert(mode.getString(1) == "floored",
       s"an API-registered MV must floor the compaction, got $mode")
     cat.upsert("at2", Seq((3L, "c", 8L)).toDF("id", "g", "x"))
-    val r = graft.operators.Materialize.refresh(cat, "at2", mv2)
+    val r = graft.operators.Materialize.refresh(cat, mv2)
     assert(!r.rebuildRan,
       "post-COMPACT refresh over an API-registered MV must stay " +
         "incremental — the derived floor covered its fold mark")

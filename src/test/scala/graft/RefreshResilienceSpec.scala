@@ -58,7 +58,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("t", Seq(("a", 5L), ("d", 7L)).toDF("k", "v"))
     var fired = 0
     withFoldHook(() => if (fired == 0) { fired = 1; dropAllBlocks() }) {
-      Materialize.refresh(cat, "t", mv)
+      Materialize.refresh(cat, mv)
     }
     assert(fired == 1, "the block-dropping hook must have fired")
     val got = Materialize.read(spark, mv)
@@ -89,7 +89,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("c", Seq((20L, "a")).toDF("ck", "seg"))
     var fired = 0
     withFoldHook(() => if (fired == 0) { fired = 1; dropAllBlocks() }) {
-      MaterializeJoin.refresh(cat, mv)
+      Materialize.refresh(cat, mv)
     }
     assert(fired == 1)
     val got = Materialize.read(spark, mv)
@@ -115,7 +115,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     var calls = 0
     val boom = intercept[RuntimeException] {
       withFoldHook(() => { calls += 1; throw new RuntimeException("boom") }) {
-        Materialize.refresh(cat, "t2", mv)
+        Materialize.refresh(cat, mv)
       }
     }
     assert(boom.getMessage == "boom")
@@ -172,7 +172,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     // insert-only delta → no retraction, no recompute → the refresh
     // writes its touched buckets on the driver (Commit's driver path)
     cat.upsert("tb", Seq(("e", 5L), ("f", 6L)).toDF("k", "v"))
-    val r = Materialize.refresh(cat, "tb", mv)
+    val r = Materialize.refresh(cat, mv)
     assert(!r.recomputeRan)
     val got = Materialize.read(spark, mv)
       .select("k", "cnt", "sum_v", "min_v", "max_v")
@@ -236,7 +236,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("tl", Seq(("a", 5L), ("d", 7L)).toDF("k", "v"))
     val target = s"$mv/state_v${cat.currentVersion("tl")}"
     plantLiveState(mv, target)
-    Materialize.refresh(cat, "tl", mv)
+    Materialize.refresh(cat, mv)
     val cols = Seq("k", "cnt", "sum_v", "min_v", "max_v")
     assertExactState(mv, target,
       Materialize.read(spark, mv).select(cols.map(col): _*).collect()
@@ -267,7 +267,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     val target = s"$mv/state_v${cat.currentVersion("lo")}_" +
       s"${cat.currentVersion("lc")}"
     plantLiveState(mv, target)
-    MaterializeJoin.refresh(cat, mv)
+    Materialize.refresh(cat, mv)
     val cols = Seq("seg", "cnt", "sum_price", "min_price", "max_price")
     assertExactState(mv, target,
       Materialize.read(spark, mv).select(cols.map(col): _*).collect()
