@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
 
 /** Scale rehearsal: self-scale the sf fixture ~`factor`× into a temp
   * dir and measure how the most expensive queries' wall time grows —
   * the cheapest way to convert "the plan looks right at 100×" into a
   * measurement. Per query it reports the measured scaling exponent
   * `log(t_scaled / t_base) / log(factor)`: ~1.0 = linear, ~1.1 ≈
-  * n log n at this range, >1.3 = super-linear (investigate).
+  * n log n at this range, >1.3 = super-linear (investigate). Every
+  * temp dir a run writes (the fixture copy, each section's warehouse)
+  * is deleted when `main` returns or throws.
   *
   * Fixture synthesis (all tables land in the output dir so any query
   * runs unmodified):
@@ -55,7 +58,23 @@ object ScaleRehearsal {
   // refresh cost tracks the delta (flat) or the table/log (linear, the
   // round-9 pre-fix behavior).
 
-  def main(args: Array[String]): Unit = {
+  // every temp dir a run makes — the fixture copy and each section's
+  // warehouse — so main can delete them all when it returns or throws
+  private val scratch =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    scratch.add(d)
+    d
+  }
+
+  def main(args: Array[String]): Unit =
+    try rehearse(args)
+    finally scratch.forEach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+
+  private def rehearse(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     // optional third arg: comma-separated query subset (tail-focused
@@ -64,8 +83,7 @@ object ScaleRehearsal {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Queries ++ Seq("ivm", "ivmgrain"))
     val spark = GraftSession.build("graft-scale-rehearsal")
-    val out = java.nio.file.Files
-      .createTempDirectory(s"graft_scale_x$factor").toString
+    val out = tempDir(s"graft_scale_x$factor")
     // the big-base sections synthesize their own tables — skip the
     // fixture replication when nothing selected reads it
     val selfSynth = Set("ivmbig", "ivmbucket", "joinivm", "chainivm",
@@ -228,8 +246,7 @@ object ScaleRehearsal {
   private def ivmRefresh(spark: SparkSession, dir: String)
       : Measure.Measured[graft.operators.RefreshReport] = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_ivm").toString
+    val wh = tempDir("graft_scale_ivm")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("d", StructType(Seq(
       StructField("doc_id", LongType), StructField("source", StringType),
@@ -239,7 +256,7 @@ object ScaleRehearsal {
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
     cat.upsert("d", docs)
     val mv = wh + "/mv"
-    graft.operators.Materialize.build(cat, "d",
+    graft.operators.Materialize.build(cat, ChainSpec("d"),
       Seq("source"), Seq("n_chars"), mv)
     // fixed-size delta regardless of base size: 100 updates + 100 inserts
     cat.upsert("d", docs.where(col("doc_id") < 100)
@@ -261,8 +278,7 @@ object ScaleRehearsal {
   private def ivmGrainRefresh(spark: SparkSession, dir: String)
       : Measure.Measured[graft.operators.RefreshReport] = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_ivmg").toString
+    val wh = tempDir("graft_scale_ivmg")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     // composite PK: the scaled fixture replicates events shifting
     // user_id only, so (event_id, user_id) is the unique key there
@@ -276,9 +292,9 @@ object ScaleRehearsal {
         col("ts"))
     cat.upsert("e", ev)
     val mv = wh + "/mv"
-    graft.operators.Materialize.build(cat, "e",
+    graft.operators.Materialize.build(cat, ChainSpec("e"),
       Seq("event_type", "day"), Seq("user_id"), mv,
-      grainExprs = Seq("day" -> "date_trunc('DAY', ts)"))
+      grains = Seq("day" -> "date_trunc('DAY', ts)"))
     // fixed-size delta at ANY factor: the 100 first rows in PK order
     val delta = ev.orderBy(col("event_id"), col("user_id")).limit(100)
     cat.upsert("e", delta
@@ -308,8 +324,7 @@ object ScaleRehearsal {
   private def ivmBigSeconds(spark: SparkSession,
       n: Long): Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_ivmbig").toString
+    val wh = tempDir("graft_scale_ivmbig")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("b", StructType(Seq(
       StructField("k", LongType), StructField("g", LongType),
@@ -327,7 +342,8 @@ object ScaleRehearsal {
           (col("id") % 1000 + 10).as("x"))
     cat.upsert("b", rows(lit(true)))
     val mv = wh + "/mv"
-    graft.operators.Materialize.build(cat, "b", Seq("g"), Seq("x"), mv)
+    graft.operators.Materialize.build(cat, ChainSpec("b"), Seq("g"),
+      Seq("x"), mv)
     def timedRefresh(expectRecompute: Boolean, what: String)
         : (Double, Long) = {
       val m = Measure.quiesced(spark)(
@@ -379,8 +395,7 @@ object ScaleRehearsal {
   private def joinIvmSeconds(spark: SparkSession, n: Long)
       : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_joinivm").toString
+    val wh = tempDir("graft_scale_joinivm")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("r", StructType(Seq(
       StructField("k", LongType), StructField("jk", LongType),
@@ -397,14 +412,14 @@ object ScaleRehearsal {
       .select(col("id").as("jk"), (col("id") % 64).as("seg")))
     val mv = wh + "/mv"
     val mvScan = wh + "/mv_fullscan"
-    val js = graft.operators.MaterializeJoin.JoinSpec("r", "s",
-      Seq("jk"), leftKeysImmutable = true)
-    graft.operators.MaterializeJoin.build(cat, js, Seq("seg"),
+    def chain(imm: Boolean) =
+      ChainSpec("r", Seq(SideSpec("s", Seq("jk"), factKeysImmutable = imm)))
+    graft.operators.Materialize.build(cat, chain(true), Seq("seg"),
       Seq("x"), mv)
     // control MV WITHOUT the immutable-FK declaration: its ΔS leg
     // falls back to the above-collapse filter (full fact read)
-    graft.operators.MaterializeJoin.build(cat,
-      js.copy(leftKeysImmutable = false), Seq("seg"), Seq("x"), mvScan)
+    graft.operators.Materialize.build(cat,
+      chain(false), Seq("seg"), Seq("x"), mvScan)
     // 100 fact-price updates, x 510 -> 505 (strictly inside (10, 1009))
     cat.upsert("r", facts(expr("id % 1000 = 500") && col("id") < 100000L)
       .withColumn("x", lit(505L)))
@@ -431,8 +446,7 @@ object ScaleRehearsal {
   private def chainIvmSeconds(spark: SparkSession, n: Long)
       : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_chainivm").toString
+    val wh = tempDir("graft_scale_chainivm")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("r", StructType(Seq(
       StructField("k", LongType), StructField("jk", LongType),
@@ -460,7 +474,7 @@ object ScaleRehearsal {
         factKeysImmutable = true),
       graft.operators.MaterializeJoin.SideSpec("p", Seq("pk2"),
         factKeysImmutable = true)))
-    graft.operators.MaterializeJoin.build(cat, cs,
+    graft.operators.Materialize.build(cat, cs,
       Seq("seg", "brand"), Seq("x"), mv)
     // 100 fact-measure updates, x 510 -> 505 (strictly interior)
     cat.upsert("r", facts(expr("id % 1000 = 500") && col("id") < 100000L)
@@ -500,8 +514,7 @@ object ScaleRehearsal {
   private def leftIvmSeconds(spark: SparkSession, n: Long)
       : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_leftivm").toString
+    val wh = tempDir("graft_scale_leftivm")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("r", StructType(Seq(
       StructField("k", LongType), StructField("jk", LongType),
@@ -517,7 +530,7 @@ object ScaleRehearsal {
     cat.upsert("s", spark.range(n / 200)
       .select(col("id").as("jk"), (col("id") % 64).as("seg")))
     val mv = wh + "/mv"
-    graft.operators.MaterializeJoin.build(cat,
+    graft.operators.Materialize.build(cat,
       graft.operators.MaterializeJoin.ChainSpec("r", Seq(
         graft.operators.MaterializeJoin.SideSpec("s", Seq("jk"),
           factKeysImmutable = true)), leftOuter = true),
@@ -562,8 +575,7 @@ object ScaleRehearsal {
   private def fullIvmSeconds(spark: SparkSession, n: Long)
       : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_fullivm").toString
+    val wh = tempDir("graft_scale_fullivm")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("r", StructType(Seq(
       StructField("k", LongType), StructField("jk", LongType),
@@ -589,8 +601,7 @@ object ScaleRehearsal {
       .unionByName(spark.range(n / 800, n / 800 + 5000))
       .select(col("id").as("pk2"), (col("id") % 16).as("brand")))
     val mv = wh + "/mv"
-    import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
-    graft.operators.MaterializeJoin.build(cat,
+    graft.operators.Materialize.build(cat,
       ChainSpec("r", Seq(
         SideSpec("s", Seq("jk"), factKeysImmutable = true),
         SideSpec("p", Seq("pk2"), factKeysImmutable = true)),
@@ -632,8 +643,7 @@ object ScaleRehearsal {
   private def deepChainIvmSeconds(spark: SparkSession, n: Long)
       : Seq[Double] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_deepchain").toString
+    val wh = tempDir("graft_scale_deepchain")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("r", StructType(Seq(
       StructField("k", LongType), StructField("jk", LongType),
@@ -669,8 +679,7 @@ object ScaleRehearsal {
     cat.upsert("w", spark.range(9973)
       .select(col("id").as("jk4"), (col("id") % 8).as("a4")))
     val mv = wh + "/mv"
-    import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
-    graft.operators.MaterializeJoin.build(cat,
+    graft.operators.Materialize.build(cat,
       ChainSpec("r", Seq(
         SideSpec("s", Seq("jk"), factKeysImmutable = true),
         SideSpec("p", Seq("pk2"), factKeysImmutable = true),
@@ -717,8 +726,7 @@ object ScaleRehearsal {
       buckets: Int): (Double, Double, Double, Double) = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     def mk(tag: String, b: Int): (graft.sources.GraftCatalog, String) = {
-      val wh = java.nio.file.Files
-        .createTempDirectory(s"graft_scale_ivmbk$tag").toString
+      val wh = tempDir(s"graft_scale_ivmbk$tag")
       val cat = new graft.sources.GraftCatalog(spark, wh)
       cat.createTable("t", StructType(Seq(
         StructField("k", LongType), StructField("g", LongType),
@@ -728,7 +736,7 @@ object ScaleRehearsal {
         expr("CASE id % 3 WHEN 0 THEN 10L WHEN 1 THEN 500L " +
           "ELSE 1000L END").as("x")))
       val mv = wh + "/mv"
-      graft.operators.Materialize.build(cat, "t", Seq("g"), Seq("x"),
+      graft.operators.Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"),
         mv, buckets = b)
       (cat, mv)
     }
@@ -790,8 +798,7 @@ object ScaleRehearsal {
   private def cdcMvFreshnessSeconds(spark: SparkSession,
       dir: String): Double = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_scale_cdcmv").toString
+    val wh = tempDir("graft_scale_cdcmv")
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("d", StructType(Seq(
       StructField("doc_id", LongType), StructField("source", StringType),
@@ -801,12 +808,11 @@ object ScaleRehearsal {
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
     cat.upsert("d", docs)
     val mv = wh + "/mv"
-    graft.operators.Materialize.build(cat, "d",
+    graft.operators.Materialize.build(cat, ChainSpec("d"),
       Seq("source"), Seq("n_chars"), mv)
     // three fixed-size micro-batch files: updates (retractions for the
     // MV), inserts, and rows under a brand-new grouping key
-    val in = java.nio.file.Files
-      .createTempDirectory("graft_scale_cdcin").toString
+    val in = tempDir("graft_scale_cdcin")
     docs.where(col("doc_id") < 80)
       .withColumn("n_chars", col("n_chars") + 13)
       .coalesce(1).write.parquet(s"$in/b0")

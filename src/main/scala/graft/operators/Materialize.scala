@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.GraftCatalog
+import MaterializeJoin.ChainSpec
 import scala.jdk.CollectionConverters._
 
 /** Incremental materialized-aggregate maintenance (IVM) over the
@@ -296,42 +297,66 @@ object Materialize {
       case _ => df.unpersist()
     }
 
-  /** Full build: aggregate the current snapshot, persist it, record the
-    * change-log high-water mark the state covers and the wall-clock
-    * refresh point (the TTL expiry low-water mark for the next
-    * incremental refresh). */
-  def build(cat: GraftCatalog, table: String, groupCols: Seq[String],
+  /** The one build of both MV kinds: aggregate the chain's snapshots as
+    * of freshly sampled marks, persist the state and flip the meta
+    * pointer to it. A single-table MV is the chain with no sides,
+    * `ChainSpec(table)`; its WHERE is `factFilterSql` either way.
+    * Returns the marks the state covers, aligned with `cs.tables`.
+    *
+    *  - Join-only checks ([[MaterializeJoin.validate]], including the
+    *    TTL refusal) run when the chain has sides; the declared-
+    *    immutability sweep covers what the sides declare.
+    *  - `derive` applies only to a chain with no sides; a join MV
+    *    refuses any other than [[NoDerive]], as its refresh does. A
+    *    [[StarDerive]] stamps its dim fingerprints into the meta.
+    *  - A TTL-free table marks with its VERSION COUNTER (O(1), and it
+    *    moves on EVERY write including a zero-row one, so the serving
+    *    probe `meta marks == counters` can never stick false); a TTL
+    *    table keeps the alive-max mark its expiry algebra needs.
+    *  - The state dir is `state_v<marks>` on a fresh path and
+    *    `state_v<marks>r<ts>` when a meta exists, never the live dir's
+    *    name: a rebuild at unchanged marks (ALTER SET TTL, a compaction,
+    *    a dim change) would otherwise replace the state being served.
+    *
+    * Every read is AS OF the sampled marks: a write landing mid-build is
+    * excluded from both the state and the recorded marks, so the first
+    * refresh folds it exactly once.
+    *
+    * `buckets > 0` lays the state out BUCKET-MANIFESTED (see the class
+    * doc): the meta carries a per-bucket manifest and each refresh
+    * rewrites only the delta-touched buckets. */
+  def build(cat: GraftCatalog, cs: ChainSpec, groupCols: Seq[String],
       measures: Seq[String], path: String,
-      grainExprs: Seq[(String, String)] = Seq.empty,
+      grains: Seq[(String, String)] = Seq.empty,
       sketches: Seq[(String, Int)] = Seq.empty,
-      buckets: Int = 0,
-      derive: DataFrame => DataFrame = NoDerive,
       topks: Seq[(String, Int)] = Seq.empty,
-      filterSql: Option[String] = None): Long = underPathLock(path) {
+      buckets: Int = 0,
+      derive: DataFrame => DataFrame = NoDerive): Seq[Long] =
+      underPathLock(path) {
     val spark = cat.session
-    // sample the clock BEFORE constructing the snapshot: its TTL cutoff
-    // is evaluated at plan-construction time, and stamping meta with a
-    // LATER clock would start the next refresh's expiry window past
-    // rows that expired during the build — they would be counted in
-    // this state yet never retracted
+    val single = cs.sides.isEmpty
+    require(grains.map(_._1).forall(groupCols.contains),
+      s"grain columns ${grains.map(_._1)} must appear in " +
+        s"groupCols $groupCols")
+    require(buckets >= 0, s"buckets must be >= 0, got $buckets")
+    require(buckets == 0 || !groupCols.contains("__b"),
+      "bucketed state reserves the __b column name")
+    if (!single) {
+      require(derive eq NoDerive, s"a join MV takes no derive (a " +
+        "mutating side table is a chain side, not a StarDerive)")
+      MaterializeJoin.validate(cat, cs, groupCols,
+        measures ++ sketches.map(_._1) ++ topks.map(_._1), grains)
+    }
+    // sample the clock BEFORE the marks and the snapshot: the TTL
+    // cutoff is evaluated at plan-construction time, and stamping meta
+    // with a LATER clock would start the next refresh's expiry window
+    // past rows that expired during the build — counted in this state
+    // yet never retracted
     val ts = cat.clock()
-    // TTL-free tables mark with the VERSION COUNTER (O(1), and it
-    // moves on EVERY write including one that lands zero rows — a
-    // no-match DELETE — so the serving-freshness probe `meta mark ==
-    // counter` can never stick false); as an upper read bound the
-    // counter equals the log max (no row sits above it). TTL tables
-    // keep the alive-max mark (their expiry algebra needs it, and
-    // they never serve through the probe anyway).
-    val v =
-      if (cat.ttlSeconds(table).isEmpty) cat.currentVersion(table)
-      else highWater(cat, table)
-    // NEVER overwrite the directory the live meta points to: a rebuild
-    // triggered by ALTER SET TTL (or a legacy meta) keeps the
-    // high-water mark, so the default name collides with the state
-    // being served — and replacing the target swaps it under the live
-    // pointer. Suffix with the
-    // refresh stamp instead (the same flip-don't-overwrite rule the
-    // expiry-only refresh path follows).
+    val marks = cs.tables.map(t =>
+      if (cat.ttlSeconds(t).isEmpty) cat.currentVersion(t)
+      else highWater(cat, t))
+    MaterializeJoin.requireImmutableUpTo(cat, cs, marks)
     // existence-probe the FileSystem before reading: the Try alone is
     // correct, but Spark ERROR-logs the caught FileNotFound on every
     // fresh build — log noise in every rehearsal and ingest pipeline
@@ -339,7 +364,8 @@ object Materialize {
     val metaExists = scala.util.Try(metaPath
       .getFileSystem(spark.sessionState.newHadoopConf())
       .exists(metaPath)).getOrElse(false)
-    val stateDirName = (if (!metaExists) None else scala.util.Try(
+    val v = marks.mkString("_")
+    val stateDir = (if (!metaExists) None else scala.util.Try(
         MvMeta.read(spark, path).stateDir).toOption) match {
       case Some(cur) =>
         val cand = s"state_v${v}r$ts"
@@ -348,12 +374,6 @@ object Materialize {
         if (cand == cur) s"${cand}n${System.nanoTime()}" else cand
       case None => s"state_v$v"
     }
-    require(grainExprs.map(_._1).forall(groupCols.contains),
-      s"grain columns ${grainExprs.map(_._1)} must appear in " +
-        s"groupCols $groupCols")
-    require(buckets >= 0, s"buckets must be >= 0, got $buckets")
-    require(buckets == 0 || !groupCols.contains("__b"),
-      "bucketed state reserves the __b column name")
     // a StarDerive build stamps the dim fingerprint into the meta (and
     // enforces the key-uniqueness half of the contract right here);
     // refresh re-checks it before any fold (see there)
@@ -361,25 +381,32 @@ object Materialize {
       case ed: EnforcedDerive => (ed.fingerprints(), ed.pinOf)
       case _ => (Seq.empty[Long], "")
     }
-    // read AS OF the sampled mark: a write landing mid-build is then
-    // excluded from both the state and the recorded high-water, so the
-    // first refresh folds it exactly once (an unbounded snapshot could
-    // include it while the meta says it wasn't folded → double count)
-    // WHERE-filtered MV: the predicate applies BELOW derive on the base
-    // rows — the fold reads carry it into the scan, and refresh reads
-    // the same text back from the meta
-    val flt: DataFrame => DataFrame = df =>
-      filterSql.map(f => df.where(expr(f))).getOrElse(df)
-    val agg = aggregate(
-      withGrains(derive(flt(cat.snapshotUpTo(table, v))), grainExprs),
+    // WHERE-filtered MV: the predicate applies to the fact rows BELOW
+    // derive and the joins; every refresh reads it back from the meta
+    val agg = aggregate(withGrains(derive(MaterializeJoin.joinedSnapshotAt(
+        cat, cs, marks.head, marks.tail)), grains),
       groupCols, measures, sketches, topks)
-    val bucketDirs = writeState(agg, groupCols, buckets, path, stateDirName)
-    MvMeta.write(spark, path, MvMeta(groupCols, measures, stateDirName,
-      grainExprs, None, sketches, topks, buckets, bucketDirs,
-      MvMeta.Single(v, Some(ts), Some(cat.ttlSeconds(table).getOrElse(-1L)),
-        dimFp, dimPin, filterSql, Some(table))))
-    v
+    val bucketDirs = writeState(agg, groupCols, buckets, path, stateDir)
+    val kind =
+      if (single) MvMeta.Single(marks.head, Some(ts),
+        Some(cat.ttlSeconds(cs.fact).getOrElse(-1L)), dimFp, dimPin,
+        cs.factFilterSql, Some(cs.fact))
+      else MvMeta.Join(cs, marks.head, marks.tail)
+    MvMeta.write(spark, path, MvMeta(groupCols, measures, stateDir,
+      grains, None, sketches, topks, buckets, bucketDirs, kind))
+    marks
   }
+
+  /** Rebuild the MV at `path` from the definition its `meta` records —
+    * the refresh's answer to a change the fold cannot carry (history
+    * discarded past the fold mark, a TTL or session-zone change, a
+    * churned dim). `derive` is the single-table star hook, as for
+    * [[build]]. */
+  private[operators] def rebuild(cat: GraftCatalog, path: String,
+      meta: MvMeta, derive: DataFrame => DataFrame): RefreshReport =
+    RefreshReport(build(cat, meta.chain, meta.groupCols, meta.measures,
+      path, meta.grains, meta.sketches, meta.topks, meta.buckets, derive),
+      rebuildRan = true)
 
   /** The one state write of build, refresh and compaction: `df` into
     * `path/dir` through [[Commit.replace]], single-dir or bucketed —
@@ -443,19 +470,19 @@ object Materialize {
     val spark = cat.session
     val meta = MvMeta.read(spark, path)
     val tables = meta.tables
-    val (viewDims, grains, filterSql) = meta.kind match {
+    val (viewDims, grains) = meta.kind match {
       case sm: MvMeta.Single =>
         require(sm.dimFp.size == dims.size,
           s"MV at $path was built with ${sm.dimFp.size} StarDerive " +
             s"dim(s); registerForRewrite got ${dims.size} DimJoinDef(s)" +
             " — a star MV serves only queries joining the same dims, " +
             "so the registration must describe each join")
-        (dims, meta.grains.toMap, sm.filterSql)
+        (dims, meta.grains.toMap)
       case j: MvMeta.Join =>
         require(dims.isEmpty, s"the join MV at $path derives its dims " +
           "from its chain; registerForRewrite takes no DimJoinDef")
         (MaterializeJoin.chainDims(cat, meta, j.chain),
-          Map.empty[String, String], j.chain.factFilterSql)
+          Map.empty[String, String])
     }
     // The probe covers every folded table's leg (meta marks == version
     // counters) and refuses finite-TTL tables (pure time retracts rows
@@ -488,7 +515,7 @@ object Materialize {
       graft.plans.GraftAggViews.AggViewDef(path,
         meta.groupCols, meta.measures, grains,
         meta.sketches.toMap, dims = viewDims, topks = meta.topks.toMap,
-        fresh = fresh, filterSql = filterSql))
+        fresh = fresh, filterSql = meta.chain.factFilterSql))
     // dependency ledger: DROP TABLE on any folded table refuses while
     // this MV exists, and COMPACT TABLE derives its keep-history floor
     // from this MV's fold mark for that table
@@ -685,9 +712,8 @@ object Materialize {
     // read below — post rows, retraction pre-images, expiry winners,
     // the affected-group recompute — filters exactly like the build
     // did, whoever triggers the refresh
-    val filterSql = sm.filterSql
-    val fd: DataFrame => DataFrame = df =>
-      derive(filterSql.map(f => df.where(expr(f))).getOrElse(df))
+    val fd: DataFrame => DataFrame = df => derive(meta.chain.factFilterSql
+      .map(f => df.where(expr(f))).getOrElse(df))
     val ttl = cat.ttlSeconds(table)
     val nowMs = cat.clock()
     val rawLog = cat.changeLogRaw(table)
@@ -747,9 +773,7 @@ object Materialize {
     val grainTzChanged = grains.nonEmpty && !meta.grainTz.contains(sessionTz)
     if (floor > lastV || sm.refreshTs.isEmpty || ttlChanged ||
         grainTzChanged)
-      return RefreshReport(Seq(build(cat, table, groupCols, measures,
-        path, grains, sketches, buckets, derive, topks,
-        filterSql = filterSql)), rebuildRan = true)
+      return rebuild(cat, path, meta, derive)
     val lastRefreshMs = sm.refreshTs.get
     // alive-at-now cutoff for post images; None ⇒ no expiry
     val nowCut = ttl.map(t => new java.sql.Timestamp(nowMs - t * 1000L))
@@ -784,9 +808,7 @@ object Materialize {
         val cur = ed.fingerprints()
         if (cur != stamped) {
           if (ed.rebuildOnDimChangeOf)
-            return RefreshReport(Seq(build(cat, table, groupCols,
-              measures, path, grains, sketches, buckets, derive, topks,
-              filterSql = filterSql)), rebuildRan = true)
+            return rebuild(cat, path, meta, derive)
           val pin = sm.dimPin
           val which =
             if (stamped.size == cur.size)

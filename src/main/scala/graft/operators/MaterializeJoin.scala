@@ -55,6 +55,13 @@ import graft.sources.GraftCatalog
   * everything downstream of a single-table MV (serving, reads,
   * rewrite) works unchanged.
   *
+  * The MV is built by [[Materialize.build]] from a [[ChainSpec]] — the
+  * one build of both kinds, a single-table MV being the chain with no
+  * sides. This object holds the chain spec, the join-only build checks
+  * ([[validate]] and the immutability sweep), the serving joins of a
+  * join MV's registration, and the chain fold [[Materialize.refresh]]
+  * runs for a join meta.
+  *
   * Reference: apache/phoenix maintains only single-table secondary
   * indexes and has no join-view maintenance
   * (phoenix-core-client/src/main/java/org/apache/phoenix/compile/
@@ -131,25 +138,16 @@ object MaterializeJoin {
     * filter drops side-dangling rows — that query is the LEFT MV of
     * the filtered fact, not a filtered FULL join). The text rides the
     * meta, so API refreshes stay correct without the caller holding
-    * the filter. */
-  final case class ChainSpec(fact: String, sides: Seq[SideSpec],
+    * the filter.
+    *
+    * A single-table MV is the chain with no sides, `ChainSpec(t)`: its
+    * WHERE is `factFilterSql` too, and [[Materialize.build]] builds
+    * both kinds from the one spec. */
+  final case class ChainSpec(fact: String, sides: Seq[SideSpec] = Nil,
       leftOuter: Boolean = false, fullOuter: Boolean = false,
-      factFilterSql: Option[String] = None)
-
-  /** The binary special case, kept as the primary API: `keys` exist in
-    * both tables; see [[SideSpec]] for the immutability contract and
-    * [[ChainSpec]] for `leftOuter`. */
-  final case class JoinSpec(left: String, right: String,
-      keys: Seq[String],
-      leftKeysImmutable: Boolean = false,
-      rightKeysImmutable: Boolean = false,
-      leftOuter: Boolean = false,
-      fullOuter: Boolean = false) {
-    private[operators] def chain: ChainSpec =
-      ChainSpec(left, Seq(SideSpec(right, keys,
-        sideKeysImmutable = rightKeysImmutable,
-        factKeysImmutable = leftKeysImmutable)), leftOuter = leftOuter,
-        fullOuter = fullOuter)
+      factFilterSql: Option[String] = None) {
+    /** Every table the chain folds, fact first. */
+    def tables: Seq[String] = fact +: sides.map(_.table)
   }
 
   private def requireNoTtl(cat: GraftCatalog, table: String): Unit =
@@ -166,8 +164,8 @@ object MaterializeJoin {
     * joins — identity by default; [[recomputeJoined]] passes its
     * soundness-checked affected-group pushdown (Catalyst cannot push a
     * post-join filter through a FULL/LEFT join on its own). */
-  private def joinedSnapshotAt(cat: GraftCatalog, cs: ChainSpec,
-      vF: Long, vS: Seq[Long],
+  private[operators] def joinedSnapshotAt(cat: GraftCatalog,
+      cs: ChainSpec, vF: Long, vS: Seq[Long],
       tableFilter: String => Column = _ => lit(true)): DataFrame =
     cs.sides.zipWithIndex.foldLeft(
         factFiltered(cs, cat.snapshotUpTo(cs.fact, vF)
@@ -214,14 +212,15 @@ object MaterializeJoin {
       : String =
     if (parents(i) == -1) cs.fact else cs.sides(parents(i)).table
 
-  private def validate(cat: GraftCatalog, cs: ChainSpec,
+  /** The join-only checks of [[Materialize.build]]: TTL-free tables,
+    * join keys present, a tree-shaped join graph, outer-join and WHERE
+    * shapes, no ambiguous column, every group and measure column in the
+    * joined schema. */
+  private[operators] def validate(cat: GraftCatalog, cs: ChainSpec,
       groupCols: Seq[String], measures: Seq[String],
-      grains: Seq[(String, String)] = Seq.empty): Unit = {
-    require(cs.sides.nonEmpty, "a join MV needs at least one side")
-    requireNoTtl(cat, cs.fact)
-    val allKeys = cs.sides.flatMap(_.keys).toSet
+      grains: Seq[(String, String)]): Unit = {
+    cs.tables.foreach(requireNoTtl(cat, _))
     cs.sides.foreach { s =>
-      requireNoTtl(cat, s.table)
       val sf = cat.spec(s.table).schema.fieldNames.toSeq
       s.keys.foreach(k => require(sf.contains(k),
         s"join key '$k' must exist in '${s.table}'"))
@@ -256,7 +255,7 @@ object MaterializeJoin {
     // snowflake-ambiguity case (the fact carrying a column named like
     // a side-on-side key) — all of which otherwise surfaced as an
     // ambiguous-column analysis error deep inside the first refresh
-    val tableCols = (cs.fact +: cs.sides.map(_.table))
+    val tableCols = cs.tables
       .map(t => t -> cat.spec(t).schema.fieldNames.toSeq)
     val legitHolders: Map[String, Set[String]] =
       cs.sides.zipWithIndex.flatMap { case (s, i) =>
@@ -333,67 +332,17 @@ object MaterializeJoin {
         "the key")
   }
 
-  /** Full build: aggregate the joined current snapshots, persist,
-    * record EVERY table's change-log high-water mark. */
-  /** `buckets > 0` lays the state out BUCKET-MANIFESTED exactly like
-    * [[Materialize.build]]'s `buckets`: groups route to
-    * `pmod(xxhash64(groupCols), B)` partition dirs, the meta carries a
-    * per-bucket manifest, and each refresh reads + rewrites ONLY the
-    * delta-touched buckets — the single-dir layout rewrites the whole
-    * O(groups) state per refresh, which at a billion-group 100 TB join
-    * MV dwarfs the delta-sized fold. */
-  def build(cat: GraftCatalog, cs: ChainSpec, groupCols: Seq[String],
-      measures: Seq[String], path: String,
-      sketches: Seq[(String, Int)] = Seq.empty,
-      topks: Seq[(String, Int)] = Seq.empty,
-      grainExprs: Seq[(String, String)] = Seq.empty,
-      buckets: Int = 0)
-      : (Long, Seq[Long]) = Materialize.underPathLock(path) {
-    val spark = cat.session
-    validate(cat, cs, groupCols,
-      measures ++ sketches.map(_._1) ++ topks.map(_._1), grainExprs)
-    // sample every mark FIRST, then sweep and aggregate AS OF the
-    // marks: a write landing on any table mid-build is excluded from
-    // the state and from the recorded high-water, so the first refresh
-    // folds it exactly once. The marks are the tables' VERSION
-    // COUNTERS, not a log scan: O(1) to sample, and — unlike the log's
-    // max — a counter moves on EVERY write including one that lands
-    // zero rows (a no-match DELETE), so the freshness probe `meta
-    // marks == counters` can never stick false on an empty write. As
-    // an upper version bound the counter equals the log max (no row
-    // carries a version above it).
-    val vF = cat.currentVersion(cs.fact)
-    val vS = cs.sides.map(s => cat.currentVersion(s.table))
-    // contract sweep over the FULL history up to the marks: a
-    // pre-build unsafe key mutation would corrupt every future
-    // prefiltered read
+  /** The build-time contract sweep of [[Materialize.build]]: every
+    * declared-immutable key over its table's FULL history up to the
+    * build's `marks` (aligned with `cs.tables`) — a pre-build unsafe
+    * key mutation would corrupt every future prefiltered read. A chain
+    * with no sides declares nothing. */
+  private[operators] def requireImmutableUpTo(cat: GraftCatalog,
+      cs: ChainSpec, marks: Seq[Long]): Unit =
     declaredImmutable(cat, cs).foreach { case (t, ks) =>
       requireImmutable(cat, t, ks, sinceV = -1L,
-        uptoV = if (t == cs.fact) vF
-          else vS(cs.sides.indexWhere(_.table == t)))
+        uptoV = marks(cs.tables.indexOf(t)))
     }
-    require(buckets >= 0, s"buckets must be >= 0, got $buckets")
-    require(buckets == 0 || !groupCols.contains("__b"),
-      "bucketed state reserves the __b column name")
-    val agg = Materialize.aggregate(
-      Materialize.withGrains(joinedSnapshotAt(cat, cs, vF, vS),
-        grainExprs),
-      groupCols, measures, sketches, topks)
-    // flip-don't-overwrite: same naming discipline as Materialize
-    val nd = s"state_v${vF}_${vS.mkString("_")}"
-    val bucketDirs =
-      Materialize.writeState(agg, groupCols, buckets, path, nd)
-    MvMeta.write(spark, path, MvMeta(groupCols, measures, nd, grainExprs,
-      None, sketches, topks, buckets, bucketDirs, MvMeta.Join(cs, vF, vS)))
-    (vF, vS)
-  }
-
-  /** Binary sugar for [[build]]. */
-  def build(cat: GraftCatalog, js: JoinSpec, groupCols: Seq[String],
-      measures: Seq[String], path: String): (Long, Long) = {
-    val (vF, vS) = build(cat, js.chain, groupCols, measures, path)
-    (vF, vS.head)
-  }
 
   /** The serving joins of a join MV's registration
     * ([[Materialize.registerForRewrite]]), so
@@ -630,8 +579,7 @@ object MaterializeJoin {
     * .PhoenixSql]]. */
   def expireBefore(cat: GraftCatalog, path: String, column: String,
       cutoff: Column): RefreshReport = {
-    val cs = MvMeta.read(cat.session, path).join.chain
-    val holder = (cs.fact +: cs.sides.map(_.table))
+    val holder = MvMeta.read(cat.session, path).tables
       .find(t => cat.spec(t).schema.fieldNames.contains(column))
       .getOrElse(throw new IllegalArgumentException(
         s"expireBefore: no chain table of the MV at $path carries " +
@@ -650,8 +598,7 @@ object MaterializeJoin {
       m: MvMeta): RefreshReport = {
     val spark = cat.session
     val MvMeta.Join(cs, lastVF, lastVS) = m.join
-    requireNoTtl(cat, cs.fact)
-    cs.sides.foreach(s => requireNoTtl(cat, s.table))
+    cs.tables.foreach(requireNoTtl(cat, _))
     val MvMeta(groupCols, measures, _, grains, _, sketches, topks,
       buckets, _, _) = m
     // a grain expression (date_trunc et al.) is evaluated under the
@@ -677,11 +624,8 @@ object MaterializeJoin {
     // keeps bounded reads exact, so it deliberately does NOT trip this
     val compacted = floorF > lastVF ||
       sideMarks.map(_._2).zip(lastVS).exists { case (fl, lv) => fl > lv }
-    if (compacted || grainTzChanged) {
-      val (vF, vS) = build(cat, cs, groupCols, measures, path, sketches,
-        topks, grains, buckets)
-      return RefreshReport(vF +: vS, rebuildRan = true)
-    }
+    if (compacted || grainTzChanged)
+      return Materialize.rebuild(cat, path, m, Materialize.NoDerive)
 
     // each delta / accumulated leg is read SEVERAL times (its zone
     // bound, its distinct-key set, the join itself, and the two-pass
@@ -1093,7 +1037,7 @@ object MaterializeJoin {
     val allKeys = cs.sides.flatMap(_.keys).toSet
     val pushes: Map[String, Column] =
       if (colVals.isEmpty) Map.empty
-      else (cs.fact +: cs.sides.map(_.table)).flatMap { t =>
+      else cs.tables.flatMap { t =>
         val fieldsT = cat.spec(t).schema.fieldNames.toSet
         val attrs = plainCols.filter(c =>
           fieldsT.contains(c) && !allKeys.contains(c))

@@ -5,11 +5,12 @@ import MaterializeJoin.{ChainSpec, SideSpec}
 
 /** The one-row MV meta pointer, typed: what a state aggregates, where
   * it lives, which tables it folds and the fold marks it covers. One
-  * codec serves both MV kinds — [[Materialize]] (one table) and
-  * [[MaterializeJoin]] (a join chain) share the common fields, the
-  * folded [[tables]] and their [[marks]], and differ only in
-  * [[MvMeta.Kind]], which only `graft.operators` reads: every other
-  * caller addresses an MV by its path alone.
+  * codec serves both MV kinds: a single-table MV is the chain with no
+  * sides, so both expose their definition as [[chain]] (what a
+  * rebuild passes back to [[Materialize.build]]), the folded [[tables]]
+  * and their [[marks]]. They differ only in [[MvMeta.Kind]] — the
+  * per-kind fold state — which only `graft.operators` reads: every
+  * other caller addresses an MV by its path alone.
   *
   * The on-disk layout is the historical one: the same column names,
   * order and types per kind (the single-table layout last gained
@@ -38,16 +39,22 @@ private[graft] final case class MvMeta(
     bucketDirs: Seq[String],
     kind: MvMeta.Kind) {
 
-  /** The tables this state folds, fact first. A single-table layout
-    * older than the `table` column names none, so nothing can address
-    * it by path: it refuses. */
-  def tables: Seq[String] = kind match {
-    case MvMeta.Single(_, _, _, _, _, _, Some(t)) => Seq(t)
+  /** The MV's definition as [[Materialize.build]] takes it: a join
+    * MV's chain, or a single-table MV's `ChainSpec(table)` carrying its
+    * WHERE as `factFilterSql`. A single-table layout older than the
+    * `table` column names no table, so nothing can address it by path:
+    * it refuses. */
+  def chain: ChainSpec = kind match {
+    case MvMeta.Single(_, _, _, _, _, filterSql, Some(t)) =>
+      ChainSpec(t, factFilterSql = filterSql)
     case _: MvMeta.Single => throw new IllegalStateException(
       "this MV meta predates the `table` column, so its base table is " +
         "unknown — rebuild the MV with Materialize.build")
-    case j: MvMeta.Join => j.chain.fact +: j.chain.sides.map(_.table)
+    case j: MvMeta.Join => j.chain
   }
+
+  /** The tables this state folds, fact first. */
+  def tables: Seq[String] = chain.tables
 
   /** The folded version marks, aligned with [[tables]]. */
   def marks: Seq[Long] = kind match {
@@ -93,7 +100,7 @@ private[graft] object MvMeta {
 
   /** Single-table part. `refreshTs`/`ttlAtRefresh` are `None` only on
     * a legacy layout, which refresh answers with a rebuild; `table` is
-    * `None` only on a layout older than that column (see [[tables]]).
+    * `None` only on a layout older than that column (see [[chain]]).
     * @param lastVersion the folded high-water mark
     * @param refreshTs the wall-clock refresh point (TTL expiry low-water
     *   mark of the next refresh)
@@ -101,8 +108,9 @@ private[graft] object MvMeta {
     *   none)
     * @param dimFp per-dim [[Materialize.StarDerive]] fingerprints
     * @param dimPin the pinned dim versions, for discoverability
-    * @param filterSql the WHERE predicate of a filtered MV
-    * @param table the folded base table */
+    * @param filterSql the WHERE predicate of a filtered MV ([[chain]]'s
+    *   `factFilterSql`)
+    * @param table the folded base table ([[chain]]'s `fact`) */
   final case class Single(lastVersion: Long, refreshTs: Option[Long],
       ttlAtRefresh: Option[Long], dimFp: Seq[Long], dimPin: String,
       filterSql: Option[String], table: Option[String] = None)

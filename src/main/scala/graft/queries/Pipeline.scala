@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
 import graft.operators.{Curation, Dedup, FuzzyJoin, Graph, Multimodal,
   Similarity, Skew, TextAnalysis}
 
@@ -74,9 +75,9 @@ object Pipeline {
       cat.refreshSnapshotCache("jl3")
       cat.refreshSnapshotCache("jo3")
       val mv = wh + "/mvjoin"
-      graft.operators.MaterializeJoin.build(cat,
-        graft.operators.MaterializeJoin.JoinSpec("jl3", "jo3",
-          Seq("okey"), leftKeysImmutable = true),
+      graft.operators.Materialize.build(cat,
+        ChainSpec("jl3", Seq(SideSpec("jo3", Seq("okey"),
+          factKeysImmutable = true))),
         Seq("priority"), Seq("qty"), mv)
       graft.operators.Materialize.registerForRewrite(cat, mv)
       (px, wh, mv)
@@ -111,7 +112,7 @@ object Pipeline {
       cat.refreshSnapshotCache("cl5")
       cat.refreshSnapshotCache("cc5")
       val mv = wh + "/mvchain5"
-      graft.operators.MaterializeJoin.build(cat,
+      graft.operators.Materialize.build(cat,
         graft.operators.MaterializeJoin.ChainSpec("co5", Seq(
           graft.operators.MaterializeJoin.SideSpec("cl5", Seq("okey"),
             sideKeysImmutable = true),
@@ -875,7 +876,7 @@ object Pipeline {
         .select($"doc_id", $"source", $"n_chars")
       cat.upsert("d", docs.where($"doc_id" < 300))
       val mv = wh + "/mv"
-      graft.operators.Materialize.build(cat, "d",
+      graft.operators.Materialize.build(cat, ChainSpec("d"),
         Seq("source"), Seq("n_chars"), mv)
       cat.upsert("d", docs.where($"doc_id" >= 300 && $"doc_id" < 380))
       cat.upsert("d", docs.where($"doc_id" < 40)
@@ -908,7 +909,7 @@ object Pipeline {
         .select($"doc_id", $"source", $"n_chars")
       cat.upsert("db", docs.where($"doc_id" < 250))
       val mv = wh + "/mvb"
-      graft.operators.Materialize.build(cat, "db",
+      graft.operators.Materialize.build(cat, ChainSpec("db"),
         Seq("source"), Seq("n_chars"), mv, buckets = 8)
       cat.upsert("db", docs.where($"doc_id" >= 250 && $"doc_id" < 330))
       cat.upsert("db", docs.where($"doc_id" < 30)
@@ -958,7 +959,7 @@ object Pipeline {
       val slice = orders.where($"o_orderkey" % 8 < 3)
       cat.upsert("fo", slice.where($"o_orderkey" % 8 < 2))
       val mv = wh + "/mvstar"
-      graft.operators.Materialize.build(cat, "fo",
+      graft.operators.Materialize.build(cat, ChainSpec("fo"),
         Seq("segment"), Seq("price"), mv, buckets = 16, derive = derive)
       cat.upsert("fo", slice.where($"o_orderkey" % 8 === 2))
       cat.upsert("fo", slice.where($"o_orderkey" % 100 === 1)
@@ -1004,7 +1005,7 @@ object Pipeline {
       val slice = orders.where($"o_orderkey" % 16 < 2)
       cat.upsert("fs", slice.where($"o_orderkey" % 16 === 0))
       val mv = wh + "/mvscd"
-      graft.operators.Materialize.build(cat, "fs",
+      graft.operators.Materialize.build(cat, ChainSpec("fs"),
         Seq("segment"), Seq("price"), mv, buckets = 8, derive = pinned)
       // live dim churn BETWEEN refreshes — invisible to the pinned MV
       cat.upsert("dc", Tables.t(s, dir, "customer")
@@ -1057,7 +1058,7 @@ object Pipeline {
           Seq("cnation" -> "n_nationkey"), Seq("nation_name"))))
       cat.upsert("fm", slice.where($"o_orderkey" % 16 === 14))
       val mv = wh + "/mvmulti"
-      graft.operators.Materialize.build(cat, "fm",
+      graft.operators.Materialize.build(cat, ChainSpec("fm"),
         Seq("segment", "nation_name"), Seq("price"), mv, buckets = 16,
         derive = derive)
       cat.upsert("fm", slice.where($"o_orderkey" % 16 === 15))
@@ -1180,7 +1181,7 @@ object Pipeline {
         .select($"doc_id", $"source", $"n_chars"))
       cat.refreshSnapshotCache("md")
       val mv = wh + "/mvsql"
-      graft.operators.Materialize.build(cat, "md",
+      graft.operators.Materialize.build(cat, ChainSpec("md"),
         Seq("source"), Seq("n_chars"), mv)
       graft.operators.Materialize.registerForRewrite(cat, mv)
       val q = px.execute("SELECT source, COUNT(*) AS cnt, " +
@@ -1225,7 +1226,7 @@ object Pipeline {
         cat.snapshot("dc2"),
         keys = Seq("o_custkey" -> "c_custkey"), attrs = Seq("c_mktsegment"))
       val mv = wh + "/mvstarsql"
-      graft.operators.Materialize.build(cat, "fo2",
+      graft.operators.Materialize.build(cat, ChainSpec("fo2"),
         Seq("c_mktsegment"), Seq("price"), mv, derive = derive)
       graft.operators.Materialize.registerForRewrite(cat, mv,
         dims = Seq(graft.plans.GraftAggViews.DimJoinDef(
@@ -1337,9 +1338,9 @@ object Pipeline {
         .select($"event_id", $"event_type", $"ts", $"user_id")
       cat.upsert("e", ev.where($"event_id" % 5 =!= 0))
       val mv = wh + "/mv"
-      graft.operators.Materialize.build(cat, "e",
+      graft.operators.Materialize.build(cat, ChainSpec("e"),
         Seq("event_type", "day"), Seq("user_id"), mv,
-        grainExprs = Seq("day" -> "date_trunc('DAY', ts)"))
+        grains = Seq("day" -> "date_trunc('DAY', ts)"))
       cat.upsert("e", ev.where($"event_id" % 5 === 0))
       cat.upsert("e", ev.where($"event_id" % 7 === 0)
         .withColumn("ts", $"ts" + expr("INTERVAL 1 DAY")))
@@ -1374,7 +1375,7 @@ object Pipeline {
         .select($"event_id", $"event_type", $"user_id")
       cat.upsert("e", ev.where($"event_id" % 4 =!= 0))
       val mv = wh + "/mv"
-      graft.operators.Materialize.build(cat, "e", Seq("event_type"),
+      graft.operators.Materialize.build(cat, ChainSpec("e"), Seq("event_type"),
         Seq("user_id"), mv, sketches = Seq("user_id" -> (1 << 17)))
       cat.upsert("e", ev.where($"event_id" % 4 === 0))
       graft.operators.Materialize.refresh(cat, mv)
@@ -1413,7 +1414,7 @@ object Pipeline {
         .select($"event_id", $"event_type", $"user_id")
       cat.upsert("e", ev.where($"event_id" % 4 =!= 0))
       val mv = wh + "/mv"
-      graft.operators.Materialize.build(cat, "e", Seq("event_type"),
+      graft.operators.Materialize.build(cat, ChainSpec("e"), Seq("event_type"),
         Seq("user_id"), mv, topks = Seq("user_id" -> 8192))
       cat.upsert("e", ev.where($"event_id" % 4 === 0))
       if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
@@ -1471,9 +1472,8 @@ object Pipeline {
       cat.upsert("jl", li)
       cat.upsert("jo", ord.where($"okey" % 32 < 2))
       val mv = wh + "/mvj"
-      val js = graft.operators.MaterializeJoin.JoinSpec(
-        "jl", "jo", Seq("okey"))
-      graft.operators.MaterializeJoin.build(cat, js,
+      val js = ChainSpec("jl", Seq(SideSpec("jo", Seq("okey"))))
+      graft.operators.Materialize.build(cat, js,
         Seq("priority"), Seq("qty"), mv)
       cat.upsert("jo", ord.where($"okey" % 32 === 2))
       if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
@@ -1523,12 +1523,12 @@ object Pipeline {
       cat.upsert("jl6", li)
       cat.upsert("jo6", ord.where($"okey" % 32 < 2))
       val mv = wh + "/mvjtg"
-      graft.operators.MaterializeJoin.build(cat,
+      graft.operators.Materialize.build(cat,
         graft.operators.MaterializeJoin.ChainSpec("jl6", Seq(
           graft.operators.MaterializeJoin.SideSpec("jo6", Seq("okey"),
             factKeysImmutable = true))),
         Seq("priority", "mon"), Seq("qty"), mv,
-        grainExprs = Seq("mon" -> "date_trunc('MONTH', odate)"))
+        grains = Seq("mon" -> "date_trunc('MONTH', odate)"))
       cat.upsert("jo6", ord.where($"okey" % 32 === 2))
       if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
         throw new IllegalStateException(
@@ -1572,12 +1572,12 @@ object Pipeline {
         .select($"o_orderkey".as("okey"),
           $"o_orderpriority".as("priority")))
       val mv = wh + "/mvret"
-      graft.operators.MaterializeJoin.build(cat,
+      graft.operators.Materialize.build(cat,
         graft.operators.MaterializeJoin.ChainSpec("lr", Seq(
           graft.operators.MaterializeJoin.SideSpec("orr", Seq("okey"),
             factKeysImmutable = true))),
         Seq("mon", "priority"), Seq("qty"), mv,
-        grainExprs = Seq("mon" -> "date_trunc('MONTH', odate)"))
+        grains = Seq("mon" -> "date_trunc('MONTH', odate)"))
       // roll 1: expire the oldest window (API helper), with churn that
       // updates survivors AND resurrects some expired PKs
       if (graft.operators.MaterializeJoin.expireBefore(cat, mv, "odate",
@@ -1632,7 +1632,7 @@ object Pipeline {
       val cs = graft.operators.MaterializeJoin.ChainSpec("jl4", Seq(
         graft.operators.MaterializeJoin.SideSpec("jo4", Seq("okey"),
           factKeysImmutable = true)))
-      graft.operators.MaterializeJoin.build(cat, cs,
+      graft.operators.Materialize.build(cat, cs,
         Seq("priority"), Seq("qty"), mv,
         sketches = Seq("skey" -> 131072))
       cat.upsert("jo4", ord.where($"okey" % 32 === 2))
@@ -1690,7 +1690,7 @@ object Pipeline {
           sideKeysImmutable = true),
         graft.operators.MaterializeJoin.SideSpec("cc", Seq("ckey"),
           factKeysImmutable = true)))
-      graft.operators.MaterializeJoin.build(cat, cs,
+      graft.operators.Materialize.build(cat, cs,
         Seq("seg"), Seq("qty"), mv)
       cat.upsert("co", ord.where($"okey" % 32 === 2))
       if (graft.operators.Materialize.refresh(cat, mv).recomputeRan)
@@ -1739,9 +1739,8 @@ object Pipeline {
       cat.upsert("jl5", li)
       cat.upsert("jo5", ord.where($"okey" % 32 < 2)) // %32=2 dangles
       val mv = wh + "/mvjl"
-      graft.operators.MaterializeJoin.build(cat,
-        graft.operators.MaterializeJoin.JoinSpec("jl5", "jo5",
-          Seq("okey"), leftOuter = true),
+      graft.operators.Materialize.build(cat,
+        ChainSpec("jl5", Seq(SideSpec("jo5", Seq("okey"))), leftOuter = true),
         Seq("priority"), Seq("qty"), mv)
       // dangling → matched: the missing orders arrive
       cat.upsert("jo5", ord.where($"okey" % 32 === 2))
@@ -1789,9 +1788,8 @@ object Pipeline {
       cat.upsert("jl8", li)
       cat.upsert("jo8", ord.where($"okey" % 32 =!= 2))
       val mv = wh + "/mvjf"
-      graft.operators.MaterializeJoin.build(cat,
-        graft.operators.MaterializeJoin.JoinSpec("jl8", "jo8",
-          Seq("okey"), fullOuter = true),
+      graft.operators.Materialize.build(cat,
+        ChainSpec("jl8", Seq(SideSpec("jo8", Seq("okey"))), fullOuter = true),
         Seq("priority"), Seq("qty"), mv)
       // dangling facts gain their orders; some lineitems die under
       // their orders (matched order -> side-dangling)
@@ -1851,7 +1849,7 @@ object Pipeline {
       cat.upsert("fo9", ord.where($"okey" % 32 =!= 2))
       cat.upsert("fp9", prt)
       val mv = wh + "/mvfc"
-      graft.operators.MaterializeJoin.build(cat,
+      graft.operators.Materialize.build(cat,
         graft.operators.MaterializeJoin.ChainSpec("fl9", Seq(
           graft.operators.MaterializeJoin.SideSpec("fo9", Seq("okey")),
           graft.operators.MaterializeJoin.SideSpec("fp9", Seq("pkey"))),
@@ -1911,7 +1909,7 @@ object Pipeline {
         .select($"n_nationkey".cast("long").as("nkey"),
           $"n_name".as("nname")))
       val mv = wh + "/mvsnow"
-      graft.operators.MaterializeJoin.build(cat,
+      graft.operators.Materialize.build(cat,
         graft.operators.MaterializeJoin.ChainSpec("co6", Seq(
           graft.operators.MaterializeJoin.SideSpec("cc6", Seq("ckey")),
           graft.operators.MaterializeJoin.SideSpec("nn6", Seq("nkey")))),
@@ -2208,7 +2206,7 @@ object Pipeline {
           $"n_name".as("nname")))
       Seq("co9", "cc9", "nn9").foreach(cat.refreshSnapshotCache)
       val mv = wh + "/mvsnow9"
-      graft.operators.MaterializeJoin.build(cat,
+      graft.operators.Materialize.build(cat,
         graft.operators.MaterializeJoin.ChainSpec("co9", Seq(
           graft.operators.MaterializeJoin.SideSpec("cc9", Seq("ckey")),
           graft.operators.MaterializeJoin.SideSpec("nn9", Seq("nkey")))),
@@ -2252,7 +2250,7 @@ object Pipeline {
         .select($"c_custkey".as("ckey"), $"c_mktsegment".as("seg")))
       Seq("fa0", "fb0").foreach(cat.refreshSnapshotCache)
       val mv = wh + "/mvfull0"
-      graft.operators.MaterializeJoin.build(cat,
+      graft.operators.Materialize.build(cat,
         graft.operators.MaterializeJoin.ChainSpec("fa0", Seq(
           graft.operators.MaterializeJoin.SideSpec("fb0", Seq("ckey"))),
           fullOuter = true),

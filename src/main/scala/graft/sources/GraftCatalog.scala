@@ -1021,7 +1021,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * SOUND ONLY when `cond` references columns whose values are
     * constant across every version of a PK (PK columns always qualify;
     * other columns only under a caller-declared immutability contract,
-    * e.g. [[graft.operators.MaterializeJoin.JoinSpec]]'s immutable join
+    * e.g. [[graft.operators.MaterializeJoin.SideSpec]]'s immutable join
     * keys): then the filter keeps ALL of a PK's history or NONE of it,
     * so the per-PK winner — tombstones included (deletes log the full
     * pre-image row, so a tombstone carries the same immutable values) —

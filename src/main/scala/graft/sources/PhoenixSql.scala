@@ -84,9 +84,10 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     else if (up.startsWith("SHOW CREATE TABLE")) showCreateTable(s)
     else if (up.startsWith("SHOW MATERIALIZED VIEWS")) {
       import spark.implicits._
-      mvDefs.toSeq.sortBy(_._1).map { case (n, d) =>
-        (n, d.tables.mkString(","),
-          graft.operators.MvMeta.read(spark, d.path).kindName, d.path)
+      mvDefs.toSeq.sorted.map { n =>
+        val path = catalog.mvPath(n)
+        val meta = graft.operators.MvMeta.read(spark, path)
+        (n, meta.tables.mkString(","), meta.kindName, path)
       }.toDF("name", "tables", "kind", "state_path")
     }
     else if (up.startsWith("SHOW ")) show(s)
@@ -234,7 +235,8 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
           // schema-level CASCADE subsumes the per-table one: MVs over
           // the dropped tables tear down with them
           catalog.mvDependents(t).foreach { p =>
-            mvDefs.filterInPlace((_, d) => d.path.stripSuffix("/") != p)
+            mvDefs.filterInPlace(n =>
+              catalog.mvPath(n).stripSuffix("/") != p)
             catalog.dropMv(p)
           }
           catalog.dropTable(t); tableNames -= t
@@ -972,8 +974,9 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
   // logs into the state, and the registration lets AggRewriteRule
   // serve matching SELECTs from KBs of state instead of fact scans) --
 
-  private case class MvDef(path: String, tables: Seq[String])
-  private val mvDefs = scala.collection.mutable.Map[String, MvDef]()
+  // DDL-created MV names: each MV's state lives at catalog.mvPath(name)
+  // and its meta names the tables it folds (a memoized read, no job)
+  private val mvDefs = scala.collection.mutable.Set[String]()
 
   private def stripQual(c: String): String = {
     val bare = c.trim.replaceAll("\"", "")
@@ -995,9 +998,11 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     * buckets); `IMMUTABLE KEYS (k, ...)` declares those join keys
     * value-immutable per PK on both tables of their edge (enforced by
     * the maintenance layer; bounds delta reads below the collapse).
-    * `WHERE` (single-table MVs) builds a FILTERED state — the
-    * predicate rides the meta through every refresh, and the rewrite
-    * serves only queries carrying the same conjuncts. State lands
+    * `WHERE` builds a FILTERED state (over a join, a predicate on
+    * fact columns) — the predicate rides the meta through every
+    * refresh, and the rewrite serves only queries carrying the same
+    * conjuncts. One [[graft.operators.Materialize.build]] serves every
+    * shape: no JOIN is the chain with no sides. State lands
     * under the catalog warehouse's `_mv/<name>` and the MV is
     * immediately registered for rewrite (with the freshness probe),
     * so the SAME SELECT through this front-end serves from the
@@ -1117,53 +1122,40 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     }
     require(groupCols.nonEmpty, "a materialized view needs at least " +
       "one group column (ungrouped rollups: keep the fact's aggregate)")
+    require(immutableKeys.subsetOf(joins.flatMap(_.keys).toSet),
+      s"IMMUTABLE KEYS ${immutableKeys.mkString("(", ", ", ")")} " +
+        "must all be join keys of this view")
+    val leftCount = joins.count(_.left)
+    val fullCount = joins.count(_.full)
+    // WHERE over a join MV: fact-column predicates only, INNER/LEFT
+    // chains only — enforced by MaterializeJoin.validate
+    require((leftCount == 0 || leftCount == joins.size) &&
+        (fullCount == 0 || fullCount == joins.size),
+      "mixed join types are not supported in one materialized " +
+        "view (the maintained state is all-inner, all-left, or " +
+        "all-full)")
     val path = catalog.mvPath(name)
-    if (joins.isEmpty) {
-      require(immutableKeys.isEmpty,
-        "IMMUTABLE KEYS declares join-key immutability — it needs a " +
-          "JOIN in the materialized view")
-      graft.operators.Materialize.build(catalog, fact,
-        groupCols.toSeq, measures.distinct.toSeq, path,
-        grainExprs = grains.toSeq, sketches = sketches.toSeq,
-        buckets = buckets, topks = topks.toSeq,
-        filterSql = whereSql)
-    } else {
-      require(immutableKeys.subsetOf(joins.flatMap(_.keys).toSet),
-        s"IMMUTABLE KEYS ${immutableKeys.mkString("(", ", ", ")")} " +
-          "must all be join keys of this view")
-      val leftCount = joins.count(_.left)
-      val fullCount = joins.count(_.full)
-      // WHERE over a join MV: fact-column predicates only, INNER/LEFT
-      // chains only — enforced below (MaterializeJoin.validate throws
-      // on FULL and on non-fact references)
-      require((leftCount == 0 || leftCount == joins.size) &&
-          (fullCount == 0 || fullCount == joins.size),
-        "mixed join types are not supported in one materialized " +
-          "view (the maintained state is all-inner, all-left, or " +
-          "all-full)")
-      graft.operators.MaterializeJoin.build(catalog,
-        graft.operators.MaterializeJoin.ChainSpec(fact,
-          joins.map(j => graft.operators.MaterializeJoin.SideSpec(
-            j.table, j.keys,
-            sideKeysImmutable = j.keys.forall(immutableKeys.contains),
-            factKeysImmutable = j.keys.forall(immutableKeys.contains))),
-          leftOuter = leftCount > 0, fullOuter = fullCount > 0,
-          factFilterSql = whereSql),
-        groupCols.toSeq, measures.distinct.toSeq, path,
-        sketches = sketches.toSeq, topks = topks.toSeq,
-        grainExprs = grains.toSeq, buckets = buckets)
-    }
+    val cs = graft.operators.MaterializeJoin.ChainSpec(fact,
+      joins.map(j => graft.operators.MaterializeJoin.SideSpec(
+        j.table, j.keys,
+        sideKeysImmutable = j.keys.forall(immutableKeys.contains),
+        factKeysImmutable = j.keys.forall(immutableKeys.contains))),
+      leftOuter = leftCount > 0, fullOuter = fullCount > 0,
+      factFilterSql = whereSql)
+    graft.operators.Materialize.build(catalog, cs,
+      groupCols.toSeq, measures.distinct.toSeq, path,
+      grains = grains.toSeq, sketches = sketches.toSeq,
+      topks = topks.toSeq, buckets = buckets)
     // every shape registers — single-table, INNER/LEFT/FULL join each
     // carry their own serving contract (a FULL MV serves only FULL
     // OUTER queries, via the fullState dims)
     graft.operators.Materialize.registerForRewrite(catalog, path)
-    mvDefs(name) = MvDef(path, fact +: joins.map(_.table))
+    mvDefs += name
     // serving needs pure cache scans of every involved table — bring
     // the caches current so the NEXT select serves (ROW_TIMESTAMP
     // tables refuse the cache; their MVs maintain but don't serve)
-    mvDefs(name).tables.foreach(t =>
-      scala.util.Try(catalog.refreshSnapshotCache(t)))
-    dirty ++= mvDefs(name).tables.filter(tableNames.contains)
+    cs.tables.foreach(t => scala.util.Try(catalog.refreshSnapshotCache(t)))
+    dirty ++= cs.tables.filter(tableNames.contains)
     spark.emptyDataFrame
   }
 
@@ -1179,17 +1171,18 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
         .findFirstMatchIn(s)
         .getOrElse(throw new IllegalArgumentException(s"cannot parse: $s"))
         .group(1))
-    val d = mvDefs.getOrElse(name, throw new IllegalArgumentException(
-      s"unknown materialized view $name"))
-    val r = graft.operators.Materialize.refresh(catalog, d.path)
+    if (!mvDefs.contains(name)) throw new IllegalArgumentException(
+      s"unknown materialized view $name")
+    val path = catalog.mvPath(name)
+    val r = graft.operators.Materialize.refresh(catalog, path)
     // flip-don't-overwrite leaves one superseded state dir per refresh
     // — reclaim it here (safe under the front-end's single-statement
     // contract: no reader of a PAST state is in flight between
     // statements), so a DDL-managed MV never needs a manual vacuum
-    graft.operators.Materialize.vacuum(spark, d.path)
-    d.tables.foreach(t =>
-      scala.util.Try(catalog.refreshSnapshotCache(t)))
-    dirty ++= d.tables.filter(tableNames.contains)
+    graft.operators.Materialize.vacuum(spark, path)
+    val tables = graft.operators.MvMeta.read(spark, path).tables
+    tables.foreach(t => scala.util.Try(catalog.refreshSnapshotCache(t)))
+    dirty ++= tables.filter(tableNames.contains)
     Seq((r.rebuildRan, r.recomputeRan, r.affectedGroups, r.bucketsTouched,
       r.bucketsTotal)).toDF("rebuild_ran", "recompute_ran",
       "affected_groups", "buckets_touched", "buckets_total")
@@ -1202,17 +1195,13 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       "(IF\\s+EXISTS\\s+)?([\\w.\"]+)$").r.findFirstMatchIn(s)
       .getOrElse(throw new IllegalArgumentException(s"cannot parse: $s"))
     val name = resolveTable(m.group(2))
-    mvDefs.remove(name) match {
-      case None =>
-        if (m.group(1) != null) spark.emptyDataFrame
-        else throw new IllegalArgumentException(
-          s"unknown materialized view $name")
-      case Some(d) =>
-        // deregisters the rewrite candidate from EVERY table the MV
-        // folds, forgets the drop/compact dependency, deletes the state
-        catalog.dropMv(d.path)
-        spark.emptyDataFrame
-    }
+    if (mvDefs.remove(name))
+      // deregisters the rewrite candidate from EVERY table the MV
+      // folds, forgets the drop/compact dependency, deletes the state
+      catalog.dropMv(catalog.mvPath(name))
+    else if (m.group(1) == null) throw new IllegalArgumentException(
+      s"unknown materialized view $name")
+    spark.emptyDataFrame
   }
 
   private def createView(s: String): DataFrame = {
@@ -1334,8 +1323,8 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       val mvPaths = catalog.mvDependents(name)
       if (mvPaths.nonEmpty && !cascade) {
         val names = mvPaths.map(p =>
-          mvDefs.collectFirst { case (n, d)
-            if d.path.stripSuffix("/") == p => n }.getOrElse(p))
+          mvDefs.find(n => catalog.mvPath(n).stripSuffix("/") == p)
+            .getOrElse(p))
         throw new IllegalArgumentException(
           s"cannot drop table $name: registered materialized views " +
             s"depend on it (${names.mkString(", ")}) — DROP " +
@@ -1346,7 +1335,8 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
           catalog.dropView(v); spark.catalog.dropTempView(v)
         }
         mvPaths.foreach { p =>
-          mvDefs.filterInPlace((_, d) => d.path.stripSuffix("/") != p)
+          mvDefs.filterInPlace(n =>
+            catalog.mvPath(n).stripSuffix("/") != p)
           catalog.dropMv(p)
         }
       }

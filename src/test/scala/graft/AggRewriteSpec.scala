@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Materialize
 import graft.plans.GraftAggViews
+import graft.operators.MaterializeJoin.ChainSpec
 
 /** The materialized-aggregate rewrite: a matching query aggregate must
   * scan the registered state instead of the fact, roll up to coarser
@@ -174,7 +175,7 @@ class AggRewriteSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("f", Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "g", "x"))
     val mvRoot = s"$wh/mv"
-    Materialize.build(cat, "f", Seq("g"), Seq("x"), mvRoot)
+    Materialize.build(cat, ChainSpec("f"), Seq("g"), Seq("x"), mvRoot)
     val base = s"$wh/fact_export"
     cat.snapshot("f").write.mode("overwrite").parquet(base)
     GraftAggViews.register(base,
@@ -210,7 +211,8 @@ class AggRewriteSpec extends AnyFunSuite {
     cat.upsert("fb", Seq((1L, "a", 10L), (2L, "b", 20L))
       .toDF("k", "g", "x"))
     val mvRoot = s"$wh/mv"
-    Materialize.build(cat, "fb", Seq("g"), Seq("x"), mvRoot, buckets = 16)
+    Materialize.build(cat, ChainSpec("fb"), Seq("g"), Seq("x"), mvRoot,
+      buckets = 16)
     val base = s"$wh/fact_export_b"
     cat.snapshot("fb").write.mode("overwrite").parquet(base)
     GraftAggViews.register(base,
@@ -941,7 +943,7 @@ class AggRewriteSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("f", Seq((1L, "a", 7L)).toDF("k", "g", "x"))
     val mvRoot = s"$wh/mv"
-    Materialize.build(cat, "f", Seq("g"), Seq("x"), mvRoot)
+    Materialize.build(cat, ChainSpec("f"), Seq("g"), Seq("x"), mvRoot)
     val facts = s"$wh/fact_export"
     cat.snapshot("f").write.mode("overwrite").parquet(facts)
     GraftAggViews.register(facts,

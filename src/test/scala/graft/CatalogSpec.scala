@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.GraftCatalog
 import graft.streaming.EventStreams
+import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
 
 /** Engine-machinery tests: PK upsert snapshot semantics, delete
   * tombstones, CDC batch + streaming views, streaming windowed aggs.
@@ -783,7 +784,8 @@ class CatalogSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     def actual = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
-    val v0 = Materialize.build(cat, "m", Seq("g"), Seq("x"), path)
+    val Seq(v0) =
+      Materialize.build(cat, ChainSpec("m"), Seq("g"), Seq("x"), path)
     assert(actual == expected)
     // insert-only delta: pure merge, no retraction recompute
     cat.upsert("m", Seq((4L, "b", 5L), (5L, "c", 7L)).toDF("k", "g", "x"))
@@ -834,7 +836,7 @@ class CatalogSpec extends AnyFunSuite {
       (Option.empty[Long], "n", 30L)).toDF("k", "g", "x"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivm_nullpk").toString
-    Materialize.build(cat, "mn", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("mn"), Seq("g"), Seq("x"), path)
     // update the NULL-pk row 30 -> 10: retracts group n's max, so the
     // gate fires and the recompute runs with an affected set whose
     // rows ALL have NULL pks — the zone-prune probe sees min(pk) =
@@ -884,7 +886,8 @@ class CatalogSpec extends AnyFunSuite {
       new java.io.File(s"$path/$dir").listFiles().toSeq
         .map(_.getName).collect {
           case n if n.startsWith("__b=") => n.drop(4).toInt }.toSet
-    Materialize.build(cat, "mb", Seq("g"), Seq("x"), path, buckets = B)
+    Materialize.build(cat, ChainSpec("mb"), Seq("g"), Seq("x"), path,
+      buckets = B)
     assert(actual == expected)
     assert(manifest.count(_.nonEmpty) ==
       Set(bucketOf("a"), bucketOf("b")).size)
@@ -964,7 +967,7 @@ class CatalogSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     def actual = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
-    Materialize.build(cat, "fact", Seq("color"), Seq("x"), path,
+    Materialize.build(cat, ChainSpec("fact"), Seq("color"), Seq("x"), path,
       buckets = 8, derive = derive)
     assert(actual == expected)
     assert(actual.exists(_.head == null),
@@ -1030,7 +1033,7 @@ class CatalogSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     def actual = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
-    Materialize.build(cat, "fact", Seq("color"), Seq("x"), path,
+    Materialize.build(cat, ChainSpec("fact"), Seq("color"), Seq("x"), path,
       buckets = 4, derive = derive)
     assert(actual == expected)
     // stable dim: inserts, a group-move update, a delete all fold green
@@ -1091,7 +1094,7 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("k", "fk", "x"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivm_scd").toString
-    Materialize.build(cat, "fact", Seq("color"), Seq("x"), path,
+    Materialize.build(cat, ChainSpec("fact"), Seq("color"), Seq("x"), path,
       derive = pinnedDerive)
     // live dim churns (the NORMAL state of a dimension) — the pinned
     // snapshot is unaffected, so refresh keeps folding incrementally
@@ -1154,8 +1157,8 @@ class CatalogSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     def actual = Materialize.read(spark, path)
       .collect().map(_.toSeq).toSet
-    Materialize.build(cat, "fact", Seq("color", "size"), Seq("x"), path,
-      buckets = 4, derive = derive)
+    Materialize.build(cat, ChainSpec("fact"), Seq("color", "size"), Seq("x"),
+      path, buckets = 4, derive = derive)
     assert(actual == expected)
     // churn folding through BOTH dims: group-move update + delete
     cat.upsert("fact", Seq((1L, 2L, 20L, 1L), (5L, 1L, 10L, 16L))
@@ -1230,7 +1233,7 @@ class CatalogSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivm_dup").toString
     val ex = intercept[IllegalArgumentException] {
-      Materialize.build(cat, "fact", Seq("color"), Seq("x"), path,
+      Materialize.build(cat, ChainSpec("fact"), Seq("color"), Seq("x"), path,
         derive = StarDerive(dupDim, Seq("fk" -> "dk"), Seq("color")))
     }
     assert(ex.getMessage.contains("not unique"))
@@ -1244,12 +1247,13 @@ class CatalogSpec extends AnyFunSuite {
     val p2 = java.nio.file.Files
       .createTempDirectory("graft_ivm_nested").toString
     val ex2 = intercept[IllegalArgumentException] {
-      Materialize.build(cat, "fs", Seq("g"), Seq("x"), p2, buckets = 4)
+      Materialize.build(cat, ChainSpec("fs"), Seq("g"), Seq("x"), p2,
+        buckets = 4)
     }
     assert(ex2.getMessage.contains("atomic group column"))
     // unbucketed state still supports the nested group (groupBy's own
     // normalization applies end-to-end there)
-    Materialize.build(cat, "fs", Seq("g"), Seq("x"), p2)
+    Materialize.build(cat, ChainSpec("fs"), Seq("g"), Seq("x"), p2)
     assert(Materialize.read(spark, p2).count() == 1)
   }
 
@@ -1266,7 +1270,7 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("k", "g", "u"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivm_stream").toString
-    Materialize.build(cat, "sm", Seq("g"), Seq("u"), path,
+    Materialize.build(cat, ChainSpec("sm"), Seq("g"), Seq("u"), path,
       sketches = Seq("u" -> 4096), buckets = 8)
     // three micro-batch files: inserts, a retracting update, a new group
     val in = java.nio.file.Files
@@ -1314,9 +1318,9 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("ck", "seg"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_jivm_stream").toString
-    MaterializeJoin.build(cat,
-      MaterializeJoin.JoinSpec("sjf", "sjd", Seq("ck"),
-        leftKeysImmutable = true),
+    Materialize.build(cat,
+      ChainSpec("sjf", Seq(SideSpec("sjd", Seq("ck"),
+        factKeysImmutable = true))),
       Seq("seg"), Seq("x"), path)
     // three micro-batches: inserts (one initially dangling ck=40), a
     // retracting measure update, a row for the dim key churned below
@@ -1364,9 +1368,8 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("ljd", Seq((10L, "a")).toDF("ck", "seg"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_ljivm_stream").toString
-    MaterializeJoin.build(cat,
-      MaterializeJoin.JoinSpec("ljf", "ljd", Seq("ck"),
-        leftOuter = true),
+    Materialize.build(cat,
+      ChainSpec("ljf", Seq(SideSpec("ljd", Seq("ck"))), leftOuter = true),
       Seq("seg"), Seq("x"), path)
     val in = java.nio.file.Files
       .createTempDirectory("graft_ljivm_streamin").toString
@@ -1416,9 +1419,8 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("ck", "seg"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_fjivm_stream").toString
-    MaterializeJoin.build(cat,
-      MaterializeJoin.JoinSpec("fjf", "fjd", Seq("ck"),
-        fullOuter = true),
+    Materialize.build(cat,
+      ChainSpec("fjf", Seq(SideSpec("fjd", Seq("ck"))), fullOuter = true),
       Seq("seg"), Seq("x"), path)
     val in = java.nio.file.Files
       .createTempDirectory("graft_fjivm_streamin").toString
@@ -1467,7 +1469,7 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("k", "fk", "x"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivm_starstream").toString
-    Materialize.build(cat, "sf", Seq("color"), Seq("x"), path,
+    Materialize.build(cat, ChainSpec("sf"), Seq("color"), Seq("x"), path,
       buckets = 8, derive = derive)
     val in = java.nio.file.Files
       .createTempDirectory("graft_ivm_starstream_in").toString
@@ -1516,7 +1518,8 @@ class CatalogSpec extends AnyFunSuite {
     def stateDirs: Set[String] =
       new java.io.File(path).listFiles().toSeq.map(_.getName)
         .filter(_.startsWith("state_v")).toSet
-    Materialize.build(cat, "mc", Seq("g"), Seq("x"), path, buckets = 8)
+    Materialize.build(cat, ChainSpec("mc"), Seq("g"), Seq("x"), path,
+      buckets = 8)
     // three refreshes scatter current buckets across several dirs
     cat.upsert("mc", Seq((4L, "a", 5L)).toDF("k", "g", "x"))
     Materialize.refresh(cat, path)
@@ -1550,7 +1553,7 @@ class CatalogSpec extends AnyFunSuite {
     cat2.upsert("ml", Seq((1L, "a", 10L)).toDF("k", "g", "x"))
     val path2 = java.nio.file.Files
       .createTempDirectory("graft_ivm_vac2").toString
-    Materialize.build(cat2, "ml", Seq("g"), Seq("x"), path2)
+    Materialize.build(cat2, ChainSpec("ml"), Seq("g"), Seq("x"), path2)
     cat2.upsert("ml", Seq((2L, "b", 20L)).toDF("k", "g", "x"))
     Materialize.refresh(cat2, path2)
     assert(Materialize.compactState(spark, path2) > 0L)
@@ -1587,7 +1590,8 @@ class CatalogSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivm_bttl").toString
     cat.clock = () => t0 - 4000L
-    Materialize.build(cat, "eb", Seq("g"), Seq("x"), path, buckets = B)
+    Materialize.build(cat, ChainSpec("eb"), Seq("g"), Seq("x"), path,
+      buckets = B)
     // advance past 'exp''s expiry (t0-50s + 60s = t0+10s)
     cat.clock = () => t0 + 20000L
     val r = Materialize.refresh(cat, path)
@@ -1630,8 +1634,8 @@ class CatalogSpec extends AnyFunSuite {
       cat.snapshot("gsb").withColumn("day", expr("date_trunc('DAY', ts)")),
       Seq("day"), Seq("u"), sketches))
     def actual = norm(Materialize.read(spark, path))
-    Materialize.build(cat, "gsb", Seq("day"), Seq("u"), path,
-      grainExprs = grains, sketches = sketches, buckets = 8)
+    Materialize.build(cat, ChainSpec("gsb"), Seq("day"), Seq("u"), path,
+      grains = grains, sketches = sketches, buckets = 8)
     assert(actual == expected)
     // insert-only: sketch union fold, byte-identical to the rebuild
     cat.upsert("gsb", rows(300, 400))
@@ -2014,7 +2018,7 @@ class CatalogSpec extends AnyFunSuite {
     px.execute("UPSERT INTO am VALUES (1, 10), (2, 20), (3, 30)")
     cat.refreshSnapshotCache("am")
     val mv = java.nio.file.Files.createTempDirectory("graft_mv_am").toString
-    Materialize.build(cat, "am", Seq("k"), Seq("x"), mv)
+    Materialize.build(cat, ChainSpec("am"), Seq("k"), Seq("x"), mv)
     Materialize.registerForRewrite(cat, mv)
     val q = "SELECT k, SUM(x) AS sum_x FROM am WHERE k = 1 GROUP BY k"
     def run() = {
@@ -2173,7 +2177,8 @@ class CatalogSpec extends AnyFunSuite {
     for (buckets <- Seq(0, 4)) {
       val states = rowsOf.map { case (t, n) =>
         val path = java.nio.file.Files.createTempDirectory("graft_cm").toString
-        Materialize.build(cat, t, groups, Seq("u"), path, buckets = buckets)
+        Materialize.build(cat, ChainSpec(t), groups, Seq("u"), path,
+          buckets = buckets)
         val built = state(path)
         Materialize.compactState(spark, path)
         val dir = new java.io.File(path, MvMeta.read(spark, path).stateDir)
@@ -2277,7 +2282,7 @@ class CatalogSpec extends AnyFunSuite {
       (4L, "b", 5L), (5L, "b", 50L)).toDF("k", "g", "x"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_gate").toString
-    Materialize.build(cat, "mg", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("mg"), Seq("g"), Seq("x"), path)
     def expected = Materialize
       .aggregate(cat.snapshot("mg"), Seq("g"), Seq("x"))
       .collect().map(_.toSeq).toSet
@@ -2365,7 +2370,8 @@ class CatalogSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_sk").toString
     val sk = Seq("u" -> 1024)
-    Materialize.build(cat, "sk", Seq("g"), Seq("u"), path, sketches = sk)
+    Materialize.build(cat, ChainSpec("sk"), Seq("g"), Seq("u"), path,
+      sketches = sk)
     // byte-level compare incl. the serialized sketch: the incremental
     // fold must be IDENTICAL to a from-scratch aggregate, not just
     // estimate-equivalent (union is order-insensitive by construction)
@@ -2428,7 +2434,8 @@ class CatalogSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_tk").toString
     val tks = Seq("u" -> 64)
-    Materialize.build(cat, "tk", Seq("g"), Seq("x"), path, topks = tks)
+    Materialize.build(cat, ChainSpec("tk"), Seq("g"), Seq("x"), path,
+      topks = tks)
     def canon(r: org.apache.spark.sql.Row) =
       r.toSeq.map { case b: Array[Byte] => b.toSeq; case x => x }
     def expected = Materialize
@@ -2501,7 +2508,7 @@ class CatalogSpec extends AnyFunSuite {
         if (rnd.nextInt(8) == 0) null.asInstanceOf[java.lang.Long]
         else java.lang.Long.valueOf(rnd.nextInt(7).toLong)))
     cat.upsert("mf", randRows(6).toDF("k", "g", "x"))
-    Materialize.build(cat, "mf", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("mf"), Seq("g"), Seq("x"), path)
     for (i <- 1 to 12) {
       rnd.nextInt(3) match {
         case 0 => cat.upsert("mf", randRows(1 + rnd.nextInt(4))
@@ -2537,8 +2544,8 @@ class CatalogSpec extends AnyFunSuite {
       (4L, t("2024-04-10 12:00:00"), 13L)).toDF("id", "ts", "v"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mv_grain").toString
-    Materialize.build(cat, "ev", Seq("day"), Seq("v"), mv,
-      grainExprs = Seq("day" -> "date_trunc('DAY', ts)"))
+    Materialize.build(cat, ChainSpec("ev"), Seq("day"), Seq("v"), mv,
+      grains = Seq("day" -> "date_trunc('DAY', ts)"))
     // delta: an insert, an update that changes v in place, and an
     // update that MOVES the row to a different day (pre-image retracts
     // from 03-01, post lands on 03-05), plus a delete
@@ -2600,8 +2607,8 @@ class CatalogSpec extends AnyFunSuite {
       (2L, t("2024-03-01 15:00:00"), 7L)).toDF("id", "ts", "v"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mv_grain_tz").toString
-    Materialize.build(cat, "evz", Seq("day"), Seq("v"), mv,
-      grainExprs = Seq("day" -> "date_trunc('DAY', ts)"))
+    Materialize.build(cat, ChainSpec("evz"), Seq("day"), Seq("v"), mv,
+      grains = Seq("day" -> "date_trunc('DAY', ts)"))
     cat.upsert("evz",
       Seq((3L, t("2024-03-02 02:00:00"), 11L)).toDF("id", "ts", "v"))
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
@@ -2642,7 +2649,7 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("doc_id", "src", "n_tok"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mv_stream").toString
-    Materialize.build(cat, "docs", Seq("src"), Seq("n_tok"), mv)
+    Materialize.build(cat, ChainSpec("docs"), Seq("src"), Seq("n_tok"), mv)
     val incoming = Seq((3L, "web", 70L), (4L, "books", 90L),
       (2L, "code", 60L)) // doc 2 re-upserted: a retraction for the MV
       .toDF("doc_id", "src", "n_tok")
@@ -2733,7 +2740,7 @@ class CatalogSpec extends AnyFunSuite {
     val g0Files = dataFiles() -- before
     val mv = s"$wh/mv"
     at(t0)
-    Materialize.build(cat, "e", Seq("g"), Seq("x"), mv)
+    Materialize.build(cat, ChainSpec("e"), Seq("g"), Seq("x"), mv)
     def stateMap() = Materialize.read(spark, mv).collect()
       .map(r => r.getString(0) -> r.getLong(r.fieldIndex("sum_x"))).toMap
     assert(stateMap() == Map("exp" -> 7L, "g0" -> 150L))
@@ -2763,7 +2770,7 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("k", "g", "x"))
     cat2.clock = () => t0
     val mv2 = s"$wh2/mv"
-    Materialize.build(cat2, "e", Seq("g"), Seq("x"), mv2)
+    Materialize.build(cat2, ChainSpec("e"), Seq("g"), Seq("x"), mv2)
     cat2.clock = () => t0 + 30000L
     cat2.upsert("e", Seq((5L, "new", 3L)).toDF("k", "g", "x"))
     Materialize.refresh(cat2, mv2)
@@ -2802,7 +2809,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("e", Seq((1L, "old", 5L)).toDF("k", "g", "x"))
     cat.clock = () => t0
     val mv = s"$wh/mv"
-    Materialize.build(cat, "e", Seq("g"), Seq("x"), mv)
+    Materialize.build(cat, ChainSpec("e"), Seq("g"), Seq("x"), mv)
     assert(Materialize.read(spark, mv).count() == 1)
     // shorten the TTL: the old row's _ts is BELOW the incremental
     // expiry window start (lastRefresh-60), so the window probe alone
@@ -2830,9 +2837,9 @@ class CatalogSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("e", Seq((1L, "a", 5L)).toDF("k", "g", "x"))
     val mv = s"$wh/mv"
-    Materialize.build(cat, "e", Seq("g"), Seq("x"), mv)
-    def liveDir(): String = graft.operators.MvMeta.decode(
-      spark.read.parquet(s"$mv/meta").head()).stateDir
+    Materialize.build(cat, ChainSpec("e"), Seq("g"), Seq("x"), mv)
+    def liveDir(p: String = mv): String = graft.operators.MvMeta.decode(
+      spark.read.parquet(s"$p/meta").head()).stateDir
     val before = liveDir()
     // ALTER SET TTL with NO new writes: the high-water mark is
     // unchanged, so a rebuild to the default dir name would
@@ -2849,6 +2856,27 @@ class CatalogSpec extends AnyFunSuite {
     assert(Materialize.read(spark, mv).collect().map(_.toSeq).toSet ==
       Materialize.aggregate(cat.snapshot("e"), Seq("g"), Seq("x"))
         .collect().map(_.toSeq).toSet)
+    // a join MV takes the same rule: building it again with no write
+    // in between keeps every mark, and must not replace the served dir
+    cat.createTable("jf", StructType(Seq(StructField("k", LongType),
+      StructField("ck", LongType), StructField("x", LongType))),
+      pk = Seq("k"))
+    cat.createTable("jd", StructType(Seq(StructField("ck", LongType),
+      StructField("seg", StringType))), pk = Seq("ck"))
+    cat.upsert("jf", Seq((1L, 10L, 5L)).toDF("k", "ck", "x"))
+    cat.upsert("jd", Seq((10L, "a")).toDF("ck", "seg"))
+    val jmv = s"$wh/jmv"
+    val chain = ChainSpec("jf", Seq(SideSpec("jd", Seq("ck"))))
+    Materialize.build(cat, chain, Seq("seg"), Seq("x"), jmv)
+    val jBefore = liveDir(jmv)
+    Materialize.build(cat, chain, Seq("seg"), Seq("x"), jmv)
+    val jAfter = liveDir(jmv)
+    assert(jAfter != jBefore,
+      s"a join rebuild must write a fresh dir, not overwrite $jBefore")
+    assert(new java.io.File(s"$jmv/$jBefore").exists(),
+      "the previous join state must still exist on disk")
+    assert(Materialize.read(spark, jmv).select("seg", "cnt", "sum_x")
+      .collect().map(_.toSeq).toSeq == Seq(Seq("a", 1L, 5L)))
   }
 
   test("cdcStream applies the TTL filter like every batch read path: " +
@@ -3363,7 +3391,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.delete("fc", col("k") === 3L) // tombstone winner must SURVIVE
     val path = java.nio.file.Files
       .createTempDirectory("graft_fc").toString
-    Materialize.build(cat, "fc", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("fc"), Seq("g"), Seq("x"), path)
     cat.upsert("fc", Seq((4L, "a", 7L)).toDF("k", "g", "x"))
     val mark = Materialize.refresh(cat, path).marks.head
     def expected = Materialize
@@ -3422,7 +3450,7 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("k", "g", "x"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_tr").toString
-    Materialize.build(cat, "tr", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("tr"), Seq("g"), Seq("x"), path)
     assert(Materialize.read(spark, path).count() == 2)
     cat.truncate("tr")
     // the version counter moved, so a freshness probe keyed on it goes
@@ -3584,7 +3612,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("cw", Seq((2L, "a", 25L)).toDF("k", "g", "x"))
     cat.delete("cw", col("k") === 3L)
     val mv = s"$wh/mv"
-    Materialize.build(cat, "cw", Seq("g"), Seq("x"), mv)
+    Materialize.build(cat, ChainSpec("cw"), Seq("g"), Seq("x"), mv)
     def rows(c: GraftCatalog) = c.snapshot("cw").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val before = rows(cat)
@@ -3707,7 +3735,8 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("t", Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L))
       .toDF("id", "g", "x"))
     val mv = s"$wh/mv"
-    graft.operators.Materialize.build(cat, "t", Seq("g"), Seq("x"), mv)
+    graft.operators.Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"),
+      mv)
     cat.upsert("t", Seq((2L, "a", 99L)).toDF("id", "g", "x"))
     cat.compact("t") // full: history collapsed, floor marker written
     // simulate the pre-marker generation: the marker never existed
@@ -3844,7 +3873,8 @@ class CatalogSpec extends AnyFunSuite {
     cat.createTable("t", schema, pk = Seq("id"))
     cat.upsert("t", Seq((1L, "a", 10L)).toDF("id", "g", "x"))
     val mv = s"${cat.tablePath("t")}_mvdrop"
-    graft.operators.Materialize.build(cat, "t", Seq("g"), Seq("x"), mv)
+    graft.operators.Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"),
+      mv)
     graft.operators.Materialize.registerForRewrite(cat, mv)
     val e = intercept[IllegalStateException](cat.dropTable("t"))
     assert(e.getMessage.contains("materialized views") &&

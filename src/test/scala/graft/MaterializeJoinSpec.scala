@@ -5,6 +5,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Materialize, MaterializeJoin}
 import graft.sources.GraftCatalog
+import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
 
 /** Binary-join IVM: V = γ(R ⋈ S) maintained while BOTH sides mutate.
   * Every scenario cross-checks the folded state against a full
@@ -34,7 +35,9 @@ class MaterializeJoinSpec extends AnyFunSuite {
       .toDF("ck", "seg"))
   }
 
-  private val js = MaterializeJoin.JoinSpec("o", "c", Seq("ck"))
+  private val js = ChainSpec("o", Seq(SideSpec("c", Seq("ck"))))
+  private val immJs =
+    ChainSpec("o", Seq(SideSpec("c", Seq("ck"), factKeysImmutable = true)))
 
   private def canon(r: org.apache.spark.sql.Row) =
     r.toSeq.map { case b: Array[Byte] => b.toSeq; case x => x }
@@ -51,7 +54,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     assert(actual(path) == expected(cat))
   }
 
@@ -61,7 +64,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // new fact rows against existing dims + a brand-new key on BOTH
     // sides (ck=40 exists only after this delta — the ΔR ⋈ ΔS cross
     // term, which must land exactly once)
@@ -80,7 +83,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // ck=10 moves a→b: both its fact rows (fan-out 2) must leave 'a'
     // and land in 'b'
     cat.upsert("c", Seq((10L, "b")).toDF("ck", "seg"))
@@ -93,7 +96,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // ok=3 is seg b's ONLY row: delete it → 'b' must vanish
     cat.delete("o", col("ok") === 3L)
     cat.upsert("o", Seq((1L, 10L, 150L)).toDF("ok", "ck", "price"))
@@ -108,7 +111,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // seg a holds prices {100, 200, 400}; retracting 200 (ok=2 →
     // 201) neither ties nor crosses min=100/max=400... but the +201
     // post RAISES nothing either — strictly interior both ways
@@ -131,7 +134,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((7L, 20L, 700L)).toDF("ok", "ck", "price"))
     Materialize.refresh(cat, path)
     cat.upsert("o", Seq((8L, 30L, 800L)).toDF("ok", "ck", "price"))
@@ -154,7 +157,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    val (vl, vr) = MaterializeJoin.build(cat, js, Seq("seg"),
+    val Seq(vl, vr) = Materialize.build(cat, js, Seq("seg"),
       Seq("price"), path)
     val before = actual(path)
     assert(Materialize.refresh(cat, path).marks == Seq(vl, vr))
@@ -167,7 +170,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((7L, 20L, 700L)).toDF("ok", "ck", "price"))
     cat.compact("o") // history before the new high-water is GONE
     Materialize.refresh(cat, path)
@@ -185,7 +188,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
     val e = intercept[IllegalArgumentException] {
-      MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+      Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     }
     assert(e.getMessage.contains("TTL"))
   }
@@ -199,7 +202,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
     val e = intercept[IllegalArgumentException] {
-      MaterializeJoin.build(cat, js, Seq("ck"), Seq("price"), path)
+      Materialize.build(cat, js, Seq("ck"), Seq("price"), path)
     }
     assert(e.getMessage.contains("unique"))
   }
@@ -211,8 +214,8 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    val ijs = js.copy(leftKeysImmutable = true)
-    MaterializeJoin.build(cat, ijs, Seq("seg"), Seq("price"), path)
+    val ijs = immJs
+    Materialize.build(cat, ijs, Seq("seg"), Seq("price"), path)
     // fact updates change PRICE only (ck immutable per the contract),
     // plus a fact delete and dim churn — every delta leg takes the
     // prefiltered read on the left side (flag persisted in the meta)
@@ -258,7 +261,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       MaterializeJoin.SideSpec("p", Seq("pk2"))))
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmvn").toString
-    MaterializeJoin.build(cat, cs, Seq("seg", "brand"), Seq("price"),
+    Materialize.build(cat, cs, Seq("seg", "brand"), Seq("price"),
       path)
     def expectedN: Set[Seq[Any]] = Materialize.aggregate(
       cat.snapshot("f").join(cat.snapshot("c"), Seq("ck"))
@@ -344,7 +347,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.refreshSnapshotCache("o"); cat.refreshSnapshotCache("c")
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     Materialize.registerForRewrite(cat, path)
     val stateName = new java.io.File(path).getName
     try {
@@ -409,7 +412,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       Seq("seg"), Seq("price"), sks, tks).collect().map(canon).toSet
     def actualSk: Set[Seq[Any]] = Materialize.read(spark, path)
       .collect().map(canon).toSet
-    MaterializeJoin.build(cat, cs, Seq("seg"), Seq("price"), path,
+    Materialize.build(cat, cs, Seq("seg"), Seq("price"), path,
       sketches = sks, topks = tks)
     assert(actualSk == expectedSk, "after build")
     // insert-only on both sides: union folds, byte-identical, no
@@ -438,7 +441,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "history, refresh refuses a delta mutation, tombstone-separated " +
       "re-keys stay allowed and exact") {
     import spark.implicits._
-    val ijs = js.copy(leftKeysImmutable = true)
+    val ijs = immJs
     // (a) history already violates at build time → build refuses
     locally {
       val cat = freshCatalog(); mkTables(cat)
@@ -446,7 +449,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       val path = java.nio.file.Files
         .createTempDirectory("graft_jmv").toString
       val e = intercept[IllegalArgumentException] {
-        MaterializeJoin.build(cat, ijs, Seq("seg"), Seq("price"), path)
+        Materialize.build(cat, ijs, Seq("seg"), Seq("price"), path)
       }
       assert(e.getMessage.contains("declared"))
     }
@@ -456,7 +459,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       val cat = freshCatalog(); mkTables(cat)
       val path = java.nio.file.Files
         .createTempDirectory("graft_jmv").toString
-      MaterializeJoin.build(cat, ijs, Seq("seg"), Seq("price"), path)
+      Materialize.build(cat, ijs, Seq("seg"), Seq("price"), path)
       cat.upsert("o", Seq((1L, 20L, 100L)).toDF("ok", "ck", "price"))
       val e = intercept[IllegalArgumentException] {
         Materialize.refresh(cat, path)
@@ -470,7 +473,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       val cat = freshCatalog(); mkTables(cat)
       val path = java.nio.file.Files
         .createTempDirectory("graft_jmv").toString
-      MaterializeJoin.build(cat, ijs, Seq("seg"), Seq("price"), path)
+      Materialize.build(cat, ijs, Seq("seg"), Seq("price"), path)
       cat.delete("o", col("ok") === 1L)
       cat.upsert("o", Seq((1L, 20L, 123L)).toDF("ok", "ck", "price"))
       Materialize.refresh(cat, path)
@@ -502,8 +505,8 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cs = MaterializeJoin.ChainSpec("go",
       Seq(MaterializeJoin.SideSpec("gc", Seq("ck"))))
     val grains = Seq("mon" -> "date_trunc('MONTH', ts)")
-    MaterializeJoin.build(cat, cs, Seq("seg", "mon"), Seq("price"),
-      path, grainExprs = grains)
+    Materialize.build(cat, cs, Seq("seg", "mon"), Seq("price"),
+      path, grains = grains)
     def expectedG: Set[Seq[Any]] = Materialize.aggregate(
       cat.snapshot("go").join(cat.snapshot("gc"), Seq("ck"))
         .withColumn("mon", date_trunc("MONTH", $"ts")),
@@ -540,7 +543,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js.copy(leftKeysImmutable = true),
+    Materialize.build(cat, immJs,
       Seq("seg"), Seq("price"), path)
     val rnd = new scala.util.Random(12082026L)
     val segs = Vector("a", "b", "c")
@@ -598,7 +601,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     val rnd = new scala.util.Random(20260816L)
     val segs = Vector("a", "b", "c", "d")
     for (step <- 1 to 8) {
@@ -628,7 +631,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
   // ---- LEFT-outer join IVM (null-extension delta rule) ----
 
   private val ljs =
-    MaterializeJoin.JoinSpec("o", "c", Seq("ck"), leftOuter = true)
+    ChainSpec("o", Seq(SideSpec("c", Seq("ck"))), leftOuter = true)
 
   private def expectedLeft(cat: GraftCatalog): Set[Seq[Any]] =
     Materialize.aggregate(
@@ -646,7 +649,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "SELECT 6L AS ok, CAST(NULL AS BIGINT) AS ck, 600L AS price"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, ljs, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, ljs, Seq("seg"), Seq("price"), path)
     val exp = expectedLeft(cat)
     assert(actual(path) == exp)
     assert(exp.exists(_.head == null), "fixture must have a NULL group")
@@ -661,7 +664,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       .toDF("ok", "ck", "price"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, ljs, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, ljs, Seq("seg"), Seq("price"), path)
     // dangling → matched: ck=99 appears on the side, both facts must
     // MOVE from the NULL group into seg 'z'
     cat.upsert("c", Seq((99L, "z")).toDF("ck", "seg"))
@@ -685,7 +688,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, ljs, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, ljs, Seq("seg"), Seq("price"), path)
     val rnd = new scala.util.Random(20260817L)
     val segs = Vector("a", "b", "c", "d")
     for (step <- 1 to 8) {
@@ -731,7 +734,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       MaterializeJoin.SideSpec("pd", Seq("pk2"))), leftOuter = true)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, cs, Seq("seg", "grp"), Seq("x"), path)
+    Materialize.build(cat, cs, Seq("seg", "grp"), Seq("x"), path)
     def exp: Set[Seq[Any]] = Materialize.aggregate(
       cat.snapshot("f").join(cat.snapshot("cd"), Seq("ck"), "left")
         .join(cat.snapshot("pd"), Seq("pk2"), "left"),
@@ -770,7 +773,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val bcs = MaterializeJoin.ChainSpec("bo", Seq(
       MaterializeJoin.SideSpec("bc", Seq("ck"),
         factKeysImmutable = true)))
-    MaterializeJoin.build(cat, bcs, Seq("seg"), Seq("price"),
+    Materialize.build(cat, bcs, Seq("seg"), Seq("price"),
       path, buckets = 16)
     def exp: Set[Seq[Any]] = Materialize.aggregate(
       cat.snapshot("bo").join(cat.snapshot("bc"), Seq("ck")),
@@ -815,7 +818,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       concat(lit("s"), (col("id") % 16).cast("string")).as("seg")))
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv_cmp").toString
-    MaterializeJoin.build(cat, MaterializeJoin.ChainSpec("ko", Seq(
+    Materialize.build(cat, MaterializeJoin.ChainSpec("ko", Seq(
       MaterializeJoin.SideSpec("kc", Seq("ck")))), Seq("seg"),
       Seq("price"), path, buckets = 8)
     def exp: Set[Seq[Any]] = Materialize.aggregate(
@@ -849,7 +852,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
   // ---- FULL-outer binary join IVM ----
 
   private val fjs =
-    MaterializeJoin.JoinSpec("o", "c", Seq("ck"), fullOuter = true)
+    ChainSpec("o", Seq(SideSpec("c", Seq("ck"))), fullOuter = true)
 
   private def expectedFull(cat: GraftCatalog): Set[Seq[Any]] =
     Materialize.aggregate(
@@ -864,7 +867,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("c", Seq((77L, "lonely")).toDF("ck", "seg")) // no orders
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, fjs, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, fjs, Seq("seg"), Seq("price"), path)
     val exp = expectedFull(cat)
     assert(actual(path) == exp)
     assert(exp.exists(_.head == null), "fact-dangling NULL group")
@@ -880,7 +883,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("c", Seq((77L, "lonely")).toDF("ck", "seg"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, fjs, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, fjs, Seq("seg"), Seq("price"), path)
     // fact gains the side-dangling key 77: the (lonely, NULL-measure)
     // row must become a real joined row
     cat.upsert("o", Seq((6L, 77L, 700L)).toDF("ok", "ck", "price"))
@@ -906,7 +909,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, fjs, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, fjs, Seq("seg"), Seq("price"), path)
     val rnd = new scala.util.Random(20260819L)
     val segs = Vector("a", "b", "c", "d")
     for (step <- 1 to 8) {
@@ -937,7 +940,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
         leftOuter = left, factFilterSql = Some("price > 150"))
       val path = java.nio.file.Files
         .createTempDirectory("graft_jmvf").toString
-      MaterializeJoin.build(cat, cs, Seq("seg"), Seq("price"), path)
+      Materialize.build(cat, cs, Seq("seg"), Seq("price"), path)
       def expectedF: Set[Seq[Any]] = Materialize.aggregate(
         cat.snapshot("o").where(col("price") > 150)
           .join(cat.snapshot("c"), Seq("ck"),
@@ -972,14 +975,14 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmvf").toString
     val e1 = intercept[IllegalArgumentException] {
-      MaterializeJoin.build(cat, MaterializeJoin.ChainSpec("o",
+      Materialize.build(cat, MaterializeJoin.ChainSpec("o",
         Seq(MaterializeJoin.SideSpec("c", Seq("ck"))),
         fullOuter = true, factFilterSql = Some("price > 150")),
         Seq("seg"), Seq("price"), path)
     }
     assert(e1.getMessage.contains("LEFT MV of the filtered fact"))
     intercept[Exception] { // seg lives on the SIDE, not the fact
-      MaterializeJoin.build(cat, MaterializeJoin.ChainSpec("o",
+      Materialize.build(cat, MaterializeJoin.ChainSpec("o",
         Seq(MaterializeJoin.SideSpec("c", Seq("ck"))),
         factFilterSql = Some("seg = 'a'")),
         Seq("seg"), Seq("price"), path)
@@ -995,18 +998,18 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // a side keyed on an EARLIER SIDE under FULL: the per-side
     // dangling decomposition needs every side keyed on the fact
     val e1 = intercept[IllegalArgumentException] {
-      MaterializeJoin.build(cat, snowCs.copy(fullOuter = true),
+      Materialize.build(cat, snowCs.copy(fullOuter = true),
         Seq("nname"), Seq("price"), path)
     }
     assert(e1.getMessage.contains("keyed on the FACT"))
     intercept[IllegalArgumentException] {
-      MaterializeJoin.build(cat,
+      Materialize.build(cat,
         MaterializeJoin.ChainSpec("o",
           Seq(MaterializeJoin.SideSpec("c", Seq("ck"))),
           leftOuter = true, fullOuter = true),
         Seq("seg"), Seq("price"), path)
     }
-    MaterializeJoin.build(cat, fjs, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, fjs, Seq("seg"), Seq("price"), path)
     Materialize.registerForRewrite(cat, path) // fullState serves
   }
 
@@ -1033,7 +1036,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       MaterializeJoin.SideSpec("p", Seq("pk2"))), fullOuter = true)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jfull").toString
-    MaterializeJoin.build(cat, cs, Seq("seg", "brand"), Seq("price"),
+    Materialize.build(cat, cs, Seq("seg", "brand"), Seq("price"),
       path)
     def expectedN: Set[Seq[Any]] = Materialize.aggregate(
       cat.snapshot("f").join(cat.snapshot("c"), Seq("ck"), "full")
@@ -1099,7 +1102,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkSnowflake(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, snowCs, Seq("nname"), Seq("price"), path)
+    Materialize.build(cat, snowCs, Seq("nname"), Seq("price"), path)
     assert(actual(path) == expectedSnow(cat), "build")
     // churn the INTERMEDIATE dim: ck=10 moves nation 1 -> 2, so 300 of
     // revenue regroups from 'de' to 'fr' without any orders/sn write
@@ -1124,7 +1127,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkSnowflake(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, snowCs, Seq("nname"), Seq("price"), path)
+    Materialize.build(cat, snowCs, Seq("nname"), Seq("price"), path)
     val rnd = new scala.util.Random(20260818L)
     for (step <- 1 to 8) {
       for (_ <- 0 until 1 + rnd.nextInt(3)) rnd.nextInt(6) match {
@@ -1163,11 +1166,11 @@ class MaterializeJoinSpec extends AnyFunSuite {
       MaterializeJoin.SideSpec("sc", Seq("ck")),
       MaterializeJoin.SideSpec("sx", Seq("ok", "nk"))))
     val e1 = intercept[IllegalArgumentException] {
-      MaterializeJoin.build(cat, spanning, Seq("seg"), Seq("price"), path)
+      Materialize.build(cat, spanning, Seq("seg"), Seq("price"), path)
     }
     assert(e1.getMessage.contains("tree"))
     val e2 = intercept[IllegalArgumentException] {
-      MaterializeJoin.build(cat, snowCs.copy(leftOuter = true),
+      Materialize.build(cat, snowCs.copy(leftOuter = true),
         Seq("nname"), Seq("price"), path)
     }
     assert(e2.getMessage.contains("keyed on the FACT"))
@@ -1179,7 +1182,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // a second thread churns the DIM side (the out-of-band writer
     // EventStreams.maintainAggregate advertises absorbing) while
     // the main thread churns the fact and refreshes concurrently; the
@@ -1242,7 +1245,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // side 'c' never written: its marks are (max=-1, min=MaxValue) —
     // the unguarded detector read min > lastV as "history lost" and
     // forced a full rebuild on EVERY refresh
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((2L, 20L, 200L)).toDF("ok", "ck", "price"))
     val r = Materialize.refresh(cat, path)
     assert(!r.rebuildRan &&
@@ -1275,7 +1278,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_jmv").toString
     val e = intercept[IllegalArgumentException] {
-      MaterializeJoin.build(cat,
+      Materialize.build(cat,
         MaterializeJoin.ChainSpec("f", Seq(
           MaterializeJoin.SideSpec("s1", Seq("k1")),
           MaterializeJoin.SideSpec("s2", Seq("k2")))),
@@ -1378,7 +1381,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       MaterializeJoin.SideSpec("p", Seq("pk2"))))
     val path = java.nio.file.Files
       .createTempDirectory("graft_jfc").toString
-    MaterializeJoin.build(cat, cs, Seq("seg", "brand"), Seq("price"),
+    Materialize.build(cat, cs, Seq("seg", "brand"), Seq("price"),
       path)
     def expectedN: Set[Seq[Any]] = Materialize.aggregate(
       cat.snapshot("f").join(cat.snapshot("c"), Seq("ck"))
@@ -1441,7 +1444,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       .toDF("jk", "seg"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_push").toString + "/mv"
-    MaterializeJoin.build(cat,
+    Materialize.build(cat,
       MaterializeJoin.ChainSpec("fo",
         Seq(MaterializeJoin.SideSpec("so", Seq("jk"))),
         fullOuter = true),

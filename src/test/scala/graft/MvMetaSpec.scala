@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Materialize, MaterializeJoin, MvMeta}
+import graft.operators.{Materialize, MvMeta}
 import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
 import graft.sources.GraftCatalog
 
@@ -131,12 +131,12 @@ class MvMetaSpec extends AnyFunSuite {
     cat.upsert("o", Seq((1L, 10L, 100L)).toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((10L, "a")).toDF("ck", "seg"))
     val single = tmp()
-    Materialize.build(cat, "o", Seq("ck"), Seq("price"), single,
+    Materialize.build(cat, ChainSpec("o"), Seq("ck"), Seq("price"), single,
       buckets = 2)
     assert(layout(single) == singleLayout)
     val join = tmp()
-    MaterializeJoin.build(cat, MaterializeJoin.JoinSpec("o", "c",
-      Seq("ck")), Seq("seg"), Seq("price"), join)
+    Materialize.build(cat, ChainSpec("o", Seq(SideSpec("c", Seq("ck")))),
+      Seq("seg"), Seq("price"), join)
     assert(layout(join) == joinLayout)
   }
 
@@ -149,7 +149,7 @@ class MvMetaSpec extends AnyFunSuite {
       pk = Seq("k"))
     cat.upsert("t", Seq((1L, "a", 10L)).toDF("k", "g", "x"))
     val path = tmp()
-    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"), path)
     val built = MvMeta.read(spark, path)
     assert(built.tables == Seq("t") && built.kindName == "single")
     // the same meta as a writer before the `table` column left it
@@ -177,7 +177,7 @@ class MvMetaSpec extends AnyFunSuite {
       pk = Seq("k"))
     cat.upsert("t", Seq((1L, "a", 10L)).toDF("k", "g", "x"))
     val path = tmp()
-    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"), path)
     val metaDir = new java.io.File(path, "meta")
     def dataFiles() = metaDir.listFiles().filter(_.getName.startsWith("part-"))
     val Array(pre) = dataFiles()

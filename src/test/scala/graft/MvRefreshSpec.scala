@@ -5,14 +5,16 @@ import java.util.concurrent.TimeUnit
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Materialize, MaterializeJoin, RefreshReport}
+import graft.operators.{Materialize, RefreshReport}
 import graft.sources.GraftCatalog
 import graft.Measure.Measured
+import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
 
-/** The refresh contract both MV kinds share through one fold core:
-  * the [[graft.operators.RefreshReport]] each refresh returns, the
-  * Spark jobs a plain incremental refresh runs, and the meta carrying a
-  * filtered MV's predicate across refreshes. */
+/** The build and refresh contract both MV kinds share through one
+  * build and one fold core: the [[graft.operators.RefreshReport]] each
+  * refresh returns, the Spark jobs a plain build and a plain
+  * incremental refresh run, the build's grain check, and the meta
+  * carrying a filtered MV's predicate across refreshes. */
 class MvRefreshSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -28,7 +30,7 @@ class MvRefreshSpec extends AnyFunSuite {
     StructField("ck", LongType), StructField("price", LongType)))
   private val custSchema = StructType(Seq(StructField("ck", LongType),
     StructField("seg", StringType)))
-  private val js = MaterializeJoin.JoinSpec("o", "c", Seq("ck"))
+  private val js = ChainSpec("o", Seq(SideSpec("c", Seq("ck"))))
 
   private def singleTable(): GraftCatalog = {
     import spark.implicits._
@@ -54,7 +56,7 @@ class MvRefreshSpec extends AnyFunSuite {
       "reports that nothing ran") {
     val cat = singleTable()
     val path = mvPath()
-    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"), path)
     // k=2 holds group a's max: its delete gates in a recompute
     cat.delete("t", col("k") === 2L)
     val r = Materialize.refresh(cat, path)
@@ -71,7 +73,7 @@ class MvRefreshSpec extends AnyFunSuite {
       "that nothing ran") {
     val cat = joinTables()
     val path = mvPath()
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // ok=2 holds segment a's max price
     cat.delete("o", col("ok") === 2L)
     val r = Materialize.refresh(cat, path)
@@ -88,12 +90,13 @@ class MvRefreshSpec extends AnyFunSuite {
       "describe their own MV") {
     val recomputing = singleTable()
     val recomputingMv = mvPath()
-    Materialize.build(recomputing, "t", Seq("g"), Seq("x"), recomputingMv)
+    Materialize.build(recomputing, ChainSpec("t"), Seq("g"), Seq("x"),
+      recomputingMv)
     // k=2 holds group a's max: its delete gates in a recompute
     recomputing.delete("t", col("k") === 2L)
     val idle = singleTable()
     val idleMv = mvPath()
-    Materialize.build(idle, "t", Seq("g"), Seq("x"), idleMv)
+    Materialize.build(idle, ChainSpec("t"), Seq("g"), Seq("x"), idleMv)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       val a = pool.submit[RefreshReport](() =>
@@ -113,7 +116,7 @@ class MvRefreshSpec extends AnyFunSuite {
       "for it and finds nothing left to fold") {
     val cat = singleTable()
     val path = mvPath()
-    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"), path)
     // k=2 holds group a's max: its delete gates in a recompute
     cat.delete("t", col("k") === 2L)
     val go = new java.util.concurrent.CountDownLatch(1)
@@ -163,7 +166,7 @@ class MvRefreshSpec extends AnyFunSuite {
     import spark.implicits._
     val cat = singleTable()
     val path = mvPath()
-    Materialize.build(cat, "t", Seq("g"), Seq("x"), path)
+    Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"), path)
     cat.upsert("t", Seq((4L, "b", 35L)).toDF("k", "g", "x"))
     Materialize.refresh(cat, path) // warm: memos and caches filled
     cat.upsert("t", Seq((5L, "a", 12L), (7L, "a", 16L))
@@ -185,7 +188,7 @@ class MvRefreshSpec extends AnyFunSuite {
     import spark.implicits._
     val cat = joinTables()
     val path = mvPath()
-    MaterializeJoin.build(cat, js, Seq("seg"), Seq("price"), path)
+    Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((4L, 20L, 350L)).toDF("ok", "ck", "price"))
     Materialize.refresh(cat, path) // warm: memos and caches filled
     cat.upsert("o", Seq((5L, 10L, 120L), (6L, 10L, 160L))
@@ -204,13 +207,47 @@ class MvRefreshSpec extends AnyFunSuite {
         Seq("b", 2L, 650L, 300L, 350L)))
   }
 
+  // One build serves both kinds; its jobs are pinned at the counts the
+  // two separate builds ran before they were folded into one (a warm
+  // build first, so memos and caches are filled).
+  test("jobs per build: plain single-table MV and plain join MV") {
+    val cat = singleTable()
+    Materialize.build(cat, ChainSpec("t"), Seq("g"), Seq("x"), mvPath())
+    val single = Measure.once(spark)(Materialize.build(cat, ChainSpec("t"),
+      Seq("g"), Seq("x"), mvPath()))
+    assert(single.counts.jobs == 3,
+      s"jobs per single-table build: ${single.counts.jobs}")
+    assert(single.value == Seq(cat.currentVersion("t")))
+    val jc = joinTables()
+    Materialize.build(jc, js, Seq("seg"), Seq("price"), mvPath())
+    val join = Measure.once(spark)(Materialize.build(jc, js, Seq("seg"),
+      Seq("price"), mvPath()))
+    assert(join.counts.jobs == 5,
+      s"jobs per join build: ${join.counts.jobs}")
+    assert(join.value == Seq("o", "c").map(jc.currentVersion))
+  }
+
+  test("a grain column outside groupCols refuses the build of either " +
+      "kind") {
+    val single = intercept[IllegalArgumentException](Materialize.build(
+      singleTable(), ChainSpec("t"), Seq("g"), Seq("x"), mvPath(),
+      grains = Seq("xb" -> "x % 2")))
+    assert(single.getMessage.contains("must appear in groupCols"),
+      single.getMessage)
+    val join = intercept[IllegalArgumentException](Materialize.build(
+      joinTables(), js, Seq("seg"), Seq("price"), mvPath(),
+      grains = Seq("pb" -> "price % 2")))
+    assert(join.getMessage.contains("must appear in groupCols"),
+      join.getMessage)
+  }
+
   test("a filtered MV keeps its predicate across refreshes: the " +
       "second refresh still folds only matching rows") {
     import spark.implicits._
     val cat = singleTable()
     val path = mvPath()
-    Materialize.build(cat, "t", Seq("g"), Seq("x"), path,
-      filterSql = Some("x > 10"))
+    Materialize.build(cat, ChainSpec("t", factFilterSql = Some("x > 10")),
+      Seq("g"), Seq("x"), path)
     cat.upsert("t", Seq((4L, "a", 5L)).toDF("k", "g", "x"))
     Materialize.refresh(cat, path)
     cat.upsert("t", Seq((5L, "a", 3L), (6L, "a", 40L))

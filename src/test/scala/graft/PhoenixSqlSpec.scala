@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{GraftCatalog, PhoenixSql}
+import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
 
 /** Replays the reference's fixture DDL/DML shapes (FIXTURES.md) through
   * the Phoenix-dialect front-end: WEB_STAT end-to-end (examples/
@@ -1369,7 +1370,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
       keys = Seq("ck" -> "ck"), attrs = Seq("seg"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mvsql_star").toString
-    Materialize.build(cat, "fo", Seq("seg"), Seq("price"), mv,
+    Materialize.build(cat, ChainSpec("fo"), Seq("seg"), Seq("price"), mv,
       derive = derive)
     // one DimJoinDef per derive: the dim keyed by its CATALOG ROOT
     // (the serving scan's _snapcache leaf maps back to it), innerSafe
@@ -1402,7 +1403,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Materialize.refresh(cat, mv, derive = derive)
     }
-    Materialize.build(cat, "fo", Seq("seg"), Seq("price"), mv,
+    Materialize.build(cat, ChainSpec("fo"), Seq("seg"), Seq("price"), mv,
       derive = derive)
     // the caches were refreshed OUTSIDE the front-end, so mark both
     // tables dirty through it (value-identical upsert) and re-cache —
@@ -1427,7 +1428,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     cat.refreshSnapshotCache("mvt")
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mvsql").toString
-    Materialize.build(cat, "mvt", Seq("src"), Seq("x"), mv)
+    Materialize.build(cat, ChainSpec("mvt"), Seq("src"), Seq("x"), mv)
     Materialize.registerForRewrite(cat, mv)
     def run(expectServed: Boolean) = {
       val q = px.execute("SELECT SRC, SUM(X) AS sum_x, COUNT(*) AS n " +
@@ -1476,7 +1477,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     cat.refreshSnapshotCache("fg")
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mvsql_fresh").toString
-    Materialize.build(cat, "fg", Seq("src"), Seq("x"), mv)
+    Materialize.build(cat, ChainSpec("fg"), Seq("src"), Seq("x"), mv)
     Materialize.registerForRewrite(cat, mv)
     def run(expectServed: Boolean) = {
       val q = px.execute("SELECT SRC, SUM(X) AS sum_x FROM FG " +
@@ -1972,7 +1973,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     Seq("sf", "sc", "sn").foreach(cat.refreshSnapshotCache)
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mvsql_snow").toString
-    MaterializeJoin.build(cat,
+    Materialize.build(cat,
       MaterializeJoin.ChainSpec("sf", Seq(
         MaterializeJoin.SideSpec("sc", Seq("ck")),
         MaterializeJoin.SideSpec("sn", Seq("nk")))),
@@ -2008,9 +2009,8 @@ class PhoenixSqlSpec extends AnyFunSuite {
     cat.refreshSnapshotCache("lf"); cat.refreshSnapshotCache("ld")
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mvsql_left").toString
-    MaterializeJoin.build(cat,
-      MaterializeJoin.JoinSpec("lf", "ld", Seq("ck"),
-        leftOuter = true),
+    Materialize.build(cat,
+      ChainSpec("lf", Seq(SideSpec("ld", Seq("ck"))), leftOuter = true),
       Seq("seg"), Seq("price"), mv)
     Materialize.registerForRewrite(cat, mv)
     def run(sql: String, expectServed: Boolean) = {
@@ -2053,8 +2053,8 @@ class PhoenixSqlSpec extends AnyFunSuite {
     cat.refreshSnapshotCache("jf"); cat.refreshSnapshotCache("jd")
     val mv = java.nio.file.Files
       .createTempDirectory("graft_mvsql_jfresh").toString
-    MaterializeJoin.build(cat,
-      MaterializeJoin.JoinSpec("jf", "jd", Seq("ck")),
+    Materialize.build(cat,
+      ChainSpec("jf", Seq(SideSpec("jd", Seq("ck")))),
       Seq("seg"), Seq("price"), mv)
     Materialize.registerForRewrite(cat, mv)
     def run(expectServed: Boolean) = {
@@ -2103,7 +2103,8 @@ class PhoenixSqlSpec extends AnyFunSuite {
     cat.upsert("at2",
       Seq((1L, "a", 5L), (2L, "b", 6L)).toDF("id", "g", "x"))
     val mv2 = s"${cat.tablePath("at2")}_apimv"
-    graft.operators.Materialize.build(cat, "at2", Seq("g"), Seq("x"), mv2)
+    graft.operators.Materialize.build(cat, ChainSpec("at2"), Seq("g"), Seq("x"),
+      mv2)
     graft.operators.Materialize.registerForRewrite(cat, mv2)
     cat.upsert("at2", Seq((1L, "a", 7L)).toDF("id", "g", "x"))
     graft.operators.Materialize.refresh(cat, mv2)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Commit, Materialize, MaterializeJoin, MvMeta}
 import graft.sources.GraftCatalog
+import graft.operators.MaterializeJoin.{ChainSpec, SideSpec}
 
 /** r17 optimization-round pins.
   *
@@ -54,7 +55,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
       .createTempDirectory("graft_rrmv").toString
     // bucketed state: the single-table fold checkpoints changes,
     // retracted AND merged — the richest block set to lose
-    Materialize.build(cat, "t", Seq("k"), Seq("v"), mv, buckets = 4)
+    Materialize.build(cat, ChainSpec("t"), Seq("k"), Seq("v"), mv, buckets = 4)
     cat.upsert("t", Seq(("a", 5L), ("d", 7L)).toDF("k", "v"))
     var fired = 0
     withFoldHook(() => if (fired == 0) { fired = 1; dropAllBlocks() }) {
@@ -82,8 +83,8 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("c", Seq((10L, "a"), (20L, "b")).toDF("ck", "seg"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_rrjmv").toString
-    MaterializeJoin.build(cat,
-      MaterializeJoin.JoinSpec("o", "c", Seq("ck")),
+    Materialize.build(cat,
+      ChainSpec("o", Seq(SideSpec("c", Seq("ck")))),
       Seq("seg"), Seq("price"), mv)
     cat.upsert("o", Seq((3L, 10L, 300L)).toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((20L, "a")).toDF("ck", "seg"))
@@ -110,7 +111,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("t2", Seq(("a", 1L)).toDF("k", "v"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_rrmv2").toString
-    Materialize.build(cat, "t2", Seq("k"), Seq("v"), mv)
+    Materialize.build(cat, ChainSpec("t2"), Seq("k"), Seq("v"), mv)
     cat.upsert("t2", Seq(("b", 2L)).toDF("k", "v"))
     var calls = 0
     val boom = intercept[RuntimeException] {
@@ -168,7 +169,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
       .toDF("k", "v"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_rrbk").toString
-    Materialize.build(cat, "tb", Seq("k"), Seq("v"), mv, buckets = 4)
+    Materialize.build(cat, ChainSpec("tb"), Seq("k"), Seq("v"), mv, buckets = 4)
     // insert-only delta → no retraction, no recompute → the refresh
     // writes its touched buckets on the driver (Commit's driver path)
     cat.upsert("tb", Seq(("e", 5L), ("f", 6L)).toDF("k", "v"))
@@ -232,7 +233,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("tl", Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_rrleft").toString
-    Materialize.build(cat, "tl", Seq("k"), Seq("v"), mv)
+    Materialize.build(cat, ChainSpec("tl"), Seq("k"), Seq("v"), mv)
     cat.upsert("tl", Seq(("a", 5L), ("d", 7L)).toDF("k", "v"))
     val target = s"$mv/state_v${cat.currentVersion("tl")}"
     plantLiveState(mv, target)
@@ -259,7 +260,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("lc", Seq((10L, "a"), (20L, "b")).toDF("ck", "seg"))
     val mv = java.nio.file.Files
       .createTempDirectory("graft_rrleftj").toString
-    MaterializeJoin.build(cat, MaterializeJoin.ChainSpec("lo",
+    Materialize.build(cat, MaterializeJoin.ChainSpec("lo",
       Seq(MaterializeJoin.SideSpec("lc", Seq("ck")))), Seq("seg"),
       Seq("price"), mv, buckets = 4)
     // insert-only into an existing group: its bucket is rewritten
@@ -286,7 +287,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("tm", Seq(("a", 1L)).toDF("k", "v"))
     val mv = java.nio.file.Files.createTempDirectory("graft_dw_meta")
       .toString
-    Materialize.build(cat, "tm", Seq("k"), Seq("v"), mv)
+    Materialize.build(cat, ChainSpec("tm"), Seq("k"), Seq("v"), mv)
     val m = MvMeta.read(spark, mv)
     val dir = java.nio.file.Files.createTempDirectory("graft_dw_meta2")
       .toString
