@@ -5,15 +5,16 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.LocalFrame
 import org.apache.spark.sql.types.StructType
-import scala.jdk.CollectionConverters._
 
 /** The one way the catalog and the MV layer land parquet files: a
   * change-log batch ([[append]]), and a table log, snapshot cache or
@@ -27,11 +28,16 @@ import scala.jdk.CollectionConverters._
   *    driver thread ([[ParquetUtils.prepareWrite]] sets the identical
   *    WriteSupport, compression and rebase settings, so the file is
   *    encoding-identical) — no write job, no commit protocol. A local
-  *    relation probes without a job at all, so a small client batch
-  *    lands with zero Spark jobs.
+  *    relation's rows are read straight off its scan, with no job and
+  *    no limit plan, so a small client batch lands with zero Spark
+  *    jobs.
   *  - the DISTRIBUTED write otherwise. A plan with an exchange (a
   *    collapse, an aggregate, a join) is never probed: probing it would
-  *    execute it twice.
+  *    execute it twice. Nor is a plan whose leaves are file scans over
+  *    more than [[probeBytes]] of listed files: such an input almost
+  *    always holds more than [[cap]] rows, so its probe would be a job
+  *    whose rows are thrown away. Both paths write the same rows, so
+  *    this choice changes cost only.
   *
   * Both paths land under a hidden name (`_`-prefixed, which every
   * Spark file listing skips) and rename into place through the
@@ -44,13 +50,22 @@ object Commit {
     * partition-incremental, never a full scan. */
   val cap: Int = 4096
 
+  /** Listed file bytes above which a file-scan plan skips the probe:
+    * 32 bytes per row of a [[cap]]-row batch, which a narrow parquet
+    * table's compressed rows stay under. */
+  val probeBytes: Long = 32L * cap
+
   /** Land `df`'s rows as new files in `dir` (created if needed); the
     * files already there are untouched. The driver path renames one
     * `_`-prefixed file into `dir`, named with a fixed-width part number
     * one past the highest in `dir`, so the newest driver-written file
     * sorts last; the distributed path writes a hidden `_tmp_` subdir
-    * and renames its part files up into `dir`. */
-  def append(df: DataFrame, dir: String): Unit = {
+    * and renames its part files up into `dir`.
+    *
+    * Returns the rows the driver path wrote (laid out as `df.schema`),
+    * `None` after a distributed write. The catalog keeps them as the
+    * memstore its served reads lay over the snapshot cache. */
+  def append(df: DataFrame, dir: String): Option[Array[InternalRow]] = {
     val spark = df.sparkSession
     val d = new Path(dir)
     val fs = fsOf(spark, d)
@@ -65,6 +80,7 @@ object Commit {
           f"$part%019d", hidden = true)
         try rename(fs, tmp, new Path(d, tmp.getName.stripPrefix("_")))
         catch { case e: Throwable => fs.delete(tmp, false); throw e }
+        Some(rows)
       case None =>
         val tmp = new Path(d, s"_tmp_${UUID.randomUUID}")
         try {
@@ -73,6 +89,7 @@ object Commit {
             .filter(_.getName.startsWith("part-"))
             .foreach(p => rename(fs, p, new Path(d, p.getName)))
         } finally fs.delete(tmp, true)
+        None
     }
   }
 
@@ -133,11 +150,8 @@ object Commit {
   /** `df`'s rows as a local relation when the driver path would take
     * it (no exchange, at most [[cap]] rows); `None` otherwise, having
     * run at most the probe. */
-  def local(df: DataFrame): Option[DataFrame] = probe(df).map { rows =>
-    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-    df.sparkSession.createDataFrame(
-      rows.map(toRow(_).asInstanceOf[Row]).toSeq.asJava, df.schema)
-  }
+  def local(df: DataFrame): Option[DataFrame] =
+    probe(df).map(rows => LocalFrame(df.sparkSession, df.schema, rows.toSeq))
 
   /** Where [[replace]] keeps `dir`'s previous copy between its two
     * moves. */
@@ -164,11 +178,25 @@ object Commit {
   /** The driver-path choice: `df`'s rows when its plan has no exchange
     * and holds at most [[cap]] rows. */
   private def probe(df: DataFrame): Option[Array[InternalRow]] = {
-    val exchanged = new AdaptiveSparkPlanHelper {}
-      .find(df.queryExecution.executedPlan)(_.isInstanceOf[Exchange])
-    if (exchanged.nonEmpty) None
-    else Some(df.limit(cap + 1).queryExecution.executedPlan
-      .executeCollect()).filter(_.length <= cap)
+    val plan = df.queryExecution.executedPlan
+    val rows = plan match {
+      case _ if new AdaptiveSparkPlanHelper {}
+        .find(plan)(_.isInstanceOf[Exchange]).nonEmpty => None
+      case local: LocalTableScanExec => Some(local.executeCollect())
+      case _ if scannedBytes(plan).exists(_ > probeBytes) => None
+      case _ => Some(df.limit(cap + 1).queryExecution.executedPlan
+        .executeCollect())
+    }
+    rows.filter(_.length <= cap)
+  }
+
+  /** The listed size of the files `plan` reads, when every leaf is a
+    * file scan. */
+  private def scannedBytes(plan: SparkPlan): Option[Long] = {
+    val leaves = plan.collectLeaves()
+    val sizes = leaves.collect {
+      case s: FileSourceScanExec => s.relation.location.sizeInBytes }
+    if (sizes.length == leaves.length) Some(sizes.sum) else None
   }
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =

@@ -2,8 +2,11 @@ package graft.sources
 
 import graft.operators.Commit
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, LocalFrame}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -65,6 +68,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     validateProps(props)
     val spec = TableSpec(name, schema, pk, props)
     specs(name) = spec
+    forget(name)
     new java.io.File(dir(name)).mkdirs()
     // the first step of any process over an existing dir: a compaction
     // or vacuum cut between its two moves left the live log aside
@@ -108,6 +112,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     val kept = s.props.filterNot { case (k, _) =>
       newProps.keys.exists(_.equalsIgnoreCase(k)) }
     specs(name) = s.copy(props = kept ++ newProps)
+    forget(name)
   }
 
   /** A property's value, its key matched case-insensitively. */
@@ -140,6 +145,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
       cur.exists(_.name == f.name) || specs(name).schema.fieldNames
         .contains(f.name))
     extensions(name) = cur ++ newOnes.map(_.copy(nullable = true))
+    forget(name)
   }
 
   /** Declared columns plus view-extension columns, in storage order. */
@@ -162,6 +168,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     val newOnes = fields.filterNot(f => existing.contains(f.name))
       .map(_.copy(nullable = true))
     specs(name) = s.copy(schema = StructType(s.schema.fields ++ newOnes))
+    forget(name)
   }
 
   /** ALTER TABLE DROP COLUMN: removes from the declared schema (PK columns
@@ -183,6 +190,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     specs(name) = s.copy(schema =
       StructType(s.schema.fields.filterNot(_.name == column)))
     colGen((name, column)) = colGen.getOrElse((name, column), 0) + 1
+    forget(name)
   }
 
   /** (table, logical column) → generation; >0 after a drop, giving re-added
@@ -226,6 +234,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     if (cascade) deps.foreach(dropMv)
     specs.remove(name)
     extensions.remove(name)
+    forget(name)
     rmTree(new java.io.File(dir(name)))
   }
 
@@ -379,7 +388,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
           catch { case e2: Throwable => e.addSuppressed(e2) }
           throw e
       }
-      publish()
+      // a refused publish means another writer may share version v, so
+      // the rows recorded for v are not all of v's rows
+      try publish() catch { case e: Throwable => forget(name); throw e }
       v
     }
 
@@ -389,32 +400,33 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * OMITS the column; an explicit NULL in the batch stores NULL),
     * otherwise NULL. */
   def upsert(name: String, df: DataFrame): Long = {
-    val v = versionedWrite(name)(appendUpsert(name, df, _))
+    val v = versionedWrite(name)(v =>
+      remember(name, v, appendUpsert(name, df, v)))
     refreshSnapCacheIfDue(name)
     v
   }
 
-  private def appendUpsert(name: String, df: DataFrame, v: Long): Unit = {
+  /** Appends `df` as the batch of version `v`, padded, checked and
+    * stamped in ONE projection; returns the rows the driver path wrote
+    * ([[Commit.append]]). */
+  private def appendUpsert(name: String, df: DataFrame,
+      v: Long): Option[Array[InternalRow]] = {
     val fields = allFields(name)
     // one clock sample per batch: the ROW_TIMESTAMP fill and the `_ts`
     // stamp must agree (Phoenix commits a mutation batch at one server
     // timestamp, and the ROW_TIMESTAMP column IS that timestamp)
     val nowMs = clock()
     val nowTs = new java.sql.Timestamp(nowMs)
-    val padded = fields.foldLeft(df) { (d, f) =>
-      if (d.columns.contains(f.name)) d
+    def value(f: StructField): org.apache.spark.sql.Column =
+      (if (df.columns.contains(f.name)) col(f.name)
       else if (f.metadata.contains(GraftCatalog.RowTimestampKey))
         // ROW_TIMESTAMP PK omitted by the write → the batch stamp
         // (RowTimestampIT upsertingRowTimestampColAutomatically);
         // BIGINT spelling carries epoch millis like the reference
-        d.withColumn(f.name,
-          if (f.dataType == LongType) lit(nowMs) else lit(nowTs))
+        if (f.dataType == LongType) lit(nowMs) else lit(nowTs)
       else if (f.metadata.contains(GraftCatalog.DefaultExprKey))
-        d.withColumn(f.name,
-          expr(f.metadata.getString(GraftCatalog.DefaultExprKey))
-            .cast(f.dataType))
-      else d.withColumn(f.name, lit(null).cast(f.dataType))
-    }
+        expr(f.metadata.getString(GraftCatalog.DefaultExprKey))
+      else lit(null)).cast(f.dataType)
     // the ROW_TIMESTAMP column IS the cell timestamp in the reference
     // (RowTimestampIT: an explicit value drives scan TimeRange
     // visibility and TTL) — so when the table declares one, `_ts`
@@ -425,39 +437,40 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     val ts =
       fields.find(_.metadata.contains(GraftCatalog.RowTimestampKey)) match {
         case Some(f) if f.dataType == LongType =>
-          coalesce(timestamp_millis(col(phys(name, f.name))), lit(nowTs))
+          coalesce(timestamp_millis(value(f)), lit(nowTs))
         case Some(f) =>
-          coalesce(col(phys(name, f.name)).cast(TimestampType), lit(nowTs))
+          coalesce(value(f).cast(TimestampType), lit(nowTs))
         case None => lit(nowTs)
       }
-    Commit.append(stamped(name,
-        padded.select(fields.map { f =>
-          val c = col(f.name).cast(f.dataType)
-          // UNSIGNED_* CHECK ≥ 0 (Phoenix throws IllegalDataException on
-          // a negative write): validated inside the write projection, so
-          // it costs nothing beyond the pass that writes the rows
-          if (f.metadata.contains(GraftCatalog.UnsignedKey))
-            when(c < 0, raise_error(concat(
-                lit(s"unsigned column ${f.name} cannot store negative value "),
-                c.cast(StringType))))
-              .otherwise(c).as(f.name)
-          else if (f.metadata.contains(GraftCatalog.CharWidthKey)) {
-            // CHAR(n): capacity error beyond n (DataExceedsCapacityException
-            // analog). NOT padded on store: PChar's byte padding is a
-            // storage encoding detail its toObject strips on read, and
-            // storing padded here would break `col = 'literal'` compares
-            val n = f.metadata.getLong(GraftCatalog.CharWidthKey).toInt
-            when(length(c) > n, raise_error(concat(
-                lit(s"CHAR(${n}) column ${f.name} exceeds capacity: "), c)))
-              .otherwise(c).as(f.name)
-          } else if (f.metadata.contains(GraftCatalog.VarcharWidthKey)) {
-            // VARCHAR(n): max length, no padding
-            val n = f.metadata.getLong(GraftCatalog.VarcharWidthKey).toInt
-            when(length(c) > n, raise_error(concat(
-                lit(s"VARCHAR(${n}) column ${f.name} exceeds capacity: "), c)))
-              .otherwise(c).as(f.name)
-          } else c
-        }: _*), v, deleted = false, ts), dataDir(name).toString)
+    def checked(f: StructField): org.apache.spark.sql.Column = {
+      val c = value(f)
+      // UNSIGNED_* CHECK ≥ 0 (Phoenix throws IllegalDataException on
+      // a negative write): validated inside the write projection, so
+      // it costs nothing beyond the pass that writes the rows
+      if (f.metadata.contains(GraftCatalog.UnsignedKey))
+        when(c < 0, raise_error(concat(
+            lit(s"unsigned column ${f.name} cannot store negative value "),
+            c.cast(StringType))))
+          .otherwise(c)
+      else if (f.metadata.contains(GraftCatalog.CharWidthKey)) {
+        // CHAR(n): capacity error beyond n (DataExceedsCapacityException
+        // analog). NOT padded on store: PChar's byte padding is a
+        // storage encoding detail its toObject strips on read, and
+        // storing padded here would break `col = 'literal'` compares
+        val n = f.metadata.getLong(GraftCatalog.CharWidthKey).toInt
+        when(length(c) > n, raise_error(concat(
+            lit(s"CHAR(${n}) column ${f.name} exceeds capacity: "), c)))
+          .otherwise(c)
+      } else if (f.metadata.contains(GraftCatalog.VarcharWidthKey)) {
+        // VARCHAR(n): max length, no padding
+        val n = f.metadata.getLong(GraftCatalog.VarcharWidthKey).toInt
+        when(length(c) > n, raise_error(concat(
+            lit(s"VARCHAR(${n}) column ${f.name} exceeds capacity: "), c)))
+          .otherwise(c)
+      } else c
+    }
+    Commit.append(stamped(name, df, v, deleted = false, ts, checked),
+      dataDir(name).toString)
   }
 
   /** DELETE by predicate: tombstone the matching PKs as of now. */
@@ -470,14 +483,17 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     v
   }
 
-  /** `rows` (logical columns) as one log batch of version `v`: physical
-    * column names, then the meta columns (`ts` over physical names). */
+  /** `rows` (logical columns) as one log batch of version `v`, in one
+    * projection: each column's `value` (the column itself by default)
+    * under its physical name, then `_version`, `_deleted` and `_ts` —
+    * the [[logSchema]] layout. */
   private def stamped(name: String, rows: DataFrame, v: Long,
-      deleted: Boolean, ts: org.apache.spark.sql.Column): DataFrame =
-    toPhysical(name, rows)
-      .withColumn("_version", lit(v))
-      .withColumn("_deleted", lit(deleted))
-      .withColumn("_ts", ts)
+      deleted: Boolean, ts: org.apache.spark.sql.Column,
+      value: StructField => org.apache.spark.sql.Column =
+        f => col(f.name)): DataFrame =
+    rows.select(allFields(name).map(f => value(f).as(phys(name, f.name))) ++
+      Seq(lit(v).as("_version"), lit(deleted).as("_deleted"),
+        ts.as("_ts")): _*)
 
   /** Full change log (the CDC source): every write of every version. Reads
     * the physical schema (generation-suffixed columns) and renames back to
@@ -585,6 +601,17 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   // whole table. Every other read (as-of, refresh, a tail past the
   // overlay's row cap) collapses cache ∪ tail through [[servingLog]].
   //
+  // The MEMSTORE is the tail this instance wrote, kept on the driver:
+  // the rows each driver-path upsert landed ([[Commit.append]] hands
+  // them back), per table and version, recorded under the table lock
+  // before the version publishes. It holds at most [[Commit.cap]] rows
+  // per table and nothing for a table with no built cache; a cache
+  // rebuild, compaction, truncate, vacuum, drop or ALTER empties it.
+  // The overlay reads the tail from it only when it holds EVERY
+  // version of the tail (the hole rule): a failed or distributed
+  // write, a DELETE, or a version another catalog instance published
+  // leaves a hole, and the next reads run the tail job instead.
+  //
   // Correctness bound: collapse-then-filter == filter-then-collapse
   // requires `_ts` monotone in `_version` per PK (batch stamps are; a
   // ROW_TIMESTAMP column carries arbitrary user values, so such tables
@@ -600,6 +627,33 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 
   private def snapCacheRoot(name: String) =
     GraftCatalog.snapCacheRoot(dir(name))
+
+  /** The memstore: per table, the rows of each version above the cache
+    * mark that a driver-path upsert of this instance wrote, in the
+    * [[logSchema]] layout with physical values. */
+  private val memstore =
+    new scala.collection.concurrent.TrieMap[String,
+      Map[Long, Array[InternalRow]]]()
+
+  /** Record the rows the append of version `v` wrote on the driver
+    * (`None` after a distributed write, which leaves a hole). Called
+    * under the table lock, before `v` publishes. */
+  private def remember(name: String, v: Long,
+      written: Option[Array[InternalRow]]): Unit =
+    (written, cacheMark(name)) match {
+      case (Some(rows), Some(mark)) if mark >= 0 =>
+        val held = memstore.getOrElse(name, Map.empty)
+          .filter { case (w, _) => w > mark }
+        if (held.valuesIterator.map(_.length).sum + rows.length <= Commit.cap)
+          memstore(name) = held + (v -> rows)
+        else memstore.remove(name)
+      case _ =>
+    }
+
+  /** Empty `name`'s memstore: what it holds no longer lies over the
+    * cache, or no longer has the table's layout. */
+  private def forget(name: String): Unit =
+    tableLock(name).synchronized { memstore.remove(name) }
 
   private def hasRowTimestamp(name: String): Boolean =
     allFields(name).exists(_.metadata.contains(GraftCatalog.RowTimestampKey))
@@ -638,6 +692,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     require(!hasRowTimestamp(name),
       s"snapshot cache requires _ts monotone per PK; table $name " +
         "declares a ROW_TIMESTAMP column (arbitrary user stamps)")
+    forget(name)
     // the cache's high-water mark is the VERSION COUNTER, not the
     // log's max version: a write that lands zero rows (a no-match
     // DELETE) bumps the counter without log rows, and a log-max-keyed
@@ -718,8 +773,9 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     *    which is what lets [[graft.plans.AggRewriteRule]] swap
     *    registered MV state under SQL front-end queries.
     *  - BEHIND the counter: the [[overlay]] of the tail on the cache —
-    *    one job reads the tail, and the plan it returns scans the cache
-    *    with no shuffle, so a PK predicate pushes into the cache scan.
+    *    the tail comes from the memstore, or one job reads it, and the
+    *    plan it returns scans the cache with no shuffle, so a PK
+    *    predicate pushes into the cache scan.
     *    Its union is not a bare scan, so an MV does not serve it; where
     *    a PK filter prunes the tail branch away, the MV's freshness
     *    probe still refuses a state behind the counter.
@@ -745,12 +801,14 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     * when the tail holds more than [[Commit.cap]]
     * rows.
     *
-    * One Spark job reads the raw tail, at most `cap + 1` rows per
+    * The tail's rows come from the memstore when it holds an entry for
+    * every version in `(mark, upTo]`, with no Spark job; on any hole,
+    * one Spark job reads the raw tail, at most `cap + 1` rows per
     * partition. Its winners come from the one [[collapseKeepMeta]] over
-    * the collected rows as a single-partition local relation, so the
+    * those rows as a single-partition local relation, so the
     * collapse needs no exchange and runs inside the reading query's own
     * job. The PK exclusion is a literal set over `struct(pk…)`, each
-    * field cast to its PK column's type; struct equality treats two
+    * field a literal of its PK column's type; struct equality treats two
     * NULL fields as equal, so a PK with a NULL component is excluded
     * like any other, and the filter runs no job of its own.
     *
@@ -765,22 +823,31 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
   private def overlay(name: String, mark: Long,
       upTo: Long): Option[DataFrame] = {
     val cap = Commit.cap
-    val tail = changeLogRaw(name)
-      .where(col("_version") > mark && col("_version") <= upTo)
-    val rows = tail.rdd.mapPartitions(_.take(cap + 1)).collect()
+    val held = memstore.getOrElse(name, Map.empty)
+    val (schema, rows) =
+      if ((mark + 1L to upTo).forall(held.contains))
+        (StructType(logSchema(name).fields.map(_.copy(nullable = true))),
+          (mark + 1L to upTo).toArray.flatMap(held))
+      else {
+        val tail = changeLogRaw(name)
+          .where(col("_version") > mark && col("_version") <= upTo)
+        (tail.schema, tail.queryExecution.toRdd
+          .mapPartitions(_.take(cap + 1).map(_.copy())).collect())
+      }
     if (rows.length > cap) return None
-    val pk = spec(name).pk.map(tail.schema(_))
-    val at = pk.map(f => tail.schema.fieldIndex(f.name))
-    val touched = rows.map(r => at.map(r.get)).distinct
+    val pk = spec(name).pk.map(schema(_))
+    val at = pk.map(f => schema.fieldIndex(f.name))
+    val touched = rows.map(r => at.zip(pk).map { case (i, f) =>
+        r.get(i, f.dataType) }).distinct
       .map(k => struct(k.zip(pk).map { case (v, f) =>
-        lit(v).cast(f.dataType).as(f.name) }: _*))
+        ColumnBridge.toColumn(Literal(v, f.dataType)).as(f.name) }: _*))
     val cache = cacheScan(name, mark)
     val untouched =
       if (touched.isEmpty) cache
       else cache.where(!struct(pk.map(f => col(f.name)): _*)
         .isin(touched.toSeq: _*))
     val winners = collapseLog(name,
-      spark.createDataFrame(rows.toSeq.asJava, tail.schema).coalesce(1),
+      LocalFrame(spark, schema, rows.toSeq).coalesce(1),
       "_version", "_deleted", "_ts")
     Some(untouched.unionByName(winners))
   }
@@ -799,8 +866,10 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
 
   /** Drop the cache (compact/truncate rewrite or erase the history the
     * cache summarizes — a stale cache would resurrect rows). */
-  private def invalidateSnapCache(name: String): Unit =
+  private def invalidateSnapCache(name: String): Unit = {
+    forget(name)
     rmTree(new java.io.File(snapCacheRoot(name)))
+  }
 
   /** Auto-refresh policy (opt-in per table): with property
     * `SNAPSHOT_CACHE_BATCHES=n`, a table that has ≥ n batches beyond
@@ -1263,6 +1332,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     Commit.replace(toPhysical(name, winners.unionByName(tail)),
       dataDir(name).toString)
     setCompactionFloor(name, keepAfter)
+    forget(name)
     // the snapshot cache stays VALID: cache rows keep original versions
     // and the rewrite preserves the per-PK winner at every mark >= the
     // floor — including tombstone winners, which full compaction drops
@@ -1300,6 +1370,7 @@ class GraftCatalog(spark: SparkSession, warehouse: String) {
     }
     if (orphans == 0L) return 0L
     Commit.replace(log.where(!above), dataDir(name).toString)
+    forget(name)
     orphans
   }
 

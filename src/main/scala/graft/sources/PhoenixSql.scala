@@ -2,8 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, OneRowRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalFrame
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -1587,11 +1589,13 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     val nvRe = "(?i)NEXT\\s+VALUE\\s+FOR\\s+([\\w.\"]+)".r
     val cvRe = "(?i)CURRENT\\s+VALUE\\s+FOR\\s+([\\w.\"]+)".r
     val declaredTypes = catalog.allFields(table)
-      .map(f => f.name.toLowerCase -> f.dataType.sql).toMap
-    def declared(c: String): String = declaredTypes.getOrElse(c.toLowerCase,
+      .map(f => f.name.toLowerCase -> f.dataType).toMap
+    def declared(c: String): DataType = declaredTypes.getOrElse(c.toLowerCase,
       throw new IllegalArgumentException(
         s"UPSERT column $c does not exist in $target"))
-    val structs = tuples.map { tup =>
+    // per tuple, (value text, column, declared type); every tuple binds
+    // the same columns in the same order
+    val bound = tuples.map { tup =>
       val rawVals = splitTopLevel(tup.substring(1, tup.length - 1), ',')
       // mask discipline: a VALUE that is a string literal containing
       // the spelling ('NEXT VALUE FOR x' as data) must neither step the
@@ -1624,29 +1628,47 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
       require(values.length == effCols.length,
         s"UPSERT arity mismatch: ${effCols.length} columns but " +
           s"${values.length} values for $target")
-      val withDefaults = values.zip(effCols) ++
+      (values.zip(effCols) ++
         defaults.filterNot { case (c, _) => effCols.contains(c) }
-          .map { case (c, v) => (v, c) }
-      s"struct(${withDefaults
-        .map { case (v, c) => s"CAST($v AS ${declared(c)}) AS `$c`" }
-        .mkString(", ")})"
+          .map { case (c, v) => (v, c) })
+        .map { case (v, c) => (v, c, declared(c)) }
     }
-    // All tuples form ONE relation: a single row whose array of structs
-    // `inline` expands. It plans as one partition, so the statement runs
-    // one task and writes one parquet file (a union of one-row SELECTs
+    // All tuples form ONE relation, planned as one partition, so the
+    // statement writes one parquet file (a union of one-row SELECTs
     // would cost a task and a file per tuple, and every later read
     // would scan them). Each value is cast to its column's declared type
-    // (view-extension columns included), so all structs share one type
-    // and no column is widened across tuples: `(1, 'x'), (2, 3)` into a
-    // VARCHAR stores '3' instead of widening to BIGINT and failing on
-    // 'x'. Spark's inline VALUES table would also be one partition, but
-    // it rejects UDF calls and mixed literal kinds. The generator then
-    // runs on the driver ([[onDriver]]), so the batch reaches
-    // catalog.upsert as a local relation and its write runs no Spark
-    // job. catalog.upsert pads the omitted columns and runs the
-    // write-path checks.
-    catalog.upsert(table, onDriver(
-      spark.sql(s"SELECT inline(array(${structs.mkString(", ")}))")))
+    // (view-extension columns included), so no column is widened across
+    // tuples: `(1, 'x'), (2, 3)` into a VARCHAR stores '3' instead of
+    // widening to BIGINT and failing on 'x'. When every value is a
+    // plain literal ([[valuesLiteral]]) the rows are built here, cast
+    // by Spark's own Cast under the session's time zone and ANSI mode,
+    // with no SQL text to parse or analyze. Otherwise the statement is
+    // one `SELECT inline(array(struct(CAST(v AS <type>) AS c, …), …))`
+    // (Spark's inline VALUES table rejects UDF calls and mixed literal
+    // kinds), whose generator runs on the driver ([[onDriver]]). Either
+    // way the batch reaches catalog.upsert as a local relation and its
+    // write runs no Spark job; catalog.upsert pads the omitted columns
+    // and runs the write-path checks.
+    val conf = spark.sessionState.conf
+    val casts = bound.map(_.map { case (v, _, t) =>
+      PhoenixSql.valuesLiteral(v).map(l => Cast(l, t,
+        Some(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf)))
+        .filter(_.checkInputDataTypes().isSuccess) })
+    val batch =
+      if (casts.forall(_.forall(_.nonEmpty))) {
+        val schema = StructType(bound.head.map { case (_, c, t) =>
+          StructField(c, t) })
+        val rows = casts.map(cs => InternalRow.fromSeq(cs.map(_.get.eval())))
+        // the external-row conversion the SQL path's rows pass through:
+        // a value no Row can carry (a timestamp beyond
+        // java.sql.Timestamp's range) fails here as it fails there
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        rows.foreach(toRow)
+        LocalFrame(spark, schema, rows)
+      } else onDriver(spark.sql("SELECT inline(array(" + bound.map(_.map {
+          case (v, c, t) => s"CAST($v AS ${t.sql}) AS `$c`" }
+        .mkString("struct(", ", ", ")")).mkString(", ") + "))"))
+    catalog.upsert(table, batch)
     spark.emptyDataFrame
   }
 
@@ -2369,5 +2391,48 @@ class PhoenixSql(spark: SparkSession, val catalog: GraftCatalog) {
     }
     // quote-aware split: a ';' inside a string literal is not a separator
     splitTopLevel(sb.toString, ';').map(execute)
+  }
+}
+
+object PhoenixSql {
+  private val Num = "-?(?:\\d+\\.?\\d*|\\.\\d+)"
+  private val IntLit = "-?\\d+".r
+  private val LongLit = "(-?\\d+)[lL]".r
+  private val DecLit = Num.r
+  private val ExpLit = s"$Num[eE][+-]?\\d+".r
+  private val DblLit = s"($Num(?:[eE][+-]?\\d+)?)[dD]".r
+
+  /** The literal a VALUES item spells, typed the way Spark's parser
+    * types it (`AstBuilder`): an integer is INT, else BIGINT, else
+    * DECIMAL; `…L` is BIGINT; `1.5`, `.5`, `1.` are DECIMAL(p, s); an
+    * exponent or a `…D` suffix is DOUBLE; each may carry a leading `-`.
+    * A quoted string with `''` escapes is STRING, and NULL, TRUE and
+    * FALSE are themselves. `None` for every other shape (an ARRAY, a
+    * binary, typed or backslash-escaped literal, an expression, a
+    * function call, a number Spark's parser refuses), which the SQL
+    * path evaluates instead. */
+  private[graft] def valuesLiteral(v: String): Option[Literal] = {
+    def double(t: String) = Some(BigDecimal(t))
+      .filter(d => d >= Double.MinValue && d <= Double.MaxValue)
+      .map(_ => Literal(t.toDouble))
+    scala.util.Try(v.trim match {
+      case t if t.equalsIgnoreCase("NULL") => Some(Literal(null, NullType))
+      case t if t.equalsIgnoreCase("TRUE") => Some(Literal(true))
+      case t if t.equalsIgnoreCase("FALSE") => Some(Literal(false))
+      case t @ IntLit() => Some(BigDecimal(t) match {
+        case d if d.isValidInt => Literal(d.toInt)
+        case d if d.isValidLong => Literal(d.toLong)
+        case d => Literal(d.underlying)
+      })
+      case LongLit(t) => Some(Literal(t.toLong))
+      case t @ DecLit() => Some(Literal(BigDecimal(t).underlying))
+      case t @ ExpLit() => double(t)
+      case DblLit(t) => double(t)
+      case t if t.length >= 2 && t.startsWith("'") && t.endsWith("'") &&
+          !t.contains('\\') &&
+          t.substring(1, t.length - 1).replace("''", "").indexOf('\'') < 0 =>
+        Some(Literal(t.substring(1, t.length - 1).replace("''", "'")))
+      case _ => None
+    }).toOption.flatten
   }
 }

@@ -16,10 +16,8 @@ class AggRewriteSpec extends AnyFunSuite {
 
   test("agg rewrite: state scan replaces fact scan, rollup, guards") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_base").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_state").toString
+    val base = TempDir("graft_aggrw_base").toString
+    val statePath = TempDir("graft_aggrw_state").toString
     // one NULL measure row: makes cnt (rows) and cnt_x (non-null)
     // genuinely different, so COUNT(col)/AVG serving is exercised
     Seq((1L, "a", "x", Some(10L)), (2L, "a", "y", Some(20L)),
@@ -109,8 +107,7 @@ class AggRewriteSpec extends AnyFunSuite {
         .contains(new java.io.File(base).getName))
       // a stale/mismatched registration (state lacking the expected
       // columns) refuses the rewrite instead of crashing planning
-      val base2 = java.nio.file.Files
-        .createTempDirectory("graft_aggrw_base2").toString
+      val base2 = TempDir("graft_aggrw_base2").toString
       Seq((1L, "a", 10L)).toDF("k", "g", "x")
         .write.mode("overwrite").parquet(base2)
       GraftAggViews.register(base2,
@@ -136,10 +133,8 @@ class AggRewriteSpec extends AnyFunSuite {
   test("agg rewrite: integral sums stay exact past 2^53 " +
       "(the DOUBLE-state regression case)") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_big").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_bigstate").toString
+    val base = TempDir("graft_aggrw_big").toString
+    val statePath = TempDir("graft_aggrw_bigstate").toString
     val big = 9007199254740992L // 2^53
     // double accumulation loses every +1 past 2^53 — the exact sum is
     // 2^53+3, a DOUBLE-typed state would serve 2^53
@@ -167,8 +162,7 @@ class AggRewriteSpec extends AnyFunSuite {
       "state through the meta pointer across refreshes") {
     import spark.implicits._
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_root").toString
+    val wh = TempDir("graft_aggrw_root").toString
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("f", StructType(Seq(
       StructField("k", LongType), StructField("g", StringType),
@@ -202,8 +196,7 @@ class AggRewriteSpec extends AnyFunSuite {
       "manifest's leaf dirs across partial refreshes") {
     import spark.implicits._
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_broot").toString
+    val wh = TempDir("graft_aggrw_broot").toString
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("fb", StructType(Seq(
       StructField("k", LongType), StructField("g", StringType),
@@ -240,8 +233,7 @@ class AggRewriteSpec extends AnyFunSuite {
   test("agg rewrite: a STAR view serves aggregate-over-join queries " +
       "from the state; mismatched joins refuse") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_star").toString
+    val dir = TempDir("graft_aggrw_star").toString
     val base = s"$dir/fact"
     val dimPath = s"$dir/dim"
     val statePath = s"$dir/state"
@@ -326,8 +318,7 @@ class AggRewriteSpec extends AnyFunSuite {
       "only from a full-outer state; every tighter combination " +
       "refuses both ways; a filter below the full join refuses") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_full").toString
+    val dir = TempDir("graft_aggrw_full").toString
     val base = s"$dir/fact"
     val dimPath = s"$dir/dim"
     val fullState = s"$dir/state_full"
@@ -411,8 +402,7 @@ class AggRewriteSpec extends AnyFunSuite {
   test("agg rewrite: innerSafe serves an inner star join when every " +
       "fact key resolves") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_star_in").toString
+    val dir = TempDir("graft_aggrw_star_in").toString
     val base = s"$dir/fact"
     val dimPath = s"$dir/dim"
     val statePath = s"$dir/state"
@@ -475,8 +465,7 @@ class AggRewriteSpec extends AnyFunSuite {
   test("agg rewrite: a MULTI-DIM star view serves two-join queries " +
       "and single-join rollups from the same state") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_mdim").toString
+    val dir = TempDir("graft_aggrw_mdim").toString
     val base = s"$dir/fact"
     val d1P = s"$dir/d1"
     val d2P = s"$dir/d2"
@@ -544,10 +533,8 @@ class AggRewriteSpec extends AnyFunSuite {
 
   test("agg rewrite: decimal sums serve exactly; decimal avg refuses") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_dec").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_decstate").toString
+    val base = TempDir("graft_aggrw_dec").toString
+    val statePath = TempDir("graft_aggrw_decstate").toString
     Seq((1L, "a", BigDecimal("1234567890123456789.12")),
       (2L, "a", BigDecimal("0.03")),
       (3L, "b", BigDecimal("-7.25")))
@@ -580,10 +567,8 @@ class AggRewriteSpec extends AnyFunSuite {
       "ALIGNED coarser grains; misaligned/finer units refuse; " +
       "alias-only Projects and stacked filters rewrite") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_grain").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_grainstate").toString
+    val base = TempDir("graft_aggrw_grain").toString
+    val statePath = TempDir("graft_aggrw_grainstate").toString
     val rows = (0 until 200).map { i =>
       (i.toLong, s"s${i % 3}",
         java.sql.Timestamp.valueOf(
@@ -662,10 +647,8 @@ class AggRewriteSpec extends AnyFunSuite {
     } finally GraftAggViews.drop(base)
     // a MONTH-grain state must refuse a WEEK query (week boundaries
     // cross months — re-truncation would be wrong, not just coarse)
-    val base2 = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_grain2").toString
-    val state2 = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_grainstate2").toString
+    val base2 = TempDir("graft_aggrw_grain2").toString
+    val state2 = TempDir("graft_aggrw_grainstate2").toString
     rows.toDF("k", "g", "ts", "x").write.mode("overwrite").parquet(base2)
     Materialize.aggregate(
         spark.read.parquet(base2)
@@ -707,11 +690,9 @@ class AggRewriteSpec extends AnyFunSuite {
     // a grain registration whose state LACKS the grain column must
     // refuse the rewrite (scan the fact), never crash planning with a
     // Map.apply inside the optimizer rule
-    val base3 = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_grain3").toString
+    val base3 = TempDir("graft_aggrw_grain3").toString
     rows.toDF("k", "g", "ts", "x").write.mode("overwrite").parquet(base3)
-    val state3 = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_grainstate3").toString
+    val state3 = TempDir("graft_aggrw_grainstate3").toString
     Materialize.aggregate(spark.read.parquet(base3), Seq("g"), Seq("x"))
       .write.mode("overwrite").parquet(state3) // no 'day' column!
     GraftAggViews.register(base3,
@@ -731,12 +712,9 @@ class AggRewriteSpec extends AnyFunSuite {
   test("agg rewrite: MULTI-VIEW selection — several states per base, " +
       "the coarsest answering one serves each query") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_multi").toString
-    val stateG = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_multi_g").toString
-    val stateGD = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_multi_gd").toString
+    val base = TempDir("graft_aggrw_multi").toString
+    val stateG = TempDir("graft_aggrw_multi_g").toString
+    val stateGD = TempDir("graft_aggrw_multi_gd").toString
     val rows = (0 until 200).map { i =>
       (i.toLong, s"s${i % 3}",
         java.sql.Timestamp.valueOf(
@@ -789,8 +767,7 @@ class AggRewriteSpec extends AnyFunSuite {
       // the SUPERSEDE idiom: registering a REBUILT state under a new
       // directory for the SAME shape replaces the old entry — keeping
       // it would keep serving the stale (still-on-disk) state
-      val stateG2 = java.nio.file.Files
-        .createTempDirectory("graft_aggrw_multi_g2").toString
+      val stateG2 = TempDir("graft_aggrw_multi_g2").toString
       Materialize.aggregate(fact, Seq("g"), Seq("x"))
         .write.mode("overwrite").parquet(stateG2)
       GraftAggViews.register(base,
@@ -805,8 +782,7 @@ class AggRewriteSpec extends AnyFunSuite {
       // per-measure-family split over one grouping must COEXIST, not
       // evict — supersede used to match on (groupCols, grainExprs)
       // alone and silently dropped the still-valid sibling
-      val stateGY = java.nio.file.Files
-        .createTempDirectory("graft_aggrw_multi_gy").toString
+      val stateGY = TempDir("graft_aggrw_multi_gy").toString
       Materialize.aggregate(fact, Seq("g"), Seq("k"))
         .write.mode("overwrite").parquet(stateGY)
       GraftAggViews.register(base,
@@ -824,10 +800,8 @@ class AggRewriteSpec extends AnyFunSuite {
       "grain-expression residual filters map onto the state's grain " +
       "column") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_dgrain").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_dgrainstate").toString
+    val base = TempDir("graft_aggrw_dgrain").toString
+    val statePath = TempDir("graft_aggrw_dgrainstate").toString
     val rows = (0 until 300).map { i =>
       (i.toLong, s"s${i % 3}",
         java.sql.Date.valueOf(
@@ -898,10 +872,8 @@ class AggRewriteSpec extends AnyFunSuite {
   test("agg rewrite: non-deterministic residual refuses; scheme-" +
       "qualified registrations (file:///) key and resolve correctly") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_nd").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_ndstate").toString
+    val base = TempDir("graft_aggrw_nd").toString
+    val statePath = TempDir("graft_aggrw_ndstate").toString
     Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
       .toDF("k", "g", "x")
       .write.mode("overwrite").parquet(base)
@@ -934,8 +906,7 @@ class AggRewriteSpec extends AnyFunSuite {
     // the Hadoop FS of the path's scheme (java.io.File can't see a
     // scheme-qualified spelling and silently degraded it to "concrete
     // state dir" = rewrite never fires)
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_rooturi").toString
+    val wh = TempDir("graft_aggrw_rooturi").toString
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val cat = new graft.sources.GraftCatalog(spark, wh)
     cat.createTable("f", StructType(Seq(
@@ -961,10 +932,8 @@ class AggRewriteSpec extends AnyFunSuite {
       "onto the state's grain column; untruncated timestamp ranges " +
       "refuse") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_range").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggrw_rangestate").toString
+    val base = TempDir("graft_aggrw_range").toString
+    val statePath = TempDir("graft_aggrw_rangestate").toString
     val rows = (0 until 300).map { i =>
       (i.toLong, s"s${i % 3}",
         java.sql.Timestamp.valueOf(
@@ -1036,10 +1005,8 @@ class AggRewriteSpec extends AnyFunSuite {
       "k-mismatch and nullable-unguarded-hash refusals") {
     import spark.implicits._
     graft.functions.GraftFunctions.registerKernels(spark)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggsk_base").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggsk_state").toString
+    val base = TempDir("graft_aggsk_base").toString
+    val statePath = TempDir("graft_aggsk_state").toString
     // u nullable with a real NULL (count-distinct must skip it);
     // value 7 shared across groups (rollup union must dedup it)
     Seq((1L, "a", Some(7L)), (2L, "a", Some(8L)), (3L, "a", Some(7L)),
@@ -1095,10 +1062,8 @@ class AggRewriteSpec extends AnyFunSuite {
       "(day state serves monthly distinct users)") {
     import spark.implicits._
     graft.functions.GraftFunctions.registerKernels(spark)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggskg_base").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggskg_state").toString
+    val base = TempDir("graft_aggskg_base").toString
+    val statePath = TempDir("graft_aggskg_state").toString
     // users recur across days and months, so the month rollup must
     // DEDUP across the unioned day sketches, not sum their counts
     val rows = (0 until 300).map { i =>
@@ -1143,10 +1108,8 @@ class AggRewriteSpec extends AnyFunSuite {
       "empty list") {
     import spark.implicits._
     graft.functions.GraftFunctions.registerKernels(spark)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_aggtk_base").toString
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_aggtk_state").toString
+    val base = TempDir("graft_aggtk_base").toString
+    val statePath = TempDir("graft_aggtk_state").toString
     // u nullable with a real NULL (both agg paths skip it); term "x"
     // recurs across groups so the rollup union must ADD counts
     Seq((1L, "a", Some("x")), (2L, "a", Some("x")), (3L, "a", Some("y")),

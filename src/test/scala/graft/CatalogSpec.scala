@@ -15,7 +15,7 @@ class CatalogSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
   private def freshCatalog(): GraftCatalog = {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = TempDir("graft_wh").toString
     new GraftCatalog(spark, wh)
   }
 
@@ -356,7 +356,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("streaming windowed agg with watermark over events parquet") {
     // the streaming file source needs a directory, not a single file
-    val evDir = java.nio.file.Files.createTempDirectory("graft_events")
+    val evDir = TempDir("graft_events")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       evDir.resolve("events.parquet"))
@@ -390,7 +390,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("streaming dedup with bounded state matches batch exact dedup") {
-    val evDir = java.nio.file.Files.createTempDirectory("graft_events_dd")
+    val evDir = TempDir("graft_events_dd")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       evDir.resolve("events.parquet"))
@@ -412,7 +412,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("streaming as-of enrichment matches the batch as-of join") {
-    val evDir = java.nio.file.Files.createTempDirectory("graft_events_ae")
+    val evDir = TempDir("graft_events_ae")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       evDir.resolve("events.parquet"))
@@ -448,7 +448,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("streaming near-dup detection matches batch corpus-vs-delta pairs") {
-    val docDir = java.nio.file.Files.createTempDirectory("graft_docs_nd")
+    val docDir = TempDir("graft_docs_nd")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
       docDir.resolve("documents.parquet"))
@@ -498,8 +498,7 @@ class CatalogSpec extends AnyFunSuite {
       Multimodal.syntheticImages(corpusDocs)).localCheckpoint()
     val buckets = Dedup.hammingBuckets64(corpusSig,
       maxHamming = 6, cleanChunks = 2)
-    val mediaDir = java.nio.file.Files
-      .createTempDirectory("graft_media_nd").toString
+    val mediaDir = TempDir("graft_media_nd").toString
     Multimodal.syntheticImages(deltaDocs)
       .write.mode("overwrite").parquet(mediaDir)
     val stream = spark.readStream
@@ -539,8 +538,7 @@ class CatalogSpec extends AnyFunSuite {
     val (centroids, assigned) =
       Similarity.ivfIndex(emb, "embedding", "vec_id", nlist = 8)
     val cells = assigned.localCheckpoint()
-    val qDir = java.nio.file.Files
-      .createTempDirectory("graft_ann_stream").toString
+    val qDir = TempDir("graft_ann_stream").toString
     emb.where(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .write.mode("overwrite").parquet(qDir)
@@ -571,7 +569,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("streaming phrase filter matches the batch filter") {
-    val docDir = java.nio.file.Files.createTempDirectory("graft_docs_pf")
+    val docDir = TempDir("graft_docs_pf")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
       docDir.resolve("documents.parquet"))
@@ -608,7 +606,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("streaming windowed active users equals batch; bounded sketch " +
       "state") {
-    val evDir = java.nio.file.Files.createTempDirectory("graft_events_au")
+    val evDir = TempDir("graft_events_au")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       evDir.resolve("events.parquet"))
@@ -648,7 +646,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("streaming dedup ingest: corpus dups drop, in-stream dups " +
       "collapse to first") {
-    val docDir = java.nio.file.Files.createTempDirectory("graft_docs_di")
+    val docDir = TempDir("graft_docs_di")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
       docDir.resolve("documents.parquet"))
@@ -700,7 +698,7 @@ class CatalogSpec extends AnyFunSuite {
     // arriving embeddings encode with the SAME fused kernel against the
     // frozen centroids/codebook (stateless projection — no state store),
     // so a live ingest can append to the persisted index directly
-    val embDir = java.nio.file.Files.createTempDirectory("graft_emb_enc")
+    val embDir = TempDir("graft_emb_enc")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/embeddings.parquet"),
       embDir.resolve("embeddings.parquet"))
@@ -744,7 +742,7 @@ class CatalogSpec extends AnyFunSuite {
       (11L, "unique b\npromo footer\nunique c"),
       (12L, "all original\nlines here")
     ).toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_linefilter")
+    val dir = TempDir("graft_linefilter")
     delta.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val stream = spark.readStream.schema(delta.schema).parquet(dir.toString)
     val q = EventStreams.lineFilterStream(stream, boiler, "text")
@@ -777,8 +775,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("m", Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
       .toDF("k", "g", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm").toString
+    val path = TempDir("graft_ivm").toString
     def expected = Materialize
       .aggregate(cat.snapshot("m"), Seq("g"), Seq("x"))
       .collect().map(_.toSeq).toSet
@@ -834,8 +831,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("mn", Seq((Option(1L), "a", 5L),
       (Option.empty[Long], "n", 30L)).toDF("k", "g", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_nullpk").toString
+    val path = TempDir("graft_ivm_nullpk").toString
     Materialize.build(cat, ChainSpec("mn"), Seq("g"), Seq("x"), path)
     // update the NULL-pk row 30 -> 10: retracts group n's max, so the
     // gate fires and the recompute runs with an affected set whose
@@ -871,8 +867,7 @@ class CatalogSpec extends AnyFunSuite {
     def bucketOf(g: String): Int = spark.range(1)
       .select(pmod(xxhash64(lit(g)), lit(B.toLong)).cast("int"))
       .head.getInt(0)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_b").toString
+    val path = TempDir("graft_ivm_b").toString
     def expected = Materialize
       .aggregate(cat.snapshot("mb"), Seq("g"), Seq("x"))
       .collect().map(_.toSeq).toSet
@@ -959,8 +954,7 @@ class CatalogSpec extends AnyFunSuite {
       _.join(broadcast(dim), Seq("fk"), "left")
     cat.upsert("fact", Seq((1L, 1L, 10L), (2L, 2L, 20L), (3L, 3L, 30L),
       (4L, 99L, 40L)).toDF("k", "fk", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_star").toString
+    val path = TempDir("graft_ivm_star").toString
     def expected = Materialize.aggregate(
         cat.snapshot("fact").join(broadcast(dim), Seq("fk"), "left"),
         Seq("color"), Seq("x"))
@@ -1026,8 +1020,7 @@ class CatalogSpec extends AnyFunSuite {
       keys = Seq("fk" -> "dk"), attrs = Seq("color"))
     cat.upsert("fact", Seq((1L, 1L, 10L), (2L, 2L, 20L), (3L, 3L, 30L))
       .toDF("k", "fk", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_sd").toString
+    val path = TempDir("graft_ivm_sd").toString
     def expected = Materialize.aggregate(
         derive(cat.snapshot("fact")), Seq("color"), Seq("x"))
       .collect().map(_.toSeq).toSet
@@ -1092,8 +1085,7 @@ class CatalogSpec extends AnyFunSuite {
       keys = Seq("fk" -> "dk"), attrs = Seq("color"))
     cat.upsert("fact", Seq((1L, 1L, 10L), (2L, 2L, 20L))
       .toDF("k", "fk", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_scd").toString
+    val path = TempDir("graft_ivm_scd").toString
     Materialize.build(cat, ChainSpec("fact"), Seq("color"), Seq("x"), path,
       derive = pinnedDerive)
     // live dim churns (the NORMAL state of a dimension) — the pinned
@@ -1150,8 +1142,7 @@ class CatalogSpec extends AnyFunSuite {
       StarDerive(cat.snapshot("d2"), Seq("f2" -> "dk"), Seq("size"))))
     cat.upsert("fact", Seq((1L, 1L, 10L, 1L), (2L, 2L, 20L, 2L),
       (3L, 1L, 20L, 4L), (4L, 2L, 10L, 8L)).toDF("k", "f1", "f2", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_mdim").toString
+    val path = TempDir("graft_ivm_mdim").toString
     def expected = Materialize.aggregate(
         derive(cat.snapshot("fact")), Seq("color", "size"), Seq("x"))
       .collect().map(_.toSeq).toSet
@@ -1189,10 +1180,9 @@ class CatalogSpec extends AnyFunSuite {
     val corpus = emb.where(col("vec_id") >= 60)
     val (cents, assigned) =
       Similarity.ivfIndex(corpus, "embedding", "vec_id", nlist = 8)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_stream").toString
+    val path = TempDir("graft_ivf_stream").toString
     Similarity.saveIvfIndex(path, cents, assigned)
-    val sDir = java.nio.file.Files.createTempDirectory("graft_ivf_src")
+    val sDir = TempDir("graft_ivf_src")
     emb.where(col("vec_id") < 30).repartition(1)
       .write.parquet(s"$sDir/b1")
     emb.where(col("vec_id") >= 30 && col("vec_id") < 60).repartition(1)
@@ -1230,8 +1220,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("fact", Seq((1L, 1L, 10L)).toDF("k", "fk", "x"))
     val dupDim = Seq((1L, "red"), (1L, "blue")).toDF("dk", "color")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_dup").toString
+    val path = TempDir("graft_ivm_dup").toString
     val ex = intercept[IllegalArgumentException] {
       Materialize.build(cat, ChainSpec("fact"), Seq("color"), Seq("x"), path,
         derive = StarDerive(dupDim, Seq("fk" -> "dk"), Seq("color")))
@@ -1244,8 +1233,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("g", ArrayType(DoubleType)),
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("fs", Seq((1L, Seq(1.0), 10L)).toDF("k", "g", "x"))
-    val p2 = java.nio.file.Files
-      .createTempDirectory("graft_ivm_nested").toString
+    val p2 = TempDir("graft_ivm_nested").toString
     val ex2 = intercept[IllegalArgumentException] {
       Materialize.build(cat, ChainSpec("fs"), Seq("g"), Seq("x"), p2,
         buckets = 4)
@@ -1268,13 +1256,11 @@ class CatalogSpec extends AnyFunSuite {
       StructField("u", LongType))), pk = Seq("k"))
     cat.upsert("sm", Seq((1L, "a", 10L), (2L, "a", 11L), (3L, "b", 10L))
       .toDF("k", "g", "u"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_stream").toString
+    val path = TempDir("graft_ivm_stream").toString
     Materialize.build(cat, ChainSpec("sm"), Seq("g"), Seq("u"), path,
       sketches = Seq("u" -> 4096), buckets = 8)
     // three micro-batch files: inserts, a retracting update, a new group
-    val in = java.nio.file.Files
-      .createTempDirectory("graft_ivm_streamin").toString
+    val in = TempDir("graft_ivm_streamin").toString
     Seq((4L, "a", 12L), (5L, "b", 13L)).toDF("k", "g", "u")
       .coalesce(1).write.parquet(s"$in/b0")
     Seq((1L, "a", 77L)).toDF("k", "g", "u")
@@ -1316,16 +1302,14 @@ class CatalogSpec extends AnyFunSuite {
       .toDF("k", "ck", "x"))
     cat.upsert("sjd", Seq((10L, "a"), (20L, "b"), (30L, "c"))
       .toDF("ck", "seg"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jivm_stream").toString
+    val path = TempDir("graft_jivm_stream").toString
     Materialize.build(cat,
       ChainSpec("sjf", Seq(SideSpec("sjd", Seq("ck"),
         factKeysImmutable = true))),
       Seq("seg"), Seq("x"), path)
     // three micro-batches: inserts (one initially dangling ck=40), a
     // retracting measure update, a row for the dim key churned below
-    val in = java.nio.file.Files
-      .createTempDirectory("graft_jivm_streamin").toString
+    val in = TempDir("graft_jivm_streamin").toString
     Seq((3L, 30L, 300L), (4L, 40L, 400L)).toDF("k", "ck", "x")
       .coalesce(1).write.parquet(s"$in/b0")
     Seq((1L, 10L, 150L)).toDF("k", "ck", "x")
@@ -1366,13 +1350,11 @@ class CatalogSpec extends AnyFunSuite {
       pk = Seq("ck"))
     cat.upsert("ljf", Seq((1L, 10L, 100L)).toDF("k", "ck", "x"))
     cat.upsert("ljd", Seq((10L, "a")).toDF("ck", "seg"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ljivm_stream").toString
+    val path = TempDir("graft_ljivm_stream").toString
     Materialize.build(cat,
       ChainSpec("ljf", Seq(SideSpec("ljd", Seq("ck"))), leftOuter = true),
       Seq("seg"), Seq("x"), path)
-    val in = java.nio.file.Files
-      .createTempDirectory("graft_ljivm_streamin").toString
+    val in = TempDir("graft_ljivm_streamin").toString
     // b0 inserts a DANGLING fact (ck=40: NULL group); b1 another
     Seq((2L, 40L, 400L)).toDF("k", "ck", "x")
       .coalesce(1).write.parquet(s"$in/b0")
@@ -1417,13 +1399,11 @@ class CatalogSpec extends AnyFunSuite {
     // ck=77 is SIDE-dangling from the start (no fact carries it)
     cat.upsert("fjd", Seq((10L, "a"), (77L, "orphan"))
       .toDF("ck", "seg"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_fjivm_stream").toString
+    val path = TempDir("graft_fjivm_stream").toString
     Materialize.build(cat,
       ChainSpec("fjf", Seq(SideSpec("fjd", Seq("ck"))), fullOuter = true),
       Seq("seg"), Seq("x"), path)
-    val in = java.nio.file.Files
-      .createTempDirectory("graft_fjivm_streamin").toString
+    val in = TempDir("graft_fjivm_streamin").toString
     // b0: a FACT-dangling insert (ck=40); b1: a fact claiming the
     // side-dangling ck=77 (that side row must LEAVE its dangling part)
     Seq((2L, 40L, 400L)).toDF("k", "ck", "x")
@@ -1467,12 +1447,10 @@ class CatalogSpec extends AnyFunSuite {
       _.join(broadcast(dim), Seq("fk"), "left")
     cat.upsert("sf", Seq((1L, 1L, 10L), (2L, 2L, 20L))
       .toDF("k", "fk", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_starstream").toString
+    val path = TempDir("graft_ivm_starstream").toString
     Materialize.build(cat, ChainSpec("sf"), Seq("color"), Seq("x"), path,
       buckets = 8, derive = derive)
-    val in = java.nio.file.Files
-      .createTempDirectory("graft_ivm_starstream_in").toString
+    val in = TempDir("graft_ivm_starstream_in").toString
     Seq((3L, 1L, 5L)).toDF("k", "fk", "x")
       .coalesce(1).write.parquet(s"$in/b0")
     // a dim-group move: fact 2 flips blue -> red
@@ -1508,8 +1486,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("mc", Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
       .toDF("k", "g", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_vac").toString
+    val path = TempDir("graft_ivm_vac").toString
     def expected = Materialize
       .aggregate(cat.snapshot("mc"), Seq("g"), Seq("x"))
       .collect().map(_.toSeq).toSet
@@ -1551,8 +1528,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("k", LongType), StructField("g", StringType),
       StructField("x", LongType))), pk = Seq("k"))
     cat2.upsert("ml", Seq((1L, "a", 10L)).toDF("k", "g", "x"))
-    val path2 = java.nio.file.Files
-      .createTempDirectory("graft_ivm_vac2").toString
+    val path2 = TempDir("graft_ivm_vac2").toString
     Materialize.build(cat2, ChainSpec("ml"), Seq("g"), Seq("x"), path2)
     cat2.upsert("ml", Seq((2L, "b", 20L)).toDF("k", "g", "x"))
     Materialize.refresh(cat2, path2)
@@ -1568,8 +1544,7 @@ class CatalogSpec extends AnyFunSuite {
       "touched-bucket slice only") {
     import spark.implicits._
     import graft.operators.Materialize
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_ttlmvb").toString
+    val wh = TempDir("graft_ttlmvb").toString
     val cat = new GraftCatalog(spark, wh)
     cat.createTable("eb", StructType(Seq(
       StructField("k", LongType), StructField("g", StringType),
@@ -1587,8 +1562,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.clock = () => t0 - 5000L
     cat.upsert("eb", Seq((1L, "g0", 100L), (2L, "g0", 50L))
       .toDF("k", "g", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_bttl").toString
+    val path = TempDir("graft_ivm_bttl").toString
     cat.clock = () => t0 - 4000L
     Materialize.build(cat, ChainSpec("eb"), Seq("g"), Seq("x"), path,
       buckets = B)
@@ -1621,8 +1595,7 @@ class CatalogSpec extends AnyFunSuite {
         f"2024-01-${1 + i % 9}%02d 10:00:00"), (i % 25).toLong)
     }.toDF("k", "ts", "u")
     cat.upsert("gsb", rows(0, 300))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_bgs").toString
+    val path = TempDir("graft_ivm_bgs").toString
     val grains = Seq("day" -> "date_trunc('DAY', ts)")
     val sketches = Seq("u" -> 2048)
     def norm(df: org.apache.spark.sql.DataFrame) =
@@ -1817,9 +1790,11 @@ class CatalogSpec extends AnyFunSuite {
 
   // Spark work of one serving read: the fresh counts were measured on
   // the code before the read paths shared one cache-aware log slice,
-  // the cache-plus-tail counts on the overlay (the same totals the
-  // whole-table collapse gave, split as one tail job and one read); a
-  // change here is a change in read cost.
+  // the tail-job counts on the overlay (the same totals the whole-table
+  // collapse gave, split as one tail job and one read), and the
+  // memstore counts on the overlay that reads the tail this catalog
+  // wrote from memory (the tail job gone, the read unchanged); a change
+  // here is a change in read cost.
   test("snapshot cache: Spark jobs, stages and tasks of a served read " +
       "against an exactly fresh cache and against cache plus tail") {
     import spark.implicits._
@@ -1831,20 +1806,34 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("jc", (1L to 40L by 3).map(k => (k, -k)).toDF("k", "x"))
     cat.delete("jc", col("k") === 2L)
     cat.refreshSnapshotCache("jc")
-    def served() = Measure.once(spark)(cat.snapshotServed("jc").collect())
-    val Measure.Measured(fresh, _, freshRows) = served()
+    def served(c: GraftCatalog) =
+      Measure.once(spark)(c.snapshotServed("jc").collect())
+    val Measure.Measured(fresh, _, freshRows) = served(cat)
     assert(freshRows.length == 39)
     assert(fresh == Measure.JobCounts(jobs = 1, stages = 1, tasks = 1),
       s"exactly fresh cache: $fresh")
     cat.upsert("jc", Seq((2L, 2L), (41L, 41L)).toDF("k", "x"))
-    val Measure.Measured(tail, _, tailRows) = served()
-    assert(tailRows.length == 41)
+    // the writing catalog holds the tail in its memstore: no tail job
+    val Measure.Measured(held, _, heldRows) = served(cat)
+    assert(heldRows.length == 41)
+    assert(held == Measure.JobCounts(jobs = 1, stages = 1, tasks = 2),
+      s"cache plus tail from the memstore: $held")
+    val heldBuild = Measure.once(spark)(cat.snapshotServed("jc")).counts
+    assert(heldBuild == Measure.JobCounts(0, 0, 0),
+      s"cache plus tail from the memstore, building the frame: $heldBuild")
+    // a second catalog instance over the same warehouse holds no
+    // memstore, so its read runs the tail job
+    val other = new GraftCatalog(spark,
+      new java.io.File(cat.tablePath("jc")).getParent)
+    other.createTable("jc", cat.spec("jc").schema, Seq("k"))
+    val Measure.Measured(tail, _, tailRows) = served(other)
+    assert(tailRows.toSet == heldRows.toSet)
     assert(tail == Measure.JobCounts(jobs = 2, stages = 2, tasks = 6),
       s"cache plus tail: $tail")
     // the same work split in two: the overlay reads the tail when the
     // frame is built, and the frame's own read is then one job
     val Measure.Measured(build, _, frame) =
-      Measure.once(spark)(cat.snapshotServed("jc"))
+      Measure.once(spark)(other.snapshotServed("jc"))
     assert(build == Measure.JobCounts(jobs = 1, stages = 1, tasks = 4),
       s"cache plus tail, building the frame: $build")
     val read = Measure.once(spark)(frame.collect()).counts
@@ -1900,11 +1889,100 @@ class CatalogSpec extends AnyFunSuite {
         if (i % 3 == 0) null else i.toLong, x)
     def key(t: String) = col(if (t == "os") "k" else "s")
     def keyLit(t: String, i: Int) = if (t == "os") lit(i.toLong) else lit(s"k$i")
+    val wh = new java.io.File(cat.tablePath("os")).getParent
     val rng = new scala.util.Random(9)
     for (t <- Seq("os", "oc")) {
+      // the declared schema before the ALTER input adds a column
+      val schema = cat.spec(t).schema
+      def rows(keys: Seq[Int], x: Int => Long) =
+        spark.createDataFrame(keys.map(i => row(t, i, x(i))).asJava, schema)
       val alive = scala.collection.mutable.Set[Int]()
+      val mismatched = scala.collection.mutable.ListBuffer[String]()
       var resurrected, noMatch, overlaid = 0
+      // the served snapshot equals the uncached collapse at the counter;
+      // counts the reads the overlay served (no exchange)
+      def check(tag: String): Unit = {
+        val served = cat.snapshotServed(t)
+        val counter = cat.currentVersion(t)
+        if (rowSet(served) != rowSet(cat.snapshotAsOf(t, counter)))
+          mismatched += s"$t, $tag"
+        if (cat.snapCacheVersion(t).exists(_ < counter) &&
+            !served.queryExecution.executedPlan.toString.contains("Exchange"))
+          overlaid += 1
+      }
+      def upsert(keys: Seq[Int], x: Int => Long): Unit = {
+        cat.upsert(t, rows(keys, x))
+        alive ++= keys
+      }
       for (step <- 1 to 18) {
+        // inputs the memstore must not serve from, each after a cache
+        // rebuild and checked before the step's own write: a hole in
+        // (cache mark, counter], or a memstore emptied since; they use
+        // no random draw, so the seeded writes stay the same
+        step match {
+          case 3 =>
+            // a second catalog instance writes in between (a handoff)
+            cat.refreshSnapshotCache(t)
+            val other = new GraftCatalog(spark, wh)
+            other.createTable(t, schema, cat.spec(t).pk, cat.spec(t).props)
+            other.upsert(t, rows(Seq(4), i => -1000L - i))
+            alive += 4
+            upsert(Seq(5), i => -1000L - i)
+            check("handoff")
+          case 6 =>
+            // a failed driver append leaves a gap version
+            cat.refreshSnapshotCache(t)
+            val gap = cat.currentVersion(t) + 1L
+            intercept[Exception](cat.upsert(t,
+              rows(Seq(7), _ => 0L).withColumn("x", lit("not a number"))))
+            assert(cat.currentVersion(t) == gap, s"$t: the gap version")
+            upsert(Seq(8), i => -2000L - i)
+            check("failed append")
+          case 9 =>
+            // a DELETE inside the tail
+            cat.refreshSnapshotCache(t)
+            upsert(Seq(1, 2), i => -3000L - i)
+            cat.delete(t, key(t) === keyLit(t, 1))
+            alive -= 1
+            check("delete in the tail")
+          case 12 =>
+            // a cache rebuild between two tail writes
+            upsert(Seq(3), i => -4000L - i)
+            cat.refreshSnapshotCache(t)
+            upsert(Seq(0), i => -4000L - i)
+            check("rebuild between tail writes")
+          case 15 =>
+            // a reader thread runs while a writer appends: every read
+            // equals the collapse at a counter it saw
+            cat.refreshSnapshotCache(t)
+            val reads = new java.util.concurrent.ConcurrentLinkedQueue[
+              (Long, Set[Row], Long)]()
+            val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+            val reader = new Thread(() => while (!stop.get) {
+              val lo = cat.currentVersion(t)
+              val got = rowSet(cat.snapshotServed(t))
+              reads.add((lo, got, cat.currentVersion(t)))
+            })
+            reader.start()
+            upsert(Seq(2, 5), i => -5000L - i)
+            upsert(Seq(6), i => -5000L - i)
+            stop.set(true)
+            reader.join()
+            reads.forEach { case (lo, got, hi) =>
+              if (!(lo to hi).exists(c =>
+                  got == rowSet(cat.snapshotAsOf(t, c))))
+                mismatched += s"$t, concurrent read in [$lo, $hi]"
+            }
+            check("after the concurrent writes")
+          case 17 =>
+            // ALTER TABLE ADD between two tail writes
+            cat.refreshSnapshotCache(t)
+            upsert(Seq(7), i => -6000L - i)
+            cat.alterAddColumns(t, Seq(StructField("added", LongType)))
+            upsert(Seq(3), i => -6000L - i)
+            check("ALTER ADD between tail writes")
+          case _ =>
+        }
         val keys = Seq.fill(1 + rng.nextInt(3))(rng.nextInt(9)).distinct
         rng.nextInt(6) match {
           case 0 | 1 =>
@@ -1916,12 +1994,11 @@ class CatalogSpec extends AnyFunSuite {
           case _ =>
             resurrected += keys.count(i => !alive(i) &&
               cat.changeLog(t).where(key(t) === keyLit(t, i)).count() > 0)
-            cat.upsert(t, spark.createDataFrame(
-              keys.map(row(t, _, rng.nextLong())).asJava, cat.spec(t).schema))
-            alive ++= keys
+            upsert(keys, _ => rng.nextLong())
         }
-        if (servedMatches(cat, t, s"$t, step $step")) overlaid += 1
+        check(s"step $step")
       }
+      assert(mismatched.isEmpty, s"served != snapshotAsOf at: $mismatched")
       assert(resurrected > 0 && noMatch > 0,
         s"$t: the sequence must resurrect a key ($resurrected) and run " +
           s"a no-match DELETE ($noMatch)")
@@ -1986,8 +2063,10 @@ class CatalogSpec extends AnyFunSuite {
     assert(keys() == Set(1L -> 111L, 7L -> 7L))
   }
 
+  // Registration runs no job: the overlay takes the tail from the
+  // memstore of the catalog that wrote it.
   test("snapshot cache overlay: a PhoenixSql read in the tail state runs " +
-      "one job to register the table and one job to read") {
+      "no job to register the table and one job to read") {
     val cat = freshCatalog()
     val px = new graft.sources.PhoenixSql(spark, cat)
     px.execute("CREATE TABLE pj (k BIGINT NOT NULL, x BIGINT " +
@@ -1995,12 +2074,12 @@ class CatalogSpec extends AnyFunSuite {
     px.execute("UPSERT INTO pj VALUES (1, 10), (2, 20), (3, 30)")
     cat.refreshSnapshotCache("pj")
     px.execute("UPSERT INTO pj VALUES (2, 21), (4, 40)")
-    for ((q, registers, rows) <- Seq(
-        ("SELECT k, x FROM pj WHERE k = 2", 1, Seq(Row(2L, 21L))),
-        ("SELECT k, x FROM pj WHERE k BETWEEN 1 AND 3", 0,
+    for ((q, rows) <- Seq(
+        ("SELECT k, x FROM pj WHERE k = 2", Seq(Row(2L, 21L))),
+        ("SELECT k, x FROM pj WHERE k BETWEEN 1 AND 3",
           Seq(Row(1L, 10L), Row(2L, 21L), Row(3L, 30L))))) {
       val Measure.Measured(reg, _, df) = Measure.once(spark)(px.execute(q))
-      assert(reg.jobs == registers, s"$q, registration: $reg")
+      assert(reg.jobs == 0, s"$q, registration: $reg")
       val read = Measure.once(spark)(df.collect())
       assert(read.counts.jobs == 1, s"$q, read: ${read.counts}")
       assert(read.value.toSeq.sortBy(_.getLong(0)) == rows, q)
@@ -2017,7 +2096,7 @@ class CatalogSpec extends AnyFunSuite {
       "CONSTRAINT pk PRIMARY KEY (k))")
     px.execute("UPSERT INTO am VALUES (1, 10), (2, 20), (3, 30)")
     cat.refreshSnapshotCache("am")
-    val mv = java.nio.file.Files.createTempDirectory("graft_mv_am").toString
+    val mv = TempDir("graft_mv_am").toString
     Materialize.build(cat, ChainSpec("am"), Seq("k"), Seq("x"), mv)
     Materialize.registerForRewrite(cat, mv)
     val q = "SELECT k, SUM(x) AS sum_x FROM am WHERE k = 1 GROUP BY k"
@@ -2176,7 +2255,7 @@ class CatalogSpec extends AnyFunSuite {
       .collect().toSet
     for (buckets <- Seq(0, 4)) {
       val states = rowsOf.map { case (t, n) =>
-        val path = java.nio.file.Files.createTempDirectory("graft_cm").toString
+        val path = TempDir("graft_cm").toString
         Materialize.build(cat, ChainSpec(t), groups, Seq("u"), path,
           buckets = buckets)
         val built = state(path)
@@ -2280,8 +2359,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("mg", Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "a", 30L),
       (4L, "b", 5L), (5L, "b", 50L)).toDF("k", "g", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_gate").toString
+    val path = TempDir("graft_gate").toString
     Materialize.build(cat, ChainSpec("mg"), Seq("g"), Seq("x"), path)
     def expected = Materialize
       .aggregate(cat.snapshot("mg"), Seq("g"), Seq("x"))
@@ -2367,8 +2445,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("u", LongType))), pk = Seq("k"))
     cat.upsert("sk", Seq((1L, "a", 10L), (2L, "a", 11L), (3L, "a", 10L),
       (4L, "b", 7L)).toDF("k", "g", "u"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sk").toString
+    val path = TempDir("graft_sk").toString
     val sk = Seq("u" -> 1024)
     Materialize.build(cat, ChainSpec("sk"), Seq("g"), Seq("u"), path,
       sketches = sk)
@@ -2431,8 +2508,7 @@ class CatalogSpec extends AnyFunSuite {
       pk = Seq("k"))
     cat.upsert("tk", Seq((1L, "a", "x", 5L), (2L, "a", "x", 6L),
       (3L, "a", "y", 7L), (4L, "b", "z", 8L)).toDF("k", "g", "u", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_tk").toString
+    val path = TempDir("graft_tk").toString
     val tks = Seq("u" -> 64)
     Materialize.build(cat, ChainSpec("tk"), Seq("g"), Seq("x"), path,
       topks = tks)
@@ -2498,8 +2574,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.createTable("mf", StructType(Seq(
       StructField("k", LongType), StructField("g", StringType),
       StructField("x", LongType))), pk = Seq("k"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivm_fuzz").toString
+    val path = TempDir("graft_ivm_fuzz").toString
     val groups = Seq("a", "b", "c", null)
     def randRows(n: Int) = (1 to n).map(_ =>
       (rnd.nextInt(12).toLong, groups(rnd.nextInt(groups.length)),
@@ -2542,8 +2617,7 @@ class CatalogSpec extends AnyFunSuite {
       (2L, t("2024-03-01 15:00:00"), 7L),
       (3L, t("2024-03-02 09:00:00"), 11L),
       (4L, t("2024-04-10 12:00:00"), 13L)).toDF("id", "ts", "v"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mv_grain").toString
+    val mv = TempDir("graft_mv_grain").toString
     Materialize.build(cat, ChainSpec("ev"), Seq("day"), Seq("v"), mv,
       grains = Seq("day" -> "date_trunc('DAY', ts)"))
     // delta: an insert, an update that changes v in place, and an
@@ -2570,8 +2644,7 @@ class CatalogSpec extends AnyFunSuite {
       s"2024-03-01 must hold only id=1 after the cross-day move: $got")
     // ... and the rewrite serves a MONTH query from the day state kept
     // fresh by the refresh (export snapshot as the fact, register root)
-    val facts = java.nio.file.Files
-      .createTempDirectory("graft_mv_grain_fact").toString
+    val facts = TempDir("graft_mv_grain_fact").toString
     cat.snapshot("ev").write.mode("overwrite").parquet(facts)
     GraftAggViews.register(facts,
       GraftAggViews.AggViewDef(mv, Seq("day"), Seq("v"),
@@ -2605,8 +2678,7 @@ class CatalogSpec extends AnyFunSuite {
     cat.upsert("evz", Seq(
       (1L, t("2024-03-01 02:00:00"), 5L),
       (2L, t("2024-03-01 15:00:00"), 7L)).toDF("id", "ts", "v"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mv_grain_tz").toString
+    val mv = TempDir("graft_mv_grain_tz").toString
     Materialize.build(cat, ChainSpec("evz"), Seq("day"), Seq("v"), mv,
       grains = Seq("day" -> "date_trunc('DAY', ts)"))
     cat.upsert("evz",
@@ -2647,13 +2719,12 @@ class CatalogSpec extends AnyFunSuite {
       StructField("n_tok", LongType))), pk = Seq("doc_id"))
     cat.upsert("docs", Seq((1L, "web", 100L), (2L, "code", 50L))
       .toDF("doc_id", "src", "n_tok"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mv_stream").toString
+    val mv = TempDir("graft_mv_stream").toString
     Materialize.build(cat, ChainSpec("docs"), Seq("src"), Seq("n_tok"), mv)
     val incoming = Seq((3L, "web", 70L), (4L, "books", 90L),
       (2L, "code", 60L)) // doc 2 re-upserted: a retraction for the MV
       .toDF("doc_id", "src", "n_tok")
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv_in")
+    val dir = TempDir("graft_mv_in")
     incoming.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val q = spark.readStream.schema(incoming.schema).parquet(dir.toString)
       .writeStream
@@ -2717,7 +2788,7 @@ class CatalogSpec extends AnyFunSuite {
       "without scanning the full base") {
     import spark.implicits._
     import graft.operators.Materialize
-    val wh = java.nio.file.Files.createTempDirectory("graft_ttlmv").toString
+    val wh = TempDir("graft_ttlmv").toString
     val cat = new GraftCatalog(spark, wh)
     cat.createTable("e", StructType(Seq(
       StructField("k", LongType), StructField("g", StringType),
@@ -2759,7 +2830,7 @@ class CatalogSpec extends AnyFunSuite {
         "must carry through WITHOUT a base rescan")
     // equality-with-rebuild on an untampered catalog: same flow, files
     // intact — the incremental result must equal the snapshot aggregate
-    val wh2 = java.nio.file.Files.createTempDirectory("graft_ttlmv2").toString
+    val wh2 = TempDir("graft_ttlmv2").toString
     val cat2 = new GraftCatalog(spark, wh2)
     cat2.createTable("e", StructType(Seq(
       StructField("k", LongType), StructField("g", StringType),
@@ -2797,7 +2868,7 @@ class CatalogSpec extends AnyFunSuite {
       "expiry-window algebra is void under a changed TTL)") {
     import spark.implicits._
     import graft.operators.Materialize
-    val wh = java.nio.file.Files.createTempDirectory("graft_ttlalt").toString
+    val wh = TempDir("graft_ttlalt").toString
     val cat = new GraftCatalog(spark, wh)
     cat.createTable("e", StructType(Seq(
       StructField("k", LongType), StructField("g", StringType),
@@ -2830,7 +2901,7 @@ class CatalogSpec extends AnyFunSuite {
       "dir — never Overwrite of the directory being served") {
     import spark.implicits._
     import graft.operators.Materialize
-    val wh = java.nio.file.Files.createTempDirectory("graft_ttlrb").toString
+    val wh = TempDir("graft_ttlrb").toString
     val cat = new GraftCatalog(spark, wh)
     cat.createTable("e", StructType(Seq(
       StructField("k", LongType), StructField("g", StringType),
@@ -2999,7 +3070,7 @@ class CatalogSpec extends AnyFunSuite {
       (12L, "brand new essay", ts(3)),
       (13L, "brand new essay", ts(4))
     ).toDF("doc_id", "text", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_e2e")
+    val dir = TempDir("graft_ingest_e2e")
     incoming.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val stream = spark.readStream.schema(incoming.schema)
       .parquet(dir.toString)
@@ -3029,7 +3100,7 @@ class CatalogSpec extends AnyFunSuite {
     import spark.implicits._
     val incoming = Seq((1L, true, 100L), (2L, false, 30L), (3L, true, 70L))
       .toDF("id", "keep", "toks")
-    val dir = java.nio.file.Files.createTempDirectory("graft_obs_stream")
+    val dir = TempDir("graft_obs_stream")
     incoming.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val stream = spark.readStream.schema(incoming.schema)
       .parquet(dir.toString)
@@ -3053,7 +3124,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("streaming curation pass is bit-identical to the batch form") {
-    val docDir = java.nio.file.Files.createTempDirectory("graft_docs_cur")
+    val docDir = TempDir("graft_docs_cur")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
       docDir.resolve("documents.parquet"))
@@ -3099,7 +3170,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("streaming blocklist filter matches the batch anti join") {
-    val evDir = java.nio.file.Files.createTempDirectory("graft_events_bl")
+    val evDir = TempDir("graft_events_bl")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       evDir.resolve("events.parquet"))
@@ -3130,7 +3201,7 @@ class CatalogSpec extends AnyFunSuite {
     // streaming aggregation (state = one sketch); with capacity above
     // the distinct-term count it is exact, so stream output must EQUAL
     // the batch top terms, not just approximate them
-    val docDir = java.nio.file.Files.createTempDirectory("graft_docs_hh")
+    val docDir = TempDir("graft_docs_hh")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
       docDir.resolve("documents.parquet"))
@@ -3163,7 +3234,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("stream-stream interval join matches within the window only") {
     import spark.implicits._
-    val evDir = java.nio.file.Files.createTempDirectory("graft_ssj")
+    val evDir = TempDir("graft_ssj")
     def hours(h: Double) = new java.sql.Timestamp((h * 3600000L).toLong)
     def write(sub: String, rows: Seq[(Long, java.sql.Timestamp, Double)]) =
       rows.toDF("user_id", "ts", "value").repartition(1)
@@ -3192,7 +3263,7 @@ class CatalogSpec extends AnyFunSuite {
     import spark.implicits._
     // a NULL value/ts/user row must be dropped, not kill the query with
     // a non-nullable tuple decode NPE
-    val evDir = java.nio.file.Files.createTempDirectory("graft_sessnull")
+    val evDir = TempDir("graft_sessnull")
     Seq((1L, new java.sql.Timestamp(36000000L), Some(1.0)),
       (1L, new java.sql.Timestamp(36600000L), None))
       .toDF("user_id", "ts", "value").repartition(1)
@@ -3250,7 +3321,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("stateful sessionization: watermark-gated close, bridging, timeout") {
     import spark.implicits._
-    val evDir = java.nio.file.Files.createTempDirectory("graft_sessions")
+    val evDir = TempDir("graft_sessions")
     def hours(h: Double) = new java.sql.Timestamp((h * 3600000L).toLong)
     def write(name: String, rows: Seq[(Long, java.sql.Timestamp, Double)]) =
       rows.toDF("user_id", "ts", "value").repartition(1)
@@ -3302,7 +3373,7 @@ class CatalogSpec extends AnyFunSuite {
       Similarity.ivfIndex(emb, "embedding", "vec_id", nlist = 8)
     val cells = assigned.localCheckpoint()
     def hours(h: Double) = new java.sql.Timestamp((h * 3600000L).toLong)
-    val qDir = java.nio.file.Files.createTempDirectory("graft_ann_topk")
+    val qDir = TempDir("graft_ann_topk")
     def qrows(ids: Seq[Long], ts: java.sql.Timestamp) =
       emb.where(col("vec_id").isInCollection(ids))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -3353,7 +3424,7 @@ class CatalogSpec extends AnyFunSuite {
     // catalog.upsert, and the snapshot applies the same latest-wins PK
     // collapse as any other write
     val cat = freshCatalog()
-    val csv = java.nio.file.Files.createTempDirectory("graft_csv")
+    val csv = TempDir("graft_csv")
     java.nio.file.Files.writeString(csv.resolve("batch1.csv"),
       "host,domain,feature,date,core,db\n" +
         "NA,apache.org,Login,2013-01-01,35,42\n" +
@@ -3389,8 +3460,7 @@ class CatalogSpec extends AnyFunSuite {
     (1 to 5).foreach(i => cat.upsert("fc",
       Seq((1L, "a", 10L + i), (2L, "b", 20L + i)).toDF("k", "g", "x")))
     cat.delete("fc", col("k") === 3L) // tombstone winner must SURVIVE
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_fc").toString
+    val path = TempDir("graft_fc").toString
     Materialize.build(cat, ChainSpec("fc"), Seq("g"), Seq("x"), path)
     cat.upsert("fc", Seq((4L, "a", 7L)).toDF("k", "g", "x"))
     val mark = Materialize.refresh(cat, path).marks.head
@@ -3448,8 +3518,7 @@ class CatalogSpec extends AnyFunSuite {
       StructField("x", LongType))), pk = Seq("k"))
     cat.upsert("tr", Seq((1L, "a", 10L), (2L, "b", 20L))
       .toDF("k", "g", "x"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_tr").toString
+    val path = TempDir("graft_tr").toString
     Materialize.build(cat, ChainSpec("tr"), Seq("g"), Seq("x"), path)
     assert(Materialize.read(spark, path).count() == 2)
     cat.truncate("tr")
@@ -3524,7 +3593,7 @@ class CatalogSpec extends AnyFunSuite {
       "loudly; a sequential handoff between instances is fine") {
     import spark.implicits._
     import java.util.concurrent.TimeUnit
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = TempDir("graft_wh").toString
     val cat = new GraftCatalog(spark, wh)
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("x", LongType)))
@@ -3602,7 +3671,7 @@ class CatalogSpec extends AnyFunSuite {
       "row; a pre-compaction MV still refreshes exactly") {
     import spark.implicits._
     import graft.operators.Materialize
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = TempDir("graft_wh").toString
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("g", StringType), StructField("x", LongType)))
     val cat = new GraftCatalog(spark, wh)
@@ -3643,7 +3712,7 @@ class CatalogSpec extends AnyFunSuite {
   test("a compaction cut between its two moves leaves the live log " +
       "aside; re-registering the table moves it back") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = TempDir("graft_wh").toString
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("x", LongType)))
     val cat = new GraftCatalog(spark, wh)
@@ -3726,7 +3795,7 @@ class CatalogSpec extends AnyFunSuite {
       "floor from the log minimum once, persists it, and the first " +
       "post-upgrade MV refresh rebuilds instead of double-counting") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = TempDir("graft_wh").toString
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("g", StringType),
       StructField("x", LongType)))
@@ -3769,7 +3838,7 @@ class CatalogSpec extends AnyFunSuite {
     // an INTACT table (min version 0) derives no floor and persists
     // nothing — the scan memoizes per instance
     val cat3 = new GraftCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      TempDir("graft_wh").toString)
     cat3.createTable("u", schema, pk = Seq("id"))
     cat3.upsert("u", Seq((1L, "a", 1L)).toDF("id", "g", "x"))
     new java.io.File(s"${cat3.tablePath("u")}/_compacted_below").delete()

@@ -91,7 +91,7 @@ class GoldenReplaySpec extends AnyFunSuite {
   }
 
   private def replay(chain: String, pkOrder: Map[String, String]): Unit = {
-    val wh = java.nio.file.Files.createTempDirectory(s"gold_$chain").toString
+    val wh = TempDir(s"gold_$chain").toString
     val px = new PhoenixSql(spark, new GraftCatalog(spark, wh))
     px.executeScript(read(s"$res/sql_files/create_$chain.sql"))
     check(px, s"query_$chain", chain, pkOrder)
@@ -121,7 +121,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     "my_schema.my_table_delete" -> "id")
 
   test("gold replay: updatable-view chain (create_add → add_data)") {
-    val wh = java.nio.file.Files.createTempDirectory("gold_views").toString
+    val wh = TempDir("gold_views").toString
     val px = new PhoenixSql(spark, new GraftCatalog(spark, wh))
     px.executeScript(read(s"$res/sql_files/create_add.sql"))
     check(px, "query_create_add", "create_add", viewChainOrder)
@@ -130,13 +130,13 @@ class GoldenReplaySpec extends AnyFunSuite {
   }
 
   test("gold replay: standalone delete chain") {
-    val wh = java.nio.file.Files.createTempDirectory("gold_del2").toString
+    val wh = TempDir("gold_del2").toString
     val px = new PhoenixSql(spark, new GraftCatalog(spark, wh))
     check(px, "query_delete", "delete", viewChainOrder)
   }
 
   test("gold replay: select-and-drop chain (create_tmp_table)") {
-    val wh = java.nio.file.Files.createTempDirectory("gold_drop").toString
+    val wh = TempDir("gold_drop").toString
     val px = new PhoenixSql(spark, new GraftCatalog(spark, wh))
     px.executeScript(read(s"$res/sql_files/create_tmp_table.sql"))
     check(px, "query_select_and_drop_table", "select_and_drop_table",
@@ -144,7 +144,7 @@ class GoldenReplaySpec extends AnyFunSuite {
   }
 
   test("gold replay: diverged-view chain (ALTER VIEW DROP COLUMN)") {
-    val wh = java.nio.file.Files.createTempDirectory("gold_div").toString
+    val wh = TempDir("gold_div").toString
     val px = new PhoenixSql(spark, new GraftCatalog(spark, wh))
     px.executeScript(read(s"$res/sql_files/create_diverged_view.sql"))
     check(px, "query_create_diverged_view", "create_diverged_view",
@@ -152,7 +152,7 @@ class GoldenReplaySpec extends AnyFunSuite {
   }
 
   test("gold replay: delete chain (create_add → add_delete)") {
-    val wh = java.nio.file.Files.createTempDirectory("gold_del").toString
+    val wh = TempDir("gold_del").toString
     val px = new PhoenixSql(spark, new GraftCatalog(spark, wh))
     px.executeScript(read(s"$res/sql_files/create_add.sql"))
     px.executeScript(read(s"$res/sql_files/add_delete.sql"))

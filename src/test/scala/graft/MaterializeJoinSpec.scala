@@ -15,7 +15,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def freshCatalog(): GraftCatalog = {
-    val wh = java.nio.file.Files.createTempDirectory("graft_jwh").toString
+    val wh = TempDir("graft_jwh").toString
     new GraftCatalog(spark, wh)
   }
 
@@ -52,8 +52,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
 
   test("build + read: state equals the joined-snapshot aggregate") {
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     assert(actual(path) == expected(cat))
   }
@@ -62,8 +61,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "new join matches materialize lazily") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // new fact rows against existing dims + a brand-new key on BOTH
     // sides (ck=40 exists only after this delta — the ΔR ⋈ ΔS cross
@@ -81,8 +79,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "joined fact row — the case the star path refuses") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // ck=10 moves a→b: both its fact rows (fan-out 2) must leave 'a'
     // and land in 'b'
@@ -94,8 +91,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
   test("left update + delete, group-emptying: emptied group drops") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // ok=3 is seg b's ONLY row: delete it → 'b' must vanish
     cat.delete("o", col("ok") === 3L)
@@ -109,8 +105,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "recompute; an extremum-crossing one gates in") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // seg a holds prices {100, 200, 400}; retracting 200 (ok=2 →
     // 201) neither ties nor crosses min=100/max=400... but the +201
@@ -132,8 +127,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "subsequent refreshes are untouched") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((7L, 20L, 700L)).toDF("ok", "ck", "price"))
     Materialize.refresh(cat, path)
@@ -155,8 +149,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
 
   test("no-op refresh returns the stored marks and rewrites nothing") {
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     val Seq(vl, vr) = Materialize.build(cat, js, Seq("seg"),
       Seq("price"), path)
     val before = actual(path)
@@ -168,8 +161,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "exact") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     cat.upsert("o", Seq((7L, 20L, 700L)).toDF("ok", "ck", "price"))
     cat.compact("o") // history before the new high-water is GONE
@@ -185,8 +177,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.createTable("c", custSchema, pk = Seq("ck"))
     cat.upsert("o", Seq((1L, 10L, 100L)).toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((10L, "a")).toDF("ck", "seg"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     val e = intercept[IllegalArgumentException] {
       Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     }
@@ -199,8 +190,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.createTable("c", StructType(Seq(
       StructField("ck", LongType), StructField("price", LongType))),
       pk = Seq("ck"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     val e = intercept[IllegalArgumentException] {
       Materialize.build(cat, js, Seq("ck"), Seq("price"), path)
     }
@@ -212,8 +202,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "(the below-collapse read-bound path)") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     val ijs = immJs
     Materialize.build(cat, ijs, Seq("seg"), Seq("price"), path)
     // fact updates change PRICE only (ck immutable per the contract),
@@ -259,8 +248,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cs = MaterializeJoin.ChainSpec("f", Seq(
       MaterializeJoin.SideSpec("c", Seq("ck")),
       MaterializeJoin.SideSpec("p", Seq("pk2"))))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmvn").toString
+    val path = TempDir("graft_jmvn").toString
     Materialize.build(cat, cs, Seq("seg", "brand"), Seq("price"),
       path)
     def expectedN: Set[Seq[Any]] = Materialize.aggregate(
@@ -345,8 +333,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // inner != left and a mis-served LEFT would be numerically wrong
     cat.upsert("o", Seq((9L, 99L, 900L)).toDF("ok", "ck", "price"))
     cat.refreshSnapshotCache("o"); cat.refreshSnapshotCache("c")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     Materialize.registerForRewrite(cat, path)
     val stateName = new java.io.File(path).getName
@@ -401,8 +388,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     import spark.implicits._
     graft.functions.GraftFunctions.registerKernels(spark)
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmvsk").toString
+    val path = TempDir("graft_jmvsk").toString
     val cs = MaterializeJoin.ChainSpec("o",
       Seq(MaterializeJoin.SideSpec("c", Seq("ck"))))
     val sks = Seq("ok" -> 4096)
@@ -446,8 +432,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     locally {
       val cat = freshCatalog(); mkTables(cat)
       cat.upsert("o", Seq((1L, 20L, 100L)).toDF("ok", "ck", "price"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_jmv").toString
+      val path = TempDir("graft_jmv").toString
       val e = intercept[IllegalArgumentException] {
         Materialize.build(cat, ijs, Seq("seg"), Seq("price"), path)
       }
@@ -457,8 +442,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // refuses instead of folding a phantom
     locally {
       val cat = freshCatalog(); mkTables(cat)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_jmv").toString
+      val path = TempDir("graft_jmv").toString
       Materialize.build(cat, ijs, Seq("seg"), Seq("price"), path)
       cat.upsert("o", Seq((1L, 20L, 100L)).toDF("ok", "ck", "price"))
       val e = intercept[IllegalArgumentException] {
@@ -471,8 +455,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     // the fold stays exact
     locally {
       val cat = freshCatalog(); mkTables(cat)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_jmv").toString
+      val path = TempDir("graft_jmv").toString
       Materialize.build(cat, ijs, Seq("seg"), Seq("price"), path)
       cat.delete("o", col("ok") === 1L)
       cat.upsert("o", Seq((1L, 20L, 123L)).toDF("ok", "ck", "price"))
@@ -500,8 +483,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       (3L, 20L, t("2024-02-03 10:00:00"), 300L))
       .toDF("ok", "ck", "ts", "price"))
     cat.upsert("gc", Seq((10L, "a"), (20L, "b")).toDF("ck", "seg"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmvg").toString
+    val path = TempDir("graft_jmvg").toString
     val cs = MaterializeJoin.ChainSpec("go",
       Seq(MaterializeJoin.SideSpec("gc", Seq("ck"))))
     val grains = Seq("mon" -> "date_trunc('MONTH', ts)")
@@ -541,8 +523,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "refresh — the state is never silently wrong (seeded)") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, immJs,
       Seq("seg"), Seq("price"), path)
     val rnd = new scala.util.Random(12082026L)
@@ -599,8 +580,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "(seeded)") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     val rnd = new scala.util.Random(20260816L)
     val segs = Vector("a", "b", "c", "d")
@@ -647,8 +627,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.upsert("o", Seq((5L, 99L, 500L)).toDF("ok", "ck", "price"))
     cat.upsert("o", spark.sql(
       "SELECT 6L AS ok, CAST(NULL AS BIGINT) AS ck, 600L AS price"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, ljs, Seq("seg"), Seq("price"), path)
     val exp = expectedLeft(cat)
     assert(actual(path) == exp)
@@ -662,8 +641,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     cat.upsert("o", Seq((5L, 99L, 500L), (6L, 99L, 600L))
       .toDF("ok", "ck", "price"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, ljs, Seq("seg"), Seq("price"), path)
     // dangling → matched: ck=99 appears on the side, both facts must
     // MOVE from the NULL group into seg 'z'
@@ -686,8 +664,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "(seeded)") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, ljs, Seq("seg"), Seq("price"), path)
     val rnd = new scala.util.Random(20260817L)
     val segs = Vector("a", "b", "c", "d")
@@ -732,8 +709,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cs = MaterializeJoin.ChainSpec("f", Seq(
       MaterializeJoin.SideSpec("cd", Seq("ck")),
       MaterializeJoin.SideSpec("pd", Seq("pk2"))), leftOuter = true)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, cs, Seq("seg", "grp"), Seq("x"), path)
     def exp: Set[Seq[Any]] = Materialize.aggregate(
       cat.snapshot("f").join(cat.snapshot("cd"), Seq("ck"), "left")
@@ -768,8 +744,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       (col("id") % 640).as("ck"), (col("id") % 97).as("price")))
     cat.upsert("bc", spark.range(640).select(col("id").as("ck"),
       concat(lit("s"), (col("id") % 64).cast("string")).as("seg")))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv_bk").toString
+    val path = TempDir("graft_jmv_bk").toString
     val bcs = MaterializeJoin.ChainSpec("bo", Seq(
       MaterializeJoin.SideSpec("bc", Seq("ck"),
         factKeysImmutable = true)))
@@ -816,8 +791,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       (col("id") % 40).as("ck"), (col("id") % 97).as("price")))
     cat.upsert("kc", spark.range(40).select(col("id").as("ck"),
       concat(lit("s"), (col("id") % 16).cast("string")).as("seg")))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv_cmp").toString
+    val path = TempDir("graft_jmv_cmp").toString
     Materialize.build(cat, MaterializeJoin.ChainSpec("ko", Seq(
       MaterializeJoin.SideSpec("kc", Seq("ck")))), Seq("seg"),
       Seq("price"), path, buckets = 8)
@@ -865,8 +839,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     cat.upsert("o", Seq((5L, 99L, 500L)).toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((77L, "lonely")).toDF("ck", "seg")) // no orders
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, fjs, Seq("seg"), Seq("price"), path)
     val exp = expectedFull(cat)
     assert(actual(path) == exp)
@@ -881,8 +854,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cat = freshCatalog(); mkTables(cat)
     cat.upsert("o", Seq((5L, 99L, 500L)).toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((77L, "lonely")).toDF("ck", "seg"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, fjs, Seq("seg"), Seq("price"), path)
     // fact gains the side-dangling key 77: the (lonely, NULL-measure)
     // row must become a real joined row
@@ -907,8 +879,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "== full-outer recompute after every refresh (seeded)") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, fjs, Seq("seg"), Seq("price"), path)
     val rnd = new scala.util.Random(20260819L)
     val segs = Vector("a", "b", "c", "d")
@@ -938,8 +909,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       val cs = MaterializeJoin.ChainSpec("o",
         Seq(MaterializeJoin.SideSpec("c", Seq("ck"))),
         leftOuter = left, factFilterSql = Some("price > 150"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_jmvf").toString
+      val path = TempDir("graft_jmvf").toString
       Materialize.build(cat, cs, Seq("seg"), Seq("price"), path)
       def expectedF: Set[Seq[Any]] = Materialize.aggregate(
         cat.snapshot("o").where(col("price") > 150)
@@ -972,8 +942,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     }
     // refusals
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmvf").toString
+    val path = TempDir("graft_jmvf").toString
     val e1 = intercept[IllegalArgumentException] {
       Materialize.build(cat, MaterializeJoin.ChainSpec("o",
         Seq(MaterializeJoin.SideSpec("c", Seq("ck"))),
@@ -993,8 +962,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "combination refuse; the binary full state registers for " +
       "rewrite under the fullState contract") {
     val cat = freshCatalog(); mkTables(cat); mkSnowflake(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     // a side keyed on an EARLIER SIDE under FULL: the per-side
     // dangling decomposition needs every side keyed on the fact
     val e1 = intercept[IllegalArgumentException] {
@@ -1034,8 +1002,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cs = MaterializeJoin.ChainSpec("f", Seq(
       MaterializeJoin.SideSpec("c", Seq("ck")),
       MaterializeJoin.SideSpec("p", Seq("pk2"))), fullOuter = true)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jfull").toString
+    val path = TempDir("graft_jfull").toString
     Materialize.build(cat, cs, Seq("seg", "brand"), Seq("price"),
       path)
     def expectedN: Set[Seq[Any]] = Materialize.aggregate(
@@ -1100,8 +1067,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "churning — the case the fingerprint-frozen star derives refuse") {
     import spark.implicits._
     val cat = freshCatalog(); mkSnowflake(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, snowCs, Seq("nname"), Seq("price"), path)
     assert(actual(path) == expectedSnow(cat), "build")
     // churn the INTERMEDIATE dim: ck=10 moves nation 1 -> 2, so 300 of
@@ -1125,8 +1091,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "levels — state == full recompute after every refresh (seeded)") {
     import spark.implicits._
     val cat = freshCatalog(); mkSnowflake(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, snowCs, Seq("nname"), Seq("price"), path)
     val rnd = new scala.util.Random(20260818L)
     for (step <- 1 to 8) {
@@ -1155,8 +1120,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
   test("snowflake refusals: keys spanning tables, and leftOuter over " +
       "a side-on-side key") {
     val cat = freshCatalog(); mkSnowflake(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     // a side whose keys span fact + another side is not a tree edge
     // (ok, nk) spans the fact (ok) and sc (nk) — no single parent
     cat.createTable("sx", StructType(Seq(
@@ -1180,8 +1144,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       "never double-counts — every write folds exactly once") {
     import spark.implicits._
     val cat = freshCatalog(); mkTables(cat)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     Materialize.build(cat, js, Seq("seg"), Seq("price"), path)
     // a second thread churns the DIM side (the out-of-band writer
     // EventStreams.maintainAggregate advertises absorbing) while
@@ -1240,8 +1203,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.createTable("o", ordersSchema, pk = Seq("ok"))
     cat.createTable("c", custSchema, pk = Seq("ck"))
     cat.upsert("o", Seq((1L, 10L, 100L)).toDF("ok", "ck", "price"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     // side 'c' never written: its marks are (max=-1, min=MaxValue) —
     // the unguarded detector read min > lastV as "history lost" and
     // forced a full rebuild on EVERY refresh
@@ -1275,8 +1237,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     cat.createTable("s2", StructType(Seq(
       StructField("k2", LongType), StructField("a2", StringType))),
       pk = Seq("k2"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jmv").toString
+    val path = TempDir("graft_jmv").toString
     val e = intercept[IllegalArgumentException] {
       Materialize.build(cat,
         MaterializeJoin.ChainSpec("f", Seq(
@@ -1379,8 +1340,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
     val cs = MaterializeJoin.ChainSpec("f", Seq(
       MaterializeJoin.SideSpec("c", Seq("ck")),
       MaterializeJoin.SideSpec("p", Seq("pk2"))))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_jfc").toString
+    val path = TempDir("graft_jfc").toString
     Materialize.build(cat, cs, Seq("seg", "brand"), Seq("price"),
       path)
     def expectedN: Set[Seq[Any]] = Materialize.aggregate(
@@ -1442,8 +1402,7 @@ class MaterializeJoinSpec extends AnyFunSuite {
       (4L, 20L, 70L), (9L, 77L, 30L)).toDF("k", "jk", "x"))
     cat.upsert("so", Seq((10L, "a"), (20L, "b"), (99L, "z"))
       .toDF("jk", "seg"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_push").toString + "/mv"
+    val path = TempDir("graft_push").toString + "/mv"
     Materialize.build(cat,
       MaterializeJoin.ChainSpec("fo",
         Seq(MaterializeJoin.SideSpec("so", Seq("jk"))),

@@ -13,7 +13,7 @@ class MvMetaSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_mvmeta").toString
+    TempDir("graft_mvmeta").toString
 
   private def render(t: DataType): String = t match {
     case ArrayType(e, containsNull) =>

@@ -19,10 +19,10 @@ class MvRefreshSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def freshCatalog(): GraftCatalog = new GraftCatalog(spark,
-    java.nio.file.Files.createTempDirectory("graft_mvr").toString)
+    TempDir("graft_mvr").toString)
 
   private def mvPath(): String =
-    java.nio.file.Files.createTempDirectory("graft_mvr_mv").toString
+    TempDir("graft_mvr_mv").toString
 
   private val factSchema = StructType(Seq(StructField("k", LongType),
     StructField("g", StringType), StructField("x", LongType)))

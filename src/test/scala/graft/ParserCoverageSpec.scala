@@ -85,8 +85,7 @@ class ParserCoverageSpec extends AnyFunSuite {
       .replaceAllIn(s, "1")
 
   private def freshPx(): PhoenixSql = {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_parsecov").toString
+    val wh = TempDir("graft_parsecov").toString
     new PhoenixSql(spark, new GraftCatalog(spark, wh))
   }
 

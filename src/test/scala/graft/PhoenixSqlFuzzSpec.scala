@@ -30,8 +30,7 @@ class PhoenixSqlFuzzSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
   private lazy val px: PhoenixSql = {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_sql_fuzz_wh").toString
+    val wh = TempDir("graft_sql_fuzz_wh").toString
     new PhoenixSql(spark, new GraftCatalog(spark, wh))
   }
 

@@ -14,7 +14,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
   private def fresh(): PhoenixSql = {
-    val wh = java.nio.file.Files.createTempDirectory("graft_sql_wh").toString
+    val wh = TempDir("graft_sql_wh").toString
     new PhoenixSql(spark, new GraftCatalog(spark, wh))
   }
 
@@ -1095,7 +1095,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
 
   test("a 100-tuple UPSERT VALUES runs no Spark job and writes one " +
       "parquet file") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_sql_wh").toString
+    val wh = TempDir("graft_sql_wh").toString
     val px = new PhoenixSql(spark, new GraftCatalog(spark, wh))
     px.execute("CREATE TABLE ONE (K BIGINT NOT NULL PRIMARY KEY, V VARCHAR)")
     def dataFiles(): Int = {
@@ -1107,15 +1107,91 @@ class PhoenixSqlSpec extends AnyFunSuite {
         finally w.close()
       }
     }
-    val before = dataFiles()
-    val n = Measure.once(spark)(px.execute("UPSERT INTO ONE VALUES " +
-      (1 to 100).map(i => s"($i, 'v$i')").mkString(", "))).counts
-    assert(dataFiles() - before == 1, "one parquet data file per statement")
-    // the VALUES relation is evaluated on the driver and lands through
-    // the driver path of the commit
-    assert(n == Measure.JobCounts(0, 0, 0), s"no job per statement, got $n")
+    // plain literals build their rows directly; a parenthesized value
+    // is an expression, so that statement takes the SQL path
+    for ((values, tag) <- Seq(
+        ((i: Int) => s"($i, 'v$i')", "direct"),
+        ((i: Int) => s"(($i), ('v$i'))", "SQL"))) {
+      val before = dataFiles()
+      val n = Measure.once(spark)(px.execute("UPSERT INTO ONE VALUES " +
+        (1 to 100).map(values).mkString(", "))).counts
+      assert(dataFiles() - before == 1,
+        s"$tag: one parquet data file per statement")
+      // the VALUES relation is evaluated on the driver and lands
+      // through the driver path of the commit
+      assert(n == Measure.JobCounts(0, 0, 0),
+        s"$tag: no job per statement, got $n")
+    }
+    assert(PhoenixSql.valuesLiteral("1").nonEmpty &&
+      PhoenixSql.valuesLiteral("'v1'").nonEmpty &&
+      PhoenixSql.valuesLiteral("(1)").isEmpty)
     assert(px.execute("SELECT count(*) FROM ONE").collect()
       .head.getLong(0) == 100)
+  }
+
+  test("UPSERT VALUES of plain literals writes the rows, raises the " +
+      "errors and leaves the version gaps of the SQL path, for every " +
+      "declared type and literal shape") {
+    import scala.util.Try
+    val px = fresh()
+    val cat = px.catalog
+    val types = Seq("BIGINT", "INTEGER", "UNSIGNED_INT", "UNSIGNED_LONG",
+      "DECIMAL(6,2)", "DOUBLE", "VARCHAR(4)", "CHAR(3)", "BOOLEAN", "DATE",
+      "TIMESTAMP")
+    // NULL, negative, out-of-range, ''-escaped and over-capacity values
+    // among them
+    val shapes = Seq("7", "-7", "0", "2147483648", "-2147483648",
+      "-9223372036854775808", "99999999999999999999", "7L", "-7L",
+      "1.25", "-0.5", ".5", "1.", "1234.567", "12345.6", "1e3", "-2.5E-2",
+      "1.5D", "NULL", "null", "TRUE", "false", "'12'", "'-3'", "' 5 '",
+      "'it''s'", "''", "''''", "'abcde'", "'2020-01-02'",
+      "'2020-01-02 03:04:05'", "'true'", "'x'")
+    shapes.foreach(v => assert(PhoenixSql.valuesLiteral(v).nonEmpty, v))
+    def outcome(stmt: String): Option[Class[_]] =
+      Try(px.execute(stmt)).failed.toOption.map(_.getClass)
+    for ((t, i) <- types.zipWithIndex) {
+      Seq("d", "f").foreach(p => px.execute(
+        s"CREATE TABLE $p$i (k BIGINT NOT NULL PRIMARY KEY, v $t)"))
+      for ((v, k) <- shapes.zipWithIndex) {
+        val direct = outcome(s"UPSERT INTO d$i VALUES ($k, $v)")
+        // a parenthesized value takes the SQL path
+        val sql = outcome(s"UPSERT INTO f$i VALUES ($k, ($v))")
+        assert(direct == sql, s"$t, $v: direct $direct, SQL $sql")
+        assert(cat.currentVersion(s"d$i") == cat.currentVersion(s"f$i"),
+          s"$t, $v: version counters")
+      }
+      def log(n: String) = cat.changeLog(n)
+        .select("k", "v", "_version", "_deleted").collect().toSet
+      assert(log(s"d$i") == log(s"f$i"), t)
+    }
+    // every error kind appeared: the capacity and UNSIGNED checks fail
+    // the append (a gap version), ANSI casts fail before it (no version)
+    val written = types.indices.map(i =>
+      cat.changeLog(s"d$i").select("_version").distinct().count())
+    val versions = types.indices.map(i => cat.currentVersion(s"d$i") + 1)
+    assert(written.zip(versions).exists { case (w, n) => w < n },
+      s"a gap version: $written of $versions")
+    assert(versions.exists(_ < shapes.length),
+      s"a statement that failed before its append: $versions")
+  }
+
+  test("UPSERT VALUES shapes that still take the SQL path") {
+    Seq("ARRAY[1, 2]", "array(1, 2)", "x'0A'", "X'0A'", "1 + 2", "(1)",
+      "+5", "- 5", "udf_twice(3)", "CURRENT_DATE()", "DATE '2020-01-02'",
+      "TIMESTAMP'2020-01-02 00:00:00'", "'a' 'b'", "'a\\nb'", "\"dq\"",
+      "1e400", "1" * 40, "1.5BD", "1S", "1Y", "CAST(1 AS BIGINT)")
+      .foreach(v => assert(PhoenixSql.valuesLiteral(v).isEmpty, v))
+    val px = fresh()
+    px.execute("CREATE TABLE sp (k BIGINT NOT NULL PRIMARY KEY, v BIGINT, " +
+      "a BIGINT ARRAY)")
+    px.execute("CREATE SEQUENCE sq START WITH 10")
+    // NEXT VALUE FOR is substituted first, so its BIGINT takes the
+    // direct path; the ARRAY value sends its statement to the SQL path
+    px.execute("UPSERT INTO sp (k, v) VALUES (NEXT VALUE FOR sq, 1)")
+    px.execute("UPSERT INTO sp VALUES (2, 1 + 2, ARRAY[1, 2])")
+    assert(px.execute("SELECT k, v FROM sp ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((2L, 3L), (10L, 1L)))
   }
 
   test("a SELECT sees writes made straight through the catalog, and " +
@@ -1368,8 +1444,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     cat.refreshSnapshotCache("dc")
     def derive = StarDerive(cat.snapshot("dc"),
       keys = Seq("ck" -> "ck"), attrs = Seq("seg"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mvsql_star").toString
+    val mv = TempDir("graft_mvsql_star").toString
     Materialize.build(cat, ChainSpec("fo"), Seq("seg"), Seq("price"), mv,
       derive = derive)
     // one DimJoinDef per derive: the dim keyed by its CATALOG ROOT
@@ -1426,8 +1501,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     px.execute("UPSERT INTO MVT VALUES (2, 'a', 20)")
     px.execute("UPSERT INTO MVT VALUES (3, 'b', 5)")
     cat.refreshSnapshotCache("mvt")
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mvsql").toString
+    val mv = TempDir("graft_mvsql").toString
     Materialize.build(cat, ChainSpec("mvt"), Seq("src"), Seq("x"), mv)
     Materialize.registerForRewrite(cat, mv)
     def run(expectServed: Boolean) = {
@@ -1475,8 +1549,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     px.execute("UPSERT INTO FG VALUES (1, 'a', 10)")
     px.execute("UPSERT INTO FG VALUES (2, 'b', 5)")
     cat.refreshSnapshotCache("fg")
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mvsql_fresh").toString
+    val mv = TempDir("graft_mvsql_fresh").toString
     Materialize.build(cat, ChainSpec("fg"), Seq("src"), Seq("x"), mv)
     Materialize.registerForRewrite(cat, mv)
     def run(expectServed: Boolean) = {
@@ -1971,8 +2044,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     px.execute("UPSERT INTO SN VALUES (1, 'de')")
     px.execute("UPSERT INTO SN VALUES (2, 'fr')")
     Seq("sf", "sc", "sn").foreach(cat.refreshSnapshotCache)
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mvsql_snow").toString
+    val mv = TempDir("graft_mvsql_snow").toString
     Materialize.build(cat,
       MaterializeJoin.ChainSpec("sf", Seq(
         MaterializeJoin.SideSpec("sc", Seq("ck")),
@@ -2007,8 +2079,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     px.execute("UPSERT INTO LF VALUES (2, 99, 50)") // dangling
     px.execute("UPSERT INTO LD VALUES (10, 'a')")
     cat.refreshSnapshotCache("lf"); cat.refreshSnapshotCache("ld")
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mvsql_left").toString
+    val mv = TempDir("graft_mvsql_left").toString
     Materialize.build(cat,
       ChainSpec("lf", Seq(SideSpec("ld", Seq("ck"))), leftOuter = true),
       Seq("seg"), Seq("price"), mv)
@@ -2051,8 +2122,7 @@ class PhoenixSqlSpec extends AnyFunSuite {
     px.execute("UPSERT INTO JD VALUES (10, 'a')")
     px.execute("UPSERT INTO JD VALUES (20, 'b')")
     cat.refreshSnapshotCache("jf"); cat.refreshSnapshotCache("jd")
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_mvsql_jfresh").toString
+    val mv = TempDir("graft_mvsql_jfresh").toString
     Materialize.build(cat,
       ChainSpec("jf", Seq(SideSpec("jd", Seq("ck")))),
       Seq("seg"), Seq("price"), mv)

@@ -127,8 +127,7 @@ class PipelineSpec extends AnyFunSuite {
     val corpus = emb.where(col("vec_id") >= 50)
     val (centroids, assigned) =
       Similarity.ivfIndex(corpus, "embedding", "vec_id", nlist = 8)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_append").toString
+    val path = TempDir("graft_ivf_append").toString
     Similarity.saveIvfIndex(path, centroids, assigned)
     // two ingest batches, written INTO the index (no caller-side union)
     val r1 = Similarity.appendIvfIndex(spark, path,
@@ -303,8 +302,7 @@ class PipelineSpec extends AnyFunSuite {
       "refinement must not lose recall vs the ADC ordering")
     // round-trip + frozen-codebook append: saved index reloads
     // byte-identical and appended codes search alongside old ones
-    val path = java.nio.file.Files
-      .createTempDirectory("ivfpq").toString + "/idx"
+    val path = TempDir("ivfpq").toString + "/idx"
     Similarity.saveIvfPqIndex(path, cents, book,
       coded.where(col("id") < 400), m = 8)
     val (c2, b2, m2, loaded) = Similarity.loadIvfPqIndex(spark, path)
@@ -864,8 +862,7 @@ class PipelineSpec extends AnyFunSuite {
     // pushdown pin: against a PERSISTED bucket table the delta's
     // occupied-key predicate must reach the parquet scan (row-group
     // pruning is the reason the indexed path is sub-linear)
-    val bdir = java.nio.file.Files
-      .createTempDirectory("graft_idx_push").toString
+    val bdir = TempDir("graft_idx_push").toString
     Dedup.hammingBuckets64(
         Multimodal.imageHashes(Multimodal.syntheticImages(corpusDocs)),
         maxHamming = 6, cleanChunks = 2)
@@ -1862,8 +1859,7 @@ class PipelineSpec extends AnyFunSuite {
       .orderBy($"doc").collect().map(_.getDouble(2)).toSeq
     assert(oneShot == withModel)
     // persisted model scores identically after reload
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_lm").toString + "/lm"
+    val path = TempDir("graft_lm").toString + "/lm"
     operators.TextAnalysis.saveLmModel(path, model)
     val loaded = operators.TextAnalysis.loadLmModel(spark, path)
     val scored = operators.TextAnalysis
@@ -1993,8 +1989,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Tables.t(spark, dir, "documents")
     // persisted index round-trip
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_invidx").toString + "/idx"
+    val path = TempDir("graft_invidx").toString + "/idx"
     operators.TextAnalysis.saveInvertedIndex(path, docs, "text", "doc_id")
     // index-backed BM25 is BIT-IDENTICAL to the corpus-scan path
     val query = Seq("slow", "customer", "batch")
@@ -2042,7 +2037,7 @@ class PipelineSpec extends AnyFunSuite {
     // dayofweek Monday-based) would silently corrupt every DataFrame
     // operator using those names. The operators go through the
     // registry-proof direct-expression builders; this pins it.
-    val wh = java.nio.file.Files.createTempDirectory("graft_dialect")
+    val wh = TempDir("graft_dialect")
     new graft.sources.PhoenixSql(spark,
       new graft.sources.GraftCatalog(spark, wh.toString))
     try {
@@ -2852,8 +2847,7 @@ class PipelineSpec extends AnyFunSuite {
   test("metaRow memo: a meta rewrite invalidates the cached row " +
       "(file-listing stamp), repeated reads serve from the memo") {
     import spark.implicits._
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_metarow").toString
+    val path = TempDir("graft_metarow").toString
     Seq((1L, "a")).toDF("last_version", "x")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     val r1 = graft.operators.MvMeta.row(spark, path)

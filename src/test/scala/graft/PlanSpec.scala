@@ -301,7 +301,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val n = 20000L
-    val d = java.nio.file.Files.createTempDirectory("keyrange").toString
+    val d = TempDir("keyrange").toString
     // four files, each cut into many small row groups, every file and
     // row group holding one contiguous key range
     (0L until n).map(k => (k, s"v$k")).toDF("k", "v")

@@ -25,7 +25,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def freshCatalog(): GraftCatalog = {
-    val wh = java.nio.file.Files.createTempDirectory("graft_rrwh").toString
+    val wh = TempDir("graft_rrwh").toString
     new GraftCatalog(spark, wh)
   }
 
@@ -51,8 +51,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
       StructField("k", StringType), StructField("v", LongType))),
       pk = Seq("k"))
     cat.upsert("t", Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_rrmv").toString
+    val mv = TempDir("graft_rrmv").toString
     // bucketed state: the single-table fold checkpoints changes,
     // retracted AND merged — the richest block set to lose
     Materialize.build(cat, ChainSpec("t"), Seq("k"), Seq("v"), mv, buckets = 4)
@@ -81,8 +80,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("o", Seq((1L, 10L, 100L), (2L, 20L, 200L))
       .toDF("ok", "ck", "price"))
     cat.upsert("c", Seq((10L, "a"), (20L, "b")).toDF("ck", "seg"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_rrjmv").toString
+    val mv = TempDir("graft_rrjmv").toString
     Materialize.build(cat,
       ChainSpec("o", Seq(SideSpec("c", Seq("ck")))),
       Seq("seg"), Seq("price"), mv)
@@ -109,8 +107,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
       StructField("k", StringType), StructField("v", LongType))),
       pk = Seq("k"))
     cat.upsert("t2", Seq(("a", 1L)).toDF("k", "v"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_rrmv2").toString
+    val mv = TempDir("graft_rrmv2").toString
     Materialize.build(cat, ChainSpec("t2"), Seq("k"), Seq("v"), mv)
     cat.upsert("t2", Seq(("b", 2L)).toDF("k", "v"))
     var calls = 0
@@ -138,10 +135,8 @@ class RefreshResilienceSpec extends AnyFunSuite {
         .otherwise(unhex(lpad(hex(col("id")), 8, "0"))).as("bin"),
       array(col("id"), col("id") + 1).as("arr"),
       (col("id") % 3 === 0).as("b"))
-    val dDir = java.nio.file.Files
-      .createTempDirectory("graft_dw_dist").toString + "/p"
-    val lDir = java.nio.file.Files
-      .createTempDirectory("graft_dw_local").toString + "/p"
+    val dDir = TempDir("graft_dw_dist").toString + "/p"
+    val lDir = TempDir("graft_dw_local").toString + "/p"
     df.write.parquet(dDir)
     val local = Measure.once(spark)(Commit.replace(df, lDir)).counts
     val a = spark.read.parquet(dDir)
@@ -151,8 +146,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     // over the cap the probe's rows are dropped and the distributed
     // write lands the same rows: one more job than the probe alone
     val big = spark.range(0, Commit.cap + 10).toDF("id")
-    val oDir = java.nio.file.Files
-      .createTempDirectory("graft_dw_over").toString + "/p"
+    val oDir = TempDir("graft_dw_over").toString + "/p"
     val over = Measure.once(spark)(Commit.replace(big, oDir)).counts
     assert(over.jobs > local.jobs, s"driver $local, distributed $over")
     assert(spark.read.parquet(oDir).count() == Commit.cap + 10L)
@@ -167,8 +161,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
       pk = Seq("k"))
     cat.upsert("tb", Seq(("a", 1L), ("b", 2L), ("c", 3L), ("d", 4L))
       .toDF("k", "v"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_rrbk").toString
+    val mv = TempDir("graft_rrbk").toString
     Materialize.build(cat, ChainSpec("tb"), Seq("k"), Seq("v"), mv, buckets = 4)
     // insert-only delta → no retraction, no recompute → the refresh
     // writes its touched buckets on the driver (Commit's driver path)
@@ -231,8 +224,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
       StructField("k", StringType), StructField("v", LongType))),
       pk = Seq("k"))
     cat.upsert("tl", Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_rrleft").toString
+    val mv = TempDir("graft_rrleft").toString
     Materialize.build(cat, ChainSpec("tl"), Seq("k"), Seq("v"), mv)
     cat.upsert("tl", Seq(("a", 5L), ("d", 7L)).toDF("k", "v"))
     val target = s"$mv/state_v${cat.currentVersion("tl")}"
@@ -258,8 +250,7 @@ class RefreshResilienceSpec extends AnyFunSuite {
     cat.upsert("lo", Seq((1L, 10L, 100L), (2L, 10L, 200L),
       (3L, 20L, 300L)).toDF("ok", "ck", "price"))
     cat.upsert("lc", Seq((10L, "a"), (20L, "b")).toDF("ck", "seg"))
-    val mv = java.nio.file.Files
-      .createTempDirectory("graft_rrleftj").toString
+    val mv = TempDir("graft_rrleftj").toString
     Materialize.build(cat, MaterializeJoin.ChainSpec("lo",
       Seq(MaterializeJoin.SideSpec("lc", Seq("ck")))), Seq("seg"),
       Seq("price"), mv, buckets = 4)
@@ -285,11 +276,11 @@ class RefreshResilienceSpec extends AnyFunSuite {
       StructField("k", StringType), StructField("v", LongType))),
       pk = Seq("k"))
     cat.upsert("tm", Seq(("a", 1L)).toDF("k", "v"))
-    val mv = java.nio.file.Files.createTempDirectory("graft_dw_meta")
+    val mv = TempDir("graft_dw_meta")
       .toString
     Materialize.build(cat, ChainSpec("tm"), Seq("k"), Seq("v"), mv)
     val m = MvMeta.read(spark, mv)
-    val dir = java.nio.file.Files.createTempDirectory("graft_dw_meta2")
+    val dir = TempDir("graft_dw_meta2")
       .toString
     def parts() = new java.io.File(dir, "meta").listFiles()
       .filter(_.getName.startsWith("part-")).map(_.getName).toSeq

@@ -43,8 +43,8 @@ class ZOrderSpec extends AnyFunSuite {
     // key (the second column is uniform within every first-column run)
     val df = spark.range(1L << 14).select(
       ($"id" % 128).as("x"), ($"id" / 128).as("y"), $"id".as("payload"))
-    val zdir = java.nio.file.Files.createTempDirectory("graft_z").toString
-    val ldir = java.nio.file.Files.createTempDirectory("graft_lin").toString
+    val zdir = TempDir("graft_z").toString
+    val ldir = TempDir("graft_lin").toString
     Layout.writeZOrdered(df, zdir, Seq("x", "y"), numFiles = 16, bits = 7)
     df.repartitionByRange(16, $"x").sortWithinPartitions("x")
       .write.mode("overwrite").parquet(ldir)
@@ -88,8 +88,8 @@ class ZOrderSpec extends AnyFunSuite {
           f.getName.endsWith(".parquet"))
       perHost.sum.toDouble / (perHost.length * nFiles)
     }
-    val zdir = java.nio.file.Files.createTempDirectory("graft_zs").toString
-    val ldir = java.nio.file.Files.createTempDirectory("graft_ls").toString
+    val zdir = TempDir("graft_zs").toString
+    val ldir = TempDir("graft_ls").toString
     Layout.writeZOrdered(df, zdir, Seq("host", "t"), numFiles = 16, bits = 6)
     df.repartitionByRange(16, $"t").sortWithinPartitions("t")
       .write.mode("overwrite").parquet(ldir)
@@ -130,7 +130,7 @@ class ZOrderSpec extends AnyFunSuite {
     val df = spark.range(4L * 4096).select(
       concat(lit("h"), ($"id" % 4).cast("string")).as("host"),
       ($"id" / 4).as("t"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_zh").toString
+    val dir = TempDir("graft_zh").toString
     Layout.writeZOrdered(df, dir, Seq("host", "t"), numFiles = 8, bits = 6)
     val perHost = spark.read.parquet(dir)
       .withColumn("f", input_file_name())
@@ -161,7 +161,7 @@ class ZOrderSpec extends AnyFunSuite {
     val df = spark.range(8L * 512).select(
       element_at(typedlit(vals), ($"id" % 8).cast("int") + 1).as("s"),
       ($"id" / 8).as("t"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_zb").toString
+    val dir = TempDir("graft_zb").toString
     Layout.writeZOrdered(df, dir, Seq("s", "t"), numFiles = 8, bits = 6)
     val ranges = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-") &&
@@ -212,8 +212,7 @@ class ZOrderSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
       .select($"doc_id", $"text", $"n_chars")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_shards").toString + "/out"
+    val path = TempDir("graft_shards").toString + "/out"
     val budget = 20000L
     graft.operators.Layout.writeShardedByTokens(
       docs, "doc_id", "n_chars", path, budget)
@@ -239,8 +238,7 @@ class ZOrderSpec extends AnyFunSuite {
     val scan = one.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") && one.count() > 0)
     // deterministic: a rewrite from a different layout shards identically
-    val path2 = java.nio.file.Files
-      .createTempDirectory("graft_shards2").toString + "/out"
+    val path2 = TempDir("graft_shards2").toString + "/out"
     graft.operators.Layout.writeShardedByTokens(
       docs.repartition(7), "doc_id", "n_chars", path2, budget)
     val a = spark.read.parquet(path).select("doc_id", "shard")
@@ -300,8 +298,7 @@ class ZOrderSpec extends AnyFunSuite {
     // duplicate ids would fan the bin join out quadratically — the doc
     // written twice into its shard with token budgets silently blown
     val dup = Seq((1L, 10L), (1L, 10L), (2L, 5L)).toDF("doc_id", "n_tok")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_shards_dup").toString + "/out"
+    val path = TempDir("graft_shards_dup").toString + "/out"
     val de = intercept[Exception](graft.operators.Layout
       .writeShardedByTokens(dup, "doc_id", "n_tok", path, 100L))
     def msgs(t: Throwable): Seq[String] =
